@@ -31,10 +31,11 @@ import org.apache.spark.sql.functions._
   * checks. Body compression reads per the BodyCompression member of
   * RecordBatch: codec LZ4_FRAME or ZSTD, method BUFFER, each buffer
   * `[int64 uncompressed length][compressed bytes]` with the spec's
-  * -1 raw-passthrough marker — decompressed by the IN-REPO from-spec
-  * codecs ([[ShortCodecs.unlz4Framed]] / [[ZstdCodec.decode]]), so
-  * pyarrow's default feather-v2 (LZ4-compressed Arrow file) layout
-  * reads without any library. Everything else — nested dictionaries,
+  * -1 raw-passthrough marker — decompressed by the engine's codecs
+  * ([[ShortCodecs.unlz4Framed]], whose own frame walk decodes the
+  * linked-block frames liblz4 writes by default, and
+  * [[ZstdCodec.decode]] through zstd-jni), so pyarrow's default feather-v2
+  * (LZ4-compressed Arrow file) layout reads through this walk. Everything else — nested dictionaries,
   * other codecs/methods, other types — REFUSES by name: silently
   * misreading a column beats nothing only if it is right.
   *
@@ -277,7 +278,7 @@ object ArrowIpc {
     * BodyCompression member is present each buffer body is
     * `[int64 LE uncompressed length][compressed bytes]` (-1 length =
     * raw passthrough), decompressed here buffer-by-buffer through
-    * the in-repo from-spec codecs. A dictionary-encoded column's
+    * the engine's codecs. A dictionary-encoded column's
     * record-batch presence is its index column (validity + indices
     * of the declared width); values resolve against `dicts` with
     * hard bounds checks. */

@@ -28,11 +28,12 @@ import Partitioning.PackOps
   * object count, long byte size, the (possibly compressed) encoded
   * objects, and the sync marker again, verified per block.
   *
-  * Codecs: `null`, `deflate` (raw RFC 1951 through the from-spec
-  * [[GzipCodec.inflate]]), `snappy` (from-spec [[ShortCodecs]] block
-  * + the spec's 4-byte big-endian CRC-32 of the UNCOMPRESSED data,
-  * verified), `bzip2`, `xz`, and `zstandard` — every decode path is a
-  * from-spec decoder already in this repo. Write side emits `null`,
+  * Codecs: `null`, `deflate` (raw RFC 1951 through
+  * [[GzipCodec.inflate]], the JDK's zlib), `snappy` ([[ShortCodecs]]
+  * block via snappy-java + the spec's 4-byte big-endian CRC-32 of the
+  * UNCOMPRESSED data, verified here), `bzip2`, `xz`, and `zstandard`
+  * — every decode path is one of the engine's codecs, each behind the
+  * same bounded [[Drain]]. Write side emits `null`,
   * `deflate` (JDK Deflater, the PNG-encoder precedent), `snappy`
   * (literal blocks), and `zstandard` (store-mode frames).
   *

@@ -1,128 +1,26 @@
 package graft.ops
 
-/** From-spec bzip2 decoder — the block-sorting member of the
-  * compressed-text ladder, and the format the largest public text
-  * corpora actually ship in (Wikipedia dumps are `.xml.bz2`;
-  * `.tar.bz2` archives remain common). Written from the publicly
-  * documented format (the BWT+MTF+RLE+Huffman pipeline of Burrows-
-  * Wheeler 1994 as framed by the bzip2 container) and pinned in
-  * Bzip2Spec against the INDEPENDENT implementation on the Spark
-  * classpath (commons-compress) across block sizes 1-9.
-  *
-  * Decoder scope — the full stream:
-  *  - `BZh1`-`BZh9` stream header; multi-block streams; the end-of-
-  *    stream magic with the COMBINED CRC verified (each block CRC
-  *    rotated-xor'd in) as well as every per-block CRC (bzip2's
-  *    MSB-first CRC-32, poly 0x04C11DB7 — note: NOT the reflected
-  *    gzip polynomial);
-  *  - per block: symbol-usage bitmaps, 2-6 Huffman groups with
-  *    MTF-coded selectors switching tables every 50 symbols,
-  *    delta-coded code lengths (1-23), canonical decode;
-  *  - RUNA/RUNB bijective-base-2 zero runs, MTF byte recovery, EOB;
-  *  - inverse BWT via the successor-vector walk from origPtr;
-  *  - the outer RLE (4 equal bytes + count) undone last;
-  *  - deprecated `randomized` blocks refused (no modern encoder
-  *    emits them).
+import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
+
+/** bzip2 — the block-sorting member of the compressed-text ladder,
+  * and the format the largest public text corpora actually ship in
+  * (Wikipedia dumps are `.xml.bz2`; `.tar.bz2` archives remain
+  * common). Decoding goes through commons-compress (on the Spark
+  * classpath) with concatenated streams enabled: `BZh1`-`BZh9`
+  * headers, multi-block streams, every per-block CRC and the combined
+  * stream CRC verified, trailing garbage refused. The engine itself
+  * refuses empty input and caps the decoded size at [[MaxOutput]]
+  * ([[Drain]]).
   *
   * Decode-only by design: bzip2 has no stored/literal mode (every
   * block is the full transform stack), so unlike gzip/zstd there is
-  * no spec-trivial write side to offer; the reference library is the
-  * encoder, exactly the fixtures discipline the image codecs use
-  * with ImageIO. Hostile-bytes contract as the whole ladder: never
-  * throws, bounds-checked, output-capped, None on any malformed
-  * construct or CRC mismatch.
+  * no spec-trivial write side to offer; commons-compress is the
+  * fixture encoder. Hostile-bytes contract as the whole ladder:
+  * `None` on any malformed construct or CRC mismatch, never a throw.
   */
 object Bzip2Codec {
 
-  private object Refuse extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  private def refuse(): Nothing = throw Refuse
-
   val MaxOutput: Int = 1 << 28
-
-  // bzip2 CRC-32: MSB-first (non-reflected), poly 0x04C11DB7
-  private val crcTable: Array[Int] = {
-    val t = new Array[Int](256)
-    var i = 0
-    while (i < 256) {
-      var c = i << 24
-      var k = 0
-      while (k < 8) {
-        c = if ((c & 0x80000000) != 0) (c << 1) ^ 0x04C11DB7 else c << 1
-        k += 1
-      }
-      t(i) = c
-      i += 1
-    }
-    t
-  }
-
-  private final class Crc {
-    private var c = 0xFFFFFFFF
-    def update(b: Int): Unit = c = (c << 8) ^ crcTable(((c >>> 24) ^ (b & 0xFF)) & 0xFF)
-    def value: Int = ~c
-  }
-
-  // MSB-first bit reader
-  private final class Bits(b: Array[Byte]) {
-    private var pos = 0L
-    private val limit = b.length.toLong * 8
-    def bitsConsumed: Long = pos
-    def bits(n: Int): Int = {
-      var v = 0
-      var k = 0
-      while (k < n) {
-        if (pos >= limit) refuse()
-        v = (v << 1) | ((b((pos >> 3).toInt) >> (7 - (pos & 7).toInt)) & 1)
-        pos += 1
-        k += 1
-      }
-      v
-    }
-    def bit(): Int = bits(1)
-    def bits48(): Long = (bits(24).toLong << 24) | (bits(24).toLong & 0xFFFFFF)
-  }
-
-  /** Canonical Huffman over lengths 1-23, codes assigned in (length,
-    * symbol-index) order — the hbAssignCodes convention. */
-  private final class Huff(lengths: Array[Int]) {
-    private val MaxLen = 23
-    private val count = new Array[Int](MaxLen + 1)
-    lengths.foreach { l => if (l < 1 || l > MaxLen) refuse(); count(l) += 1 }
-    private val (firstCode, offset, symbols) = {
-      val fc = new Array[Int](MaxLen + 2)
-      val off = new Array[Int](MaxLen + 2)
-      var code = 0; var idx = 0; var l = 1
-      while (l <= MaxLen) {
-        fc(l) = code
-        off(l) = idx
-        code = (code + count(l)) << 1
-        idx += count(l)
-        l += 1
-      }
-      val syms = new Array[Int](lengths.length)
-      val next = off.clone()
-      var s = 0
-      while (s < lengths.length) {
-        val ln = lengths(s)
-        syms(next(ln)) = s; next(ln) += 1
-        s += 1
-      }
-      (fc, off, syms)
-    }
-    def decode(in: Bits): Int = {
-      var code = 0; var l = 1
-      while (l <= MaxLen) {
-        code = (code << 1) | in.bit()
-        val c = count(l)
-        if (c > 0 && code - firstCode(l) < c && code >= firstCode(l))
-          return symbols(offset(l) + (code - firstCode(l)))
-        l += 1
-      }
-      refuse()
-    }
-  }
 
   // ------------------------------------------------------------------
   // Spark seam (the packTextZstd/decodeZstdText contract)
@@ -151,10 +49,10 @@ object Bzip2Codec {
         // length (the compressed bytes differ in the "BZh<digit>"
         // header digit — ADVICE r18 #3), so the gate's oracle surface
         // (decoded text, n_bytes, digest) is unchanged. Sub-100 kB
-        // docs therefore all carry level-1 headers; the from-spec
-        // decoder's 5/9-declared-stream coverage is exercised by
-        // Bzip2Spec (which pins levels 1-9 explicitly) and by inputs
-        // larger than 100 kB, which keep the id-cycled 1/5/9 contract.
+        // docs therefore all carry level-1 headers; 5/9-declared
+        // streams are exercised by Bzip2Spec (which pins levels 1, 5
+        // and 9) and by inputs larger than 100 kB, which keep the
+        // id-cycled 1/5/9 contract.
         val cappedLevel = math.min(level, math.max(1L, (bytes.length + 99999L) / 100000L))
         val bos = new java.io.ByteArrayOutputStream(bytes.length / 2 + 64)
         val z = new org.apache.commons.compress.compressors.bzip2
@@ -165,8 +63,8 @@ object Bzip2Codec {
       .toDF("id", "payload")
   }
 
-  /** Decode .bz2 payloads through the from-spec decoder; quarantine
-    * contract as the other codec seams. */
+  /** Decode .bz2 payloads; quarantine contract as the other codec
+    * seams. */
   def decodeBzip2Text(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -183,194 +81,6 @@ object Bzip2Codec {
       .toDF("id", "decoded", "n_bytes", "text")
   }
 
-  private val BlockMagic = 0x314159265359L
-  private val EosMagic = 0x177245385090L
-
   def decode(p: Array[Byte]): Option[Array[Byte]] =
-    try {
-      if (p.length < 10) refuse()
-      if (p(0) != 'B' || p(1) != 'Z' || p(2) != 'h') refuse()
-      val level = p(3) - '0'
-      if (level < 1 || level > 9) refuse()
-      val blockSize = level * 100000
-      val in = new Bits(p)
-      in.bits(32) // consume header (checked above byte-wise)
-      val out = new java.io.ByteArrayOutputStream(p.length * 3)
-      var combined = 0
-      var done = false
-      while (!done) {
-        val magic = in.bits48()
-        if (magic == EosMagic) {
-          val want = in.bits(32)
-          if (want != combined) refuse()
-          done = true
-        } else if (magic == BlockMagic) {
-          val wantCrc = in.bits(32)
-          if (in.bit() != 0) refuse() // deprecated randomized blocks
-          val origPtr = in.bits(24)
-
-          // symbol usage map
-          val usedMap = in.bits(16)
-          val used = new Array[Boolean](256)
-          var nUsed = 0
-          var i = 0
-          while (i < 16) {
-            if ((usedMap & (0x8000 >>> i)) != 0) {
-              val m = in.bits(16)
-              var j = 0
-              while (j < 16) {
-                if ((m & (0x8000 >>> j)) != 0) { used(16 * i + j) = true; nUsed += 1 }
-                j += 1
-              }
-            }
-            i += 1
-          }
-          if (nUsed == 0) refuse()
-          val seqToByte = new Array[Int](nUsed)
-          var si = 0
-          i = 0
-          while (i < 256) { if (used(i)) { seqToByte(si) = i; si += 1 }; i += 1 }
-          val alphaSize = nUsed + 2
-
-          // groups + selectors
-          val nGroups = in.bits(3)
-          if (nGroups < 2 || nGroups > 6) refuse()
-          val nSelectors = in.bits(15)
-          if (nSelectors < 1) refuse()
-          val selectors = new Array[Int](nSelectors)
-          val mtfGroups = Array.tabulate(nGroups)(identity)
-          i = 0
-          while (i < nSelectors) {
-            var j = 0
-            while (in.bit() == 1) { j += 1; if (j >= nGroups) refuse() }
-            val v = mtfGroups(j)
-            while (j > 0) { mtfGroups(j) = mtfGroups(j - 1); j -= 1 }
-            mtfGroups(0) = v
-            selectors(i) = v
-            i += 1
-          }
-
-          // per-group delta-coded lengths → tables
-          val tables = Array.tabulate(nGroups) { _ =>
-            val lens = new Array[Int](alphaSize)
-            var len = in.bits(5)
-            var s = 0
-            while (s < alphaSize) {
-              var go = true
-              while (go) {
-                if (len < 1 || len > 23) refuse()
-                if (in.bit() == 0) go = false
-                else if (in.bit() == 0) len += 1
-                else len -= 1
-              }
-              lens(s) = len
-              s += 1
-            }
-            new Huff(lens)
-          }
-
-          // MTF + RUNA/RUNB decode into the BWT column — grown on
-          // demand (pre-allocating the full 100k-900k block per
-          // document is needless GC pressure on small-doc corpora)
-          var bwt = new Array[Byte](math.min(blockSize, 1 << 16))
-          var n = 0
-          def ensureBwt(extra: Long): Unit = {
-            if (n + extra > blockSize) refuse()
-            if (n + extra > bwt.length) {
-              var c = bwt.length.toLong
-              while (c < n + extra) c <<= 1
-              bwt = java.util.Arrays.copyOf(bwt, math.min(c, blockSize.toLong).toInt)
-            }
-          }
-          val mtf = seqToByte.clone()
-          var groupPos = 0
-          var selIdx = -1
-          var table: Huff = null
-          var run = 0L
-          var runBit = 0
-          var eob = false
-          def flushRun(): Unit = {
-            if (run > 0) {
-              ensureBwt(run)
-              val zb = mtf(0).toByte
-              var r = 0L
-              while (r < run) { bwt(n) = zb; n += 1; r += 1 }
-              run = 0; runBit = 0
-            }
-          }
-          while (!eob) {
-            if (groupPos == 0) {
-              selIdx += 1
-              if (selIdx >= nSelectors) refuse()
-              table = tables(selectors(selIdx))
-              groupPos = 50
-            }
-            groupPos -= 1
-            val sym = table.decode(in)
-            if (sym == 0) { run += 1L << runBit; runBit += 1; if (runBit > 40) refuse() }
-            else if (sym == 1) { run += 2L << runBit; runBit += 1; if (runBit > 40) refuse() }
-            else if (sym == alphaSize - 1) { flushRun(); eob = true }
-            else {
-              flushRun()
-              // MTF recovery: symbol v names mtf position v-1
-              var j = sym - 1
-              if (j >= nUsed) refuse()
-              val v = mtf(j)
-              while (j > 0) { mtf(j) = mtf(j - 1); j -= 1 }
-              mtf(0) = v
-              ensureBwt(1)
-              bwt(n) = v.toByte
-              n += 1
-            }
-          }
-          if (origPtr >= n) refuse()
-
-          // inverse BWT: successor-vector walk
-          val cftab = new Array[Int](257)
-          i = 0
-          while (i < n) { cftab((bwt(i) & 0xFF) + 1) += 1; i += 1 }
-          i = 1
-          while (i <= 256) { cftab(i) += cftab(i - 1); i += 1 }
-          val tt = new Array[Int](n)
-          i = 0
-          while (i < n) {
-            val b0 = bwt(i) & 0xFF
-            tt(cftab(b0)) = i
-            cftab(b0) += 1
-            i += 1
-          }
-
-          // walk + outer RLE decode + block CRC
-          val crc = new Crc()
-          var pPos = tt(origPtr)
-          var emitted = 0
-          var last = -1
-          var runLen = 0
-          while (emitted < n) {
-            val byte = bwt(pPos) & 0xFF
-            pPos = tt(pPos)
-            emitted += 1
-            if (runLen == 4) {
-              // this byte is a COUNT of extra copies of `last`
-              if (out.size() + byte > MaxOutput) refuse()
-              var r = 0
-              while (r < byte) { out.write(last); crc.update(last); r += 1 }
-              runLen = 0
-              last = -1
-            } else {
-              if (byte == last) runLen += 1 else { last = byte; runLen = 1 }
-              if (out.size() >= MaxOutput) refuse()
-              out.write(byte)
-              crc.update(byte)
-            }
-          }
-          if (runLen == 4) refuse() // run announced a count byte that never came
-          if (crc.value != wantCrc) refuse()
-          combined = ((combined << 1) | (combined >>> 31)) ^ wantCrc
-        } else refuse()
-      }
-      // only zero-padding to the byte boundary may remain
-      if (((p.length.toLong * 8 - in.bitsConsumed) >= 8)) refuse()
-      Some(out.toByteArray)
-    } catch { case Refuse => None }
+    Drain(p, MaxOutput)(in => new BZip2CompressorInputStream(in, true))
 }

@@ -11,9 +11,8 @@ import org.apache.spark.sql.functions._
   * succeeded, and the text surface when the terminal format has one.
   *
   * The walk: sniff → if a compression wrapper (gzip/zstd/xz/bzip2,
-  * and since round 14 the snappy-framing and LZ4-frame stream
-  * layers), decompress with the from-spec codec and RE-SNIFF the
-  * payload —
+  * and the snappy-framing and LZ4-frame stream layers), decompress
+  * with the codec [[Sniff.codec]] names and RE-SNIFF the payload —
   * wrappers nest in the wild (`.pdf.gz`, tarballs of zstd shards) —
   * up to a declared depth of 4; terminal formats either carry text
   * (plain text, PDF via the object/content walk, ZIP by recursing
@@ -41,21 +40,14 @@ object DecodeAny {
     var steps = depth
     while (steps < MaxDepth) {
       val fmt = Sniff.detect(p)
-      fmt match {
-        case "gzip" | "zstd" | "xz" | "bzip2" | "snappy-framed" | "lz4-framed" =>
-          chain += fmt
-          val dec = fmt match {
-            case "gzip" => GzipCodec.gunzip(p)
-            case "zstd" => ZstdCodec.decode(p)
-            case "xz" => XzCodec.decode(p)
-            case "snappy-framed" => ShortCodecs.unsnappyFramed(p)
-            case "lz4-framed" => ShortCodecs.unlz4Framed(p)
-            case _ => Bzip2Codec.decode(p)
-          }
-          dec match {
-            case Some(b) if b.length <= MaxOut => p = b; steps += 1
-            case _ => return (chain.result(), false, None)
-          }
+      val unwrap = Sniff.codec(fmt)
+      if (unwrap.isDefined) {
+        chain += fmt
+        unwrap.get(p) match {
+          case Some(b) if b.length <= MaxOut => p = b; steps += 1
+          case _ => return (chain.result(), false, None)
+        }
+      } else fmt match {
         case "text" =>
           chain += "text"
           return (chain.result(), true, Some(new String(p, java.nio.charset.StandardCharsets.UTF_8)))

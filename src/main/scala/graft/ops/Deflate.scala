@@ -23,12 +23,10 @@ import java.io.ByteArrayOutputStream
   *  - Code-length sequences RLE'd with symbols 16/17/18 exactly as
   *    §3.2.7 prescribes; HLIT/HDIST/HCLEN trimmed.
   *
-  * Pinned in GzipSpec against java.util.zip.Inflater (the independent
-  * decoder): every adversarial corpus must round-trip byte-exact, and
-  * repetitive text must actually compress. Our own from-spec
-  * [[GzipCodec.inflate]] reads it back too (same-repo cross-check,
-  * different author-path: the inflate side was written round 10
-  * against Deflater fixtures, this encoder round 11 against Inflater).
+  * Pinned in DeflateSpec against java.util.zip.Inflater (the
+  * independent decoder, also behind [[GzipCodec.inflate]]): every
+  * adversarial corpus must round-trip byte-exact, and repetitive text
+  * must actually compress.
   */
 object Deflate {
 

@@ -1,341 +1,109 @@
 package graft.ops
 
-/** From-spec DEFLATE / gzip / zlib decoder (RFC 1951 / 1952 / 1950) —
-  * the most common compressed-TEXT wire format in corpus work:
-  * Common Crawl ships `warc.gz` with one gzip MEMBER per record,
-  * and jsonl.gz / tsv.gz are the default shard format everywhere
-  * zstd has not reached. Sibling of [[ZstdCodec]] on the codec
-  * ladder; like every codec in this package it is written from the
-  * public RFCs alone and pinned in GzipSpec against an INDEPENDENT
-  * implementation (`java.util.zip` — the JDK's bundled zlib — as the
-  * hostile-grade encoder across levels 0-9 and strategies, plus its
-  * CRC32/Adler32 for the integrity fields).
+import java.util.zip.{CRC32, Inflater}
+
+/** DEFLATE / gzip / zlib (RFC 1951 / 1952 / 1950) — the most common
+  * compressed-TEXT wire format in corpus work: Common Crawl ships
+  * `warc.gz` with one gzip MEMBER per record, and jsonl.gz / tsv.gz
+  * are the default shard format everywhere zstd has not reached.
+  * Sibling of [[ZstdCodec]] on the codec ladder.
   *
-  * Decoder scope:
-  *  - DEFLATE: stored blocks (with LEN/NLEN check), fixed-Huffman
-  *    blocks, dynamic-Huffman blocks with the full code-length
-  *    meta-code (symbols 16/17/18, the scrambled HCLEN order),
-  *    canonical-Huffman decode, the complete length/distance extra-
-  *    bit tables, and overlap-safe LZ77 copies over the 32 KiB
-  *    window. Over-subscribed trees refuse; incomplete trees are
-  *    allowed only in the one-symbol form zlib itself emits for a
-  *    single-distance stream.
-  *  - gzip (RFC 1952): magic/CM check, all FLG fields (FEXTRA,
-  *    FNAME, FCOMMENT zero-terminated, FHCRC verified against the
-  *    header CRC), reserved FLG bits refuse, trailer CRC-32 and
-  *    ISIZE both VERIFIED, and multi-member concatenation with
-  *    per-member boundaries surfaced — the warc.gz record seam.
-  *  - zlib (RFC 1950): CMF/FLG consistency check, FDICT refused
-  *    (dictionaries out of scope, as in [[ZstdCodec]]), Adler-32
-  *    verified.
+  * DEFLATE and zlib decode through the JDK's `java.util.zip.Inflater`
+  * (zlib itself: Huffman/LZ77 decode, and for zlib the header check,
+  * Adler-32 trailer, and FDICT streams refused). The engine keeps only
+  * the gzip framing the JDK does not expose:
+  *  - the RFC 1952 header walk: magic/CM check, all FLG fields
+  *    (FEXTRA, FNAME, FCOMMENT zero-terminated, FHCRC verified against
+  *    the header CRC), reserved FLG bits refused;
+  *  - the trailer: CRC-32 and ISIZE both VERIFIED per member;
+  *  - multi-member concatenation with per-member boundaries surfaced
+  *    — the warc.gz record seam;
+  *  - exact framing: every stream must end where its input ends.
   *
-  * Integrity primitives (reflected CRC-32 over 0xEDB88320, Adler-32
-  * mod 65521) are implemented here from their definitions and pinned
-  * against `java.util.zip.{CRC32, Adler32}` in the spec.
-  *
-  * Hostile-bytes contract as everywhere in this package: never
-  * throws (internal `Refuse` control flow), bounds-checked reads,
-  * an explicit output cap, and `None` rather than a guess on any
-  * malformed construct, checksum mismatch, or stream that does not
-  * frame exactly.
+  * Hostile-bytes contract as everywhere in this package: `None`, never
+  * a throw, on any malformed construct, checksum mismatch, or stream
+  * that does not frame exactly; empty input and output beyond
+  * [[MaxOutput]] are refused ([[Drain]]).
   */
 object GzipCodec {
-
-  private object Refuse extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  private def refuse(): Nothing = throw Refuse
 
   /** Hard cap on total decoded output (all members) — hostile
     * streams declare absurd expansion; curation documents are far
     * below this. */
   val MaxOutput: Int = 1 << 28
 
-  // ------------------------------------------------------------------
-  // integrity primitives (from the definitions; pinned in GzipSpec)
-  // ------------------------------------------------------------------
-
-  private val crcTable: Array[Int] = {
-    val t = new Array[Int](256)
-    var n = 0
-    while (n < 256) {
-      var c = n
-      var k = 0
-      while (k < 8) {
-        c = if ((c & 1) != 0) 0xEDB88320 ^ (c >>> 1) else c >>> 1
-        k += 1
-      }
-      t(n) = c
-      n += 1
-    }
-    t
-  }
-
-  /** Reflected CRC-32 (poly 0xEDB88320), the gzip/PNG polynomial. */
+  /** CRC-32 of `b[from, until)` (`java.util.zip.CRC32`) — the gzip
+    * trailer and FHCRC check, and the zip member check. */
   def crc32(b: Array[Byte], from: Int, until: Int): Long = {
-    var c = 0xFFFFFFFF
-    var i = from
-    while (i < until) {
-      c = crcTable((c ^ b(i)) & 0xFF) ^ (c >>> 8)
-      i += 1
-    }
-    (c ^ 0xFFFFFFFF).toLong & 0xFFFFFFFFL
+    val c = new CRC32()
+    c.update(b, from, until - from)
+    c.getValue
   }
 
-  /** Adler-32 (RFC 1950 §8): two mod-65521 running sums. */
-  def adler32(b: Array[Byte], from: Int, until: Int): Long = {
-    val Mod = 65521
-    var a = 1L; var s = 0L
-    var i = from
-    while (i < until) {
-      a += (b(i) & 0xFF); if (a >= Mod) a -= Mod
-      s += a; if (s >= Mod) s -= Mod
-      i += 1
+  /** One DEFLATE stream read from an [[Inflater]] that already holds
+    * its input: ends at the stream's final block; running out of
+    * input first, or a preset-dictionary stream, is an error. */
+  private final class InflaterSource(inf: Inflater) extends java.io.InputStream {
+    override def read(): Int = {
+      val one = new Array[Byte](1)
+      if (read(one, 0, 1) < 0) -1 else one(0) & 0xFF
     }
-    (s << 16) | a
-  }
-
-  // ------------------------------------------------------------------
-  // bit reader: LSB-first within bytes (RFC 1951 §3.1.1)
-  // ------------------------------------------------------------------
-
-  private final class Bits(b: Array[Byte], from: Int, until: Int) {
-    private var bitPos: Long = from.toLong * 8
-    private val limit: Long = until.toLong * 8
-    def bytePos: Int = ((bitPos + 7) / 8).toInt
-    def bits(n: Int): Int = {
-      var v = 0; var k = 0
-      while (k < n) {
-        if (bitPos >= limit) refuse()
-        val bit = (b((bitPos >> 3).toInt) >> (bitPos & 7).toInt) & 1
-        v |= bit << k
-        bitPos += 1
-        k += 1
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      var n = 0
+      while (n == 0 && len > 0 && !inf.finished()) {
+        n = inf.inflate(b, off, len)
+        if (n == 0 && !inf.finished() && (inf.needsInput() || inf.needsDictionary()))
+          throw new java.io.EOFException("truncated or dictionary-bound deflate stream")
       }
-      v
-    }
-    /** One Huffman code bit: DEFLATE packs codes MSB-first. */
-    def bit(): Int = {
-      if (bitPos >= limit) refuse()
-      val v = (b((bitPos >> 3).toInt) >> (bitPos & 7).toInt) & 1
-      bitPos += 1
-      v
-    }
-    def alignByte(): Unit = bitPos = (bitPos + 7) & ~7L
-    def byte(): Int = {
-      if ((bitPos & 7) != 0) refuse()
-      if (bitPos + 8 > limit) refuse()
-      val v = b((bitPos >> 3).toInt) & 0xFF
-      bitPos += 8
-      v
+      if (n == 0 && inf.finished()) -1 else n
     }
   }
 
-  // ------------------------------------------------------------------
-  // canonical Huffman (RFC 1951 §3.2.2)
-  // ------------------------------------------------------------------
+  /** Inflate the stream starting at `p(from)` with `inf` (raw DEFLATE
+    * or zlib, per how it was built); (decoded bytes, index just past
+    * the stream). */
+  private def inflateAt(inf: Inflater, p: Array[Byte], from: Int,
+      max: Int): Option[(Array[Byte], Int)] =
+    if (from > p.length) None
+    else {
+      inf.setInput(p, from, p.length - from)
+      Drain.stream(max, sizeHint = 8192)(new InflaterSource(inf))
+        .map(out => (out, p.length - inf.getRemaining))
+    }
 
-  /** Canonical decode state: per-length first-code / symbol-offset
-    * arrays; decode walks one bit at a time accumulating the code
-    * MSB-first. Over-subscribed refuses; incomplete allowed only
-    * when exactly one symbol has a code (the zlib single-distance
-    * shape), where the sole valid code is the all-zeros one. */
-  private final class Huff(lengths: Array[Int]) {
-    private val MaxLen = 15
-    private val count = new Array[Int](MaxLen + 1)
-    lengths.foreach { l => if (l < 0 || l > MaxLen) refuse(); if (l > 0) count(l) += 1 }
-    private val total = count.sum
-    // Kraft check: over-subscribed → refuse; incomplete → one-symbol only
-    private val kraft: Long = {
-      var left = 1L
-      var l = 1
-      while (l <= MaxLen) { left = (left << 1) - count(l); if (left < 0) refuse(); l += 1 }
-      left
-    }
-    // over-subscribed refused above; incomplete only in the shapes
-    // zlib emits: a single code, or no codes at all (a pure-literal
-    // block's distance tree — decode then refuses if ever consulted)
-    if (kraft > 0 && total > 1) refuse()
-    private val (firstCode, offset, symbols) = {
-      val fc = new Array[Int](MaxLen + 2)
-      val off = new Array[Int](MaxLen + 2)
-      var code = 0; var idx = 0; var l = 1
-      while (l <= MaxLen) {
-        fc(l) = code
-        off(l) = idx
-        code = (code + count(l)) << 1
-        idx += count(l)
-        l += 1
-      }
-      val syms = new Array[Int](total)
-      val next = off.clone()
-      var s = 0
-      while (s < lengths.length) {
-        val ln = lengths(s)
-        if (ln > 0) { syms(next(ln)) = s; next(ln) += 1 }
-        s += 1
-      }
-      (fc, off, syms)
-    }
-    def decode(in: Bits): Int = {
-      var code = 0; var l = 1
-      while (l <= MaxLen) {
-        code |= in.bit()
-        val c = count(l)
-        if (c > 0 && code - firstCode(l) < c) return symbols(offset(l) + (code - firstCode(l)))
-        code <<= 1
-        l += 1
-      }
-      refuse()
-    }
-  }
-
-  private val fixedLit: Huff = {
-    val ls = new Array[Int](288)
-    var i = 0
-    while (i < 288) {
-      ls(i) = if (i < 144) 8 else if (i < 256) 9 else if (i < 280) 7 else 8
-      i += 1
-    }
-    new Huff(ls)
-  }
-  // all 32 5-bit codes exist in the fixed tree (RFC 1951 §3.2.6);
-  // 30-31 are invalid at USE, refused where the distance is consumed
-  private val fixedDist: Huff = new Huff(Array.fill(32)(5))
-
-  // length codes 257-285 and distance codes 0-29 (RFC 1951 §3.2.5)
-  private val lenBase = Array(3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23, 27, 31,
-    35, 43, 51, 59, 67, 83, 99, 115, 131, 163, 195, 227, 258)
-  private val lenExtra = Array(0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2,
-    3, 3, 3, 3, 4, 4, 4, 4, 5, 5, 5, 5, 0)
-  private val distBase = Array(1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65, 97, 129, 193,
-    257, 385, 513, 769, 1025, 1537, 2049, 3073, 4097, 6145, 8193, 12289, 16385, 24577)
-  private val distExtra = Array(0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6,
-    7, 7, 8, 8, 9, 9, 10, 10, 11, 11, 12, 12, 13, 13)
-
-  // code-length-code transmission order (RFC 1951 §3.2.7)
-  private val clOrder = Array(16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15)
-
-  private final class Out(var buf: Array[Byte] = new Array[Byte](8192), var len: Int = 0) {
-    def ensure(n: Int): Unit = {
-      if (len + n > MaxOutput) refuse()
-      if (len + n > buf.length) {
-        var cap = buf.length
-        while (cap < len + n) cap <<= 1
-        buf = java.util.Arrays.copyOf(buf, math.min(cap, MaxOutput).max(len + n))
-      }
-    }
-    def put(v: Int): Unit = { ensure(1); buf(len) = v.toByte; len += 1 }
-    def copy(dist: Int, n: Int): Unit = {
-      if (dist <= 0 || dist > len) refuse()
-      ensure(n)
-      var i = 0
-      while (i < n) { buf(len) = buf(len - dist); len += 1; i += 1 } // overlap-safe
-    }
-    def slice(from: Int): Array[Byte] = java.util.Arrays.copyOfRange(buf, from, len)
-  }
-
-  /** One raw DEFLATE stream starting at byte `from`; decoded bytes
-    * appended to `out`; returns the byte index just past the stream
-    * (the final block's last bit rounded up). */
-  private def inflateInto(b: Array[Byte], from: Int, until: Int, out: Out): Int = {
-    val in = new Bits(b, from, until)
-    var last = false
-    while (!last) {
-      last = in.bits(1) == 1
-      in.bits(2) match {
-        case 0 => // stored
-          in.alignByte()
-          val len = in.byte() | (in.byte() << 8)
-          val nlen = in.byte() | (in.byte() << 8)
-          if ((len ^ nlen) != 0xFFFF) refuse()
-          var i = 0
-          while (i < len) { out.put(in.byte()); i += 1 }
-        case t @ (1 | 2) =>
-          val (lit, dist) =
-            if (t == 1) (fixedLit, fixedDist)
-            else {
-              val hlit = in.bits(5) + 257
-              val hdist = in.bits(5) + 1
-              val hclen = in.bits(4) + 4
-              if (hlit > 286 || hdist > 30) refuse()
-              val clLens = new Array[Int](19)
-              var i = 0
-              while (i < hclen) { clLens(clOrder(i)) = in.bits(3); i += 1 }
-              val clTree = new Huff(clLens)
-              val lens = new Array[Int](hlit + hdist)
-              var n = 0
-              while (n < lens.length) {
-                clTree.decode(in) match {
-                  case 16 =>
-                    if (n == 0) refuse()
-                    val rep = 3 + in.bits(2)
-                    if (n + rep > lens.length) refuse()
-                    val v = lens(n - 1)
-                    var k = 0; while (k < rep) { lens(n) = v; n += 1; k += 1 }
-                  case 17 =>
-                    val rep = 3 + in.bits(3)
-                    if (n + rep > lens.length) refuse()
-                    n += rep
-                  case 18 =>
-                    val rep = 11 + in.bits(7)
-                    if (n + rep > lens.length) refuse()
-                    n += rep
-                  case s =>
-                    lens(n) = s; n += 1
-                }
-              }
-              if (lens(256) == 0) refuse() // end-of-block must be codable
-              (new Huff(lens.take(hlit)), new Huff(lens.drop(hlit)))
-            }
-          var eob = false
-          while (!eob) {
-            val sym = lit.decode(in)
-            if (sym < 256) out.put(sym)
-            else if (sym == 256) eob = true
-            else {
-              if (sym > 285) refuse()
-              val li = sym - 257
-              val n = lenBase(li) + in.bits(lenExtra(li))
-              val ds = dist.decode(in)
-              if (ds > 29) refuse()
-              val d = distBase(ds) + in.bits(distExtra(ds))
-              out.copy(d, n)
-            }
-          }
-        case _ => refuse()
-      }
-    }
-    in.bytePos
+  /** One whole stream that must consume `p` exactly. */
+  private def inflateExact(p: Array[Byte], nowrap: Boolean): Option[Array[Byte]] = {
+    val inf = new Inflater(nowrap)
+    try inflateAt(inf, p, 0, MaxOutput).collect { case (out, end) if end == p.length => out }
+    finally inf.end()
   }
 
   /** Raw DEFLATE (RFC 1951): decode one stream, require it to
     * consume the input exactly (up to the final partial byte). */
-  def inflate(p: Array[Byte]): Option[Array[Byte]] =
-    try {
-      val out = new Out()
-      val end = inflateInto(p, 0, p.length, out)
-      if (end != p.length) refuse()
-      Some(out.slice(0))
-    } catch { case Refuse => None }
+  def inflate(p: Array[Byte]): Option[Array[Byte]] = inflateExact(p, nowrap = true)
 
   /** gzip members (RFC 1952): each member decoded separately with
     * its CRC-32 and ISIZE verified — the warc.gz record boundary
     * surface. Refuses on anything other than a clean sequence of
     * well-formed members. */
-  def gunzipMembers(p: Array[Byte]): Option[Vector[Array[Byte]]] =
+  def gunzipMembers(p: Array[Byte]): Option[Vector[Array[Byte]]] = {
+    if (p == null || p.isEmpty) return None
+    val members = Vector.newBuilder[Array[Byte]]
+    val inf = new Inflater(true)
     try {
-      if (p.length == 0) refuse()
-      val members = Vector.newBuilder[Array[Byte]]
-      val out = new Out()
       var pos = 0
+      var total = 0L
       while (pos < p.length) {
-        val memberStart = out.len
-        pos = gunzipMember(p, pos, out)
-        members += out.slice(memberStart)
+        inf.reset()
+        member(inf, p, pos, (MaxOutput - total).toInt) match {
+          case Some((data, next)) =>
+            members += data; total += data.length; pos = next
+          case None => return None
+        }
       }
-      Some(members.result())
-    } catch { case Refuse => None }
+    } finally inf.end()
+    Some(members.result())
+  }
 
   /** gzip decode: all members' output concatenated (the `gzip -d`
     * semantics concatenated members decode to). */
@@ -348,57 +116,52 @@ object GzipCodec {
       all
     }
 
-  private def u8(b: Array[Byte], i: Int): Int = {
-    if (i >= b.length) refuse(); b(i) & 0xFF
-  }
-  private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-  private def le32(b: Array[Byte], i: Int): Long = le16(b, i).toLong | (le16(b, i + 2).toLong << 16)
+  private def le32(b: Array[Byte], i: Int): Long =
+    (b(i) & 0xFFL) | ((b(i + 1) & 0xFFL) << 8) | ((b(i + 2) & 0xFFL) << 16) |
+      ((b(i + 3) & 0xFFL) << 24)
 
-  /** One member starting at `pos`; output appended; returns the
-    * index just past the member's trailer. */
-  private def gunzipMember(p: Array[Byte], pos: Int, out: Out): Int = {
-    var i = pos
-    if (u8(p, i) != 0x1F || u8(p, i + 1) != 0x8B) refuse()
-    if (u8(p, i + 2) != 8) refuse() // CM: deflate only
-    val flg = u8(p, i + 3)
-    if ((flg & 0xE0) != 0) refuse() // reserved bits
-    i += 10 // MTIME(4) XFL OS skipped: metadata, not integrity
-    if ((flg & 4) != 0) { val xlen = le16(p, i); i += 2 + xlen } // FEXTRA
-    if ((flg & 8) != 0) { while (u8(p, i) != 0) i += 1; i += 1 } // FNAME
-    if ((flg & 16) != 0) { while (u8(p, i) != 0) i += 1; i += 1 } // FCOMMENT
-    if ((flg & 2) != 0) { // FHCRC: low 16 bits of header CRC
-      val want = le16(p, i)
-      if ((crc32(p, pos, i) & 0xFFFF).toInt != want) refuse()
+  /** One member starting at `pos`: (decoded bytes, index just past
+    * the member's trailer). */
+  private def member(inf: Inflater, p: Array[Byte], pos: Int,
+      max: Int): Option[(Array[Byte], Int)] =
+    bodyStart(p, pos).flatMap(inflateAt(inf, p, _, max)).collect {
+      case (data, end) if end + 8 <= p.length &&
+          crc32(data, 0, data.length) == le32(p, end) &&
+          (data.length.toLong & 0xFFFFFFFFL) == le32(p, end + 4) =>
+        (data, end + 8)
+    }
+
+  /** The RFC 1952 header walk: index of the member's DEFLATE body. */
+  private def bodyStart(p: Array[Byte], pos: Int): Option[Int] = {
+    def u8(i: Int): Int = if (i < p.length) p(i) & 0xFF else -1
+    def le16(i: Int): Int = if (i + 1 < p.length) u8(i) | (u8(i + 1) << 8) else -1
+    if (u8(pos) != 0x1F || u8(pos + 1) != 0x8B) return None
+    if (u8(pos + 2) != 8) return None // CM: deflate only
+    val flg = u8(pos + 3)
+    if (flg < 0 || (flg & 0xE0) != 0) return None // reserved bits
+    var i = pos + 10 // MTIME(4) XFL OS skipped: metadata, not integrity
+    if ((flg & 4) != 0) { // FEXTRA
+      val xlen = le16(i)
+      if (xlen < 0) return None
+      i += 2 + xlen
+    }
+    def skipZeroTerminated(): Boolean = {
+      while (i < p.length && p(i) != 0) i += 1
+      i += 1
+      i <= p.length
+    }
+    if ((flg & 8) != 0 && !skipZeroTerminated()) return None // FNAME
+    if ((flg & 16) != 0 && !skipZeroTerminated()) return None // FCOMMENT
+    if ((flg & 2) != 0) { // FHCRC: low 16 bits of the header's CRC-32
+      if (i > p.length || (crc32(p, pos, i) & 0xFFFF) != le16(i)) return None
       i += 2
     }
-    if (i > p.length) refuse()
-    val start = out.len
-    val end = inflateInto(p, i, p.length, out)
-    if (end + 8 > p.length) refuse()
-    val wantCrc = le32(p, end)
-    val wantIsize = le32(p, end + 4)
-    if (crc32(out.buf, start, out.len) != wantCrc) refuse()
-    if (((out.len - start).toLong & 0xFFFFFFFFL) != wantIsize) refuse()
-    end + 8
+    if (i > p.length) None else Some(i)
   }
 
   /** zlib (RFC 1950): CMF/FLG consistency, FDICT refused, Adler-32
     * verified, exact framing. */
-  def unzlib(p: Array[Byte]): Option[Array[Byte]] =
-    try {
-      val cmf = u8(p, 0); val flg = u8(p, 1)
-      if ((cmf & 0x0F) != 8) refuse() // CM: deflate
-      if ((cmf >> 4) > 7) refuse() // CINFO: window > 32 KiB
-      if ((cmf * 256 + flg) % 31 != 0) refuse()
-      if ((flg & 0x20) != 0) refuse() // FDICT: out of scope
-      val out = new Out()
-      val end = inflateInto(p, 2, p.length, out)
-      if (end + 4 != p.length) refuse()
-      val want = (u8(p, end).toLong << 24) | (u8(p, end + 1).toLong << 16) |
-        (u8(p, end + 2).toLong << 8) | u8(p, end + 3).toLong // big-endian
-      if (adler32(out.buf, 0, out.len) != want) refuse()
-      Some(out.slice(0))
-    } catch { case Refuse => None }
+  def unzlib(p: Array[Byte]): Option[Array[Byte]] = inflateExact(p, nowrap = false)
 
   // ------------------------------------------------------------------
   // encoder: spec-legal stored-mode gzip (the ZstdCodec discipline —
@@ -407,7 +170,7 @@ object GzipCodec {
   // hostile-grade compressed fixtures)
   // ------------------------------------------------------------------
 
-  /** One COMPRESSING gzip member: the from-spec [[Deflate]] encoder
+  /** One COMPRESSING gzip member: the in-repo [[Deflate]] encoder
     * (LZ77 + length-limited dynamic Huffman, best-of-three block
     * types) inside the RFC 1952 framing — header, deflate body,
     * CRC-32 + ISIZE trailer. Deterministic bytes. */
@@ -428,7 +191,7 @@ object GzipCodec {
     out
   }
 
-  /** One zlib stream (RFC 1950) over the from-spec [[Deflate]] body:
+  /** One zlib stream (RFC 1950) over the in-repo [[Deflate]] body:
     * CMF/FLG with a valid check value, Adler-32 trailer. */
   def zlib(data: Array[Byte]): Array[Byte] = {
     val body = Deflate.compress(data)
@@ -442,7 +205,7 @@ object GzipCodec {
     }
     out(1) = flg.toByte
     System.arraycopy(body, 0, out, 2, body.length)
-    val ad = adler32(data, 0, data.length)
+    val ad = { val a = new java.util.zip.Adler32(); a.update(data); a.getValue }
     var k = 0
     while (k < 4) {
       out(2 + body.length + k) = ((ad >> (8 * (3 - k))) & 0xFF).toByte // big-endian

@@ -14,7 +14,7 @@ package graft.ops
   *  - JPEG: APP2 segments tagged `ICC_PROFILE\0` with (seq, count)
   *    reassembly (profiles > 64 KB span segments);
   *  - PNG: the `iCCP` chunk — name, compression method 0, zlib
-  *    stream (decoded by the in-repo [[GzipCodec.unzlib]]);
+  *    stream (decoded by [[GzipCodec.unzlib]], the JDK's zlib);
   *  - WebP: the RIFF `ICCP` chunk (VP8X-flagged files);
   *  - raw profile bytes pass through (`acsp` at offset 36).
   *

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * SMALL DATA ELEMENT packing (type's upper 16 bits = byte count,
   * payload inside the tag's second word) honored everywhere:
   *  - miCOMPRESSED (15): a zlib stream holding exactly one element,
-  *    inflated through the from-spec [[GzipCodec.unzlib]];
+  *    inflated through [[GzipCodec.unzlib]] (the JDK's zlib);
   *  - miMATRIX (14): array flags (class + the complex/logical bits),
   *    dimensions (miINT32), name (miINT8), real part — a NUMERIC
   *    storage element whose mi type may be NARROWER than the class

@@ -2212,7 +2212,7 @@ object Multimodal {
   }
 
   /** gzip twin of [[decodeZstdText]]: decompress a .gz payload
-    * column through the from-spec [[GzipCodec]] (multi-member
+    * column through [[GzipCodec]] (multi-member
     * concatenation included) and surface the decoded text with the
     * same quarantine contract. */
   def decodeGzipText(df: DataFrame, idCol: String, mediaCol: String): DataFrame = {
@@ -2234,8 +2234,8 @@ object Multimodal {
       .toDF("id", "byte_len", "decoded", "n_bytes", "text")
   }
 
-  /** Decompress a zstd payload column through the from-spec
-    * [[ZstdCodec]] and surface the DECODED TEXT — the ingest seam
+  /** Decompress a zstd payload column through [[ZstdCodec]]
+    * (zstd-jni) and surface the DECODED TEXT — the ingest seam
     * for `.zst`-shipped corpora: downstream quality/dedup/packing
     * ops run on the `text` column as if the corpus were plain.
     * (id, byte_len, decoded, n_bytes, text); refused payloads keep

@@ -28,9 +28,10 @@ import org.apache.spark.sql.functions._
   *    whose xref is damaged — a corpus scan must salvage what it
   *    can — and the scan path ALSO expands any ObjStm it finds, so
   *    a modern PDF with a wrecked xref still yields its text;
-  *  - /FlateDecode content streams through the from-spec zlib
-  *    decoder ([[GzipCodec.unzlib]] — RFC 1950 with verified
-  *    Adler-32), plus unfiltered streams;
+  *  - /FlateDecode content streams through [[GzipCodec.unzlib]]
+  *    (the JDK's zlib: RFC 1950 with verified Adler-32, exact framing
+  *    and the output cap checked by the engine), plus unfiltered
+  *    streams;
   *  - page tree walk (Pages/Kids recursion, /Contents ref or array,
   *    inherited /Resources) and content-stream text collection: Tj,
   *    ' , " and TJ string operands in stream order, a newline per

@@ -67,16 +67,14 @@ object Sniff {
     if (at(p, 0) == 0x1A && at(p, 1) == 0x45 && at(p, 2) == 0xDF && at(p, 3) == 0xA3)
       return "mkv"
     if (at(p, 0) == 0x1F && at(p, 1) == 0x8B) return "gzip"
-    if (at(p, 0) == 0x28 && at(p, 1) == 0xB5 && at(p, 2) == 0x2F && at(p, 3) == 0xFD)
-      return "zstd"
+    if (zstd(p, 0)) return "zstd"
     if (ascii(p, 0, "BZh") && at(p, 3) >= '1' && at(p, 3) <= '9') return "bzip2"
     if (at(p, 0) == 0xFD && ascii(p, 1, "7zXZ") && at(p, 5) == 0) return "xz"
     if (at(p, 0) == 0xFF && at(p, 1) == 0x06 && at(p, 2) == 0 && at(p, 3) == 0 &&
       ascii(p, 4, "sNaPpY")) return "snappy-framed"
     if (at(p, 0) == 0x04 && at(p, 1) == 0x22 && at(p, 2) == 0x4D && at(p, 3) == 0x18)
       return "lz4-framed"
-    if ((at(p, 0) & 0xF0) == 0x50 && at(p, 1) == 0x2A && at(p, 2) == 0x4D && at(p, 3) == 0x18)
-      return "lz4-framed" // leading skippable frame
+    if (skippable(p, 0)) return afterSkippable(p)
     if (ascii(p, 0, "PK") && (at(p, 2) == 3 || at(p, 2) == 5 || at(p, 2) == 7))
       return "zip"
     if (ascii(p, 257, "ustar")) return "tar"
@@ -169,6 +167,50 @@ object Sniff {
     }
     high > 0 && high * 10 <= n * 3
   }
+
+  private def zstd(p: Array[Byte], i: Int): Boolean =
+    at(p, i) == 0x28 && at(p, i + 1) == 0xB5 && at(p, i + 2) == 0x2F && at(p, i + 3) == 0xFD
+
+  private def skippable(p: Array[Byte], i: Int): Boolean =
+    (at(p, i) & 0xF0) == 0x50 && at(p, i + 1) == 0x2A && at(p, i + 2) == 0x4D && at(p, i + 3) == 0x18
+
+  /** Skippable frames (magic 0x184D2A5x, LE32 size, payload) belong to
+    * both the zstd and the LZ4 frame formats — pzstd leads every .zst
+    * with one — so the frame after them names the codec: zstd when
+    * its magic follows, else LZ4. */
+  private def afterSkippable(p: Array[Byte]): String = {
+    var i = 0L
+    while (i + 8 <= p.length && skippable(p, i.toInt)) {
+      var size = 0L
+      var k = 0
+      while (k < 4) { size |= at(p, i.toInt + 4 + k).toLong << (8 * k); k += 1 }
+      i += 8 + size
+    }
+    if (i < p.length && zstd(p, i.toInt)) "zstd" else "lz4-framed"
+  }
+
+  /** The compression wrappers [[detect]] names, each with its
+    * decoder (`None` = the codec refused the bytes). */
+  private val codecs: Map[String, Array[Byte] => Option[Array[Byte]]] = Map(
+    "gzip" -> GzipCodec.gunzip,
+    "zstd" -> (ZstdCodec.decode(_: Array[Byte])),
+    "bzip2" -> Bzip2Codec.decode,
+    "xz" -> XzCodec.decode,
+    "snappy-framed" -> ShortCodecs.unsnappyFramed,
+    "lz4-framed" -> ShortCodecs.unlz4Framed)
+
+  /** The decoder for a compression label as [[detect]] names it;
+    * None for labels that are not compression wrappers. */
+  def codec(label: String): Option[Array[Byte] => Option[Array[Byte]]] = codecs.get(label)
+
+  /** Strip one sniffed compression wrapper: the decoded bytes, `p`
+    * itself when it carries no wrapper, None when its codec refuses
+    * it. */
+  def decompress(p: Array[Byte]): Option[Array[Byte]] =
+    codec(detect(p)) match {
+      case Some(decode) => decode(p)
+      case None => Some(p)
+    }
 
   /** (id, format, byte_len) per payload — scan-local. */
   def formats(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {

@@ -231,26 +231,9 @@ object Tar {
       .toDF("file_id", "payload")
   }
 
-  /** Sniff-and-strip the compression wrapper: .tar.gz / .tar.bz2 /
-    * .tar.xz / .tar.zst all route through the from-spec codec
-    * ladder; unwrapped payloads pass through. Shared by [[members]]
-    * and the [[WebDataset]] layer. */
-  private[ops] def unwrap(payload: Array[Byte]): Option[Array[Byte]] =
-    if (payload.length >= 2 && (payload(0) & 0xFF) == 0x1F && (payload(1) & 0xFF) == 0x8B)
-      GzipCodec.gunzip(payload)
-    else if (payload.length >= 4 && payload(0) == 'B' && payload(1) == 'Z' && payload(2) == 'h')
-      Bzip2Codec.decode(payload)
-    else if (payload.length >= 6 && (payload(0) & 0xFF) == 0xFD && payload(1) == '7' &&
-      payload(2) == 'z' && payload(3) == 'X' && payload(4) == 'Z' && payload(5) == 0)
-      XzCodec.decode(payload)
-    else if (payload.length >= 4 && (payload(0) & 0xFF) == 0x28 && (payload(1) & 0xFF) == 0xB5 &&
-      (payload(2) & 0xFF) == 0x2F && (payload(3) & 0xFF) == 0xFD)
-      ZstdCodec.decode(payload)
-    else Some(payload)
-
-  /** Members of every archive in `df` — .tar and .tar.gz payloads
-    * both accepted (gzip sniffed by magic, decoded through the
-    * from-spec [[GzipCodec]]). One row per member; a malformed file
+  /** Members of every archive in `df` — .tar and compressed .tar.*
+    * payloads both accepted (the wrapper sniffed by magic and stripped
+    * by [[Sniff.decompress]]). One row per member; a malformed file
     * quarantines as a single `member_index = -1` row. */
   def members(df: DataFrame, fileIdCol: String, payloadCol: String): DataFrame = {
     val spark = df.sparkSession
@@ -258,7 +241,7 @@ object Tar {
     df.select(col(fileIdCol).cast("string"), col(payloadCol))
       .as[(String, Array[Byte])]
       .flatMap { case (fileId, payload) =>
-        unwrap(payload).flatMap(entries) match {
+        Sniff.decompress(payload).flatMap(entries) match {
           case Some(es) => es.zipWithIndex.map { case (e, i) =>
             (fileId, i, e.name, e.typeflag.toString, e.size, e.data)
           }

@@ -91,9 +91,9 @@ object Warc {
       "Content-Type" -> "application/warc-fields"),
       warcinfoBody)
 
-  /** One gzip member around one record — JDK zlib as the independent
-    * encoder, level cycling with the id so the from-spec inflate
-    * sees varied block shapes. */
+  /** One gzip member around one record — JDK zlib as the encoder,
+    * level cycling with the id so the inflate sees varied block
+    * shapes. */
   private def gzipMember(data: Array[Byte], level: Int): Array[Byte] = {
     val d = new java.util.zip.Deflater(level, true)
     d.setInput(data); d.finish()
@@ -598,8 +598,8 @@ object Warc {
   /** The response-record text surface: HTTP headers stripped, the
     * body taken through the PAYLOAD ladder — `Transfer-Encoding:
     * chunked` de-chunked (RFC 9112 §7.1), then `Content-Encoding`
-    * decompressed via the in-repo from-spec codecs (gzip, deflate
-    * with the zlib/raw server-bug fallback, zstd, brotli) —
+    * decompressed via the engine's codecs (gzip, deflate with the
+    * zlib/raw server-bug fallback, zstd, brotli) —
     * then the charset ladder ([[decodeBody]]) into a `text` column,
     * what downstream html_extract / quality / dedup stages consume.
     * Crawl archives store the raw wire bytes, so both encodings are

@@ -74,7 +74,7 @@ object WebDataset {
     df.select(col(fileIdCol).cast("string"), col(payloadCol))
       .as[(String, Array[Byte])]
       .flatMap { case (fileId, payload) =>
-        Tar.unwrap(payload).flatMap(Tar.entries) match {
+        Sniff.decompress(payload).flatMap(Tar.entries) match {
           case Some(es) => samplesOf(es).zipWithIndex.map { case ((key, parts), i) =>
             (fileId, i, key, parts)
           }

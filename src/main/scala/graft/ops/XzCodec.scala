@@ -1,370 +1,34 @@
 package graft.ops
 
-/** From-spec XZ / LZMA2 decoder — the last of the big-four archive
-  * codecs (.tar.xz release tarballs, HF dataset shards, kernel
-  * sources), written from the public `xz-file-format` specification
-  * and the published LZMA specification, and pinned in XzSpec
-  * against the INDEPENDENT reference implementation on the Spark
-  * classpath (org.tukaani.xz — XZ for Java) across presets 0-9 and
-  * every check type.
+import org.tukaani.xz.{BasicArrayCache, LZMAInputStream, XZInputStream}
+
+/** XZ / LZMA2 and the legacy `.lzma` container — the last of the
+  * big-four archive codecs (.tar.xz release tarballs, HF dataset
+  * shards, kernel sources). Decoding goes through XZ for Java
+  * (org.tukaani.xz, on the Spark classpath): stream header/footer and
+  * index cross-checks, every flag and header CRC32, the per-block
+  * integrity check in all four check types (None, CRC32, CRC64,
+  * SHA-256), and multi-stream concatenation with 4-aligned stream
+  * padding. The engine itself refuses empty input, caps the decoded
+  * size at [[MaxOutput]] ([[Drain]]), and bounds the LZMA dictionary
+  * a header may ask the decoder to allocate by the same cap.
   *
-  * Container scope (xz-file-format.txt):
-  *  - stream header/footer magics, stream-flags consistency check,
-  *    all three flag CRC32s (header, footer, index) VERIFIED;
-  *  - block headers: header CRC32, optional compressed/uncompressed
-  *    size varints (cross-checked against reality when present),
-  *    single LZMA2 filter (delta/BCJ chains refused — declared);
-  *  - per-block integrity check of the UNCOMPRESSED data in all
-  *    four spec check types: None, CRC32, CRC64 (ECMA-182 reflected
-  *    — implemented here from the polynomial), SHA-256 (JDK digest);
-  *  - the index (record count + per-block unpadded/uncompressed
-  *    size varints) cross-checked record-for-record against the
-  *    blocks actually decoded; footer backward-size check;
-  *    multi-stream concatenation with 4-aligned stream padding.
-  *
-  * LZMA2/LZMA scope (the published LZMA spec's decoder description):
-  *  - LZMA2 chunking: dict/state/props reset control bits,
-  *    uncompressed chunks, size-bounded compressed chunks whose
-  *    range-coded payload must consume its byte budget EXACTLY;
-  *  - the full LZMA decoder: 11-bit adaptive binary probabilities
-  *    over a carry-less range coder, literal coder with (lc, lp)
-  *    context and matched-literal mode, the 12-state transition
-  *    machine, match/rep/shortrep decisions, three-tier length
-  *    coder, 6-bit pos-slot bittrees per length class, reverse
-  *    bittrees for low slots, direct bits + 4-bit align tree for
-  *    high slots, and the four-slot rep-distance history.
-  *
-  * Decode-only, like [[Bzip2Codec]]: LZMA has no stored mode at the
-  * stream level worth writing (LZMA2 uncompressed chunks exist but
-  * an encoder that only emits them is pointless next to gzipStored);
-  * the reference library supplies hostile-grade fixtures, every
-  * preset exercising different chunk/context shapes. Hostile-bytes
-  * contract as the whole ladder: never throws, bounds-checked,
-  * output-capped, None on any malformed construct or failed check.
+  * Decode-only, like [[Bzip2Codec]]: XZ for Java is also the fixture
+  * encoder. Hostile-bytes contract as the whole ladder: `None` on any
+  * malformed construct or failed check, never a throw.
   */
 object XzCodec {
 
-  private object Refuse extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  private def refuse(): Nothing = throw Refuse
-
   val MaxOutput: Int = 1 << 28
 
-  // ------------------------------------------------------------------
-  // integrity primitives
-  // ------------------------------------------------------------------
+  /** Decoder memory limit in KiB: a header declaring a dictionary
+    * larger than the output cap is refused before allocation. */
+  private val MemLimitKiB = MaxOutput >> 10
 
-  private val crc64Table: Array[Long] = {
-    val poly = 0xC96C5795D7870F42L // ECMA-182, reflected
-    val t = new Array[Long](256)
-    var n = 0
-    while (n < 256) {
-      var c = n.toLong
-      var k = 0
-      while (k < 8) {
-        c = if ((c & 1L) != 0) poly ^ (c >>> 1) else c >>> 1
-        k += 1
-      }
-      t(n) = c
-      n += 1
-    }
-    t
-  }
-
-  def crc64(b: Array[Byte], from: Int, until: Int): Long = {
-    var c = -1L
-    var i = from
-    while (i < until) {
-      c = crc64Table(((c ^ b(i)) & 0xFF).toInt) ^ (c >>> 8)
-      i += 1
-    }
-    ~c
-  }
-
-  // ------------------------------------------------------------------
-  // byte cursor + varints
-  // ------------------------------------------------------------------
-
-  private final class Cur(val b: Array[Byte], var pos: Int) {
-    def u8(): Int = { if (pos >= b.length) refuse(); val v = b(pos) & 0xFF; pos += 1; v }
-    def le32(): Long = u8().toLong | (u8().toLong << 8) | (u8().toLong << 16) | (u8().toLong << 24)
-    def le64(): Long = le32() | (le32() << 32)
-    def take(n: Int): Array[Byte] = {
-      if (n < 0 || pos + n > b.length) refuse()
-      val r = java.util.Arrays.copyOfRange(b, pos, pos + n); pos += n; r
-    }
-    def varint(): Long = {
-      var v = 0L; var shift = 0
-      var go = true
-      while (go) {
-        if (shift > 56) refuse()
-        val x = u8()
-        v |= (x & 0x7FL) << shift
-        shift += 7
-        if ((x & 0x80) == 0) { if (x == 0 && shift > 7) refuse(); go = false }
-      }
-      v
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // LZMA range decoder + probability models
-  // ------------------------------------------------------------------
-
-  private final class Range(b: Array[Byte], var pos: Int, val limit: Int) {
-    var range: Long = 0xFFFFFFFFL
-    var code: Long = 0L
-    def init(): Unit = {
-      if (u8() != 0) refuse()
-      var i = 0
-      while (i < 4) { code = (code << 8) | u8(); i += 1 }
-    }
-    private def u8(): Int = { if (pos >= limit) refuse(); val v = b(pos) & 0xFF; pos += 1; v }
-    private def normalize(): Unit =
-      if (range < 0x1000000L) { range <<= 8; code = ((code << 8) | u8()) & 0xFFFFFFFFL }
-    def bit(probs: Array[Short], i: Int): Int = {
-      val p = probs(i)
-      val bound = (range >>> 11) * p
-      if (code < bound) {
-        range = bound
-        probs(i) = (p + ((2048 - p) >>> 5)).toShort
-        normalize()
-        0
-      } else {
-        range -= bound
-        code -= bound
-        probs(i) = (p - (p >>> 5)).toShort
-        normalize()
-        1
-      }
-    }
-    def direct(n: Int): Int = {
-      var res = 0
-      var k = 0
-      while (k < n) {
-        range >>>= 1
-        res <<= 1
-        if (code >= range) { code -= range; res |= 1 }
-        normalize()
-        k += 1
-      }
-      res
-    }
-    def tree(probs: Array[Short], n: Int): Int = {
-      var m = 1
-      var k = 0
-      while (k < n) { m = (m << 1) | bit(probs, m); k += 1 }
-      m - (1 << n)
-    }
-    def rtree(probs: Array[Short], n: Int): Int = {
-      var m = 1
-      var res = 0
-      var k = 0
-      while (k < n) {
-        val bv = bit(probs, m)
-        m = (m << 1) | bv
-        res |= bv << k
-        k += 1
-      }
-      res
-    }
-    def finishedExactly: Boolean = pos == limit && code == 0
-  }
-
-  private def freshProbs(n: Int): Array[Short] = Array.fill[Short](n)(1024)
-
-
-  private final class Out(cap: Int) {
-    private var buf = new Array[Byte](math.min(cap, 1 << 16).max(64))
-    var len = 0
-    def at(i: Int): Byte = buf(i)
-    def ensure(n: Int): Unit = {
-      if (len + n > cap) refuse()
-      if (len + n > buf.length) {
-        var c = buf.length
-        while (c < len + n) c <<= 1
-        buf = java.util.Arrays.copyOf(buf, math.min(c, cap).max(len + n))
-      }
-    }
-    def put(v: Int): Unit = { ensure(1); buf(len) = v.toByte; len += 1 }
-    def copyFrom(dist: Int, n: Int): Unit = {
-      if (dist <= 0 || dist > len) refuse()
-      ensure(n)
-      var i = 0
-      while (i < n) { buf(len) = buf(len - dist); len += 1; i += 1 }
-    }
-    def putRaw(src: Array[Byte], from: Int, n: Int): Unit = {
-      ensure(n)
-      System.arraycopy(src, from, buf, len, n)
-      len += n
-    }
-    def slice(from: Int): Array[Byte] = java.util.Arrays.copyOfRange(buf, from, len)
-    def bytes: Array[Byte] = java.util.Arrays.copyOf(buf, len)
-  }
-
-  // ------------------------------------------------------------------
-  // the real LZMA chunk decoder
-  // ------------------------------------------------------------------
-
-  private final class LzmaState {
-    var lc = 0; var lp = 0; var pb = 0
-    var state = 0
-    var rep0 = 0; var rep1 = 0; var rep2 = 0; var rep3 = 0
-    var probs: Probs = _
-    def setProps(p: Int): Unit = {
-      if (p >= 225) refuse()
-      lc = p % 9; val r = p / 9; lp = r % 5; pb = r / 5
-    }
-    def resetState(): Unit = {
-      state = 0; rep0 = 0; rep1 = 0; rep2 = 0; rep3 = 0
-      probs = new Probs(lc, lp)
-    }
-  }
-
-  private final class Probs(lc: Int, lp: Int) {
-    val lit: Array[Short] = freshProbs(0x300 << (lc + lp))
-    val isMatch: Array[Short] = freshProbs(12 << 4)
-    val isRep: Array[Short] = freshProbs(12)
-    val isRepG0: Array[Short] = freshProbs(12)
-    val isRepG1: Array[Short] = freshProbs(12)
-    val isRepG2: Array[Short] = freshProbs(12)
-    val isRep0Long: Array[Short] = freshProbs(12 << 4)
-    val posSlot: Array[Short] = freshProbs(4 * 64) // 6-bit tree per lenToPosState
-    val specPos: Array[Short] = freshProbs(115)
-    val align: Array[Short] = freshProbs(16)
-    val lenChoice: Array[Short] = freshProbs(2)
-    val lenLow: Array[Short] = freshProbs(16 * 8)
-    val lenMid: Array[Short] = freshProbs(16 * 8)
-    val lenHigh: Array[Short] = freshProbs(256)
-    val repChoice: Array[Short] = freshProbs(2)
-    val repLow: Array[Short] = freshProbs(16 * 8)
-    val repMid: Array[Short] = freshProbs(16 * 8)
-    val repHigh: Array[Short] = freshProbs(256)
-  }
-
-  private def decodeLen(rc: Range, choice: Array[Short], low: Array[Short],
-      mid: Array[Short], high: Array[Short], posState: Int): Int = {
-    def tree3(probs: Array[Short]): Int = {
-      var m = 1; var k = 0
-      while (k < 3) { m = (m << 1) | rc.bit(probs, posState * 8 + m); k += 1 }
-      m - 8
-    }
-    if (rc.bit(choice, 0) == 0) 2 + tree3(low)
-    else if (rc.bit(choice, 1) == 0) 10 + tree3(mid)
-    else 18 + rc.tree(high, 8)
-  }
-
-  /** One size-bounded LZMA chunk. LZMA2 callers forbid the end
-    * marker (`allowEndMarker = false`); the `.lzma` alone format
-    * permits it — returns true when decoding stopped at the marker,
-    * false when `untilLen` was reached. */
-  private def runLzma(s: LzmaState, rc: Range, out: Out, untilLen: Int,
-      allowEndMarker: Boolean = false): Boolean = {
-    val posMask = (1 << s.pb) - 1
-    val litPosMask = (1 << s.lp) - 1
-    val P = s.probs
-    while (out.len < untilLen) {
-      val posState = out.len & posMask
-      if (rc.bit(P.isMatch, (s.state << 4) + posState) == 0) {
-        val prev = if (out.len == 0) 0 else out.at(out.len - 1) & 0xFF
-        val litState = ((out.len & litPosMask) << s.lc) + (prev >>> (8 - s.lc))
-        val base = 0x300 * litState
-        var sym = 1
-        if (s.state >= 7) {
-          if (out.len - s.rep0 - 1 < 0) refuse()
-          var matchByte = out.at(out.len - s.rep0 - 1) & 0xFF
-          var mismatched = false
-          while (!mismatched && sym < 0x100) {
-            val matchBit = (matchByte >> 7) & 1
-            matchByte = (matchByte << 1) & 0xFF
-            val bv = rc.bit(P.lit, base + ((1 + matchBit) << 8) + sym)
-            sym = (sym << 1) | bv
-            mismatched = matchBit != bv
-          }
-        }
-        while (sym < 0x100) sym = (sym << 1) | rc.bit(P.lit, base + sym)
-        out.put(sym & 0xFF)
-        s.state = if (s.state < 4) 0 else if (s.state < 10) s.state - 3 else s.state - 6
-      } else if (rc.bit(P.isRep, s.state) == 0) {
-        // new-distance match
-        s.rep3 = s.rep2; s.rep2 = s.rep1; s.rep1 = s.rep0
-        val len = decodeLen(rc, P.lenChoice, P.lenLow, P.lenMid, P.lenHigh, posState)
-        val lenToPosState = math.min(len - 2, 3)
-        // 6-bit tree inside the per-class segment
-        var m = 1; var k = 0
-        while (k < 6) { m = (m << 1) | rc.bit(P.posSlot, lenToPosState * 64 + m); k += 1 }
-        val slot = m - 64
-        var dist = slot
-        if (slot >= 4) {
-          val numDirect = (slot >> 1) - 1
-          dist = (2 | (slot & 1)) << numDirect
-          if (slot < 14) {
-            // reverse bittree over specPos, base index dist - slot - 1
-            val baseIdx = dist - slot - 1
-            var mm = 1; var res = 0; var kk = 0
-            while (kk < numDirect) {
-              val bv = rc.bit(P.specPos, baseIdx + mm)
-              mm = (mm << 1) | bv
-              res |= bv << kk
-              kk += 1
-            }
-            dist += res
-          } else {
-            dist += rc.direct(numDirect - 4) << 4
-            dist += rc.rtree(P.align, 4)
-          }
-        }
-        if (dist == -1 || dist == 0xFFFFFFFF) {
-          // end-of-stream marker: legal only in the alone format
-          if (!allowEndMarker) refuse()
-          return true
-        }
-        s.rep0 = dist
-        if (s.rep0 + 1 > out.len || s.rep0 < 0) refuse()
-        out.copyFrom(s.rep0 + 1, math.min(len, untilLen - out.len) match {
-          case l if l == len => len
-          case _ => refuse()
-        })
-        s.state = if (s.state < 7) 7 else 10
-      } else {
-        // rep match family
-        if (rc.bit(P.isRepG0, s.state) == 0) {
-          if (rc.bit(P.isRep0Long, (s.state << 4) + posState) == 0) {
-            // short rep: one byte at rep0
-            if (s.rep0 + 1 > out.len) refuse()
-            val b0 = out.at(out.len - s.rep0 - 1) & 0xFF
-            out.put(b0)
-            s.state = if (s.state < 7) 9 else 11
-          } else {
-            val len = decodeLen(rc, P.repChoice, P.repLow, P.repMid, P.repHigh, posState)
-            if (s.rep0 + 1 > out.len || out.len + len > untilLen) refuse()
-            out.copyFrom(s.rep0 + 1, len)
-            s.state = if (s.state < 7) 8 else 11
-          }
-        } else {
-          val dist =
-            if (rc.bit(P.isRepG1, s.state) == 0) { val d = s.rep1; s.rep1 = s.rep0; d }
-            else if (rc.bit(P.isRepG2, s.state) == 0) {
-              val d = s.rep2; s.rep2 = s.rep1; s.rep1 = s.rep0; d
-            } else {
-              val d = s.rep3; s.rep3 = s.rep2; s.rep2 = s.rep1; s.rep1 = s.rep0; d
-            }
-          s.rep0 = dist
-          val len = decodeLen(rc, P.repChoice, P.repLow, P.repMid, P.repHigh, posState)
-          if (s.rep0 + 1 > out.len || out.len + len > untilLen) refuse()
-          out.copyFrom(s.rep0 + 1, len)
-          s.state = if (s.state < 7) 8 else 11
-        }
-      }
-    }
-    if (out.len != untilLen) refuse()
-    false
-  }
-
-  // ------------------------------------------------------------------
-  // XZ container
-  // ------------------------------------------------------------------
+  /** Reuses the dictionary buffers across decodes: a stream's LZMA
+    * dictionary (8 MiB at the default preset) would otherwise be
+    * allocated and zeroed for every payload, however small. */
+  private def cache = BasicArrayCache.getInstance()
 
   // ------------------------------------------------------------------
   // Spark seam (the packTextZstd/decodeZstdText contract)
@@ -405,8 +69,8 @@ object XzCodec {
       .toDF("id", "payload")
   }
 
-  /** Decode .xz payloads through the from-spec decoder; quarantine
-    * contract as the other codec seams. */
+  /** Decode .xz payloads; quarantine contract as the other codec
+    * seams. */
   def decodeXzText(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -423,40 +87,12 @@ object XzCodec {
       .toDF("id", "decoded", "n_bytes", "text")
   }
 
-  private val HeaderMagic = Array[Int](0xFD, '7', 'z', 'X', 'Z', 0x00)
-
   /** The legacy `.lzma` ALONE format (the pre-xz container 7-Zip and
     * old release tarballs still carry): 1 props byte, LE32 dictionary
     * size, LE64 uncompressed size (all-FF = unknown → decode to the
-    * end-of-stream marker), then one raw LZMA1 stream. Known-size
-    * streams may ALSO end with the marker; either way the byte count
-    * must land exactly. Same LZMA core as the XZ path — this is only
-    * the header and termination discipline. */
+    * end-of-stream marker), then one raw LZMA1 stream. */
   def decodeLzmaAlone(p: Array[Byte], maxOut: Int = MaxOutput): Option[Array[Byte]] =
-    try {
-      if (p.length < 14) refuse() // header + minimal rc init
-      val props = p(0) & 0xFF
-      if (props >= 225) refuse()
-      var dictSize = 0L
-      var i = 0
-      while (i < 4) { dictSize |= (p(1 + i) & 0xFFL) << (8 * i); i += 1 }
-      var size = 0L
-      i = 0
-      while (i < 8) { size |= (p(5 + i) & 0xFFL) << (8 * i); i += 1 }
-      val unknown = size == -1L
-      if (!unknown && (size < 0 || size > maxOut)) refuse()
-      val out = new Out(if (unknown) maxOut else size.toInt)
-      val rc = new Range(p, 13, p.length)
-      rc.init()
-      val s = new LzmaState
-      s.setProps(props)
-      s.resetState()
-      val until = if (unknown) maxOut else size.toInt
-      val markerHit = runLzma(s, rc, out, until, allowEndMarker = true)
-      if (unknown && !markerHit) refuse() // cap reached without the marker
-      if (!unknown && out.len != size) refuse()
-      Some(out.bytes)
-    } catch { case Refuse => None case _: ArrayIndexOutOfBoundsException => None }
+    Drain(p, maxOut)(in => new LZMAInputStream(in, MemLimitKiB, cache))
 
   /** Per-doc `.lzma` payloads written by XZ for Java's own
     * LZMAOutputStream (the independent encoder): even ids the
@@ -504,175 +140,5 @@ object XzCodec {
   }
 
   def decode(p: Array[Byte]): Option[Array[Byte]] =
-    try {
-      val out = new Out(MaxOutput)
-      var pos = 0
-      var anyStream = false
-      while (pos < p.length) {
-        // stream padding between concatenated streams: 4-aligned zeros
-        if (anyStream && p(pos) == 0) {
-          val start = pos
-          while (pos < p.length && p(pos) == 0) pos += 1
-          if ((pos - start) % 4 != 0) refuse()
-          if (pos >= p.length) return Some(out.bytes)
-        }
-        pos = decodeStream(p, pos, out)
-        anyStream = true
-      }
-      if (!anyStream) refuse()
-      Some(out.bytes)
-    } catch { case Refuse => None case _: ArrayIndexOutOfBoundsException => None }
-
-  /** One stream starting at `at`; returns the index past its footer. */
-  private def decodeStream(p: Array[Byte], at: Int, out: Out): Int = {
-    val c = new Cur(p, at)
-    HeaderMagic.foreach(m => if (c.u8() != m) refuse())
-    val flagsPos = c.pos
-    val flag0 = c.u8()
-    val checkType = c.u8()
-    if (flag0 != 0) refuse()
-    if (!Set(0x00, 0x01, 0x04, 0x0A).contains(checkType)) refuse()
-    val wantHdrCrc = c.le32()
-    if (GzipCodec.crc32(p, flagsPos, flagsPos + 2) != wantHdrCrc) refuse()
-
-    val records = Vector.newBuilder[(Long, Long)] // (unpaddedSize, uncompressedSize)
-    var sawIndex = false
-    var indexStart = -1
-    while (!sawIndex) {
-      val blockStart = c.pos
-      val first = c.u8()
-      if (first == 0x00) { sawIndex = true; indexStart = blockStart }
-      else {
-        val headerSize = (first + 1) * 4
-        val headerEnd = blockStart + headerSize
-        if (headerEnd + 4 > p.length) refuse()
-        val flags = c.u8()
-        val numFilters = (flags & 3) + 1
-        if ((flags & 0x3C) != 0) refuse() // reserved bits
-        val compPresent = (flags & 0x40) != 0
-        val unpPresent = (flags & 0x80) != 0
-        val declaredComp = if (compPresent) c.varint() else -1L
-        val declaredUnp = if (unpPresent) c.varint() else -1L
-        if (numFilters != 1) refuse() // LZMA2-only chains supported
-        val filterId = c.varint()
-        if (filterId != 0x21) refuse()
-        val propsSize = c.varint()
-        if (propsSize != 1) refuse()
-        val dictProp = c.u8()
-        if (dictProp > 40) refuse()
-        // padding to the declared header size, then header CRC32
-        while (c.pos < headerEnd - 4) if (c.u8() != 0) refuse()
-        val wantCrc = c.le32()
-        if (GzipCodec.crc32(p, blockStart, headerEnd - 4) != wantCrc) refuse()
-
-        // compressed data runs until its padding + check; we learn the
-        // true size from the LZMA2 walk itself
-        val dataStart = c.pos
-        val outStart = out.len
-        // find LZMA2 end by decoding (lzma2 enforces exact framing)
-        val dataEnd = lzma2Scan(p, dataStart, out)
-        val compSize = (dataEnd - dataStart).toLong
-        if (compPresent && declaredComp != compSize) refuse()
-        val unpSize = (out.len - outStart).toLong
-        if (unpPresent && declaredUnp != unpSize) refuse()
-        c.pos = dataEnd
-        // block padding to 4
-        while ((c.pos - at) % 4 != 0) if (c.u8() != 0) refuse()
-        // integrity check of the uncompressed data
-        checkType match {
-          case 0x00 =>
-          case 0x01 =>
-            val want = c.le32()
-            val got = {
-              val data = out.slice(outStart)
-              GzipCodec.crc32(data, 0, data.length)
-            }
-            if (got != want) refuse()
-          case 0x04 =>
-            val want = c.le64()
-            val data = out.slice(outStart)
-            if (crc64(data, 0, data.length) != want) refuse()
-          case 0x0A =>
-            val want = c.take(32)
-            val md = java.security.MessageDigest.getInstance("SHA-256")
-            if (!java.util.Arrays.equals(md.digest(out.slice(outStart)), want)) refuse()
-        }
-        val unpadded = headerSize.toLong + compSize + (checkType match {
-          case 0x00 => 0; case 0x01 => 4; case 0x04 => 8; case _ => 32
-        })
-        records += ((unpadded, unpSize))
-      }
-    }
-
-    // index: count + records, padding, CRC32
-    val recs = records.result()
-    val n = c.varint()
-    if (n != recs.length) refuse()
-    recs.foreach { case (unpadded, unp) =>
-      if (c.varint() != unpadded) refuse()
-      if (c.varint() != unp) refuse()
-    }
-    while ((c.pos - indexStart) % 4 != 0) if (c.u8() != 0) refuse()
-    val wantIdxCrc = c.le32()
-    if (GzipCodec.crc32(p, indexStart, c.pos - 4) != wantIdxCrc) refuse()
-    val indexSize = c.pos - indexStart
-
-    // footer: CRC32(backwardSize || flags), backwardSize, flags, "YZ"
-    val footStart = c.pos
-    val wantFootCrc = c.le32()
-    val backward = c.le32()
-    val f0 = c.u8(); val f1 = c.u8()
-    if (f0 != 0 || f1 != checkType) refuse() // flags must match the header
-    if (GzipCodec.crc32(p, footStart + 4, footStart + 10) != wantFootCrc) refuse()
-    if ((backward + 1) * 4 != indexSize) refuse()
-    if (c.u8() != 'Y' || c.u8() != 'Z') refuse()
-    c.pos
-  }
-
-  /** Decode an LZMA2 payload of initially-unknown length starting at
-    * `from`; returns the end index. Framing is self-terminating (the
-    * 0x00 control), and every chunk is bounds-checked against the
-    * full buffer — trailing container bytes are never consumed
-    * because chunk sizes are explicit. */
-  private def lzma2Scan(p: Array[Byte], from: Int, out: Out): Int = {
-    val s = new LzmaState
-    var havePropsEver = false
-    var pos = from
-    while (true) {
-      if (pos >= p.length) refuse()
-      val control = p(pos) & 0xFF; pos += 1
-      if (control == 0x00) return pos
-      else if (control == 0x01 || control == 0x02) {
-        if (pos + 2 > p.length) refuse()
-        val size = (((p(pos) & 0xFF) << 8) | (p(pos + 1) & 0xFF)) + 1
-        pos += 2
-        if (pos + size > p.length) refuse()
-        out.putRaw(p, pos, size)
-        pos += size
-        if (s.probs != null) s.resetState()
-      } else if (control >= 0x80) {
-        if (pos + 4 > p.length) refuse()
-        val unpackSize = (((control & 0x1F) << 16) |
-          ((p(pos) & 0xFF) << 8) | (p(pos + 1) & 0xFF)) + 1
-        val packSize = (((p(pos + 2) & 0xFF) << 8) | (p(pos + 3) & 0xFF)) + 1
-        pos += 4
-        val resetMode = (control >> 5) & 3
-        if (resetMode >= 2) {
-          if (pos >= p.length) refuse()
-          s.setProps(p(pos) & 0xFF); pos += 1
-          havePropsEver = true
-        }
-        if (!havePropsEver) refuse()
-        if (resetMode >= 1) s.resetState()
-        if (s.probs == null) refuse()
-        if (pos + packSize > p.length) refuse()
-        val rc = new Range(p, pos, pos + packSize)
-        rc.init()
-        runLzma(s, rc, out, out.len + unpackSize)
-        if (rc.pos != pos + packSize) refuse()
-        pos += packSize
-      } else refuse()
-    }
-    refuse()
-  }
+    Drain(p, MaxOutput)(in => new XZInputStream(in, MemLimitKiB, cache))
 }

@@ -7,8 +7,9 @@ import Partitioning.PackOps
 /** From-spec ZIP reader/writer (the PKWARE APPNOTE layout) — the
   * remaining everyday archive format for document dumps
   * (`corpus.zip` of per-document files). Reuses the codec ladder:
-  * DEFLATE members decode through [[GzipCodec.inflate]] and every
-  * member CRC-32 verifies through the same table.
+  * DEFLATE members decode through [[GzipCodec.inflate]] (the JDK's
+  * zlib), and every member CRC-32 is verified here with
+  * `java.util.zip.CRC32`.
   *
   * Reader scope: end-of-central-directory located by signature scan
   * from the tail (comment tolerated), central-directory walk
@@ -157,7 +158,7 @@ object Zip {
           case 0 => // stored
             if (compSize != unpSize) refuse()
             java.util.Arrays.copyOfRange(p, dataStart, dataStart + compSize.toInt)
-          case 8 => // DEFLATE via the from-spec inflate
+          case 8 => // DEFLATE via GzipCodec.inflate
             val slice = java.util.Arrays.copyOfRange(p, dataStart, dataStart + compSize.toInt)
             GzipCodec.inflate(slice) match {
               case Some(d) if d.length.toLong == unpSize => d

@@ -1,54 +1,27 @@
 package graft.ops
 
-/** From-spec Zstandard decoder (RFC 8878) — the compressed-TEXT rung
-  * of the codec ladder, beside FLAC (RFC 9639) on the audio side:
-  * real LLM corpora ship as `.zst` (jsonl.zst / warc.zst), so a
-  * curation engine that cannot open the wire format is incomplete.
-  * Like every codec in this package it is written from the public
-  * specification alone and cross-validated in ZstdSpec against an
-  * INDEPENDENT implementation (zstd-jni, the library Spark itself
-  * ships for parquet/shuffle compression — used there as the
-  * reference encoder, the ImageIO role in the image gates).
-  *
-  * Decoder scope — the full frame format:
-  *  - frame header: magic, descriptor, window descriptor,
-  *    single-segment, frame content size, XXH64 content checksum
-  *    (VERIFIED via [[Xxh64]] when present — refuse on mismatch);
-  *    skippable frames skipped; multi-frame inputs concatenate;
-  *    dictionaries refused (declared out of scope);
-  *  - raw, RLE, and compressed blocks;
-  *  - literals: raw, RLE, Huffman-compressed (1- and 4-stream with
-  *    jump table) and treeless (previous table reuse); Huffman tree
-  *    descriptions both direct (4-bit weights) and FSE-compressed
-  *    (two interleaved states over a backward bitstream);
-  *  - sequences: predefined / RLE / FSE-compressed / repeat modes
-  *    for all three of LL/OF/ML, the full normalized-count
-  *    (NCount) forward bitstream with low-probability (-1) symbols
-  *    and repeat-zero flags, state-machine decode over the backward
-  *    bitstream, the three-slot repeat-offset history with the
-  *    literal-length-0 shift rules, and overlap-safe match copies.
+import com.github.luben.zstd.{RecyclingBufferPool, ZstdDictDecompress, ZstdInputStreamNoFinalizer}
+
+/** Zstandard (RFC 8878) — the compressed-TEXT rung of the codec
+  * ladder: real LLM corpora ship as `.zst` (jsonl.zst / warc.zst).
+  * Decoding goes through zstd-jni, the library Spark itself ships
+  * for parquet/shuffle compression: the full frame format, content
+  * checksums verified, skippable frames skipped, multi-frame inputs
+  * concatenated, and dictionary frames decoded against a matching
+  * [[Dictionary]]. The engine itself refuses empty input and caps the
+  * decoded size at [[MaxOutput]] ([[Drain]]), and refuses a structured
+  * dictionary with the reserved id 0.
   *
   * Encoder scope: a spec-legal store-mode encoder (raw blocks, RLE
   * blocks for constant runs, single-segment header, content
   * checksum) — enough to WRITE valid `.zst` any decoder accepts;
-  * entropy-coded encoding is delegated to the ecosystem (unlike
-  * audio, where the FLAC encoder had to exist for the lossless gate,
-  * nothing here needs our own compressor to prove decode
-  * correctness: the independent encoder provides hostile-grade
-  * compressed fixtures at every level).
+  * entropy-coded encoding is zstd-jni's job.
   *
-  * Hostile-bytes contract as everywhere in this package: never
-  * throws (internal `Refuse` control flow), bounds-checked reads,
-  * explicit output caps before allocation, and `None` rather than a
-  * guess on any malformed construct, any CRC/checksum mismatch, or
-  * any bitstream that does not consume exactly.
+  * Hostile-bytes contract as everywhere in this package: `None`
+  * rather than a guess on any malformed frame, checksum mismatch,
+  * truncation, trailing garbage, or missing/wrong dictionary.
   */
 object ZstdCodec {
-
-  private object Refuse extends RuntimeException {
-    override def fillInStackTrace(): Throwable = this
-  }
-  private def refuse(): Nothing = throw Refuse
 
   /** Hard cap on total decoded output (all frames) — hostile frames
     * declare absurd sizes; a curation pipeline's documents are far
@@ -56,586 +29,6 @@ object ZstdCodec {
   val MaxOutput: Int = 1 << 28
 
   private val BlockMax = 1 << 17 // 128 KiB: Block_Maximum_Size ceiling
-
-  // ------------------------------------------------------------------
-  // bit readers
-  // ------------------------------------------------------------------
-
-  /** Forward LSB-first bit reader over little-endian bytes — the
-    * NCount (FSE table description) layout. */
-  private final class FwdBits(b: Array[Byte], from: Int, until: Int) {
-    private var bitPos = 0L
-    private val limit = (until - from).toLong * 8
-    def consumed: Long = bitPos
-    def bytesConsumed: Int = ((bitPos + 7) / 8).toInt
-    /** Peek `n` low bits at the cursor (zero-filled past the end). */
-    def peek(n: Int): Int = {
-      var v = 0; var k = 0
-      while (k < n) {
-        val p = bitPos + k
-        if (p < limit) {
-          val bit = (b(from + (p >> 3).toInt) >> (p & 7).toInt) & 1
-          v |= bit << k
-        }
-        k += 1
-      }
-      v
-    }
-    def skip(n: Int): Unit = { bitPos += n; if (bitPos > limit + 8) refuse() }
-    def read(n: Int): Int = { val v = peek(n); skip(n); v }
-  }
-
-  /** Backward bit reader — zstd entropy payloads are written
-    * LSB-first then read from the END, after locating the 1-bit
-    * sentinel in the final byte. `read(n)` returns the next `n` bits
-    * with the first-read bit as the value's MSB (the
-    * `BIT_lookBits`/`BIT_readBits` contract). Peeks past the start
-    * zero-fill (legal near exhaustion); consumption below zero is
-    * corruption, checked by [[done]]. */
-  private final class BackBits(b: Array[Byte], from: Int, until: Int) {
-    if (until <= from) refuse()
-    private val last = b(until - 1) & 0xFF
-    if (last == 0) refuse() // missing sentinel
-    /** valid payload bits below the sentinel */
-    private var bitIndex: Long =
-      (until - from - 1).toLong * 8 + (31 - Integer.numberOfLeadingZeros(last))
-    def remaining: Long = bitIndex
-    private def bitAt(p: Long): Int =
-      if (p < 0) 0 else (b(from + (p >> 3).toInt) >> (p & 7).toInt) & 1
-    def peek(n: Int): Int = {
-      var v = 0; var k = 0
-      while (k < n) { v |= bitAt(bitIndex - n + k) << k; k += 1 }
-      v
-    }
-    def skip(n: Int): Unit = bitIndex -= n
-    def read(n: Int): Long = {
-      if (n == 0) return 0L
-      var v = 0L; var k = 0
-      bitIndex -= n
-      while (k < n) { v |= bitAt(bitIndex + k).toLong << k; k += 1 }
-      v
-    }
-    /** exactly consumed — every well-formed stream ends at 0 */
-    def done: Boolean = bitIndex == 0
-  }
-
-  // ------------------------------------------------------------------
-  // FSE
-  // ------------------------------------------------------------------
-
-  /** FSE decoding table: state → (symbol, nbBits, baseline). */
-  private final class FseTable(val accuracyLog: Int, val symbol: Array[Int],
-      val nbBits: Array[Int], val baseline: Array[Int])
-
-  /** RLE pseudo-table: one state, zero bits, always `sym`. */
-  private def rleTable(sym: Int): FseTable =
-    new FseTable(0, Array(sym), Array(0), Array(0))
-
-  private def highBit(v: Int): Int = 31 - Integer.numberOfLeadingZeros(v)
-
-  /** Build the decode table from a normalized count vector (RFC 8878
-    * §4.1.1): -1 symbols get one cell at the top (nbBits=AL), the
-    * rest spread by the fixed step, then cells in increasing state
-    * order take nbBits/baseline from the per-symbol counter walk. */
-  private def buildFse(counts: Array[Int], al: Int): FseTable = {
-    val size = 1 << al
-    val sym = new Array[Int](size)
-    var highThreshold = size - 1
-    var s = 0
-    while (s < counts.length) {
-      if (counts(s) == -1) { sym(highThreshold) = s; highThreshold -= 1 }
-      s += 1
-    }
-    val step = (size >> 1) + (size >> 3) + 3
-    val mask = size - 1
-    var pos = 0
-    s = 0
-    while (s < counts.length) {
-      var k = 0
-      while (k < counts(s)) {
-        sym(pos) = s
-        do { pos = (pos + step) & mask } while (pos > highThreshold)
-        k += 1
-      }
-      s += 1
-    }
-    if (pos != 0) refuse()
-    val nb = new Array[Int](size)
-    val base = new Array[Int](size)
-    val next = new Array[Int](counts.length)
-    s = 0
-    while (s < counts.length) {
-      next(s) = if (counts(s) == -1) 1 else counts(s); s += 1
-    }
-    var u = 0
-    while (u < size) {
-      val sm = sym(u)
-      val x = next(sm); next(sm) += 1
-      nb(u) = al - highBit(x)
-      base(u) = (x << nb(u)) - size
-      u += 1
-    }
-    new FseTable(al, sym, nb, base)
-  }
-
-  /** Parse an FSE table description (normalized counts, forward
-    * bitstream) and build its decode table. Returns the table; the
-    * reader is left positioned after the (byte-aligned) description. */
-  private def readFseTable(r: FwdBits, maxSymbol: Int, maxLog: Int): FseTable = {
-    val al = r.read(4) + 5
-    if (al > maxLog) refuse()
-    var remaining = (1 << al) + 1
-    var threshold = 1 << al
-    var nbBits = al + 1
-    val counts = new Array[Int](maxSymbol + 1)
-    var charnum = 0
-    var previous0 = false
-    while (remaining > 1 && charnum <= maxSymbol) {
-      if (previous0) {
-        // runs of zero-probability symbols: 2-bit repeat flags,
-        // value 3 chains
-        var rep = r.read(2)
-        while (rep == 3) {
-          charnum += 3
-          if (charnum > maxSymbol + 1) refuse()
-          rep = r.read(2)
-        }
-        charnum += rep
-        if (charnum > maxSymbol) refuse()
-        previous0 = false
-      } else {
-        val max = (2 * threshold - 1) - remaining
-        val low = r.peek(nbBits - 1)
-        var count =
-          if (low < max) { r.skip(nbBits - 1); low }
-          else {
-            val full = r.peek(nbBits)
-            r.skip(nbBits)
-            if (full >= threshold) full - max else full
-          }
-        count -= 1 // shifted encoding: -1 means "less than 1"
-        remaining -= (if (count < 0) -count else count)
-        if (remaining < 1) refuse()
-        counts(charnum) = count
-        charnum += 1
-        previous0 = count == 0
-        while (remaining < threshold) { nbBits -= 1; threshold >>= 1 }
-      }
-    }
-    if (remaining != 1) refuse()
-    // description is byte-aligned: round the cursor up
-    val pad = (8 - (r.consumed % 8)) % 8
-    r.skip(pad.toInt)
-    buildFse(counts, al)
-  }
-
-  // ------------------------------------------------------------------
-  // Huffman
-  // ------------------------------------------------------------------
-
-  /** Huffman decoding table: peek maxBits → (symbol, nbBits). */
-  private final class HufTable(val maxBits: Int, val symbol: Array[Int],
-      val nbBits: Array[Int])
-
-  /** Weights → canonical table (RFC 8878 §4.2.1): the last weight is
-    * implied (must complete a power of two), numBits = maxBits + 1 −
-    * weight, cells filled in (weight asc, symbol asc) order. */
-  private def buildHuf(weights: Array[Int], numExplicit: Int): HufTable = {
-    var total = 0L
-    var maxW = 0
-    var i = 0
-    while (i < numExplicit) {
-      val w = weights(i)
-      if (w > 11) refuse()
-      if (w > 0) { total += 1L << (w - 1); if (w > maxW) maxW = w }
-      i += 1
-    }
-    if (total == 0) refuse()
-    val maxBits = highBit(total.toInt) + 1 // log2 of next power of two
-    if (maxBits > 11) refuse()
-    val target = 1L << maxBits
-    val missing = target - total
-    // the implied last weight must account for exactly a power of two
-    if (missing <= 0 || (missing & (missing - 1)) != 0) refuse()
-    val lastW = highBit(missing.toInt) + 1
-    val n = numExplicit + 1
-    val allW = java.util.Arrays.copyOf(weights, n)
-    allW(n - 1) = lastW
-    if (lastW > maxW) maxW = lastW
-    val size = 1 << maxBits
-    val sym = new Array[Int](size)
-    val nb = new Array[Int](size)
-    var pos = 0
-    var w = 1
-    while (w <= maxW) {
-      var s = 0
-      while (s < n) {
-        if (allW(s) == w) {
-          val cells = 1 << (w - 1)
-          val bits = maxBits + 1 - w
-          var k = 0
-          while (k < cells) { sym(pos) = s; nb(pos) = bits; pos += 1; k += 1 }
-        }
-        s += 1
-      }
-      w += 1
-    }
-    if (pos != size) refuse()
-    new HufTable(maxBits, sym, nb)
-  }
-
-  /** Huffman tree description: direct 4-bit weights, or an
-    * FSE-compressed weights stream decoded with two interleaved
-    * states. Returns (table, bytesConsumed). */
-  private def readHufTable(b: Array[Byte], from: Int, until: Int): (HufTable, Int) = {
-    if (from >= until) refuse()
-    val hByte = b(from) & 0xFF
-    if (hByte >= 128) {
-      val numW = hByte - 127
-      val nBytes = (numW + 1) / 2
-      if (from + 1 + nBytes > until) refuse()
-      val w = new Array[Int](numW)
-      var i = 0
-      while (i < numW) {
-        val by = b(from + 1 + i / 2) & 0xFF
-        w(i) = if (i % 2 == 0) by >> 4 else by & 0xF
-        i += 1
-      }
-      (buildHuf(w, numW), 1 + nBytes)
-    } else {
-      // FSE-compressed weights: hByte = compressed byte count
-      val end = from + 1 + hByte
-      if (end > until) refuse()
-      val fwd = new FwdBits(b, from + 1, end)
-      val table = readFseTable(fwd, maxSymbol = 255, maxLog = 6)
-      val streamFrom = from + 1 + fwd.bytesConsumed
-      if (streamFrom >= end) refuse()
-      val bits = new BackBits(b, streamFrom, end)
-      var s1 = bits.read(table.accuracyLog).toInt
-      var s2 = bits.read(table.accuracyLog).toInt
-      val w = new Array[Int](256)
-      var n = 0
-      var loop = true
-      while (loop) {
-        if (n + 2 > 255) refuse()
-        w(n) = table.symbol(s1); n += 1
-        if (bits.remaining < table.nbBits(s1)) {
-          w(n) = table.symbol(s2); n += 1; loop = false
-        } else {
-          s1 = table.baseline(s1) + bits.read(table.nbBits(s1)).toInt
-          w(n) = table.symbol(s2); n += 1
-          if (bits.remaining < table.nbBits(s2)) {
-            w(n) = table.symbol(s1); n += 1; loop = false
-          } else {
-            s2 = table.baseline(s2) + bits.read(table.nbBits(s2)).toInt
-          }
-        }
-      }
-      (buildHuf(w, n), 1 + hByte)
-    }
-  }
-
-  /** Decode `count` symbols from one backward Huffman stream. */
-  private def hufDecodeStream(t: HufTable, b: Array[Byte], from: Int, until: Int,
-      out: Array[Byte], outAt: Int, count: Int): Unit = {
-    val bits = new BackBits(b, from, until)
-    var i = 0
-    while (i < count) {
-      val v = bits.peek(t.maxBits)
-      out(outAt + i) = t.symbol(v).toByte
-      bits.skip(t.nbBits(v))
-      i += 1
-    }
-    if (!bits.done) refuse()
-  }
-
-  // ------------------------------------------------------------------
-  // predefined sequence tables (RFC 8878 §3.1.1.3.2.2)
-  // ------------------------------------------------------------------
-
-  private val LLDefault = Array(4, 3, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 1, 1, 1,
-    2, 2, 2, 2, 2, 2, 2, 2, 2, 3, 2, 1, 1, 1, 1, 1, -1, -1, -1, -1)
-  private val MLDefault = Array(1, 4, 3, 2, 2, 2, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, -1, -1, -1, -1, -1, -1, -1)
-  private val OFDefault = Array(1, 1, 1, 1, 1, 1, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 1, -1, -1, -1, -1, -1)
-  private lazy val LLPre = buildFse(LLDefault, 6)
-  private lazy val MLPre = buildFse(MLDefault, 6)
-  private lazy val OFPre = buildFse(OFDefault, 5)
-
-  /** Literal-length code → (baseline, extra bits). Codes 0–15 are
-    * the value itself. */
-  private val LLBase = Array(0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14,
-    15, 16, 18, 20, 22, 24, 28, 32, 40, 48, 64, 128, 256, 512, 1024, 2048,
-    4096, 8192, 16384, 32768, 65536)
-  private val LLExtra = Array(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-    1, 1, 1, 1, 2, 2, 3, 3, 4, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
-
-  /** Match-length code → (baseline, extra bits). Codes 0–31 are
-    * value + 3. */
-  private val MLBase = Array(3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16,
-    17, 18, 19, 20, 21, 22, 23, 24, 25, 26, 27, 28, 29, 30, 31, 32, 33, 34,
-    35, 37, 39, 41, 43, 47, 51, 59, 67, 83, 99, 131, 259, 515, 1027, 2051,
-    4099, 8195, 16387, 32771, 65539)
-  private val MLExtra = Array(0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 3, 3,
-    4, 4, 5, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
-
-  // ------------------------------------------------------------------
-  // frame state
-  // ------------------------------------------------------------------
-
-  /** Entropy state persisted across blocks within one frame. */
-  private final class FrameState {
-    var huf: HufTable = null
-    var ll: FseTable = null
-    var of: FseTable = null
-    var ml: FseTable = null
-    val reps: Array[Long] = Array(1L, 4L, 8L)
-  }
-
-  /** Growable output with a hard cap. `floor` marks the current
-    * frame's start: matches must not reach into a previous frame —
-    * frames are independent — EXCEPT through `prefix`, the supplied
-    * dictionary's content, which the spec places virtually before
-    * the frame (round 15 continuation). */
-  private final class Out(hint: Int) {
-    var buf = new Array[Byte](math.max(64, math.min(hint, MaxOutput)))
-    var len = 0
-    var floor = 0
-    var prefix: Array[Byte] = Array.emptyByteArray
-    def ensure(n: Int): Unit = {
-      if (len + n > MaxOutput) refuse()
-      if (len + n > buf.length) {
-        var cap = buf.length
-        while (cap < len + n) cap = math.min(MaxOutput, cap * 2)
-        buf = java.util.Arrays.copyOf(buf, cap)
-      }
-    }
-    def appendByte(v: Byte, n: Int): Unit = {
-      ensure(n); java.util.Arrays.fill(buf, len, len + n, v); len += n
-    }
-    def append(src: Array[Byte], from: Int, n: Int): Unit = {
-      ensure(n); System.arraycopy(src, from, buf, len, n); len += n
-    }
-    /** overlap-safe LZ match copy from `len - offset`; reaches
-      * through the frame floor into the dictionary prefix. */
-    def matchCopy(offset: Int, n: Int): Unit = {
-      if (offset <= 0 || offset > (len - floor) + prefix.length) refuse()
-      ensure(n)
-      var s = len - offset
-      var d = len
-      var k = 0
-      while (k < n) {
-        buf(d) = if (s < floor) prefix(prefix.length - (floor - s)) else buf(s)
-        s += 1; d += 1; k += 1
-      }
-      len += n
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // block decoding
-  // ------------------------------------------------------------------
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xFF
-
-  /** Decode one compressed block body `[from, until)` into `out`. */
-  private def decodeCompressedBlock(b: Array[Byte], from: Int, until: Int,
-      out: Out, st: FrameState, blockCap: Int): Unit = {
-    if (from >= until) refuse()
-    // ---- literals section ----
-    val h0 = u8(b, from)
-    val litType = h0 & 3
-    val sizeFormat = (h0 >> 2) & 3
-    var litRegen = 0
-    var litCompressed = 0
-    var headerLen = 0
-    var fourStreams = false
-    if (litType <= 1) { // Raw / RLE
-      sizeFormat match {
-        case 0 | 2 => litRegen = h0 >> 3; headerLen = 1
-        case 1 =>
-          if (from + 2 > until) refuse()
-          litRegen = (h0 >> 4) | (u8(b, from + 1) << 4); headerLen = 2
-        case 3 =>
-          if (from + 3 > until) refuse()
-          litRegen = (h0 >> 4) | (u8(b, from + 1) << 4) | (u8(b, from + 2) << 12)
-          headerLen = 3
-      }
-    } else { // Compressed / Treeless
-      sizeFormat match {
-        case 0 | 1 =>
-          if (from + 3 > until) refuse()
-          litRegen = (h0 >> 4) | ((u8(b, from + 1) & 0x3F) << 4)
-          litCompressed = (u8(b, from + 1) >> 6) | (u8(b, from + 2) << 2)
-          headerLen = 3
-          fourStreams = sizeFormat == 1
-        case 2 =>
-          if (from + 4 > until) refuse()
-          litRegen = (h0 >> 4) | (u8(b, from + 1) << 4) | ((u8(b, from + 2) & 3) << 12)
-          litCompressed = (u8(b, from + 2) >> 2) | (u8(b, from + 3) << 6)
-          headerLen = 4
-          fourStreams = true
-        case 3 =>
-          if (from + 5 > until) refuse()
-          litRegen = (h0 >> 4) | (u8(b, from + 1) << 4) | ((u8(b, from + 2) & 0x3F) << 12)
-          litCompressed = (u8(b, from + 2) >> 6) | (u8(b, from + 3) << 2) | (u8(b, from + 4) << 10)
-          headerLen = 5
-          fourStreams = true
-      }
-    }
-    if (litRegen > BlockMax) refuse()
-    val literals = new Array[Byte](litRegen)
-    var cursor = from + headerLen
-    litType match {
-      case 0 => // raw
-        if (cursor + litRegen > until) refuse()
-        System.arraycopy(b, cursor, literals, 0, litRegen)
-        cursor += litRegen
-      case 1 => // RLE
-        if (cursor + 1 > until) refuse()
-        java.util.Arrays.fill(literals, b(cursor))
-        cursor += 1
-      case 2 | 3 => // Huffman (with or without a new tree)
-        val litEnd = cursor + litCompressed
-        if (litEnd > until) refuse()
-        var streamsFrom = cursor
-        if (litType == 2) {
-          val (t, used) = readHufTable(b, cursor, litEnd)
-          st.huf = t
-          streamsFrom = cursor + used
-        }
-        if (st.huf == null) refuse()
-        if (fourStreams) {
-          if (streamsFrom + 6 > litEnd) refuse()
-          val s1 = u8(b, streamsFrom) | (u8(b, streamsFrom + 1) << 8)
-          val s2 = u8(b, streamsFrom + 2) | (u8(b, streamsFrom + 3) << 8)
-          val s3 = u8(b, streamsFrom + 4) | (u8(b, streamsFrom + 5) << 8)
-          val base = streamsFrom + 6
-          val n1 = (litRegen + 3) / 4
-          val n4 = litRegen - 3 * n1
-          if (n4 < 0) refuse()
-          val e1 = base + s1; val e2 = e1 + s2; val e3 = e2 + s3
-          if (e3 > litEnd) refuse()
-          hufDecodeStream(st.huf, b, base, e1, literals, 0, n1)
-          hufDecodeStream(st.huf, b, e1, e2, literals, n1, n1)
-          hufDecodeStream(st.huf, b, e2, e3, literals, 2 * n1, n1)
-          hufDecodeStream(st.huf, b, e3, litEnd, literals, 3 * n1, n4)
-        } else {
-          hufDecodeStream(st.huf, b, streamsFrom, litEnd, literals, 0, litRegen)
-        }
-        cursor = litEnd
-    }
-    // ---- sequences section ----
-    if (cursor >= until) refuse()
-    val s0 = u8(b, cursor)
-    var nbSeq = 0
-    if (s0 == 0) { nbSeq = 0; cursor += 1 }
-    else if (s0 < 128) { nbSeq = s0; cursor += 1 }
-    else if (s0 < 255) {
-      if (cursor + 2 > until) refuse()
-      nbSeq = ((s0 - 128) << 8) + u8(b, cursor + 1); cursor += 2
-    } else {
-      if (cursor + 3 > until) refuse()
-      nbSeq = u8(b, cursor + 1) + (u8(b, cursor + 2) << 8) + 0x7F00; cursor += 3
-    }
-    if (nbSeq == 0) {
-      if (cursor != until) refuse() // no sequence bitstream expected
-      if (litRegen > blockCap) refuse()
-      out.append(literals, 0, litRegen)
-      return
-    }
-    if (cursor >= until) refuse()
-    val modes = u8(b, cursor); cursor += 1
-    if ((modes & 3) != 0) refuse() // reserved bits
-    def tableFor(mode: Int, prev: FseTable, pre: FseTable, maxSym: Int,
-        maxLog: Int, fwdAt: () => Int, advance: Int => Unit): FseTable = mode match {
-      case 0 => pre
-      case 1 =>
-        val at = fwdAt()
-        if (at >= until) refuse()
-        val sym = u8(b, at)
-        if (sym > maxSym) refuse()
-        advance(1)
-        rleTable(sym)
-      case 2 =>
-        val at = fwdAt()
-        val fwd = new FwdBits(b, at, until)
-        val t = readFseTable(fwd, maxSym, maxLog)
-        advance(fwd.bytesConsumed)
-        t
-      case 3 =>
-        if (prev == null) refuse()
-        prev
-    }
-    var cur = cursor
-    val llT = tableFor((modes >> 6) & 3, st.ll, LLPre, 35, 9, () => cur, n => cur += n)
-    val ofT = tableFor((modes >> 4) & 3, st.of, OFPre, 31, 8, () => cur, n => cur += n)
-    val mlT = tableFor((modes >> 2) & 3, st.ml, MLPre, 52, 9, () => cur, n => cur += n)
-    st.ll = llT; st.of = ofT; st.ml = mlT
-    // ---- sequence execution ----
-    val bits = new BackBits(b, cur, until)
-    var llS = bits.read(llT.accuracyLog).toInt
-    var ofS = bits.read(ofT.accuracyLog).toInt
-    var mlS = bits.read(mlT.accuracyLog).toInt
-    var litPos = 0
-    val startLen = out.len
-    var i = 0
-    while (i < nbSeq) {
-      val llCode = llT.symbol(llS)
-      val ofCode = ofT.symbol(ofS)
-      val mlCode = mlT.symbol(mlS)
-      if (llCode > 35 || ofCode > 31 || mlCode > 52) refuse()
-      // extra bits read in OF, ML, LL order
-      val ofValue = (1L << ofCode) + bits.read(ofCode)
-      val ml = MLBase(mlCode) + bits.read(MLExtra(mlCode)).toInt
-      val ll = LLBase(llCode) + bits.read(LLExtra(llCode)).toInt
-      // repeat-offset history (RFC 8878 §3.1.1.5)
-      val reps = st.reps
-      var offset = 0L
-      if (ofValue > 3) {
-        offset = ofValue - 3
-        reps(2) = reps(1); reps(1) = reps(0); reps(0) = offset
-      } else {
-        var idx = ofValue.toInt
-        if (ll == 0) idx += 1
-        idx match {
-          case 1 => offset = reps(0)
-          case 2 => offset = reps(1); reps(1) = reps(0); reps(0) = offset
-          case 3 =>
-            offset = reps(2); reps(2) = reps(1); reps(1) = reps(0); reps(0) = offset
-          case 4 =>
-            offset = reps(0) - 1
-            if (offset <= 0) refuse()
-            reps(2) = reps(1); reps(1) = reps(0); reps(0) = offset
-        }
-      }
-      if (offset > Int.MaxValue) refuse()
-      if (litPos + ll > litRegen) refuse()
-      out.append(literals, litPos, ll)
-      litPos += ll
-      out.matchCopy(offset.toInt, ml)
-      if (out.len - startLen > blockCap) refuse()
-      // state updates in LL, ML, OF order — skipped after the last
-      // sequence (their bits are not in the stream)
-      i += 1
-      if (i < nbSeq) {
-        llS = llT.baseline(llS) + bits.read(llT.nbBits(llS)).toInt
-        mlS = mlT.baseline(mlS) + bits.read(mlT.nbBits(mlS)).toInt
-        ofS = ofT.baseline(ofS) + bits.read(ofT.nbBits(ofS)).toInt
-      }
-    }
-    if (!bits.done) refuse()
-    // trailing literals
-    out.append(literals, litPos, litRegen - litPos)
-    if (out.len - startLen > blockCap) refuse()
-  }
-
-  // ------------------------------------------------------------------
-  // frames
-  // ------------------------------------------------------------------
 
   private def le32(b: Array[Byte], i: Int): Long =
     (b(i) & 0xFFL) | ((b(i + 1) & 0xFFL) << 8) | ((b(i + 2) & 0xFFL) << 16) |
@@ -646,198 +39,42 @@ object ZstdCodec {
     * references, or output beyond [[MaxOutput]]. */
   def decode(p: Array[Byte]): Option[Array[Byte]] = decode(p, None)
 
-  /** Decode with an optional dictionary (round 15 continuation):
-    * frames that declare a Dictionary_ID require a parsed dictionary
-    * whose id matches; the dictionary's entropy tables seed the
-    * frame state, its repeat offsets seed the history, and its
-    * content is reachable as virtual window prefix. */
-  def decode(p: Array[Byte], dict: Option[Dictionary]): Option[Array[Byte]] = {
-    try {
-      val out = new Out(math.min(p.length.toLong * 4, MaxOutput.toLong).toInt)
-      var pos = 0
-      if (p.length == 0) refuse()
-      while (pos < p.length) {
-        if (pos + 4 > p.length) refuse()
-        val magic = le32(p, pos)
-        if (magic >= 0x184D2A50L && magic <= 0x184D2A5FL) {
-          // skippable frame
-          if (pos + 8 > p.length) refuse()
-          val sz = le32(p, pos + 4)
-          if (pos + 8 + sz > p.length) refuse()
-          pos += 8 + sz.toInt
-        } else if (magic == 0xFD2FB528L) {
-          pos = decodeFrame(p, pos + 4, out, dict)
-        } else refuse()
-      }
-      Some(java.util.Arrays.copyOf(out.buf, out.len))
-    } catch {
-      case Refuse => None
-      case _: ArrayIndexOutOfBoundsException => None
-      case _: NegativeArraySizeException => None
+  /** Decode with an optional dictionary: frames that declare a
+    * Dictionary_ID require the dictionary with that id; a raw-content
+    * dictionary is reachable as window prefix. */
+  def decode(p: Array[Byte], dict: Option[Dictionary]): Option[Array[Byte]] =
+    Drain(p, MaxOutput) { in =>
+      val z = new ZstdInputStreamNoFinalizer(in, RecyclingBufferPool.INSTANCE)
+      try { dict.foreach(d => z.setDict(d.ddict)); z }
+      catch { case e: Throwable => z.close(); throw e }
     }
-  }
 
-  // ------------------------------------------------------------------
-  // dictionaries (RFC 8878 §5)
-  // ------------------------------------------------------------------
-
-  /** A parsed zstd dictionary — opaque outside this object. A
-    * STRUCTURED dictionary (magic 0xEC30A437) carries an id, the
-    * entropy tables (Huffman for literals; FSE for offsets, match
-    * lengths, literal lengths), three seeded repeat offsets, and
-    * content; a RAW-content dictionary is bare prefix bytes. */
-  final class Dictionary private[ZstdCodec] (
-      private[ZstdCodec] val id: Long,
-      private[ZstdCodec] val huf: HufTable,
-      private[ZstdCodec] val of: FseTable,
-      private[ZstdCodec] val ml: FseTable,
-      private[ZstdCodec] val ll: FseTable,
-      private[ZstdCodec] val reps: Array[Long],
-      private[ZstdCodec] val content: Array[Byte]) {
-    def dictId: Long = id
-    def contentSize: Int = content.length
-  }
+  /** A zstd dictionary accepted by the decoder — opaque outside this
+    * object. A STRUCTURED dictionary (magic 0xEC30A437) carries an id
+    * and entropy tables ahead of its content; a RAW-content
+    * dictionary is bare prefix bytes with id 0. It holds zstd-jni's
+    * digested form, so the entropy tables are built once per
+    * dictionary, not once per frame. `contentSize` is the size of the
+    * dictionary in bytes; for a raw-content dictionary all of it is
+    * window content. */
+  final class Dictionary private[ZstdCodec] (val dictId: Long, val contentSize: Int,
+      private[ZstdCodec] val ddict: ZstdDictDecompress)
 
   private val DictMagic = 0xEC30A437L
 
   /** Parse dictionary bytes: the structured format when the magic
     * leads, else a raw-content dictionary (the zstd convention).
-    * None on a malformed structured dictionary. */
+    * None on a malformed structured dictionary — zstd-jni digests it
+    * here, so decode never meets a corrupt one. */
   def parseDictionary(b: Array[Byte]): Option[Dictionary] =
-    try {
-      if (b == null || b.length == 0) return None
-      if (b.length < 8 || le32(b, 0) != DictMagic)
-        return Some(new Dictionary(0L, null, null, null, null,
-          Array(1L, 4L, 8L), b.clone()))
-      val id = le32(b, 4)
-      if (id == 0) refuse() // the spec reserves 0 for "no dictionary"
-      var cur = 8
-      val (huf, used) = readHufTable(b, cur, b.length)
-      cur += used
-      def fse(maxSym: Int, maxLog: Int): FseTable = {
-        val fwd = new FwdBits(b, cur, b.length)
-        val t = readFseTable(fwd, maxSym, maxLog)
-        cur += fwd.bytesConsumed
-        t
-      }
-      // table order per the spec: offsets, match lengths, literal lengths
-      val of = fse(31, 8)
-      val ml = fse(52, 9)
-      val ll = fse(35, 9)
-      if (cur + 12 > b.length) refuse()
-      val reps = Array(le32(b, cur), le32(b, cur + 4), le32(b, cur + 8))
-      cur += 12
-      val content = java.util.Arrays.copyOfRange(b, cur, b.length)
-      // each seeded offset must be usable against the content alone
-      if (reps.exists(r => r <= 0 || r > content.length)) refuse()
-      Some(new Dictionary(id, huf, of, ml, ll, reps, content))
-    } catch {
-      case Refuse => None
-      case _: ArrayIndexOutOfBoundsException => None
-      case _: NegativeArraySizeException => None
+    if (b == null || b.length == 0) None
+    else {
+      val structured = b.length >= 8 && le32(b, 0) == DictMagic
+      if (structured && le32(b, 4) == 0) None // the spec reserves 0 for "no dictionary"
+      else
+        try Some(new Dictionary(if (structured) le32(b, 4) else 0L, b.length, new ZstdDictDecompress(b)))
+        catch { case scala.util.control.NonFatal(_) => None }
     }
-
-  /** Decode one zstd frame starting after its magic; returns the new
-    * cursor. */
-  private def decodeFrame(p: Array[Byte], start: Int, out: Out,
-      dict: Option[Dictionary] = None): Int = {
-    var pos = start
-    if (pos >= p.length) refuse()
-    val fhd = u8(p, pos); pos += 1
-    val fcsFlag = fhd >> 6
-    val singleSegment = (fhd & 0x20) != 0
-    if ((fhd & 0x08) != 0) refuse() // reserved bit
-    val checksumFlag = (fhd & 0x04) != 0
-    val dictFlag = fhd & 3
-    var windowSize = 0L
-    if (!singleSegment) {
-      if (pos >= p.length) refuse()
-      val wd = u8(p, pos); pos += 1
-      val wBase = 1L << (10 + (wd >> 3))
-      windowSize = wBase + (wBase / 8) * (wd & 7)
-    }
-    val dictBytes = dictFlag match {
-      case 0 => 0; case 1 => 1; case 2 => 2; case 3 => 4
-    }
-    if (dictBytes > 0) {
-      if (pos + dictBytes > p.length) refuse()
-      var dictId = 0L
-      var k = 0
-      while (k < dictBytes) { dictId |= (p(pos + k) & 0xFFL) << (8 * k); k += 1 }
-      pos += dictBytes
-      // a declared id requires the MATCHING parsed dictionary —
-      // decoding against the wrong (or no) dictionary would emit
-      // plausible garbage, the exact silent-corruption this
-      // decoder's refuse contract exists to prevent
-      if (dictId != 0 && !dict.exists(_.id == dictId)) refuse()
-    }
-    val fcsBytes = fcsFlag match {
-      case 0 => if (singleSegment) 1 else 0
-      case 1 => 2; case 2 => 4; case 3 => 8
-    }
-    var contentSize = -1L
-    if (fcsBytes > 0) {
-      if (pos + fcsBytes > p.length) refuse()
-      var v = 0L
-      var k = 0
-      while (k < fcsBytes) { v |= (p(pos + k) & 0xFFL) << (8 * k); k += 1 }
-      if (fcsBytes == 2) v += 256
-      contentSize = v
-      pos += fcsBytes
-    }
-    if (singleSegment) windowSize = math.max(0L, contentSize)
-    if (contentSize > MaxOutput) refuse()
-    val blockCap =
-      math.min(BlockMax.toLong, if (windowSize > 0) windowSize else BlockMax.toLong).toInt
-    val frameStart = out.len
-    out.floor = frameStart
-    val st = new FrameState
-    dict.foreach { d =>
-      out.prefix = d.content
-      if (d.huf != null) { // structured: seed entropy + rep history
-        st.huf = d.huf; st.ll = d.ll; st.of = d.of; st.ml = d.ml
-      }
-      st.reps(0) = d.reps(0); st.reps(1) = d.reps(1); st.reps(2) = d.reps(2)
-    }
-    if (dict.isEmpty) out.prefix = Array.emptyByteArray
-    var lastBlock = false
-    while (!lastBlock) {
-      if (pos + 3 > p.length) refuse()
-      val bh = u8(p, pos) | (u8(p, pos + 1) << 8) | (u8(p, pos + 2) << 16)
-      pos += 3
-      lastBlock = (bh & 1) != 0
-      val btype = (bh >> 1) & 3
-      val bsize = bh >> 3
-      btype match {
-        case 0 => // raw
-          if (bsize > blockCap.max(1)) refuse()
-          if (pos + bsize > p.length) refuse()
-          out.append(p, pos, bsize)
-          pos += bsize
-        case 1 => // RLE: one byte, repeated bsize times
-          if (pos + 1 > p.length) refuse()
-          if (bsize > blockCap.max(1)) refuse()
-          out.appendByte(p(pos), bsize)
-          pos += 1
-        case 2 =>
-          if (bsize > blockCap.max(1)) refuse()
-          if (pos + bsize > p.length) refuse()
-          decodeCompressedBlock(p, pos, pos + bsize, out, st,
-            blockCap.max(1))
-          pos += bsize
-        case 3 => refuse() // reserved
-      }
-    }
-    if (contentSize >= 0 && out.len - frameStart != contentSize) refuse()
-    if (checksumFlag) {
-      if (pos + 4 > p.length) refuse()
-      val expect = le32(p, pos)
-      pos += 4
-      val got = Xxh64.hash(out.buf, frameStart, out.len, 0L) & 0xFFFFFFFFL
-      if (got != expect) refuse()
-    }
-    pos
-  }
 
   // ------------------------------------------------------------------
   // store-mode encoder
@@ -849,6 +86,7 @@ object ZstdCodec {
     * Output is valid input for ANY zstd decoder; compression is the
     * ecosystem encoder's job (see the class doc). */
   def encode(data: Array[Byte]): Array[Byte] = {
+    val xxh64 = net.jpountz.xxhash.XXHashFactory.fastestJavaInstance().hash64()
     val outBuf = new java.io.ByteArrayOutputStream(data.length + 32)
     def w8(v: Int): Unit = outBuf.write(v & 0xFF)
     def wle(v: Long, n: Int): Unit = { var k = 0; while (k < n) { w8((v >> (8 * k)).toInt); k += 1 } }
@@ -889,22 +127,19 @@ object ZstdCodec {
         pos += n
       }
     }
-    wle(Xxh64.hash(data, 0, data.length, 0L) & 0xFFFFFFFFL, 4)
+    wle(xxh64.hash(data, 0, data.length, 0L) & 0xFFFFFFFFL, 4)
     outBuf.toByteArray
   }
 
   // ------------------------------------------------------------------
-  // dictionary Spark seams (round 15 continuation)
+  // dictionary Spark seams
   // ------------------------------------------------------------------
 
-  /** Gate packer: each document's text compressed by the REFERENCE
-    * zstd implementation (zstd-jni, on the Spark classpath) against
-    * a per-row RAW-CONTENT dictionary built from the text's own
-    * prefix — at level 19 the encoder leans hard on the dictionary
-    * window, so the decode only succeeds if prefix reach, repeat
-    * offsets against the prefix, and the window floor interact
-    * exactly right. (id, dict, payload). Structured (trained)
-    * dictionaries are pinned in ZstdCodecSpec with ZstdDictTrainer. */
+  /** Gate packer: each document's text compressed by zstd-jni at
+    * level 19 against a per-row RAW-CONTENT dictionary built from the
+    * text's own prefix, so every frame leans on its dictionary
+    * window. (id, dict, payload). Structured (trained) dictionaries
+    * are pinned in ZstdSpec with ZstdDictTrainer. */
   def packTextZstdDict(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String): org.apache.spark.sql.DataFrame = {
     val spark = df.sparkSession
@@ -950,6 +185,7 @@ object ZstdCodec {
             if (dictBytes == null || dictBytes.isEmpty) None
             else if (lastRef != null && java.util.Arrays.equals(dictBytes, lastRef)) lastParsed
             else {
+              lastParsed.foreach(_.ddict.close()) // only this memo holds it
               lastRef = dictBytes
               lastParsed = parseDictionary(dictBytes)
               lastParsed

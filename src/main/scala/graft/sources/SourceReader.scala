@@ -272,15 +272,16 @@ object SourceReader {
 
     // Compressed JSONL — the default corpus shard format
     // (`shard-00042.jsonl.zst` / `.jsonl.gz`): files load as binary
-    // (one task per shard), decompress through the from-spec codecs
-    // (`zstd` — which Hadoop's codec chain can NOT read without a
-    // native lib — or `gzip`, or sniffed by magic when unset), split
+    // (one task per shard), decompress through the codec `compression`
+    // names (zstd | gzip | bzip2 | xz | snappy-framed | lz4-framed |
+    // none), or the one [[graft.ops.Sniff]] detects when unset, split
     // on newlines, and parse as JSON with schema inferred across
-    // shards. Scale: shards are the parallelism unit, the engine's
-    // own shard writers (shuffle_shards) produce bounded-size files.
+    // shards. A shard its codec refuses fails the read, named. Scale:
+    // shards are the parallelism unit, the engine's own shard writers
+    // (shuffle_shards) produce bounded-size files.
     case "jsonl" =>
       import spark.implicits._
-      val comp = s.config.str("compression") // zstd | gzip | none | sniff
+      val comp = s.config.str("compression") // a Sniff.codec label | none | unset = sniff
       // jsonl rows carry a data-dependent schema, so there is no
       // quarantine-row shape to union — the seam fails FAST instead,
       // naming the offending shards (listing columns only; no content
@@ -294,32 +295,31 @@ object SourceReader {
           s"source '${s.name}': jsonl shard(s) exceed max_bytes " +
             s"(default ${Int.MaxValue} — Spark's binary row limit; shard archives ~1 GiB): " +
             oversizedNames.mkString(", "))
+      val sourceName = s.name
+      val named = comp.flatMap(graft.ops.Sniff.codec)
       val files = okFiles
-        .select(org.apache.spark.sql.functions.col("content"))
-        .as[Array[Byte]]
-      val lines = files.flatMap { payload =>
-        val bytes: Array[Byte] = comp match {
-          case Some("zstd") => graft.ops.ZstdCodec.decode(payload).getOrElse(Array.emptyByteArray)
-          case Some("gzip") => graft.ops.GzipCodec.gunzip(payload).getOrElse(Array.emptyByteArray)
-          case Some("bzip2") => graft.ops.Bzip2Codec.decode(payload).getOrElse(Array.emptyByteArray)
-          case Some("none") => payload
-          case _ => // sniff: zstd 28 B5 2F FD, gzip 1F 8B, bzip2 "BZh", else plain
-            if (payload.length >= 4 && (payload(0) & 0xFF) == 0x28 && (payload(1) & 0xFF) == 0xB5 &&
-              (payload(2) & 0xFF) == 0x2F && (payload(3) & 0xFF) == 0xFD)
-              graft.ops.ZstdCodec.decode(payload).getOrElse(Array.emptyByteArray)
-            else if (payload.length >= 2 && (payload(0) & 0xFF) == 0x1F && (payload(1) & 0xFF) == 0x8B)
-              graft.ops.GzipCodec.gunzip(payload).getOrElse(Array.emptyByteArray)
-            else if (payload.length >= 4 && payload(0) == 'B' && payload(1) == 'Z' && payload(2) == 'h')
-              graft.ops.Bzip2Codec.decode(payload).getOrElse(Array.emptyByteArray)
-            else if (payload.length >= 6 && (payload(0) & 0xFF) == 0xFD && payload(1) == '7' &&
-              payload(2) == 'z' && payload(3) == 'X' && payload(4) == 'Z' && payload(5) == 0)
-              graft.ops.XzCodec.decode(payload).getOrElse(Array.emptyByteArray)
-            else payload
+        .select(org.apache.spark.sql.functions.col("path"), org.apache.spark.sql.functions.col("content"))
+        .as[(String, Array[Byte])]
+      val lines = files.flatMap { case (path, payload) =>
+        val decoded = (comp, named) match {
+          case (Some("none"), _) => Some(payload)
+          case (_, Some(decode)) => decode(payload)
+          case _ => graft.ops.Sniff.decompress(payload)
         }
+        val bytes = decoded.getOrElse(throw new GraftAnalysisException(
+          s"source '$sourceName': jsonl shard refused by its codec " +
+            s"(corrupt, truncated, or decodes past the 256 MiB codec cap): $path"))
         new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
           .split("\n", -1).iterator.map(_.stripSuffix("\r")).filter(_.nonEmpty)
       }
-      spark.read.json(lines)
+      // schema inference runs the decode now, so a refused shard
+      // surfaces here: unwrap it from the job failure
+      try spark.read.json(lines)
+      catch {
+        case e: org.apache.spark.SparkException =>
+          throw Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .collectFirst { case g: GraftAnalysisException => g }.getOrElse(e)
+      }
 
     // Avro object container files — the data-eng wire format (Kafka
     // dumps, warehouse exports): binary load (one task per shard),

@@ -1250,8 +1250,8 @@ object AggregateOp {
     val aggSpecs: Seq[Config] =
       if (cfg.objList("aggregations").nonEmpty) cfg.objList("aggregations") else Seq(cfg)
     // NOTE (optimization round 18): fanning an under-split scan out
-    // before the aggregate was tried here and REJECTED by same-window
-    // alternating A/B (graft.AbAgg): a keyless repartition pays a
+    // before the aggregate was tried here and REJECTED by a same-window
+    // alternating A/B (the method tools/ab.sh runs): a keyless repartition pays a
     // local sort of every row before the exchange (SPARK-23207, guide
     // §2.5) and map-side partial aggregation already reduces the
     // shuffle to ~|groups| rows, so "aggregate before you shuffle"

@@ -101,6 +101,50 @@ class ArchiveSeamSpec extends SparkSuite {
     }
   }
 
+  test("jsonl source: a truncated .jsonl.zst among good shards fails with the shard named") {
+    withDir { dir =>
+      def zst(text: String) = com.github.luben.zstd.Zstd.compress(text.getBytes("UTF-8"), 3)
+      write(dir, "a.jsonl.zst", zst("{\"a\": 1}\n{\"a\": 2}\n"))
+      write(dir, "b.jsonl.zst", zst("{\"a\": 3}\n"))
+      val whole = zst("{\"a\": 4}\n{\"a\": 5}\n")
+      write(dir, "cut.jsonl.zst", whole.take(whole.length - 3))
+      val e = intercept[GraftAnalysisException] {
+        SourceReader.read(spark, SourceSpec("j", "jsonl", Config.of(
+          "path" -> s"${dir.getAbsolutePath}/*.jsonl.zst")))
+      }
+      assert(e.getMessage.contains("cut.jsonl.zst") && !e.getMessage.contains("a.jsonl.zst"))
+      // the good shards read through a named codec too
+      val ok = SourceReader.read(spark, SourceSpec("j", "jsonl", Config.of(
+        "path" -> s"${dir.getAbsolutePath}/[ab].jsonl.zst", "compression" -> "zstd")))
+      assert(ok.count() == 3)
+    }
+  }
+
+  test("jsonl source: a .jsonl.zst decoding past the codec cap fails with the cap named") {
+    withDir { dir =>
+      write(dir, "ok.jsonl", "{\"a\": 1}\n".getBytes("UTF-8"))
+      // 257 frames of 1 MiB of spaces: a few KiB that decode past 256 MiB
+      val frame = com.github.luben.zstd.Zstd.compress(Array.fill[Byte](1 << 20)(' '), 3)
+      write(dir, "bomb.jsonl.zst", Array.fill(257)(frame).flatten)
+      val e = intercept[GraftAnalysisException] {
+        SourceReader.read(spark, SourceSpec("j", "jsonl", Config.of(
+          "path" -> s"${dir.getAbsolutePath}/*.jsonl*")))
+      }
+      assert(e.getMessage.contains("bomb.jsonl.zst") && e.getMessage.contains("256 MiB"))
+    }
+  }
+
+  test("jsonl source: a pzstd-style .jsonl.zst (leading skippable frame) sniffs as zstd") {
+    withDir { dir =>
+      val skippable = Array[Byte](0x50, 0x2A, 0x4D, 0x18, 4, 0, 0, 0, 1, 2, 3, 4)
+      write(dir, "p.jsonl.zst", skippable ++
+        com.github.luben.zstd.Zstd.compress("{\"a\": 1}\n{\"a\": 2}\n".getBytes("UTF-8"), 3))
+      val read = SourceReader.read(spark, SourceSpec("j", "jsonl", Config.of(
+        "path" -> s"${dir.getAbsolutePath}/*.jsonl.zst")))
+      assert(read.count() == 2)
+    }
+  }
+
   test("default seam: a sparse >2 GiB file quarantines instead of crashing the scan") {
     withDir { dir =>
       val packed = Warc.packDocsWarcGz(docs, "doc_id", "source", "text", nFiles = 1).collect()

@@ -3,10 +3,11 @@ package graft
 import graft.ops.ShortCodecs
 import org.scalatest.funsuite.AnyFunSuite
 
-/** From-spec Snappy/LZ4 block decoders pinned against the reference
-  * implementations on the Spark classpath (snappy-java, lz4-java) —
-  * both their high-compression and fast encoders — plus the
-  * literal-only encoders cross-read by those libraries, and fuzz.
+/** Snappy/LZ4 block and stream decode with snappy-java, lz4-java
+  * (both their high-compression and fast encoders) and commons-compress
+  * (linked-block LZ4 frames) as the encoders,
+  * plus the literal-only and framed encoders cross-read by those
+  * libraries, and fuzz.
   */
 class ShortCodecsSpec extends AnyFunSuite {
 
@@ -112,12 +113,17 @@ class ShortCodecsSpec extends AnyFunSuite {
   }
 
   test("LZ4 FRAMING: cross-pin with lz4-java, checksums, skippables, multi-frame, xxh32 vectors") {
-    // xxh32 vectors against lz4-java's own XXHash32 (independent impl)
+    // xxh32 vectors: our writer's descriptor checksum (HC) and content
+    // checksum fields carry lz4-java's XXHash32 values
     val xxRef = net.jpountz.xxhash.XXHashFactory.fastestJavaInstance().hash32()
     val probe = prose(12345)
-    for (len <- Seq(0, 1, 3, 4, 15, 16, 17, 1000, 12345); seed <- Seq(0, 0x9747b28c)) {
-      assert(ShortCodecs.xxh32(probe, 0, len, seed) == xxRef.hash(probe, 0, len, seed),
-        s"xxh32 len=$len seed=$seed")
+    for (len <- Seq(0, 1, 3, 4, 15, 16, 17, 1000, 12345)) {
+      val body = probe.take(len)
+      val f = ShortCodecs.lz4Framed(body)
+      def le32(at: Int): Int = java.nio.ByteBuffer.wrap(f, at, 4)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+      assert((f(25) & 0xFF) == ((xxRef.hash(f, 15, 10, 0) >>> 8) & 0xFF), s"HC len=$len")
+      assert(le32(f.length - 4) == xxRef.hash(body, 0, len, 0), s"content xxh32 len=$len")
     }
     val data = prose(100000)
     // our writer (skippable + stored + compressed + both checksums) →
@@ -184,5 +190,39 @@ class ShortCodecsSpec extends AnyFunSuite {
       ShortCodecs.unsnappy(junk)
       ShortCodecs.unlz4(junk, rnd.nextInt(1000))
     }
+  }
+
+  test("LZ4 FRAMING: linked-block frames, declared content size, skippable-only streams") {
+    // a 300 KB frame whose 64 KiB blocks reach back into earlier
+    // blocks (liblz4's default linked mode), written by commons-compress;
+    // own generator, so the shared one's later draws stay as they were
+    val r = new scala.util.Random(7)
+    val period = Array.fill[Byte](40000)(r.nextInt().toByte)
+    val data = Array.tabulate[Byte](300000)(i => period(i % period.length))
+    val linked = {
+      import org.apache.commons.compress.compressors.lz4.FramedLZ4CompressorOutputStream
+      val bos = new java.io.ByteArrayOutputStream()
+      val w = new FramedLZ4CompressorOutputStream(bos, new FramedLZ4CompressorOutputStream.Parameters(
+        FramedLZ4CompressorOutputStream.BlockSize.K64, true, true, true))
+      w.write(data); w.close(); bos.toByteArray
+    }
+    assert((linked(4) & 0x20) == 0, "block-independence flag must be clear")
+    assert(linked.length < data.length / 4, "blocks must lean on earlier blocks")
+    assert(java.util.Arrays.equals(ShortCodecs.unlz4Framed(linked).get, data))
+    // the declared content size must match what the frame decodes to
+    val xx = net.jpountz.xxhash.XXHashFactory.fastestJavaInstance().hash32()
+    val body = ("declared size " * 200).getBytes("UTF-8")
+    val framed = ShortCodecs.lz4Framed(body) // skippable(11) + magic(4) + FLG BD size(8) + HC
+    assert((framed(15) & 0x08) != 0 && ShortCodecs.unlz4Framed(framed).isDefined)
+    val wrongSize = framed.clone()
+    wrongSize(17) = (wrongSize(17) + 1).toByte
+    wrongSize(25) = ((xx.hash(wrongSize, 15, 10, 0) >>> 8) & 0xFF).toByte
+    assert(ShortCodecs.unlz4Framed(wrongSize).isEmpty)
+    // skippable frames alone are no LZ4 stream; after a frame they skip
+    val skippable = Array[Byte](0x50, 0x2A, 0x4D, 0x18, 3, 0, 0, 0, 9, 9, 9)
+    assert(ShortCodecs.unlz4Framed(skippable).isEmpty)
+    assert(ShortCodecs.unlz4Framed(skippable ++ skippable).isEmpty)
+    assert(java.util.Arrays.equals(ShortCodecs.unlz4Framed(framed ++ skippable).get, body))
+    assert(ShortCodecs.unlz4Framed(framed ++ skippable.take(6)).isEmpty)
   }
 }

@@ -101,9 +101,9 @@ final class FileMetaStore(root: Path) extends MetaStore {
             Some(RunRecord(
               c.reqStr("run_id"), c.reqStr("pipeline_id"), c.reqStr("status"),
               Instant.parse(c.reqStr("started_at")), Instant.parse(c.reqStr("finished_at")),
-              c.int("rows_read").map(_.toLong).getOrElse(0L),
-              c.int("rows_written").map(_.toLong).getOrElse(0L),
-              c.int("duration_ms").map(_.toLong).getOrElse(0L),
+              c.long("rows_read").getOrElse(0L),
+              c.long("rows_written").getOrElse(0L),
+              c.long("duration_ms").getOrElse(0L),
               c.str("error"),
               c.strMap("stage_rows").flatMap { case (k, v) =>
                 v.toLongOption.map(k -> _) }))

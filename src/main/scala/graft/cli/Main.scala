@@ -43,9 +43,7 @@ object Main {
         println(s"run ${res.runId}: ${res.status} rows_read=${res.rowsRead} " +
           s"rows_written=${res.rowsWritten} duration_ms=${res.durationMs}" +
           res.error.map(e => s" error=$e").getOrElse(""))
-        if (res.stageRows.nonEmpty)
-          println(res.stageRows.toSeq.sortBy(_._1)
-            .map { case (n, r) => s"$n=$r" }.mkString("stage_rows: ", " ", ""))
+        if (res.stageRows.nonEmpty) println(stageRows(res.stageRows))
         spark.stop()
         if (res.status != "success") sys.exit(1)
 
@@ -53,7 +51,8 @@ object Main {
         store.runs(id).foreach { r =>
           println(s"${r.runId}\t${r.status}\t${r.startedAt}\trows_read=${r.rowsRead}" +
             s"\trows_written=${r.rowsWritten}\t${r.durationMs}ms" +
-            r.error.map(e => s"\terror=$e").getOrElse(""))
+            r.error.map(e => s"\terror=$e").getOrElse("") +
+            (if (r.stageRows.isEmpty) "" else "\t" + stageRows(r.stageRows)))
         }
 
       // Beyond the reference surface: print the pipeline's OPTIMIZED
@@ -92,12 +91,14 @@ object Main {
     }
   }
 
-  private def session(): SparkSession = SparkSession.builder()
-    .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
-    .appName("graft")
-    .config("spark.sql.shuffle.partitions", sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
+  private def stageRows(rows: Map[String, Long]): String =
+    rows.toSeq.sortBy(_._1).map { case (n, r) => s"$n=$r" }.mkString("stage_rows: ", " ", "")
+
+  /** The engine's standard session; unset GRAFT_SHUFFLE_PARTITIONS keeps
+    * the builder's default of one shuffle partition per core. */
+  private def session(): SparkSession = graft.GraftSession
+    .builder(sys.env.getOrElse("GRAFT_MASTER", "local[*]"),
+      sys.env.get("GRAFT_SHUFFLE_PARTITIONS").map(_.toInt).getOrElse(0))
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 }

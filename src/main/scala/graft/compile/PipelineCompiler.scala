@@ -30,10 +30,11 @@ object PipelineCompiler {
       ctx: Map[String, DataFrame],
       /** The final transformed stream all sinks consume. */
       df: DataFrame,
-      /** Per-transform row observations (name → Observation), present
-        * when compiled with `observeStages` — resolved by the runner
-        * after the first sink action. */
-      stageObs: Seq[(String, org.apache.spark.sql.Observation)] = Nil)
+      /** Per-transform row observations kept in `df` (transform name →
+        * observed-metric name), when compiled with `observeStages`: the
+        * runner reads them from the sink actions' executed plans. See
+        * [[StageObservations]] for which stages are observed. */
+      stageObs: Seq[(String, String)] = Nil)
 
   def validate(spec: PipelineSpec): Unit = {
     val errs = Seq.newBuilder[String]
@@ -89,24 +90,22 @@ object PipelineCompiler {
     // (reference main.py:437-443); null-fill for ragged schemas.
     val unioned = spec.sources.map(s => ctx(s.name))
       .reduce(_.unionByName(_, allowMissingColumns = true))
-    val obs = Seq.newBuilder[(String, org.apache.spark.sql.Observation)]
+    val stages = Seq.newBuilder[(String, DataFrame)]
     val df = spec.transforms.sortBy(_.orderIndex)
       .foldLeft(unioned) { (d, t) =>
         val out = Transforms(d, t, ctx)
-        if (!observeStages) out
-        else {
-          // a CollectMetrics barrier per stage: rows flowing out of
-          // each transform are observed DURING the sink action — no
-          // extra job per stage, unlike a count() probe. Name carries
-          // a nonce: observation names are session-global, and a
-          // pipeline can run many times in one session
-          val o = org.apache.spark.sql.Observation(
-            s"graft_stage_${java.util.UUID.randomUUID()}_${t.orderIndex}_${t.name}")
-          obs += t.name -> o
-          out.observe(o, org.apache.spark.sql.functions
-            .count(org.apache.spark.sql.functions.lit(1)).as("rows"))
-        }
+        stages += t.name -> out
+        out
       }
-    Compiled(ctx, df, obs.result())
+    // a sink that samples its input for range bounds (cluster_by) runs
+    // every stage twice, and stdout's limit stops the stages early:
+    // neither would count the rows a stage produced
+    val stagesRunOnce = !spec.sinks.exists(s =>
+      s.sinkType == "stdout" || s.config.strList("cluster_by").nonEmpty)
+    if (!observeStages || !stagesRunOnce) Compiled(ctx, df)
+    else {
+      val (observed, kept) = StageObservations.place(df, stages.result())
+      Compiled(ctx, observed, kept)
+    }
   }
 }

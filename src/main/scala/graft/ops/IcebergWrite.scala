@@ -133,12 +133,14 @@ object IcebergWrite {
     * no metadata exists. `partitionBy` writes an identity-partitioned
     * layout (tuple-pruning engages); `clusterBy` range-partitions the
     * write on the given columns (disjoint per-file bounds → bounds
-    * skipping engages). Returns the committed snapshot id. */
+    * skipping engages). `observe` wraps the rows the data write consumes,
+    * above the range sampling job. Returns the committed snapshot id. */
   def append(spark: SparkSession, df: DataFrame, tableDir: String,
       clusterBy: Seq[String] = Seq.empty, numFiles: Int = 0,
       partitionBy: Seq[String] = Seq.empty,
       txn: Option[(String, Long)] = None,
-      mergeSchema: Boolean = false): Long = {
+      mergeSchema: Boolean = false,
+      observe: DataFrame => DataFrame = identity[DataFrame]): Long = {
     val schema = df.schema
     if (schema.fields.isEmpty) refuse("empty schema")
     clusterBy.foreach(c => if (!schema.fieldNames.contains(c))
@@ -326,11 +328,11 @@ object IcebergWrite {
     // files (Iceberg keeps identity-partitioned columns in the data,
     // unlike Hive layout); range clustering when asked.
     val stage = s"$tableDir/.graft-stage-${java.util.UUID.randomUUID()}"
-    val shaped0 =
+    val shaped0 = observe(
       if (clusterBy.nonEmpty) {
         val n = if (numFiles > 0) numFiles else spark.sparkContext.defaultParallelism
         df.repartitionByRange(n, clusterBy.map(c => col(s"`$c`")): _*)
-      } else df
+      } else df)
     if (partitionBy.isEmpty)
       shaped0.write.mode("overwrite").parquet(stage)
     else {

@@ -48,10 +48,13 @@ object Layout {
     * appending a second range-clustered batch produces files whose key
     * ranges overlap the existing ones, silently voiding the disjoint-
     * interval pruning contract this layout exists to provide.
+    * `observe` wraps the clustered rows the write consumes, above the
+    * range sampling job, which runs everything below it a second time.
     */
   def writeRangeClustered(df: DataFrame, path: String, keys: Seq[String],
       numFiles: Int, dirKeys: Seq[String] = Nil,
-      mode: String = "overwrite", compression: Option[String] = None): Unit = {
+      mode: String = "overwrite", compression: Option[String] = None,
+      observe: DataFrame => DataFrame = identity[DataFrame]): Unit = {
     require(keys.nonEmpty, "writeRangeClustered: at least one cluster key")
     require(numFiles >= 1, s"writeRangeClustered: numFiles=$numFiles")
     require(dirKeys.intersect(keys).isEmpty,
@@ -62,9 +65,9 @@ object Layout {
         "working); rewrite the table with overwrite, or drop cluster_by for " +
         "append-style ingest")
     val keyCols = keys.map(col)
-    val clustered = df
+    val clustered = observe(df
       .repartitionByRange(numFiles, keyCols: _*)
-      .sortWithinPartitions(keyCols: _*)
+      .sortWithinPartitions(keyCols: _*))
     val w0 = clustered.write.mode(mode)
     val w = compression.map(c => w0.option("compression", c)).getOrElse(w0)
     (if (dirKeys.nonEmpty) w.partitionBy(dirKeys: _*) else w).parquet(path)

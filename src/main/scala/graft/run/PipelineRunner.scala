@@ -3,7 +3,7 @@ package graft.run
 import java.time.Instant
 import java.util.UUID
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 import graft.catalog.{MetaStore, RunRecord}
@@ -17,8 +17,12 @@ import graft.spec.PipelineSpec
   * run record with rows_read / rows_written / duration / error.
   *
   * Differences that matter at scale:
-  *  - sources are lazy scans, so rows_read is only counted when
-  *    `collectStats` is on (each count is a cheap column-pruned scan);
+  *  - the sink actions are the only jobs of a run (beyond `compile`'s
+  *    eager jobs, such as jsonl schema inference), and every count is
+  *    taken from them by [[RunCounts]] when `collectStats` is on:
+  *    rows_written from one observation on each sink's input, rows_read
+  *    from the source scans' `numOutputRows` in the executed plans,
+  *    stage_rows from the stage observations the compiler kept;
   *  - with multiple sinks the final stream is persisted
   *    (MEMORY_AND_DISK) so transforms run once, not once per sink —
   *    the reference holds everything in memory by construction;
@@ -26,17 +30,28 @@ import graft.spec.PipelineSpec
   */
 object PipelineRunner {
 
+  /** One deadline for all of a run's counts to arrive from the listener
+    * bus; a count still missing then records -1 ("not collected"). */
+  private val CountsTimeoutMs = 30000L
+
   final case class RunResult(
       runId: String,
       status: String,
+      /** Rows the source scans returned during the sink actions: after
+        * partition pruning and row-group skipping, and only as many as a
+        * stdout sink's limit pulled. -1 when not collected. */
       rowsRead: Long,
+      /** Rows the sinks received, summed over sinks; stdout counts the
+        * rows it printed. -1 when not collected. */
       rowsWritten: Long,
       durationMs: Long,
       error: Option[String],
       /** Rows observed flowing OUT of each transform (stage name →
         * rows), measured inside the sink action via CollectMetrics —
-        * no per-stage count jobs. Empty when stats are off or the
-        * pipeline has no sinks. */
+        * no per-stage count jobs. Only the stages the compiler could
+        * observe without changing the plan (see
+        * `graft.compile.StageObservations`); empty when stats are off,
+        * the pipeline has no sinks, or a sink is stdout or cluster_by. */
       stageRows: Map[String, Long] = Map.empty)
 
   def run(
@@ -51,41 +66,39 @@ object PipelineRunner {
     try {
       val compiled = PipelineCompiler.compile(spark, spec,
         observeStages = collectStats && spec.sinks.nonEmpty)
-      val rowsRead =
-        if (collectStats) compiled.ctx.values.map(_.count()).sum else -1L
+      val counts =
+        if (collectStats && spec.sinks.nonEmpty)
+          Some(new RunCounts(spark, spec.sinks.size,
+            spec.sources.map(s => compiled.ctx(s.name)), compiled.stageObs))
+        else None
       val multiSink = spec.sinks.size > 1
       val out = if (multiSink) compiled.df.persist(StorageLevel.MEMORY_AND_DISK) else compiled.df
-      try {
-        spec.sinks.foreach(s => SinkWriter.write(out, s))
-        val rowsWritten =
-          if (spec.sinks.isEmpty) 0L
-          else if (collectStats) out.count() * math.max(1, spec.sinks.size) else -1L
-        // stage metrics landed during the first sink's action; the
-        // bounded wait means a stage whose metrics never materialize
-        // is absent from the map rather than hanging the run
-        val stageRows: Map[String, Long] = compiled.stageObs.flatMap { case (name, o) =>
-          try {
-            val row = scala.concurrent.Await.result(o.future,
-              scala.concurrent.duration.Duration(30, "s"))
-            // the metrics Row may arrive schema-less; there is exactly
-            // one observed expression per stage. A self-joining
-            // downstream op can duplicate the observed subtree and
-            // surface an empty metrics row — best-effort: skip it.
-            if (row.length > 0) Some(name -> row.getLong(0)) else None
-          } catch { case _: java.util.concurrent.TimeoutException => None }
-        }.toMap
-        val dur = (System.nanoTime() - t0) / 1000000
-        val res = RunResult(runId, "success", rowsRead, rowsWritten, dur, None, stageRows)
-        store.foreach(_.recordRun(RunRecord(runId, pipelineId, "success", started,
-          Instant.now(), rowsRead, rowsWritten, dur, None, stageRows)))
-        res
-      } finally if (multiSink) out.unpersist()
+      val (rowsRead, rowsWritten, stageRows) = try {
+        val printed = spec.sinks.zipWithIndex.map { case (s, i) =>
+          SinkWriter.write(out, s, counts.fold(identity[DataFrame] _)(_.observe(i)))
+        }
+        counts match {
+          case Some(c) =>
+            c.await(CountsTimeoutMs)
+            (c.rowsRead, c.rowsWritten(printed), c.stageRows)
+          case None => (-1L, if (spec.sinks.isEmpty) 0L else -1L, Map.empty[String, Long])
+        }
+      } finally {
+        counts.foreach(_.close())
+        if (multiSink) out.unpersist()
+      }
+      val dur = (System.nanoTime() - t0) / 1000000
+      store.foreach(_.recordRun(RunRecord(runId, pipelineId, "success", started,
+        Instant.now(), rowsRead, rowsWritten, dur, None, stageRows)))
+      RunResult(runId, "success", rowsRead, rowsWritten, dur, None, stageRows)
     } catch {
       case e: Throwable =>
         val dur = (System.nanoTime() - t0) / 1000000
+        // some throwables (StackOverflowError) carry no message
+        val error = Some(Option(e.getMessage).getOrElse(e.getClass.getName))
         store.foreach(_.recordRun(RunRecord(runId, pipelineId, "failed", started,
-          Instant.now(), 0L, 0L, dur, Some(e.getMessage))))
-        RunResult(runId, "failed", 0L, 0L, dur, Some(e.getMessage))
+          Instant.now(), 0L, 0L, dur, error)))
+        RunResult(runId, "failed", 0L, 0L, dur, error)
     }
   }
 }

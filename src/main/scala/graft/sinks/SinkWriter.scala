@@ -33,16 +33,29 @@ object SinkWriter {
         s"sink '${s.name}': txn_app and txn_version must be set together")
     }
 
-  def write(df: DataFrame, s: SinkSpec): Unit = s.sinkType match {
-    case "stdout" =>
-      val limit = s.config.int("limit").getOrElse(20)
-      df.limit(limit).toJSON.collect().foreach(println)
+  /** Write `df` to sink `s`. `observe` wraps the DataFrame the sink's
+    * action consumes: a row count placed there counts what the sink
+    * received, and it sits above a cluster_by sink's range sampling,
+    * which would otherwise run it twice. Returns the rows printed by
+    * `stdout`, the one sink whose action takes fewer rows than it reads;
+    * None for every other sink. */
+  def write(df: DataFrame, s: SinkSpec,
+      observe: DataFrame => DataFrame = identity[DataFrame]): Option[Long] =
+    if (s.sinkType == "stdout") {
+      val rows = observe(df).limit(s.config.int("limit").getOrElse(20)).toJSON.collect()
+      rows.foreach(println)
+      Some(rows.length.toLong)
+    } else {
+      action(df, s, observe)
+      None
+    }
 
+  private def action(df: DataFrame, s: SinkSpec, observe: DataFrame => DataFrame): Unit = s.sinkType match {
     case "json" =>
-      writer(df, s).json(s.config.reqStr("path"))
+      writer(observe(df), s).json(s.config.reqStr("path"))
 
     case "csv" =>
-      writer(df, s)
+      writer(observe(df), s)
         .option("header", s.config.bool("header").getOrElse(true))
         .csv(s.config.reqStr("path"))
 
@@ -67,7 +80,7 @@ object SinkWriter {
           case Nil => buckets
           case sc  => sc
         }
-        val w = writer(df, s)
+        val w = writer(observe(df), s)
           .bucketBy(n, buckets.head, buckets.tail: _*)
           .sortBy(sortCols.head, sortCols.tail: _*)
         s.config.str("path").map(p => w.option("path", p)).getOrElse(w)
@@ -84,9 +97,10 @@ object SinkWriter {
           // the plain-parquet branch; append is rejected inside (it
           // would void the disjoint-range pruning contract)
           mode = s.config.str("mode").getOrElse("overwrite"),
-          compression = s.config.str("compression"))
+          compression = s.config.str("compression"),
+          observe = observe)
       else {
-        val w = writer(df, s)
+        val w = writer(observe(df), s)
         val parts = s.config.strList("partition_by")
         (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(s.config.reqStr("path"))
       }
@@ -106,9 +120,9 @@ object SinkWriter {
       val nFiles = s.config.int("n_files").getOrElse(32)
       val (packed, ext) =
         if (s.sinkType == "warc")
-          (graft.ops.Warc.packDocsWarcGz(df, idF,
+          (graft.ops.Warc.packDocsWarcGz(observe(df), idF,
             s.config.str("source_field").getOrElse(idF), textF, nFiles), "warc.gz")
-        else (graft.ops.Tar.packDocsTarGz(df, idF, textF, nFiles), "tar.gz")
+        else (graft.ops.Tar.packDocsTarGz(observe(df), idF, textF, nFiles), "tar.gz")
       val base = dir.getAbsolutePath
       packed.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
         rows.foreach { r =>
@@ -126,7 +140,7 @@ object SinkWriter {
     // back; so does the Apache reference library (AvroSpec pin).
     case "avro" =>
       val nFiles = s.config.int("n_files").getOrElse(0)
-      val shaped = if (nFiles > 0) df.repartition(nFiles) else df
+      val shaped = if (nFiles > 0) observe(df).repartition(nFiles) else observe(df)
       graft.ops.Avro.writeShards(shaped, s.config.reqStr("path"),
         codec = s.config.str("codec").getOrElse("deflate"),
         recordName = s.config.str("record_name").getOrElse("row"))
@@ -139,7 +153,7 @@ object SinkWriter {
     // column types are an analysis error BEFORE the job launches.
     case "tfrecord" =>
       val nFiles = s.config.int("n_files").getOrElse(0)
-      val shaped = if (nFiles > 0) df.repartition(nFiles) else df
+      val shaped = if (nFiles > 0) observe(df).repartition(nFiles) else observe(df)
       graft.ops.TfRecord.writeShards(shaped, s.config.reqStr("path"))
 
     // Raw text sink: exactly one string column, one line per row (the
@@ -152,10 +166,10 @@ object SinkWriter {
         throw new GraftAnalysisException(
           s"sink '${s.name}': text sink needs exactly one string column, " +
             s"got ${df.schema.simpleString}")
-      writer(df, s).text(s.config.reqStr("path"))
+      writer(observe(df), s).text(s.config.reqStr("path"))
 
     case "orc" =>
-      val w = writer(df, s)
+      val w = writer(observe(df), s)
       val parts = s.config.strList("partition_by")
       (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).orc(s.config.reqStr("path"))
 
@@ -171,7 +185,7 @@ object SinkWriter {
       graft.catalog.SqliteData.write(
         s.config.reqStr("database"),
         s.config.str("table").getOrElse("output"),
-        df,
+        observe(df),
         overwrite = s.config.str("mode").contains("overwrite"))
       ()
 
@@ -181,7 +195,7 @@ object SinkWriter {
     // against it run through the `dedup_index_check` transform.
     case "neardup_index" =>
       graft.ops.Dedup.NearDupIndex.save(
-        graft.ops.Dedup.NearDupIndex.build(df,
+        graft.ops.Dedup.NearDupIndex.build(observe(df),
           s.config.reqStr("id_field"),
           s.config.str("text_field").getOrElse("text"),
           numHashes = s.config.int("num_hashes").getOrElse(64),
@@ -203,13 +217,13 @@ object SinkWriter {
       val txn = txnOf(s, modeMustBe = "append")
       s.config.str("mode").getOrElse("append") match {
         case "append" =>
-          graft.ops.DeltaWrite.append(df.sparkSession, df, path, pb, txn,
+          graft.ops.DeltaWrite.append(df.sparkSession, observe(df), path, pb, txn,
             mergeSchema = s.config.bool("merge_schema").getOrElse(false))
         case "overwrite" =>
-          graft.ops.DeltaWrite.overwrite(df.sparkSession, df, path, pb,
+          graft.ops.DeltaWrite.overwrite(df.sparkSession, observe(df), path, pb,
             dynamic = false)
         case "overwrite_dynamic" =>
-          graft.ops.DeltaWrite.overwrite(df.sparkSession, df, path, pb,
+          graft.ops.DeltaWrite.overwrite(df.sparkSession, observe(df), path, pb,
             dynamic = true)
         case "merge" =>
           val keys = s.config.strList("merge_keys")
@@ -218,7 +232,7 @@ object SinkWriter {
           if (pb.nonEmpty) throw new GraftAnalysisException(
             s"sink '${s.name}': merge into a partitioned layout is out of " +
               "the v1 scope")
-          graft.ops.DeltaWrite.merge(df.sparkSession, df, path, keys)
+          graft.ops.DeltaWrite.merge(df.sparkSession, observe(df), path, keys)
         case other => throw new GraftAnalysisException(
           s"sink '${s.name}': unknown delta mode '$other' " +
             "(append, overwrite, overwrite_dynamic, merge)")
@@ -235,11 +249,12 @@ object SinkWriter {
         numFiles = s.config.int("num_files").getOrElse(0),
         partitionBy = s.config.strList("partition_by"),
         txn = txnOf(s, modeMustBe = "append"),
-        mergeSchema = s.config.bool("merge_schema").getOrElse(false))
+        mergeSchema = s.config.bool("merge_schema").getOrElse(false),
+        observe = observe)
       ()
 
     case "jdbc" =>
-      df.write.format("jdbc").option("url", s.config.reqStr("url"))
+      observe(df).write.format("jdbc").option("url", s.config.reqStr("url"))
         .option("dbtable", s.config.str("table").getOrElse("output"))
         .mode(s.config.str("mode").getOrElse("append"))
         .save()

@@ -35,4 +35,11 @@ object SessionBridge {
       source: DataFrame, name: String): Unit =
     classic.Dataset.ofRows(target.asInstanceOf[classic.SparkSession],
       source.queryExecution.analyzed).createOrReplaceTempView(name)
+
+  /** A DataFrame over an already-built logical plan — for callers that
+    * rewrite a DataFrame's analyzed plan (the compiler's stage
+    * observations) rather than extend it through the Dataset API. */
+  def ofPlan(session: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], plan)
 }

@@ -199,4 +199,26 @@ class PlanShapeSpec extends SparkSuite {
       "scalar text signals must stay inside one codegen'd projection:\n" + plan)
     assert(!plan.contains("Exchange"), "scan-local ops must not shuffle:\n" + plan)
   }
+
+  test("stage observations keep the scan's pushed filters: parquet -> map -> filter") {
+    import graft.spec._
+    val dir = java.nio.file.Files.createTempDirectory("graftpush").toString + "/li"
+    (0 until 40).map(i => (i.toLong, (i % 50).toDouble, s"F$i"))
+      .toDF("l_orderkey", "l_quantity", "l_returnflag").write.parquet(dir)
+    val spec = PipelineSpec("push", "",
+      Seq(SourceSpec("li", "parquet", Config.of("path" -> dir))),
+      Seq(TransformSpec("flag", "map",
+          Config.of("field" -> "l_returnflag", "operation" -> "lower", "as" -> "flag"), Nil, 0),
+        TransformSpec("big", "filter", Config.of("field" -> "l_quantity", "op" -> "gt", "value" -> 24), Nil, 1)),
+      Seq(SinkSpec("out", "parquet", Config.of("path" -> (dir + "_out")))))
+    def pushed(observe: Boolean): Seq[String] =
+      graft.compile.PipelineCompiler.compile(spark, spec, observeStages = observe)
+        .df.queryExecution.executedPlan.collectLeaves().collect {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+            Seq("PushedFilters", "PartitionFilters").map(s.metadata.getOrElse(_, "")).mkString(" ")
+        }
+    val off = pushed(observe = false)
+    assert(off.exists(_.contains("GreaterThan(l_quantity,24.0)")), off)
+    assert(pushed(observe = true) == off)
+  }
 }

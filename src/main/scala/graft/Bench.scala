@@ -20,41 +20,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val repeats = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // size-based post-shuffle coalescing (guide §2.2): the default
-      // parallelismFirst=true refuses to coalesce below defaultParallelism,
-      // so at 32 cores every tiny LM/model-table exchange runs 32
-      // near-empty tasks (x_text_trigram_ppx measured 0.34 scaling
-      // ratio). Spark's own docs recommend false; coalescing stays
-      // byte-driven (advisory 64 MB), so real-volume shuffles are
-      // untouched at any scale. Same-window A/B r19: trigram 0.74-0.78,
-      // groups-family 0.88-0.94, no consistent loser.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.hadoop.fs.file.impl", classOf[graft.util.NoForkLocalFileSystem].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: JIT/classload the scan+codegen+shuffle paths once
-    // so the first measured query reflects steady state, not JVM warmup
-    try {
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      li.groupBy("l_returnflag").count().write.format("noop").mode("overwrite").save()
-      // regex-bearing pass: JIT the codegen'd rlike/UTF8String paths so
-      // the first measured regex query isn't paying compiler warmup
-      li.filter("l_returnflag rlike '^[A-Z]+$'").groupBy("l_linestatus").count()
-        .write.format("noop").mode("overwrite").save()
-      // agg + semi-join pass: JIT hash-join build/probe and the AQE
-      // shuffle→broadcast conversion the join-family queries hit
-      val mins = li.groupBy("l_orderkey")
-        .agg(org.apache.spark.sql.functions.min("l_linenumber").as("l_linenumber"))
-      li.join(mins, Seq("l_orderkey", "l_linenumber"), "left_semi")
-        .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    val spark = GraftSession.local(cpus.toInt)
+    warmup(spark, sfDir)
     val mins = mutable.LinkedHashMap.empty[String, Double]
     val lasts = mutable.LinkedHashMap.empty[String, Double]
     // operator-vs-harness split for the stream gates (round-7 advice
@@ -68,10 +35,9 @@ object Bench {
       // noop sink materializes every output column (a bare count()
       // would let Catalyst prune computed columns and bench the scan)
       val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .foreach { case (name, fn) =>
+        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      only.fold(SparkEntry.gates)(SparkEntry.select).sortBy(_.name).foreach { gate =>
+        val name = gate.name
         // GC barrier: without it a query's timing inherits the heap
         // debris of the ~80 queries before it (measured 5.5 s vs
         // 1.7 s for the same query full-suite vs isolated); the pause
@@ -86,7 +52,7 @@ object Bench {
           graft.streaming.StreamParity.resetTimers()
           val t0 = System.nanoTime()
           val ok =
-            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+            try { gate.build(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
             catch { case e: Throwable =>
               System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
             }
@@ -152,4 +118,22 @@ object Bench {
       spark.stop()
     }
   }
+
+  /** Untimed warmup: JIT/classload the scan+codegen+shuffle paths once
+    * so the first measured query reflects steady state, not JVM warmup. */
+  def warmup(spark: SparkSession, sfDir: String): Unit =
+    try {
+      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      li.groupBy("l_returnflag").count().write.format("noop").mode("overwrite").save()
+      // regex-bearing pass: JIT the codegen'd rlike/UTF8String paths so
+      // the first measured regex query isn't paying compiler warmup
+      li.filter("l_returnflag rlike '^[A-Z]+$'").groupBy("l_linestatus").count()
+        .write.format("noop").mode("overwrite").save()
+      // agg + semi-join pass: JIT hash-join build/probe and the AQE
+      // shuffle→broadcast conversion the join-family queries hit
+      val mins = li.groupBy("l_orderkey")
+        .agg(org.apache.spark.sql.functions.min("l_linenumber").as("l_linenumber"))
+      li.join(mins, Seq("l_orderkey", "l_linenumber"), "left_semi")
+        .write.format("noop").mode("overwrite").save()
+    } catch { case _: Throwable => () }
 }

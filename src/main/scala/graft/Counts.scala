@@ -7,8 +7,7 @@ package graft
 object Counts {
   def main(args: Array[String]): Unit = {
     println(
-      s"queries=${SparkEntry.queries.size} " +
-        s"oracles=${SparkEntry.oracleSql.size} " +
+      s"queries=${SparkEntry.gates.size} " +
         s"ops=${graft.transforms.Transforms.knownTypes.size}")
   }
 }

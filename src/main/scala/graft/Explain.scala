@@ -1,45 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of selected
-  * SparkEntry queries so scan pushdown (PushedFilters/ReadSchema),
+  * SparkEntry gates so scan pushdown (PushedFilters/ReadSchema),
   * join strategy (BroadcastHashJoin vs SortMergeJoin), and
   * WholeStageCodegen coverage can be inspected.
-  * Usage: graft.Explain <sfDir> [query ...]
+  * Usage: graft.Explain <sfDir> [gate ...]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // size-based post-shuffle coalescing (guide §2.2): the default
-      // parallelismFirst=true refuses to coalesce below defaultParallelism,
-      // so at 32 cores every tiny LM/model-table exchange runs 32
-      // near-empty tasks (x_text_trigram_ppx measured 0.34 scaling
-      // ratio). Spark's own docs recommend false; coalescing stays
-      // byte-driven (advisory 64 MB), so real-volume shuffles are
-      // untouched at any scale. Same-window A/B r19: trigram 0.74-0.78,
-      // groups-family 0.88-0.94, no consistent loser.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.hadoop.fs.file.impl", classOf[graft.util.NoForkLocalFileSystem].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
-      SparkEntry.queries.get(n) match {
-        case Some(fn) =>
-          println(s"\n========== $n ==========")
-          try println(fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-          catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
-        case None => println(s"unknown query: $n")
-      }
+    val selected =
+      if (args.length > 1) SparkEntry.select(args.tail.toSeq) else SparkEntry.gates.sortBy(_.name)
+    val spark = GraftSession.local(4)
+    selected.foreach { gate =>
+      println(s"\n========== ${gate.name} ==========")
+      try println(gate.build(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
+      catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
     }
     spark.stop()
   }

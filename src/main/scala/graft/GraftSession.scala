@@ -38,10 +38,11 @@ object GraftSession {
       .config("spark.hadoop.fs.file.impl", classOf[graft.util.NoForkLocalFileSystem].getName)
   }
 
-  /** Local session for tests/CLI; on a cluster, pass the real master
-    * (or use spark-submit, which injects it). */
-  def local(cores: String = "*"): SparkSession = {
-    val s = builder(s"local[$cores]").config("spark.ui.enabled", "false").getOrCreate()
+  /** Local session on `cores` threads with one shuffle partition per
+    * core, for the harness mains and the test suite; on a cluster, pass
+    * the real master to [[builder]] (or use spark-submit). */
+  def local(cores: Int): SparkSession = {
+    val s = builder(s"local[$cores]", cores).config("spark.ui.enabled", "false").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

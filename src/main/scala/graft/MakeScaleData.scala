@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize the ≈sf1 scaling-probe dataset (BASELINE.md "Scaling
@@ -30,15 +30,8 @@ object MakeScaleData {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft_sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val spark = GraftSession.local(cpus)
 
     def t(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
 
@@ -67,7 +60,7 @@ object MakeScaleData {
       "embeddings" -> replicate(t("embeddings"), Map("vec_id" -> Strides("vec_id"))))
 
     tables.foreach { case (name, df) =>
-      df.repartition(math.max(4, cpus.toInt))
+      df.repartition(math.max(4, cpus))
         .write.mode("overwrite").parquet(s"$out/$name.parquet")
       println(s"[make-scale] $name -> $out/$name.parquet")
     }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, TextAnalysis}
@@ -32,11 +32,7 @@ object MakeNearDupData {
   def main(args: Array[String]): Unit = {
     val srcDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/graft_sf1_neardup")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
 
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
       .withColumn("j", explode(sequence(lit(0), lit(9))))
@@ -70,11 +66,7 @@ object MakeNearDupData {
 object DedupScaleBench {
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/tmp/graft_sf1_neardup")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     import spark.implicits._
 
     def timed[T](label: String)(f: => T): (T, Double) = {

@@ -2,12 +2,11 @@ package graft
 
 import scala.collection.mutable
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job/stage profiler (optimization round tooling).
   *
-  * Runs the named queries (SPARK_GRAFT_PROFILE_ONLY, comma-separated)
-  * under the same session settings as [[Bench]] and prints, for the
+  * Runs the named gates (SPARK_GRAFT_PROFILE_ONLY, comma-separated)
+  * on a [[GraftSession]] after [[Bench.warmup]] and prints, for the
   * LAST repeat of each query, every Spark job with its wall time, task
   * count, summed task time, and shuffle bytes — so gate seconds can be
   * attributed to specific jobs (scan, shuffle round, state-store
@@ -35,25 +34,10 @@ object Profile {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeats = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "2").toInt)
-    val names = sys.env.getOrElse("SPARK_GRAFT_PROFILE_ONLY", "q_agg")
-      .split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val selected = SparkEntry.select(sys.env.getOrElse("SPARK_GRAFT_PROFILE_ONLY", "q_agg")
+      .split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // size-based post-shuffle coalescing (guide §2.2): the default
-      // parallelismFirst=true refuses to coalesce below defaultParallelism,
-      // so at 32 cores every tiny LM/model-table exchange runs 32
-      // near-empty tasks (x_text_trigram_ppx measured 0.34 scaling
-      // ratio). Spark's own docs recommend false; coalescing stays
-      // byte-driven (advisory 64 MB), so real-volume shuffles are
-      // untouched at any scale. Same-window A/B r19: trigram 0.74-0.78,
-      // groups-family 0.88-0.94, no consistent loser.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.hadoop.fs.file.impl", classOf[graft.util.NoForkLocalFileSystem].getName)
       .config("spark.sql.streaming.streamingQueryListeners", "graft.ProfileStreamListener")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -90,43 +74,36 @@ object Profile {
 
     val phase = Profile.phase
 
-    // warmup identical to Bench
-    try {
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      li.groupBy("l_returnflag").count().write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    Bench.warmup(spark, sfDir)
 
-    names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None => System.err.println(s"[profile] unknown query $name")
-        case Some(fn) =>
-          (1 to repeats).foreach { rep =>
-            System.gc()
-            jobs.synchronized { jobs.clear(); stageToJob.clear() }
-            phase.synchronized { phase.clear(); Profile.batches = 0 }
-            Profile.recording = true
-            val t0 = System.nanoTime()
-            try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            catch { case e: Throwable => System.err.println(s"[profile] $name failed: $e") }
-            val wall = (System.nanoTime() - t0) / 1e9
-            Profile.recording = false
-            Thread.sleep(400) // let the listener bus drain
-            val snap = jobs.synchronized { jobs.values.toVector }
-            val covered = snap.map(r => math.max(0L, r.end - r.start)).sum / 1e3
-            println(f"== $name rep $rep wall $wall%.3f s, ${snap.size} jobs, job-covered $covered%.3f s, gap ${wall - covered}%.3f s")
-            val ph = phase.synchronized { (Profile.batches, phase.toVector) }
-            if (ph._1 > 0)
-              println(s"   stream: ${ph._1} batches  " +
-                ph._2.sortBy(-_._2).map { case (k, v) => s"$k=${v}ms" }.mkString("  "))
-            if (rep == repeats) {
-              var prevEnd = 0L
-              snap.foreach { r =>
-                val gap = if (prevEnd > 0) (r.start - prevEnd) / 1e3 else 0.0
-                prevEnd = math.max(prevEnd, r.end)
-                println(f"  job ${r.id}%4d  ${(r.end - r.start) / 1e3}%7.3f s  (+gap $gap%6.3f)  stages ${r.stages}%2d tasks ${r.tasks}%4d taskTime ${r.taskTimeMs / 1e3}%8.3f s  shufR ${r.shufRead}%9d shufW ${r.shufWrite}%9d  ${r.desc}")
-              }
-            }
+    selected.foreach { gate =>
+      val name = gate.name
+      (1 to repeats).foreach { rep =>
+        System.gc()
+        jobs.synchronized { jobs.clear(); stageToJob.clear() }
+        phase.synchronized { phase.clear(); Profile.batches = 0 }
+        Profile.recording = true
+        val t0 = System.nanoTime()
+        try gate.build(spark, sfDir).write.format("noop").mode("overwrite").save()
+        catch { case e: Throwable => System.err.println(s"[profile] $name failed: $e") }
+        val wall = (System.nanoTime() - t0) / 1e9
+        Profile.recording = false
+        Thread.sleep(400) // let the listener bus drain
+        val snap = jobs.synchronized { jobs.values.toVector }
+        val covered = snap.map(r => math.max(0L, r.end - r.start)).sum / 1e3
+        println(f"== $name rep $rep wall $wall%.3f s, ${snap.size} jobs, job-covered $covered%.3f s, gap ${wall - covered}%.3f s")
+        val ph = phase.synchronized { (Profile.batches, phase.toVector) }
+        if (ph._1 > 0)
+          println(s"   stream: ${ph._1} batches  " +
+            ph._2.sortBy(-_._2).map { case (k, v) => s"$k=${v}ms" }.mkString("  "))
+        if (rep == repeats) {
+          var prevEnd = 0L
+          snap.foreach { r =>
+            val gap = if (prevEnd > 0) (r.start - prevEnd) / 1e3 else 0.0
+            prevEnd = math.max(prevEnd, r.end)
+            println(f"  job ${r.id}%4d  ${(r.end - r.start) / 1e3}%7.3f s  (+gap $gap%6.3f)  stages ${r.stages}%2d tasks ${r.tasks}%4d taskTime ${r.taskTimeMs / 1e3}%8.3f s  shufR ${r.shufRead}%9d shufW ${r.shufWrite}%9d  ${r.desc}")
           }
+        }
       }
     }
     spark.stop()

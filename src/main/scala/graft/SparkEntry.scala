@@ -1,160 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.compile.PipelineCompiler
-import graft.ops.{Components, Dedup, Multimodal, Similarity, TextAnalysis, Warc}
+import graft.gates._
 import graft.spec._
-import graft.transforms._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Each query exercises the engine's operator set (graft.transforms /
-  * graft.ops) over the driver testdata, with a DuckDB-equivalent SQL
-  * oracle. Cross-engine determinism rules used throughout:
-  *  - sums/avgs over doubles go through DECIMAL(18,6) (compact-long
-  *    Decimal path; DuckDB side uses DECIMAL(38,6) — both exact):
-  *    integer arithmetic independent of partitioning / addition order;
-  *    final CAST to DOUBLE is correctly rounded in both engines →
-  *    bit-identical values;
-  *  - `events.ts` is nanosecond parquet (Spark truncates to micros,
-  *    DuckDB keeps ns) → compared as epoch milliseconds;
-  *  - every computed column is explicitly aliased identically in the
-  *    Spark plan and the oracle SQL.
-  */
+/** The engine's flagship query and its gate registry: every operator
+  * gate, each with the DuckDB SQL that must reproduce its rows (see
+  * [[graft.gates.Gate]]). */
 object SparkEntry {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
-  /** documents scan for per-row compute-heavy text queries: the table
-    * compresses so well that parquet yields 1-2 splits at bench scale;
-    * fan out so hashing/regex work uses the whole machine (no-op when
-    * the scan already has enough splits — see ops.Partitioning). */
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    graft.ops.Partitioning.fanOut(t(spark, dir, "documents"))
-
-  /** Shared-fixture memo (round 14): several gates exercise DIFFERENT
-    * decoders over the SAME packed fixture (the docx pair, the gguf
-    * pair, the warc family, the chat trio, …). Packing is fixture
-    * cost, not operator cost — pack once per (session, sfDir, tag)
-    * and persist, so correctness and bench runs pay it once instead
-    * of once per gate. */
-  private val fixtureCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.concurrent.TrieMap[String, DataFrame]]()
-  private def sharedFixture(tag: String, s: SparkSession, d: String)(
-      build: => DataFrame): DataFrame = {
-    // Keyed WEAKLY on the session object itself (not a reusable hash
-    // code): a new session can never alias a stopped one, and a
-    // collected session's cached fixtures become unreachable with it.
-    val perSession = fixtureCache.synchronized {
-      var m = fixtureCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String, DataFrame]()
-        fixtureCache.put(s, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(s"$tag|$d",
-      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
-
-  /** On-disk fixture memo (round 15): the table-format gates write a
-    * REAL table layout (parquet + transaction metadata) once per
-    * (tag, sf dir) per JVM; the dir outlives any session, so this
-    * memo is keyed by content, not session. */
-  private val fixtureDirCache =
-    scala.collection.concurrent.TrieMap[String, String]()
-  private def sharedDir(tag: String, d: String)(build: => String): String =
-    fixtureDirCache.getOrElseUpdate(s"$tag|$d", build)
-
-  /** Six-language phrase banks for the x_text_langid gate: the
-    * synthetic corpus text is English-shaped and its lang labels carry
-    * no text signal (the x_text_linear_classify finding), so the gate
-    * plants REAL per-language text — 8 short sentences per language,
-    * written for this fixture — and composes two per doc by different
-    * doc_id strides. ru exercises Cyrillic, zh exercises Han (the
-    * scripts the word tokenizer erases); fr/es share the Latin script
-    * and separate only on character-gram evidence. */
-  private[graft] val langIdLangs: Seq[String] = Seq("de", "en", "es", "fr", "ru", "zh")
-  private[graft] val langIdBanks: Map[String, Seq[String]] = Map(
-    "en" -> Seq(
-      "the quick brown fox jumps over the lazy dog",
-      "this is a simple sentence about the weather today",
-      "we are going to the market early in the morning",
-      "students read books in the library every afternoon",
-      "the committee will discuss the budget next week",
-      "many people enjoy walking along the river at sunset",
-      "the train arrives at the station right on time",
-      "science and history are taught in every school"),
-    "fr" -> Seq(
-      "le renard brun saute par dessus le chien paresseux",
-      "ceci est une phrase simple sur le temps d'aujourd'hui",
-      "nous allons au marché tôt demain matin",
-      "les étudiants lisent des livres à la bibliothèque",
-      "le comité discutera du budget la semaine prochaine",
-      "beaucoup de gens aiment marcher le long de la rivière",
-      "le train arrive à la gare exactement à l'heure",
-      "la science et l'histoire sont enseignées à l'école"),
-    "de" -> Seq(
-      "der braune fuchs springt über den faulen hund",
-      "dies ist ein einfacher satz über das wetter heute",
-      "wir gehen morgen früh auf den markt",
-      "die studenten lesen bücher in der bibliothek",
-      "der ausschuss wird nächste woche über das budget sprechen",
-      "viele menschen gehen gern am fluss spazieren",
-      "der zug kommt pünktlich am bahnhof an",
-      "wissenschaft und geschichte werden in jeder schule gelehrt"),
-    "es" -> Seq(
-      "el zorro marrón salta sobre el perro perezoso",
-      "esta es una frase sencilla sobre el tiempo de hoy",
-      "vamos al mercado mañana por la mañana temprano",
-      "los estudiantes leen libros en la biblioteca",
-      "el comité discutirá el presupuesto la próxima semana",
-      "a mucha gente le gusta caminar junto al río",
-      "el tren llega a la estación justo a tiempo",
-      "la ciencia y la historia se enseñan en todas las escuelas"),
-    "ru" -> Seq(
-      "быстрая коричневая лиса прыгает через ленивую собаку",
-      "это простое предложение о сегодняшней погоде",
-      "мы идем на рынок завтра рано утром",
-      "студенты читают книги в библиотеке каждый день",
-      "комитет обсудит бюджет на следующей неделе",
-      "многие люди любят гулять вдоль реки на закате",
-      "поезд прибывает на станцию точно вовремя",
-      "наука и история преподаются в каждой школе"),
-    "zh" -> Seq(
-      "敏捷的棕色狐狸跳过懒惰的狗",
-      "这是一个关于今天天气的简单句子",
-      "我们明天一早去市场买菜",
-      "学生们每天下午在图书馆读书",
-      "委员会下周将讨论预算问题",
-      "许多人喜欢在日落时沿着河边散步",
-      "火车准时到达车站",
-      "每所学校都教授科学和历史"))
-
-  /** Normalize `events.ts` to a session-zone timestamp whatever the
-    * testdata vintage stored physically: nanosecond-int64 (read with
-    * `spark.sql.legacy.parquet.nanosAsLong=true`, set in Verify/Bench
-    * sessions), TIMESTAMP_NTZ (microsecond parquet timestamps), or a
-    * plain timestamp. Downstream operators always see TimestampType
-    * (unix_millis & friends reject NTZ).
-    */
-  private def events(spark: SparkSession, dir: String): DataFrame = {
-    val df = t(spark, dir, "events")
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        // integer division: `/` on Column is double division, which at
-        // 1e18 ns magnitudes rounds in the last ulp and shifts a
-        // microsecond — `div` keeps it exact
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        // session zone is UTC in every graft session: instant-preserving
-        df.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => df
-    }
-  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Runs the full spec→compile→DataFrame path of the engine
@@ -177,8831 +32,16 @@ object SparkEntry {
     PipelineCompiler.compile(spark, spec).df
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- filter (reference main.py:180-203) ----
-    "q_filter_gt" -> ((s, d) =>
-      FilterOp(t(s, d, "lineitem"), Config.of("field" -> "l_quantity", "op" -> "gt", "value" -> 24))),
-    "q_filter_contains" -> ((s, d) =>
-      FilterOp(t(s, d, "part"), Config.of("field" -> "p_type", "op" -> "contains", "value" -> "MED"))),
-    "q_filter_notnull" -> ((s, d) =>
-      FilterOp(t(s, d, "documents"), Config.of("field" -> "text", "op" -> "notnull"))),
-    "q_filter_in" -> ((s, d) =>
-      FilterOp(events(s, d), Config.of("field" -> "event_type",
-        "op" -> "in", "value" -> Seq("signup", "purchase")))
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))),
-
-    // ---- map (reference main.py:205-224) ----
-    "q_map_upper" -> ((s, d) =>
-      MapOp(t(s, d, "part").select(col("p_partkey"), col("p_type")),
-        Config.of("field" -> "p_type", "operation" -> "upper", "as" -> "p_type_up"))),
-    "q_map_cast" -> ((s, d) =>
-      MapOp(t(s, d, "lineitem").select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag")),
-        Config.of("field" -> "l_returnflag", "operation" -> "int", "as" -> "rf_num"))),
-
-    // ---- aggregate (reference main.py:226-249) ----
-    "q_agg" -> ((s, d) =>
-      AggregateOp(t(s, d, "lineitem"), Config.of(
-        "group_by" -> Seq("l_returnflag", "l_linestatus"),
-        "aggregations" -> Seq(
-          Map("function" -> "count", "as" -> "cnt"),
-          Map("field" -> "l_quantity", "function" -> "sum", "exact_decimal" -> 6, "as" -> "sum_qty"),
-          Map("field" -> "l_extendedprice", "function" -> "sum", "exact_decimal" -> 6, "as" -> "sum_price"),
-          Map("field" -> "l_discount", "function" -> "avg", "exact_decimal" -> 6, "as" -> "avg_disc"),
-          Map("field" -> "l_extendedprice", "function" -> "min", "as" -> "min_price"),
-          Map("field" -> "l_extendedprice", "function" -> "max", "as" -> "max_price"))))),
-    "q_agg_global" -> ((s, d) =>
-      AggregateOp(t(s, d, "lineitem"), Config.of(
-        "aggregations" -> Seq(
-          Map("function" -> "count", "as" -> "cnt"),
-          Map("field" -> "l_extendedprice", "function" -> "sum", "exact_decimal" -> 6, "as" -> "total"),
-          Map("field" -> "l_partkey", "function" -> "count_distinct", "as" -> "nparts"))))),
-    "q_agg_rollup" -> ((s, d) =>
-      AggregateOp(t(s, d, "lineitem"), Config.of(
-        "group_by" -> Seq("l_returnflag", "l_linestatus"),
-        "grouping" -> "rollup",
-        "aggregations" -> Seq(
-          Map("function" -> "count", "as" -> "cnt"),
-          Map("field" -> "l_quantity", "function" -> "sum", "exact_decimal" -> 6, "as" -> "sum_qty"))))),
-
-    // ---- aggregation breadth: cube, FILTER-style conditional aggs,
-    // ordered string_agg, exact second-moment statistics ----
-    "q_agg_cube" -> ((s, d) =>
-      AggregateOp(t(s, d, "lineitem"), Config.of(
-        "group_by" -> Seq("l_returnflag", "l_linestatus"),
-        "grouping" -> "cube",
-        "aggregations" -> Seq(
-          Map("function" -> "count", "as" -> "cnt"),
-          Map("field" -> "l_quantity", "function" -> "sum", "exact_decimal" -> 6, "as" -> "sum_qty"))))),
-    "q_agg_filter" -> ((s, d) =>
-      t(s, d, "lineitem").groupBy(col("l_returnflag")).agg(
-        count(lit(1)).as("cnt"),
-        sum(when(col("l_linestatus") === "F", col("l_quantity")).cast("decimal(18,6)"))
-          .cast("double").as("qty_f"),
-        count(when(col("l_discount") > 0.05, lit(1))).as("n_hidisc"),
-        sum(when(col("l_shipdate") >= to_timestamp(lit("1997-01-01")), col("l_extendedprice"))
-          .cast("decimal(18,6)")).cast("double").as("rev_97plus"))),
-    "q_string_agg" -> ((s, d) =>
-      t(s, d, "orders").groupBy(col("o_orderpriority")).agg(
-        // collect_set is order-nondeterministic; array_sort makes the
-        // serialized list canonical on any partitioning
-        array_join(array_sort(collect_set(col("o_orderstatus"))), ",").as("statuses"),
-        countDistinct(col("o_custkey")).as("n_cust"))),
-    // stddev/corr the cross-engine-exact way: all second moments as
-    // exact DECIMAL sums, ONE final double expression per statistic
-    // (identical op sequence in the oracle ⇒ bit-identical doubles).
-    // The built-in stddev/corr stream doubles through Welford-style
-    // merges whose result depends on partitioning — fine numerically,
-    // impossible to hash-match across engines.
-    "q_stats_exact" -> ((s, d) => {
-      val dec = "decimal(38,6)"
-      // fanOut: the single-file scan yields ~3 splits and this agg's
-      // per-row cost is decimal(38)-heavy (profiled 2.8 s of CPU on
-      // 3 of 32 cores); round-robin to full width first. Decimal sums
-      // and counts are exact ⟹ order/partitioning-independent, so the
-      // output is hash-identical. No-op at real scale (fanOut guards
-      // on split count ≥ parallelism).
-      val g = graft.ops.Partitioning.fanOut(t(s, d, "lineitem"))
-        .groupBy(col("l_returnflag")).agg(
-        count(col("l_quantity")).as("n"),
-        sum(col("l_quantity").cast(dec)).cast("double").as("__sq"),
-        sum((col("l_quantity") * col("l_quantity")).cast(dec)).cast("double").as("__sq2"),
-        sum(col("l_extendedprice").cast(dec)).cast("double").as("__sp"),
-        sum((col("l_extendedprice") * col("l_extendedprice")).cast(dec)).cast("double").as("__sp2"),
-        sum((col("l_quantity") * col("l_extendedprice")).cast(dec)).cast("double").as("__sqp"))
-      val nd = col("n").cast("double")
-      g.select(col("l_returnflag"), col("n"),
-        (col("__sq") / nd).as("mean_qty"),
-        sqrt((col("__sq2") - col("__sq") * col("__sq") / nd) / (nd - lit(1.0))).as("sd_qty"),
-        ((nd * col("__sqp") - col("__sq") * col("__sp")) /
-          (sqrt(nd * col("__sq2") - col("__sq") * col("__sq")) *
-            sqrt(nd * col("__sp2") - col("__sp") * col("__sp")))).as("corr_qp"))
-    }),
-    // exact percentiles (interpolated): sort-based, per-group; rounded
-    // to 6 dp — interpolation differs from DuckDB's only in the last
-    // couple of ulps, far below the rounding grain
-    "q_percentile" -> ((s, d) =>
-      t(s, d, "orders").groupBy(col("o_orderpriority")).agg(
-        round(expr("percentile(o_totalprice, 0.25)"), 6).as("p25"),
-        round(expr("percentile(o_totalprice, 0.5)"), 6).as("p50"),
-        round(expr("percentile(o_totalprice, 0.75)"), 6).as("p75"),
-        min(col("o_totalprice")).as("mn"),
-        max(col("o_totalprice")).as("mx"))),
-
-    // ---- join (reference main.py:251-263 + SURVEY §2.4 absent kinds) ----
-    "q_join_inner" -> ((s, d) =>
-      JoinOp(t(s, d, "orders"), Config.of(
-        "right" -> "customer", "left_key" -> "o_custkey", "right_key" -> "c_custkey",
-        "broadcast" -> true),
-        Map("customer" -> t(s, d, "customer")))),
-    "q_join_left" -> ((s, d) =>
-      JoinOp(t(s, d, "customer"), Config.of(
-        "right" -> "nation", "left_key" -> "c_nationkey", "right_key" -> "n_nationkey",
-        "how" -> "left", "broadcast" -> true),
-        Map("nation" -> t(s, d, "nation")))),
-    "q_join_semi" -> ((s, d) =>
-      JoinOp(t(s, d, "customer"), Config.of(
-        "right" -> "orders", "left_key" -> "c_custkey", "right_key" -> "o_custkey",
-        "how" -> "left_semi"),
-        Map("orders" -> t(s, d, "orders")))),
-    "q_join_anti" -> ((s, d) =>
-      JoinOp(t(s, d, "customer"), Config.of(
-        "right" -> "orders", "left_key" -> "c_custkey", "right_key" -> "o_custkey",
-        "how" -> "left_anti"),
-        Map("orders" -> t(s, d, "orders")))),
-
-    // salted variant of q_join_inner: identical result set (same
-    // oracle), skew-proof plan — the correctness proof that salting
-    // does not change join semantics
-    "q_join_salted" -> ((s, d) =>
-      JoinOp(t(s, d, "orders"), Config.of(
-        "right" -> "customer", "left_key" -> "o_custkey", "right_key" -> "c_custkey",
-        "salt" -> 8),
-        Map("customer" -> t(s, d, "customer")))),
-
-    // ---- outer/cross join breadth (SURVEY §2.4: ABSENT in reference) ----
-    "q_join_full" -> ((s, d) => {
-      val fc = FilterOp(t(s, d, "orders"),
-        Config.of("field" -> "o_orderstatus", "op" -> "eq", "value" -> "F"))
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_f"))
-      val pc = FilterOp(t(s, d, "orders"),
-        Config.of("field" -> "o_orderstatus", "op" -> "eq", "value" -> "P"))
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_p"))
-      JoinOp(fc, Config.of(
-        "right" -> "pc", "left_key" -> "o_custkey", "right_key" -> "o_custkey",
-        "how" -> "full"), Map("pc" -> pc))
-    }),
-    "q_join_right" -> ((s, d) =>
-      JoinOp(FilterOp(t(s, d, "orders"),
-        Config.of("field" -> "o_orderstatus", "op" -> "eq", "value" -> "P")),
-        Config.of("right" -> "customer", "left_key" -> "o_custkey",
-          "right_key" -> "c_custkey", "how" -> "right"),
-        Map("customer" -> t(s, d, "customer")))),
-    "q_join_cross" -> ((s, d) => {
-      val n = t(s, d, "nation")
-      t(s, d, "region").crossJoin(
-        n.select(n.columns.map(cn => col(cn).as("r_" + cn)).toSeq: _*))
-    }),
-
-    // ---- sort / top-k (reference main.py:265-268; limit ABSENT there) ----
-    "q_sort_topk" -> ((s, d) =>
-      SortOp(t(s, d, "orders"), Config.of(
-        "columns" -> Seq(
-          Map("field" -> "o_totalprice", "descending" -> true),
-          Map("field" -> "o_orderkey", "descending" -> false)),
-        "limit" -> 100))),
-
-    // ---- deduplicate (reference main.py:270-279, first-wins) ----
-    "q_dedup_first" -> ((s, d) =>
-      DedupOp(events(s, d), Config.of(
-        "keys" -> Seq("user_id", "event_type"), "keep" -> "first", "order_by" -> Seq("event_id")))
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
-          unix_millis(col("ts")).as("ts_ms"), col("props"))),
-
-    // ---- select + rename (reference main.py:281-291) ----
-    "q_select_rename" -> ((s, d) =>
-      RenameOp(
-        SelectOp(t(s, d, "customer"),
-          Config.of("fields" -> Seq("c_custkey", "c_name", "c_acctbal"))),
-        Config.of("mapping" -> Map("c_name" -> "customer_name")))),
-
-    // ---- union by name, null-fill (reference main.py:437-443) ----
-    "q_union" -> ((s, d) => {
-      val cust = t(s, d, "customer").select(
-        col("c_custkey").as("id"), col("c_name").as("name"),
-        col("c_acctbal").as("acctbal"), col("c_mktsegment"))
-      val supp = t(s, d, "supplier").select(
-        col("s_suppkey").as("id"), col("s_name").as("name"),
-        col("s_acctbal").as("acctbal"), col("s_nationkey"))
-      UnionOp(cust, Config.of("inputs" -> Seq("supp")), Map("supp" -> supp))
-    }),
-
-    // ---- window functions (ABSENT in reference, SURVEY §2.4) ----
-    "q_window_rank" -> ((s, d) =>
-      FilterOp(
-        WindowOp(t(s, d, "orders"), Config.of(
-          "partition_by" -> Seq("o_custkey"),
-          "order_by" -> Seq(
-            Map("field" -> "o_totalprice", "descending" -> true),
-            Map("field" -> "o_orderkey", "descending" -> false)),
-          "functions" -> Seq(Map("function" -> "row_number", "as" -> "rn")))),
-        Config.of("field" -> "rn", "op" -> "le", "value" -> 3))),
-    "q_window_running" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, d, "orders").select(
-        col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-        count(lit(1)).over(w).as("n_so_far"),
-        sum(col("o_totalprice").cast("decimal(18,6)")).over(w).cast("double").as("spend_so_far"))
-    }),
-
-    // ---- window breadth: lag/lead/first/ntile/percent_rank/cume_dist
-    // + a RANGE frame (time-based running windows) ----
-    "q_window_lag" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      t(s, d, "orders").select(
-        col("o_custkey"), col("o_orderkey"),
-        lag(col("o_totalprice"), 1).over(w).as("prev_price"),
-        lead(col("o_orderkey"), 1).over(w).as("next_key"),
-        first(col("o_totalprice")).over(w).as("first_price"),
-        ntile(4).over(w).cast("long").as("nt"),
-        percent_rank().over(w).as("pr"),
-        cume_dist().over(w).as("cd"))
-    }),
-    "q_window_range" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      // RANGE frame over epoch-ms: trailing 30-day window per customer.
-      // Tie-insensitive (peers share the frame), so deterministic even
-      // though several orders can share a date.
-      val w = Window.partitionBy(col("o_custkey")).orderBy(col("ms"))
-        .rangeBetween(-2592000000L, 0L)
-      t(s, d, "orders")
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-          // o_orderdate is TIMESTAMP_NTZ; session TZ is pinned UTC so
-          // the cast to TIMESTAMP is the identity epoch mapping
-          unix_millis(col("o_orderdate").cast("timestamp")).as("ms"))
-        .select(col("o_custkey"), col("o_orderkey"), col("ms"),
-          count(lit(1)).over(w).as("n_30d"),
-          sum(col("o_totalprice").cast("decimal(18,6)")).over(w).cast("double").as("spend_30d"))
-    }),
-
-    // ---- scalar function surface (reference: casts/case only, main.py:208-213) ----
-    "q_scalar" -> ((s, d) =>
-      t(s, d, "orders").select(
-        col("o_orderkey"),
-        year(col("o_orderdate")).cast("long").as("y"),
-        month(col("o_orderdate")).cast("long").as("m"),
-        substring(col("o_orderpriority"), 1, 1).as("pri"),
-        length(col("o_orderpriority")).cast("long").as("plen"),
-        concat(col("o_orderstatus"), lit("-"), col("o_orderpriority")).as("tag"),
-        floor(col("o_totalprice")).as("fl"),
-        ceil(col("o_totalprice")).as("ce"))),
-    "q_case" -> ((s, d) =>
-      t(s, d, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"),
-        when(col("l_quantity") < 10, lit("low"))
-          .when(col("l_quantity") < 30, lit("mid"))
-          .otherwise(lit("high")).as("qty_band"),
-        coalesce(nullif(col("l_returnflag"), lit("N")), lit("none")).as("rf"))),
-
-    // ---- temporal predicate (pushed to parquet as a timestamp filter) ----
-    "q_filter_date" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .where(col("l_shipdate") >= to_timestamp(lit("1997-01-01"))
-          && col("l_shipdate") < to_timestamp(lit("1998-01-01")))
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_shipdate"))),
-
-    // ---- multi-way analytical queries (TPC-H-shaped): the composed
-    // engine at work — join reorder, partial aggs, top-k, all from
-    // Catalyst ----
-    "q_top_customers" -> ((s, d) => {
-      // revenue per customer over F-status orders: customer ⋈ orders ⋈ lineitem
-      val cust = t(s, d, "customer")
-      val ord = FilterOp(t(s, d, "orders"),
-        Config.of("field" -> "o_orderstatus", "op" -> "eq", "value" -> "F"))
-      val li = t(s, d, "lineitem")
-      val joined = li
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-      joined.groupBy(col("c_custkey"), col("c_name"))
-        .agg(
-          sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(18,6)"))
-            .cast("double").as("revenue"),
-          countDistinct(col("o_orderkey")).as("n_orders"))
-        .orderBy(col("revenue").desc, col("c_custkey").asc)
-        .limit(50)
-    }),
-    "q_region_sales" -> ((s, d) => {
-      // sales by region/nation: region ⋈ nation ⋈ customer ⋈ orders
-      val joined = t(s, d, "orders")
-        .join(broadcast(t(s, d, "customer")), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
-      joined.groupBy(col("r_name"), col("n_name"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(18,6)")).cast("double").as("total_sales"))
-    }),
-
-    // ---- pivot + explode (ABSENT in reference) ----
-    "q_pivot" -> ((s, d) =>
-      PivotOp(t(s, d, "lineitem"), Config.of(
-        "group_by" -> Seq("l_returnflag"), "pivot" -> "l_linestatus",
-        "values" -> Seq("F", "O"),
-        "aggregations" -> Seq(Map("function" -> "count", "as" -> "cnt"))))),
-    "q_unpivot" -> ((s, d) =>
-      UnpivotOp(
-        t(s, d, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity"), col("l_extendedprice")),
-        Config.of("ids" -> Seq("l_orderkey", "l_linenumber"),
-          "values" -> Seq("l_quantity", "l_extendedprice"),
-          "name_to" -> "metric", "value_to" -> "val"))),
-    "q_explode" -> ((s, d) =>
-      ExplodeOp(
-        t(s, d, "documents").select(col("doc_id"),
-          graft.ops.TextAnalysis.tokens(col("text")).as("toks")),
-        Config.of("field" -> "toks", "as" -> "tok", "with_position" -> true))),
-
-    // ---- set ops + distinct (ABSENT in reference, SURVEY §2.4) ----
-    "q_distinct" -> ((s, d) =>
-      Transforms(t(s, d, "lineitem").select(col("l_returnflag"), col("l_linestatus")),
-        TransformSpec("d", "distinct"), Map.empty)),
-    "q_intersect" -> ((s, d) => {
-      val building = FilterOp(t(s, d, "customer"),
-        Config.of("field" -> "c_mktsegment", "op" -> "eq", "value" -> "BUILDING"))
-        .select(col("c_custkey").as("key"))
-      val withOrders = t(s, d, "orders").select(col("o_custkey").as("key"))
-      SetOp(building, Config.of("other" -> "o"), Map("o" -> withOrders), "intersect")
-    }),
-    "q_except" -> ((s, d) => {
-      val all = t(s, d, "orders").select(col("o_custkey").as("key"))
-      val f = FilterOp(t(s, d, "orders"),
-        Config.of("field" -> "o_orderstatus", "op" -> "eq", "value" -> "F"))
-        .select(col("o_custkey").as("key"))
-      SetOp(all, Config.of("other" -> "f"), Map("f" -> f), "except")
-    }),
-
-    // ---- composite-key join ----
-    "q_join_multikey" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-      val right = t(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
-      JoinOp(li, Config.of(
-        "right" -> "li2",
-        "left_keys" -> Seq("l_orderkey", "l_linenumber"),
-        "right_keys" -> Seq("l_orderkey", "l_linenumber")),
-        Map("li2" -> right))
-    }),
-
-    // ---- scalar breadth: math/string/date (sqrt is IEEE-exact
-    // cross-engine; exp/ln/pow are libm-dependent and excluded) ----
-    "q_scalar2" -> ((s, d) =>
-      t(s, d, "orders").select(
-        col("o_orderkey"),
-        sqrt(col("o_totalprice")).as("sq"),
-        abs(col("o_totalprice") - lit(100000.0)).as("ab"),
-        lpad(col("o_orderstatus"), 3, "_").as("lp"),
-        regexp_replace(col("o_orderpriority"), "-", "_").as("rp"),
-        regexp_extract(col("o_orderpriority"), "^(\\d+)", 1).as("pnum"),
-        dayofmonth(col("o_orderdate")).cast("long").as("dom"),
-        quarter(col("o_orderdate")).cast("long").as("qtr"),
-        unix_millis(date_trunc("month", col("o_orderdate"))).as("month_ms"))),
-
-    // ---- scalar breadth: date / string / json / array function
-    // families (every output serialized to a scalar; date results as
-    // ISO strings so both engines agree on the wire format) ----
-    "q_date_funcs" -> ((s, d) =>
-      t(s, d, "orders").select(
-        col("o_orderkey"),
-        date_format(date_add(col("o_orderdate"), 30), "yyyy-MM-dd").as("d30"),
-        date_format(last_day(col("o_orderdate")), "yyyy-MM-dd").as("eom"),
-        date_format(add_months(col("o_orderdate"), 2), "yyyy-MM-dd").as("m2"),
-        dayofweek(col("o_orderdate")).cast("long").as("dow"),
-        weekofyear(col("o_orderdate")).cast("long").as("woy"),
-        datediff(col("o_orderdate"), to_date(lit("1995-01-01"))).cast("long").as("dd"))),
-    "q_string_funcs" -> ((s, d) =>
-      t(s, d, "orders").select(
-        col("o_orderkey"),
-        reverse(col("o_orderpriority")).as("rev"),
-        repeat(col("o_orderstatus"), 3).as("rep"),
-        translate(col("o_orderpriority"), "-", "_").as("tr"),
-        expr("split_part(o_orderpriority, '-', 2)").as("sp"),
-        instr(col("o_orderpriority"), "-").cast("long").as("pos"),
-        col("o_orderpriority").startsWith("1").as("sw"),
-        expr("left(o_orderpriority, 3)").as("lft"),
-        expr("right(o_orderpriority, 3)").as("rgt"))),
-    "q_json_funcs" -> ((s, d) =>
-      events(s, d).select(
-        col("event_id"),
-        get_json_object(col("props"), "$.k").as("k_str"),
-        get_json_object(col("props"), "$.k").cast("long").as("k_num"),
-        get_json_object(col("props"), "$.missing").as("m"))),
-    "q_array_funcs" -> ((s, d) => {
-      val toks = TextAnalysis.tokens(col("text"))
-      t(s, d, "documents").select(
-        col("doc_id"),
-        size(toks).cast("long").as("ntok"),
-        array_join(slice(toks, 1, 3), " ").as("first3"),
-        array_contains(toks, "the").as("has_the"),
-        array_min(toks).as("tok_min"),
-        array_max(toks).as("tok_max"),
-        size(array_distinct(toks)).cast("long").as("nuniq"))
-    }),
-
-    // ---- SQL surface: the full Catalyst SQL front-end over the same
-    // tables (the reference's only SQL is pass-through to SQLite,
-    // main.py:133-136; ours is a first-class entry point) ----
-    "q_sql_join" -> ((s, d) => {
-      t(s, d, "lineitem").createOrReplaceTempView("lineitem")
-      t(s, d, "orders").createOrReplaceTempView("orders")
-      s.sql("""SELECT o_orderpriority, count(*) AS n,
-                      CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS rev
-               FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-               WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-               GROUP BY o_orderpriority""")
-    }),
-
-    // ---- temporal joins (as-of, range): graft.ops.TemporalJoins ----
-    "x_asof_join" -> ((s, d) => {
-      val ev = events(s, d)
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"), col("value"))
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"))
-      graft.ops.TemporalJoins.asOf(purchases, clicks,
-        Seq("user_id"), Seq("user_id"), "ts_us", "ts_us",
-        rightPayload = Seq("event_id", "ts_us"), rightTieBreak = "event_id",
-        strict = false, prefix = "click_")
-    }),
-    "x_range_join" -> ((s, d) => {
-      val ev = events(s, d)
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"))
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"))
-      graft.ops.TemporalJoins.rangeJoin(clicks, purchases,
-        Seq("user_id"), Seq("user_id"), "ts_us", "ts_us",
-        lowerMs = 1L, upperMs = 300000000L, prefix = "p_")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          col("p_event_id").as("purchase_id"),
-          (col("p_ts_us") - col("ts_us")).as("gap_us"))
-    }),
-
-    // ---- token counting (word + BPE-ish subword proxy) ----
-    "x_tokens" -> ((s, d) =>
-      docs(s, d).select(
-        col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).as("word_tokens"),
-        TextAnalysis.bpeishTokenCount(col("text")).as("bpe_tokens"))),
-
-    // ---- deterministic sampling / splits (content-hash based) ----
-    "q_sample" -> ((s, d) =>
-      SampleOp(t(s, d, "documents"), Config.of("key" -> "doc_id", "mod" -> 10, "below" -> 3))),
-    // per-class deterministic downsampling (rebalance a skewed corpus):
-    // keep 30% of en, all of zh, 10% of everything else — same md5
-    // bucket mechanism as q_sample so the oracle replays it exactly
-    "x_stratified_sample" -> ((s, d) =>
-      StratifiedSampleOp(t(s, d, "documents"), Config.of(
-        "key" -> "doc_id", "class_field" -> "lang", "mod" -> 10,
-        "default_below" -> 1, "below" -> Map("en" -> 3, "zh" -> 10)))),
-    "x_split" -> ((s, d) =>
-      SplitOp(t(s, d, "documents"), Config.of(
-        "key" -> "doc_id", "mod" -> 100, "train_below" -> 80, "val_below" -> 90))
-        .select(col("doc_id"), col("split"))),
-    // token-budget epoch selection: per source, deterministic-order
-    // docs until the source's token budget fills (inclusive, never
-    // overshooting); oracle replays the same windowed running sum
-    "x_token_budget" -> ((s, d) =>
-      TokenBudgetOp(t(s, d, "documents"), Config.of(
-        "key" -> "doc_id", "class_field" -> "source",
-        "budgets" -> Map("src0" -> 2000), "default_budget" -> 1500))
-        .select(col("doc_id"), col("source"), col("n_tokens"))),
-
-    // deterministic k-sample: bottom-k by content hash — an exact,
-    // reproducible "random" sample that any engine reproduces (plans
-    // as TakeOrderedAndProject: per-partition top-k + driver merge,
-    // no full sort)
-    "q_sample_bottomk" -> ((s, d) =>
-      t(s, d, "documents")
-        .orderBy(md5(col("doc_id").cast("string")).asc, col("doc_id").asc)
-        .limit(100)),
-
-    // custom typed UDAF (reference UDAF surface: ABSENT): per-group
-    // deterministic k-sample of distinct users, bottom-k by md5(id).
-    // Output serialized to a csv string: the driver's compare sorts
-    // every column in pandas, and array cells are unsortable there.
-    "x_group_sample" -> ((s, d) =>
-      events(s, d).groupBy(col("event_type"))
-        .agg(graft.ops.BottomKSample.of(col("user_id"), 5).as("__sample"))
-        .select(col("event_type"),
-          array_join(col("__sample").cast("array<string>"), ",").as("sample_users"))),
-
-    // ---- one-pass dataset profiler (validate_schema on steroids) ----
-    "x_profile_stats" -> ((s, d) =>
-      graft.ops.Profile.stats(t(s, d, "lineitem"),
-        Seq("l_returnflag", "l_linestatus", "l_orderkey", "l_linenumber"))),
-
-    // ==== SURVEY §2.6 extensions: text analysis ====
-    "x_text_profile" -> ((s, d) =>
-      TextAnalysis.profile(t(s, d, "documents"))
-        .select("doc_id", "n_chars", "token_count", "avg_token_len",
-          "punct_ratio", "stopword_ratio", "quality_score")),
-    "x_text_lang" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"), col("lang").as("lang_label"),
-        TextAnalysis.langId(col("text")).as("lang_id"))),
-    // C4-style URL canonicalization over synthetic URLs derived from
-    // (doc_id, source) — three shapes per doc_id%3: tracking params +
-    // default port + fragment; https default port with no path; a
-    // non-URL passthrough. Both engines build the identical input and
-    // normalize with the same instr/substr arithmetic.
-    "x_url_normalize" -> ((s, d) => {
-      val raw = when(col("doc_id") % 3 === 0,
-          concat(lit("HTTP://Example.COM:80/Docs/"), col("source"),
-            lit("?utm_source=feed&b=2&a=1&id="), col("doc_id"), lit("#frag")))
-        .when(col("doc_id") % 3 === 1,
-          concat(lit("https://Host.org:443?z=1&utm_campaign=x&y="), col("doc_id")))
-        .otherwise(concat(lit("not a url "), col("doc_id")))
-      docs(s, d).select(col("doc_id"), raw.as("url"),
-        TextAnalysis.normalizeUrl(raw).as("url_norm"))
-    }),
-    // corpus datasheet: per-source volumes + exact-dup redundancy
-    "x_corpus_report" -> ((s, d) =>
-      TextAnalysis.corpusReport(docs(s, d), "text", "source")),
-    // tf-idf term scores, every (doc, term) pair with smoothed idf
-    "x_tfidf" -> ((s, d) =>
-      TextAnalysis.tfidfScores(docs(s, d), "doc_id", "text")),
-    // C4 line/page quality filter: the corpus has no newlines or
-    // punctuation, so the gate synthesizes 6-word lines with
-    // stride-planted terminal punctuation and three planted defect
-    // lines (javascript / lorem ipsum / curly brace); the struct's
-    // verdicts and the cleaned text replay exactly in SQL
-    "x_text_c4_filter" -> ((s, d) => {
-      val toks = split(col("text"), " ")
-      val chunks = transform(
-        sequence(lit(0), ceil(size(toks) / lit(6.0)).cast("int") - 1),
-        i => concat_ws(" ", slice(toks, i * 6 + 1, lit(6))))
-      val punct = transform(chunks, (c, i) =>
-        concat(c, when(pmod(col("doc_id") + i, lit(2)) === 0, lit(".")).otherwise(lit(""))))
-      val noLine = array().cast("array<string>")
-      val lined = concat_ws("\n", concat(
-        when(pmod(col("doc_id"), lit(7)) === 0,
-          array(lit("javascript is required to view this page."))).otherwise(noLine),
-        punct,
-        when(pmod(col("doc_id"), lit(11)) === 0,
-          array(lit("lorem ipsum dolor sit amet."))).otherwise(noLine),
-        when(pmod(col("doc_id"), lit(13)) === 0,
-          array(lit("function foo() { return 1; }"))).otherwise(noLine)))
-      TextAnalysis.c4Quality(docs(s, d).select(col("doc_id"), lined.as("text")))
-        .select(col("doc_id"), col("c4.n_lines").as("n_lines"),
-          col("c4.n_kept").as("n_kept"), col("c4.has_lorem").as("has_lorem"),
-          col("c4.has_brace").as("has_brace"), col("c4.keep").as("keep"),
-          col("c4.text_clean").as("text_clean"))
-    }),
-    // DSIR importance weights: target = the English slice, source =
-    // the whole corpus; 256 hashed-n-gram buckets so the oracle can
-    // replay the 16-bit md5-prefix bucketing per character
-    "x_dsir_weights" -> ((s, d) => {
-      val all = docs(s, d)
-      TextAnalysis.dsirLogWeights(all, "doc_id", "text",
-        all.filter(col("lang") === "en"), "text", buckets = 256, alpha = 1.0)
-    }),
-    // RAG-style sliding chunks: per-doc 32-token windows, stride 24
-    // (8-token overlap); scan-local, oracle replays the slicing
-    "x_sliding_chunks" -> ((s, d) =>
-      graft.ops.Packing.slidingChunks(docs(s, d), "doc_id", "text",
-        chunkSize = 32, stride = 24)),
-    // int8 scalar quantization of embeddings: per-vector max-abs
-    // scale, explicit floor(v+0.5) rounding so DuckDB replays exactly.
-    // codes is serialized to a CSV scalar because the driver's pandas
-    // canonicalizer can't hash array cells (same fix as x_group_sample)
-    // Matryoshka truncation: first-16-dims + renormalize. The oracle
-    // recomputes the prefix norm directly from the raw embedding
-    // (bit-stable double fold, the sq8 discipline); the op's output
-    // is checked through two float-rounding-safe surfaces — its own
-    // L2 (exactly 1 or 0 after 6dp) and an |dot(out, prefix) - norm|
-    // tolerance verdict, since the op stores float32 components.
-    "x_embed_matryoshka" -> ((s, d) => {
-      val out = Similarity.truncateEmbeddings(
-        t(s, d, "embeddings"), "embedding", 16).withColumnRenamed("embedding", "out")
-      val raw = t(s, d, "embeddings").select(col("vec_id"),
-        transform(slice(col("embedding"), 1, 16), x => x.cast("double")).as("pre"))
-      out.join(raw, "vec_id").select(col("vec_id"),
-        size(col("out")).as("dim"),
-        sqrt(aggregate(transform(col("out"), x => x.cast("double")),
-          lit(0.0d), (a, x) => a + x * x)).as("unit"),
-        sqrt(aggregate(col("pre"), lit(0.0d), (a, x) => a + x * x)).as("norm16"),
-        (abs(aggregate(zip_with(transform(col("out"), x => x.cast("double")), col("pre"),
-          (a, b) => a * b), lit(0.0d), (a, x) => a + x) -
-          sqrt(aggregate(col("pre"), lit(0.0d), (a, x) => a + x * x))) < 1e-4 ||
-          sqrt(aggregate(col("pre"), lit(0.0d), (a, x) => a + x * x)) === 0.0).as("ok"))
-    }),
-
-    "x_embed_sq8" -> ((s, d) =>
-      Similarity.quantizeInt8(t(s, d, "embeddings"), "vec_id", "embedding")
-        .select(col("vec_id"), col("scale"),
-          concat_ws(",", col("codes")).as("codes_csv"))),
-    // quantization-ladder recall vs exact cosine (measured at sf0.01,
-    // self-excluded like every ANN tier: binary 0.25 — sign bits on
-    // uncentered data are the honest coarse tier; int8 ADC 1.0):
-    // boolean-verdict contract like the ivf/pq recall gates
-    "x_ann_quant_recall" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val q = e.where(col("vec_id") < 10)
-      val exact = Similarity.bruteForceTopK(q, e, "vec_id", "vec_id", "embedding", 10)
-      val bin = Similarity.binaryTopK(e, "vec_id", "embedding", q, "vec_id", 64, 10)
-      val sq8 = Similarity.sq8TopK(e, "vec_id", "embedding", q, "vec_id", 10)
-      Similarity.recallAt(bin, exact)
-        .agg(count(lit(1)).cast("long").as("n_queries"),
-          (avg(col("recall")) >= 0.15).as("bin_recall_ge_015"))
-        .crossJoin(Similarity.recallAt(sq8, exact)
-          .agg((avg(col("recall")) >= 0.8).as("sq8_recall_ge_080")))
-    }),
-    // int8 ADC top-10 for 5 queries — scores (scale_q*scale_c)*codedot
-    // are bit-identical cross-engine (integer dot + two IEEE
-    // multiplies), so ranks replay exactly in the oracle
-    "x_ann_sq8" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      Similarity.sq8TopK(e, "vec_id", "embedding",
-        e.filter(col("vec_id") < 5), "vec_id", k = 10)
-    }),
-    // binary-quantized hamming top-10 for 5 queries; sign bits packed
-    // into 32-bit words so every intermediate is exact on both engines
-    "x_ann_binary" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      Similarity.binaryTopK(emb, "vec_id", "embedding",
-        emb.filter(col("vec_id") < 5), "vec_id", dim = 64, k = 10)
-    }),
-    // concat-and-chunk context windows: per-source token streams with
-    // eod markers cut at 50 tokens; the oracle replays cumulative
-    // offsets + integer-division window ids over an exploded stream
-    "x_pack_windows" -> ((s, d) =>
-      graft.ops.Packing.chunkWindows(docs(s, d), "doc_id", "source", "text",
-        windowSize = 50)),
-    // temperature rebalancing at alpha=0.5 over the lang classes
-    // (218/75/73/70/64 at sf0.01): keep rate sqrt(n_min/n_c), accept
-    // iff 48-bit md5 prefix < floor(q*2^48) — sqrt/division are IEEE
-    // correctly-rounded, so the oracle's thresholds are bit-identical
-    "x_temperature_sample" -> ((s, d) =>
-      graft.ops.Packing.temperatureSample(
-          docs(s, d).select(col("doc_id"), col("lang")),
-          "doc_id", "lang", alpha = 0.5, seed = 42L)
-        .select(col("doc_id"), col("lang"))),
-    // reproducible training-order shuffle: md5-of-key order into 8
-    // shards; the oracle recomputes the 16-bit md5-prefix shard
-    // assignment per character and replays the within-shard rank
-    "x_shuffle_shards" -> ((s, d) =>
-      graft.ops.Packing.shuffleShards(docs(s, d), "doc_id", nShards = 8, seed = 42L)
-        .select(col("doc_id"), col("shard"), col("pos"))),
-    // Sequence packing (sample packing): greedy fixed-capacity fold in
-    // doc_id order per source shard; the oracle replays the exact fold
-    // with a recursive CTE, so every bin boundary is value-checked
-    "x_pack_sequences" -> ((s, d) =>
-      graft.ops.Packing.packGreedy(docs(s, d), "doc_id", "source", "text",
-        capacity = 400)),
-    // best-fit-decreasing variant: the oracle re-derives the exact
-    // fold with a recursive CTE whose carried state is the LIST of
-    // open-bin remainders (best fit = list_min of the fitting
-    // remainders, tie = first position) — any divergence in order,
-    // tie-break, or remainder arithmetic hash-mismatches
-    "x_pack_sequences_bfd" -> ((s, d) =>
-      graft.ops.Packing.packBestFitDecreasing(docs(s, d), "doc_id", "source", "text",
-        capacity = 400)),
-    // Real BPE tokenizer contract (boolean gate, like the recall
-    // gates — DuckDB cannot replay merge training): corpus-trained
-    // merges must (a) roundtrip every word exactly, (b) never emit
-    // fewer tokens than words, (c) actually compress vs character
-    // count. The per-doc numbers themselves are pinned by BpeSpec.
-    "x_bpe_tokens" -> ((s, d) => {
-      val ds = docs(s, d)
-      val model = graft.ops.Bpe.train(ds, "text", numMerges = 100)
-      model.encodeCounts(ds, "doc_id", "text")
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          min(col("roundtrip_ok")).as("all_roundtrip_ok"),
-          min(col("n_bpe_tokens") >= col("n_words")).as("tokens_ge_words"),
-          (sum(col("n_bpe_tokens")) < sum(col("n_word_chars"))).as("compresses"))
-    }),
-
-    // BYTE-level BPE (round 17, GPT-2/tiktoken family — the boolean
-    // contract shape): the corpus text is deliberately enriched with
-    // punctuation, mixed case, tabs/newlines and multi-byte UTF-8 —
-    // exactly what the word-level op normalizes away — and the
-    // trained model must (a) tile + roundtrip every document
-    // byte-exactly, (b) never emit fewer tokens than pretokens or
-    // more than bytes, (c) actually compress. Hand-computed merges
-    // and fallback behavior are pinned in BpeBytesSpec.
-    "x_bpe_bytes" -> ((s, d) => {
-      val raw = docs(s, d).select(col("doc_id"),
-        concat(lit("Hello, WORLD!  §café … "), col("text"),
-          lit(" #"), col("doc_id"), lit("\t(fin.)\n")).as("text"))
-      val model = graft.ops.BpeBytes.train(raw, "text", numMerges = 150)
-      model.encodeCounts(raw, "doc_id", "text")
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          min(col("roundtrip_ok")).as("all_roundtrip_ok"),
-          min(col("n_tokens") >= col("n_pretokens")).as("tokens_ge_pretokens"),
-          min(col("n_tokens") <= col("n_bytes")).as("tokens_le_bytes"),
-          (sum(col("n_tokens")) < sum(col("n_bytes"))).as("compresses"))
-    }),
-
-    // unigram-LM tokenizer (round 11, the x_bpe_tokens contract
-    // shape): EM-trained Viterbi segmentation must concatenate back
-    // to every word, land between the word count and the character
-    // count, and actually compress — i.e. the trained multi-char
-    // pieces carry real probability mass on this corpus.
-    "x_unigram_tokens" -> ((s, d) => {
-      val ds = docs(s, d)
-      val model = graft.ops.Unigram.train(ds, "text", vocabSize = 400)
-      model.encodeCounts(ds, "doc_id", "text")
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          min(col("roundtrip_ok")).as("all_roundtrip_ok"),
-          min(col("n_pieces") >= col("n_words")).as("pieces_ge_words"),
-          min(col("n_pieces") <= col("n_word_chars")).as("pieces_le_chars"),
-          (sum(col("n_pieces")) < sum(col("n_word_chars"))).as("compresses"))
-    }),
-
-    // WordPiece tokenizer (round 13, completing the BERT/GPT/T5
-    // tokenizer triple): likelihood-scored merges trained on the
-    // corpus, greedy longest-match-first encode with ## continuations
-    // and the published one-[UNK] rules. Boolean contract like its
-    // siblings (DuckDB cannot replay merge training): every word
-    // roundtrips or is [UNK], zero [UNK] on the model's own training
-    // corpus (the alphabet is complete by construction), piece counts
-    // in [words, chars], and the trained pieces actually compress.
-    // The merge criterion and encode rules are hand-pinned in
-    // WordPieceSpec.
-    "x_wordpiece_tokens" -> ((s, d) => {
-      val ds = docs(s, d)
-      val model = graft.ops.WordPiece.train(ds, "text", numMerges = 100)
-      model.encodeCounts(ds, "doc_id", "text")
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          min(col("roundtrip_ok")).as("all_roundtrip_ok"),
-          (sum(col("n_unk")) === 0).as("no_unk_on_own_corpus"),
-          min(col("n_pieces") >= col("n_words")).as("pieces_ge_words"),
-          min(col("n_pieces") <= col("n_word_chars")).as("pieces_le_chars"),
-          (sum(col("n_pieces")) < sum(col("n_word_chars"))).as("compresses"))
-    }),
-    // PII redaction over synthetic planted identifiers (both engines
-    // derive the identical input from doc_id/source, so the redaction
-    // itself is what the hash compares)
-    "x_pii_redact" -> ((s, d) => {
-      val planted = concat(lit("contact "), col("source"), col("doc_id"),
-        lit("@example.com or +1415550"), col("doc_id"),
-        lit(" ip 10.0."), pmod(col("doc_id"), lit(256)), lit(".7 ssn 123-45-6789 "),
-        col("text"))
-      docs(s, d).select(col("doc_id"),
-        TextAnalysis.redactPii(planted).as("redacted"))
-    }),
-    // HTML -> text extraction over synthetic planted pages (the
-    // x_pii_redact pattern: both engines derive the identical page
-    // from doc_id/source/text, so the extraction chain is what the
-    // hash compares). The page plants every rule's trigger: a script
-    // with stray < > operators inside, a style block spanning a
-    // newline, a comment, block closers, <br/>, double-escaped
-    // &amp;amp;, &nbsp;, and the doc's own corpus text inside a div.
-    "x_text_html_extract" -> ((s, d) => {
-      val page = concat(
-        lit("<html> <head><script type=\"text/javascript\">var x = "), col("doc_id"),
-        lit("; if (x < 3 && x > 1) { alert(\"hi\"); }</script><style>p { color: red; }\n.c"), col("doc_id"),
-        lit(" { margin: 0; }</style></head>\n<body><!-- hidden "), col("doc_id"),
-        lit(" --><h1>Doc "), col("doc_id"),
-        lit("</h1><p>From &quot;"), col("source"),
-        lit("&quot; &amp;amp; A&nbsp;B &lt;tag&gt;</p><div> "), col("text"),
-        lit(" </div><br/><ul><li>alpha</li><li>beta</li></ul></body></html>"))
-      docs(s, d).select(col("doc_id"),
-        TextAnalysis.htmlExtract(page).as("extracted"))
-    }),
-    // Script profile: per-id suffixes plant Cyrillic / Han / Arabic
-    // runs of KNOWN length onto the (Latin/ASCII) corpus text, so
-    // every count is corpus-Latin-count + id-derived constants; the
-    // oracle counts Latin letters itself via the RE2 spelling of the
-    // same Unicode property.
-    "x_text_script" -> ((s, d) => {
-      val suffix = when(pmod(col("doc_id"), lit(4)) === 0, " привет мир")
-        .when(pmod(col("doc_id"), lit(4)) === 1, " 中文文本于")
-        .when(pmod(col("doc_id"), lit(4)) === 2, " مرحبا")
-        .otherwise("")
-      val planted = concat(coalesce(col("text"), lit("")), suffix)
-      docs(s, d).select(col("doc_id"),
-        TextAnalysis.scriptProfile(planted).as("p"))
-        .select(col("doc_id"), col("p.n_latin").cast("long").as("n_latin"),
-          col("p.n_cyrillic").cast("long").as("n_cyrillic"),
-          col("p.n_han").cast("long").as("n_han"),
-          col("p.n_arabic").cast("long").as("n_arabic"), col("p.dominant"))
-    }),
-
-    // URL blocklist: four planted URL classes (blocked host subdomain,
-    // blocked path prefix, blocked query pattern, clean) — every rule
-    // type fires and the verdict replays from doc_id arithmetic.
-    "x_url_filter" -> ((s, d) => {
-      val id = col("doc_id")
-      val url = when(pmod(id, lit(5)) === 0, concat(lit("https://ads.tracker.net/x/"), id))
-        .when(pmod(id, lit(5)) === 1, concat(lit("https://ok.org/login/"), id))
-        .when(pmod(id, lit(5)) === 2, concat(lit("https://ok.org/p/"), id, lit("?sessionid=abc")))
-        .otherwise(concat(lit("https://ok.org/page/"), id))
-      docs(s, d).select(id, url.as("url"),
-        graft.ops.DomainCap.urlBlocked(url,
-          Seq("tracker.net"), Seq("/login"), Seq("sessionid=")).as("blocked"))
-    }),
-
-    // Bloom membership: even-id URLs build two filters (2 KiB noisy,
-    // 16 KiB clean); every doc probes both. The oracle REBUILDS the
-    // identical filters with a bitstring aggregate over the same
-    // md5-derived positions and reproduces every verdict — including
-    // the small filter's false positives (3 at sf0.01), which makes
-    // the determinism contract total, not just "no false negatives".
-    "x_bloom_filter" -> ((s, d) => {
-      val dd = docs(s, d)
-      val members = dd.where(pmod(col("doc_id"), lit(2)) === 0)
-        .select(concat(lit("url-"), col("doc_id")).as("key"))
-      val fSmall = graft.ops.Bloom.build(members, "key", 2048, 4)
-      val fBig = graft.ops.Bloom.build(members, "key", 16384, 4)
-      val key = concat(lit("url-"), col("doc_id"))
-      dd.select(col("doc_id"),
-        (pmod(col("doc_id"), lit(2)) === 0).as("member"),
-        graft.ops.Bloom.mightContain(fSmall, 4, key).as("hit_small"),
-        graft.ops.Bloom.mightContain(fBig, 4, key).as("hit_big"))
-    }),
-
-    // Count-Min heavy hitters (round 11, the Bloom sibling): every
-    // corpus token with >= 200 occurrences, found by building the
-    // deterministic d=4 w=1024 sketch in ONE fixed-state aggregation,
-    // prefiltering the token stream at the scan against the sketch
-    // (CMS never undercounts, so the prefilter is lossless), and
-    // exact-counting only the surviving candidates. The oracle
-    // rebuilds the full 4×1024 grid from the same md5 double-hash
-    // arithmetic and replays counts AND estimates — the determinism
-    // contract is total.
-    "x_heavy_hitters" -> ((s, d) => {
-      val toks = docs(s, d)
-        .select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
-      graft.ops.CountMin.heavyHitters(toks, "tok", threshold = 200L, d = 4, w = 1024)
-    }),
-
-    // Bloom-pruned join (round 11): lineitem pruned AT ITS SCAN with
-    // a filter built over a selective orders subset, exact join after
-    // — the oracle is the PLAIN SQL join, because the contract is
-    // "row-for-row identical to the unpruned join" (no false
-    // negatives; the exact join removes the false positives). The
-    // plan shape (prune below the exchange) is asserted in OpsSpec.
-    "x_bloom_join" -> ((s, d) => {
-      val right = t(s, d, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT" && col("o_totalprice") > 150000.0)
-        .select(col("o_orderkey"), col("o_totalprice"))
-      graft.ops.Bloom.prunedJoin(t(s, d, "lineitem"), right, "l_orderkey", "o_orderkey")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"), col("o_totalprice"))
-    }),
-
-    // robots.txt politeness (round 11, RFC 9309): five synthetic
-    // hosts (h4 has no robots row → allowed), four path classes, and
-    // planted robots bodies that exercise every selection rung —
-    // star-group fallback (h0), exact agent match beating a stricter
-    // other-bot group (h1-h3, case-insensitive "GraftBot"),
-    // longest-match allow-over-disallow (/private/ok vs /private),
-    // and a $-anchored wildcard (/*.html$). The oracle replays the
-    // verdicts from the same id arithmetic the bodies were planted
-    // with.
-    "x_robots_filter" -> ((s, d) => {
-      import s.implicits._
-      val cls = pmod(col("doc_id"), lit(4))
-      val urls = docs(s, d).select(col("doc_id"),
-        concat(lit("https://h"), pmod(col("doc_id"), lit(5)), lit(".example.com"),
-          when(cls === 0, concat(lit("/pub/"), col("doc_id")))
-            .when(cls === 1, concat(lit("/private/"), col("doc_id")))
-            .when(cls === 2, concat(lit("/private/ok/"), col("doc_id")))
-            .otherwise(concat(lit("/tmp/"), col("doc_id"), lit(".html")))).as("url"))
-      val starBody = "# h0: star group only\nUser-agent: *\nDisallow: /tmp\n"
-      val botBody = "User-agent: other-bot\nDisallow: /\n\n" +
-        "User-Agent: GraftBot\nDisallow: /private\nAllow: /private/ok\nDisallow: /*.html$\n"
-      val robots = (0 to 3).map(j => (s"h$j.example.com", if (j == 0) starBody else botBody))
-        .toDF("host", "robots_txt")
-      graft.ops.Robots.verdicts(urls, "url", robots, "host", "robots_txt", "graftbot")
-        .select(col("doc_id"), col("url"), col("allowed"))
-    }),
-
-    // member-split WARC scan (round 11): the corpus packed into 8
-    // real .warc.gz files on disk, indexed by the streaming member
-    // walk with a 4 KiB coalescing target (forcing many ranges per
-    // file), then re-read as ranged-fan-out tasks through the
-    // from-spec CRC-verified decode — every response record's uri,
-    // id, status, length, and body digest must replay from corpus
-    // columns exactly as the whole-file scan's do. The boundary
-    // index vs whole-file equivalence and the quarantine contract
-    // are pinned in WarcSpec.
-    "x_warc_split" -> ((s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-warcsplit").toFile
-      val base = dir.getAbsolutePath
-      sharedFixture("warc8", s, d)(
-        Warc.packDocsWarcGz(t(s, d, "documents"), "doc_id", "source", "text", nFiles = 8))
-        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-          rows.foreach { r =>
-            val out = new java.io.FileOutputStream(
-              new java.io.File(base, f"part-${r.getLong(0)}%05d.warc.gz"))
-            try out.write(r.getAs[Array[Byte]](1)) finally out.close()
-          }
-        }
-      val paths = s.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz").load(base).select(col("path"))
-      graft.ops.Warc.splitRecords(paths, "path", targetBytes = 4096)
-        .where(col("warc_type") === "response")
-        .select(
-          regexp_extract(col("target_uri"), "doc/(\\d+)$", 1).cast("long").as("doc_id"),
-          col("record_id"), col("http_status").cast("long").as("status"),
-          col("content_length"), md5(col("body")).as("digest"))
-    }),
-
-    // CDX index generation (round 11): the corpus packed into 8 real
-    // shards, indexed per-member — urlkey (SURT), timestamp, url,
-    // media type, status, payload digest, and the shard bucket all
-    // replay from corpus columns (offset/length are compression-
-    // dependent, so their self-containedness contract is pinned in
-    // CdxSpec by decoding every indexed extent instead).
-    "x_cdx_index" -> ((s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-cdx").toFile
-      val base = dir.getAbsolutePath
-      sharedFixture("warc8", s, d)(
-        Warc.packDocsWarcGz(t(s, d, "documents"), "doc_id", "source", "text", nFiles = 8))
-        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-          rows.foreach { r =>
-            val out = new java.io.FileOutputStream(
-              new java.io.File(base, f"part-${r.getLong(0)}%05d.warc.gz"))
-            try out.write(r.getAs[Array[Byte]](1)) finally out.close()
-          }
-        }
-      val paths = s.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz").load(base).select(col("path"))
-      graft.ops.Cdx.index(paths, "path")
-        .where(col("status") === 200)
-        .select(col("urlkey"), col("timestamp").as("ts"), col("url"), col("mime"),
-          col("status").cast("long").as("status"), col("digest"),
-          regexp_extract(col("filename"), "part-(\\d+)", 1).cast("long").as("file_id"))
-    }),
-
-    // link-graph PageRank (round 11): a planted 29-node host graph
-    // (13 source hosts → 29 targets, 16 dangling — the correction
-    // path is load-bearing, not decorative), 5 power iterations with
-    // damping 0.85; the oracle replays the identical iteration as
-    // unrolled CTEs, so every rank matches to the 6-dp rounding
-    // grain. Mass conservation and the closed-form two-node case are
-    // pinned in PageRankSpec.
-    "x_pagerank" -> ((s, d) => {
-      val edges = docs(s, d).where(pmod(col("doc_id"), lit(4)) =!= 0)
-        .select(concat(lit("h"), pmod(col("doc_id"), lit(13))).as("src"),
-          concat(lit("h"), pmod(col("doc_id") * 7 + 3, lit(29))).as("dst"))
-      graft.ops.PageRank.ranks(edges, "src", "dst", iters = 5)
-        .select(col("node"), round(col("rank"), 6).as("rank"))
-    }),
-
-    // sitemaps.org parse (round 11): even ids get a urlset planting
-    // the protocol's whole field surface — an entity-encoded loc, a
-    // CDATA loc, lastmod/changefreq/priority (one entry with an
-    // INVALID changefreq and out-of-range priority that must null —
-    // the protocol says consumers ignore invalid values), and an
-    // out-of-scope loc exercising the location rule; odd ids get a
-    // sitemapindex (the recursion seam) with one in- and one
-    // out-of-scope child. Every field replays from doc_id
-    // arithmetic; XML well-formedness refusal and the namespace /
-    // DOCTYPE / comment layers are pinned in XmlSpec/SitemapSpec.
-    "x_sitemap_parse" -> ((s, d) => {
-      val id = col("doc_id")
-      val freq = element_at(
-        array(lit("always"), lit("hourly"), lit("daily"), lit("weekly"),
-          lit("monthly"), lit("yearly"), lit("never")),
-        (pmod(id, lit(7)) + 1).cast("int"))
-      val urlset = concat(
-        lit("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<urlset xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">"),
-        lit("<url><loc>https://example.com/s/"), id, lit("/a?x=1&amp;y=2</loc>"),
-        lit("<lastmod>2026-01-0"), pmod(id, lit(9)) + 1, lit("</lastmod>"),
-        lit("<changefreq>"), freq, lit("</changefreq>"),
-        lit("<priority>0."), pmod(id, lit(9)) + 1, lit("</priority></url>"),
-        lit("<url><loc><![CDATA[https://example.com/s/"), id, lit("/c]]></loc>"),
-        lit("<changefreq>sometimes</changefreq><priority>5</priority></url>"),
-        lit("<url><loc>https://other.org/x/"), id, lit("</loc></url>"),
-        lit("</urlset>"))
-      val index = concat(
-        lit("<?xml version=\"1.0\"?><sitemapindex xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">"),
-        lit("<sitemap><loc>https://example.com/s/"), id, lit("/part1.xml</loc>"),
-        lit("<lastmod>2026-02-11</lastmod></sitemap>"),
-        lit("<sitemap><loc>https://example.com/t/"), id, lit("/part2.xml</loc></sitemap>"),
-        lit("</sitemapindex>"))
-      val xml = when(pmod(id, lit(2)) === 0, urlset).otherwise(index)
-      val url = concat(lit("https://example.com/s/"), id, lit("/sitemap.xml"))
-      graft.ops.Sitemap.extract(
-        docs(s, d).select(id, url.as("url"), xml.as("xml")),
-        "doc_id", "url", "xml")
-    }),
-
-    // robots.txt Sitemap directives (round 11): planted bodies mix
-    // user-agent groups, rule lines, a fully-commented Sitemap line
-    // that must NOT surface, a mixed-case SITEMAP key with trailing
-    // whitespace, and group-interleaved placement — extraction is
-    // group-independent per the protocol and every (doc, seq, url)
-    // replays from doc_id arithmetic.
-    "x_robots_sitemaps" -> ((s, d) => {
-      val id = col("doc_id")
-      val body = concat(
-        lit("# planted robots\nUser-agent: *\nDisallow: /private\n"),
-        lit("Sitemap: https://h"), pmod(id, lit(5)), lit(".example.com/sitemap"), id, lit(".xml\n"),
-        lit("User-agent: specialbot\nAllow: /\n"),
-        when(pmod(id, lit(3)) === 0,
-          concat(lit("SITEMAP: https://h"), pmod(id, lit(5)),
-            lit(".example.com/extra"), id, lit(".xml   \n")))
-          .otherwise(lit("")),
-        lit("# Sitemap: https://commented.example.com/never.xml\n"))
-      graft.ops.Robots.sitemapUrls(
-        docs(s, d).select(id.cast("string").as("host"), body.as("robots_txt")),
-        "host", "robots_txt")
-        .select(col("host").cast("long").as("doc_id"), col("seq"), col("sitemap_url"))
-    }),
-
-    // Public-suffix registrable domain (round 11; IDN round 13): ten
-    // host classes against a planted rule set exercising every
-    // selection rung of the published algorithm — plain TLD,
-    // multi-label suffix (co.uk beats uk by label count),
-    // host-equals-suffix (null), wildcard *.ck, the !www.ck exception
-    // at both depths, the default rule for an unknown TLD, and two
-    // IDN classes: a unicode label (bücher → the well-known
-    // xn--bcher-kva, RFC 3492's classic example; constant, so the
-    // oracle replays it as a literal) with mixed case to cover the
-    // fold, and an already-ACE host passing through. Every verdict
-    // replays from doc_id arithmetic; the punycode algorithm itself
-    // is pinned in IdnaSpec against the RFC vectors and java.net.IDN.
-    "x_registrable_domain" -> ((s, d) => {
-      val rules = graft.ops.Psl.parse(Seq(
-        "// planted suffix list", "com", "uk", "co.uk", "*.ck", "!www.ck",
-        "jp", "ac.jp"))
-      val id = col("doc_id")
-      val host = when(pmod(id, lit(10)) === 0, concat(lit("ex"), id, lit(".com")))
-        .when(pmod(id, lit(10)) === 1, concat(lit("www.ex"), id, lit(".com")))
-        .when(pmod(id, lit(10)) === 2, concat(lit("deep.sub.ex"), id, lit(".co.uk")))
-        .when(pmod(id, lit(10)) === 3, lit("co.uk"))
-        .when(pmod(id, lit(10)) === 4, concat(lit("x"), id, lit(".b.ck")))
-        .when(pmod(id, lit(10)) === 5, lit("www.ck"))
-        .when(pmod(id, lit(10)) === 6, concat(lit("a"), id, lit(".www.ck")))
-        .when(pmod(id, lit(10)) === 7, concat(lit("sub"), id, lit(".BÜcher.com")))
-        .when(pmod(id, lit(10)) === 8, concat(lit("a"), id, lit(".xn--bcher-kva.com")))
-        .otherwise(concat(lit("page"), id, lit(".zz")))
-      docs(s, d).select(id, host.as("host"),
-        graft.ops.Psl.registrableDomainCol(host, rules).as("reg_domain"))
-    }),
-
-    // RSS/Atom feed parse (round 11): even ids get an RSS 2.0
-    // channel planting the guid conventions (isPermaLink=false guid
-    // beside an explicit link; a permalink guid standing in as the
-    // link; an identity-less item that must be skipped), odd ids an
-    // Atom feed planting the §4.2.7.2 link-rel rule (alternate
-    // preferred over self, rel-less counts as alternate), published
-    // preferred over updated with the updated fallback, and
-    // whitespace-collapsed summaries. Every field replays from
-    // doc_id arithmetic.
-    "x_feed_parse" -> ((s, d) => {
-      val id = col("doc_id")
-      val rss = concat(
-        lit("<rss version=\"2.0\"><channel><title>C</title>"),
-        lit("<item><title>Post "), id, lit("</title>"),
-        lit("<link>https://example.com/p/"), id, lit("</link>"),
-        lit("<guid isPermaLink=\"false\">id-"), id, lit("</guid>"),
-        lit("<pubDate>Thu, 01 Jan 2026 10:0"), pmod(id, lit(6)), lit(":00 GMT</pubDate>"),
-        lit("<description>From shard "), pmod(id, lit(7)), lit("</description></item>"),
-        lit("<item><guid>https://example.com/g/"), id, lit("</guid></item>"),
-        lit("<item><title>no identity</title></item>"),
-        lit("</channel></rss>"))
-      val atom = concat(
-        lit("<feed xmlns=\"http://www.w3.org/2005/Atom\"><title>F</title>"),
-        lit("<entry><title>Entry "), id, lit("</title>"),
-        lit("<link rel=\"self\" href=\"https://example.com/self/"), id, lit("\"/>"),
-        lit("<link rel=\"alternate\" href=\"https://example.com/a/"), id, lit("\"/>"),
-        lit("<id>tag:example.com,2026:"), id, lit("</id>"),
-        lit("<published>2026-03-0"), pmod(id, lit(9)) + 1, lit("T00:00:00Z</published>"),
-        lit("<updated>2026-04-01T00:00:00Z</updated>"),
-        lit("<summary> spaced   summary "), id, lit(" </summary></entry>"),
-        lit("<entry><title>E2</title><link href=\"https://example.com/b/"), id, lit("\"/>"),
-        lit("<updated>2026-05-01T00:00:00Z</updated><id>t2:"), id, lit("</id></entry>"),
-        lit("</feed>"))
-      val xml = when(pmod(id, lit(2)) === 0, rss).otherwise(atom)
-      graft.ops.Feed.extract(
-        docs(s, d).select(id, xml.as("xml")), "doc_id", "xml")
-    }),
-
-    // HTML link extraction + RFC 3986 resolution (round 11): every
-    // planted page carries the six resolution classes a real crawl
-    // hits — path-absolute, dot-segment relative, bare relative
-    // (href unquoted), query-only, absolute-with-fragment,
-    // protocol-relative — plus a javascript: link that must drop;
-    // odd ids add a <base href> element so BOTH the with-base and
-    // without-base resolution paths are load-bearing. Anchor text
-    // passes through inner-tag strip + entity decode. The oracle
-    // replays every resolved URL, anchor, and document-order seq
-    // from doc_id arithmetic; the §5.4 normal/abnormal vectors are
-    // pinned verbatim in LinksSpec.
-    "x_html_links" -> ((s, d) => {
-      val id = col("doc_id")
-      val page = concat(
-        lit("<html><head><title>d</title>"),
-        when(pmod(id, lit(2)) === 1,
-          lit("<base target=\"_top\" href=\"https://based.org/z/\">"))
-          .otherwise(lit("")),
-        lit("</head><body><a href=\"/doc/"), id, lit("\">root "), id,
-        lit("</a> <a href='../rel/"), id, lit("'>up</a>"),
-        lit("<a class=\"x\" href=g><b>bold</b> g</a>"),
-        lit("<a href=\"?q="), id, lit("&amp;v=2\">q</a>"),
-        lit("<a href=\"https://other.org/p/"), id, lit("#frag\">abs</a>"),
-        lit("<a rel=\"external NOFOLLOW\" href=\"//cdn.net/x/"), id, lit("\">cdn</a>"),
-        lit("<a href=\"javascript:alert(1)\">js</a></body></html>"))
-      val url = concat(lit("https://example.com/a/b/c"), id)
-      graft.ops.Links.extract(
-        docs(s, d).select(id, url.as("url"), page.as("html")),
-        "doc_id", "url", "html")
-    }),
-
-    // Per-domain cap: 7 synthetic hosts derived from doc_id, cap 20
-    // docs per host, earliest-id priority — host extraction AND the
-    // bounded-heap cap both replayed by a windowed oracle. (The
-    // implementation itself has no Window node; the oracle may.)
-    "x_domain_cap" -> ((s, d) => {
-      val urls = docs(s, d).select(col("doc_id"),
-        concat(lit("https://h"), pmod(col("doc_id"), lit(7)),
-          lit(".example.com/p/"), col("doc_id")).as("url"))
-      graft.ops.DomainCap.capPerHost(urls, "url", "doc_id", 20)
-        .select(col("id").as("doc_id"), col("host"), col("kept"))
-    }),
-
-    // Mojibake repair: the corpus text plus a non-ASCII suffix is
-    // put through the bad decode hop (UTF-8 bytes read as sloppy
-    // cp1252 — planted Spark-side by the kernel's own inverse) once
-    // and twice, and the repair must recover the clean string
-    // exactly in both cases while leaving already-clean text
-    // untouched. The oracle only needs the invariant: fixed text ==
-    // the clean concatenation it can derive itself.
-    "x_text_fix_mojibake" -> ((s, d) => {
-      import s.implicits._
-      val base = docs(s, d)
-        .select(col("doc_id").cast("long"),
-          concat(coalesce(col("text"), lit("")), lit(" café — naïve 中文 🙂")).as("clean"))
-        .as[(Long, String)]
-        .map { case (id, clean) =>
-          val g = graft.expr.MojibakeKernel.garble(clean)
-          (id, clean, g, graft.expr.MojibakeKernel.garble(g))
-        }
-        .toDF("doc_id", "clean", "garbled", "double_garbled")
-      base.select(col("doc_id"),
-        TextAnalysis.fixEncoding(col("garbled")).as("fixed"),
-        (TextAnalysis.fixEncoding(col("garbled")) =!= col("garbled")).as("changed"),
-        (TextAnalysis.fixEncoding(col("clean")) === col("clean")).as("stable"),
-        (TextAnalysis.fixEncoding(col("double_garbled")) === col("clean")).as("double_ok"))
-    }),
-
-    // Unicode NFC (round 12): a planted denormalized prefix (combining
-    // marks + the Angstrom sign, cycling by doc_id%4) prepends the
-    // corpus text, and OUR NFC (JDK Normalizer tables) must agree
-    // byte-for-byte with DuckDB's independent utf8proc NFC on the
-    // whole string — a true cross-engine Unicode-table pin, the same
-    // two-implementations discipline as the codec rung.
-    "x_text_nfc" -> ((s, d) => {
-      val m4 = pmod(col("doc_id"), lit(4))
-      val planted = when(m4 === 0, lit("Café "))
-        .when(m4 === 1, lit("Århus "))
-        .when(m4 === 2, lit("Ångström "))
-        .otherwise(lit("À la carte "))
-      docs(s, d).select(col("doc_id"),
-        TextAnalysis.normalizeUnicode(
-          concat(planted, coalesce(col("text"), lit(""))), "NFC").as("text"))
-    }),
-
-    // Unicode NFKC (round 12): DuckDB has no NFKC, so the gate runs
-    // planted-only compatibility cases (ligature, circled digit,
-    // fullwidth letters, superscript, vulgar fraction, unit/numero
-    // signs) whose folds the oracle states as literals — the
-    // corpus-text flow is covered by x_text_nfc above.
-    "x_text_nfkc" -> ((s, d) => {
-      val m4 = pmod(col("doc_id"), lit(4))
-      val planted = when(m4 === 0, lit("ﬁle ①"))
-        .when(m4 === 1, lit("Ｆｕｌｌ"))
-        .when(m4 === 2, lit("x² ½"))
-        .otherwise(lit("㎞ and №"))
-      docs(s, d).select(col("doc_id"),
-        TextAnalysis.normalizeUnicode(planted, "NFKC").as("text"))
-    }),
-
-    // Gopher-rule repetition signals (scan-local struct): this corpus
-    // has no newlines so the line fractions are structurally zero —
-    // the signal the gate actually exercises is symbol_word_ratio;
-    // TransformsSpec pins the line fractions on a multi-line fixture.
-    "x_text_repetition" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
-        TextAnalysis.repetitionStruct(col("text")).as("r"))
-        .select(col("doc_id"), col("r.n_lines").as("n_lines"),
-          round(col("r.dup_line_frac"), 6).as("dup_line_frac"),
-          round(col("r.dup_line_char_frac"), 6).as("dup_line_char_frac"),
-          round(col("r.symbol_word_ratio"), 6).as("symbol_word_ratio"))),
-    // top-2-gram dominance (the aggregation half of the Gopher rules)
-    "x_text_top2gram" -> ((s, d) =>
-      TextAnalysis.topNgramStats(docs(s, d), "doc_id", "text", n = 2)
-        .withColumn("top_ngram_frac", round(col("top_ngram_frac"), 6))),
-    // interpolated bigram (order-2) variant of the perplexity proxy —
-    // the shape KenLM filters generalize; oracle re-derives both LM
-    // tables and the interpolation
-    "x_text_bigram_ppx" -> ((s, d) =>
-      TextAnalysis.bigramNll(docs(s, d), "doc_id", "text")
-        .withColumn("avg_nll", round(col("avg_nll"), 6))),
-    // closed-form NB classifier: the oracle rebuilds priors, the dense
-    // smoothed |V|×C model, and every per-(doc, class) log-posterior
-    "x_text_nb_classify" -> ((s, d) =>
-      TextAnalysis.nbScores(docs(s, d), "doc_id", "lang", "text")
-        .withColumn("log_post", round(col("log_post"), 6))),
-    // fastText-style closed-form linear classifier (boolean accuracy
-    // contract, the x_ann_ivf_recall shape): the synthetic corpus's
-    // lang labels carry no text signal (token distributions track the
-    // class priors), so the gate tests the honest learnable task —
-    // recover a lexical decision boundary ("does the doc contain the
-    // token 'stream'") from hashed n-gram features on a held-out
-    // split. Majority baseline 0.78; the closed-form ridge fit scores
-    // 0.956 — the bound 0.9 separates learning from prior-guessing.
-    // Training reads only even doc_ids; the model must generalize to
-    // the odd half. LinearClassifierSpec pins the exact solver math.
-    "x_text_linear_classify" -> ((s, d) => {
-      val labeled = docs(s, d).withColumn("__y",
-        when(array_contains(TextAnalysis.tokens(col("text")), "stream"),
-          "pos").otherwise("neg"))
-      val m = graft.ops.LinearClassifier.fit(
-        labeled.where(pmod(col("doc_id"), lit(2)) === 0),
-        "doc_id", "__y", "text", nBuckets = 512, lambda = 1e-4)
-      val test = labeled.where(pmod(col("doc_id"), lit(2)) === 1)
-      m.predict(test, "doc_id", "text")
-        .join(test.select(col("doc_id"), col("__y")), Seq("doc_id"))
-        .agg(count(lit(1)).cast("long").as("n_scored"),
-          (avg(when(col("predicted") === col("__y"), 1.0).otherwise(0.0))
-            >= 0.9).as("holdout_acc_ge_090"))
-    }),
-    // TRAINED multi-class language ID (verdict r10 #4): the corpus
-    // text is English-shaped, so the gate PLANTS a six-language
-    // labeled corpus (en/fr/de/es/ru/zh — two phrases per doc drawn
-    // from per-language banks by different doc_id strides, so holdout
-    // pairs differ from training pairs), fits the closed-form
-    // classifier on char-n-gram + script features over the EVEN ids,
-    // and scores the ODD half. Boolean accuracy contract (the
-    // x_text_linear_classify shape): the oracle asserts the holdout
-    // population; the engine measures accuracy >= 0.95 on it.
-    // Non-Latin classes (ru, zh) are exactly what the word-gram
-    // feature space cannot see — LangIdSpec pins that contrast.
-    "x_text_langid" -> ((s, d) => {
-      val langs = langIdLangs
-      val bankLit = typedLit(langs.map(langIdBanks))
-      val bank = element_at(bankLit, (pmod((col("doc_id") / lit(2)).cast("long"), lit(6)) + 1).cast("int"))
-      val p1 = element_at(bank,
-        (pmod((col("doc_id") / lit(6)).cast("long"), lit(8)) + 1).cast("int"))
-      val p2 = element_at(bank,
-        (pmod((col("doc_id") / lit(17)).cast("long") + 3, lit(8)) + 1).cast("int"))
-      val labeled = docs(s, d).select(col("doc_id"),
-        element_at(typedLit(langs), (pmod((col("doc_id") / lit(2)).cast("long"), lit(6)) + 1).cast("int")).as("__lang"),
-        concat_ws(" ", p1, p2).as("__t"))
-      val m = TextAnalysis.langIdFit(
-        labeled.where(pmod(col("doc_id"), lit(2)) === 0),
-        "doc_id", "__lang", "__t", nBuckets = 2048, lambda = 1e-4)
-      val test = labeled.where(pmod(col("doc_id"), lit(2)) === 1)
-      m.predict(test, "doc_id", "__t")
-        .join(test.select(col("doc_id"), col("__lang")), Seq("doc_id"))
-        .agg(count(lit(1)).cast("long").as("n_scored"),
-          (avg(when(col("predicted") === col("__lang"), 1.0).otherwise(0.0))
-            >= 0.95).as("holdout_acc_ge_095"))
-    }),
-    // order-3 rung: BOS-padded uniform scoring positions, one formula
-    // for every token — the oracle rebuilds all four count tables and
-    // replays the interpolation exactly
-    "x_text_trigram_ppx" -> ((s, d) =>
-      TextAnalysis.trigramNll(docs(s, d), "doc_id", "text")
-        .withColumn("avg_nll", round(col("avg_nll"), 6))),
-    // CCNet-style perplexity proxy: unigram LM fit on the corpus, every
-    // document scored by mean negative log-likelihood under it
-    "x_text_unigram_ppx" -> ((s, d) => {
-      val ds = docs(s, d)
-      val lm = TextAnalysis.unigramLogProbs(ds, "text")
-      TextAnalysis.unigramNll(ds, "doc_id", "text", lm)
-        .withColumn("avg_nll", round(col("avg_nll"), 6))
-    }),
-    "x_text_fingerprint" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
-        TextAnalysis.fingerprint(col("text")).as("fingerprint"))),
-    "x_text_ngram_sim" -> ((s, d) => {
-      val docs = SparkEntry.docs(s, d)
-      val a = docs.select(col("doc_id").as("a_id"), col("text").as("__ta"))
-      val b = docs.select(col("doc_id").as("b_id"), col("text").as("__tb"))
-      a.join(b, col("b_id") === col("a_id") + 250)
-        .select(col("a_id"), col("b_id"),
-          Dedup.ngramJaccard(col("__ta"), col("__tb"), 3).as("char_jaccard"))
-    }),
-
-    // ==== extensions: deduplication family ====
-    "x_dedup_exact" -> ((s, d) =>
-      Dedup.exactByFingerprint(t(s, d, "documents"), "text", "doc_id")),
-    // corpus version diff: the "new" version drops doc_id%7==0,
-    // rewrites text for doc_id%5==0, and adds ids 100000+; the diff
-    // must classify every id exactly
-    "x_corpus_diff" -> ((s, d) => {
-      val old = docs(s, d).select(col("doc_id"), col("text"))
-      val newV = old.filter(pmod(col("doc_id"), lit(7)) =!= 0)
-        .select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(5)) === 0, concat(lit("edited "), col("text")))
-            .otherwise(col("text")).as("text"))
-        .unionByName(old.filter(pmod(col("doc_id"), lit(9)) === 0)
-          .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-      Dedup.corpusDiff(old, newV, "doc_id", "text")
-    }),
-    // repeated-span dedup: the corpus has natural cross-doc duplicated
-    // 8-grams, so no planting — every non-canonical occurrence of a
-    // repeated 8-token window loses its tokens; oracle replays the
-    // gram digests, canonical row_number pick, and indexed rebuild
-    "x_dedup_spans" -> ((s, d) =>
-      Dedup.dedupSpans(t(s, d, "documents"), "doc_id", "text", k = 8, minCount = 2)),
-    // true exact-substring dedup (Lee et al. ExactSubstr CUT: every
-    // occurrence of a >= 10-token duplicated substring removed,
-    // including the first); oracle re-derives removed spans exactly
-    "x_dedup_substring" -> ((s, d) =>
-      Dedup.exactSubstrCut(t(s, d, "documents"), "doc_id", "text",
-        minLen = 10, prefilterK = 4)),
-    // corpus-level line dedup: the corpus has no newlines, so the gate
-    // synthesizes multi-line docs (6-word chunks) and plants two
-    // boilerplate lines on doc_id strides; dedupLines must strip every
-    // planted occurrence (df 167/125 >= 100 at sf0.01) and leave the
-    // chunked body intact. The oracle replays chunking, planting,
-    // distinct-doc line counts, and indexed rebuild.
-    "x_dedup_lines" -> ((s, d) => {
-      val toks = split(col("text"), " ")
-      val chunks = transform(
-        sequence(lit(0), ceil(size(toks) / lit(6.0)).cast("int") - 1),
-        i => concat_ws(" ", slice(toks, i * 6 + 1, lit(6))))
-      val noLine = array().cast("array<string>")
-      val lined = concat_ws("\n", concat(
-        when(pmod(col("doc_id"), lit(3)) === 0,
-          array(lit("subscribe to our newsletter today"))).otherwise(noLine),
-        chunks,
-        when(pmod(col("doc_id"), lit(4)) === 0,
-          array(lit("all rights reserved"))).otherwise(noLine)))
-      Dedup.dedupLines(
-          t(s, d, "documents").select(col("doc_id"), lined.as("text")),
-          "doc_id", "text", minDf = 100)
-        .select(col("doc_id"), col("text"), col("n_lines_removed"))
-    }),
-    "x_dedup_minhash" -> ((s, d) =>
-      Dedup.minhashNearDups(t(s, d, "documents"), "doc_id", "text", threshold = 0.7)),
-    // near-dup pairs -> transitive clusters (large-star/small-star);
-    // output: every clustered doc with its canonical (min-id) component
-    "x_dedup_cluster" -> ((s, d) =>
-      Components.connectedComponents(
-        Dedup.minhashNearDups(t(s, d, "documents"), "doc_id", "text", threshold = 0.7))
-        .select(col("id").cast("long").as("doc_id"),
-          col("component").cast("long").as("component"))),
-    // the one-call GROUPS surface of text MinHash dedup (linear
-    // output; see minhashDedupGroups scaladoc): every document gets
-    // the min id reachable through the ≥0.7-jaccard relation, unique
-    // docs keep their own id. The oracle replays the closure with
-    // recursive min-label reachability over the exact all-pairs edge
-    // set — same recall argument as x_dedup_minhash, then left-joins
-    // the full corpus so singleton rows are checked too.
-    "x_dedup_groups" -> ((s, d) =>
-      Dedup.minhashDedupGroups(t(s, d, "documents"), "doc_id", "text", threshold = 0.7)
-        .select(col("doc_id").cast("long").as("doc_id"),
-          col("group_id").cast("long").as("group_id"))),
-    // cross-corpus contamination: documents split into a "train" and
-    // "eval" side by id arithmetic; the op must surface every eval doc
-    // that near-copies a train doc. Oracle = exact all-pairs jaccard
-    // across the split (recall argument: planted cross pairs are all
-    // ≥ 0.9 jaccard, where 16×4 banding recall is ≈ 1 − 4e-8).
-    "x_dedup_contamination" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Dedup.minhashContamination(
-        docs.where(col("doc_id") % 4 === 0), docs.where(col("doc_id") % 4 =!= 0),
-        "doc_id", "doc_id", "text", threshold = 0.7)
-        .select(col("left_id").cast("long").as("eval_id"),
-          col("right_id").cast("long").as("train_id"), col("jaccard"))
-    }),
-    // EXACT n-gram decontamination (the GPT-3 13-gram method): train
-    // docs flagged when any of their distinct lowercase word 13-grams
-    // appears in the held-out quarter. The planted near-dup pairs that
-    // cross the doc_id%4 split are exactly the contaminated set; the
-    // oracle re-derives every gram with DuckDB list lambdas and joins
-    // on the STRINGS, so the Spark side's hash-first join is verified
-    // collision-free, not assumed.
-    "x_ngram_contamination" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Dedup.ngramContamination(
-        docs.where(col("doc_id") % 4 =!= 0), docs.where(col("doc_id") % 4 === 0),
-        "doc_id", "text", n = 13)
-    }),
-    // INCREMENTAL dedup as a checked equivalence, not a scaladoc
-    // claim: the corpus arrives as 3 ingest batches (doc_id % 3 —
-    // planted near-dup pairs deliberately span batch boundaries);
-    // each batch is deduped within itself (minhashNearDups) and
-    // against the standing corpus of earlier batches (the bipartite
-    // minhashContamination shape). The UNION of all per-batch pair
-    // sets must equal the one-shot full-corpus pair set — the oracle
-    // is literally x_dedup_minhash's exact all-pairs SQL, so any
-    // missed cross-batch pair, duplicated pair, or drifted jaccard
-    // hash-mismatches. Works because signatures/banding/verify are
-    // pure functions of content: a pair collides in the bipartite run
-    // iff it collides in the self-join run.
-    "x_dedup_incremental" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val batches = (0 to 2).map(i => docs.where(col("doc_id") % 3 === i))
-      // shared-scan ingest: every batch is tokenized + minhashed
-      // EXACTLY ONCE — its cached signaturesFor frame answers all
-      // three questions (within-batch pairs via selfCheck, pairs vs
-      // the standing corpus via checkSig, and the index advance via
-      // appendSig). The pair sets are identical to the recompute path
-      // (OpsSpec equivalence), so the oracle — the one-shot
-      // full-corpus all-pairs SQL — is unchanged; corpus text is only
-      // point-read for verify candidates.
-      // Sign each batch EXACTLY ONCE and PERSIST the signature frame
-      // (parquet) — the production standing-index story: an ingest
-      // batch's signatures are written to storage at arrival, and
-      // every later question reads the stored rows at scan speed. All
-      // five pair questions — within-batch (selfCheck, from stored
-      // rows) and batch-vs-standing (checkSig; the standing index at
-      // step i is the union of the earlier batches' stored frames,
-      // appendSig's algebra) — then run as ONE union DAG whose
-      // branches and AQE broadcast sub-jobs re-READ the tiny parquet
-      // sig files instead of re-tokenizing text or contending on a
-      // shared cache fill (measured: parquet-backed beats cache-backed
-      // ~3x here, because a union DAG of 5 banded-join branches spawns
-      // dozens of broadcast sub-jobs, each of which would otherwise
-      // pull the whole signature pipeline).
-      val ix0 = Dedup.NearDupIndex.build(batches(0), "doc_id", "text")
-      val ixDir = java.nio.file.Files.createTempDirectory("graft_incr_ix").toString
-      val sigs = batches.zipWithIndex.map { case (b, i) =>
-        val sig = if (i == 0) ix0.sig
-          else Dedup.NearDupIndex.signaturesFor(ix0, b, "doc_id", "text")
-        sig.write.parquet(s"$ixDir/sig$i")
-        s.read.parquet(s"$ixDir/sig$i")
-      }
-      val within = batches.zipWithIndex.map { case (b, i) =>
-        Dedup.NearDupIndex.selfCheck(
-          ix0, sigs(i), b, "doc_id", "text", threshold = 0.7)
-      }
-      val cross = (1 to 2).map { i =>
-        val standing = batches.take(i).reduce(_ unionByName _)
-        val ixI = ix0.copy(sig = sigs.take(i).reduce(_ unionByName _))
-        Dedup.NearDupIndex.checkSig(ixI, sigs(i),
-          batches(i), "doc_id", "text", standing, "doc_id", "text", threshold = 0.7)
-          .select(least(col("batch_id"), col("corpus_id")).as("a_id"),
-            greatest(col("batch_id"), col("corpus_id")).as("b_id"), col("jaccard"))
-      }
-      (within ++ cross).reduce(_ unionByName _)
-    }),
-
-    // md5-hash simhash variant: same banded plan as the xxhash64 scale
-    // path, but the signature is recomputable by the DuckDB oracle
-    "x_dedup_simhash" -> ((s, d) =>
-      Dedup.simhashNearDups(
-        Dedup.simhashMd5(t(s, d, "documents"), "doc_id", "text"), "doc_id",
-        maxDist = 3, bits = 60, bands = 4)
-        .withColumn("hamming", col("hamming").cast("long"))),
-    "x_dedup_embed" -> ((s, d) =>
-      Dedup.embeddingNearDups(t(s, d, "embeddings"), "vec_id", "embedding",
-        threshold = 0.3, bruteForce = true)
-        .withColumn("cosine", round(col("cosine"), 4))),
-    // the scale (sign-LSH bucketed) branch of the same op, oracle-gated
-    // against DuckDB recomputing the identical md5-derived buckets;
-    // dim intentionally NOT passed — exercises the probe-from-data path
-    "x_dedup_embed_lsh" -> ((s, d) =>
-      Dedup.embeddingNearDups(t(s, d, "embeddings"), "vec_id", "embedding",
-        threshold = 0.3, planes = 8, bruteForce = false)
-        .withColumn("cosine", round(col("cosine"), 4))),
-
-    // the one-call GROUPS surface of embedding dedup (linear output —
-    // the x_dedup_groups analogue over vectors): every vector gets the
-    // min id reachable through the ≥0.3-cosine relation over the
-    // md5-derived sign-LSH candidate graph; unpaired vectors keep
-    // their own id. Oracle replays the identical buckets, exact
-    // cosine, and recursive min-label closure, then left-joins the
-    // full corpus so singleton rows are checked too.
-    "x_embed_neardup_groups" -> ((s, d) =>
-      Dedup.embeddingDedupGroups(t(s, d, "embeddings"), "vec_id", "embedding",
-        threshold = 0.3, planes = 8)
-        .select(col("vec_id").cast("long").as("vec_id"),
-          col("group_id").cast("long").as("group_id"))),
-
-    // SemDeDup (Abbas et al. 2023) with md5-derived gate centroids
-    // (the sign-LSH precedent): EVERY stage — scan-local argmax
-    // cell assignment, centroid cosine, and the paper's
-    // upper-triangular drop rule over the (centroid_cos, id) keep
-    // order — replays in SQL, so the complete per-vector verdict
-    // table is hash-gated. Production mode is spherical k-means
-    // (SemDedupSpec pins the planted-twin behavior); the hash mode
-    // shares every line of code after centroid choice.
-    "x_dedup_semantic" -> ((s, d) =>
-      Dedup.semDedup(t(s, d, "embeddings"), "vec_id", "embedding",
-        dim = 64, k = 8, eps = 0.3, centroidMode = "hash")
-        .withColumn("centroid_cos", round(col("centroid_cos"), 6))),
-
-    // SemDeDup with the cell-size cap: cells over 48 rows re-split by
-    // the first p_c bits of the md5-derived 16-plane sign-LSH bucket
-    // (p_c integer-derived from the cell count — the whole re-split,
-    // and so the drop set, replays in SQL). Bounds verify work at
-    // O(N·maxCellSize) where fixed-k SemDeDup is O((N/k)²)·k.
-    "x_dedup_semantic_capped" -> ((s, d) =>
-      Dedup.semDedup(t(s, d, "embeddings"), "vec_id", "embedding",
-        dim = 64, k = 8, eps = 0.3, centroidMode = "hash", maxCellSize = 48)
-        .withColumn("centroid_cos", round(col("centroid_cos"), 6))),
-
-    // embedding-space contamination across an id split: the semantic
-    // sibling of x_dedup_contamination (paraphrased leaks). Oracle
-    // recomputes the identical md5-derived single-table buckets +
-    // exact cross cosine.
-    "x_embed_contamination" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      Dedup.embeddingContamination(
-        e.where(col("vec_id") % 4 === 0), e.where(col("vec_id") % 4 =!= 0),
-        "vec_id", "vec_id", "embedding", threshold = 0.3, planes = 8, dim = 64)
-        .withColumn("cosine", round(col("cosine"), 4))
-    }),
-
-    // multi-table variant of the same gate: 3 independent 6-plane
-    // tables — proves the recall lever (OR over per-table collisions)
-    // is bit-reproducible end to end, not just unit-tested: the
-    // oracle re-derives every table's buckets and ORs the collision
-    // condition.
-    "x_embed_contamination_mt" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      Dedup.embeddingContamination(
-        e.where(col("vec_id") % 4 === 0), e.where(col("vec_id") % 4 =!= 0),
-        "vec_id", "vec_id", "embedding", threshold = 0.3, planes = 6, dim = 64, tables = 3)
-        .withColumn("cosine", round(col("cosine"), 4))
-    }),
-
-    // resize / frame-sample: the stubs are deterministic byte
-    // transforms, so DuckDB re-derives the exact output (documents are
-    // ASCII ⇒ byte offsets = char offsets); payloads compare by md5
-    "x_multimodal_resize" -> ((s, d) =>
-      Multimodal.resize(Multimodal.packText(t(s, d, "documents"), "text"),
-        "doc_id", "media", width = 40, height = 20)
-        .select(col("id"), col("byte_len"), col("width"), col("height"),
-          md5(col("payload")).as("payload_md5"))),
-    "x_multimodal_frames" -> ((s, d) =>
-      Multimodal.frameSample(Multimodal.packText(t(s, d, "documents"), "text"),
-        "doc_id", "media", nFrames = 6, stride = 2)
-        .select(col("id"), col("frame_idx"),
-          octet_length(col("frame")).cast("long").as("frame_len"),
-          md5(col("frame")).as("frame_md5"))),
-
-    // REAL pixel decode round-trip (no stand-in anywhere): each doc's
-    // UTF-8 bytes become the pixels of a 32-wide greyscale PNG,
-    // encoded with a per-row cycling filter (all 5 PNG filter types in
-    // every image), then FULLY decoded — zlib inflate + scanline
-    // unfilter — back to pixels. The oracle recomputes the pixel
-    // stats (order-sensitive rolling hash + sum) straight from the
-    // text bytes, so one wrong pixel anywhere in encode OR decode
-    // hash-mismatches. Encode and decode share no code path
-    // (Deflater/filter-apply vs Inflater/unfilter), and PngSpec
-    // cross-validates both directions against the JDK's independent
-    // ImageIO codec.
-    "x_multimodal_decode" -> ((s, d) =>
-      Multimodal.decodeImagePixels(
-        Multimodal.packTextPng(docs(s, d), "doc_id", "text", width = 32),
-        "id", "media")),
-
-    // WebP VP8L pixel round-trip (round 15, the PNG gate's sibling):
-    // each doc's UTF-8 bytes ride the GREEN channel of a from-spec
-    // VP8L lossless image (flat 8-bit prefix code declared through
-    // the code-length code — the full normal-code header path) and
-    // decode back through prefix-code → ARGB reconstruction. The
-    // oracle recomputes the RGBA stream (0, b, 0, 255) stats straight
-    // from the text bytes; transforms/cache/backrefs/meta-groups are
-    // pinned in WebpSpec with hand-written bitstreams.
-    "x_multimodal_webp_decode" -> ((s, d) =>
-      Multimodal.decodeImagePixels(
-        Multimodal.packTextWebp(docs(s, d), "doc_id", "text", width = 32),
-        "id", "media")),
-
-    // LOSSY WebP (VP8 keyframe) round 16 — the ADPCM gate's contract
-    // on the image side: per-doc quantizer/filter/B_PRED configs, the
-    // in-repo encoder tracks its reconstruction through the decoder's
-    // exact inverse transforms, and the gate asserts byte-exact YUV +
-    // RGB agreement through the full container walk. Lossy coding has
-    // no SQL-replayable byte oracle; the independence pin (byte-exact
-    // both directions against the system libwebp) lives in
-    // WebpVp8Spec / Vp8EncSpec.
-    "x_multimodal_webp_lossy" -> ((s, d) =>
-      Multimodal.webpLossyParity(docs(s, d), "doc_id", "text", width = 32)),
-
-    // …and with an ALPH chunk: per-doc filter method (id%4) and
-    // compression (raw / headerless-VP8L green stream, id%2), muxed
-    // VP8X+ALPH+VP8; alpha coding is LOSSLESS so the gate asserts
-    // exact alpha recovery alongside tracked-RGB parity.
-    "x_multimodal_webp_alpha" -> ((s, d) =>
-      Multimodal.webpAlphaParity(docs(s, d), "doc_id", "text", width = 32)),
-
-    // Animated WebP: film-strip animations built from the text bytes
-    // (16x2 lossless tiles stacked down a 16-wide canvas, every
-    // fourth frame disposing to background), demuxed + composed per
-    // the spec's blend/dispose rules; the oracle replays each
-    // frame's COMPOSED canvas RGBA byte-for-byte from the text.
-    "x_multimodal_webp_anim" -> ((s, d) =>
-      Multimodal.decodeWebpAnimFrames(
-        Multimodal.packTextWebpAnim(docs(s, d), "doc_id", "text"),
-        "id", "media")),
-
-    // Animated GIF: the film-strip construction on the GIF wire (16x1
-    // rows, identity grayscale palette, every fourth frame disposing
-    // to background); same composed-canvas replay as the WebP gate.
-    "x_multimodal_gif_anim" -> ((s, d) =>
-      Multimodal.decodeGifAnimFrames(
-        Multimodal.packTextGifAnim(docs(s, d), "doc_id", "text"),
-        "id", "media")),
-
-    // TIFF baseline pixel round-trip (round 15): greyscale strips,
-    // PackBits RLE, little-endian IFD — same pixel oracle as the PNG
-    // gate (the bytes ARE the text); LZW and the big-endian/strip
-    // variants are pinned in TiffSpec.
-    "x_multimodal_tiff_decode" -> ((s, d) =>
-      Multimodal.decodeImagePixels(
-        Multimodal.packTextTiff(docs(s, d), "doc_id", "text", width = 32),
-        "id", "media")),
-
-    // REAL video-container path: spec-correct MP4 box trees (ftyp +
-    // moov(mvhd + trak(tkhd)) + mdat) whose duration and 16.16
-    // fixed-point track dimensions derive arithmetically from the
-    // text length; Mp4.parse walks the tree back. The oracle needs
-    // only octet_length(text).
-    "x_multimodal_video_meta" -> ((s, d) =>
-      Multimodal.decodeVideoMeta(
-        Multimodal.packTextMp4(t(s, d, "documents"), "doc_id", "text"),
-        "id", "media")),
-
-    // REAL Matroska/EBML path (the MKV sibling of the MP4 gate):
-    // spec-correct EBML trees (EBML header + Segment(Info + Tracks))
-    // with fixed 8-byte size vints, so the container overhead is the
-    // constant 268 bytes and duration/dims derive arithmetically from
-    // the text length; Mkv.parse walks the tree back. The oracle needs
-    // only octet_length(text).
-    "x_multimodal_mkv_meta" -> ((s, d) =>
-      Multimodal.decodeVideoMeta(
-        Multimodal.packTextMkv(t(s, d, "documents"), "doc_id", "text"),
-        "id", "media")),
-
-    // REAL frame-level video path (the MJPEG rung the round-7 verdict
-    // named): spec-correct RIFF/AVI containers whose 00dc chunks are
-    // real baseline JPEGs (JpegEncoder) of known 16×16 gradients,
-    // demuxed by AviCodec and pixel-decoded by JpegCodec. The gate
-    // replays each frame's expected mean luminance analytically
-    // (higher-order functions over sequence(0,255) — exact integer
-    // arithmetic) and asserts every decoded frame lands within the
-    // JPEG DC rounding band (±3); the oracle needs only
-    // octet_length(text) for the frame counts plus the contract
-    // booleans the engine must earn.
-    // MP4 sibling of the MJPEG-AVI gate: identical JPEG frames muxed
-    // into a spec-legal MP4 with full sample tables; the sample walk
-    // must recover per-frame timing (uniform stts at 25 fps → 40 ms
-    // steps) and the stss sync set (every third sample), and each
-    // sliced sample must decode to the same luma expectation.
-    "x_multimodal_mp4_frames" -> ((s, d) => {
-      val frames = Multimodal.decodeMp4Frames(
-        Multimodal.packTextMjpegMp4(t(s, d, "documents"), "doc_id", "text"),
-        "id", "media")
-      val cterm = col("frame_idx") * 80 + pmod(col("id"), lit(5)).cast("int") * 16
-      val expectedMean = aggregate(
-        sequence(lit(0), lit(255)), lit(0L),
-        (acc, i) => acc + shiftright(
-          lit(17) * floor(i / 16).cast("int") + lit(17) * pmod(i, lit(16)) + cterm,
-          2).cast("long")).cast("double") / 256.0
-      frames.withColumn("__exp", expectedMean)
-        .groupBy(col("id"))
-        .agg(count(lit(1)).cast("long").as("n_frames"),
-          min(col("width") === 16 && col("height") === 16 &&
-            col("channels") === 1).as("dims_ok"),
-          (max(abs(col("mean_luma") - col("__exp"))) < 3.0).as("luma_ok"),
-          min(col("time_ms") === col("frame_idx").cast("long") * 40).as("time_ok"),
-          min(col("keyframe") === (pmod(col("frame_idx"), lit(3)) === 0)).as("key_ok"))
-        .select(col("id").as("doc_id"), col("n_frames"),
-          col("dims_ok"), col("luma_ok"), col("time_ok"), col("key_ok"))
-    }),
-
-    // FRAGMENTED MP4 (round 17): the same frames in the streaming
-    // layout — empty stbl, trex defaults, moof/tfhd(default-base-is-
-    // moof)/tfdt/trun(data-offset + per-sample sizes/flags) per two
-    // frames. Same contracts: 40 ms steps, every third GLOBAL frame
-    // sync.
-    "x_multimodal_mp4_frag" -> ((s, d) => {
-      val frames = Multimodal.decodeMp4Frames(
-        Multimodal.packTextMjpegFmp4(t(s, d, "documents"), "doc_id", "text"),
-        "id", "media")
-      val cterm = col("frame_idx") * 80 + pmod(col("id"), lit(5)).cast("int") * 16
-      val expectedMean = aggregate(
-        sequence(lit(0), lit(255)), lit(0L),
-        (acc, i) => acc + shiftright(
-          lit(17) * floor(i / 16).cast("int") + lit(17) * pmod(i, lit(16)) + cterm,
-          2).cast("long")).cast("double") / 256.0
-      frames.withColumn("__exp", expectedMean)
-        .groupBy(col("id"))
-        .agg(count(lit(1)).cast("long").as("n_frames"),
-          min(col("width") === 16 && col("height") === 16 &&
-            col("channels") === 1).as("dims_ok"),
-          (max(abs(col("mean_luma") - col("__exp"))) < 3.0).as("luma_ok"),
-          min(col("time_ms") === col("frame_idx").cast("long") * 40).as("time_ok"),
-          min(col("keyframe") === (pmod(col("frame_idx"), lit(3)) === 0)).as("key_ok"))
-        .select(col("id").as("doc_id"), col("n_frames"),
-          col("dims_ok"), col("luma_ok"), col("time_ok"), col("key_ok"))
-    }),
-
-    // Matroska sibling: the same JPEG frames as Cluster SimpleBlocks
-    // (two per cluster — absolute time must combine the cluster
-    // timestamp with each block's relative offset), keyframes every
-    // third frame, and the LAST frame as a BlockGroup whose keyframe
-    // signal is the absence of a ReferenceBlock.
-    "x_multimodal_mkv_frames" -> ((s, d) => {
-      val frames = Multimodal.decodeMkvFrames(
-        Multimodal.packTextMjpegMkv(t(s, d, "documents"), "doc_id", "text"),
-        "id", "media")
-      val cterm = col("frame_idx") * 80 + pmod(col("id"), lit(5)).cast("int") * 16
-      val expectedMean = aggregate(
-        sequence(lit(0), lit(255)), lit(0L),
-        (acc, i) => acc + shiftright(
-          lit(17) * floor(i / 16).cast("int") + lit(17) * pmod(i, lit(16)) + cterm,
-          2).cast("long")).cast("double") / 256.0
-      frames.withColumn("__exp", expectedMean)
-        .groupBy(col("id"))
-        .agg(count(lit(1)).cast("long").as("n_frames"),
-          min(col("width") === 16 && col("height") === 16 &&
-            col("channels") === 1).as("dims_ok"),
-          (max(abs(col("mean_luma") - col("__exp"))) < 3.0).as("luma_ok"),
-          min(col("time_ms") === col("frame_idx").cast("long") * 40).as("time_ok"),
-          min(col("keyframe") === (pmod(col("frame_idx"), lit(3)) === 0)).as("key_ok"))
-        .select(col("id").as("doc_id"), col("n_frames"),
-          col("dims_ok"), col("luma_ok"), col("time_ok"), col("key_ok"))
-    }),
-
-    // Matroska LACING (round 17): six frames in ONE cluster as three
-    // SimpleBlocks covering all three lacing modes (Xiph 255-runs,
-    // fixed-size over two equal copies, EBML vint+delta). Laced
-    // frames share their block's time (0/40/80 by pairs) and keyframe
-    // signal (only the Xiph block is key); frame 3 is frame 2's copy
-    // so its luma replays frame 2's pattern.
-    "x_multimodal_mkv_laced" -> ((s, d) => {
-      val frames = Multimodal.decodeMkvFrames(
-        Multimodal.packTextMjpegMkvLaced(t(s, d, "documents"), "doc_id", "text"),
-        "id", "media")
-      val fEff = when(col("frame_idx") === 3, lit(2)).otherwise(col("frame_idx"))
-      val cterm = fEff * 80 + pmod(col("id"), lit(5)).cast("int") * 16
-      val expectedMean = aggregate(
-        sequence(lit(0), lit(255)), lit(0L),
-        (acc, i) => acc + shiftright(
-          lit(17) * floor(i / 16).cast("int") + lit(17) * pmod(i, lit(16)) + cterm,
-          2).cast("long")).cast("double") / 256.0
-      frames.withColumn("__exp", expectedMean)
-        .groupBy(col("id"))
-        .agg(count(lit(1)).cast("long").as("n_frames"),
-          min(col("width") === 16 && col("height") === 16 &&
-            col("channels") === 1).as("dims_ok"),
-          (max(abs(col("mean_luma") - col("__exp"))) < 3.0).as("luma_ok"),
-          min(col("time_ms") ===
-            floor(col("frame_idx") / 2).cast("long") * 40).as("time_ok"),
-          min(col("keyframe") === (col("frame_idx") < 2)).as("key_ok"))
-        .select(col("id").as("doc_id"), col("n_frames"),
-          col("dims_ok"), col("luma_ok"), col("time_ok"), col("key_ok"))
-    }),
-
-    "x_multimodal_mjpeg_frames" -> ((s, d) => {
-      val frames = Multimodal.decodeMjpegFrames(
-        Multimodal.packTextMjpegAvi(t(s, d, "documents"), "doc_id", "text"),
-        "id", "media")
-      val cterm = col("frame_idx") * 80 + pmod(col("id"), lit(5)).cast("int") * 16
-      val expectedMean = aggregate(
-        sequence(lit(0), lit(255)), lit(0L),
-        (acc, i) => acc + shiftright(
-          lit(17) * floor(i / 16).cast("int") + lit(17) * pmod(i, lit(16)) + cterm,
-          2).cast("long")).cast("double") / 256.0
-      frames.withColumn("__exp", expectedMean)
-        .groupBy(col("id"))
-        .agg(count(lit(1)).cast("long").as("n_frames"),
-          min(col("width") === 16 && col("height") === 16 &&
-            col("channels") === 1).as("dims_ok"),
-          (max(abs(col("mean_luma") - col("__exp"))) < 3.0).as("luma_ok"))
-        .select(col("id").as("doc_id"), col("n_frames"),
-          col("dims_ok"), col("luma_ok"))
-    }),
-
-    // Perceptual image hash near-dup (DCT pHash → 64-bit signature →
-    // the simhash pigeonhole banding): payloads are planted-class
-    // PNGs (id mod 10 selects a fixed blocky image), so same-class
-    // pairs are byte-identical → hamming 0, and the 10 class images
-    // are low-frequency-distinct (all cross-class distances > 3,
-    // pinned in PhashSpec for every class pair — id-independent, so
-    // the guarantee holds at any scale). The oracle knows the exact
-    // pair set from ids alone.
-    "x_multimodal_phash" -> ((s, d) =>
-      graft.ops.Phash.imageNearDups(
-        sharedFixture("classpng", s, d)(
-          Multimodal.packClassPng(t(s, d, "documents"), "doc_id", classes = 10)),
-        "id", "media", maxDist = 3, bands = 4)
-        .withColumn("hamming", col("hamming").cast("long"))),
-
-    // the GROUPS surface of pHash image dedup (linear output, same
-    // contraction as audio's x_audio_fingerprint_groups): with the
-    // planted class PNGs, same-class images are byte-identical
-    // (hamming 0) and all cross-class pHash distances are > 3
-    // (pinned id-independently in PhashSpec), so each group is
-    // exactly one class and group_id = the class's minimum doc_id —
-    // which the oracle computes with a window min, assuming nothing
-    // about id contiguity.
-    "x_image_neardup_groups" -> ((s, d) =>
-      graft.ops.Phash.imageDedupGroups(
-        sharedFixture("classpng", s, d)(
-          Multimodal.packClassPng(t(s, d, "documents"), "doc_id", classes = 10)),
-        "id", "media", maxDist = 3, bands = 4)
-        .select(col("id").cast("long").as("doc_id"),
-          col("group_id").cast("long").as("group_id"))),
-
-    // Audio fingerprint near-dup (Wang-2003-style spectral landmarks
-    // through the identical-set-collapse + landmark-join pipeline):
-    // clips are 6-frame tone SEQUENCES whose per-frame bin-aligned
-    // frequency is (7c+3f) mod 13 steps above 500 Hz for class
-    // c = id mod 10 — so each class carries exactly 4 distinct
-    // landmarks, same-class pairs share all 4, and the mod-13
-    // arithmetic makes classes 6 or 7 apart share exactly 3 (the
-    // partial-overlap path, NOT just identical sets). At minMatch=3
-    // the full pair set and every n_common value replay from id
-    // arithmetic alone; AudioFingerprintSpec pins the id-independent
-    // class-overlap table.
-    "x_audio_fingerprint" -> ((s, d) =>
-      graft.ops.AudioFingerprint.audioNearDups(
-        sharedFixture("tonewav", s, d)(
-          graft.ops.AudioFingerprint.packToneSequenceWav(
-            t(s, d, "documents"), "doc_id")),
-        "id", "media", minMatch = 3)
-        .withColumnRenamed("a_id", "a_doc").withColumnRenamed("b_id", "b_doc")),
-
-    // The groups (linear-output) surface of the same fingerprint
-    // pipeline: rep-level landmark pairs contract through connected
-    // components, members map through their digest. The planted class
-    // graph's transitive closure is hand-derivable — distance-6/7
-    // edges chain classes {0,1,2,3,6,7,8,9} into ONE component
-    // (0-7-1-8-2-9-3 via 0-6) while classes 4 and 5 stay singleton —
-    // so every clip's group_id replays from id arithmetic.
-    "x_audio_fingerprint_groups" -> ((s, d) =>
-      graft.ops.AudioFingerprint.audioDedupGroups(
-        sharedFixture("tonewav", s, d)(
-          graft.ops.AudioFingerprint.packToneSequenceWav(
-            t(s, d, "documents"), "doc_id")),
-        "id", "media", minMatch = 3)
-        .withColumnRenamed("id", "doc_id")),
-
-    // Spectral audio features (from-spec radix-2 FFT over Hann
-    // frames): payloads are pure 16-bit PCM tones whose frequency is
-    // id-derived AND bin-aligned (multiples of 250 Hz on a
-    // 15.625 Hz grid), so the dominant frequency the FFT must find —
-    // and the centroid/flatness verdicts — replay from the id alone.
-    "x_multimodal_spectral" -> ((s, d) => {
-      val tones = graft.ops.Spectral.packSineWav(t(s, d, "documents"), "doc_id")
-      val freq = lit(500.0) + pmod(col("id"), lit(16)).cast("double") * 250.0
-      graft.ops.Spectral.spectralDf(tones, "id", "media")
-        .select(col("id").as("doc_id"),
-          (lit(500) + pmod(col("id"), lit(16)).cast("int") * lit(250)).as("freq_hz"),
-          col("n_frames").cast("long").as("n_frames"),
-          (abs(col("peak_hz") - freq) <= 16.0).as("peak_ok"),
-          (abs(col("centroid_hz") - freq) <= 50.0).as("centroid_ok"),
-          (col("flatness") < 0.5).as("tonal"))
-    }),
-
-    // REAL audio path: spec-correct 8-bit PCM WAVs built from each
-    // doc's bytes, fully decoded back to samples (AudioPcm), then the
-    // classic integer clip features — peak, energy, zero crossings —
-    // which the oracle re-derives from the text bytes directly
-    // (sample = (byte − 128) · 256; a sign change is b crossing 128).
-    "x_multimodal_audio" -> ((s, d) =>
-      Multimodal.decodeAudioFeatures(
-        Multimodal.packTextWav(t(s, d, "documents"), "doc_id", "text"),
-        "id", "media")),
-
-    // COMPRESSED audio path: the SAME sample values as
-    // x_multimodal_audio ((byte−128)·256, mono) but carried in real
-    // from-spec FLAC streams (fixed prediction + Rice residuals,
-    // per-frame CRC-8/CRC-16, STREAMINFO MD5 of the raw samples;
-    // block size 256 so typical docs span several frames). The oracle
-    // replays every feature from the text bytes — FLAC is lossless,
-    // so one wrong sample anywhere in encode OR decode (prediction,
-    // Rice, channel, CRC, MD5 layers) hash-mismatches. Decode rides
-    // the AudioPcm.decodeAny dispatch the fingerprint/spectral ops
-    // share, so this gate also certifies their compressed-input path.
-    "x_multimodal_flac" -> ((s, d) =>
-      Multimodal.decodeAudioFeatures(
-        Multimodal.packTextFlac(t(s, d, "documents"), "doc_id", "text"),
-        "id", "media")),
-
-    // Ogg container rung (metadata tier, the MKV trick for audio):
-    // real RFC 3533 pages with VERIFIED CRC-32s carrying a
-    // spec-correct Vorbis identification header; channels, rate and
-    // the granule-position duration derive arithmetically from the
-    // text length and the container overhead is the fixed
-    // 86 + ⌊len/255⌋ bytes, so the oracle replays every field from
-    // octet_length(text) alone. Also certifies the decodeAudioMeta
-    // content-sniff ladder (RIFF/WAVE → FLAC STREAMINFO → Ogg).
-    "x_multimodal_ogg_meta" -> ((s, d) =>
-      Multimodal.decodeAudioMeta(
-        Multimodal.packTextOggVorbis(t(s, d, "documents"), "doc_id", "text"),
-        "id", "media")),
-
-    // MPEG-audio frame-sequence rung (metadata tier, the Ogg trick
-    // for MP3 — the most common audio wire format in scraped
-    // corpora): real MPEG-1 Layer III CBR streams with an ID3v2 tag
-    // (syncsafe size, the skip path is load-bearing), per-frame
-    // VERIFIED ISO 11172-3 CRC-16s over header tail + side-info
-    // span, and a conditional ID3v1 trailer; rate and channel mode
-    // derive from the text length and the frame geometry is the
-    // spec's ⌊144·br/sr⌋, so the oracle replays byte_len / channels /
-    // rate / frame-count-exact duration from octet_length(text)
-    // alone. Also certifies the decodeAudioMeta sniff ladder's
-    // fourth rung (RIFF/WAVE → FLAC → Ogg → MPEG).
-    "x_multimodal_mp3_meta" -> ((s, d) =>
-      Multimodal.decodeAudioMeta(
-        Multimodal.packTextMp3(t(s, d, "documents"), "doc_id", "text"),
-        "id", "media")),
-
-    // Zstandard rung (RFC 8878): payloads are compressed by zstd-jni
-    // — the reference C implementation, an independent codebase (the
-    // BMP/GIF ImageIO discipline) — at per-doc levels 1/3/19, with
-    // content checksums on; the from-spec ZstdCodec must reproduce
-    // the exact original bytes (n_bytes + md5 over the decoded
-    // output), which the oracle replays from the text column alone.
-    // One wrong byte anywhere in the FSE/Huffman/sequence machinery
-    // hash-mismatches.
-    "x_multimodal_zstd" -> ((s, d) =>
-      Multimodal.decodeZstdText(
-        Multimodal.packTextZstd(t(s, d, "documents"), "doc_id", "text"),
-        "id", "media")
-        .select(col("id"), col("decoded"), col("n_bytes"),
-          md5(encode(col("text"), "UTF-8")).as("digest"))),
-
-    // zstd DICTIONARY frames (round 15 continuation): each text
-    // compressed by the reference zstd (zstd-jni) at level 19
-    // against a raw-content dictionary cut from the text's own
-    // prefix — the encoder leans hard on dictionary-window matches,
-    // so the byte-exact round trip pins prefix reach, repeat offsets
-    // into the prefix, and the frame floor. Trained STRUCTURED
-    // dictionaries (entropy seeding, id matching, wrong-dict
-    // refusal) are pinned in ZstdCodecSpec.
-    "x_zstd_dict" -> ((s, d) =>
-      graft.ops.ZstdCodec.decodeDictText(
-        graft.ops.ZstdCodec.packTextZstdDict(t(s, d, "documents"), "doc_id", "text"),
-        "id", "payload", "dict")
-        .select(col("id"), col("decoded"), col("n_bytes"),
-          md5(encode(col("text"), "UTF-8")).as("digest"))),
-
-    // xz rung: the LZMA2 format release tarballs and HF shards ship
-    // in — XZ for Java encodes at presets 0/6/9 with the check type
-    // cycling CRC32/CRC64/SHA-256 by id; the from-spec range-coder
-    // stack decodes with every container CRC and the per-block
-    // integrity check verified. Byte-exact by length + md5.
-    "x_multimodal_xz" -> ((s, d) =>
-      graft.ops.XzCodec.decodeXzText(
-        graft.ops.XzCodec.packTextXz(t(s, d, "documents"), "doc_id", "text"))
-        .select(col("id"), col("decoded"), col("n_bytes"),
-          md5(encode(col("text"), "UTF-8")).as("digest"))),
-
-    // .lzma rung (round 13): the legacy ALONE format that predates
-    // the xz container — old release tarballs and 7-Zip exports
-    // still carry it. XZ for Java's LZMAOutputStream encodes (even
-    // ids the known-size header, odd the unknown-size form whose
-    // end-of-stream marker terminates); the same from-spec LZMA core
-    // decodes through the alone header/termination discipline.
-    "x_multimodal_lzma" -> ((s, d) =>
-      graft.ops.XzCodec.decodeLzmaText(
-        graft.ops.XzCodec.packTextLzma(t(s, d, "documents"), "doc_id", "text"))
-        .select(col("id"), col("decoded"), col("n_bytes"),
-          md5(encode(col("text"), "UTF-8")).as("digest"))),
-
-    // Vorbis rung (round 14): the web's dominant free compressed
-    // audio, decoded by the from-spec Vorbis I stack (Ogg packet
-    // demux with page CRCs, codebook huffman + VQ, floor1 curve
-    // synthesis, residue-2 cascade, IMDCT, window lapping, granule
-    // truncation). Fixtures come from the in-repo spec-legal encoder
-    // (the Mkv/Pdf discipline — no Vorbis implementation exists on
-    // this classpath; VorbisSpec pins decoder PCM against an
-    // INDEPENDENT closed-form IMDCT). The verdict surface: stream
-    // facts and the dominant spectral BAND of a steady 256-sample
-    // window — the planted MDCT bin k=(id%13)·8+3 keeps both leakage
-    // bins k,k+1 inside band id%13, so dominance is exact, not
-    // tolerance-tuned.
-    "x_multimodal_vorbis" -> ((s, d) => {
-      import s.implicits._
-      // fan out before the per-doc encode+decode+DFT kernel: the
-      // documents scan is one split at small SFs and the kernel is
-      // the gate's cost, not the scan
-      graft.ops.Vorbis.packTonesOgg(docs(s, d), "doc_id")
-        .as[(Long, Array[Byte])]
-        .map { case (id, payload) =>
-          graft.ops.AudioPcm.decodeAny(payload) match {
-            case Some(clip) if clip.samples.length >= 320 =>
-              val seg = clip.samples.slice(64, 320).map(_.toDouble)
-              val bp = new Array[Double](16)
-              var bin = 1
-              while (bin < 128) {
-                var re = 0.0
-                var im = 0.0
-                var t = 0
-                while (t < seg.length) {
-                  val ph = 2 * math.Pi * bin * t / 256.0
-                  re += seg(t) * math.cos(ph)
-                  im -= seg(t) * math.sin(ph)
-                  t += 1
-                }
-                bp(bin / 8) += re * re + im * im
-                bin += 1
-              }
-              (id, true, clip.channels, clip.sampleRate,
-                clip.samples.length.toLong, bp.indexOf(bp.max))
-            case _ => (id, false, 0, 0, 0L, -1)
-          }
-        }
-        .toDF("doc_id", "ok", "channels", "sample_rate", "n_samples", "band")
-    }),
-
-    // bzip2 rung: the block-sorting format Wikipedia dumps ship in,
-    // commons-compress encoded at block sizes 1/5/9 by id CAPPED at
-    // input size (sub-100 kB docs all get level-1 headers; Bzip2Spec
-    // pins from-spec decoding of 5/9-declared streams), decoded by
-    // the from-spec BWT/MTF/Huffman stack with every block CRC and
-    // the combined stream CRC verified — byte-exact by length + md5.
-    "x_multimodal_bzip2" -> ((s, d) =>
-      graft.ops.Bzip2Codec.decodeBzip2Text(
-        graft.ops.Bzip2Codec.packTextBzip2(t(s, d, "documents"), "doc_id", "text"))
-        .select(col("id"), col("decoded"), col("n_bytes"),
-          md5(encode(col("text"), "UTF-8")).as("digest"))),
-
-    // snappy/lz4 rung: the parquet- and shuffle-codec block formats,
-    // reference-library compressed (snappy-java even ids; lz4-java
-    // fast/high odd ids), decoded by the from-spec block walkers —
-    // byte-exact by length + md5, codec label replayed from id.
-    "x_multimodal_short" -> ((s, d) =>
-      graft.ops.ShortCodecs.decodeShortText(
-        graft.ops.ShortCodecs.packTextShort(t(s, d, "documents"), "doc_id", "text"))
-        .select(col("id"), col("codec"), col("decoded"), col("n_bytes"),
-          md5(encode(col("text"), "UTF-8")).as("digest"))),
-
-    // framed stream layers (round 14): snappy framing (even ids) and
-    // LZ4 frames (odd) written by the INDEPENDENT reference stream
-    // writers (snappy-java / lz4-java), sniffed — not trusted from a
-    // column — and decoded by the from-spec frame walks with every
-    // checksum verified; byte-exact by length + md5.
-    "x_multimodal_framed" -> ((s, d) =>
-      graft.ops.ShortCodecs.decodeFramedText(
-        graft.ops.ShortCodecs.packTextFramed(t(s, d, "documents"), "doc_id", "text"))
-        .select(col("id"), col("codec"), col("decoded"), col("n_bytes"),
-          md5(encode(col("text"), "UTF-8")).as("digest"))),
-
-    // gzip rung (RFC 1952): the x_multimodal_zstd contract with the
-    // JDK's zlib as the independent encoder — levels 1/6/9 plus a
-    // HUFFMAN_ONLY stratum, CRC-32 + ISIZE verified by the from-spec
-    // decoder, byte-exact text round-trip proven by length + md5.
-    "x_multimodal_gzip" -> ((s, d) =>
-      Multimodal.decodeGzipText(
-        Multimodal.packTextGzip(t(s, d, "documents"), "doc_id", "text"),
-        "id", "media")
-        .select(col("id"), col("decoded"), col("n_bytes"),
-          md5(encode(col("text"), "UTF-8")).as("digest"))),
-
-    // brotli rung (RFC 7932, round 13): the remaining major HTTP
-    // content-encoding. No independent JVM encoder exists on the
-    // classpath (unlike zstd-jni/XZ), so the payloads come from the
-    // in-repo conforming stream builder — compressed flat-literal
-    // framing for even ids, uncompressed meta-blocks for odd — and
-    // the INDEPENDENCE pin lives in BrotliSpec: the reference C
-    // implementation's own streams across qualities 0-11 (static
-    // dictionary + word transforms included) must decode
-    // byte-exactly, and the builder framings used here are
-    // md5-pinned to the exact bytes verified against that reference.
-    "x_multimodal_brotli" -> ((s, d) =>
-      graft.ops.Brotli.decodeBrotliText(
-        graft.ops.Brotli.packTextBrotli(t(s, d, "documents"), "doc_id", "text"),
-        "id", "media")
-        .select(col("id"), col("decoded"), col("n_bytes"),
-          md5(encode(col("text"), "UTF-8")).as("digest"))),
-
-    // WARC ingest chain (ISO 28500): documents sharded into 32
-    // warc.gz files — one gzip member per record, warcinfo first, the
-    // Common Crawl layout — then parsed back through the from-spec
-    // gzip decoder and the WARC/HTTP framing walk. The oracle
-    // re-derives every header and body from the corpus columns alone:
-    // record ids (deterministic urn:uuid), Content-Lengths (which
-    // embed the page's byte length twice — once in HTTP, once in
-    // WARC), HTTP status, and an md5 over the full record body. One
-    // framing slip anywhere (member boundary, CRLF discipline,
-    // Content-Length arithmetic) hash-mismatches.
-    "x_warc_records" -> ((s, d) => {
-      val packed = sharedFixture("warc", s, d)(
-        Warc.packDocsWarcGz(t(s, d, "documents"), "doc_id", "source", "text"))
-      Warc.records(packed, "file_id", "payload")
-        .select(col("file_id"), col("warc_type"),
-          when(col("warc_type") === "response",
-            regexp_extract(col("target_uri"), "doc/(\\d+)$", 1).cast("long")).as("doc_id"),
-          col("record_id"), col("http_status").cast("long").as("status"),
-          col("content_length"), md5(col("body")).as("digest"))
-    }),
-
-    // zip ingest: documents sharded into 32 archives — even buckets
-    // stored by our writer, odd buckets DEFLATEd by the JDK's
-    // independent zip writer — re-read through the central-directory
-    // walk with every member CRC-32 verified; names/methods/sizes/
-    // digests all replay from corpus columns.
-    "x_zip_members" -> ((s, d) =>
-      graft.ops.Zip.members(
-        graft.ops.Zip.packDocsZip(t(s, d, "documents"), "doc_id", "text"),
-        "file_id", "payload")
-        .select(col("file_id").cast("long").as("file_id"), col("name"),
-          col("method").cast("long").as("method"), col("size"),
-          md5(col("data")).as("digest"))),
-
-    // Avro ingest (verdict r10 #6): documents sharded into 32 object
-    // container files cycling ALL FOUR write codecs by bucket (null /
-    // deflate / snappy / zstandard), decoded back through the
-    // from-spec container walk + binary datum decoder with sync
-    // markers verified per block; every field, the codec choice, and
-    // the text bytes replay from corpus columns. The Apache reference
-    // library cross-pin (both directions, all six read codecs) lives
-    // in AvroSpec.
-    "x_avro_roundtrip" -> ((s, d) =>
-      graft.ops.Avro.unpackDocsAvro(
-        graft.ops.Avro.packDocsAvro(t(s, d, "documents"),
-          "doc_id", "source", "lang", "text"))
-        .select(col("doc_id"), col("codec"), col("source"), col("lang"),
-          octet_length(col("text")).cast("long").as("n_bytes"),
-          md5(col("text")).as("digest"))),
-
-    // TFRecord ingest (round 12): documents sharded into 8 real
-    // TFRecord files of tf.train.Example records — masked-CRC-32C
-    // framing verified per record, protobuf wire walk, with even
-    // shards writing the packed repeated-scalar form and odd shards
-    // the unpacked per-element form (both decoder paths
-    // load-bearing). The long-format source rows pivot back to one
-    // row per record; every field and the per-shard record order
-    // replay from corpus columns. The JDK CRC32C cross-pin and the
-    // hostile-bytes ladder live in TfRecordSpec.
-    "x_tfrecord_docs" -> ((s, d) => {
-      val packed = graft.ops.TfRecord.packDocsTfr(
-        t(s, d, "documents"), "doc_id", "source", "lang", "text")
-      graft.ops.TfRecord.rows(packed, "file_id", "payload")
-        .groupBy(col("file_id"), col("rec_index"))
-        .agg(
-          max(when(col("feature") === "doc_id", element_at(col("ints"), 1))).as("doc_id"),
-          max(when(col("feature") === "source", col("text"))).as("source"),
-          max(when(col("feature") === "lang", col("text"))).as("lang"),
-          max(when(col("feature") === "text", col("text"))).as("text"))
-        .select(col("doc_id"), col("rec_index").as("seq"),
-          col("source"), col("lang"), col("text"))
-    }),
-
-    // TFRecord float path (round 12): the embeddings table through
-    // FloatList Examples — every float replays through the same
-    // exact-IEEE floor(v * 2^30) serialization as x_safetensors, so
-    // one wrong bit anywhere in the fixed32 little-endian wire
-    // layout hash-mismatches.
-    "x_tfrecord_embed" -> ((s, d) => {
-      val packed = graft.ops.TfRecord.packVecsTfr(
-        t(s, d, "embeddings"), "vec_id", "embedding")
-      graft.ops.TfRecord.rows(packed, "file_id", "payload")
-        .groupBy(col("file_id"), col("rec_index"))
-        .agg(
-          max(when(col("feature") === "vec_id", element_at(col("ints"), 1))).as("vec_id"),
-          max(when(col("feature") === "embedding", size(col("floats"))))
-            .cast("long").as("dim"),
-          max(when(col("feature") === "embedding",
-            array_join(transform(col("floats"),
-              v => floor(v.cast("double") * lit(1073741824.0d)).cast("long").cast("string")),
-              ","))).as("values"))
-        .select(col("vec_id"), col("dim"), col("values"))
-    }),
-
-    // Sentence-level corpus dedup (round 12): CCNet's boilerplate
-    // mode — a newsletter pitch planted in EVERY doc and a promo
-    // sentence shared by each id%5 class both cross min_df = 10 and
-    // vanish; the corpus-text sentence and the per-doc unique tail
-    // survive. Frequencies shuffle as digests, never bodies.
-    "x_dedup_sentences" -> ((s, d) => {
-      val id = col("doc_id")
-      val planted = concat(coalesce(col("text"), lit("")), lit(". "),
-        lit("Subscribe to our newsletter now please."),
-        lit(" Special doc "), pmod(id, lit(5)), lit(" promo offer here."),
-        lit(" Unique tail for doc "), id, lit(" indeed."))
-      graft.ops.Dedup.dedupSentences(
-        docs(s, d).select(id, planted.as("text")), "doc_id", "text", minDf = 10)
-        .select(col("doc_id"), col("text"), col("n_sentences_removed"))
-    }),
-
-    // Bilinear resize (round 12): the standard vision-preprocessing
-    // filter in EXACT integer arithmetic (half-pixel centers, edge
-    // clamp, half-up rounding — no floating point anywhere), so the
-    // oracle re-derives all 16 output pixels of a 2×2 → 4×4 upscale
-    // from the planted corners with its own copy of the quarter-unit
-    // weight table.
-    "x_image_bilinear" -> ((s, d) => {
-      import s.implicits._
-      t(s, d, "documents").select(col("doc_id").cast("long")).as[Long]
-        .flatMap { id =>
-          val p = Array((id % 256).toByte, ((id + 37) % 256).toByte,
-            ((id + 91) % 256).toByte, ((id + 160) % 256).toByte)
-          val img = graft.ops.PngCodec.decode(
-            graft.ops.PngCodec.encode(graft.ops.PngCodec.Image(2, 2, 1, p))).get
-          val r = graft.ops.PngCodec.resizeBilinear(img, 4, 4)
-          for (y <- 0 until 4; x <- 0 until 4)
-            yield (id, x, y, r.pixels(y * 4 + x) & 0xFF)
-        }
-        .toDF("doc_id", "x", "y", "px")
-    }),
-
-    // Boilerplate classification (round 12): a planted page with a
-    // nav bar (pure anchor text — high link density), a heading and
-    // a content paragraph (good), a paragraph with an inline link
-    // (density under the bar — must survive), the corpus text as its
-    // own block (class follows ITS word count, which the oracle
-    // computes from the same rule), and a link-heavy footer; per
-    // block, words + the floor(density·1e6) exact-IEEE serialization
-    // + the verdict all replay.
-    "x_boilerplate" -> ((s, d) => {
-      val id = col("doc_id")
-      val html = concat(
-        lit("<nav><a href=\"/\">Home</a> <a href=\"/a\">About</a></nav>"),
-        lit("<h1>Document number "), id, lit(" overview</h1>"),
-        lit("<p>Read the <a href=\"/s\">full spec</a> for doc "), id,
-        lit(" here now</p><div>"), coalesce(col("text"), lit("")),
-        lit("</div><footer><a>Terms</a> - <a>Privacy</a> (c) "), id, lit("</footer>"))
-      graft.ops.Boilerplate.blocks(
-        docs(s, d).select(id, col("text"), html.as("html")), "doc_id", "html")
-        .select(col("id").as("doc_id"), col("block_idx"), col("n_words"),
-          floor(col("link_density") * lit(1000000.0d)).cast("long").as("density_u"),
-          col("good"))
-    }),
-
-    // HTML table extraction (round 12): real-crawl table markup —
-    // a th header row with an entity, id%3+1 data rows whose
-    // </td>/</tr> CLOSERS are omitted on odd ids (optional by the
-    // HTML spec and widely omitted — the split-by-opening walk must
-    // not care), page furniture around, and a second table on
-    // id%4==0; every cell replays from id arithmetic.
-    "x_html_tables" -> ((s, d) => {
-      val id = col("doc_id")
-      val k = (pmod(id, lit(3)) + 1).cast("int")
-      val closed = pmod(id, lit(2)) === 0
-      val dataRows = array_join(transform(sequence(lit(1), k), r =>
-        when(closed, concat(lit("<tr><td>R"), r, lit("C0:"), id,
-          lit("</td><td>R"), r, lit("C1:"), id, lit("</td></tr>")))
-          .otherwise(concat(lit("<tr><td>R"), r, lit("C0:"), id,
-            lit("<td>R"), r, lit("C1:"), id))), "\n")
-      val html = concat(
-        lit("<p>Intro "), id, lit("</p><table class=\"t\">"),
-        lit("<tr><th>H0</th><th>H1 &amp; more</th></tr>"), dataRows,
-        lit("</table><p>after</p>"),
-        when(pmod(id, lit(4)) === 0,
-          concat(lit("<table><tr><td>T2:"), id, lit("</td></tr></table>")))
-          .otherwise(lit("")))
-      graft.ops.Tables.extract(
-        docs(s, d).select(id, html.as("html")), "doc_id", "html")
-        .select(col("id").as("doc_id"), col("table_idx"), col("row"),
-          col("col"), col("header"), col("text"))
-    }),
-
-    // Sentence segmentation (round 12): the unit sentence-level
-    // corpus ops key on — planted text fires the rule set
-    // (abbreviation suppression for Dr./Mr., the decimal guard on
-    // 3.5, a ?! terminator run, a newline hard boundary ahead of a
-    // lowercase start); every boundary replays as oracle literals.
-    // Rule generality (initials, closers, no-terminator text) is
-    // pinned in SentencesSpec.
-    "x_sentences" -> ((s, d) => {
-      val id = col("doc_id")
-      val text = concat(
-        lit("Dr. Smith met Mr. Jones at 3.5 km. Doc "), id,
-        lit(" has "), pmod(id, lit(7)), lit(" parts. Was it useful?! Yes.\nthe end of doc "), id)
-      graft.ops.Sentences.split(
-        docs(s, d).select(id, text.as("text")), "doc_id", "text")
-        .select(col("id").as("doc_id"), col("seq"), col("sentence"), col("n_chars"))
-    }),
-
-    // Sentence-boundary RAG chunking (round 12): uniform 14-char
-    // planted sentences at maxChars = 30 / overlap = 1 make the
-    // packing arithmetic exact — id%4+2 sentences fold into id%4+1
-    // two-sentence chunks with a one-sentence carry.
-    "x_sentence_chunks" -> ((s, d) => {
-      val id = col("doc_id")
-      val k = (pmod(id, lit(4)) + 2).cast("int")
-      val text = array_join(transform(sequence(lit(0), k - 1),
-        i => concat(lit("S"), i, lit(" xxxxxxxxxx."))), " ")
-      graft.ops.Sentences.chunkBySentence(
-        docs(s, d).select(id, text.as("text")), "doc_id", "text",
-        maxChars = 30, overlap = 1)
-        .select(col("id").as("doc_id"), col("chunk"), col("text"), col("n_sentences"))
-    }),
-
-    // CBOR (round 12): the third wire-protocol family (RFC 8949,
-    // beside Avro's schema'd binary and protobuf's tagged wire) —
-    // one CBOR document per row from id arithmetic, definite and
-    // indefinite strings/containers alternating by id parity, the
-    // float width cycling through half/single/double, a tagged item
-    // for major type 6; every flattened (path, kind, value) row
-    // replays. The RFC Appendix A vector table is pinned in CborSpec.
-    "x_cbor_decode" -> ((s, d) => {
-      val packed = graft.ops.Cbor.packDocsCbor(t(s, d, "documents"), "doc_id")
-      graft.ops.Cbor.rows(packed, "doc_id", "payload")
-        .select(col("id").as("doc_id"), col("path"), col("kind"), col("value"))
-    }),
-
-    // MessagePack (round 12): CBOR's sibling binary-JSON wire format
-    // (Redis dumps, Fluentd logs) — the long string on odd ids
-    // forces str8 beside fixstr, the float width cycles, and a
-    // fixext4 covers the ext family; every flattened row replays.
-    "x_msgpack_decode" -> ((s, d) => {
-      val packed = graft.ops.MsgPack.packDocsMsgPack(t(s, d, "documents"), "doc_id")
-      graft.ops.MsgPack.rows(packed, "doc_id", "payload")
-        .select(col("id").as("doc_id"), col("path"), col("kind"), col("value"))
-    }),
-
-    // Parquet footer metadata (round 12): the from-spec Thrift
-    // compact-protocol walk over three REAL testdata footers
-    // (documents / embeddings / orders — flat, nested-list, and
-    // date-bearing schemas) cross-pinned against DuckDB's
-    // independent parquet reader: every row-group size, column path
-    // (including the nested "embedding, list, element" leaf), codec
-    // name, offset, and byte count must agree.
-    // Delta transaction-log replay (round 13): one synthetic commit
-    // per document — a metaData line, an add for part-<id>.parquet
-    // with the doc's source as its partition value and stats on even
-    // ids, a self-remove when id%5==3 (the file must NOT be active),
-    // and a remove + re-add with a different size when id%5==4 (the
-    // resurrect rule: the LAST add wins). id%7==0 paths arrive
-    // percent-encoded (%2D for the dash) and must decode. Every
-    // active-file row replays from id arithmetic; protocol gating,
-    // ordering, and the end-to-end parquet read are pinned in
-    // DeltaLogSpec.
-    "x_delta_log" -> ((s, d) => {
-      val id = col("doc_id")
-      val path = when(pmod(id, lit(7)) === 0,
-        concat(lit("part%2D"), id, lit(".parquet")))
-        .otherwise(concat(lit("part-"), id, lit(".parquet")))
-      val addLine = concat(
-        lit("{\"add\":{\"path\":\""), path,
-        lit("\",\"partitionValues\":{\"src\":\""), coalesce(col("source"), lit("")),
-        lit("\"},\"size\":"), id + 1000,
-        lit(",\"modificationTime\":"), id * 1000,
-        lit(",\"dataChange\":true"),
-        when(pmod(id, lit(2)) === 0,
-          concat(lit(",\"stats\":\"{\\\"numRecords\\\":"), id, lit("}\"")))
-          .otherwise(lit("")),
-        lit("}}"))
-      val removeLine = concat(
-        lit("{\"remove\":{\"path\":\"part-"), id,
-        lit(".parquet\",\"deletionTimestamp\":1}}"))
-      val readdLine = concat(
-        lit("{\"add\":{\"path\":\"part-"), id,
-        lit(".parquet\",\"partitionValues\":{\"src\":\""), coalesce(col("source"), lit("")),
-        lit("\"},\"size\":"), id + 2000,
-        lit(",\"modificationTime\":"), id * 1000 + 1,
-        lit(",\"dataChange\":true}}"))
-      val content = concat(
-        lit("{\"metaData\":{\"id\":\"tbl\",\"schemaString\":\"{}\",\"partitionColumns\":[\"src\"]}}\n"),
-        lit("{\"protocol\":{\"minReaderVersion\":1,\"minWriterVersion\":2}}\n"),
-        addLine,
-        when(pmod(id, lit(5)) === 3, concat(lit("\n"), removeLine))
-          .when(pmod(id, lit(5)) === 4,
-            concat(lit("\n"), removeLine, lit("\n"), readdLine))
-          .otherwise(lit("")))
-      graft.ops.DeltaLog.activeFiles(
-        docs(s, d).select(id.as("version"), content.as("content")),
-        "version", "content")
-    }),
-
-    // Delta CHECKPOINT-seeded replay (round 14): a synthetic
-    // checkpoint-parquet action set (one add per document —
-    // cp-<id>.parquet, partition src, stats on even ids — plus the
-    // metaData/protocol rows and a remove TOMBSTONE per doc that must
-    // stay inactive) at version 1e6, then post-checkpoint JSON
-    // commits replayed on top: id%4==1 removed, id%4==2 removed and
-    // re-added with a new size (the resurrect rule through a
-    // checkpoint seed), id%4==3 adds a second file — percent-encoded
-    // (%2D) when also id%3==0 — and id%4==0 commits only a
-    // commitInfo line (the ignored-action path). A stale commit at
-    // the checkpoint version itself must be skipped. The end-to-end
-    // file layout (_last_checkpoint, multi-part parts, refusals) is
-    // pinned in DeltaLogSpec.
-    "x_delta_checkpoint" -> ((s, d) => {
-      val id = col("doc_id")
-      val dd = docs(s, d)
-      val cpAdds = dd.select(struct(
-        concat(lit("cp-"), id, lit(".parquet")).as("path"),
-        map(lit("src"), coalesce(col("source"), lit(""))).as("partitionValues"),
-        (id + 500).cast("long").as("size"),
-        (id * 10).cast("long").as("modificationTime"),
-        when(pmod(id, lit(2)) === 0,
-          concat(lit("{\"numRecords\":"), id, lit("}")))
-          .otherwise(lit(null).cast("string")).as("stats")).as("add"))
-      val cpTombs = dd.select(struct(
-        concat(lit("gone-"), id, lit(".parquet")).as("path")).as("remove"))
-      val cpFurniture = s.sql(
-        "SELECT named_struct('id','tbl','schemaString','{}','partitionColumns',array('src')) AS metaData")
-        .unionByName(
-          s.sql("SELECT named_struct('minReaderVersion', CAST(1 AS BIGINT)) AS protocol"),
-          allowMissingColumns = true)
-      val checkpoint = cpAdds
-        .unionByName(cpTombs, allowMissingColumns = true)
-        .unionByName(cpFurniture, allowMissingColumns = true)
-      val newPath = when(pmod(id, lit(3)) === 0,
-          concat(lit("new%2D"), id, lit(".parquet")))
-        .otherwise(concat(lit("new-"), id, lit(".parquet")))
-      val removeLine = concat(lit("{\"remove\":{\"path\":\"cp-"), id,
-        lit(".parquet\",\"deletionTimestamp\":1}}"))
-      val readdLine = concat(
-        lit("{\"add\":{\"path\":\"cp-"), id,
-        lit(".parquet\",\"partitionValues\":{\"src\":\""), coalesce(col("source"), lit("")),
-        lit("\"},\"size\":"), id + 9000,
-        lit(",\"modificationTime\":"), id * 10 + 7,
-        lit(",\"dataChange\":true}}"))
-      val newAddLine = concat(
-        lit("{\"add\":{\"path\":\""), newPath,
-        lit("\",\"partitionValues\":{\"src\":\""), coalesce(col("source"), lit("")),
-        lit("\"},\"size\":"), id + 77,
-        lit(",\"modificationTime\":"), id * 10 + 3,
-        lit(",\"dataChange\":true,\"stats\":\"{\\\"numRecords\\\":1}\"}}"))
-      val content =
-        when(pmod(id, lit(4)) === 1, removeLine)
-          .when(pmod(id, lit(4)) === 2, concat(removeLine, lit("\n"), readdLine))
-          .when(pmod(id, lit(4)) === 3, newAddLine)
-          .otherwise(lit("{\"commitInfo\":{\"operation\":\"WRITE\"}}"))
-      val commits = dd.select((id + 1000001L).as("version"), content.as("content"))
-        .unionByName(dd.limit(1).select(lit(1000000L).as("version"),
-          lit("{\"add\":{\"path\":\"stale.parquet\",\"partitionValues\":{},\"size\":1,\"modificationTime\":0}}").as("content")))
-      graft.ops.DeltaLog.activeFilesFromCheckpoint(
-        checkpoint, commits, "version", "content", 1000000L)
-    }),
-
-    // Delta DELETION VECTORS (round 15): a real on-disk Delta table —
-    // four bucket files (bucket = doc_id%4, partition column),
-    // protocol v3 + deletionVectors, and id%7==0 rows deleted via DVs
-    // exercising all three storages ('u' file-by-UUID on bucket 0,
-    // 'p' absolute path with run containers on bucket 1, 'i' inline
-    // on bucket 2; bucket 3 untouched). readTable must decode the
-    // portable RoaringBitmapArray blobs and anti-join the positions
-    // against _metadata.row_index; the oracle replays the survivor
-    // set from the delete rule.
-    "x_delta_dv" -> ((s, d) => {
-      val dir = sharedDir("delta_dv", d)(
-        graft.ops.TableFixtures.writeDeltaDvTable(s, t(s, d, "documents"), "doc_id"))
-      graft.ops.DeltaLog.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"), col("bucket"))
-    }),
-
-    // Delta COLUMN MAPPING, name mode (round 15): data files carry
-    // physical parquet names (col-1..col-3), the log's schemaString
-    // maps them back to logical ones, and the partition column's
-    // partitionValues key by its PHYSICAL name — the read must come
-    // back fully logical.
-    "x_delta_cm" -> ((s, d) => {
-      val dir = sharedDir("delta_cm", d)(
-        graft.ops.TableFixtures.writeDeltaCmTable(s, t(s, d, "documents"), "doc_id"))
-      graft.ops.DeltaLog.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"), col("parity"))
-    }),
-
-    // Delta ID-mode column mapping (round 15 continuation): the
-    // parquet files carry field ids under column names that
-    // deliberately DIFFER from the metadata physicalNames, so only
-    // the spec's field-id resolution (footers probed by distributed
-    // ranged tail reads) can read this table — a physical-name
-    // fallback would fail loudly, and the oracle replays the same
-    // logical rows as the name-mode gate.
-    "x_delta_cm_id" -> ((s, d) => {
-      val dir = sharedDir("delta_cm_id", d)(
-        graft.ops.TableFixtures.writeDeltaCmIdTable(s, t(s, d, "documents"), "doc_id"))
-      graft.ops.DeltaLog.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"), col("parity"))
-    }),
-
-    // Delta TIME TRAVEL (round 15 continuation): a two-version table
-    // whose version 1 rewrites one bucket WITHOUT the doc_id%5==0
-    // rows — reading AS OF version 0 must return every row, so a
-    // reader that silently serves the latest state hash-mismatches.
-    // The refusal ladder (beyond-log versions, non-contiguous
-    // histories, checkpoints past the target) is pinned in
-    // DeltaLogSpec.
-    "x_delta_time_travel" -> ((s, d) => {
-      val dir = sharedDir("delta_tt", d)(
-        graft.ops.TableFixtures.writeDeltaTtTable(s, t(s, d, "documents"), "doc_id"))
-      graft.ops.DeltaLog.readTable(s, dir, Some(0L))
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // Delta CHANGE DATA FEED (round 16): v0 inserts every doc, v1 is
-    // a CDC commit (update pre/post rows for doc_id%10==0, postimage
-    // n_chars+1000) whose cdc files must SHADOW its dataChange file
-    // rewrite, v2 deletes bucket 1, v3 is a dataChange=false
-    // compaction contributing nothing. The oracle replays all four.
-    "x_delta_cdf" -> ((s, d) => {
-      val dir = sharedDir("delta_cdf", d)(
-        graft.ops.TableFixtures.writeDeltaCdfTable(s, t(s, d, "documents"), "doc_id"))
-      graft.ops.DeltaLog.readChanges(s, dir, 0L, 3L)
-        .select(col("doc_id"), col("source"), col("n_chars"),
-          col("_change_type"), col("_commit_version"), col("_commit_timestamp"))
-    }),
-
-    // Delta TIMESTAMP travel (round 16): the two-version table's
-    // commitInfo lines stamp version 0 at t=1000 ms and version 1
-    // (the bucket rewrite that drops %5 rows) at t=2000 ms; reading
-    // AS OF 1500 must resolve to version 0 — every row.
-    "x_delta_time_travel_ts" -> ((s, d) => {
-      val dir = sharedDir("delta_tt", d)(
-        graft.ops.TableFixtures.writeDeltaTtTable(s, t(s, d, "documents"), "doc_id"))
-      graft.ops.DeltaLog.readTableAt(s, dir, 1500L)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // Delta DATA SKIPPING (round 17, mirroring x_iceberg_prune): the
-    // partitioned table carries real per-file stats (four files =
-    // bucket × id-halves split at cut = max(doc_id)/2); the predicate
-    // prunes the partition conjunct against partitionValues and
-    // min/max-skips the doc_id range against add.stats, so exactly ONE
-    // file opens (PlanShape-asserted in DeltaLogSpec) while the result
-    // equals the full-scan filter the oracle replays.
-    "x_delta_prune" -> ((s, d) => {
-      val dir = sharedDir("delta_part", d)(
-        graft.ops.TableFixtures.writeDeltaPartTable(s, t(s, d, "documents"), "doc_id"))
-      val cut = t(s, d, "documents")
-        .agg(max(col("doc_id").cast("long"))).head().getLong(0) / 2
-      graft.ops.DeltaLog.readTable(s, dir, None,
-        Some(col("bucket") === 1 && col("doc_id") <= cut))
-        .select(col("doc_id"), col("source"), col("n_chars"), col("bucket"))
-    }),
-
-    // Delta APPEND WRITE roundtrip (round 17): the engine's own
-    // writer creates a partitioned table in TWO commits (even parity
-    // at v0, odd at v1 — the append path exercises the compat gate and
-    // contiguous versioning), with real per-file stats in the log;
-    // the engine's own reader replays it and the oracle compares
-    // against the source rows. Stats consumability is asserted in
-    // DeltaWriteSpec (pruned read over the written table).
-    "x_delta_write_roundtrip" -> ((s, d) => {
-      val dir = sharedDir("delta_write", d) {
-        val dest = java.nio.file.Files.createTempDirectory("graft-delta-wr")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"), col("source"),
-          col("n_chars").cast("long").as("n_chars"),
-          pmod(col("doc_id"), lit(2)).cast("string").as("parity"))
-        graft.ops.DeltaWrite.append(s, data.where(col("parity") === "0"), dest, Seq("parity"))
-        graft.ops.DeltaWrite.append(s, data.where(col("parity") === "1"), dest, Seq("parity"))
-        dest
-      }
-      graft.ops.DeltaLog.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"), col("parity"))
-    }),
-
-    // Delta CHECKPOINT WRITER (round 17): three appends around a
-    // checkpoint at v1 — the read must seed from the engine's OWN
-    // checkpoint parquet (cluster-side merge) and replay only the v2
-    // tail; the oracle is every row. Vacuumed-prefix reads and
-    // prune-through-own-checkpoint are pinned in DeltaWriteSpec.
-    "x_delta_write_checkpoint" -> ((s, d) => {
-      val dir = sharedDir("delta_write_cp", d) {
-        val dest = java.nio.file.Files.createTempDirectory("graft-delta-wcp")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"), col("source"),
-          col("n_chars").cast("long").as("n_chars"),
-          pmod(col("doc_id"), lit(3)).cast("string").as("third"))
-        graft.ops.DeltaWrite.append(s, data.where(col("third") === "0"), dest, Seq("third"))
-        graft.ops.DeltaWrite.append(s, data.where(col("third") === "1"), dest, Seq("third"))
-        graft.ops.DeltaWrite.writeCheckpoint(s, dest)
-        graft.ops.DeltaWrite.append(s, data.where(col("third") === "2"), dest, Seq("third"))
-        dest
-      }
-      graft.ops.DeltaLog.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"), col("third"))
-    }),
-
-    // Delta OPEN-ENDED CDF (round 17): "changes since t=2500" with no
-    // end bound — the starting timestamp resolves to the earliest
-    // commit at or after it (v2 at ts 3000), the end defaults to the
-    // log's latest (v3, the dataChange=false compaction contributing
-    // nothing) — so the feed is exactly v2's deletes.
-    "x_delta_cdf_tail" -> ((s, d) => {
-      val dir = sharedDir("delta_cdf", d)(
-        graft.ops.TableFixtures.writeDeltaCdfTable(s, t(s, d, "documents"), "doc_id"))
-      graft.ops.DeltaLog.readChangesAt(s, dir, 2500L, None)
-        .select(col("doc_id"), col("source"), col("n_chars"),
-          col("_change_type"), col("_commit_version"), col("_commit_timestamp"))
-    }),
-
-    // Delta DYNAMIC PARTITION OVERWRITE (round 18): the re-curation
-    // pattern — v0 writes every parity, v1 replaces ONLY the odd
-    // partition with refreshed rows (n_chars + 1000) in one atomic
-    // commit (adds + remove tombstones together); the read must show
-    // the even rows untouched and the odd rows refreshed, with no
-    // stale odd rows surviving. The CDF view of the swap is pinned in
-    // DeltaWriteSpec.
-    "x_delta_overwrite" -> ((s, d) => {
-      val dir = sharedDir("delta_overwrite", d) {
-        val dest = java.nio.file.Files.createTempDirectory("graft-delta-ow")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"), col("source"),
-          col("n_chars").cast("long").as("n_chars"),
-          pmod(col("doc_id"), lit(2)).cast("string").as("parity"))
-        graft.ops.DeltaWrite.append(s, data, dest, Seq("parity"))
-        graft.ops.DeltaWrite.overwrite(s,
-          data.where(col("parity") === "1")
-            .withColumn("n_chars", col("n_chars") + 1000L),
-          dest, Seq("parity"), dynamic = true)
-        dest
-      }
-      graft.ops.DeltaLog.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"), col("parity"))
-    }),
-
-    // Delta COMPACTION (round 18): four small appends, then OPTIMIZE
-    // bin-packs the active files with dataChange=false — same rows,
-    // fewer files, an EMPTY change feed across the compaction
-    // version (asserted in DeltaWriteSpec along with the file-count
-    // drop); the gate pins that the post-compaction read still equals
-    // every row exactly.
-    "x_delta_compact" -> ((s, d) => {
-      val dir = sharedDir("delta_compact", d) {
-        val dest = java.nio.file.Files.createTempDirectory("graft-delta-opt")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"), col("source"),
-          col("n_chars").cast("long").as("n_chars"))
-        (0 to 3).foreach(i => graft.ops.DeltaWrite.append(s,
-          data.where(pmod(col("doc_id"), lit(4)) === i), dest))
-        if (graft.ops.DeltaWrite.compact(s, dest).isEmpty)
-          throw new graft.GraftAnalysisException("compact found nothing to do")
-        dest
-      }
-      graft.ops.DeltaLog.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // Delta TXN IDEMPOTENCE (round 18): appends tagged with an
-    // application transaction (appId, version); replaying an epoch
-    // the table already recorded is a NO-OP — the exactly-once
-    // contract a restarting streaming sink relies on. The oracle is
-    // every row EXACTLY ONCE: a writer that re-applied the replay
-    // would double the odd rows and hash-mismatch.
-    "x_delta_txn" -> ((s, d) => {
-      val dir = sharedDir("delta_txn", d) {
-        val dest = java.nio.file.Files.createTempDirectory("graft-delta-txn")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"), col("source"),
-          col("n_chars").cast("long").as("n_chars"))
-        val even = data.where(col("doc_id") % 2 === 0)
-        val odd = data.where(col("doc_id") % 2 === 1)
-        graft.ops.DeltaWrite.append(s, even, dest, txn = Some(("graft-etl", 0L)))
-        graft.ops.DeltaWrite.append(s, odd, dest, txn = Some(("graft-etl", 1L)))
-        graft.ops.DeltaWrite.append(s, odd, dest, txn = Some(("graft-etl", 1L)))
-        dest
-      }
-      graft.ops.DeltaLog.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // Delta TIMESTAMP-BOUNDS skipping (round 18): the writer records
-    // ISO-millis min/max for a timestamp column (micros-carrying MAX
-    // rounded UP to stay a true bound) and `WHERE ts <= …` — the
-    // single most common pruning predicate — skips on them. Two
-    // id-ordered appends give the files disjoint ts ranges; the
-    // pruned read (file skip + row filter) must equal the plain
-    // filtered read. File-count pruning is asserted in DeltaWriteSpec.
-    "x_delta_ts_skip" -> ((s, d) => {
-      val base = 1700000000000000L // µs; ts = base + doc_id s + 1500 µs
-      val dir = sharedDir("delta_ts_skip", d) {
-        val dest = java.nio.file.Files.createTempDirectory("graft-delta-ts")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"),
-          col("n_chars").cast("long").as("n_chars"),
-          timestamp_micros(lit(base) + col("doc_id").cast("long") * 1000000L
-            + lit(1500L)).as("ts"))
-        val cut = t(s, d, "documents")
-          .agg(max(col("doc_id").cast("long"))).head().getLong(0) / 2
-        graft.ops.DeltaWrite.append(s, data.where(col("doc_id") <= cut), dest)
-        graft.ops.DeltaWrite.append(s, data.where(col("doc_id") > cut), dest)
-        dest
-      }
-      val cut = t(s, d, "documents")
-        .agg(max(col("doc_id").cast("long"))).head().getLong(0) / 2
-      // ts ≤ base + cut s ⟺ doc_id < cut (the +1500 µs pushes the
-      // boundary row above the literal)
-      val bound = java.time.Instant.ofEpochSecond(
-        base / 1000000L + cut, (base % 1000000L) * 1000L)
-      graft.ops.DeltaLog.readTable(s, dir, None, Some(col("ts") <= lit(bound)))
-        .select(col("doc_id"), col("n_chars"))
-    }),
-
-    // Delta MERGE (round 18): upsert by doc_id against a 4-file
-    // table — odd ids update (n_chars + 1000), evens re-keyed past
-    // the id space insert; matched files rewrite, unmatched files
-    // keep their add actions (file-targeting pinned in
-    // DeltaWriteSpec's CDF row counts). An engine that dropped a
-    // kept row, double-applied an update, or missed an insert
-    // hash-mismatches.
-    "x_delta_merge" -> ((s, d) => {
-      val dir = sharedDir("delta_merge", d) {
-        val dest = java.nio.file.Files.createTempDirectory("graft-delta-mg")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"), col("source"),
-          col("n_chars").cast("long").as("n_chars"))
-        (0 to 3).foreach(i => graft.ops.DeltaWrite.append(s,
-          data.where(pmod(col("doc_id"), lit(4)) === i), dest))
-        val maxId = data.agg(max("doc_id")).head().getLong(0)
-        val src = data.where(col("doc_id") % 2 === 1)
-          .withColumn("n_chars", col("n_chars") + 1000L)
-          .unionByName(data.where(col("doc_id") % 2 === 0)
-            .withColumn("doc_id", col("doc_id") + maxId + 1L))
-        graft.ops.DeltaWrite.merge(s, src, dest, Seq("doc_id"))
-        dest
-      }
-      graft.ops.DeltaLog.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // Delta SCHEMA EVOLUTION (round 18): v0 writes a NARROW
-    // generation (doc_id, source — the even ids), v1 merge-appends
-    // the full width (odd ids); the read serves the AUTHORITATIVE
-    // merged schema, null-filling n_chars for the narrow files — a
-    // reader that pins one file's footer schema (the narrow
-    // generation sorts first in the scan list) drops the column and
-    // hash-mismatches.
-    "x_delta_evolve" -> ((s, d) => {
-      val dir = sharedDir("delta_evolve", d) {
-        val dest = java.nio.file.Files.createTempDirectory("graft-delta-ev")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"), col("source"),
-          col("n_chars").cast("long").as("n_chars"))
-        graft.ops.DeltaWrite.append(s,
-          data.where(col("doc_id") % 2 === 0).select("doc_id", "source"), dest)
-        graft.ops.DeltaWrite.append(s,
-          data.where(col("doc_id") % 2 === 1), dest, mergeSchema = true)
-        dest
-      }
-      graft.ops.DeltaLog.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // Delta VACUUM (round 18): after a dynamic overwrite tombstones
-    // the odd partition's originals, vacuum at retention 0 physically
-    // reclaims exactly those files — and the current read is
-    // untouched (active files are never deleted whatever their age).
-    // Never-active / time-travel-breaks contracts are pinned in
-    // DeltaWriteSpec.
-    "x_delta_vacuum" -> ((s, d) => {
-      val dir = sharedDir("delta_vacuum", d) {
-        val dest = java.nio.file.Files.createTempDirectory("graft-delta-vac")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"), col("source"),
-          col("n_chars").cast("long").as("n_chars"),
-          pmod(col("doc_id"), lit(2)).cast("string").as("parity"))
-        graft.ops.DeltaWrite.append(s, data, dest, Seq("parity"))
-        graft.ops.DeltaWrite.overwrite(s,
-          data.where(col("parity") === "1")
-            .withColumn("n_chars", col("n_chars") + 1000L),
-          dest, Seq("parity"), dynamic = true)
-        if (graft.ops.DeltaWrite.vacuum(s, dest, retentionMillis = 0L).isEmpty)
-          throw new graft.GraftAnalysisException("vacuum reclaimed nothing")
-        dest
-      }
-      graft.ops.DeltaLog.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"), col("parity"))
-    }),
-
-    // Delta RESTORE (round 18): overwrite refreshes the odd
-    // partition, restore(0) rolls the table back as a NEW commit —
-    // the read equals the ORIGINAL rows again (a restore that missed
-    // a file, re-added a wrong one, or forgot a remove
-    // hash-mismatches). CDF-of-the-rollback and vacuumed-target
-    // refusal are pinned in DeltaWriteSpec.
-    "x_delta_restore" -> ((s, d) => {
-      val dir = sharedDir("delta_restore", d) {
-        val dest = java.nio.file.Files.createTempDirectory("graft-delta-rst")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"), col("source"),
-          col("n_chars").cast("long").as("n_chars"),
-          pmod(col("doc_id"), lit(2)).cast("string").as("parity"))
-        graft.ops.DeltaWrite.append(s, data, dest, Seq("parity"))
-        graft.ops.DeltaWrite.overwrite(s,
-          data.where(col("parity") === "1")
-            .withColumn("n_chars", col("n_chars") + 1000L),
-          dest, Seq("parity"), dynamic = true)
-        graft.ops.DeltaWrite.restore(s, dest, 0L)
-        dest
-      }
-      graft.ops.DeltaLog.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"), col("parity"))
-    }),
-
-    // Delta Z-ORDER compaction (round 18): four id-striped appends
-    // (every file spans the whole doc_id AND n_chars range — nothing
-    // prunes), then OPTIMIZE ZORDER BY (doc_id, n_chars) re-clusters
-    // on the interleaved key; the gate reads through an n_chars
-    // predicate — the NON-leading dimension a linear sort could not
-    // tighten — and must equal the filter replay. File-count pruning
-    // on both dimensions is asserted in DeltaWriteSpec.
-    "x_delta_zorder" -> ((s, d) => {
-      val dir = sharedDir("delta_zorder", d) {
-        val dest = java.nio.file.Files.createTempDirectory("graft-delta-zo")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"),
-          col("n_chars").cast("long").as("n_chars"))
-        (0 to 3).foreach(i => graft.ops.DeltaWrite.append(s,
-          data.where(pmod(col("doc_id"), lit(4)) === i), dest))
-        if (graft.ops.DeltaWrite.compact(s, dest,
-            zOrderBy = Seq("doc_id", "n_chars")).isEmpty)
-          throw new graft.GraftAnalysisException("z-order compact did nothing")
-        dest
-      }
-      val cut = t(s, d, "documents")
-        .agg(max(col("n_chars").cast("long"))).head().getLong(0) / 2
-      graft.ops.DeltaLog.readTable(s, dir, None, Some(col("n_chars") <= cut))
-        .select(col("doc_id"), col("n_chars"))
-    }),
-
-    // STREAMING → ICEBERG sink (round 18): the delta-sink mirror —
-    // one snapshot per epoch, idempotent via the snapshot summary's
-    // epoch marker (crash/replay pinned in StreamingSpec); the
-    // drained table equals the batch input.
-    "x_stream_iceberg_sink" -> ((s, d) => {
-      import graft.streaming.Streaming
-      val dir = sharedDir("stream_iceberg_sink", d) {
-        val base = java.nio.file.Files.createTempDirectory("graft-sis-gate")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"), col("source"),
-          col("n_chars").cast("long").as("n_chars"))
-        data.repartition(2).write.parquet(s"$base/in")
-        val stream = Streaming.fileSource(s, s"$base/in",
-          data.schema, maxFilesPerTrigger = 1)
-        val q = Streaming.startIcebergSink(stream, s"$base/tbl", s"$base/cp",
-          "gate-app", trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        try q.awaitTermination() finally q.stop()
-        s"$base/tbl"
-      }
-      graft.ops.Iceberg.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // STREAMING → DELTA sink (round 18): a file-source stream drains
-    // through foreachBatch into [[DeltaWrite.append]], one table
-    // commit per epoch with a `txn` marker carrying the epoch id —
-    // the crash/replay no-op is pinned in StreamingSpec; the gate
-    // pins that the drained table equals the batch input exactly.
-    "x_stream_delta_sink" -> ((s, d) => {
-      import graft.streaming.Streaming
-      val dir = sharedDir("stream_delta_sink", d) {
-        val base = java.nio.file.Files.createTempDirectory("graft-sds-gate")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"), col("source"),
-          col("n_chars").cast("long").as("n_chars"))
-        data.repartition(2).write.parquet(s"$base/in")
-        val stream = Streaming.fileSource(s, s"$base/in",
-          data.schema, maxFilesPerTrigger = 1)
-        val q = Streaming.startDeltaSink(stream, s"$base/tbl", s"$base/cp",
-          "gate-app", trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        try q.awaitTermination() finally q.stop()
-        s"$base/tbl"
-      }
-      graft.ops.DeltaLog.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // Iceberg v1 manifests (round 14): one spec-schema manifest_entry
-    // Avro container per document (written by the in-repo from-spec
-    // Avro codec, decoded by the same reader the `iceberg` source
-    // uses), entries from id arithmetic — data-<id>-0 DELETED when
-    // id%3==0 else ADDED, an EXISTING second file on even ids — and
-    // the snapshot surface keeps the non-DELETED rows. The end-to-end
-    // table walk (version-hint, metadata json, manifest list, path
-    // remap, refusal ladder) is pinned in IcebergSpec.
-    "x_iceberg_snapshot" -> ((s, d) => {
-      val packed = graft.ops.Iceberg.packDocsManifest(docs(s, d), "doc_id")
-      graft.ops.Iceberg.entriesDf(packed, "id", "payload")
-        .where(col("status") =!= 2)
-        .select(col("id").as("doc_id"), col("status"), col("path"),
-          col("format"), col("record_count"), col("file_size"))
-    }),
-
-    // Iceberg FORMAT-VERSION 2 (round 15): a real on-disk v2 table —
-    // four bucket data files, a position-delete parquet named by a
-    // delete manifest (manifest-list content=1), id%7==0 rows deleted
-    // in EVERY bucket. readTable must anti-join the delete rows'
-    // (file_path, pos) against the data scan's metadata columns; the
-    // oracle replays the survivor set.
-    "x_iceberg_v2" -> ((s, d) => {
-      val dir = sharedDir("iceberg_v2", d)(
-        graft.ops.TableFixtures.writeIcebergV2Table(s, t(s, d, "documents"), "doc_id"))
-      graft.ops.Iceberg.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // Iceberg EQUALITY deletes (round 15 continuation): a real v2
-    // table with two data generations around an equality delete on
-    // doc_id (field id 1) — gen1 (even ids, data sequence 1 INHERITED
-    // from the manifest list), the delete (sequence 2, every id%3==0
-    // value), gen2 (odd ids, sequence 3, written AFTER the delete).
-    // The %3==0 odd rows must SURVIVE: a reader that value-matches
-    // without sequence scoping deletes them and hash-mismatches.
-    // Iceberg SNAPSHOT TRAVEL (round 15 continuation): the v2 table's
-    // snapshot 0 predates the position deletes — reading it by id
-    // must return every row; serving the current snapshot instead
-    // loses the %7 rows and hash-mismatches. Unknown ids refuse by
-    // name (IcebergSpec).
-    "x_iceberg_snapshot_at" -> ((s, d) => {
-      val dir = sharedDir("iceberg_v2", d)(
-        graft.ops.TableFixtures.writeIcebergV2Table(s, t(s, d, "documents"), "doc_id"))
-      graft.ops.Iceberg.readTable(s, dir, Some(0L))
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    "x_iceberg_eq" -> ((s, d) => {
-      val dir = sharedDir("iceberg_eq", d)(
-        graft.ops.TableFixtures.writeIcebergEqTable(s, t(s, d, "documents"), "doc_id"))
-      graft.ops.Iceberg.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // Iceberg FIELD-ID column resolution (round 16): generation A
-    // files predate a column rename (stored names id_v1/src_v1/
-    // chars_v1, field ids 1..3, no parity column); generation B files
-    // carry the current names plus parity (ids 1..4). The spec says
-    // resolve columns by field id — a name-based reader null-fills
-    // generation A's data columns and hash-mismatches. Gen A rows
-    // read parity NULL (the column postdates them).
-    "x_iceberg_rename" -> ((s, d) => {
-      val dir = sharedDir("iceberg_rename", d)(
-        graft.ops.TableFixtures.writeIcebergRenameTable(s, t(s, d, "documents"), "doc_id"))
-      graft.ops.Iceberg.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"), col("parity"))
-    }),
-
-    // Iceberg MANIFEST-LEVEL PARTITION PRUNING (round 16): the
-    // partitioned table's manifest entries carry exact {bucket} tuples
-    // and the metadata the identity spec; a bucket predicate opens
-    // ONLY the matching files (PlanShape-asserted in IcebergSpec) and
-    // is re-applied to the rows, so the result equals a full-scan
-    // filter while reading a quarter of the data.
-    "x_iceberg_prune" -> ((s, d) => {
-      val dir = sharedDir("iceberg_part", d)(
-        graft.ops.TableFixtures.writeIcebergPartTable(s, t(s, d, "documents"), "doc_id"))
-      graft.ops.Iceberg.readTable(s, dir, None,
-        Some(col("bucket") === 1 || col("bucket") === 2))
-        .select(col("doc_id"), col("source"), col("n_chars"), col("bucket"))
-    }),
-
-    // Iceberg COLUMN-BOUNDS file skipping (round 17): the
-    // unpartitioned table's manifest entries carry real Appendix-D
-    // lower/upper bounds per column; a doc_id range predicate opens
-    // ONLY the overlapping quartile file (scan-files-asserted in
-    // IcebergSpec) while the result equals the full-scan filter.
-    "x_iceberg_skip" -> ((s, d) => {
-      val dir = sharedDir("iceberg_skip", d)(
-        graft.ops.TableFixtures.writeIcebergSkipTable(s, t(s, d, "documents"), "doc_id"))
-      val maxId = t(s, d, "documents")
-        .agg(max(col("doc_id").cast("long"))).head().getLong(0)
-      graft.ops.Iceberg.readTable(s, dir, None,
-        Some(col("doc_id") > maxId / 2 && col("doc_id") <= 3 * maxId / 4))
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // Iceberg APPEND WRITE roundtrip (round 17, the DeltaWrite
-    // mirror): the engine's own writer creates the table in TWO
-    // snapshots (even ids, then odd — exercising the carry-forward
-    // manifest merge and the compat gate), range-clustered on doc_id
-    // with real column bounds in the manifests; the engine's own
-    // reader replays the current snapshot. Bounds consumability and
-    // snapshot travel to the first append are pinned in
-    // IcebergWriteSpec.
-    "x_iceberg_write_roundtrip" -> ((s, d) => {
-      val dir = sharedDir("iceberg_write", d) {
-        val dest = java.nio.file.Files.createTempDirectory("graft-ib-wr")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"), col("source"),
-          col("n_chars").cast("long").as("n_chars"))
-        graft.ops.IcebergWrite.append(s, data.where(col("doc_id") % 2 === 0),
-          dest, clusterBy = Seq("doc_id"), numFiles = 2)
-        graft.ops.IcebergWrite.append(s, data.where(col("doc_id") % 2 === 1),
-          dest, clusterBy = Seq("doc_id"), numFiles = 2)
-        dest
-      }
-      graft.ops.Iceberg.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // Iceberg INCREMENTAL APPEND scan (round 17): the diff between
-    // the write fixture's two snapshots is exactly the second
-    // append's rows (odd ids) — the per-poll read an incremental
-    // consumer does; rewrite/delete refusals pinned in
-    // IcebergWriteSpec.
-    "x_iceberg_incremental" -> ((s, d) => {
-      val dir = sharedDir("iceberg_write", d) {
-        val dest = java.nio.file.Files.createTempDirectory("graft-ib-wr")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"), col("source"),
-          col("n_chars").cast("long").as("n_chars"))
-        graft.ops.IcebergWrite.append(s, data.where(col("doc_id") % 2 === 0),
-          dest, clusterBy = Seq("doc_id"), numFiles = 2)
-        graft.ops.IcebergWrite.append(s, data.where(col("doc_id") % 2 === 1),
-          dest, clusterBy = Seq("doc_id"), numFiles = 2)
-        dest
-      }
-      graft.ops.Iceberg.readAppendsBetween(s, dir, 1L, None)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // Iceberg IDENTITY-PARTITIONED write (round 18): the writer emits
-    // a real partition spec + per-entry partition tuples, so the
-    // reader's own manifest partition pruning engages on own-written
-    // tables — the bucket predicate opens only that bucket's files
-    // (inputFiles-asserted in IcebergWriteSpec); the gate pins the
-    // pruned read equals the filter replay.
-    "x_iceberg_write_part" -> ((s, d) => {
-      val dir = sharedDir("iceberg_write_part", d) {
-        val dest = java.nio.file.Files.createTempDirectory("graft-ib-wp")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"), col("source"),
-          col("n_chars").cast("long").as("n_chars"),
-          pmod(col("doc_id"), lit(4)).cast("long").as("bucket"))
-        graft.ops.IcebergWrite.append(s, data, dest, partitionBy = Seq("bucket"))
-        dest
-      }
-      graft.ops.Iceberg.readTable(s, dir, None, Some(col("bucket") === 2L))
-        .select(col("doc_id"), col("source"), col("n_chars"), col("bucket"))
-    }),
-
-    // Iceberg SCHEMA EVOLUTION (round 18): the x_delta_evolve mirror
-    // — narrow v1 (doc_id, source on evens), merge-append widens
-    // (odds); the read projects the evolved schema, null-filling
-    // n_chars for the narrow generation's files, with fresh field ids
-    // for the added column (IcebergWriteSpec pins the metadata shape).
-    "x_iceberg_evolve" -> ((s, d) => {
-      val dir = sharedDir("iceberg_evolve", d) {
-        val dest = java.nio.file.Files.createTempDirectory("graft-ib-ev")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"), col("source"),
-          col("n_chars").cast("long").as("n_chars"))
-        graft.ops.IcebergWrite.append(s,
-          data.where(col("doc_id") % 2 === 0).select("doc_id", "source"), dest)
-        graft.ops.IcebergWrite.append(s,
-          data.where(col("doc_id") % 2 === 1), dest, mergeSchema = true)
-        dest
-      }
-      graft.ops.Iceberg.readTable(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // Iceberg PRUNED incremental scan (round 18): the per-poll diff
-    // composes with the same pruning ladder as the full read — the
-    // appended files that cannot hold matching rows never open; the
-    // result equals the diff filtered row-wise.
-    "x_iceberg_incremental_pruned" -> ((s, d) => {
-      val dir = sharedDir("iceberg_write", d) {
-        val dest = java.nio.file.Files.createTempDirectory("graft-ib-wr")
-          .toFile.getAbsolutePath
-        val data = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("doc_id"), col("source"),
-          col("n_chars").cast("long").as("n_chars"))
-        graft.ops.IcebergWrite.append(s, data.where(col("doc_id") % 2 === 0),
-          dest, clusterBy = Seq("doc_id"), numFiles = 2)
-        graft.ops.IcebergWrite.append(s, data.where(col("doc_id") % 2 === 1),
-          dest, clusterBy = Seq("doc_id"), numFiles = 2)
-        dest
-      }
-      val cut = t(s, d, "documents")
-        .agg(max(col("doc_id").cast("long"))).head().getLong(0) / 2
-      graft.ops.Iceberg.readAppendsBetween(s, dir, 1L, None,
-        Some(col("doc_id") <= cut))
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    // Iceberg TIMESTAMP travel (round 16): the v2 table's
-    // snapshot-log stamps snapshot 0 at t=1000 ms and snapshot 1
-    // (with the position deletes) at t=2000 ms; reading AS OF 1500
-    // must resolve to snapshot 0 — every row, pre-delete.
-    "x_iceberg_at_ts" -> ((s, d) => {
-      val dir = sharedDir("iceberg_v2", d)(
-        graft.ops.TableFixtures.writeIcebergV2Table(s, t(s, d, "documents"), "doc_id"))
-      graft.ops.Iceberg.readTableAt(s, dir, 1500L)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    }),
-
-    "x_parquet_footer" -> ((s, d) => {
-      import s.implicits._
-      val paths = Seq("documents", "embeddings", "orders")
-        .map(tn => s"$d/$tn.parquet").toDF("path")
-      graft.ops.ParquetMeta.meta(paths, "path")
-        .select(
-          regexp_extract(col("path"), "([a-z]+)\\.parquet$", 1).as("tbl"),
-          col("row_group"), col("rg_num_rows"), col("column_id"),
-          col("path_in_schema"), col("type"), col("compression"),
-          col("num_values"), col("dictionary_page_offset"),
-          col("data_page_offset"), col("total_compressed_size"),
-          col("total_uncompressed_size"), col("encodings"))
-    }),
-
-    // Parquet zone-map statistics (round 12): the per-chunk
-    // null_count / min_value / max_value pruning keys on, decoded by
-    // PHYSICAL type (raw stored order) — restricted to the columns
-    // whose DuckDB rendering is physical too (plain INT64 and
-    // BYTE_ARRAY; DuckDB renders date/timestamp-annotated and float
-    // stats through the logical layer, a different surface).
-    "x_parquet_stats" -> ((s, d) => {
-      import s.implicits._
-      val paths = Seq("documents", "orders")
-        .map(tn => s"$d/$tn.parquet").toDF("path")
-      graft.ops.ParquetMeta.meta(paths, "path")
-        .where(col("type").isin("INT64", "BYTE_ARRAY") &&
-          !col("path_in_schema").isin("o_orderdate"))
-        .select(
-          regexp_extract(col("path"), "([a-z]+)\\.parquet$", 1).as("tbl"),
-          col("row_group"), col("path_in_schema"),
-          col("null_count"), col("min_value"), col("max_value"))
-    }),
-
-    // Compression-ratio signal (round 12): the deflate entropy proxy
-    // over two planted extremes — 1000 chars of repeated phrase
-    // (template spam shape, ratio far below 0.3) vs 800 chars of
-    // xorshift-derived printable noise (encoded-junk shape, far
-    // above 0.6). The ratio itself is implementation-defined (a
-    // deflate length), so the gate's contract is the BUCKET — wide
-    // margins on both sides — while determinism, bounds, and
-    // monotonicity are pinned exactly in the spec.
-    "x_compression_ratio" -> ((s, d) => {
-      val packed = {
-        import s.implicits._
-        docs(s, d).select(col("doc_id").cast("long")).as[Long]
-          .mapPartitions(_.map { id =>
-            val text = if (id % 2 == 0) "tokenize the corpus " * 50
-            else {
-              val b = new StringBuilder(800)
-              var st = id * 2654435761L + 1
-              (1 to 800).foreach { _ =>
-                st ^= st << 13; st ^= st >>> 7; st ^= st << 17
-                b.append((33 + java.lang.Math.floorMod(st, 94L)).toChar)
-              }
-              b.toString
-            }
-            (id, text)
-          })
-          .toDF("doc_id", "text")
-      }
-      packed.select(col("doc_id"),
-        when(TextAnalysis.compressionRatio(col("text")) < 0.3, "repetitive")
-          .when(TextAnalysis.compressionRatio(col("text")) > 0.6, "dense")
-          .otherwise("mid").as("entropy_class"))
-    }),
-
-    // EXIF orientation application (round 12): the pixel transform
-    // every image pipeline runs right after reading the tag (and
-    // must run BEFORE pHash/dedup, or the same photo in portrait and
-    // landscape hashes apart). A 5×3 asymmetric gray PNG (lossless,
-    // so pixels are exact) with px(x,y) = (id + 3x + 7y) % 256 goes
-    // through all eight orientations by id%8+1; output dims and
-    // three corner samples replay through the oracle's own copy of
-    // the dest→src maps. The full 8-way pixel maps are pinned in
-    // ExifSpec.
-    "x_exif_orient" -> ((s, d) => {
-      val packed = {
-        import s.implicits._
-        t(s, d, "documents").select(col("doc_id").cast("long")).as[Long]
-          .mapPartitions(_.map { id =>
-            val w = 5; val h = 3
-            val px = new Array[Byte](w * h)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) { px(y * w + x) = ((id + 3 * x + 7 * y) % 256).toByte; x += 1 }
-              y += 1
-            }
-            val img = graft.ops.PngCodec.decode(
-              graft.ops.PngCodec.encode(graft.ops.PngCodec.Image(w, h, 1, px))).get
-            val o = (id % 8 + 1).toInt
-            val r = graft.ops.Exif.applyOrientation(img, o)
-            def p(x: Int, y: Int) = r.pixels(y * r.width + x) & 0xFF
-            (id, o, r.width, r.height,
-              p(0, 0), p(r.width - 1, 0), p(0, r.height - 1))
-          })
-          .toDF("doc_id", "orientation", "w", "h", "p00", "pw0", "p0h")
-      }
-      packed
-    }),
-
-    // Format sniffing (round 12): the magic-byte dispatcher a mixed
-    // corpus scan runs first — id%16 cycles sixteen planted format
-    // prefixes (including the three RIFF siblings, which must
-    // disambiguate on the form tag, and tar's offset-257 signature)
-    // and the label replays from id arithmetic. Real-artifact sniffs
-    // (the repo's own packers' outputs) are pinned in SniffSpec.
-    "x_sniff_formats" -> ((s, d) => {
-      val packed = {
-        import s.implicits._
-        t(s, d, "documents").select(col("doc_id").cast("long")).as[Long]
-          .mapPartitions(_.map { id =>
-            def a(s: String) = s.getBytes("US-ASCII")
-            val bytes: Array[Byte] = (id % 16) match {
-              case 0 => Array[Byte](0x89.toByte) ++ a("PNG\r\n") ++ Array[Byte](0x1A, 0x0A)
-              case 1 => Array[Byte](0xFF.toByte, 0xD8.toByte, 0xFF.toByte, 0xE0.toByte)
-              case 2 => a("GIF89a")
-              case 3 => a("BM") ++ new Array[Byte](12)
-              case 4 => a("RIFF") ++ new Array[Byte](4) ++ a("WEBP")
-              case 5 => a("RIFF") ++ new Array[Byte](4) ++ a("WAVE")
-              case 6 => a("RIFF") ++ new Array[Byte](4) ++ a("AVI ")
-              case 7 => a("II") ++ Array[Byte](42, 0)
-              case 8 => a("fLaC")
-              case 9 => Array[Byte](0x1F, 0x8B.toByte)
-              case 10 => Array[Byte](0x28, 0xB5.toByte, 0x2F, 0xFD.toByte)
-              case 11 => a("PK") ++ Array[Byte](3, 4)
-              case 12 => new Array[Byte](257) ++ a("ustar")
-              case 13 => a("WARC/1.0\r\n")
-              case 14 => a("%PDF-1.7\n")
-              case _ => a(s"hello document $id")
-            }
-            (id, bytes)
-          })
-          .toDF("doc_id", "payload")
-      }
-      graft.ops.Sniff.formats(packed, "doc_id", "payload")
-        .select(col("id").as("doc_id"), col("format"))
-    }),
-
-    // Universal decode (round 13): the Sniff dispatcher COMPOSED with
-    // the codec ladder over a deliberately mixed-format corpus — the
-    // "extensionless object-store dump" seam. Nine payload classes by
-    // id: plain text, each single compression wrapper
-    // (gzip/zstd/xz/bzip2, all INDEPENDENT encoders: JDK zlib,
-    // zstd-jni, XZ for Java, commons-compress), a ZIP with a text
-    // member and a directory entry, a real PDF (both writer layouts
-    // by id), NESTED wrappers zstd-inside-gzip proving the re-sniff
-    // loop, and a real PNG with no text surface. Chain, verdict, and
-    // text all replay from corpus columns.
-    "x_decode_any" -> ((s, d) => {
-      val packed = {
-        import s.implicits._
-        // per-row gzip/zstd/xz/… encodes: fan the 1-split scan out so
-        // the pack uses the machine (no-op at real volumes)
-        graft.ops.Partitioning.fanOut(t(s, d, "documents"))
-          .select(col("doc_id").cast("long"),
-            concat(lit("doc "), col("doc_id"), lit(": "),
-              coalesce(col("text"), lit(""))).as("__t"))
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, text) =>
-            val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            def gz(b: Array[Byte]): Array[Byte] = {
-              val bos = new java.io.ByteArrayOutputStream()
-              val g = new java.util.zip.GZIPOutputStream(bos)
-              g.write(b); g.close(); bos.toByteArray
-            }
-            def zst(b: Array[Byte]): Array[Byte] = {
-              val ctx = new com.github.luben.zstd.ZstdCompressCtx()
-              try ctx.setLevel(3).compress(b) finally ctx.close()
-            }
-            val payload: Array[Byte] = (id % 10) match {
-              case 0 => bytes
-              case 1 => gz(bytes)
-              case 2 => zst(bytes)
-              case 3 =>
-                val opts = new org.tukaani.xz.LZMA2Options(0)
-                val bos = new java.io.ByteArrayOutputStream()
-                val z = new org.tukaani.xz.XZOutputStream(bos, opts)
-                z.write(bytes); z.close(); bos.toByteArray
-              case 4 =>
-                val bos = new java.io.ByteArrayOutputStream()
-                val z = new org.apache.commons.compress.compressors.bzip2
-                  .BZip2CompressorOutputStream(bos, 1)
-                z.write(bytes); z.close(); bos.toByteArray
-              case 5 => graft.ops.Zip.zipOf(Seq(
-                "dir/" -> Array.emptyByteArray, "doc.txt" -> bytes))
-              case 6 =>
-                // id%10==6 forces id even, so the layout bit must come
-                // from a digit that VARIES within the class: both
-                // writer layouts (classic xref vs 1.5 xref-stream)
-                // alternate by the tens digit
-                if ((id / 10) % 2 == 0) graft.ops.Pdf.pdfOf(text, flate = true)
-                else graft.ops.Pdf.pdfOf15(text, flate = true)
-              case 7 => gz(zst(bytes))
-              case 8 => graft.ops.PngCodec.encode(graft.ops.PngCodec.Image(
-                1, 1, 1, Array((id % 256).toByte)))
-              case _ => gz(graft.ops.Tar.tarOf(Seq("doc.txt" -> bytes)))
-            }
-            (id, payload)
-          })
-          .toDF("doc_id", "payload")
-      }
-      graft.ops.DecodeAny.decode(packed, "doc_id", "payload")
-        .select(col("id").as("doc_id"), col("chain"), col("ok"), col("text"))
-    }),
-
-    // Audio segmentation (round 12): the energy-gate VAD baseline —
-    // one real 16-bit WAV per document with an id-arithmetic silence
-    // layout, split back into voiced segments at silence gaps.
-    // Constant planted amplitudes make every window RMS exact (sqrt
-    // of a perfect square), so start/end ms, window counts, AND the
-    // rms doubles all replay with no float slack.
-    "x_audio_segments" -> ((s, d) => {
-      val packed = graft.ops.AudioSegments.packSegmentsWav(t(s, d, "documents"), "doc_id")
-      graft.ops.AudioSegments.segments(packed, "doc_id", "payload")
-        .select(col("id").as("doc_id"), col("seg"), col("start_ms"),
-          col("end_ms"), col("n_windows"), col("rms"))
-    }),
-
-    // SFT conversations (round 12): one messages-convention JSON per
-    // document (id%3+1 user/assistant pairs, a system turn when
-    // id%4 == 0, a planted grammar violation when id%7 == 0) parsed
-    // back to long turn rows — every role, turn index, and content
-    // string replays through DuckDB's independent JSON engine.
-    "x_chat_turns" -> ((s, d) => {
-      val packed = sharedFixture("chat", s, d)(
-        graft.ops.Chat.packConversations(t(s, d, "documents"), "doc_id", "text"))
-      graft.ops.Chat.parseConversations(packed, "doc_id", "json")
-        .select(col("id").as("doc_id"), col("turn"), col("role"), col("content"))
-    }),
-
-    // Conversation role-grammar check (round 12): optional leading
-    // system, then strict user/assistant alternation ending on
-    // assistant — an aggregation over the sorted turn array (no
-    // Window); the id%7 plant provides real negatives.
-    "x_chat_valid" -> ((s, d) => {
-      val packed = sharedFixture("chat", s, d)(
-        graft.ops.Chat.packConversations(t(s, d, "documents"), "doc_id", "text"))
-      graft.ops.Chat.validateAlternation(
-        graft.ops.Chat.parseConversations(packed, "doc_id", "json"))
-        .select(col("id").as("doc_id"), col("n_turns"), col("valid"))
-    }),
-
-    // Chat-template render (round 12): turns flatten to one training
-    // text per conversation in turn order; the oracle assembles the
-    // identical string from the same arithmetic.
-    "x_chat_render" -> ((s, d) => {
-      val packed = sharedFixture("chat", s, d)(
-        graft.ops.Chat.packConversations(t(s, d, "documents"), "doc_id", "text"))
-      graft.ops.Chat.renderTemplate(
-        graft.ops.Chat.parseConversations(packed, "doc_id", "json"))
-        .select(col("id").as("doc_id"), col("text"))
-    }),
-
-    // EXIF metadata (round 12): one real JPEG per document (the
-    // repo's own encoder) with a planted Exif APP1 — byte order
-    // II/MM by id%2, GPS present unless id%3 == 0 — read back
-    // through the TIFF IFD walk with the value-or-offset rule and
-    // the RATIONAL d/m/s → signed-decimal-degrees reduction; every
-    // field replays from doc_id arithmetic. Both-endian round trips,
-    // the inline-ASCII rung, and the hostile ladder live in ExifSpec.
-    "x_exif_meta" -> ((s, d) => {
-      val packed = sharedFixture("exif", s, d)(
-        graft.ops.Exif.packJpegExif(t(s, d, "documents"), "doc_id"))
-      graft.ops.Exif.decodeMeta(packed, "doc_id", "payload")
-        .select(col("id").as("doc_id"), col("has_exif"), col("endian"),
-          col("orientation"), col("make"), col("model"), col("datetime"),
-          col("has_gps"), round(col("lat"), 6).as("lat"),
-          round(col("lon"), 6).as("lon"))
-    }),
-
-    // EXIF in WebP containers (round 16): the same planted-Exif
-    // arithmetic rides a WebP EXIF chunk (VP8X flag + real VP8L
-    // image), every third id keeping the JPEG-style Exif\0\0 prefix
-    // that some writers emit; the reader walks the RIFF chunks and
-    // strips the prefix — so both wild wire variants decode to the
-    // same oracle rows as the JPEG gate.
-    "x_exif_webp" -> ((s, d) => {
-      val packed = graft.ops.Exif.packWebpExif(t(s, d, "documents"), "doc_id")
-      graft.ops.Exif.decodeMeta(packed, "doc_id", "payload")
-        .select(col("id").as("doc_id"), col("has_exif"), col("endian"),
-          col("orientation"), col("make"), col("model"), col("datetime"),
-          col("has_gps"), round(col("lat"), 6).as("lat"),
-          round(col("lon"), 6).as("lon"))
-    }),
-
-    // EXIF GPS scrub (round 12): the privacy op — stripGps REBUILDS
-    // the APP1 without the GPS IFD (patching in place would shift
-    // every absolute offset), and the re-decode must show the safe
-    // tags intact and the coordinates gone on every image.
-    "x_exif_strip" -> ((s, d) => {
-      val packed = sharedFixture("exif", s, d)(
-        graft.ops.Exif.packJpegExif(t(s, d, "documents"), "doc_id"))
-      val stripped = graft.ops.Exif.stripGpsDf(packed, "doc_id", "payload")
-      graft.ops.Exif.decodeMeta(stripped, "id", "payload")
-        .select(col("id").as("doc_id"), col("has_exif"), col("endian"),
-          col("orientation"), col("make"), col("datetime"),
-          col("has_gps"), col("lat"), col("lon"))
-    }),
-
-    // WebDataset ingest (round 12): documents packed into 8 real tar
-    // shards in the WebDataset sample layout — each doc a two-part
-    // sample (doc<id>.txt + doc<id>.meta.json, the multi-dot part
-    // name making the first-dot key rule load-bearing) — and grouped
-    // back by the scan-local adjacency pass; key, per-shard sample
-    // order, part-name set, text bytes, and the JSON metadata all
-    // replay from corpus columns.
-    "x_webdataset" -> ((s, d) => {
-      val packed = graft.ops.WebDataset.packDocsWds(
-        t(s, d, "documents"), "doc_id", "source", "lang", "text")
-      val meta = get_json_object(
-        decode(element_at(col("parts"), "meta.json"), "UTF-8"), _: String)
-      graft.ops.WebDataset.samples(packed, "file_id", "payload")
-        .select(
-          regexp_extract(col("key"), "doc(\\d+)", 1).cast("long").as("doc_id"),
-          col("sample_index").as("seq"),
-          array_join(sort_array(map_keys(col("parts"))), ",").as("exts"),
-          decode(element_at(col("parts"), "txt"), "UTF-8").as("text"),
-          meta("$.lang").as("lang"),
-          meta("$.source").as("source"))
-    }),
-
-    // PDF ingest: each doc becomes a spec-legal single-page PDF
-    // cycling all four writer layouts with the id — 1.4 classic-xref
-    // (even ids FlateDecode via the JDK's zlib, odd ids raw) and the
-    // PDF 1.5 layout modern producers emit (page tree inside a
-    // Flate'd /ObjStm, located via a /XRef cross-reference stream
-    // with PNG Up predictor) — parsed back through the from-spec
-    // object/xref(-stream)/ObjStm/content walk; the text must
-    // round-trip byte-exact through the literal-string escape
-    // machinery, and every structural field replays from doc_id.
-    "x_pdf_extract" -> ((s, d) =>
-      graft.ops.Pdf.extractPdfText(
-        graft.ops.Pdf.packTextPdf(t(s, d, "documents"), "doc_id", "text"),
-        "id", "media")),
-
-    // tar.gz ingest (POSIX ustar over the gzip rung): documents
-    // sharded into 32 archives — a doc/ directory entry then
-    // doc/<id>.txt members — and re-read through verified header
-    // checksums; names, sizes, and content digests all replay from
-    // corpus columns.
-    "x_tar_members" -> ((s, d) =>
-      graft.ops.Tar.members(
-        graft.ops.Tar.packDocsTarGz(t(s, d, "documents"), "doc_id", "text"),
-        "file_id", "payload")
-        .select(col("file_id").cast("long").as("file_id"), col("name"),
-          col("typeflag"), col("size"), md5(col("data")).as("digest"))),
-
-    // end-to-end crawl extraction: the same warc.gz bytes through
-    // records → HTTP body → text; the oracle rebuilds each page by
-    // concatenation. This is the full ingest seam a crawl corpus
-    // user runs: bytes in, clean text out.
-    "x_warc_text" -> ((s, d) => {
-      val packed = sharedFixture("warc", s, d)(
-        Warc.packDocsWarcGz(t(s, d, "documents"), "doc_id", "source", "text"))
-      Warc.responseText(Warc.records(packed, "file_id", "payload"))
-        .select(regexp_extract(col("target_uri"), "doc/(\\d+)$", 1).cast("long").as("doc_id"),
-          col("http_status").cast("long").as("status"), col("text"))
-    }),
-
-    // DOCX extraction (round 11): the corpus packed into real
-    // ECMA-376 .docx packages (OPC content types + rels +
-    // WordprocessingML body; text lines as separate w:p paragraphs
-    // so the multi-paragraph join is load-bearing; even ids DEFLATE
-    // the ZIP members, odd ids store them) and extracted back —
-    // every document's body text replays the corpus verbatim.
-    // Tabs/breaks/hyperlink runs/table order and the refusal ladder
-    // are pinned in DocxSpec against a JDK-zip-written fixture.
-    "x_docx_extract" -> ((s, d) => {
-      val packed = sharedFixture("docx", s, d)(
-        graft.ops.Docx.packTextDocx(t(s, d, "documents"), "doc_id", "text"))
-      graft.ops.Docx.decodeText(packed, "id", "payload")
-        .select(col("id").as("doc_id"), col("text"), col("decoded"))
-    }),
-
-    // DOCX furniture parts (round 13): headers (two parts when
-    // id % 3 == 0, proving part-name ordering), footer, and
-    // footnotes by w:id with the separator/continuation stock
-    // entries (ids -1 and 0) skipped — every row replays from
-    // doc_id arithmetic alongside the verbatim body.
-    "x_docx_parts" -> ((s, d) => {
-      val packed = sharedFixture("docx", s, d)(
-        graft.ops.Docx.packTextDocx(t(s, d, "documents"), "doc_id", "text"))
-      graft.ops.Docx.decodeParts(packed, "id", "payload")
-        .select(col("id").as("doc_id"), col("kind"), col("seq"), col("text"))
-    }),
-
-    // PPTX extraction (round 11): text lines become one slide EACH,
-    // listed in reversed package order with double-digit slide
-    // numbers, so the reader's numeric (not lexicographic) slide
-    // sort is load-bearing; body text replays the corpus verbatim.
-    "x_pptx_extract" -> ((s, d) => {
-      val packed = graft.ops.Office.packTextPptx(docs(s, d), "doc_id", "text")
-      graft.ops.Office.decodePptxText(packed, "id", "payload")
-        .select(col("id").as("doc_id"), col("text"), col("decoded"))
-    }),
-
-    // ODT extraction (round 11): OASIS OpenDocument content.xml with
-    // the mimetype member first (the ODF convention); text:p blocks
-    // replay the corpus verbatim. tab/line-break/text:s expansion
-    // and the footnote skip are pinned in OfficeSpec.
-    "x_odt_extract" -> ((s, d) => {
-      val packed = graft.ops.Office.packTextOdt(docs(s, d), "doc_id", "text")
-      graft.ops.Office.decodeOdtText(packed, "id", "payload")
-        .select(col("id").as("doc_id"), col("text"), col("decoded"))
-    }),
-
-    // safetensors (round 11): the embeddings table packed into 8
-    // real .safetensors shards (one F32 rank-1 tensor per vector,
-    // id-ordered offsets, a __metadata__ map) and decoded back —
-    // name, dtype, shape, AND every float value replay from the
-    // embeddings table, so one wrong byte anywhere in the header
-    // geometry or the little-endian data layout hash-mismatches.
-    // Arrow IPC (round 15): the embeddings table sharded into real
-    // multi-batch Arrow streams (schema + record batches + EOS,
-    // flatbuffer messages built from-spec) and decoded back through
-    // the flatbuffer/columnar walk — every key and float replays.
-    "x_arrow_embed" -> ((s, d) => {
-      val packed = sharedFixture("arrow", s, d)(
-        graft.ops.ArrowIpc.packVecs(t(s, d, "embeddings"), "vec_id", "embedding",
-          groups = 8, batchRows = 64))
-      graft.ops.ArrowIpc.decodeVecRows(packed, "shard", "payload", "vec_id", "embedding")
-        .select(col("key").as("vec_id"), col("dim"),
-          array_join(transform(col("values"),
-            v => floor(v.cast("double") * lit(1073741824.0d)).cast("long").cast("string")),
-            ",").as("values"))
-    }),
-
-    // Arrow IPC compressed bodies (round 15 continuation): the same
-    // embedding replay, but the shards are written by the INDEPENDENT
-    // Apache Arrow Java writer with real body compression — LZ4_FRAME
-    // on even shards, ZSTD on odd — and decompressed buffer-by-buffer
-    // by the IN-REPO from-spec lz4-frame/zstd codecs. pyarrow's
-    // default feather-v2 layout is exactly this wire shape.
-    "x_arrow_compressed" -> ((s, d) => {
-      val packed = sharedFixture("arrowz", s, d)(
-        graft.ops.ArrowIpc.packVecsCompressedRef(t(s, d, "embeddings"), "vec_id", "embedding",
-          groups = 8, batchRows = 64))
-      graft.ops.ArrowIpc.decodeVecRows(packed, "shard", "payload", "vec_id", "embedding")
-        .select(col("key").as("vec_id"), col("dim"),
-          array_join(transform(col("values"),
-            v => floor(v.cast("double") * lit(1073741824.0d)).cast("long").cast("string")),
-            ",").as("values"))
-    }),
-
-    // Arrow IPC dictionary encoding (round 15 continuation): the
-    // documents (doc_id, source) pairs written by the Arrow Java
-    // writer's own DictionaryProvider machinery — a real
-    // DictionaryBatch message followed by int32 index columns — and
-    // resolved by the from-spec reader's dictionary walk. Every
-    // (id, source) pair replays from the corpus, so a single
-    // off-by-one in index resolution hash-mismatches.
-    "x_arrow_dict" -> ((s, d) => {
-      val packed = graft.ops.ArrowIpc.packDocsDictRef(t(s, d, "documents"),
-        "doc_id", "source", groups = 8, batchRows = 256)
-      graft.ops.ArrowIpc.decodeKeyStrRows(packed, "shard", "payload", "doc_id", "source")
-        .select(col("key").as("doc_id"), col("value").as("source"))
-    }),
-
-    "x_safetensors" -> ((s, d) => {
-      val packed = graft.ops.Safetensors.packVecs(
-        t(s, d, "embeddings"), "vec_id", "embedding")
-      graft.ops.Safetensors.decodeTensors(packed, "file_id", "payload")
-        .select(regexp_extract(col("name"), "vec_(\\d+)", 1).cast("long").as("vec_id"),
-          col("dtype"), element_at(col("shape"), 1).as("dim"),
-          // The raw float array is the contract, but the external
-          // harness cannot sort/hash an array cell — serialize each
-          // value through the exact-IEEE integer encoding
-          // floor(v * 2^30): a power-of-two multiply is exact in
-          // binary floating point, so the string replays the float
-          // bits deterministically on BOTH engines (no decimal
-          // formatting in the comparison path).
-          array_join(transform(col("values"),
-            v => floor(v.cast("double") * lit(1073741824.0d)).cast("long").cast("string")),
-            ",").as("values"))
-    }),
-
-    // WebP/TIFF dimensions (round 11): the image sniff ladder's two
-    // new rungs — id%4 cycles VP8L (14-bit packed dims), VP8X
-    // (24-bit canvas), TIFF little-endian SHORT entries and TIFF
-    // big-endian LONG entries; mime/width/height replay from doc_id
-    // arithmetic. The VP8 lossy keyframe rung and the refusal
-    // ladder are pinned in OpsSpec.
-    "x_image_meta_webp_tiff" -> ((s, d) => {
-      val packed = {
-        import s.implicits._
-        t(s, d, "documents").select(col("doc_id").cast("long")).as[Long]
-          .map { id =>
-            val w = (id % 300).toInt + 1
-            val h = (id % 200).toInt + 1
-            def webp(fourcc: String, data: Array[Byte]): Array[Byte] =
-              "RIFF".getBytes("US-ASCII") ++ Array[Byte](0, 0, 0, 0) ++
-                "WEBP".getBytes("US-ASCII") ++ fourcc.getBytes("US-ASCII") ++
-                Array[Byte](data.length.toByte, 0, 0, 0) ++ data
-            val bytes = (id % 4) match {
-              case 0 =>
-                val wm = w - 1; val hm = h - 1
-                webp("VP8L", Array[Byte](0x2F, (wm & 0xFF).toByte,
-                  (((wm >> 8) & 0x3F) | ((hm & 0x3) << 6)).toByte,
-                  ((hm >> 2) & 0xFF).toByte, ((hm >> 10) & 0x0F).toByte))
-              case 1 =>
-                webp("VP8X", Array[Byte](0, 0, 0, 0,
-                  ((w - 1) & 0xFF).toByte, (((w - 1) >> 8) & 0xFF).toByte,
-                  (((w - 1) >> 16) & 0xFF).toByte,
-                  ((h - 1) & 0xFF).toByte, (((h - 1) >> 8) & 0xFF).toByte,
-                  (((h - 1) >> 16) & 0xFF).toByte))
-              case 2 =>
-                def ent(tag: Int, v: Int): Array[Byte] =
-                  Array[Byte]((tag & 0xFF).toByte, (tag >> 8).toByte, 3, 0,
-                    1, 0, 0, 0, (v & 0xFF).toByte, ((v >> 8) & 0xFF).toByte, 0, 0)
-                "II".getBytes("US-ASCII") ++ Array[Byte](0x2A, 0, 8, 0, 0, 0, 2, 0) ++
-                  ent(256, w) ++ ent(257, h) ++ Array[Byte](0, 0, 0, 0)
-              case _ =>
-                def ent(tag: Int, v: Int): Array[Byte] =
-                  Array[Byte]((tag >> 8).toByte, (tag & 0xFF).toByte, 0, 4,
-                    0, 0, 0, 1, ((v >> 24) & 0xFF).toByte, ((v >> 16) & 0xFF).toByte,
-                    ((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-                "MM".getBytes("US-ASCII") ++ Array[Byte](0, 0x2A, 0, 0, 0, 8, 0, 2) ++
-                  ent(256, w) ++ ent(257, h) ++ Array[Byte](0, 0, 0, 0)
-            }
-            (id, bytes)
-          }
-          .toDF("doc_id", "__payload")
-          .select(col("doc_id"), struct(col("__payload").as("payload")).as("media"))
-      }
-      Multimodal.decodeImageMeta(packed, "doc_id", "media")
-        .select(col("id").as("doc_id"), col("mime_detected"),
-          col("width"), col("height"))
-    }),
-
-    // HEIF-family metadata rung (round 16): spec-legal AVIF / HEIC
-    // containers from the in-repo builder (its full build grid was
-    // cross-parsed by the system libheif AND libavif with zero
-    // disagreements — HeifSpec), dims/rotation/alpha from doc_id
-    // arithmetic; id%2 picks the format, id%4 the rotation (90/270
-    // swap the DISPLAYED dims the mime rung reports), id%3==0 adds
-    // an alpha aux item.
-    "x_image_meta_avif_heic" -> ((s, d) => {
-      val packed = {
-        import s.implicits._
-        t(s, d, "documents").select(col("doc_id").cast("long")).as[Long]
-          .map { id =>
-            val w = (id % 300).toInt + 1
-            val h = (id % 200).toInt + 1
-            (id, ops.Heif.build(avif = id % 2 == 0, w, h,
-              rotationCcw = ((id % 4) * 90).toInt,
-              mirrorAxis = if (id % 5 == 0) Some((id % 2).toInt) else None,
-              withAlpha = id % 3 == 0))
-          }
-          .toDF("doc_id", "__payload")
-          .select(col("doc_id"), struct(col("__payload").as("payload")).as("media"))
-      }
-      Multimodal.decodeImageMeta(packed, "doc_id", "media")
-        .select(col("id").as("doc_id"), col("mime_detected"),
-          col("width"), col("height"))
-    }),
-
-    // ICC profile metadata (round 17): the JDK's own sRGB profile
-    // (java.awt.color.ICC_Profile — the independent reference
-    // implementation) embedded per container by id%4 — JPEG APP2 in
-    // 1-3 segments (reassembly exercised), PNG iCCP (in-repo zlib
-    // both directions), WebP VP8X+ICCP — and a no-profile JPEG; the
-    // parsed header fields replay the sRGB constants. Description
-    // text and the JDK getter cross-check are pinned in IccSpec.
-    "x_image_icc" -> ((s, d) => {
-      // fixture memo (round 18): the per-row JPEG+PNG+WebP encodes are
-      // fixture cost, not the operator — stage them to parquet once per
-      // JVM so the benched repeats measure scan + ICC decode only
-      val dir = sharedDir("image_icc", d) {
-        import s.implicits._
-        val dest = java.nio.file.Files.createTempDirectory("graft-icc-fix")
-          .toFile.getAbsolutePath
-        // the JDK serializes the profile on every getData call —
-        // fetch once, ship in the closure (kilobytes)
-        val profile = java.awt.color.ICC_Profile.getInstance(
-          java.awt.color.ColorSpace.CS_sRGB).getData
-        t(s, d, "documents").select(col("doc_id").cast("long")).as[Long]
-          .map { id =>
-            val px = Array.tabulate(16 * 16)(i => ((i + id) % 251).toByte)
-            val img = ops.PngCodec.Image(16, 16, 1, px)
-            val payload = (id % 4) match {
-              case 0 => ops.Icc.embedJpeg(
-                ops.JpegEncoder.encode(img, quality = 90), profile,
-                segments = 1 + (id % 3).toInt)
-              case 1 => ops.Icc.embedPng(ops.PngCodec.encode(img), profile)
-              case 2 => ops.Icc.embedWebp(ops.WebpCodec.encodeGreen(16, 16, px),
-                profile, 16, 16)
-              case _ => ops.JpegEncoder.encode(img, quality = 90)
-            }
-            (id, payload)
-          }
-          .toDF("doc_id", "__payload")
-          .select(col("doc_id"), struct(col("__payload").as("payload")).as("media"))
-          .write.parquet(dest + "/packed")
-        dest + "/packed"
-      }
-      Multimodal.decodeImageIcc(s.read.parquet(dir), "doc_id", "media")
-        .select(col("id").as("doc_id"), col("container"), col("icc_present"),
-          col("profile_size"), col("icc_version"), col("device_class"),
-          col("color_space"), col("pcs"), col("rendering_intent"))
-    }),
-
-    // HEIF GRID (tiled) primaries (round 17 — the iPhone default
-    // layout): item 1 is a `grid` whose ImageGrid payload (rows/cols/
-    // output dims) lives in mdat or idat (id%5 picks), tiles arrive by
-    // dimg reference; dims come from the grid's ispe — or, when
-    // id%3==0 drops it, from the ImageGrid config (the fallback path)
-    // — with the grid's irot applied (id%4>=2 rotates 90°). The
-    // builder's full case grid was cross-parsed by the system libheif
-    // AND libavif with zero disagreements (HeifDiff, round 17).
-    "x_image_meta_grid" -> ((s, d) => {
-      val packed = {
-        import s.implicits._
-        t(s, d, "documents").select(col("doc_id").cast("long")).as[Long]
-          .map { id =>
-            val rows = (id % 3).toInt + 1
-            val cols = (id % 4).toInt + 1
-            val ow = (cols - 1) * 512 + (id % 512).toInt + 1
-            val oh = (rows - 1) * 512 + (id % 509).toInt + 1
-            (id, ops.Heif.buildGrid(avif = id % 2 == 0, 512, 512, rows, cols,
-              ow, oh, gridIspe = id % 3 != 0, inIdat = id % 5 == 0,
-              rotationCcw = if (id % 4 >= 2) 90 else 0,
-              wideFields = id % 7 == 0))
-          }
-          .toDF("doc_id", "__payload")
-          .select(col("doc_id"), struct(col("__payload").as("payload")).as("media"))
-      }
-      Multimodal.decodeImageMeta(packed, "doc_id", "media")
-        .select(col("id").as("doc_id"), col("mime_detected"),
-          col("width"), col("height"))
-    }),
-
-    // SVG + netpbm dimensions (round 11): id%4 cycles SVG with
-    // width/height attrs (px suffix), SVG with only a viewBox
-    // (floored), P6 with a comment in the header, and P5 — all
-    // replaying dims from doc_id arithmetic.
-    "x_image_meta_svg_pnm" -> ((s, d) => {
-      val id = col("doc_id")
-      val w = (pmod(id, lit(300)) + 1).cast("int")
-      val h = (pmod(id, lit(200)) + 1).cast("int")
-      val payload = when(pmod(id, lit(4)) === 0,
-          concat(lit("<svg xmlns=\"http://www.w3.org/2000/svg\" width=\""), w,
-            lit("px\" height=\""), h, lit("\"><rect/></svg>")))
-        .when(pmod(id, lit(4)) === 1,
-          concat(lit("<?xml version=\"1.0\"?>\n<svg viewBox=\"0 0 "), w,
-            lit(".0 "), h, lit("\"><g/></svg>")))
-        .when(pmod(id, lit(4)) === 2,
-          concat(lit("P6 # planted comment\n"), w, lit(" "), h, lit(" 255\n")))
-        .otherwise(concat(lit("P5\n"), w, lit("\n"), h, lit("\n255\n")))
-      Multimodal.decodeImageMeta(
-        docs(s, d).select(id,
-          struct(encode(payload, "UTF-8").as("payload")).as("media")),
-        "doc_id", "media")
-        .select(col("id").as("doc_id"), col("mime_detected"),
-          col("width"), col("height"))
-    }),
-
-    // Audio tags (round 11): even ids REAL mp3s with ID3v2 tags
-    // (v2.3 big-endian / v2.4 syncsafe frame sizes by id/2 parity,
-    // text encodings cycling latin1/utf-8/utf-16), odd ids fLaC
-    // streams with a VORBIS_COMMENT block (mixed-case keys — the
-    // case-insensitivity rule is load-bearing) — title/artist/album
-    // replay from doc_id arithmetic either way.
-    "x_audio_tags" -> ((s, d) => {
-      val packed = {
-        import s.implicits._
-        t(s, d, "documents").select(col("doc_id").cast("long")).as[Long]
-          .map { id =>
-            val title = s"Title $id"; val artist = s"Artist ${id % 7}"
-            val album = s"Album ${id % 5}"
-            val bytes =
-              if (id % 2 == 0) graft.ops.AudioTags.packTagsMp3(id, title, artist, album)
-              else graft.ops.AudioTags.packTagsFlac(title, artist, album)
-            (id, bytes)
-          }
-          .toDF("doc_id", "payload")
-      }
-      graft.ops.AudioTags.decodeTags(packed, "doc_id", "payload")
-        .select(col("id").as("doc_id"), col("format"), col("title"),
-          col("artist"), col("album"))
-    }),
-
-    // GGUF metadata (round 11; third tensor + data section round 13;
-    // fourth — the 4/5-bit quant block — round 14): one file per
-    // document planting the common KV types
-    // (string/u32/u64/bool/f32/i32-array), the alignment key, and
-    // four tensor infos with 32-aligned offsets — every kv and
-    // tensor row replays from doc_id arithmetic.
-    "x_gguf_meta" -> ((s, d) => {
-      val packed = sharedFixture("gguf", s, d)(
-        graft.ops.Gguf.packDocsGguf(t(s, d, "documents"), "doc_id"))
-      graft.ops.Gguf.decodeMeta(packed, "id", "payload")
-        .select(col("id").as("doc_id"), col("kind"), col("key"),
-          col("type_id"), col("value"), col("offset"))
-    }),
-
-    // GGUF tensor dequantization (round 13; Q4/Q5 round 14; the full
-    // K-quant ladder round 15): the packer's data section carries an
-    // F32 matrix, one Q8_0 block (fp16 scale 0.5 exact, int8
-    // quants), an F16 vector, one block of the classic 4/5-bit
-    // formats cycling Q4_0/Q4_1/Q5_0/Q5_1 by id (d = 0.5, m = 0.25,
-    // split-half nibble packing, qh high-bit word), and one
-    // super-block cycling ALL SIX K-quant formats by id%6
-    // (Q4_K/Q6_K/Q2_K/Q3_K/Q5_K/Q8_K — scale/min packings, kmask
-    // scale interleave, hmask high bits, group sums) — all
-    // quarter-unit id-derived, so the dequantized floats replay
-    // through the same exact-IEEE floor(v * 2^30) serialization as
-    // x_safetensors and the oracle is pure integer arithmetic. The
-    // half-float codec, block walk, and IQ refusals are pinned in
-    // GgufSpec.
-    "x_gguf_tensors" -> ((s, d) => {
-      val packed = sharedFixture("gguf", s, d)(
-        graft.ops.Gguf.packDocsGguf(t(s, d, "documents"), "doc_id"))
-      graft.ops.Gguf.decodeTensorValues(packed, "id", "payload")
-        .select(col("id").as("doc_id"), col("name"), col("type_id"),
-          col("n_values"),
-          array_join(transform(col("values"),
-            v => floor(v.cast("double") * lit(1073741824.0d)).cast("long").cast("string")),
-            ",").as("values"))
-    }),
-
-    // HDF5 (round 15 continuation): one .h5 per document from the
-    // in-repo spec-legal builder, vintage cycling by id parity —
-    // even: superblock v0 + v1 object headers + symbol-table groups
-    // (TREE/SNOD/HEAP); odd: superblock v2 (lookup3-checksummed) +
-    // OHDR headers + link messages. Four datasets per file:
-    // contiguous f32-LE / i64-LE / i32-BE and a subgroup's CHUNKED
-    // f64 matrix (edge chunks) behind the [shuffle, deflate(JDK
-    // zlib), fletcher32] pipeline. Every value replays through the
-    // exact floor(v·2³⁰) serialization; lookup3/fletcher32 are
-    // pinned against published vectors in Hdf5Spec.
-    "x_hdf5_datasets" -> ((s, d) => {
-      val packed = graft.ops.Hdf5Write.packDocsHdf5(t(s, d, "documents"), "doc_id")
-      graft.ops.Hdf5.decodeDatasets(packed, "id", "payload")
-        .select(col("id").as("doc_id"), col("path"), col("dtype"),
-          col("dims"), col("n_values"),
-          array_join(transform(col("values"),
-            v => floor(v * lit(1073741824.0d)).cast("long").cast("string")),
-            ",").as("values"))
-    }),
-
-    // RTF extraction (round 15 continuation): the document text
-    // round-trips through real RTF — fonttbl/info/{\*\generator}
-    // destinations that must be SKIPPED, both escape rungs (\'hh
-    // cp1252 bytes on odd ids, \uN with \uc1 fallbacks elsewhere,
-    // surrogate pairs as two \u words), \par/\tab, structural
-    // escapes — so one wrong state transition anywhere in the group
-    // stack hash-mismatches against the verbatim corpus text.
-    "x_rtf_extract" -> ((s, d) => {
-      val packed = graft.ops.Rtf.packTextRtf(t(s, d, "documents"), "doc_id", "text")
-      graft.ops.Rtf.extractText(packed, "id", "payload")
-        .select(col("id"), col("decoded"),
-          md5(encode(col("text"), "UTF-8")).as("digest"))
-    }),
-
-    // MAT-file v5 (round 15 continuation): per document a double
-    // 3×4 "A", an int16-STORED "b" (the down-packed storage path),
-    // and a single 2×3 "c"; id%2 wraps everything in miCOMPRESSED
-    // (zlib via the JDK — the independent encoder — inflated by the
-    // from-spec unzlib), id%3==2 flips to big-endian. Values replay
-    // column-major through floor(v·2³⁰).
-    "x_mat_vars" -> ((s, d) => {
-      val packed = graft.ops.Mat5.packDocsMat(t(s, d, "documents"), "doc_id")
-      graft.ops.Mat5.decodeVars(packed, "id", "payload")
-        .select(col("id").as("doc_id"), col("name"), col("class"),
-          col("dims"), col("n_values"),
-          array_join(transform(col("values"),
-            v => floor(v * lit(1073741824.0d)).cast("long").cast("string")),
-            ",").as("values"))
-    }),
-
-    // netCDF classic (round 15 continuation): one CDF payload per
-    // document from the in-repo spec-legal builder, version cycling
-    // 1/2/5 by id%3 (32-bit, 64-bit-offset, and CDF-5 widths). Two
-    // fixed variables + TWO record variables (the interleaved
-    // recsize stride with per-slab padding is load-bearing), a char
-    // variable that must be SKIPPED, and global/var attributes that
-    // must parse past. Every value replays through floor(v·2³⁰).
-    "x_netcdf_vars" -> ((s, d) => {
-      val packed = graft.ops.Netcdf.packDocsNetcdf(t(s, d, "documents"), "doc_id")
-      graft.ops.Netcdf.decodeVars(packed, "id", "payload")
-        .select(col("id").as("doc_id"), col("name"), col("dtype"),
-          col("dims"), col("n_values"),
-          array_join(transform(col("values"),
-            v => floor(v * lit(1073741824.0d)).cast("long").cast("string")),
-            ",").as("values"))
-    }),
-
-    // npz (round 11): the same embedding-shard contract as
-    // x_safetensors through numpy's format — v1.0 .npy members
-    // (spec-padded dict headers, 16-byte alignment) in real ZIP
-    // archives cycling both write modes; every float replays.
-    "x_npz" -> ((s, d) => {
-      val packed = graft.ops.Npy.packVecsNpz(
-        t(s, d, "embeddings"), "vec_id", "embedding")
-      // packVecsNpz packs via Partitioning.packGroups — one task per
-      // archive — so the narrow decode inherits that width directly
-      graft.ops.Npy.decodeNpz(packed, "file_id", "payload")
-        .select(regexp_extract(col("name"), "vec_(\\d+)", 1).cast("long").as("vec_id"),
-          col("descr"), element_at(col("shape"), 1).as("dim"),
-          // same exact-IEEE floor(v * 2^30) serialization as
-          // x_safetensors — see that gate for the rationale
-          array_join(transform(col("values"),
-            v => floor(v.cast("double") * lit(1073741824.0d)).cast("long").cast("string")),
-            ",").as("values"))
-    }),
-
-    // mbox/email (round 11): the corpus packed into 8 real mbox
-    // files — subjects cycling plain / RFC 2047 B / Q encoded-word
-    // forms, bodies cycling quoted-printable / base64 / raw-7bit
-    // transfer encodings with real mboxrd From-quoting, every fifth
-    // id a multipart/alternative whose text/plain part must win —
-    // and parsed back: every header field and the decoded body
-    // replay from corpus columns with a windowed per-file seq.
-    "x_mbox_messages" -> ((s, d) => {
-      val packed = graft.ops.Email.packDocsMbox(t(s, d, "documents"), "doc_id", "text")
-      graft.ops.Email.messages(packed, "file_id", "payload")
-        .select(regexp_extract(col("message_id"), "m(\\d+)@", 1).cast("long").as("doc_id"),
-          col("seq"), col("from"), col("to"), col("subject"), col("date"),
-          col("message_id"), col("content_type"), col("body_is_html"), col("text"))
-    }),
-
-    // Markdown extraction (round 11): the planted document fires
-    // every rule — ATX + setext headers, blockquote, both list
-    // marker kinds, a fence whose CONTENT must survive, image-
-    // before-link nesting, reference links + definition lines,
-    // autolinks, emphasis/backticks — with the corpus text flowing
-    // through the same chain on both engines.
-    "x_markdown_extract" -> ((s, d) => {
-      val id = col("doc_id")
-      val md = concat(
-        lit("# Doc "), id, lit("\nTitle "), id, lit("\n====\n"),
-        lit("> quoted from "), coalesce(col("source"), lit("")), lit("\n"),
-        lit("- item one\n1. item "), id, lit("\n"),
-        lit("```scala\nval x"), id, lit(" = 1 < 2 && 3 > 2\n```\n"),
-        lit("![logo "), id, lit("](http://img.example/"), id, lit(".png)\n"),
-        lit("See [link "), id, lit("](http://x.example/"), id, lit(") and [ref "), id, lit("][r1].\n"),
-        lit("[r1]: http://ref.example/"), id, lit("\n"),
-        lit("<https://auto.example/"), id, lit(">\n"),
-        lit("**bold "), id, lit("** *em* `tick` ~~strike~~\n"),
-        coalesce(col("text"), lit("")))
-      docs(s, d).select(id,
-        TextAnalysis.markdownExtract(md).as("extracted"))
-    }),
-
-    // Subtitle cues (round 11): even ids SRT (comma decimal, index
-    // lines), odd ids WebVTT (dot decimal, signature, a NOTE block
-    // that must skip whole, cue ids on every second cue, settings
-    // after the end timestamp) — one cue per text line with
-    // id-derived timings; whitespace-only lines sanitize to '.'
-    // (both engines replay the same rule), markup strip + entity
-    // decode applied to cue text. Every (seq, start, end, text)
-    // replays from a parallel unnest.
-    "x_subtitle_cues" -> ((s, d) => {
-      val packed = {
-        import s.implicits._
-        t(s, d, "documents")
-          .select(col("doc_id").cast("long"), coalesce(col("text"), lit("")))
-          .as[(Long, String)]
-          .map { case (id, text) =>
-            val lines = text.split("\n", -1)
-              .map(l => if (l.matches("[ \\t\\r]*")) "." else l)
-            def ts(ms: Long, dot: Boolean): String =
-              f"${ms / 3600000}%02d:${ms / 60000 % 60}%02d:${ms / 1000 % 60}%02d" +
-                (if (dot) "." else ",") + f"${ms % 1000}%03d"
-            def startOf(i: Int): Long = i.toLong * 2000 + (id % 7) * 13
-            val body =
-              if (id % 2 == 0)
-                lines.zipWithIndex.map { case (l, i) =>
-                  val st = startOf(i)
-                  s"${i + 1}\n${ts(st, dot = false)} --> ${ts(st + 1500, dot = false)}\n$l\n"
-                }.mkString("\n")
-              else
-                "WEBVTT\n\nNOTE planted comment\nsecond note line\n\n" +
-                  lines.zipWithIndex.map { case (l, i) =>
-                    val st = startOf(i)
-                    (if (i % 2 == 0) s"cue-$id-$i\n" else "") +
-                      s"${ts(st, dot = true)} --> ${ts(st + 1500, dot = true)} align:start\n$l\n"
-                  }.mkString("\n")
-            (id, body)
-          }
-          .toDF("doc_id", "sub")
-      }
-      graft.ops.Subtitles.extract(packed, "doc_id", "sub")
-        .select(col("id").as("doc_id"), col("seq"), col("start_ms"),
-          col("end_ms"), col("text"))
-    }),
-
-    // Jupyter notebook cells (round 11): one nbformat-4 notebook per
-    // document, a cell per text line in the on-disk array-source
-    // form with alternating code/markdown types — every (seq,
-    // cell_type, language, source) replays from a parallel unnest
-    // of the line-split corpus text.
-    "x_ipynb_cells" -> ((s, d) => {
-      val packed = graft.ops.Ipynb.packTextIpynb(t(s, d, "documents"), "doc_id", "text")
-      graft.ops.Ipynb.decodeCells(packed, "id", "payload")
-        .select(col("id").as("doc_id"), col("seq"), col("cell_type"),
-          col("language"), col("source"))
-    }),
-
-    // nbformat-3 notebooks (round 13; previously refused): the
-    // legacy worksheets layout real dumps still hold — code cells
-    // carry `input` with a per-cell language, every third line is a
-    // `heading` cell whose level cycles 1-3, and id%4==0 notebooks
-    // split across TWO worksheets. The reader applies the published
-    // v3->v4 upgrade rules (input -> source, heading -> '#'-prefixed
-    // markdown, language from the first code cell, worksheets
-    // concatenated), so both vintages land in one schema and every
-    // row replays from the corpus text by line arithmetic.
-    "x_ipynb_v3" -> ((s, d) => {
-      // corpus text is one line — plant five more so the heading
-      // levels, the markdown path, and the id%4 worksheet split are
-      // all exercised on every document
-      val planted = concat(coalesce(col("text"), lit("")),
-        lit("\nmd cell for "), col("doc_id"),
-        lit("\nheading one "), col("doc_id"),
-        lit("\ncode two "), col("doc_id"),
-        lit("\nmd two "), col("doc_id"),
-        lit("\nheading two "), col("doc_id"))
-      val packed = graft.ops.Ipynb.packTextIpynbV3(
-        t(s, d, "documents").select(col("doc_id"), planted.as("text")),
-        "doc_id", "text")
-      graft.ops.Ipynb.decodeCells(packed, "id", "payload")
-        .select(col("id").as("doc_id"), col("seq"), col("cell_type"),
-          col("language"), col("source"))
-    }),
-
-    // EPUB extraction (round 11): text lines chunked three-per-
-    // chapter with the manifest listed in REVERSE, so the OCF →
-    // OPF → spine reading-order chain is load-bearing, not the
-    // package layout; spine text replays the corpus verbatim.
-    "x_epub_extract" -> ((s, d) => {
-      val packed = graft.ops.Epub.packTextEpub(docs(s, d), "doc_id", "text")
-      graft.ops.Epub.decodeText(packed, "id", "payload")
-        .select(col("id").as("doc_id"), col("text"), col("decoded"))
-    }),
-
-    // XLSX cells (round 11): the corpus packed into 8 real .xlsx
-    // workbooks (real workbook→rels→sheet discovery chain, doc_id
-    // as a number cell, source as a SHARED string — the table
-    // dedups, so index resolution is load-bearing — text as an
-    // inline string; even files DEFLATE, odd store) and read back
-    // as long-format cells; every (file, sheet, row, col, value)
-    // replays from corpus columns with a windowed row-number.
-    "x_xlsx_cells" -> ((s, d) => {
-      val packed = graft.ops.Xlsx.packDocsXlsx(
-        t(s, d, "documents"), "doc_id", "source", "text")
-      graft.ops.Xlsx.decodeCells(packed, "file_id", "payload")
-    }),
-
-    // XML source (round 11): the corpus entity-escaped into 8 real
-    // .xml shards on disk (&/</> through &amp;-family escapes, so
-    // already-escaped corpus text DOUBLE-escapes and must
-    // single-decode back), read through the record-per-element xml
-    // source — every field replays the corpus columns verbatim.
-    // Namespace/nesting/quarantine rungs are pinned in XmlSpec.
-    "x_xml_source" -> ((s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-xmlsrc").toFile
-      val base = dir.getAbsolutePath
-      import s.implicits._
-      t(s, d, "documents")
-        .select(col("doc_id").cast("long"), coalesce(col("source"), lit("")),
-          coalesce(col("text"), lit("")))
-        .as[(Long, String, String)]
-        .groupByKey(_._1 % 8)
-        .mapGroups { (fid, rows) =>
-          def esc(x: String) =
-            x.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-          val sb = new StringBuilder(
-            "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<docs>\n")
-          rows.toSeq.sortBy(_._1).foreach { case (id, src, txt) =>
-            sb.append("  <doc><id>").append(id).append("</id><source>")
-              .append(esc(src)).append("</source><text>").append(esc(txt))
-              .append("</text></doc>\n")
-          }
-          sb.append("</docs>\n")
-          (fid, sb.toString)
-        }
-        .foreach { (kv: (Long, String)) =>
-          val out = new java.io.FileOutputStream(
-            new java.io.File(base, f"part-${kv._1}%05d.xml"))
-          try out.write(kv._2.getBytes("UTF-8")) finally out.close()
-        }
-      graft.sources.SourceReader.read(s,
-        graft.spec.SourceSpec("xmlsrc", "xml", graft.spec.Config.of(
-          "path" -> s"$base/*.xml", "record_tag" -> "doc",
-          "fields" -> Seq("id", "source", "text"))))
-        .select(col("id").cast("long").as("doc_id"), col("source"), col("text"))
-    }),
-
-    // WET generation (round 11): corpus → WARC shards → packWet →
-    // read the WET files BACK through the same parser (WET files
-    // ARE WARC files) — every conversion record's text/plain body
-    // must equal the charset-decoded, html-extracted response page,
-    // which the oracle replays from corpus columns through the
-    // htmlExtract regex chain verbatim. Refers-To provenance and
-    // record ordering are pinned in WarcSpec.
-    "x_wet_extract" -> ((s, d) => {
-      val packed = sharedFixture("warc", s, d)(
-        Warc.packDocsWarcGz(t(s, d, "documents"), "doc_id", "source", "text"))
-      val wet = Warc.packWet(Warc.records(packed, "file_id", "payload"))
-      Warc.records(wet, "file_id", "payload")
-        .where(col("warc_type") === "conversion")
-        .select(regexp_extract(col("target_uri"), "doc/(\\d+)$", 1).cast("long").as("doc_id"),
-          col("content_type"), decode(col("body"), "UTF-8").as("wet_text"))
-    }),
-
-    // HTTP wire-encoding ladder (round 11; br decode round 13):
-    // response bodies cycle identity / chunked (with chunk extension
-    // + trailer) / gzip / gzip-then-chunked / deflate (half
-    // zlib-wrapped as RFC 9110 names it, half RAW — the classic
-    // server bug) / br. The br class itself cycles real brotli in
-    // compressed framing, real brotli in uncompressed-meta-block
-    // framing, and junk bytes under the br label — the reader must
-    // decode the real streams through the from-spec RFC 7932 decoder
-    // and REFUSE the corrupt one with empty text rather than
-    // mojibake — text, encoding header, and the decoded flag all
-    // replay from corpus columns.
-    "x_warc_http_decode" -> ((s, d) => {
-      val packed = Warc.packDocsWarcGzHttpEncoded(
-        t(s, d, "documents"), "doc_id", "source", "text")
-      Warc.responseText(Warc.records(packed, "file_id", "payload"))
-        .select(regexp_extract(col("target_uri"), "doc/(\\d+)$", 1).cast("long").as("doc_id"),
-          col("http_status").cast("long").as("status"), col("text"),
-          col("content_encoding"), col("payload_decoded"))
-    }),
-
-    // charset ladder over real crawl bytes: bodies cycle five
-    // encoding variants (declared utf-8 / declared cp1252 / meta
-    // iso-8859-1 / undeclared-valid-utf8 / undeclared-cp1252), and
-    // the decode must pick the right rung AND the right bytes — the
-    // oracle replays both the resolution and the decoded page
-    // byte-exact from corpus columns.
-    "x_warc_charset" -> ((s, d) => {
-      val packed = Warc.packDocsWarcCharsets(t(s, d, "documents"), "doc_id", "source", "text")
-      Warc.responseText(Warc.records(packed, "file_id", "payload"))
-        .select(regexp_extract(col("target_uri"), "doc/(\\d+)$", 1).cast("long").as("doc_id"),
-          col("charset"), col("charset_src"), col("text"))
-    }),
-
-    // AIFF / AIFF-C / Sun AU rungs (round 15 continuation): six
-    // container classes by id%6 — AIFF PCM16 (big-endian), AIFC NONE
-    // (explicit tag), AIFC sowt (LITTLE-endian), AIFF signed PCM8
-    // (the opposite of WAV's unsigned-8 — a classic trap), AU int16
-    // BE, AU μ-law — all with id-arithmetic samples, decoded through
-    // the same AudioPcm.decodeAny dispatch the fingerprint/spectral
-    // ops use; every decoded sample value replays in SQL (the μ-law
-    // branch reuses the proven expansion arithmetic).
-    "x_multimodal_aiff_au" -> ((s, d) => {
-      val packed = graft.ops.Aiff.packPlantedAiffAu(t(s, d, "documents"), "doc_id")
-      graft.ops.Aiff.decodeClipRows(packed, "id", "payload")
-        .select(col("id").as("doc_id"), col("channels"), col("sample_rate"),
-          col("bits"), col("n_samples"), col("values"))
-    }),
-
-    // G.711 μ-law rung: the text bytes ARE the companded code bytes
-    // (fmt 7, mono 8 kHz), decoded through the from-spec expander —
-    // a pure per-byte function, so the oracle replays the G.711
-    // segment/mantissa arithmetic bit-for-bit in SQL. Decode rides
-    // the same AudioPcm dispatch the fingerprint/spectral ops use.
-    "x_multimodal_mulaw" -> ((s, d) =>
-      Multimodal.decodeAudioFeatures(
-        Multimodal.packTextG711Wav(t(s, d, "documents"), "doc_id", "text", alaw = false),
-        "id", "media")),
-
-    // G.711 A-law rung: same shape, fmt 6, the 0x55-toggled segment
-    // expansion (seg-0/seg-1 bias cases exercised by every document).
-    "x_multimodal_alaw" -> ((s, d) =>
-      Multimodal.decodeAudioFeatures(
-        Multimodal.packTextG711Wav(t(s, d, "documents"), "doc_id", "text", alaw = true),
-        "id", "media")),
-
-    // IMA ADPCM rung (fmt 0x11, 4-bit adaptive nibbles, stateful):
-    // lossy by design, so the gate is the jpegParity-style verdict
-    // table — decoded, meta-exact (fact-trimmed frame count), decoder
-    // output EQUAL to the encoder's tracked predictor path (the ADPCM
-    // analogue of FLAC's MD5 gate). No SNR column: adaptive-step
-    // coding has no honest fixed dB bound on noise-like byte signals.
-    "x_multimodal_adpcm" -> ((s, d) =>
-      Multimodal.adpcmParity(t(s, d, "documents"), "doc_id", "text")),
-
-    // ADPCM packer e2e through the media schema: packTextAdpcmWav →
-    // AudioPcm dispatch → feature decode. Samples are lossy (that
-    // contract lives in x_multimodal_adpcm); what IS oracle-exact is
-    // the container metadata — mono, declared rate, 16-bit working
-    // depth, fact-trimmed frame count == byte length — so the gate
-    // selects exactly those columns.
-    "x_multimodal_adpcm_pack" -> ((s, d) =>
-      Multimodal.decodeAudioFeatures(
-        Multimodal.packTextAdpcmWav(t(s, d, "documents"), "doc_id", "text"),
-        "id", "media")
-        .select(col("id"), col("channels"), col("sample_rate"), col("bits"),
-          col("n_samples"))),
-
-    // REAL BMP decode against an INDEPENDENT encoder: payloads are
-    // written by the JDK's ImageIO BMP writer (greyscale-palette
-    // indexed, pixels = the doc's UTF-8 bytes), decoded by BmpCodec's
-    // from-spec DIB parse (header walk, palette expansion, 4-byte row
-    // padding, bottom-up rows) — two implementations sharing zero
-    // code. Identity-grey palette means (v,v,v) output triplets, so
-    // the oracle flattens each expected byte into three, like GIF.
-    "x_multimodal_bmp_decode" -> ((s, d) =>
-      Multimodal.decodeImagePixels(
-        Multimodal.packTextBmp(t(s, d, "documents"), "doc_id", "text", width = 32),
-        "id", "media")),
-
-    // REAL GIF decode against an INDEPENDENT encoder: payloads are
-    // written by the JDK's ImageIO GIF writer (greyscale-palette
-    // indexed, pixels = the doc's UTF-8 bytes), decoded by GifCodec's
-    // from-spec LZW — two implementations that share zero code. The
-    // decoded channels are (v,v,v) triplets, so the oracle flattens
-    // each expected byte into three.
-    "x_multimodal_gif_decode" -> ((s, d) =>
-      Multimodal.decodeImagePixels(
-        Multimodal.packTextGif(t(s, d, "documents"), "doc_id", "text", width = 32),
-        "id", "media")),
-
-    // from-spec baseline JPEG decoder vs the JDK's independent
-    // ImageIO decoder: lossy JPEG pins no exact IDCT, so the contract
-    // is dims-exact + every sample within the rounding band; the
-    // oracle is the all-true verdict table the parity op must earn
-    "x_multimodal_jpeg_decode" -> ((s, d) =>
-      Multimodal.jpegParity(
-        Multimodal.packGrayJpeg(t(s, d, "documents"), "doc_id"),
-        "id", "media")),
-
-    // REAL resize on decoded pixels: an 8×8 greyscale PNG per doc
-    // (pixels = the 64 ASCII bytes of md5(id)||md5(id||'x'), so the
-    // oracle knows them), box-downsampled 2× to 4×4 by PngResizer —
-    // decode → exact integer quad-mean → re-encode — then decoded
-    // again for stats. The oracle re-derives all 16 output pixels
-    // arithmetically.
-    "x_multimodal_png_resize" -> ((s, d) => {
-      val synth = t(s, d, "documents").select(col("doc_id"),
-        concat(md5(col("doc_id").cast("string")),
-          md5(concat(col("doc_id").cast("string"), lit("x")))).as("text"))
-      val resized = Multimodal.resize(
-        Multimodal.packTextPng(synth, "doc_id", "text", width = 8),
-        "id", "media", width = 4, height = 4, resizer = new Multimodal.PngResizer())
-      val repacked = resized.select(col("id"), struct(
-        col("payload"), col("mime"),
-        struct(col("byte_len"), col("width"), col("height"),
-          lit(null).cast("long").as("duration_ms")).as("meta")).as("media"))
-      Multimodal.decodeImagePixels(repacked, "id", "media")
-    }),
-
-    // ==== extensions: similarity search ====
-    "x_ann_topk" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      Similarity.bruteForceTopK(
-        e.where(col("vec_id") < 10), e, "vec_id", "vec_id", "embedding", k = 5)
-        .withColumn("cosine", round(col("cosine"), 4))
-    }),
-    "x_ann_lsh" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      Similarity.lshTopK(
-        e.where(col("vec_id") < 10), e, "vec_id", "vec_id", "embedding",
-        k = 5, dim = 64, planes = 6)
-        .withColumn("cosine", round(col("cosine"), 4))
-    }),
-    // IVF quality contract, driver-checkable: recall@5 of the IVF
-    // tier (replicas=4: near-isotropic embeddings — this testdata —
-    // are IVF's worst case; multi-assignment buys the recall that
-    // cluster structure would otherwise provide, see IvfIndex.build),
-    // measured in-engine against the exact bruteForceTopK result. The
-    // oracle can't re-derive k-means cells, but it CAN check the
-    // contract: 10 queries, mean recall ≥ 0.9 (measured 0.92 at
-    // sf0.01; deterministic under the fixed seed). An IVF regression
-    // flips the boolean → hash mismatch. (The former rows-only
-    // x_ann_ivf entry is folded into this gate — same build + search
-    // configuration, but every emitted value is oracle-checkable.)
-    "x_ann_ivf_recall" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val q = e.where(col("vec_id") < 10)
-      val approx = Similarity.IvfIndex
-        .build(e, "vec_id", "embedding", dim = 64, nlist = 16, replicas = 4)
-        .search(q, "vec_id", "embedding", k = 5, nprobe = 4)
-      val exact = Similarity.bruteForceTopK(e.where(col("vec_id") < 10), e,
-        "vec_id", "vec_id", "embedding", k = 5)
-      Similarity.recallAt(approx, exact)
-        .agg(count(lit(1)).cast("long").as("n_queries"),
-          (avg(col("recall")) >= 0.9).as("mean_recall_ge_090"))
-    }),
-
-    // PQ quality contract, same pattern as x_ann_ivf_recall: ADC
-    // search over 16x16 codes (16 bytes/vector vs 256 raw) must keep
-    // mean recall@5 >= 0.3 vs the exact ranking. The bound is honest
-    // for NEAR-RANDOM vectors (this testdata is PQ's worst case — no
-    // structure to preserve; measured 0.44); PqSpec pins the
-    // structured-data behavior (cluster retrieval, planted twins).
-    // PCA/whitening contract (boolean gate, same shape as the recall
-    // gates): components orthonormal, eigenvalues descending, and the
-    // WHITENED projection's population variance is 1 on every kept
-    // direction — the variance check runs distributed over the table,
-    // so the gate exercises the codegen'd projection path end to end.
-    "x_embed_pca" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val m = graft.ops.Pca.fit(e, "embedding", dim = 64, k = 16)
-      val orthDev = (for (i <- 0 until 16; j <- i until 16) yield {
-        val dot = m.components(i).zip(m.components(j)).map { case (a, b) => a * b }.sum
-        math.abs(dot - (if (i == j) 1.0 else 0.0))
-      }).max
-      val monotone = m.eigenvalues.sliding(2).forall(w => w(0) >= w(1) - 1e-12)
-      val proj = m.project(e, "embedding", "w", whiten = true)
-      val varDevs = (1 to 16).map(j => abs(var_pop(element_at(col("w"), j)) - 1.0))
-      proj.agg(count(lit(1)).cast("long").as("n_vectors"),
-        (greatest(varDevs: _*) < 1e-6).as("whitened_unit_var"))
-        .withColumn("orthonormal", lit(orthDev < 1e-9))
-        .withColumn("eigen_monotone", lit(monotone))
-        .select("n_vectors", "orthonormal", "eigen_monotone", "whitened_unit_var")
-    }),
-    "x_ann_pq_recall" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val model = graft.ops.Pq.train(e, "embedding", dim = 64, m = 16, ksub = 16,
-        idCol = Some("vec_id"))
-      val enc = model.encode(e, "vec_id", "embedding")
-      val q = e.where(col("vec_id") < 10)
-      val approx = model.search(q, "vec_id", "embedding", enc, k = 5)
-      val exact = Similarity.bruteForceTopK(q, e, "vec_id", "vec_id", "embedding", k = 5)
-      Similarity.recallAt(approx, exact)
-        .agg(count(lit(1)).cast("long").as("n_queries"),
-          (avg(col("recall")) >= 0.3).as("mean_recall_ge_030"))
-    }),
-
-    // IVF×PQ composition gate, through the RESIDUAL formulation the
-    // README advertises (FAISS IndexIVFPQ shape): nprobe=8 of
-    // nlist=16 — probing bounds WHICH rows are scored, the 16-byte
-    // codes (m=16 subspaces × 8-bit codebooks, the standard FAISS
-    // IndexIVFPQ configuration) bound WHAT a row costs. The round-7
-    // ksub 16 → 256 move is the textbook recall lever at unchanged
-    // code BYTES (a 4-bit code wastes half of each byte): measured
-    // recall@5 0.44 → 0.88 at sf0.01 (curve in BASELINE.md), so the
-    // gate bound tightens 0.3 → 0.6. Same contract pattern as the
-    // other recall gates: the oracle asserts the bound, the engine
-    // measures it against exact bruteForceTopK.
-    "x_ann_ivfpq_recall" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val ix = graft.ops.Pq.IvfPq.build(e, "vec_id", "embedding", dim = 64,
-        nlist = 16, m = 16, ksub = 256, residual = true)
-      val q = e.where(col("vec_id") < 10)
-      val approx = graft.ops.Pq.IvfPq.search(ix, q, "vec_id", "embedding", k = 5, nprobe = 8)
-      val exact = Similarity.bruteForceTopK(q, e, "vec_id", "vec_id", "embedding", k = 5)
-      Similarity.recallAt(approx, exact)
-        .agg(count(lit(1)).cast("long").as("n_queries"),
-          (avg(col("recall")) >= 0.6).as("mean_recall_ge_060"))
-    }),
-
-    // ==== extensions: multimodal column plumbing ====
-    "x_multimodal_meta" -> ((s, d) =>
-      Multimodal.packText(t(s, d, "documents"), "text")
-        .select(col("doc_id"), col("media.mime").as("mime"),
-          col("media.meta.byte_len").as("byte_len"))),
-    // feature vector flattened to scalar columns: same
-    // driver-compare constraint as x_group_sample (no array cells)
-    "x_multimodal_features" -> ((s, d) => {
-      val f = Multimodal.extractFeatures(
-        Multimodal.packText(t(s, d, "documents"), "text"), "doc_id", "media")
-      f.select(col("id") +: col("byte_len") +:
-        (0 until 8).map(i => col("features")(i).cast("double").as(s"f$i")): _*)
-    }),
-
-    // ==== extensions: event-time windowing + sessionization (batch
-    // equivalents of graft.streaming) ====
-    "x_events_window" -> ((s, d) =>
-      events(s, d)
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,6)")).cast("double").as("total"))
-        .select(unix_millis(col("w.start")).as("ws_ms"), col("event_type"),
-          col("n"), col("total"))),
-    "x_sessionize" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val ev = events(s, d).select(col("user_id"), col("event_id"), col("value"),
-        unix_millis(col("ts")).as("ts_ms"))
-      val ord = Window.partitionBy(col("user_id")).orderBy(col("ts_ms"), col("event_id"))
-      val run = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ev.withColumn("__new",
-          when(col("ts_ms") - lag(col("ts_ms"), 1).over(ord) > 1800000L, 1).otherwise(0))
-        .withColumn("session_id", sum(col("__new")).over(run).cast("long"))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(min(col("ts_ms")).as("session_start_ms"),
-          max(col("ts_ms")).as("session_end_ms"),
-          count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value"))
-    }),
-
-    // ==== extensions: batch/stream parity gates — the SAME events
-    // history replayed through the file-stream source as time-ordered
-    // micro-batches must reproduce the batch answer (and therefore
-    // the DuckDB oracle) exactly. See graft.streaming.StreamParity
-    // for why in-order replay is the right arrival history to pin.
-    "x_stream_window" -> ((s, d) => {
-      import graft.streaming.{StreamParity, Streaming}
-      // decimal value BEFORE the stream: sum(decimal) is
-      // order-independent, so incremental per-batch accumulation is
-      // bit-equal to the batch/oracle aggregate
-      val ev = events(s, d).select(col("ts"), col("event_type"),
-        col("value").cast("decimal(18,6)").as("value"))
-      val dir = StreamParity.writeTimeOrderedChunks(ev, "ts", chunks = 4, cacheKey = Some(s"window:$d"))
-      val stream = Streaming.fileSource(s, dir.toString, ev.schema, maxFilesPerTrigger = 1)
-      val agg = Streaming.windowedAgg(stream, "ts", "event_type", "value",
-        window_ = "1 hour", watermark = "30 minutes")
-      val sink = s"x_stream_window_${System.nanoTime}"
-      // complete mode: every window survives to the end of the replay
-      // (append would hold back windows newer than the final watermark)
-      val q = Streaming.startMemorySink(agg, sink, mode = "complete")
-      try q.processAllAvailable() finally q.stop()
-      s.table(sink).select(unix_millis(col("window_start")).as("ws_ms"),
-        col("event_type"), col("n"), col("total").cast("double").as("total"))
-    }),
-    "x_stream_sessions" -> ((s, d) => {
-      import graft.streaming.{StreamParity, Streaming}
-      import s.implicits._
-      val gapMs = 1800000L
-      // value scaled to an exact integer-in-double (micros of value):
-      // the state machine accumulates doubles in arrival order, and
-      // integer-valued doubles sum exactly in ANY order, so the
-      // running total matches the oracle's decimal sum bit-for-bit
-      val ev = events(s, d).select(col("user_id"), col("ts"),
-        (col("value").cast("decimal(18,6)") * 1000000).cast("double").as("value"))
-      val maxMs = ev.agg(max(unix_millis(col("ts")))).head().getLong(0)
-      // one far-future sentinel per user closes every real session at
-      // end-of-stream; the sentinel sessions themselves stay open in
-      // state and are never emitted (append mode emits closed only)
-      val sentinels = ev.select("user_id").distinct()
-        .withColumn("ts", timestamp_millis(lit(maxMs + 10 * gapMs)))
-        .withColumn("value", lit(0.0))
-      val dir = StreamParity.writeTimeOrderedChunks(
-        ev.unionByName(sentinels), "ts", chunks = 5, cacheKey = Some(s"sessions:$d"))
-      val stream = Streaming.fileSource(s, dir.toString, ev.schema, maxFilesPerTrigger = 1)
-      val sess = Streaming.sessionize(stream.as[Streaming.SessionEvent], gapMs)
-      val sink = s"x_stream_sessions_${System.nanoTime}"
-      val q = Streaming.startMemorySink(sess.toDF(), sink)
-      try q.processAllAvailable() finally q.stop()
-      s.table(sink).select(col("user_id"),
-        unix_millis(col("session_start")).as("session_start_ms"),
-        unix_millis(col("session_end")).as("session_end_ms"),
-        col("n_events"),
-        col("total_value").cast("long").as("total_value_e6"))
-    }),
-
-    // ==== extension: EVENT-TIME-TIMEOUT sessionization — the
-    // production closing mechanism (no sentinel rows): a session
-    // emits either when a later gap-exceeding event of the same user
-    // arrives (closed by data) or when the watermark passes
-    // session_end + gap (closed by timeout). The oracle re-derives
-    // the emission set exactly: every non-last session per user is
-    // closed by data; the last session emits iff the FINAL watermark
-    // (hi − 30 min) strictly passes session_end + gap. Same
-    // value-scaling trick as x_stream_sessions (exact-integer doubles
-    // sum order-independently).
-    "x_stream_sessions_et" -> ((s, d) => {
-      import graft.streaming.{StreamParity, Streaming}
-      import s.implicits._
-      val gapMs = 1800000L
-      val ev = events(s, d).select(col("user_id"), col("ts"),
-        (col("value").cast("decimal(18,6)") * 1000000).cast("double").as("value"))
-      val (staged, _) = StreamParity.writeChunksInOrder(ev, "ts", 0 until 5,
-        cacheKey = Some(s"sessions_et:$d"))
-      val watched = java.nio.file.Files.createTempDirectory("x_stream_sessions_et_watch")
-      val stream = Streaming.fileSource(s, watched.toString, ev.schema, maxFilesPerTrigger = 1)
-        .withWatermark("ts", "30 minutes")
-      val sess = Streaming.sessionizeEventTime(stream.as[Streaming.SessionEvent], gapMs)
-      val sink = s"x_stream_sessions_et_${System.nanoTime}"
-      val q = Streaming.startMemorySink(sess.toDF(), sink)
-      try StreamParity.feedSequentially(staged, watched, q) finally q.stop()
-      s.table(sink).select(col("user_id"),
-        unix_millis(col("session_start")).as("session_start_ms"),
-        unix_millis(col("session_end")).as("session_end_ms"),
-        col("n_events"),
-        col("total_value").cast("long").as("total_value_e6"))
-    }),
-
-    // ==== extension: STREAM-STATIC join — the enrichment shape every
-    // ingestion pipeline has (stream facts × broadcast dimension).
-    // The dimension is derived deterministically from the same events
-    // history (user_id → cohort), so the oracle re-joins it exactly;
-    // the windowed aggregate over the enriched stream must reproduce
-    // the batch answer under in-order replay.
-    "x_stream_join" -> ((s, d) => {
-      import graft.streaming.{StreamParity, Streaming}
-      val ev = events(s, d).select(col("ts"), col("user_id"),
-        col("value").cast("decimal(18,6)").as("value"))
-      val dim = ev.select(col("user_id")).distinct()
-        .withColumn("cohort", pmod(col("user_id"), lit(7)))
-      val (staged, _) = StreamParity.writeChunksInOrder(ev, "ts", 0 until 4,
-        cacheKey = Some(s"join:$d"))
-      val watched = java.nio.file.Files.createTempDirectory("x_stream_join_watch")
-      val stream = Streaming.fileSource(s, watched.toString, ev.schema, maxFilesPerTrigger = 1)
-        .join(broadcast(dim), "user_id")
-      val agg = Streaming.windowedAgg(stream, "ts", "cohort", "value",
-        window_ = "1 hour", watermark = "30 minutes")
-      val sink = s"x_stream_join_${System.nanoTime}"
-      val q = Streaming.startMemorySink(agg, sink, mode = "complete")
-      try StreamParity.feedSequentially(staged, watched, q) finally q.stop()
-      s.table(sink).select(unix_millis(col("window_start")).as("ws_ms"),
-        col("cohort").cast("long").as("cohort"), col("n"),
-        col("total").cast("double").as("total"))
-    }),
-
-    // ==== extension: STREAM-STREAM interval join — the attribution
-    // shape (purchase matched to the same user's views in the 4 hours
-    // before it) with BOTH sides unbounded. Both streams watermark
-    // their event time and the join carries the range condition, so
-    // Spark derives the state-eviction bound from the interval: view
-    // state lives exactly [watermark - 4h, now] — bounded regardless
-    // of stream length, the property that distinguishes a viable
-    // 100 TB stream join from one whose state grows forever. Replayed
-    // time-ordered, the append-mode inner join must emit exactly the
-    // batch interval join (the DuckDB oracle).
-    "x_stream_stream_join" -> ((s, d) => {
-      import graft.streaming.{StreamParity, Streaming}
-      val ev = events(s, d).select(col("ts"), col("user_id"),
-        col("event_id"), col("event_type"))
-      val (staged, _) = StreamParity.writeChunksInOrder(ev, "ts", 0 until 4,
-        cacheKey = Some(s"ssjoin:$d"))
-      val watched = java.nio.file.Files.createTempDirectory("x_stream_stream_join_watch")
-      val purchases = Streaming.fileSource(s, watched.toString, ev.schema, maxFilesPerTrigger = 1)
-        .where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("purchase_event"))
-        .withWatermark("p_ts", "30 minutes")
-      val views = Streaming.fileSource(s, watched.toString, ev.schema, maxFilesPerTrigger = 1)
-        .where(col("event_type") === "view")
-        .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-          col("event_id").as("view_event"))
-        .withWatermark("v_ts", "30 minutes")
-      val joined = purchases.join(views,
-        col("user_id") === col("v_user") &&
-          col("v_ts") >= col("p_ts") - expr("interval 4 hours") &&
-          col("v_ts") <= col("p_ts"))
-      val sink = s"x_stream_stream_join_${System.nanoTime}"
-      val q = Streaming.startMemorySink(joined, sink)
-      try StreamParity.feedSequentially(staged, watched, q) finally q.stop()
-      s.table(sink).select(col("purchase_event"), col("view_event"),
-        unix_millis(col("p_ts")).as("p_ts_ms"), unix_millis(col("v_ts")).as("v_ts_ms"))
-    }),
-
-    // LEFT-OUTER stream-stream interval join — production attribution
-    // also needs the purchases with NO prior view. Structured
-    // Streaming holds an unmatched left row in state and emits it
-    // with nulls only once BOTH watermarks pass its join window, so a
-    // finite replay would strand every tail purchase in state: the
-    // fixture appends one far-future sentinel row per side (user −1,
-    // 10 h past max ts — outside every real join window) whose only
-    // job is to advance both watermarks past all real data, then the
-    // sentinels are filtered from the result. Oracle: the batch LEFT
-    // θ-join, hash-exact INCLUDING the null view columns.
-    "x_stream_stream_join_outer" -> ((s, d) => {
-      import graft.streaming.{StreamParity, Streaming}
-      import s.implicits._
-      val ev0 = events(s, d).select(col("ts"), col("user_id"),
-        col("event_id"), col("event_type"))
-      val hi = ev0.agg(max(col("ts"))).head().getTimestamp(0)
-      val flushTs = java.sql.Timestamp.from(hi.toInstant.plusSeconds(10 * 3600))
-      val sentinels = Seq(("purchase"), ("view")).toDF("event_type")
-        .select(lit(flushTs).as("ts"), lit(-1L).as("user_id"),
-          lit(-1L).as("event_id"), col("event_type"))
-      val ev = ev0.unionByName(sentinels)
-      val (staged, _) = StreamParity.writeChunksInOrder(ev, "ts", 0 until 4,
-        cacheKey = Some(s"ssjoin_outer:$d"))
-      val watched = java.nio.file.Files.createTempDirectory("x_stream_stream_join_outer_watch")
-      val purchases = Streaming.fileSource(s, watched.toString, ev.schema, maxFilesPerTrigger = 1)
-        .where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("purchase_event"))
-        .withWatermark("p_ts", "30 minutes")
-      val views = Streaming.fileSource(s, watched.toString, ev.schema, maxFilesPerTrigger = 1)
-        .where(col("event_type") === "view")
-        .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-          col("event_id").as("view_event"))
-        .withWatermark("v_ts", "30 minutes")
-      val joined = purchases.join(views,
-        col("user_id") === col("v_user") &&
-          col("v_ts") >= col("p_ts") - expr("interval 4 hours") &&
-          col("v_ts") <= col("p_ts"),
-        "left_outer")
-      val sink = s"x_stream_stream_join_outer_${System.nanoTime}"
-      val q = Streaming.startMemorySink(joined, sink)
-      try StreamParity.feedSequentially(staged, watched, q) finally q.stop()
-      s.table(sink).where(col("purchase_event") =!= -1L)
-        .select(col("purchase_event"), col("view_event"),
-          unix_millis(col("p_ts")).as("p_ts_ms"), unix_millis(col("v_ts")).as("v_ts_ms"))
-    }),
-
-    // ==== extension: STREAMING exact-dedup — at-least-once upstream
-    // delivery (every event arrives twice here) must yield
-    // exactly-once downstream. dropDuplicates keys INCLUDE the
-    // event-time column, so the watermark evicts old keys and state
-    // stays bounded by the delay window instead of growing with the
-    // stream — the property that makes streaming ingestion dedup
-    // viable at 100 TB. Oracle: the distinct event set.
-    "x_stream_dedup" -> ((s, d) => {
-      import graft.streaming.{StreamParity, Streaming}
-      val ev = events(s, d).select(col("ts"), col("event_id"), col("event_type"),
-        col("value").cast("decimal(18,6)").as("value"))
-      val dup = ev.unionByName(ev)
-      val (staged, _) = StreamParity.writeChunksInOrder(dup, "ts", 0 until 4,
-        cacheKey = Some(s"dedup:$d"))
-      val watched = java.nio.file.Files.createTempDirectory("x_stream_dedup_watch")
-      val stream = Streaming.fileSource(s, watched.toString, ev.schema, maxFilesPerTrigger = 1)
-        .withWatermark("ts", "30 minutes")
-        .dropDuplicates("event_id", "ts")
-      val sink = s"x_stream_dedup_${System.nanoTime}"
-      val q = Streaming.startMemorySink(stream, sink)
-      try StreamParity.feedSequentially(staged, watched, q) finally q.stop()
-      s.table(sink).select(unix_millis(col("ts")).as("ts_ms"), col("event_id"),
-        col("event_type"), col("value").cast("double").as("value"))
-    }),
-
-    // ==== extension: BOUNDED-FOREVER stream dedup — the crawl-
-    // frontier contract dropDuplicates can't give: fixed Bloom state
-    // for the stream's whole life. Same duplicated replay as
-    // x_stream_dedup; filter sized so the corpus has zero false
-    // positives, making the output exactly the distinct event set
-    // (and the run deterministic — same data, same bits, forever).
-    "x_stream_bloom_dedup" -> ((s, d) => {
-      import graft.streaming.{StreamParity, Streaming}
-      val ev = events(s, d).select(col("ts"), col("event_id"), col("event_type"),
-        col("value").cast("decimal(18,6)").as("value"))
-      val dup = ev.unionByName(ev)
-      val (staged, _) = StreamParity.writeChunksInOrder(dup, "ts", 0 until 4,
-        cacheKey = Some(s"bloomdedup:$d"))
-      val watched = java.nio.file.Files.createTempDirectory("x_stream_bloom_watch")
-      val src = Streaming.fileSource(s, watched.toString, ev.schema, maxFilesPerTrigger = 1)
-      val stream = Streaming.bloomDedup(src,
-        Seq("event_id", "ts"), mBits = 1 << 24, k = 4, nShards = 8)
-      val sink = s"x_stream_bloom_${System.nanoTime}"
-      val q = Streaming.startMemorySink(stream, sink)
-      try StreamParity.feedSequentially(staged, watched, q) finally q.stop()
-      s.table(sink).select(unix_millis(col("ts")).as("ts_ms"), col("event_id"),
-        col("event_type"), col("value").cast("double").as("value"))
-    }),
-
-    // ==== extension: OUT-OF-ORDER sessionization — the sorter
-    // pattern: arrivals buffer in state and fold into sessions only
-    // once the watermark releases them in EVENT-TIME order, so the
-    // same shuffled replay as x_stream_late must reproduce the batch
-    // segmentation over exactly the rows the arrival schedule keeps:
-    // dropped = at-or-below the watermark at arrival (self-enforced
-    // operator contract), unreleased = above the final watermark,
-    // last-session holdback as in x_stream_sessions_et. One oracle
-    // derives all three boundaries.
-    "x_stream_sessions_ooo" -> ((s, d) => {
-      import graft.streaming.{StreamParity, Streaming}
-      import s.implicits._
-      val gapMs = 1800000L
-      val ev = events(s, d).select(col("user_id"), col("ts"),
-        (col("value").cast("decimal(18,6)") * 1000000).cast("double").as("value"))
-      val (staged, _) = StreamParity.writeChunksInOrder(ev, "ts", Seq(1, 0, 3, 2, 5, 4),
-        cacheKey = Some(s"ooo:$d"))
-      val watched = java.nio.file.Files.createTempDirectory("x_stream_sessions_ooo_watch")
-      val stream = Streaming.fileSource(s, watched.toString, ev.schema, maxFilesPerTrigger = 1)
-        .withWatermark("ts", "30 minutes")
-      val sess = Streaming.sessionizeOutOfOrder(stream.as[Streaming.SessionEvent], gapMs)
-      val sink = s"x_stream_sessions_ooo_${System.nanoTime}"
-      val q = Streaming.startMemorySink(sess.toDF(), sink)
-      try StreamParity.feedSequentially(staged, watched, q) finally q.stop()
-      s.table(sink).select(col("user_id"),
-        unix_millis(col("session_start")).as("session_start_ms"),
-        unix_millis(col("session_end")).as("session_end_ms"),
-        col("n_events"),
-        col("total_value").cast("long").as("total_value_e6"))
-    }),
-
-    // ==== extension: OUT-OF-ORDER arrival — the late-data contract.
-    // The same events history replayed with chunks arriving in the
-    // fixed permutation (1,0,3,2,5,4): every chunk is at most one
-    // position early/late, so the watermark schedule is deterministic
-    // arithmetic over (chunk time ranges, arrival positions) and the
-    // DuckDB oracle re-derives EXACTLY which rows the watermark must
-    // drop (and which straddler windows therefore finalize with
-    // partial counts) — late-data semantics as a checked contract,
-    // not a demo. Append mode: a window is emitted once, when the
-    // watermark passes its end; trailing windows never finalize and
-    // the oracle excludes them the same way.
-    "x_stream_late" -> ((s, d) => {
-      import graft.streaming.{StreamParity, Streaming}
-      val ev = events(s, d).select(col("ts"), col("event_type"),
-        col("value").cast("decimal(18,6)").as("value"))
-      val (staged, _) = StreamParity.writeChunksInOrder(ev, "ts", Seq(1, 0, 3, 2, 5, 4),
-        cacheKey = Some(s"late:$d"))
-      val watched = java.nio.file.Files.createTempDirectory("x_stream_late_watch")
-      val stream = Streaming.fileSource(s, watched.toString, ev.schema, maxFilesPerTrigger = 1)
-      val agg = Streaming.windowedAgg(stream, "ts", "event_type", "value",
-        window_ = "1 hour", watermark = "30 minutes")
-      val sink = s"x_stream_late_${System.nanoTime}"
-      val q = Streaming.startMemorySink(agg, sink, mode = "append")
-      try StreamParity.feedSequentially(staged, watched, q) finally q.stop()
-      s.table(sink).select(unix_millis(col("window_start")).as("ws_ms"),
-        col("event_type"), col("n"), col("total").cast("double").as("total"))
-    }),
-
-    // ==== extensions: sketches. HLL/quantile internals are
-    // engine-specific so the ESTIMATES can't hash-match another
-    // engine; the CONTRACT can (same shape as the ANN recall gates):
-    // compute the exact answers alongside the sketches in one pass,
-    // hash-check the exact values against DuckDB, and assert the
-    // estimates land within the declared relative error (HLL++ rsd
-    // 0.02 → 5% bound = 2.5σ; quantile sketch at accuracy 10000 →
-    // ≤ n/10000 rank error, 1% value bound). Sketches are
-    // deterministic for fixed data, so the verdicts are stable. ====
-    // two aggregations joined on the 3-row group key, NOT one: mixing
-    // countDistinct with the percentile aggregates triggers the
-    // distinct-Expand rewrite, which drags the value-buffering
-    // ObjectHashAggregate through doubled rows with partial
-    // aggregation degraded — measured 29.3 s vs 3.0 s for this split
-    // at sf0.1 (each branch alone: ≤1.2 s; the scan is read twice but
-    // both passes are partial-agg-friendly)
-    "x_approx" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-      val counts = li.groupBy(col("l_returnflag"))
-        .agg(
-          countDistinct(col("l_partkey")).cast("long").as("exact_parts"),
-          approx_count_distinct(col("l_partkey"), rsd = 0.02).as("ad"))
-      val pcts = li.groupBy(col("l_returnflag"))
-        .agg(
-          expr("percentile(l_extendedprice, 0.5)").as("ep"),
-          percentile_approx(col("l_extendedprice"), lit(0.5), lit(10000)).as("ap"))
-      counts.join(pcts, Seq("l_returnflag"))
-        .select(col("l_returnflag"), col("exact_parts"),
-          (abs(col("ad") - col("exact_parts")) <= col("exact_parts") * lit(0.05))
-            .as("parts_within_5pct"),
-          (abs(col("ap") - col("ep")) <= abs(col("ep")) * lit(0.01))
-            .as("p50_within_1pct"))
-    }),
-
-    // ==== sqlite data plane (reference main.py:130-138 source,
-    // main.py:326-341 sink) via the pure-Scala file codec — a REAL
-    // .db file is written and read back inside the query, so the gate
-    // exercises the full encode→decode path with typed storage
-    // classes (INTEGER/REAL/TEXT). `table` mode round-trip: ====
-    "q_sqlite_roundtrip" -> ((s, d) => {
-      val db = java.nio.file.Files.createTempDirectory("graft_sqlite_gate")
-        .resolve("roundtrip.db").toString
-      val nation = t(s, d, "nation").select(
-        col("n_nationkey").cast("long").as("n_nationkey"),
-        col("n_name"),
-        col("n_regionkey").cast("long").as("n_regionkey"),
-        (col("n_nationkey") * lit(1.5)).as("score"))
-      graft.catalog.SqliteData.write(db, "nation_rt", nation, overwrite = true)
-      graft.catalog.SqliteData.readTable(s, db, "nation_rt")
-    }),
-    // ORC data plane: typed round-trip through the REAL sink/source
-    // dispatch (SinkWriter orc → SourceReader orc), the same gate
-    // shape as the sqlite data plane — the driver's compare proves
-    // values survive the format, not just that the code compiles.
-    // Range-clustered relayout is CORRECTNESS-preserving: cluster
-    // lineitem by l_shipdate into 8 disjoint-range sorted files, then
-    // answer a date-range aggregate from the clustered copy — the
-    // oracle answers it from the original table. ScaleSpec separately
-    // asserts the pruning property (disjoint per-file key ranges).
-    "q_layout_cluster" -> ((s, d) => {
-      val out = java.nio.file.Files.createTempDirectory("q_layout_cluster")
-        .resolve("li").toString
-      graft.ops.Layout.writeRangeClustered(
-        t(s, d, "lineitem"), out, Seq("l_shipdate"), numFiles = 8)
-      s.read.parquet(out)
-        .where(col("l_shipdate").between("1996-01-01", "1996-12-31"))
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("l_quantity").cast("decimal(38,6)")).cast("double").as("sum_qty"))
-    }),
-    // Raw-text roundtrip: documents → one line per doc through the
-    // text sink → read back through the text source. The corpus
-    // contract (no embedded newlines) is the format's own contract;
-    // lines are self-identifying so the unordered read hash-matches.
-    "q_text_roundtrip" -> ((s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_text_gate")
-        .resolve("docs_txt").toString
-      val lines = docs(s, d)
-        .select(concat(col("doc_id"), lit("|"), col("text")).as("value"))
-      graft.sinks.SinkWriter.write(lines,
-        graft.spec.SinkSpec("text_out", "text", graft.spec.Config.of("path" -> dir)))
-      graft.sources.SourceReader.read(s,
-        graft.spec.SourceSpec("text_in", "text", graft.spec.Config.of("path" -> dir)))
-    }),
-    "q_orc_roundtrip" -> ((s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_orc_gate")
-        .resolve("nation_orc").toString
-      val nation = t(s, d, "nation").select(
-        col("n_nationkey").cast("long").as("n_nationkey"),
-        col("n_name"),
-        col("n_regionkey").cast("long").as("n_regionkey"),
-        (col("n_nationkey") * lit(1.5)).as("score"))
-      graft.sinks.SinkWriter.write(nation,
-        graft.spec.SinkSpec("orc_out", "orc", graft.spec.Config.of("path" -> dir)))
-      graft.sources.SourceReader.read(s,
-        graft.spec.SourceSpec("orc_in", "orc", graft.spec.Config.of("path" -> dir)))
-    }),
-
-    // `query` mode: the reference's arbitrary-SQL source config,
-    // re-expressed as Catalyst SQL over the file's tables-as-views
-    "q_sqlite_query" -> ((s, d) => {
-      val db = java.nio.file.Files.createTempDirectory("graft_sqlite_gate")
-        .resolve("query.db").toString
-      val nation = t(s, d, "nation").select(
-        col("n_nationkey").cast("long").as("n_nationkey"),
-        col("n_name"),
-        col("n_regionkey").cast("long").as("n_regionkey"))
-      graft.catalog.SqliteData.write(db, "nation_rt", nation, overwrite = true)
-      graft.catalog.SqliteData.readQuery(s, db,
-        "SELECT n_regionkey, count(*) AS cnt, sum(n_nationkey) AS key_sum " +
-          "FROM nation_rt GROUP BY n_regionkey")
-    }),
-  )
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    */
-  /** PageRank oracle: the power iteration UNROLLED as chained CTEs
-    * (recursive CTEs cannot aggregate over the recursive table, so
-    * the iterations are generated) — same planted edge set, same
-    * dangling-mass correction, same formula, rank rounded to 6 dp
-    * (float-summation order differs between engines at ~1e-16;
-    * values are ~1e-2). */
-  private def pagerankOracleSql(iters: Int): String = {
-    val base = """
-      WITH edges AS (
-        SELECT DISTINCT 'h' || CAST(doc_id % 13 AS VARCHAR) AS src,
-               'h' || CAST((doc_id * 7 + 3) % 29 AS VARCHAR) AS dst
-        FROM documents WHERE doc_id % 4 <> 0),
-      nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-      deg AS (SELECT src, CAST(COUNT(*) AS DOUBLE) AS deg FROM edges GROUP BY src),
-      nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
-      r0 AS (SELECT node, CAST(1 AS DOUBLE) / nn.n AS rank FROM nodes, nn)"""
-    val steps = (1 to iters).map { i =>
-      s""",
-      d$i AS (SELECT COALESCE(SUM(r.rank), 0) AS dm
-              FROM r${i - 1} r LEFT JOIN deg ON r.node = deg.src WHERE deg.src IS NULL),
-      c$i AS (SELECT e.dst AS node, SUM(r.rank / g.deg) AS contrib
-              FROM edges e JOIN r${i - 1} r ON e.src = r.node JOIN deg g ON g.src = e.src
-              GROUP BY e.dst),
-      r$i AS (SELECT n.node,
-                     (1 - 0.85) / nn.n + 0.85 * (COALESCE(c.contrib, 0) + d$i.dm / nn.n) AS rank
-              FROM nodes n CROSS JOIN nn CROSS JOIN d$i LEFT JOIN c$i c ON n.node = c.node)"""
-    }.mkString
-    s"$base$steps\n      SELECT node, ROUND(rank, 6) AS rank FROM r$iters"
+  /** Every gate, each declared once in its family file. */
+  val gates: Seq[Gate] = CoreGates.gates ++ TextGates.gates ++ DedupGates.gates ++
+    MediaGates.gates ++ TableGates.gates ++ StreamGates.gates
+
+  /** The named gates, in the given order; fails naming every unknown one. */
+  def select(names: Seq[String]): Seq[Gate] = {
+    val byName = gates.map(g => g.name -> g).toMap
+    val unknown = names.filterNot(byName.contains)
+    if (unknown.nonEmpty)
+      throw new GraftAnalysisException(s"unknown gate(s): ${unknown.mkString(", ")}")
+    names.distinct.map(byName)
   }
-
-  def oracleSql: Map[String, String] = Map(
-    // link-graph PageRank: 5 unrolled power iterations (generated)
-    "x_pagerank" -> pagerankOracleSql(5),
-
-    // robots sitemap directives: one or two per doc by id%3, the
-    // commented one never
-    "x_robots_sitemaps" -> """
-      SELECT doc_id, CAST(seq AS INTEGER) AS seq, sitemap_url FROM (
-        SELECT doc_id, 0 AS seq,
-               'https://h' || (doc_id % 5) || '.example.com/sitemap' || doc_id || '.xml' AS sitemap_url
-        FROM documents
-        UNION ALL
-        SELECT doc_id, 1,
-               'https://h' || (doc_id % 5) || '.example.com/extra' || doc_id || '.xml'
-        FROM documents WHERE doc_id % 3 = 0)""",
-
-    // registrable domain: all eight selection-rung classes replayed
-    // from doc_id arithmetic
-    "x_registrable_domain" -> """
-      SELECT doc_id, host,
-             CASE doc_id % 10
-               WHEN 0 THEN 'ex' || doc_id || '.com'
-               WHEN 1 THEN 'ex' || doc_id || '.com'
-               WHEN 2 THEN 'ex' || doc_id || '.co.uk'
-               WHEN 3 THEN NULL
-               WHEN 4 THEN 'x' || doc_id || '.b.ck'
-               WHEN 5 THEN 'www.ck'
-               WHEN 6 THEN 'www.ck'
-               WHEN 7 THEN 'xn--bcher-kva.com'
-               WHEN 8 THEN 'xn--bcher-kva.com'
-               ELSE 'page' || doc_id || '.zz' END AS reg_domain
-      FROM (SELECT doc_id,
-              CASE doc_id % 10
-                WHEN 0 THEN 'ex' || doc_id || '.com'
-                WHEN 1 THEN 'www.ex' || doc_id || '.com'
-                WHEN 2 THEN 'deep.sub.ex' || doc_id || '.co.uk'
-                WHEN 3 THEN 'co.uk'
-                WHEN 4 THEN 'x' || doc_id || '.b.ck'
-                WHEN 5 THEN 'www.ck'
-                WHEN 6 THEN 'a' || doc_id || '.www.ck'
-                WHEN 7 THEN 'sub' || doc_id || '.BÜcher.com'
-                WHEN 8 THEN 'a' || doc_id || '.xn--bcher-kva.com'
-                ELSE 'page' || doc_id || '.zz' END AS host
-            FROM documents)""",
-
-    // feed parse: RSS guid conventions + Atom link-rel rule replayed
-    // from doc_id arithmetic
-    "x_feed_parse" -> """
-      WITH d AS (SELECT doc_id, doc_id % 2 = 0 AS rss FROM documents)
-      SELECT doc_id AS id, CAST(seq AS INTEGER) AS seq, format, title, link,
-             entry_id, published, summary FROM (
-        SELECT doc_id, 0 AS seq, 'rss' AS format,
-               'Post ' || doc_id AS title,
-               'https://example.com/p/' || doc_id AS link,
-               'id-' || doc_id AS entry_id,
-               'Thu, 01 Jan 2026 10:0' || (doc_id % 6) || ':00 GMT' AS published,
-               'From shard ' || (doc_id % 7) AS summary
-        FROM d WHERE rss
-        UNION ALL
-        SELECT doc_id, 1, 'rss', NULL,
-               'https://example.com/g/' || doc_id,
-               'https://example.com/g/' || doc_id, NULL, NULL
-        FROM d WHERE rss
-        UNION ALL
-        SELECT doc_id, 0, 'atom', 'Entry ' || doc_id,
-               'https://example.com/a/' || doc_id,
-               'tag:example.com,2026:' || doc_id,
-               '2026-03-0' || ((doc_id % 9) + 1) || 'T00:00:00Z',
-               'spaced summary ' || doc_id
-        FROM d WHERE NOT rss
-        UNION ALL
-        SELECT doc_id, 1, 'atom', 'E2',
-               'https://example.com/b/' || doc_id, 't2:' || doc_id,
-               '2026-05-01T00:00:00Z', NULL
-        FROM d WHERE NOT rss)""",
-
-    // sitemap parse: urlset/sitemapindex field surface + location
-    // rule replayed from doc_id arithmetic (invalid changefreq /
-    // out-of-range priority null)
-    "x_sitemap_parse" -> """
-      WITH d AS (SELECT doc_id, doc_id % 2 = 0 AS us,
-                        (doc_id % 9) + 1 AS n, doc_id % 7 AS f
-                 FROM documents)
-      SELECT doc_id AS id, CAST(seq AS INTEGER) AS seq, kind, loc, lastmod,
-             changefreq, priority, in_scope FROM (
-        SELECT doc_id, 0 AS seq, 'url' AS kind,
-               'https://example.com/s/' || doc_id || '/a?x=1&y=2' AS loc,
-               '2026-01-0' || n AS lastmod,
-               CASE f WHEN 0 THEN 'always' WHEN 1 THEN 'hourly'
-                      WHEN 2 THEN 'daily' WHEN 3 THEN 'weekly'
-                      WHEN 4 THEN 'monthly' WHEN 5 THEN 'yearly'
-                      ELSE 'never' END AS changefreq,
-               CAST('0.' || n AS DOUBLE) AS priority, true AS in_scope
-        FROM d WHERE us
-        UNION ALL
-        SELECT doc_id, 1, 'url', 'https://example.com/s/' || doc_id || '/c',
-               NULL, NULL, NULL, true FROM d WHERE us
-        UNION ALL
-        SELECT doc_id, 2, 'url', 'https://other.org/x/' || doc_id,
-               NULL, NULL, NULL, false FROM d WHERE us
-        UNION ALL
-        SELECT doc_id, 0, 'sitemap',
-               'https://example.com/s/' || doc_id || '/part1.xml',
-               '2026-02-11', NULL, NULL, true FROM d WHERE NOT us
-        UNION ALL
-        SELECT doc_id, 1, 'sitemap',
-               'https://example.com/t/' || doc_id || '/part2.xml',
-               NULL, NULL, NULL, false FROM d WHERE NOT us)""",
-
-    // html link extraction: all six resolution classes + base-element
-    // rebase replayed from doc_id arithmetic
-    "x_html_links" -> """
-      WITH d AS (SELECT doc_id, doc_id % 2 = 1 AS hb FROM documents)
-      SELECT doc_id AS id, link, anchor, CAST(seq AS INTEGER) AS seq,
-             seq = 5 AS nofollow FROM (
-        SELECT doc_id,
-               CASE WHEN hb THEN 'https://based.org/doc/'
-                    ELSE 'https://example.com/doc/' END || doc_id AS link,
-               'root ' || doc_id AS anchor, 0 AS seq FROM d
-        UNION ALL
-        SELECT doc_id,
-               CASE WHEN hb THEN 'https://based.org/rel/'
-                    ELSE 'https://example.com/a/rel/' END || doc_id,
-               'up', 1 FROM d
-        UNION ALL
-        SELECT doc_id,
-               CASE WHEN hb THEN 'https://based.org/z/g'
-                    ELSE 'https://example.com/a/b/g' END,
-               'bold g', 2 FROM d
-        UNION ALL
-        SELECT doc_id,
-               CASE WHEN hb THEN 'https://based.org/z/?q=' || doc_id || '&v=2'
-                    ELSE 'https://example.com/a/b/c' || doc_id ||
-                         '?q=' || doc_id || '&v=2' END,
-               'q', 3 FROM d
-        UNION ALL
-        SELECT doc_id, 'https://other.org/p/' || doc_id, 'abs', 4 FROM d
-        UNION ALL
-        SELECT doc_id, 'https://cdn.net/x/' || doc_id, 'cdn', 5 FROM d)""",
-    "q_filter_gt" -> "SELECT * FROM lineitem WHERE l_quantity > 24",
-    "q_filter_contains" -> "SELECT * FROM part WHERE p_type LIKE '%MED%'",
-    "q_filter_notnull" -> "SELECT * FROM documents WHERE text IS NOT NULL AND text <> ''",
-    "q_filter_in" ->
-      "SELECT event_id, user_id, event_type, value FROM events WHERE event_type IN ('signup','purchase')",
-    "q_map_upper" -> "SELECT p_partkey, p_type, upper(p_type) AS p_type_up FROM part",
-    "q_map_cast" ->
-      "SELECT l_orderkey, l_linenumber, l_returnflag, TRY_CAST(l_returnflag AS BIGINT) AS rf_num FROM lineitem",
-    "q_agg" -> """
-      SELECT l_returnflag, l_linestatus, count(*) AS cnt,
-             CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty,
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_price,
-             CAST(sum(CAST(l_discount AS DECIMAL(38,6))) AS DOUBLE) / count(l_discount) AS avg_disc,
-             min(l_extendedprice) AS min_price, max(l_extendedprice) AS max_price
-      FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-    "q_agg_global" -> """
-      SELECT count(*) AS cnt,
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS total,
-             count(DISTINCT l_partkey) AS nparts
-      FROM lineitem""",
-    "q_agg_rollup" -> """
-      SELECT l_returnflag, l_linestatus, count(*) AS cnt,
-             CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty
-      FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
-    "q_join_inner" -> """
-      SELECT o.*, c.c_custkey AS r_c_custkey, c.c_name AS r_c_name,
-             c.c_nationkey AS r_c_nationkey, c.c_acctbal AS r_c_acctbal,
-             c.c_mktsegment AS r_c_mktsegment
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey""",
-    "q_join_salted" -> """
-      SELECT o.*, c.c_custkey AS r_c_custkey, c.c_name AS r_c_name,
-             c.c_nationkey AS r_c_nationkey, c.c_acctbal AS r_c_acctbal,
-             c.c_mktsegment AS r_c_mktsegment
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey""",
-    "q_join_left" -> """
-      SELECT c.*, n.n_nationkey AS r_n_nationkey, n.n_name AS r_n_name,
-             n.n_regionkey AS r_n_regionkey
-      FROM customer c LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey""",
-    "q_join_semi" ->
-      "SELECT * FROM customer c WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)",
-    "q_join_anti" ->
-      "SELECT * FROM customer c WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)",
-    "q_sort_topk" ->
-      "SELECT * FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 100",
-    "q_dedup_first" -> """
-      SELECT event_id, user_id, event_type, value, epoch_ms(ts) AS ts_ms, props
-      FROM (SELECT *, row_number() OVER (PARTITION BY user_id, event_type ORDER BY event_id) AS __rn
-            FROM events) WHERE __rn = 1""",
-    "q_select_rename" ->
-      "SELECT c_custkey, c_name AS customer_name, c_acctbal FROM customer",
-    "q_union" -> """
-      SELECT c_custkey AS id, c_name AS name, c_acctbal AS acctbal,
-             c_mktsegment, CAST(NULL AS INTEGER) AS s_nationkey
-      FROM customer
-      UNION ALL
-      SELECT s_suppkey, s_name, s_acctbal, CAST(NULL AS VARCHAR), s_nationkey
-      FROM supplier""",
-    "q_window_rank" -> """
-      SELECT * FROM (
-        SELECT o.*, row_number() OVER (PARTITION BY o_custkey
-                 ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-        FROM orders o) WHERE rn <= 3""",
-    "q_window_running" -> """
-      SELECT o_custkey, o_orderkey, o_orderdate,
-             count(*) OVER w AS n_so_far,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(38,6))) OVER w AS DOUBLE) AS spend_so_far
-      FROM orders
-      WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""",
-    "q_scalar" -> """
-      SELECT o_orderkey, year(o_orderdate) AS y, month(o_orderdate) AS m,
-             substr(o_orderpriority, 1, 1) AS pri, length(o_orderpriority) AS plen,
-             concat(o_orderstatus, '-', o_orderpriority) AS tag,
-             CAST(floor(o_totalprice) AS BIGINT) AS fl,
-             CAST(ceil(o_totalprice) AS BIGINT) AS ce
-      FROM orders""",
-    "q_case" -> """
-      SELECT l_orderkey, l_linenumber,
-             CASE WHEN l_quantity < 10 THEN 'low'
-                  WHEN l_quantity < 30 THEN 'mid' ELSE 'high' END AS qty_band,
-             coalesce(nullif(l_returnflag, 'N'), 'none') AS rf
-      FROM lineitem""",
-
-    "q_filter_date" -> """
-      SELECT l_orderkey, l_linenumber, l_shipdate FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'""",
-    "q_top_customers" -> """
-      SELECT c_custkey, c_name,
-             CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue,
-             count(DISTINCT o_orderkey) AS n_orders
-      FROM lineitem
-      JOIN orders ON l_orderkey = o_orderkey AND o_orderstatus = 'F'
-      JOIN customer ON o_custkey = c_custkey
-      GROUP BY c_custkey, c_name
-      ORDER BY revenue DESC, c_custkey ASC LIMIT 50""",
-    "q_region_sales" -> """
-      SELECT r_name, n_name, count(*) AS n_orders,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total_sales
-      FROM orders
-      JOIN customer ON o_custkey = c_custkey
-      JOIN nation ON c_nationkey = n_nationkey
-      JOIN region ON n_regionkey = r_regionkey
-      GROUP BY r_name, n_name""",
-    "q_pivot" -> """
-      SELECT l_returnflag,
-             count(*) FILTER (WHERE l_linestatus = 'F') AS "F",
-             count(*) FILTER (WHERE l_linestatus = 'O') AS "O"
-      FROM lineitem GROUP BY l_returnflag""",
-    "q_unpivot" -> """
-      SELECT l_orderkey, l_linenumber, metric, val FROM (
-        UNPIVOT (SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice FROM lineitem)
-        ON l_quantity, l_extendedprice INTO NAME metric VALUE val)""",
-    "q_explode" -> """
-      SELECT doc_id, CAST(unnest(range(len(toks))) AS INTEGER) AS tok_pos,
-             unnest(toks) AS tok_value
-      FROM (SELECT doc_id,
-              list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-            FROM documents)""",
-    "q_distinct" -> "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
-    "q_intersect" -> """
-      SELECT c_custkey AS key FROM customer WHERE c_mktsegment = 'BUILDING'
-      INTERSECT
-      SELECT o_custkey FROM orders""",
-    "q_except" -> """
-      SELECT o_custkey AS key FROM orders
-      EXCEPT
-      SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'""",
-    "q_join_multikey" -> """
-      SELECT a.l_orderkey, a.l_linenumber, a.l_quantity,
-             b.l_orderkey AS r_l_orderkey, b.l_linenumber AS r_l_linenumber,
-             b.l_extendedprice AS r_l_extendedprice
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_linenumber = b.l_linenumber""",
-    "q_scalar2" -> """
-      SELECT o_orderkey, sqrt(o_totalprice) AS sq,
-             abs(o_totalprice - 100000.0) AS ab,
-             lpad(o_orderstatus, 3, '_') AS lp,
-             regexp_replace(o_orderpriority, '-', '_', 'g') AS rp,
-             regexp_extract(o_orderpriority, '^(\d+)', 1) AS pnum,
-             CAST(day(o_orderdate) AS BIGINT) AS dom,
-             CAST(quarter(o_orderdate) AS BIGINT) AS qtr,
-             epoch_ms(date_trunc('month', o_orderdate)) AS month_ms
-      FROM orders""",
-
-    "q_join_full" -> """
-      SELECT f.o_custkey, f.n_f, p.o_custkey AS r_o_custkey, p.n_p AS r_n_p
-      FROM (SELECT o_custkey, count(*) AS n_f FROM orders WHERE o_orderstatus = 'F' GROUP BY 1) f
-      FULL JOIN (SELECT o_custkey, count(*) AS n_p FROM orders WHERE o_orderstatus = 'P' GROUP BY 1) p
-        ON f.o_custkey = p.o_custkey""",
-    "q_join_right" -> """
-      SELECT o.*, c.c_custkey AS r_c_custkey, c.c_name AS r_c_name,
-             c.c_nationkey AS r_c_nationkey, c.c_acctbal AS r_c_acctbal,
-             c.c_mktsegment AS r_c_mktsegment
-      FROM (SELECT * FROM orders WHERE o_orderstatus = 'P') o
-      RIGHT JOIN customer c ON o.o_custkey = c.c_custkey""",
-    "q_join_cross" -> """
-      SELECT r.*, n.n_nationkey AS r_n_nationkey, n.n_name AS r_n_name,
-             n.n_regionkey AS r_n_regionkey
-      FROM region r CROSS JOIN nation n""",
-    "q_agg_cube" -> """
-      SELECT l_returnflag, l_linestatus, count(*) AS cnt,
-             CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty
-      FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""",
-    "q_agg_filter" -> """
-      SELECT l_returnflag, count(*) AS cnt,
-             CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) FILTER (WHERE l_linestatus = 'F') AS DOUBLE) AS qty_f,
-             count(*) FILTER (WHERE l_discount > 0.05) AS n_hidisc,
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) FILTER (WHERE l_shipdate >= TIMESTAMP '1997-01-01') AS DOUBLE) AS rev_97plus
-      FROM lineitem GROUP BY l_returnflag""",
-    "q_string_agg" -> """
-      SELECT o_orderpriority,
-             array_to_string(list_sort(list(DISTINCT o_orderstatus)), ',') AS statuses,
-             count(DISTINCT o_custkey) AS n_cust
-      FROM orders GROUP BY o_orderpriority""",
-    "q_stats_exact" -> """
-      WITH g AS (
-        SELECT l_returnflag, count(l_quantity) AS n,
-               CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sq,
-               CAST(sum(CAST(l_quantity * l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sq2,
-               CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS sp,
-               CAST(sum(CAST(l_extendedprice * l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS sp2,
-               CAST(sum(CAST(l_quantity * l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS sqp
-        FROM lineitem GROUP BY l_returnflag)
-      SELECT l_returnflag, n,
-             sq / CAST(n AS DOUBLE) AS mean_qty,
-             sqrt((sq2 - sq * sq / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0)) AS sd_qty,
-             (CAST(n AS DOUBLE) * sqp - sq * sp) /
-               (sqrt(CAST(n AS DOUBLE) * sq2 - sq * sq) * sqrt(CAST(n AS DOUBLE) * sp2 - sp * sp)) AS corr_qp
-      FROM g""",
-    "q_percentile" -> """
-      SELECT o_orderpriority,
-             round(quantile_cont(o_totalprice, 0.25), 6) AS p25,
-             round(quantile_cont(o_totalprice, 0.5), 6) AS p50,
-             round(quantile_cont(o_totalprice, 0.75), 6) AS p75,
-             min(o_totalprice) AS mn, max(o_totalprice) AS mx
-      FROM orders GROUP BY o_orderpriority""",
-    "q_window_lag" -> """
-      SELECT o_custkey, o_orderkey,
-             lag(o_totalprice, 1) OVER w AS prev_price,
-             lead(o_orderkey, 1) OVER w AS next_key,
-             first_value(o_totalprice) OVER w AS first_price,
-             CAST(ntile(4) OVER w AS BIGINT) AS nt,
-             percent_rank() OVER w AS pr,
-             cume_dist() OVER w AS cd
-      FROM orders
-      WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""",
-    "q_window_range" -> """
-      SELECT o_custkey, o_orderkey, ms,
-             count(*) OVER w AS n_30d,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(38,6))) OVER w AS DOUBLE) AS spend_30d
-      FROM (SELECT o_custkey, o_orderkey, o_totalprice, epoch_ms(o_orderdate) AS ms FROM orders)
-      WINDOW w AS (PARTITION BY o_custkey ORDER BY ms
-                   RANGE BETWEEN 2592000000 PRECEDING AND CURRENT ROW)""",
-    "q_date_funcs" -> """
-      SELECT o_orderkey,
-             strftime(CAST(o_orderdate AS DATE) + 30, '%Y-%m-%d') AS d30,
-             strftime(last_day(CAST(o_orderdate AS DATE)), '%Y-%m-%d') AS eom,
-             strftime(CAST(CAST(o_orderdate AS DATE) + INTERVAL 2 MONTH AS DATE), '%Y-%m-%d') AS m2,
-             CAST(dayofweek(o_orderdate) + 1 AS BIGINT) AS dow,
-             CAST(weekofyear(o_orderdate) AS BIGINT) AS woy,
-             CAST(datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS dd
-      FROM orders""",
-    "q_string_funcs" -> """
-      SELECT o_orderkey,
-             reverse(o_orderpriority) AS rev,
-             repeat(o_orderstatus, 3) AS rep,
-             translate(o_orderpriority, '-', '_') AS tr,
-             split_part(o_orderpriority, '-', 2) AS sp,
-             CAST(strpos(o_orderpriority, '-') AS BIGINT) AS pos,
-             starts_with(o_orderpriority, '1') AS sw,
-             left(o_orderpriority, 3) AS lft,
-             right(o_orderpriority, 3) AS rgt
-      FROM orders""",
-    "q_json_funcs" -> """
-      SELECT event_id,
-             json_extract_string(props, '$.k') AS k_str,
-             CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_num,
-             json_extract_string(props, '$.missing') AS m
-      FROM events""",
-    "q_array_funcs" -> """
-      SELECT doc_id,
-             CAST(len(toks) AS BIGINT) AS ntok,
-             array_to_string(toks[1:3], ' ') AS first3,
-             list_contains(toks, 'the') AS has_the,
-             list_aggregate(toks, 'min') AS tok_min,
-             list_aggregate(toks, 'max') AS tok_max,
-             CAST(len(list_distinct(toks)) AS BIGINT) AS nuniq
-      FROM (SELECT doc_id,
-              list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-            FROM documents)""",
-    "q_sql_join" -> """
-      SELECT o_orderpriority, count(*) AS n,
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS rev
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-      GROUP BY o_orderpriority""",
-    "x_asof_join" -> """
-      -- deterministic asof: DuckDB's ASOF JOIN leaves the pick among
-      -- right rows tied on ts unspecified; this window formulation pins
-      -- the same (max ts_us, then max event_id) tiebreak the Spark op uses
-      WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-                 FROM events WHERE event_type = 'purchase'),
-           c AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us
-                 FROM events WHERE event_type = 'click')
-      SELECT p.event_id, p.user_id, p.ts_us, p.value,
-             c.event_id AS click_event_id, c.ts_us AS click_ts_us
-      FROM p LEFT JOIN c ON p.user_id = c.user_id AND c.ts_us <= p.ts_us
-      QUALIFY row_number() OVER (PARTITION BY p.event_id
-        ORDER BY c.ts_us DESC NULLS LAST, c.event_id DESC NULLS LAST) = 1""",
-    "x_range_join" -> """
-      SELECT c.event_id AS click_id, c.user_id, p.event_id AS purchase_id,
-             p.ts_us - c.ts_us AS gap_us
-      FROM (SELECT event_id, user_id, epoch_us(ts) AS ts_us
-            FROM events WHERE event_type = 'click') c
-      JOIN (SELECT event_id, user_id, epoch_us(ts) AS ts_us
-            FROM events WHERE event_type = 'purchase') p
-        ON c.user_id = p.user_id
-       AND p.ts_us >= c.ts_us + 1 AND p.ts_us <= c.ts_us + 300000000""",
-    "x_tokens" -> """
-      SELECT doc_id,
-             CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS BIGINT) AS word_tokens,
-             CAST(len(regexp_extract_all(text, '[a-zA-Z0-9]+|[^a-zA-Z0-9\s]')) AS BIGINT) AS bpe_tokens
-      FROM documents""",
-    "x_dedup_simhash" -> s"""
-      WITH tok AS (
-        SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS t
-        FROM documents),
-      h AS (SELECT doc_id, CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT) AS h FROM tok),
-      sig AS (SELECT doc_id, $simhashVotesSql AS simhash FROM h GROUP BY doc_id)
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-             CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-      FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 3""",
-    "x_multimodal_features" -> s"""
-      WITH b AS (
-        SELECT doc_id, octet_length(encode(text)) AS len, hex(encode(text)) AS hx
-        FROM documents),
-      e AS (
-        SELECT doc_id, len,
-               list_transform(range(len),
-                 i -> CAST(('0x' || substr(hx, CAST(2*i+1 AS INTEGER), 2)) AS INTEGER)) AS bytes
-        FROM b)
-      SELECT doc_id AS id, CAST(len AS BIGINT) AS byte_len,
-             CAST(CAST(len AS FLOAT) AS DOUBLE) AS f0,
-             CASE WHEN len = 0 THEN 0.0 ELSE
-               CAST(CAST(list_reduce(list_prepend(17, bytes), (a, x) -> (a * 31 + x) % 16777216) AS FLOAT) AS DOUBLE)
-             END AS f1,
-             ${(0 until 6).map(multimodalFeatureSql).mkString(",\n             ")}
-      FROM e""",
-
-    "q_sample" -> """
-      SELECT * FROM documents
-      WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10 < 3""",
-    "x_stratified_sample" -> """
-      SELECT * FROM documents
-      WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10 <
-            CASE WHEN lang = 'en' THEN 3 WHEN lang = 'zh' THEN 10 ELSE 1 END""",
-    "x_split" -> """
-      SELECT doc_id,
-             CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-      FROM (SELECT doc_id,
-              CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS b
-            FROM documents)""",
-    "x_token_budget" -> """
-      WITH t AS (
-        SELECT doc_id, source,
-               len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS n_tokens,
-               md5(CAST(doc_id AS VARCHAR)) AS h
-        FROM documents),
-      c AS (
-        SELECT doc_id, source, n_tokens,
-               sum(n_tokens) OVER (PARTITION BY source ORDER BY h, doc_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        FROM t)
-      SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens
-      FROM c
-      WHERE cum <= CASE WHEN source = 'src0' THEN 2000 ELSE 1500 END""",
-    "q_sample_bottomk" -> """
-      SELECT * FROM documents
-      ORDER BY md5(CAST(doc_id AS VARCHAR)) ASC, doc_id ASC LIMIT 100""",
-    "x_group_sample" -> """
-      SELECT event_type,
-             array_to_string(list_slice(list(CAST(user_id AS VARCHAR) ORDER BY h, user_id), 1, 5), ',') AS sample_users
-      FROM (SELECT DISTINCT event_type, user_id,
-                   md5(CAST(user_id AS VARCHAR)) AS h
-            FROM events)
-      GROUP BY event_type""",
-    "x_profile_stats" -> """
-      SELECT 'l_returnflag' AS col_name, count(*) AS n_rows,
-             count(*) - count(l_returnflag) AS n_nulls,
-             count(DISTINCT l_returnflag) AS n_distinct,
-             CAST(min(l_returnflag) AS VARCHAR) AS min_value,
-             CAST(max(l_returnflag) AS VARCHAR) AS max_value FROM lineitem
-      UNION ALL
-      SELECT 'l_linestatus', count(*), count(*) - count(l_linestatus),
-             count(DISTINCT l_linestatus),
-             CAST(min(l_linestatus) AS VARCHAR), CAST(max(l_linestatus) AS VARCHAR) FROM lineitem
-      UNION ALL
-      SELECT 'l_orderkey', count(*), count(*) - count(l_orderkey),
-             count(DISTINCT l_orderkey),
-             CAST(min(l_orderkey) AS VARCHAR), CAST(max(l_orderkey) AS VARCHAR) FROM lineitem
-      UNION ALL
-      SELECT 'l_linenumber', count(*), count(*) - count(l_linenumber),
-             count(DISTINCT l_linenumber),
-             CAST(min(l_linenumber) AS VARCHAR), CAST(max(l_linenumber) AS VARCHAR) FROM lineitem""",
-
-    // ==== §2.6 extension oracles. The token/shingle pipelines are
-    // mirrored expression-for-expression so doubles come out
-    // bit-identical. ====
-    "x_text_profile" -> s"""
-      WITH tok AS (
-        SELECT doc_id, n_chars, text,
-               list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-        FROM documents)
-      SELECT doc_id, n_chars,
-             CAST(len(toks) AS BIGINT) AS token_count,
-             CASE WHEN len(toks) > 0
-                  THEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE) / CAST(len(toks) AS BIGINT)
-                  ELSE 0.0 END AS avg_token_len,
-             CASE WHEN length(text) > 0
-                  THEN (CAST(length(text) AS DOUBLE) - CAST(length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE))
-                       / CAST(length(text) AS DOUBLE)
-                  ELSE 0.0 END AS punct_ratio,
-             CASE WHEN len(toks) > 0
-                  THEN CAST(len(list_filter(toks, t -> list_contains($stopwordsSqlList, t))) AS DOUBLE) / CAST(len(toks) AS BIGINT)
-                  ELSE 0.0 END AS stopword_ratio,
-             CASE WHEN len(toks) = 0 THEN 0.0 ELSE
-               1.0 - abs((CASE WHEN len(toks) > 0
-                    THEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE) / CAST(len(toks) AS BIGINT)
-                    ELSE 0.0 END) - 5.0) / 10.0
-                   - (CASE WHEN length(text) > 0
-                        THEN (CAST(length(text) AS DOUBLE) - CAST(length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE))
-                             / CAST(length(text) AS DOUBLE) ELSE 0.0 END)
-                   + (CASE WHEN len(toks) > 0
-                        THEN CAST(len(list_filter(toks, t -> list_contains($stopwordsSqlList, t))) AS DOUBLE) / CAST(len(toks) AS BIGINT)
-                        ELSE 0.0 END) * 0.5
-             END AS quality_score
-      FROM tok""",
-    "x_text_lang" -> """
-      WITH tok AS (
-        SELECT doc_id, lang AS lang_label, text,
-               list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-        FROM documents),
-      sc AS (
-        SELECT doc_id, lang_label, text,
-               len(list_filter(toks, t -> list_contains(['the','a','of','and','to','in','is'], t))) AS s_en,
-               len(list_filter(toks, t -> list_contains(['der','die','das','und','nicht','ist','ein'], t))) AS s_de,
-               len(list_filter(toks, t -> list_contains(['le','la','les','et','est','une','dans'], t))) AS s_fr,
-               len(list_filter(toks, t -> list_contains(['el','los','las','y','es','una','que'], t))) AS s_es
-        FROM tok)
-      SELECT doc_id, lang_label,
-             CASE WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
-                  WHEN s_en = greatest(s_en, s_de, s_fr, s_es) AND greatest(s_en, s_de, s_fr, s_es) > 0 THEN 'en'
-                  WHEN s_de = greatest(s_en, s_de, s_fr, s_es) AND greatest(s_en, s_de, s_fr, s_es) > 0 THEN 'de'
-                  WHEN s_fr = greatest(s_en, s_de, s_fr, s_es) AND greatest(s_en, s_de, s_fr, s_es) > 0 THEN 'fr'
-                  WHEN s_es = greatest(s_en, s_de, s_fr, s_es) AND greatest(s_en, s_de, s_fr, s_es) > 0 THEN 'es'
-                  ELSE 'und' END AS lang_id
-      FROM sc""",
-
-    "x_corpus_report" -> """
-      SELECT source,
-        CAST(count(*) AS BIGINT) AS n_docs,
-        CAST(sum(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-              t -> t <> ''))) AS BIGINT) AS n_tokens,
-        CAST(sum(length(text)) AS BIGINT) AS n_chars,
-        CAST(count(*) - count(DISTINCT
-              md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))))
-          AS BIGINT) AS n_dup_docs,
-        (count(*) - count(DISTINCT
-              md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))))) * 1.0
-          / count(*) AS dup_frac
-      FROM documents
-      GROUP BY source""",
-
-    "x_tfidf" -> """
-      WITH terms AS (
-        SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                 t -> t <> '')) AS term
-        FROM documents),
-      tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-             FROM terms GROUP BY doc_id, term),
-      dfT AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-              FROM terms GROUP BY term),
-      n AS (SELECT count(*) AS n FROM documents)
-      SELECT tf.doc_id, tf.term, tf.tf, dfT.df,
-             tf.tf * (ln((n.n + 1.0) / (dfT.df + 1.0)) + 1) AS tfidf
-      FROM tf JOIN dfT USING (term) CROSS JOIN n""",
-
-    "x_text_c4_filter" -> """
-      WITH lined AS (
-        SELECT doc_id, array_to_string(
-          list_concat(list_concat(list_concat(
-            CASE WHEN doc_id % 7 = 0 THEN ['javascript is required to view this page.']
-                 ELSE [] END,
-            list_transform(
-              generate_series(0, CAST(ceil(len(string_split(text, ' ')) / 6.0) AS INT) - 1),
-              i -> array_to_string(string_split(text, ' ')[i*6+1:i*6+6], ' ') ||
-                   CASE WHEN (doc_id + i) % 2 = 0 THEN '.' ELSE '' END)),
-            CASE WHEN doc_id % 11 = 0 THEN ['lorem ipsum dolor sit amet.'] ELSE [] END),
-            CASE WHEN doc_id % 13 = 0 THEN ['function foo() { return 1; }'] ELSE [] END),
-          chr(10)) AS text
-        FROM documents),
-      c AS (
-        SELECT doc_id, text,
-          string_split(text, chr(10)) AS lines,
-          list_filter(string_split(text, chr(10)), l ->
-            right(trim(l), 1) IN ('.', '!', '?', '"')
-            AND len(list_filter(string_split_regex(trim(l), '\s+'), w -> w <> '')) >= 5
-            AND NOT contains(lower(trim(l)), 'javascript')) AS kept
-        FROM lined)
-      SELECT doc_id,
-        CAST(len(lines) AS BIGINT) AS n_lines,
-        CAST(len(kept) AS BIGINT) AS n_kept,
-        contains(lower(text), 'lorem ipsum') AS has_lorem,
-        contains(text, '{') AS has_brace,
-        (len(kept) >= 3 AND NOT contains(lower(text), 'lorem ipsum')
-          AND NOT contains(text, '{')) AS keep,
-        coalesce(array_to_string(kept, chr(10)), '') AS text_clean
-      FROM c""",
-
-    "x_dsir_weights" -> """
-      WITH tk AS (
-        SELECT doc_id, lang,
-          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-        FROM documents),
-      feats AS (
-        SELECT doc_id, lang, unnest(list_concat(toks,
-          CASE WHEN len(toks) >= 2 THEN
-            list_transform(generate_series(1, len(toks) - 1), i -> toks[i] || ' ' || toks[i+1])
-          ELSE [] END)) AS f
-        FROM tk),
-      fb AS (
-        SELECT doc_id, lang, CAST((
-            (strpos('0123456789abcdef', substr(md5(f), 1, 1)) - 1) * 4096 +
-            (strpos('0123456789abcdef', substr(md5(f), 2, 1)) - 1) * 256 +
-            (strpos('0123456789abcdef', substr(md5(f), 3, 1)) - 1) * 16 +
-            (strpos('0123456789abcdef', substr(md5(f), 4, 1)) - 1)) % 256 AS INTEGER) AS b
-        FROM feats),
-      dense AS (SELECT unnest(generate_series(0, 255)) AS b),
-      tcnt AS (SELECT b, count(*) AS c FROM fb WHERE lang = 'en' GROUP BY b),
-      scnt AS (SELECT b, count(*) AS c FROM fb GROUP BY b),
-      ratio AS (
-        SELECT d.b,
-          ln((coalesce(tc.c, 0) + 1.0) / ((SELECT sum(c) FROM tcnt) + 256.0)) -
-          ln((coalesce(sc.c, 0) + 1.0) / ((SELECT sum(c) FROM scnt) + 256.0)) AS r
-        FROM dense d LEFT JOIN tcnt tc USING (b) LEFT JOIN scnt sc USING (b))
-      SELECT fb.doc_id, CAST(count(*) AS BIGINT) AS n_feats, sum(r.r) AS log_weight
-      FROM fb JOIN ratio r USING (b)
-      GROUP BY fb.doc_id""",
-
-    "x_sliding_chunks" -> """
-      WITH tk AS (
-        SELECT doc_id,
-          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-        FROM documents),
-      w AS (
-        SELECT doc_id, i AS chunk_id, toks[i*24+1:i*24+32] AS win
-        FROM (SELECT doc_id, toks,
-                unnest(generate_series(0,
-                  CAST(ceil(len(toks) / 24.0) AS INT) - 1)) AS i
-              FROM tk WHERE len(toks) > 0))
-      SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-             CAST(len(win) AS BIGINT) AS n_tokens,
-             array_to_string(win, ' ') AS chunk
-      FROM w""",
-
-    // quantization-recall boolean contract (see query comment)
-    "x_ann_quant_recall" -> """
-      SELECT CAST(10 AS BIGINT) AS n_queries, true AS bin_recall_ge_015,
-             true AS sq8_recall_ge_080""",
-
-    "x_ann_sq8" -> """
-      WITH q8 AS (
-        SELECT vec_id,
-          list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS scale,
-          CASE WHEN list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) = 0
-          THEN list_transform(embedding, x -> 0)
-          ELSE list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 /
-            list_max(list_transform(embedding, y -> abs(CAST(y AS DOUBLE)))) + 0.5) AS INTEGER))
-          END AS codes
-        FROM embeddings),
-      q AS (SELECT vec_id AS query_id, scale AS qs, codes AS qc FROM q8 WHERE vec_id < 5),
-      scored AS (
-        SELECT q.query_id, c.vec_id AS neighbor_id,
-          (c.scale * q.qs) * CAST(list_sum(list_transform(generate_series(1, 64),
-            i -> CAST(c.codes[i] AS BIGINT) * qc[i])) AS DOUBLE) AS score
-        FROM q8 c CROSS JOIN q
-        WHERE c.vec_id <> q.query_id)
-      SELECT query_id, neighbor_id, score, CAST(rank AS BIGINT) AS rank
-      FROM (SELECT *, row_number() OVER (
-              PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rank
-            FROM scored)
-      WHERE rank <= 10""",
-
-    "x_ann_binary" -> """
-      WITH bits AS (
-        SELECT vec_id, list_transform(generate_series(0, 1), w ->
-          CAST(list_sum(list_transform(generate_series(0, 31), b ->
-            CASE WHEN embedding[w*32 + b + 1] > 0 THEN (CAST(1 AS BIGINT) << b)
-                 ELSE 0 END)) AS BIGINT)) AS words
-        FROM embeddings),
-      q AS (SELECT vec_id AS query_id, words AS qw FROM bits WHERE vec_id < 5),
-      scored AS (
-        SELECT q.query_id, b.vec_id AS neighbor_id,
-          bit_count(xor(b.words[1], q.qw[1])) + bit_count(xor(b.words[2], q.qw[2])) AS h
-        FROM bits b CROSS JOIN q
-        WHERE b.vec_id <> q.query_id)
-      SELECT query_id, neighbor_id, CAST(h AS BIGINT) AS hamming,
-             CAST(rank AS BIGINT) AS rank
-      FROM (SELECT *, row_number() OVER (
-              PARTITION BY query_id ORDER BY h, neighbor_id) AS rank
-            FROM scored)
-      WHERE rank <= 10""",
-
-    // matryoshka: prefix norm recomputed directly; unit-length and
-    // dot-recovery contracts are exact after canonical rounding
-    "x_embed_matryoshka" -> """
-      WITH n AS (
-        SELECT vec_id,
-          sqrt(list_aggregate(list_transform(embedding[1:16],
-            x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS norm16
-        FROM embeddings)
-      SELECT vec_id, 16 AS dim,
-             CASE WHEN norm16 = 0 THEN 0.0 ELSE 1.0 END AS unit,
-             norm16, true AS ok
-      FROM n""",
-
-    "x_embed_sq8" -> """
-      WITH s AS (
-        SELECT vec_id, embedding,
-          list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS scale
-        FROM embeddings)
-      SELECT vec_id, scale,
-        coalesce(array_to_string(
-          CASE WHEN scale IS NULL OR scale = 0 THEN
-            list_transform(embedding, x -> 0)
-          ELSE
-            list_transform(embedding,
-              x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 / scale + 0.5) AS INTEGER))
-          END, ','), '') AS codes_csv
-      FROM s""",
-
-    "x_pack_windows" -> """
-      WITH tk AS (
-        SELECT source, doc_id,
-          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-        FROM documents),
-      offs AS (
-        SELECT source, doc_id, toks, len(toks) AS n,
-          coalesce(sum(len(toks) + 1) OVER (
-            PARTITION BY source ORDER BY doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-        FROM tk),
-      stream AS (
-        SELECT source,
-          off + j AS abs,
-          CASE WHEN j < n THEN toks[j + 1] ELSE '<|eod|>' END AS tok
-        FROM (SELECT source, toks, n, off, unnest(generate_series(0, n)) AS j
-              FROM offs))
-      SELECT source, CAST(abs // 50 AS BIGINT) AS window_id,
-             CAST(count(*) AS BIGINT) AS n_tokens,
-             string_agg(tok, ' ' ORDER BY abs) AS text
-      FROM stream
-      GROUP BY source, abs // 50""",
-
-    "x_temperature_sample" -> """
-      WITH cnt AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
-      thr AS (
-        SELECT lang,
-          CAST(floor(sqrt((SELECT min(n) FROM cnt) / CAST(n AS DOUBLE)) *
-                     281474976710656.0) AS BIGINT) AS t
-        FROM cnt)
-      SELECT d.doc_id, d.lang
-      FROM documents d JOIN thr USING (lang)
-      WHERE ('0x' || substr(md5('42' || ':' || CAST(d.doc_id AS VARCHAR)), 1, 12))::BIGINT
-            < thr.t""",
-
-    "x_shuffle_shards" -> """
-      WITH h AS (
-        SELECT doc_id, md5(concat('42', ':', CAST(doc_id AS VARCHAR))) AS h
-        FROM documents),
-      s AS (
-        SELECT doc_id, h, CAST((
-            (strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096 +
-            (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256 +
-            (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16 +
-            (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)) % 8 AS INTEGER) AS shard
-        FROM h)
-      SELECT doc_id, shard,
-             CAST(row_number() OVER (PARTITION BY shard ORDER BY h, doc_id) AS BIGINT) AS pos
-      FROM s""",
-
-    "x_pack_sequences" -> """
-      WITH RECURSIVE toks AS (
-        SELECT source, doc_id,
-               len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS t,
-               row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-        FROM documents),
-      rec AS (
-        SELECT source, doc_id, t, rn, t AS acc, 0 AS bin FROM toks WHERE rn = 1
-        UNION ALL
-        SELECT x.source, x.doc_id, x.t, x.rn,
-               CASE WHEN r.acc + x.t > 400 THEN x.t ELSE r.acc + x.t END,
-               CASE WHEN r.acc + x.t > 400 THEN r.bin + 1 ELSE r.bin END
-        FROM toks x JOIN rec r ON x.source = r.source AND x.rn = r.rn + 1)
-      SELECT source, doc_id, CAST(t AS BIGINT) AS n_tokens, CAST(bin AS BIGINT) AS bin
-      FROM rec""",
-    "x_pack_sequences_bfd" -> """
-      WITH RECURSIVE t0 AS (
-        SELECT source, doc_id,
-               len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS t
-        FROM documents),
-      toks AS (
-        SELECT source, doc_id, t,
-               row_number() OVER (PARTITION BY source ORDER BY t DESC, doc_id) AS rn
-        FROM t0),
-      rec AS (
-        SELECT source, doc_id, t, rn, [400 - t] AS rem, 1 AS bin
-        FROM toks WHERE rn = 1
-        UNION ALL
-        SELECT x.source, x.doc_id, x.t, x.rn,
-               CASE WHEN list_min(list_filter(r.rem, z -> z >= x.t)) IS NULL
-                    THEN list_append(r.rem, 400 - x.t)
-                    ELSE list_transform(range(len(r.rem)), i ->
-                           CASE WHEN i + 1 = list_position(r.rem,
-                                  list_min(list_filter(r.rem, z -> z >= x.t)))
-                                THEN r.rem[CAST(i + 1 AS INTEGER)] - x.t
-                                ELSE r.rem[CAST(i + 1 AS INTEGER)] END)
-               END,
-               CASE WHEN list_min(list_filter(r.rem, z -> z >= x.t)) IS NULL
-                    THEN len(r.rem) + 1
-                    ELSE list_position(r.rem,
-                           list_min(list_filter(r.rem, z -> z >= x.t)))
-               END
-        FROM toks x JOIN rec r ON x.source = r.source AND x.rn = r.rn + 1)
-      SELECT source, doc_id, CAST(t AS BIGINT) AS n_tokens,
-             CAST(bin - 1 AS BIGINT) AS bin
-      FROM rec""",
-
-    // BPE boolean contract (see x_bpe_tokens query comment).
-    "x_bpe_tokens" -> """
-      SELECT CAST(count(*) AS BIGINT) AS n_docs, true AS all_roundtrip_ok,
-             true AS tokens_ge_words, true AS compresses
-      FROM documents""",
-
-    // byte-level BPE boolean contract (see x_bpe_bytes query comment)
-    "x_bpe_bytes" -> """
-      SELECT CAST(count(*) AS BIGINT) AS n_docs, true AS all_roundtrip_ok,
-             true AS tokens_ge_pretokens, true AS tokens_le_bytes,
-             true AS compresses
-      FROM documents""",
-
-    "x_unigram_tokens" -> """
-      SELECT CAST(count(*) AS BIGINT) AS n_docs, true AS all_roundtrip_ok,
-             true AS pieces_ge_words, true AS pieces_le_chars, true AS compresses
-      FROM documents""",
-
-    "x_wordpiece_tokens" -> """
-      SELECT CAST(count(*) AS BIGINT) AS n_docs, true AS all_roundtrip_ok,
-             true AS no_unk_on_own_corpus, true AS pieces_ge_words,
-             true AS pieces_le_chars, true AS compresses
-      FROM documents""",
-
-    "x_pii_redact" -> """
-      WITH raw AS (
-        SELECT doc_id,
-          'contact ' || source || doc_id || '@example.com or +1415550' || doc_id ||
-          ' ip 10.0.' || (doc_id % 256) || '.7 ssn 123-45-6789 ' || text AS t
-        FROM documents)
-      SELECT doc_id,
-        regexp_replace(
-          regexp_replace(
-            regexp_replace(
-              regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-              '\b\d{3}-\d{2}-\d{4}\b', '<SSN>', 'g'),
-            '\+\d{7,15}\b', '<PHONE>', 'g'),
-          '\b(\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g') AS redacted
-      FROM raw""",
-
-    // Latin counted by the RE2 spelling of the same property; the
-    // planted scripts are id-derived constants (9/5/5 letters)
-    "x_text_script" -> """
-      WITH c AS (
-        SELECT doc_id,
-          length(coalesce(text, '')) -
-            length(regexp_replace(coalesce(text, ''), '\p{Latin}', '', 'g')) AS lat
-        FROM documents)
-      SELECT doc_id, CAST(lat AS BIGINT) AS n_latin,
-        CAST(CASE WHEN doc_id % 4 = 0 THEN 9 ELSE 0 END AS BIGINT) AS n_cyrillic,
-        CAST(CASE WHEN doc_id % 4 = 1 THEN 5 ELSE 0 END AS BIGINT) AS n_han,
-        CAST(CASE WHEN doc_id % 4 = 2 THEN 5 ELSE 0 END AS BIGINT) AS n_arabic,
-        CASE WHEN lat >= CASE WHEN doc_id % 4 = 0 THEN 9 ELSE 0 END
-              AND lat >= CASE WHEN doc_id % 4 = 1 THEN 5 ELSE 0 END
-              AND lat >= CASE WHEN doc_id % 4 = 2 THEN 5 ELSE 0 END THEN 'latin'
-             WHEN doc_id % 4 = 0 THEN 'cyrillic'
-             WHEN doc_id % 4 = 1 THEN 'han'
-             ELSE 'arabic' END AS dominant
-      FROM c""",
-
-    // every planted class' verdict is pure id arithmetic
-    "x_url_filter" -> """
-      WITH u AS (
-        SELECT doc_id,
-          CASE doc_id % 5
-            WHEN 0 THEN 'https://ads.tracker.net/x/' || doc_id
-            WHEN 1 THEN 'https://ok.org/login/' || doc_id
-            WHEN 2 THEN 'https://ok.org/p/' || doc_id || '?sessionid=abc'
-            ELSE 'https://ok.org/page/' || doc_id END AS url
-        FROM documents)
-      SELECT doc_id, url, (doc_id % 5) IN (0, 1, 2) AS blocked FROM u""",
-
-    // bloom filters rebuilt bit for bit: same md5 double-hash
-    // positions, bitstring aggregate, min-over-probes verdicts
-    "x_bloom_filter" -> """
-      WITH mh AS (
-        SELECT CAST(('0x' || substr(md5('url-' || doc_id), 1, 8)) AS BIGINT) AS h1,
-               CAST(('0x' || substr(md5('url-' || doc_id), 9, 8)) AS BIGINT) AS h2
-        FROM documents WHERE doc_id % 2 = 0),
-      pos_s AS (SELECT DISTINCT CAST((h1 + t.i * h2) % 2048 AS INT) AS p FROM mh, range(4) t(i)),
-      f_s AS (SELECT bitstring_agg(p, 0, 2047) AS bs FROM pos_s),
-      pos_b AS (SELECT DISTINCT CAST((h1 + t.i * h2) % 16384 AS INT) AS p FROM mh, range(4) t(i)),
-      f_b AS (SELECT bitstring_agg(p, 0, 16383) AS bs FROM pos_b),
-      probes AS (
-        SELECT doc_id,
-               CAST(('0x' || substr(md5('url-' || doc_id), 1, 8)) AS BIGINT) AS h1,
-               CAST(('0x' || substr(md5('url-' || doc_id), 9, 8)) AS BIGINT) AS h2
-        FROM documents),
-      hits AS (
-        SELECT p.doc_id,
-               min(get_bit(f_s.bs, CAST((p.h1 + t.i * p.h2) % 2048 AS INT))) AS s_ok,
-               min(get_bit(f_b.bs, CAST((p.h1 + t.i * p.h2) % 16384 AS INT))) AS b_ok
-        FROM probes p, range(4) t(i), f_s, f_b
-        GROUP BY p.doc_id)
-      SELECT doc_id, doc_id % 2 = 0 AS member,
-             s_ok = 1 AS hit_small, b_ok = 1 AS hit_big
-      FROM hits""",
-
-    // heavy hitters re-derived: the oracle builds the same 4×1024
-    // count-min grid cell by cell (every token occurrence lands at
-    // (i, (h1 + i*h2) mod 1024) for i in 0..3), then replays each
-    // candidate's min-over-rows estimate and the exact-count filter
-    "x_heavy_hitters" -> """
-      WITH toks AS MATERIALIZED (
-        SELECT u.tok FROM (
-          SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                        t -> t <> '')) AS tok
-          FROM documents) u),
-      h AS MATERIALIZED (
-        SELECT tok,
-               CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) AS h1,
-               CAST(('0x' || substr(md5(tok), 9, 8)) AS BIGINT) AS h2
-        FROM toks),
-      cells AS (
-        SELECT t.i AS ri, CAST((h1 + t.i * h2) % 1024 AS INT) AS cj, count(*) AS c
-        FROM h, range(4) t(i)
-        GROUP BY 1, 2),
-      keys AS (
-        SELECT tok, count(*) AS cnt, any_value(h1) AS h1, any_value(h2) AS h2
-        FROM h GROUP BY tok),
-      est AS (
-        SELECT k.tok, k.cnt, min(c.c) AS est
-        FROM keys k
-        JOIN range(4) t(i) ON true
-        JOIN cells c ON c.ri = t.i AND c.cj = CAST((k.h1 + t.i * k.h2) % 1024 AS INT)
-        GROUP BY k.tok, k.cnt)
-      SELECT tok AS key, CAST(cnt AS BIGINT) AS cnt, CAST(est AS BIGINT) AS est
-      FROM est WHERE cnt >= 200""",
-
-    // bloom-pruned join: the oracle is the PLAIN join — pruning must
-    // be invisible in the result set
-    "x_bloom_join" -> """
-      SELECT l.l_orderkey, l.l_linenumber, l.l_quantity, o.o_totalprice
-      FROM lineitem l
-      JOIN (SELECT o_orderkey, o_totalprice FROM orders
-            WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 150000) o
-        ON l.l_orderkey = o.o_orderkey""",
-
-    // robots verdicts re-derived from the planted id arithmetic:
-    // h4 has no robots row (allowed); h0 is the star group
-    // (Disallow /tmp → class 3 blocked); h1-h3 are the graftbot
-    // group (class 1 blocked by /private, class 2 saved by the
-    // longer /private/ok allow, class 3 blocked by /*.html$)
-    "x_robots_filter" -> """
-      WITH u AS (
-        SELECT doc_id, doc_id % 5 AS j, doc_id % 4 AS c,
-               CASE doc_id % 4
-                 WHEN 0 THEN '/pub/' || CAST(doc_id AS VARCHAR)
-                 WHEN 1 THEN '/private/' || CAST(doc_id AS VARCHAR)
-                 WHEN 2 THEN '/private/ok/' || CAST(doc_id AS VARCHAR)
-                 ELSE '/tmp/' || CAST(doc_id AS VARCHAR) || '.html'
-               END AS path
-        FROM documents)
-      SELECT doc_id,
-             'https://h' || CAST(j AS VARCHAR) || '.example.com' || path AS url,
-             CASE WHEN j = 4 THEN TRUE
-                  WHEN j = 0 THEN c <> 3
-                  ELSE c IN (0, 2) END AS allowed
-      FROM u""",
-
-    // member-split scan: same response-record derivation as
-    // x_warc_records (page → http message → record), minus the
-    // file-relative rec_index (restarts per range by design)
-    "x_warc_split" -> """
-      WITH page AS (
-        SELECT doc_id,
-          '<html><head><title>Doc ' || doc_id || '</title></head><body><p>From ' ||
-            coalesce(source, '') || '</p><div>' || coalesce(text, '') || '</div></body></html>' AS page
-        FROM documents),
-      http AS (
-        SELECT doc_id,
-          'HTTP/1.1 200 OK' || chr(13) || chr(10) ||
-          'Content-Type: text/html; charset=utf-8' || chr(13) || chr(10) ||
-          'Content-Length: ' || octet_length(encode(page)) || chr(13) || chr(10) || chr(13) || chr(10) ||
-          page AS http
-        FROM page)
-      SELECT doc_id,
-        '<urn:uuid:' || substr(md5('doc-' || doc_id), 1, 8) || '-' ||
-          substr(md5('doc-' || doc_id), 9, 4) || '-' ||
-          substr(md5('doc-' || doc_id), 13, 4) || '-' ||
-          substr(md5('doc-' || doc_id), 17, 4) || '-' ||
-          substr(md5('doc-' || doc_id), 21, 12) || '>' AS record_id,
-        CAST(200 AS BIGINT) AS status,
-        CAST(octet_length(encode(http)) AS BIGINT) AS content_length,
-        md5(http) AS digest
-      FROM http""",
-
-    // cdx index: urlkey/timestamp/url/mime/status/payload-digest/
-    // shard bucket all re-derived from corpus columns
-    "x_cdx_index" -> """
-      SELECT 'com,example)/doc/' || CAST(doc_id AS VARCHAR) AS urlkey,
-             '20260101000000' AS ts,
-             'https://example.com/doc/' || CAST(doc_id AS VARCHAR) AS url,
-             'text/html' AS mime,
-             CAST(200 AS BIGINT) AS status,
-             md5('<html><head><title>Doc ' || doc_id || '</title></head><body><p>From ' ||
-                 coalesce(source, '') || '</p><div>' || coalesce(text, '') ||
-                 '</div></body></html>') AS digest,
-             doc_id % 8 AS file_id
-      FROM documents""",
-
-    // domain cap re-derived: same host arithmetic, row_number ≤ k
-    "x_domain_cap" -> """
-      WITH u AS (
-        SELECT doc_id, 'h' || (doc_id % 7) || '.example.com' AS host
-        FROM documents)
-      SELECT doc_id, host,
-             (row_number() OVER (PARTITION BY host ORDER BY doc_id)) <= 20 AS kept
-      FROM u""",
-
-    // mojibake contract: repair of the planted bad-decode hop (and
-    // the double hop) recovers the clean concatenation the oracle
-    // derives directly; clean text is a fixpoint
-    "x_text_fix_mojibake" -> """
-      SELECT doc_id, coalesce(text, '') || ' café — naïve 中文 🙂' AS fixed,
-             true AS changed, true AS stable, true AS double_ok
-      FROM documents""",
-
-    // the htmlExtract rule pipeline replayed stage by stage (patterns
-    // verbatim from the Java∩RE2 dialect; newlines as chr(10) because
-    // RE2 rewrite strings do not interpret escape sequences)
-    "x_text_html_extract" -> """
-      WITH raw AS (
-        SELECT doc_id,
-          '<html> <head><script type="text/javascript">var x = ' || doc_id ||
-          '; if (x < 3 && x > 1) { alert("hi"); }</script><style>p { color: red; }' || chr(10) ||
-          '.c' || doc_id || ' { margin: 0; }</style></head>' || chr(10) ||
-          '<body><!-- hidden ' || doc_id || ' --><h1>Doc ' || doc_id ||
-          '</h1><p>From &quot;' || source || '&quot; &amp;amp; A&nbsp;B &lt;tag&gt;</p><div> ' ||
-          text || ' </div><br/><ul><li>alpha</li><li>beta</li></ul></body></html>' AS page
-        FROM documents),
-      s1 AS (SELECT doc_id, regexp_replace(page, '(?is)<script[^>]*>.*?</script>', '', 'g') AS t FROM raw),
-      s2 AS (SELECT doc_id, regexp_replace(t, '(?is)<style[^>]*>.*?</style>', '', 'g') AS t FROM s1),
-      s3 AS (SELECT doc_id, regexp_replace(t, '(?s)<!--.*?-->', '', 'g') AS t FROM s2),
-      s4 AS (SELECT doc_id, regexp_replace(t,
-        '(?i)<(br|hr)[ \t]*/?>|</(p|div|li|tr|h1|h2|h3|h4|h5|h6|ul|ol|table|blockquote|pre)>',
-        chr(10), 'g') AS t FROM s3),
-      s5 AS (SELECT doc_id, regexp_replace(t, '<[^>]*>', '', 'g') AS t FROM s4),
-      s6 AS (SELECT doc_id,
-          replace(replace(replace(replace(replace(replace(replace(t,
-            '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', chr(39)),
-            '&apos;', chr(39)), '&nbsp;', ' '), '&amp;', '&') AS t FROM s5),
-      s7 AS (SELECT doc_id, regexp_replace(t, '[ \t\r]+', ' ', 'g') AS t FROM s6),
-      s8 AS (SELECT doc_id, regexp_replace(t, ' ?\n ?', chr(10), 'g') AS t FROM s7),
-      s9 AS (SELECT doc_id, regexp_replace(t, '\n\n\n+', chr(10) || chr(10), 'g') AS t FROM s8)
-      SELECT doc_id, regexp_replace(t, '^[ \t\r\n]+|[ \t\r\n]+$', '', 'g') AS extracted
-      FROM s9""",
-
-    // nfc contract: the ORACLE normalizes too (DuckDB's independent
-    // utf8proc NFC) — the planted prefix is stated denormalized via
-    // chr() codepoints (combining marks 769/778/776/768, Angstrom
-    // sign 8491), so both Unicode table builds must agree on every
-    // composition
-    "x_text_nfc" -> """
-      SELECT doc_id, nfc_normalize(
-        CASE doc_id % 4
-          WHEN 0 THEN 'Cafe' || chr(769) || ' '
-          WHEN 1 THEN 'A' || chr(778) || 'rhus '
-          WHEN 2 THEN chr(8491) || 'ngstro' || chr(776) || 'm '
-          ELSE 'A' || chr(768) || ' la carte '
-        END || coalesce(text, '')) AS text
-      FROM documents""",
-
-    // nfkc contract: DuckDB has no NFKC, so the oracle states the
-    // compatibility folds as literals (1/2 composes with FRACTION
-    // SLASH U+2044)
-    "x_text_nfkc" -> """
-      SELECT doc_id,
-        CASE doc_id % 4
-          WHEN 0 THEN 'file 1'
-          WHEN 1 THEN 'Full'
-          WHEN 2 THEN 'x2 1' || chr(8260) || '2'
-          ELSE 'km and No'
-        END AS text
-      FROM documents""",
-
-    "x_url_normalize" -> """
-      WITH raw AS (
-        SELECT doc_id,
-          CASE WHEN doc_id % 3 = 0 THEN 'HTTP://Example.COM:80/Docs/' || source || '?utm_source=feed&b=2&a=1&id=' || doc_id || '#frag'
-               WHEN doc_id % 3 = 1 THEN 'https://Host.org:443?z=1&utm_campaign=x&y=' || doc_id
-               ELSE 'not a url ' || doc_id END AS url
-        FROM documents),
-      s1 AS (SELECT doc_id, url,
-        CASE WHEN instr(url, '#') > 0 THEN substr(url, 1, instr(url, '#') - 1) ELSE url END AS u
-        FROM raw),
-      p2 AS (SELECT doc_id, url, u, instr(u, '://') AS spos,
-        lower(substr(u, 1, instr(u, '://') - 1)) AS scheme,
-        substr(u, instr(u, '://') + 3) AS rest FROM s1),
-      p4 AS (SELECT *,
-        CASE WHEN instr(rest, '?') > 0 THEN substr(rest, instr(rest, '?') + 1) ELSE '' END AS qs,
-        CASE WHEN instr(rest, '?') > 0 THEN substr(rest, 1, instr(rest, '?') - 1) ELSE rest END AS prepath
-        FROM p2),
-      p6 AS (SELECT *,
-        CASE WHEN instr(prepath, '/') > 0 THEN substr(prepath, 1, instr(prepath, '/') - 1) ELSE prepath END AS hp,
-        CASE WHEN instr(prepath, '/') > 0 THEN substr(prepath, instr(prepath, '/')) ELSE '/' END AS path
-        FROM p4),
-      p8 AS (SELECT *,
-        lower(CASE WHEN instr(hp, ':') > 0 THEN substr(hp, 1, instr(hp, ':') - 1) ELSE hp END) AS host,
-        CASE WHEN instr(hp, ':') > 0 THEN substr(hp, instr(hp, ':') + 1) ELSE '' END AS port
-        FROM p6),
-      p9 AS (SELECT *,
-        array_to_string(list_sort(list_filter(string_split(qs, '&'),
-          p -> p <> '' AND substr(p, 1, 4) <> 'utm_')), '&') AS q
-        FROM p8)
-      SELECT doc_id, url,
-        CASE WHEN spos > 0 THEN
-          scheme || '://' || host ||
-          CASE WHEN port <> '' AND NOT ((scheme = 'http' AND port = '80') OR (scheme = 'https' AND port = '443'))
-               THEN ':' || port ELSE '' END ||
-          path ||
-          CASE WHEN q <> '' THEN '?' || q ELSE '' END
-        ELSE url END AS url_norm
-      FROM p9""",
-
-    "x_text_repetition" -> """
-      WITH base AS (
-        SELECT doc_id, text,
-               list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
-                           l -> l <> '') AS ls,
-               list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS w
-        FROM documents)
-      SELECT doc_id,
-             CAST(len(ls) AS BIGINT) AS n_lines,
-             round(CASE WHEN len(ls) > 0
-               THEN CAST(len(ls) - len(list_distinct(ls)) AS DOUBLE) / len(ls)
-               ELSE 0 END, 6) AS dup_line_frac,
-             round(CASE WHEN coalesce(list_sum(list_transform(ls, l -> length(l))), 0) > 0
-               THEN CAST(coalesce(list_sum(list_transform(list_distinct(ls),
-                      d -> (len(list_filter(ls, x -> x = d)) - 1) * length(d))), 0) AS DOUBLE)
-                    / list_sum(list_transform(ls, l -> length(l)))
-               ELSE 0 END, 6) AS dup_line_char_frac,
-             round(CASE WHEN len(w) > 0
-               THEN CAST(length(text) - length(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g')) AS DOUBLE) / len(w)
-               ELSE 0 END, 6) AS symbol_word_ratio
-      FROM base""",
-
-    "x_text_top2gram" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS w
-        FROM documents),
-      grams AS (
-        SELECT doc_id, array_to_string(w[i:i+1], ' ') AS g
-        FROM toks, unnest(range(1, greatest(len(w), 1))) AS u(i)),
-      cnt AS (SELECT doc_id, g, count(*) AS c FROM grams GROUP BY doc_id, g)
-      SELECT doc_id,
-             CAST(sum(c) AS BIGINT) AS n_ngrams,
-             CAST(max(c) AS BIGINT) AS top_ngram_count,
-             round(CAST(max(c) AS DOUBLE) / sum(c), 6) AS top_ngram_frac
-      FROM cnt GROUP BY doc_id""",
-
-    "x_text_bigram_ppx" -> """
-      WITH toks AS (
-        SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS w
-        FROM documents),
-      uni AS (
-        SELECT u.w AS w, count(*) AS c FROM (SELECT unnest(w) AS w FROM toks) u GROUP BY u.w),
-      tot AS (SELECT sum(c) AS s FROM uni),
-      pairs AS (
-        SELECT doc_id, p['w1'] AS w1, p['w2'] AS w2
-        FROM (SELECT doc_id, unnest(list_transform(range(2, len(w)+1),
-               i -> {'w1': w[i-1], 'w2': w[i]})) AS p FROM toks)),
-      big AS (SELECT w1, w2, count(*) AS c2 FROM pairs GROUP BY w1, w2),
-      firsts AS (SELECT doc_id, w[1] AS w2 FROM toks WHERE len(w) >= 1),
-      first_s AS (
-        SELECT f.doc_id, -ln(CAST(u.c AS DOUBLE) / t.s) AS nll
-        FROM firsts f JOIN uni u ON f.w2 = u.w, tot t),
-      pair_s AS (
-        SELECT p.doc_id,
-               -ln(0.7 * CAST(b.c2 AS DOUBLE) / u1.c + 0.3 * CAST(u2.c AS DOUBLE) / t.s) AS nll
-        FROM pairs p
-        JOIN big b ON p.w1 = b.w1 AND p.w2 = b.w2
-        JOIN uni u1 ON p.w1 = u1.w
-        JOIN uni u2 ON p.w2 = u2.w, tot t),
-      allscores AS (SELECT * FROM first_s UNION ALL SELECT * FROM pair_s)
-      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens, round(avg(nll), 6) AS avg_nll
-      FROM allscores GROUP BY doc_id""",
-
-    "x_text_nb_classify" -> """
-      WITH toks AS MATERIALIZED (
-        SELECT doc_id, lang,
-               unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS t
-        FROM documents),
-      pri AS (SELECT lang AS cls, count(*) AS nd FROM documents GROUP BY lang),
-      nd AS (SELECT sum(nd) AS n FROM pri),
-      cnt AS (SELECT t, lang AS cls, count(*) AS c FROM toks GROUP BY t, lang),
-      tc AS (SELECT cls, sum(c) AS s FROM cnt GROUP BY cls),
-      v AS (SELECT count(DISTINCT t) AS v FROM toks),
-      model AS (
-        SELECT vt.t, p.cls, ln((coalesce(c.c, 0) + 1.0) / (tc.s + 1.0 * v.v)) AS lp
-        FROM (SELECT DISTINCT t FROM toks) vt
-        CROSS JOIN pri p
-        LEFT JOIN cnt c ON c.t = vt.t AND c.cls = p.cls
-        JOIN tc ON tc.cls = p.cls, v),
-      s AS (
-        SELECT toks.doc_id, m.cls, sum(m.lp) AS ll
-        FROM toks JOIN model m ON toks.t = m.t
-        GROUP BY toks.doc_id, m.cls)
-      SELECT s.doc_id, s.cls AS class,
-             round(s.ll + ln(CAST(p.nd AS DOUBLE) / nd.n), 6) AS log_post
-      FROM s JOIN pri p ON s.cls = p.cls, nd""",
-
-    // linear-classifier accuracy contract (see x_text_linear_classify
-    // query comment): the oracle asserts the contract and the exact
-    // holdout population (odd doc_ids with >= 1 token); the engine
-    // measures the accuracy.
-    "x_text_linear_classify" -> """
-      SELECT CAST(count(*) AS BIGINT) AS n_scored, true AS holdout_acc_ge_090
-      FROM documents
-      WHERE doc_id % 2 = 1
-        AND len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')) > 0""",
-
-    // trained langid accuracy contract (see x_text_langid query
-    // comment): planted per-language text is never empty, so the
-    // holdout population is exactly the odd ids; the engine measures
-    // the accuracy, the oracle asserts the bound holds.
-    "x_text_langid" -> """
-      SELECT CAST(count(*) AS BIGINT) AS n_scored, true AS holdout_acc_ge_095
-      FROM documents
-      WHERE doc_id % 2 = 1""",
-
-    "x_text_trigram_ppx" -> """
-      WITH toks AS MATERIALIZED (
-        SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS w
-        FROM documents),
-      uni AS (
-        SELECT u.w AS w, count(*) AS c FROM (SELECT unnest(w) AS w FROM toks) u GROUP BY u.w),
-      tot AS (SELECT sum(c) AS s FROM uni),
-      pad AS (
-        SELECT doc_id, len(w) AS n, list_concat(['<s>', '<s>'], w) AS p
-        FROM toks WHERE len(w) >= 1),
-      -- MATERIALIZED is load-bearing: six references; inlined, DuckDB
-      -- re-expands the unnest per reference and the plan blows up
-      tri AS MATERIALIZED (
-        SELECT doc_id, t['a'] AS a, t['b'] AS b, t['w'] AS w
-        FROM (SELECT doc_id, unnest(list_transform(range(n),
-               i -> {'a': p[CAST(i+1 AS INTEGER)], 'b': p[CAST(i+2 AS INTEGER)],
-                     'w': p[CAST(i+3 AS INTEGER)]})) AS t FROM pad)),
-      c3 AS (SELECT a, b, w, count(*) AS c FROM tri GROUP BY a, b, w),
-      cc2 AS (SELECT a, b, count(*) AS c FROM tri GROUP BY a, b),
-      c2 AS (SELECT b, w, count(*) AS c FROM tri GROUP BY b, w),
-      cc1 AS (SELECT b, count(*) AS c FROM tri GROUP BY b),
-      s AS (
-        SELECT tri.doc_id,
-               -ln(0.5 * CAST(c3.c AS DOUBLE) / cc2.c
-                 + 0.3 * CAST(c2.c AS DOUBLE) / cc1.c
-                 + 0.2 * CAST(uni.c AS DOUBLE) / tot.s) AS nll
-        FROM tri
-        JOIN c3 ON tri.a = c3.a AND tri.b = c3.b AND tri.w = c3.w
-        JOIN cc2 ON tri.a = cc2.a AND tri.b = cc2.b
-        JOIN c2 ON tri.b = c2.b AND tri.w = c2.w
-        JOIN cc1 ON tri.b = cc1.b
-        JOIN uni ON tri.w = uni.w, tot)
-      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens, round(avg(nll), 6) AS avg_nll
-      FROM s GROUP BY doc_id""",
-    "x_text_unigram_ppx" -> """
-      WITH tk AS (
-        SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS w
-        FROM documents),
-      cnt AS (SELECT w, count(*) AS c FROM tk GROUP BY w),
-      tot AS (SELECT sum(c) AS s FROM cnt),
-      lm AS (SELECT w, ln(CAST(c AS DOUBLE) / s) AS lp FROM cnt, tot)
-      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-             round(-avg(lp), 6) AS avg_nll
-      FROM tk JOIN lm USING (w) GROUP BY doc_id""",
-
-    "x_text_fingerprint" -> """
-      SELECT doc_id,
-             md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fingerprint
-      FROM documents""",
-    "x_text_ngram_sim" -> """
-      WITH g AS (
-        SELECT doc_id,
-               list_distinct(list_transform(range(greatest(length(text)-3, 0)+1),
-                 i -> substr(text, CAST(i+1 AS BIGINT), 3))) AS grams
-        FROM documents)
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-             CASE WHEN (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))) > 0
-                  THEN CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-                       / (CAST(len(a.grams) + len(b.grams) AS DOUBLE) - CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE))
-                  ELSE 0.0 END AS char_jaccard
-      FROM g a JOIN g b ON b.doc_id = a.doc_id + 250""",
-    "x_dedup_exact" -> """
-      SELECT doc_id, text, lang, source, n_chars FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))
-          ORDER BY doc_id) AS __rn
-        FROM documents) WHERE __rn = 1""",
-    "x_corpus_diff" -> """
-      WITH oldv AS (
-        SELECT doc_id,
-          md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-        FROM documents),
-      newv AS (
-        SELECT doc_id,
-          md5(trim(regexp_replace(lower(
-            CASE WHEN doc_id % 5 = 0 THEN 'edited ' || text ELSE text END),
-            '[^a-z0-9]+', ' ', 'g'))) AS fp
-        FROM documents WHERE doc_id % 7 <> 0
-        UNION ALL
-        SELECT doc_id + 100000,
-          md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))
-        FROM documents WHERE doc_id % 9 = 0)
-      SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-        CASE WHEN o.doc_id IS NULL THEN 'added'
-             WHEN n.doc_id IS NULL THEN 'removed'
-             WHEN o.fp IS NOT DISTINCT FROM n.fp THEN 'unchanged'
-             ELSE 'changed' END AS status
-      FROM oldv o FULL OUTER JOIN newv n ON o.doc_id = n.doc_id""",
-
-    "x_dedup_spans" -> """
-      WITH tk AS (
-        SELECT doc_id,
-          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-        FROM documents),
-      occ AS (
-        SELECT doc_id, i AS pos,
-          md5(array_to_string(toks[i+1:i+8], ' ')) AS dg
-        FROM (SELECT doc_id, toks, unnest(generate_series(0, len(toks) - 8)) AS i
-              FROM tk WHERE len(toks) >= 8)),
-      freq AS (
-        SELECT dg, doc_id AS cid, pos AS cpos FROM (
-          SELECT dg, doc_id, pos,
-                 count(*) OVER (PARTITION BY dg) AS c,
-                 row_number() OVER (PARTITION BY dg ORDER BY doc_id, pos) AS rn
-          FROM occ) WHERE c >= 2 AND rn = 1),
-      covered AS (
-        SELECT DISTINCT o.doc_id, unnest(generate_series(o.pos, o.pos + 7)) AS cp
-        FROM occ o JOIN freq f USING (dg)
-        WHERE NOT (o.doc_id = f.cid AND o.pos = f.cpos)),
-      rm AS (SELECT doc_id, count(*) AS n_rm FROM covered GROUP BY doc_id)
-      SELECT t.doc_id,
-        coalesce((
-          SELECT string_agg(tok, ' ' ORDER BY j)
-          FROM (SELECT unnest(t.toks) AS tok, generate_subscripts(t.toks, 1) - 1 AS j)
-          WHERE j NOT IN (SELECT cp FROM covered c WHERE c.doc_id = t.doc_id)), '') AS text,
-        coalesce(r.n_rm, 0) AS n_tokens_removed
-      FROM tk t LEFT JOIN rm r USING (doc_id)""",
-
-    // ExactSubstr CUT (see x_dedup_substring query comment): coverage
-    // by ALL occurrences of duplicated 10-token windows — no canonical
-    // exclusion — plus maximal-span counting via the islands trick.
-    "x_dedup_substring" -> """
-      WITH tk AS (
-        SELECT doc_id,
-          list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-        FROM documents),
-      occ AS (
-        SELECT doc_id, i AS pos,
-          md5(array_to_string(toks[i+1:i+10], ' ')) AS dg
-        FROM (SELECT doc_id, toks, unnest(generate_series(0, len(toks) - 10)) AS i
-              FROM tk WHERE len(toks) >= 10)),
-      dup AS (SELECT dg FROM occ GROUP BY dg HAVING count(*) >= 2),
-      covered AS (
-        SELECT DISTINCT o.doc_id, unnest(generate_series(o.pos, o.pos + 9)) AS cp
-        FROM occ o JOIN dup USING (dg)),
-      runs AS (
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_rm,
-               CAST(count(*) FILTER (WHERE isnew) AS BIGINT) AS n_spans
-        FROM (SELECT doc_id, cp,
-                coalesce(cp - lag(cp) OVER (PARTITION BY doc_id ORDER BY cp) <> 1, true) AS isnew
-              FROM covered) GROUP BY doc_id)
-      SELECT t.doc_id,
-        coalesce((
-          SELECT string_agg(tok, ' ' ORDER BY j)
-          FROM (SELECT unnest(t.toks) AS tok, generate_subscripts(t.toks, 1) - 1 AS j)
-          WHERE j NOT IN (SELECT cp FROM covered c WHERE c.doc_id = t.doc_id)), '') AS text,
-        coalesce(r.n_rm, 0) AS n_tokens_removed,
-        coalesce(r.n_spans, 0) AS n_spans_removed
-      FROM tk t LEFT JOIN runs r USING (doc_id)""",
-
-    "x_dedup_lines" -> """
-      WITH lined AS (
-        SELECT doc_id, array_to_string(
-          list_concat(list_concat(
-            CASE WHEN doc_id % 3 = 0 THEN ['subscribe to our newsletter today']
-                 ELSE [] END,
-            list_transform(
-              generate_series(0, CAST(ceil(len(string_split(text, ' ')) / 6.0) AS INT) - 1),
-              i -> array_to_string(string_split(text, ' ')[i*6+1:i*6+6], ' '))),
-            CASE WHEN doc_id % 4 = 0 THEN ['all rights reserved'] ELSE [] END),
-          chr(10)) AS text
-        FROM documents),
-      lines AS (
-        SELECT doc_id, i - 1 AS pos, md5(trim(l)) AS dg
-        FROM (SELECT doc_id,
-                unnest(string_split(text, chr(10))) AS l,
-                generate_subscripts(string_split(text, chr(10)), 1) AS i
-              FROM lined)
-        WHERE trim(l) <> ''),
-      frequent AS (
-        SELECT dg FROM lines GROUP BY dg HAVING count(DISTINCT doc_id) >= 100),
-      removals AS (
-        SELECT doc_id, list(pos) AS rm, count(*) AS n_rm
-        FROM lines WHERE dg IN (SELECT dg FROM frequent) GROUP BY doc_id)
-      SELECT d.doc_id,
-        CASE WHEN r.rm IS NULL THEN d.text ELSE (
-          SELECT coalesce(string_agg(l, chr(10) ORDER BY i), '')
-          FROM (SELECT unnest(string_split(d.text, chr(10))) AS l,
-                       generate_subscripts(string_split(d.text, chr(10)), 1) AS i)
-          WHERE NOT list_contains(r.rm, i - 1)) END AS text,
-        coalesce(r.n_rm, 0) AS n_lines_removed
-      FROM lined d LEFT JOIN removals r USING (doc_id)""",
-    // Oracle brute-forces all pairs (fine at oracle scale); the Spark
-    // side uses MinHash-LSH candidates + exact verify. Recall at the
-    // 0.7 threshold with 16 bands × 4 rows is 1 - (1-j^4)^16 ≥ 0.988,
-    // and every pair in this corpus at/above threshold has j ≥ 0.9
-    // (miss probability < 1e-7), so the sets agree.
-    "x_dedup_minhash" -> """
-      WITH sh AS (
-        SELECT doc_id,
-               list_distinct(CASE WHEN len(toks) >= 3
-                 THEN list_transform(range(len(toks)-2),
-                      i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])
-                 ELSE [list_aggregate(toks, 'string_agg', ' ')] END) AS s
-        FROM (SELECT doc_id,
-                     list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-              FROM documents))
-      SELECT a_id, b_id, jaccard FROM (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-               CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-               / (CAST(len(a.s) + len(b.s) AS DOUBLE) - CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)) AS jaccard
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-      WHERE jaccard >= 0.7""",
-
-    // incremental-dedup equivalence: the batched union must equal the
-    // one-shot full-corpus pair set, so the oracle IS the full-corpus
-    // exact all-pairs query (same SQL as x_dedup_minhash).
-    "x_dedup_incremental" -> """
-      WITH sh AS (
-        SELECT doc_id,
-               list_distinct(CASE WHEN len(toks) >= 3
-                 THEN list_transform(range(len(toks)-2),
-                      i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])
-                 ELSE [list_aggregate(toks, 'string_agg', ' ')] END) AS s
-        FROM (SELECT doc_id,
-                     list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-              FROM documents))
-      SELECT a_id, b_id, jaccard FROM (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-               CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-               / (CAST(len(a.s) + len(b.s) AS DOUBLE) - CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)) AS jaccard
-        FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-      WHERE jaccard >= 0.7""",
-    // Exact all-pairs jaccard ACROSS the id-split — the declarative
-    // spec of what the bipartite banded join + digest fast path must
-    // surface (same recall argument as x_dedup_minhash).
-    "x_dedup_contamination" -> """
-      WITH sh AS (
-        SELECT doc_id,
-               list_distinct(CASE WHEN len(toks) >= 3
-                 THEN list_transform(range(len(toks)-2),
-                      i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])
-                 ELSE [list_aggregate(toks, 'string_agg', ' ')] END) AS s
-        FROM (SELECT doc_id,
-                     list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-              FROM documents))
-      SELECT eval_id, train_id, jaccard FROM (
-        SELECT a.doc_id AS eval_id, b.doc_id AS train_id,
-               CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-               / (CAST(len(a.s) + len(b.s) AS DOUBLE) - CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)) AS jaccard
-        FROM sh a JOIN sh b ON a.doc_id % 4 = 0 AND b.doc_id % 4 <> 0)
-      WHERE jaccard >= 0.7""",
-
-    "x_ngram_contamination" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS w
-        FROM documents),
-      grams AS (
-        SELECT DISTINCT doc_id, array_to_string(w[i:i+12], ' ') AS g
-        FROM toks, unnest(range(1, greatest(len(w)-11, 1))) AS u(i)),
-      train AS (SELECT doc_id, g FROM grams WHERE doc_id % 4 <> 0),
-      test AS (SELECT DISTINCT g FROM grams WHERE doc_id % 4 = 0)
-      SELECT t.doc_id,
-             count(*) AS n_ngrams,
-             count(x.g) AS n_hit,
-             (count(x.g) > 0) AS contaminated
-      FROM train t LEFT JOIN test x USING (g)
-      GROUP BY t.doc_id""",
-
-    // Same exact-jaccard pair set as x_dedup_minhash (recall argument
-    // above), then transitive closure by min-label propagation — the
-    // declarative spec of what large-star/small-star computes.
-    "x_dedup_cluster" -> """
-      WITH RECURSIVE sh AS (
-        SELECT doc_id,
-               list_distinct(CASE WHEN len(toks) >= 3
-                 THEN list_transform(range(len(toks)-2),
-                      i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])
-                 ELSE [list_aggregate(toks, 'string_agg', ' ')] END) AS s
-        FROM (SELECT doc_id,
-                     list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-              FROM documents)),
-      pairs AS (
-        SELECT a_id, b_id FROM (
-          SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                 CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                 / (CAST(len(a.s) + len(b.s) AS DOUBLE) - CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)) AS jaccard
-          FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        WHERE jaccard >= 0.7),
-      edges AS (
-        SELECT a_id AS u, b_id AS v FROM pairs
-        UNION SELECT b_id, a_id FROM pairs),
-      reach(id, r) AS (
-        SELECT u, u FROM edges
-        UNION
-        SELECT e.u, reach.r FROM edges e JOIN reach ON reach.id = e.v)
-      SELECT id AS doc_id, min(r) AS component FROM reach GROUP BY id""",
-
-    // x_dedup_cluster's transitive closure extended to EVERY document:
-    // clustered docs get the min reachable id, singletons their own.
-    "x_dedup_groups" -> """
-      WITH RECURSIVE sh AS (
-        SELECT doc_id,
-               list_distinct(CASE WHEN len(toks) >= 3
-                 THEN list_transform(range(len(toks)-2),
-                      i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])
-                 ELSE [list_aggregate(toks, 'string_agg', ' ')] END) AS s
-        FROM (SELECT doc_id,
-                     list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-              FROM documents)),
-      pairs AS (
-        SELECT a_id, b_id FROM (
-          SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                 CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                 / (CAST(len(a.s) + len(b.s) AS DOUBLE) - CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)) AS jaccard
-          FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        WHERE jaccard >= 0.7),
-      edges AS (
-        SELECT a_id AS u, b_id AS v FROM pairs
-        UNION SELECT b_id, a_id FROM pairs),
-      reach(id, r) AS (
-        SELECT u, u FROM edges
-        UNION
-        SELECT e.u, reach.r FROM edges e JOIN reach ON reach.id = e.v),
-      comp AS (SELECT id, min(r) AS g FROM reach GROUP BY id)
-      SELECT d.doc_id, CAST(coalesce(c.g, d.doc_id) AS BIGINT) AS group_id
-      FROM documents d LEFT JOIN comp c ON c.id = d.doc_id""",
-    "x_dedup_embed" -> """
-      SELECT a_id, b_id, round(cosine, 4) AS cosine FROM (
-        SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-               list_sum(list_transform(range(64), i -> CAST(a.embedding[i+1] AS DOUBLE) * CAST(b.embedding[i+1] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(range(64), i -> CAST(a.embedding[i+1] AS DOUBLE) * CAST(a.embedding[i+1] AS DOUBLE))))
-                * sqrt(list_sum(list_transform(range(64), i -> CAST(b.embedding[i+1] AS DOUBLE) * CAST(b.embedding[i+1] AS DOUBLE))))) AS cosine
-        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-      WHERE cosine >= 0.3""",
-    "x_multimodal_resize" -> """
-      WITH r AS (
-        SELECT doc_id, length(text) AS len, text,
-               greatest(1, least(length(text), 100)) AS target
-        FROM documents)
-      SELECT doc_id AS id,
-             CAST(CASE WHEN len = 0 THEN 0 ELSE target END AS BIGINT) AS byte_len,
-             40 AS width, 20 AS height,
-             CASE WHEN len = 0 THEN md5('') ELSE
-               md5(array_to_string(list_transform(range(target),
-                 i -> substr(text, CAST((i * len) // target AS INTEGER) + 1, 1)), ''))
-             END AS payload_md5
-      FROM r""",
-    "x_multimodal_frames" -> """
-      WITH s AS (
-        SELECT doc_id, length(text) AS len, text,
-               greatest(1, length(text) // 6) AS seg
-        FROM documents WHERE length(text) > 0)
-      SELECT doc_id AS id, CAST(i AS INTEGER) AS frame_idx,
-             CAST(least(seg, len - i * seg) AS BIGINT) AS frame_len,
-             md5(substr(text, CAST(i * seg AS INTEGER) + 1, CAST(seg AS INTEGER))) AS frame_md5
-      FROM s, unnest([0, 2, 4]) AS t(i)
-      WHERE i * seg < len""",
-    // expected pixels = UTF-8 bytes zero-padded to 32·height; stats
-    // re-derived with the same hex-pair byte-list technique as
-    // x_multimodal_features — no PNG anywhere on the oracle side
-    "x_multimodal_decode" -> """
-      WITH b AS (
-        SELECT doc_id, octet_length(encode(coalesce(text, ''))) AS len,
-               hex(encode(coalesce(text, ''))) AS hx
-        FROM documents),
-      e AS (
-        SELECT doc_id, len,
-               CASE WHEN len = 0 THEN 1 ELSE CAST(CEIL(len / 32.0) AS INTEGER) END AS h,
-               list_transform(range(len),
-                 i -> CAST(('0x' || substr(hx, CAST(2*i+1 AS INTEGER), 2)) AS INTEGER)) AS bytes
-        FROM b),
-      p AS (
-        SELECT doc_id, h,
-               list_concat(bytes, list_transform(range(32 * h - len), x -> 0)) AS px
-        FROM e)
-      SELECT doc_id AS id, 32 AS width, h AS height, 1 AS channels,
-             CAST(32 * h AS BIGINT) AS pixel_len,
-             CAST(list_sum(px) AS BIGINT) AS pixel_sum,
-             CAST(list_reduce(list_prepend(17, px),
-               (a, x) -> (a * 31 + x) % 16777216) AS BIGINT) AS pixel_hash
-      FROM p""",
-    // tiff: greyscale round-trip — identical contract to the PNG gate
-    "x_multimodal_tiff_decode" -> """
-      WITH b AS (
-        SELECT doc_id, octet_length(encode(coalesce(text, ''))) AS len,
-               hex(encode(coalesce(text, ''))) AS hx
-        FROM documents),
-      e AS (
-        SELECT doc_id, len,
-               CASE WHEN len = 0 THEN 1 ELSE CAST(CEIL(len / 32.0) AS INTEGER) END AS h,
-               list_transform(range(len),
-                 i -> CAST(('0x' || substr(hx, CAST(2*i+1 AS INTEGER), 2)) AS INTEGER)) AS bytes
-        FROM b),
-      p AS (
-        SELECT doc_id, h,
-               list_concat(bytes, list_transform(range(32 * h - len), x -> 0)) AS px
-        FROM e)
-      SELECT doc_id AS id, 32 AS width, h AS height, 1 AS channels,
-             CAST(32 * h AS BIGINT) AS pixel_len,
-             CAST(list_sum(px) AS BIGINT) AS pixel_sum,
-             CAST(list_reduce(list_prepend(17, px),
-               (a, x) -> (a * 31 + x) % 16777216) AS BIGINT) AS pixel_hash
-      FROM p""",
-
-    // webp: the RGBA stream is (0, byte, 0, 255) per pixel — flatten
-    // and replay the same rolling hash
-    "x_multimodal_webp_decode" -> """
-      WITH b AS (
-        SELECT doc_id, octet_length(encode(coalesce(text, ''))) AS len,
-               hex(encode(coalesce(text, ''))) AS hx
-        FROM documents),
-      e AS (
-        SELECT doc_id, len,
-               CASE WHEN len = 0 THEN 1 ELSE CAST(CEIL(len / 32.0) AS INTEGER) END AS h,
-               list_transform(range(len),
-                 i -> CAST(('0x' || substr(hx, CAST(2*i+1 AS INTEGER), 2)) AS INTEGER)) AS bytes
-        FROM b),
-      p AS (
-        SELECT doc_id, h,
-               flatten(list_transform(
-                 list_concat(bytes, list_transform(range(32 * h - len), x -> 0)),
-                 g -> [0, g, 0, 255])) AS px
-        FROM e)
-      SELECT doc_id AS id, 32 AS width, h AS height, 4 AS channels,
-             CAST(4 * 32 * h AS BIGINT) AS pixel_len,
-             CAST(list_sum(px) AS BIGINT) AS pixel_sum,
-             CAST(list_reduce(list_prepend(17, px),
-               (a, x) -> (a * 31 + x) % 16777216) AS BIGINT) AS pixel_hash
-      FROM p""",
-
-    // lossy webp: the all-true verdict table (tracked-reconstruction
-    // parity, see the queries-side comment) + the height arithmetic
-    "x_multimodal_webp_lossy" -> """
-      WITH b AS (
-        SELECT doc_id, octet_length(encode(coalesce(text, ''))) AS len FROM documents)
-      SELECT doc_id AS id, true AS reconstruction_exact, true AS rgb_exact,
-             CASE WHEN len = 0 THEN 1 ELSE CAST(CEIL(len / 32.0) AS INTEGER) END AS height
-      FROM b""",
-
-    "x_multimodal_webp_alpha" -> """
-      WITH b AS (
-        SELECT doc_id, octet_length(encode(coalesce(text, ''))) AS len FROM documents)
-      SELECT doc_id AS id, true AS rgb_exact, true AS alpha_exact,
-             CASE WHEN len = 0 THEN 1 ELSE CAST(CEIL(len / 32.0) AS INTEGER) END AS height
-      FROM b""",
-
-    // animated webp: replay each frame's COMPOSED canvas from the
-    // text bytes — frame k shows tiles {k} ∪ {j<k : j%4≠3} (every
-    // fourth frame disposes to background), tile j carries bytes
-    // [32j, 32j+32) zero-padded as green rows 2j..2j+1 of a 16-wide
-    // RGBA canvas, transparent elsewhere
-    "x_multimodal_webp_anim" -> """
-      WITH b AS (
-        SELECT doc_id, least(octet_length(encode(coalesce(text, ''))), 16384) AS len,
-               hex(encode(coalesce(text, ''))) AS hx
-        FROM documents),
-      e AS (
-        SELECT doc_id, len,
-               CASE WHEN len = 0 THEN 1 ELSE CAST(CEIL(len / 32.0) AS INTEGER) END AS n,
-               list_transform(range(len),
-                 i -> CAST(('0x' || substr(hx, CAST(2*i+1 AS INTEGER), 2)) AS INTEGER)) AS bytes
-        FROM b),
-      f AS (
-        SELECT doc_id, len, n, bytes, CAST(unnest(range(n)) AS INTEGER) AS k
-        FROM e),
-      p AS (
-        SELECT doc_id, n, k,
-               flatten(list_transform(range(16 * 2 * n), p ->
-                 CASE WHEN ((p // 32) = k OR ((p // 32) < k AND (p // 32) % 4 != 3))
-                      THEN [0, CASE WHEN 32*(p//32) + ((p//16)%2)*16 + (p%16) < len
-                                    THEN bytes[CAST(32*(p//32) + ((p//16)%2)*16 + (p%16) + 1 AS INTEGER)]
-                                    ELSE 0 END, 0, 255]
-                      ELSE [0, 0, 0, 0] END)) AS px
-        FROM f)
-      SELECT doc_id AS id, k AS frame_idx, 16 AS canvas_width,
-             CAST(2*n AS INTEGER) AS canvas_height,
-             3 AS loop_count, 0 AS x, CAST(2*k AS INTEGER) AS y, 16 AS width, 2 AS height,
-             CAST(10*(k+1) AS INTEGER) AS duration_ms, (k % 2 = 0) AS blend, (k % 4 = 3) AS dispose,
-             CAST(16 * 2 * n * 4 AS BIGINT) AS pixel_len,
-             CAST(list_sum(px) AS BIGINT) AS pixel_sum,
-             CAST(list_reduce(list_prepend(17, px), (a, x) -> (a * 31 + x) % 16777216) AS BIGINT) AS pixel_hash
-      FROM p""",
-
-    // animated gif: one 16x1 row per frame (so j = row index = frame
-    // index), identity grayscale palette → visible pixels (b,b,b,255)
-    "x_multimodal_gif_anim" -> """
-      WITH b AS (
-        SELECT doc_id, least(octet_length(encode(coalesce(text, ''))), 8192) AS len,
-               hex(encode(coalesce(text, ''))) AS hx
-        FROM documents),
-      e AS (
-        SELECT doc_id, len,
-               CASE WHEN len = 0 THEN 1 ELSE CAST(CEIL(len / 16.0) AS INTEGER) END AS n,
-               list_transform(range(len),
-                 i -> CAST(('0x' || substr(hx, CAST(2*i+1 AS INTEGER), 2)) AS INTEGER)) AS bytes
-        FROM b),
-      f AS (
-        SELECT doc_id, len, n, bytes, CAST(unnest(range(n)) AS INTEGER) AS k
-        FROM e),
-      p AS (
-        SELECT doc_id, n, k,
-               flatten(list_transform(range(16 * n), p ->
-                 CASE WHEN ((p // 16) = k OR ((p // 16) < k AND (p // 16) % 4 != 3))
-                      THEN [CASE WHEN p < len THEN bytes[CAST(p + 1 AS INTEGER)] ELSE 0 END,
-                            CASE WHEN p < len THEN bytes[CAST(p + 1 AS INTEGER)] ELSE 0 END,
-                            CASE WHEN p < len THEN bytes[CAST(p + 1 AS INTEGER)] ELSE 0 END, 255]
-                      ELSE [0, 0, 0, 0] END)) AS px
-        FROM f)
-      SELECT doc_id AS id, k AS frame_idx, 16 AS canvas_width,
-             CAST(n AS INTEGER) AS canvas_height,
-             2 AS loop_count, 0 AS x, k AS y, 16 AS width, 1 AS height,
-             CAST(k + 1 AS INTEGER) AS delay_cs,
-             CAST(CASE WHEN k % 4 = 3 THEN 2 ELSE 0 END AS INTEGER) AS disposal,
-             CAST(16 * n * 4 AS BIGINT) AS pixel_len,
-             CAST(list_sum(px) AS BIGINT) AS pixel_sum,
-             CAST(list_reduce(list_prepend(17, px), (a, x) -> (a * 31 + x) % 16777216) AS BIGINT) AS pixel_hash
-      FROM p""",
-    "x_multimodal_video_meta" -> """
-      WITH b AS (
-        SELECT doc_id, octet_length(encode(coalesce(text, ''))) AS len FROM documents)
-      SELECT doc_id AS id, CAST(248 + len AS BIGINT) AS byte_len,
-             'video/mp4' AS mime_detected, 'isom' AS brand,
-             CAST(len * 40 AS BIGINT) AS duration_ms,
-             CAST(16 + len % 640 AS INTEGER) AS width,
-             CAST(16 + (len * 7) % 480 AS INTEGER) AS height
-      FROM b""",
-    "x_multimodal_mkv_meta" -> """
-      WITH b AS (
-        SELECT doc_id, octet_length(encode(coalesce(text, ''))) AS len FROM documents)
-      SELECT doc_id AS id, CAST(268 + len AS BIGINT) AS byte_len,
-             'video/x-matroska' AS mime_detected, 'matroska' AS brand,
-             CAST(len * 20 AS BIGINT) AS duration_ms,
-             CAST(16 + (len * 3) % 640 AS INTEGER) AS width,
-             CAST(16 + (len * 11) % 480 AS INTEGER) AS height
-      FROM b""",
-    // fingerprint contract (see x_audio_fingerprint query comment):
-    // same class → all 4 landmarks shared; classes 6 or 7 apart →
-    // exactly 3 (the mod-13 stride arithmetic); everything else is
-    // below minMatch.
-    "x_audio_fingerprint" -> """
-      SELECT a.doc_id AS a_doc, b.doc_id AS b_doc,
-             CAST(CASE WHEN a.doc_id % 10 = b.doc_id % 10 THEN 4 ELSE 3 END AS BIGINT) AS n_common
-      FROM documents a JOIN documents b
-        ON a.doc_id < b.doc_id
-        AND (a.doc_id % 10 = b.doc_id % 10
-             OR abs(a.doc_id % 10 - b.doc_id % 10) IN (6, 7))""",
-
-    // groups contract (see x_audio_fingerprint_groups query comment):
-    // classes {0,1,2,3,6,7,8,9} chain into the component whose
-    // canonical rep is doc 0; classes 4 and 5 group under their own
-    // class-minimum doc ids.
-    "x_audio_fingerprint_groups" -> """
-      SELECT doc_id,
-             CAST(CASE WHEN doc_id % 10 IN (4, 5) THEN doc_id % 10 ELSE 0 END AS BIGINT) AS group_id
-      FROM documents""",
-
-    // spectral contract (see x_multimodal_spectral query comment):
-    // tone frequency and frame count replay from the id; the
-    // peak/centroid/flatness verdicts are what the FFT must earn.
-    "x_multimodal_spectral" -> """
-      SELECT doc_id, CAST(500 + (doc_id % 16) * 250 AS INTEGER) AS freq_hz,
-             CAST(3 AS BIGINT) AS n_frames,
-             true AS peak_ok, true AS centroid_ok, true AS tonal
-      FROM documents""",
-
-    // pHash near-dup contract (see x_multimodal_phash query comment):
-    // the pair set is the same-class id structure; every pair is an
-    // identical payload, so hamming must be exactly 0.
-    "x_multimodal_phash" -> """
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(0 AS BIGINT) AS hamming
-      FROM documents a JOIN documents b
-        ON a.doc_id < b.doc_id AND a.doc_id % 10 = b.doc_id % 10""",
-
-    // groups = planted classes; group_id = min doc_id of the class
-    // (window min — no assumption that ids start at 0 or are dense)
-    "x_image_neardup_groups" -> """
-      SELECT doc_id,
-             CAST(min(doc_id) OVER (PARTITION BY doc_id % 10) AS BIGINT) AS group_id
-      FROM documents""",
-
-    // MJPEG frame contract (see x_multimodal_mjpeg_frames query
-    // comment): frame counts replay from the text length; the dims
-    // and luminance-band verdicts are the booleans the decode must
-    // earn on every frame.
-    "x_multimodal_mjpeg_frames" -> """
-      SELECT doc_id,
-             CAST(2 + octet_length(encode(coalesce(text, ''))) % 4 AS BIGINT) AS n_frames,
-             true AS dims_ok, true AS luma_ok
-      FROM documents""",
-
-    // mp4 frames: same frame synthesis as the AVI gate, plus the
-    // sample-table contracts (40 ms uniform timing, every-third sync)
-    "x_multimodal_mp4_frames" -> """
-      SELECT doc_id,
-             CAST(2 + octet_length(encode(coalesce(text, ''))) % 4 AS BIGINT) AS n_frames,
-             true AS dims_ok, true AS luma_ok, true AS time_ok, true AS key_ok
-      FROM documents""",
-
-    // fragmented mp4: same contracts over the moof/trun walk
-    "x_multimodal_mp4_frag" -> """
-      SELECT doc_id,
-             CAST(2 + octet_length(encode(coalesce(text, ''))) % 4 AS BIGINT) AS n_frames,
-             true AS dims_ok, true AS luma_ok, true AS time_ok, true AS key_ok
-      FROM documents""",
-
-    // mkv frames: same contracts over the cluster/block walk
-    "x_multimodal_mkv_frames" -> """
-      SELECT doc_id,
-             CAST(2 + octet_length(encode(coalesce(text, ''))) % 4 AS BIGINT) AS n_frames,
-             true AS dims_ok, true AS luma_ok, true AS time_ok, true AS key_ok
-      FROM documents""",
-    // mkv lacing: six frames (three laced blocks), contracts boolean
-    "x_multimodal_mkv_laced" -> """
-      SELECT doc_id, CAST(6 AS BIGINT) AS n_frames,
-             true AS dims_ok, true AS luma_ok, true AS time_ok, true AS key_ok
-      FROM documents""",
-
-    "x_multimodal_audio" -> """
-      WITH b AS (
-        SELECT doc_id, octet_length(encode(coalesce(text, ''))) AS len,
-               hex(encode(coalesce(text, ''))) AS hx
-        FROM documents),
-      e AS (
-        SELECT doc_id, len,
-               list_transform(range(len),
-                 i -> CAST(('0x' || substr(hx, CAST(2*i+1 AS INTEGER), 2)) AS INTEGER)) AS bytes
-        FROM b)
-      SELECT doc_id AS id, 1 AS channels, 8000 AS sample_rate, 8 AS bits,
-             CAST(len AS BIGINT) AS n_samples,
-             CAST(coalesce(256 * list_max(list_transform(bytes, v -> abs(v - 128))), 0) AS BIGINT) AS peak,
-             CAST(coalesce(65536 * list_sum(list_transform(bytes, v -> (v - 128) * (v - 128))), 0) AS BIGINT) AS sum_sq,
-             CAST(coalesce(list_sum(list_transform(range(len - 1),
-               i -> CASE WHEN (bytes[CAST(i+1 AS INTEGER)] < 128) <> (bytes[CAST(i+2 AS INTEGER)] < 128)
-                         THEN 1 ELSE 0 END)), 0) AS BIGINT) AS zero_crossings
-      FROM e""",
-
-    // identical derivation to x_multimodal_audio (FLAC is lossless —
-    // the decoded samples are bit-equal to the WAV path's), except the
-    // stream carries 16-bit samples
-    "x_multimodal_flac" -> """
-      WITH b AS (
-        SELECT doc_id, octet_length(encode(coalesce(text, ''))) AS len,
-               hex(encode(coalesce(text, ''))) AS hx
-        FROM documents),
-      e AS (
-        SELECT doc_id, len,
-               list_transform(range(len),
-                 i -> CAST(('0x' || substr(hx, CAST(2*i+1 AS INTEGER), 2)) AS INTEGER)) AS bytes
-        FROM b)
-      SELECT doc_id AS id, 1 AS channels, 8000 AS sample_rate, 16 AS bits,
-             CAST(len AS BIGINT) AS n_samples,
-             CAST(coalesce(256 * list_max(list_transform(bytes, v -> abs(v - 128))), 0) AS BIGINT) AS peak,
-             CAST(coalesce(65536 * list_sum(list_transform(bytes, v -> (v - 128) * (v - 128))), 0) AS BIGINT) AS sum_sq,
-             CAST(coalesce(list_sum(list_transform(range(len - 1),
-               i -> CASE WHEN (bytes[CAST(i+1 AS INTEGER)] < 128) <> (bytes[CAST(i+2 AS INTEGER)] < 128)
-                         THEN 1 ELSE 0 END)), 0) AS BIGINT) AS zero_crossings
-      FROM e""",
-
-    // Ogg metadata contract: container overhead is the packer's fixed
-    // 86 + ⌊len/255⌋ bytes (58-byte id page + 27-byte data-page header
-    // + one lacing byte per started 255-byte segment), channels/rate
-    // are the declared len-derived functions, and duration is the
-    // granule count 16·len over the rate in integer ms (floor division
-    // on both engines)
-    "x_multimodal_ogg_meta" -> """
-      WITH b AS (
-        SELECT doc_id, least(octet_length(encode(coalesce(text, ''))), 65025) AS len
-        FROM documents)
-      SELECT doc_id AS id,
-             CAST(86 + len + len // 255 AS BIGINT) AS byte_len,
-             'audio/ogg' AS mime_detected,
-             CAST(1 + len % 2 AS INTEGER) AS channels,
-             CAST(8000 * (1 + len % 3) AS INTEGER) AS sample_rate,
-             CAST((len * 16 * 1000) // (8000 * (1 + len % 3)) AS BIGINT) AS duration_ms
-      FROM b""",
-
-    // MP3 metadata contract: the packer's fixed geometry — ID3v2 tag
-    // of 10 + len%7 bytes, ⌊144·128000/rate⌋-byte frames each holding
-    // frame_len − 6 data bytes, conditional 128-byte ID3v1 trailer —
-    // with rate/channels the declared len-derived functions and
-    // duration the exact per-frame sample sum (floor division on
-    // both engines)
-    "x_multimodal_mp3_meta" -> """
-      WITH b AS (
-        SELECT doc_id, least(octet_length(encode(coalesce(text, ''))), 65536) AS len
-        FROM documents),
-      g AS (
-        SELECT doc_id, len,
-               CASE len % 3 WHEN 0 THEN 32000 WHEN 1 THEN 44100 ELSE 48000 END AS rate
-        FROM b),
-      h AS (
-        SELECT doc_id, len, rate, 144 * 128000 // rate AS frame_len FROM g),
-      i AS (
-        SELECT doc_id, len, rate, frame_len,
-               GREATEST(1, (len + frame_len - 7) // (frame_len - 6)) AS n_frames
-        FROM h)
-      SELECT doc_id AS id,
-             CAST(10 + len % 7 + n_frames * frame_len +
-                  CASE WHEN len % 5 = 0 THEN 128 ELSE 0 END AS BIGINT) AS byte_len,
-             'audio/mpeg' AS mime_detected,
-             CAST(CASE WHEN len % 2 = 0 THEN 1 ELSE 2 END AS INTEGER) AS channels,
-             CAST(rate AS INTEGER) AS sample_rate,
-             CAST((n_frames * 1152 * 1000) // rate AS BIGINT) AS duration_ms
-      FROM i""",
-
-    // zstd contract: decode must reproduce the document's exact
-    // UTF-8 bytes — length and md5 replay from the text column
-    "x_multimodal_zstd" -> """
-      SELECT doc_id AS id, true AS decoded,
-             CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS n_bytes,
-             md5(coalesce(text, '')) AS digest
-      FROM documents""",
-
-    // zstd dictionary frames: the same byte-exact identity through
-    // the dictionary-window decode
-    "x_zstd_dict" -> """
-      SELECT doc_id AS id, true AS decoded,
-             CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS n_bytes,
-             md5(coalesce(text, '')) AS digest
-      FROM documents""",
-
-    // xz contract: same decoded-byte identity
-    "x_multimodal_xz" -> """
-      SELECT doc_id AS id, true AS decoded,
-             CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS n_bytes,
-             md5(coalesce(text, '')) AS digest
-      FROM documents""",
-
-    // lzma-alone contract: same decoded-byte identity
-    "x_multimodal_lzma" -> """
-      SELECT doc_id AS id, true AS decoded,
-             CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS n_bytes,
-             md5(coalesce(text, '')) AS digest
-      FROM documents""",
-
-    // vorbis contract: stream facts + the granule-truncated sample
-    // count + the planted dominant band, all id arithmetic
-    "x_multimodal_vorbis" -> """
-      SELECT doc_id, true AS ok, 1 AS channels,
-             CAST(8000 + (doc_id % 3) * 4000 AS INTEGER) AS sample_rate,
-             CAST((3 + doc_id % 3) * 128 - doc_id % 5 AS BIGINT) AS n_samples,
-             CAST(doc_id % 13 AS INTEGER) AS band
-      FROM documents""",
-
-    // bzip2 contract: same decoded-byte identity
-    "x_multimodal_bzip2" -> """
-      SELECT doc_id AS id, true AS decoded,
-             CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS n_bytes,
-             md5(coalesce(text, '')) AS digest
-      FROM documents""",
-
-    // snappy/lz4 contract: same decoded-byte identity, codec by id
-    "x_multimodal_short" -> """
-      SELECT doc_id AS id,
-             CASE WHEN doc_id % 2 = 0 THEN 'snappy' ELSE 'lz4' END AS codec,
-             true AS decoded,
-             CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS n_bytes,
-             md5(coalesce(text, '')) AS digest
-      FROM documents""",
-
-    // framed-layer contract: same decoded-byte identity, codec by
-    // parity re-derived through sniff
-    "x_multimodal_framed" -> """
-      SELECT doc_id AS id,
-             CASE WHEN doc_id % 2 = 0 THEN 'snappy-framed' ELSE 'lz4-framed' END AS codec,
-             true AS decoded,
-             CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS n_bytes,
-             md5(coalesce(text, '')) AS digest
-      FROM documents""",
-
-    // gzip contract: identical shape — the compressed wire format
-    // differs, the decoded bytes must not
-    "x_multimodal_gzip" -> """
-      SELECT doc_id AS id, true AS decoded,
-             CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS n_bytes,
-             md5(coalesce(text, '')) AS digest
-      FROM documents""",
-
-    // brotli contract: same decoded-byte identity
-    "x_multimodal_brotli" -> """
-      SELECT doc_id AS id, true AS decoded,
-             CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS n_bytes,
-             md5(coalesce(text, '')) AS digest
-      FROM documents""",
-
-    // the WARC writer's record layout re-derived from corpus columns:
-    // page → HTTP message → WARC body, ids as md5-derived urn:uuids,
-    // plus one warcinfo row per occupied file bucket
-    "x_warc_records" -> """
-      WITH page AS (
-        SELECT doc_id, doc_id % 32 AS file_id,
-          '<html><head><title>Doc ' || doc_id || '</title></head><body><p>From ' ||
-            coalesce(source, '') || '</p><div>' || coalesce(text, '') || '</div></body></html>' AS page
-        FROM documents),
-      http AS (
-        SELECT doc_id, file_id,
-          'HTTP/1.1 200 OK' || chr(13) || chr(10) ||
-          'Content-Type: text/html; charset=utf-8' || chr(13) || chr(10) ||
-          'Content-Length: ' || octet_length(encode(page)) || chr(13) || chr(10) || chr(13) || chr(10) ||
-          page AS http
-        FROM page),
-      resp AS (
-        SELECT file_id, 'response' AS warc_type, doc_id,
-          '<urn:uuid:' || substr(md5('doc-' || doc_id), 1, 8) || '-' ||
-            substr(md5('doc-' || doc_id), 9, 4) || '-' ||
-            substr(md5('doc-' || doc_id), 13, 4) || '-' ||
-            substr(md5('doc-' || doc_id), 17, 4) || '-' ||
-            substr(md5('doc-' || doc_id), 21, 12) || '>' AS record_id,
-          CAST(200 AS BIGINT) AS status,
-          CAST(octet_length(encode(http)) AS BIGINT) AS content_length,
-          md5(http) AS digest
-        FROM http),
-      info AS (
-        SELECT DISTINCT doc_id % 32 AS file_id, 'warcinfo' AS warc_type,
-          CAST(NULL AS BIGINT) AS doc_id,
-          '<urn:uuid:' || substr(md5('warcinfo-' || (doc_id % 32)), 1, 8) || '-' ||
-            substr(md5('warcinfo-' || (doc_id % 32)), 9, 4) || '-' ||
-            substr(md5('warcinfo-' || (doc_id % 32)), 13, 4) || '-' ||
-            substr(md5('warcinfo-' || (doc_id % 32)), 17, 4) || '-' ||
-            substr(md5('warcinfo-' || (doc_id % 32)), 21, 12) || '>' AS record_id,
-          CAST(NULL AS BIGINT) AS status,
-          CAST(octet_length(encode('software: graft' || chr(13) || chr(10) ||
-            'format: WARC File Format 1.1' || chr(13) || chr(10))) AS BIGINT) AS content_length,
-          md5('software: graft' || chr(13) || chr(10) ||
-            'format: WARC File Format 1.1' || chr(13) || chr(10)) AS digest
-        FROM documents)
-      SELECT * FROM resp UNION ALL SELECT * FROM info""",
-
-    // zip member table re-derived: stored vs deflate by bucket parity
-    "x_zip_members" -> """
-      SELECT doc_id % 32 AS file_id, 'doc/' || doc_id || '.txt' AS name,
-             CAST(CASE WHEN (doc_id % 32) % 2 = 0 THEN 0 ELSE 8 END AS BIGINT) AS method,
-             CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS size,
-             md5(coalesce(text, '')) AS digest
-      FROM documents""",
-
-    // avro contract: codec cycles with the shard bucket (doc_id%32)%4
-    // in the packer's declared order; fields and text bytes replay
-    // from corpus columns directly
-    "x_avro_roundtrip" -> """
-      SELECT doc_id,
-             CASE (doc_id % 32) % 4 WHEN 0 THEN 'null' WHEN 1 THEN 'deflate'
-                  WHEN 2 THEN 'snappy' ELSE 'zstandard' END AS codec,
-             coalesce(source, '') AS source, coalesce(lang, '') AS lang,
-             CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS n_bytes,
-             md5(coalesce(text, '')) AS digest
-      FROM documents""",
-
-    // tfrecord contract: per-shard record order is id order within
-    // the doc_id % 8 bucket; fields replay from corpus columns
-    "x_tfrecord_docs" -> """
-      WITH ranked AS (
-        SELECT doc_id, coalesce(source, '') AS source, coalesce(lang, '') AS lang,
-               coalesce(text, '') AS text,
-               CAST(ROW_NUMBER() OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) - 1
-                    AS INTEGER) AS seq
-        FROM documents)
-      SELECT doc_id, seq, source, lang, text FROM ranked""",
-
-    // tfrecord float contract: the x_npz serialization over the
-    // fixed32 wire layout
-    "x_tfrecord_embed" -> """
-      SELECT vec_id, CAST(len(embedding) AS BIGINT) AS dim,
-             array_to_string(list_transform(embedding,
-               v -> CAST(floor(CAST(v AS DOUBLE) * 1073741824) AS BIGINT)), ',') AS values
-      FROM embeddings WHERE embedding IS NOT NULL""",
-
-    // sentence-dedup contract: the two planted boilerplate sentences
-    // vanish, the corpus sentence and unique tail survive in order
-    "x_dedup_sentences" -> """
-      SELECT doc_id,
-             coalesce(text, '') || '. Unique tail for doc ' || doc_id || ' indeed.' AS text,
-             CAST(2 AS BIGINT) AS n_sentences_removed
-      FROM documents""",
-
-    // bilinear contract: the oracle's own quarter-unit weight table
-    // over the four planted corners, integer-divided exactly as the
-    // kernel rounds
-    "x_image_bilinear" -> """
-      WITH g AS (SELECT doc_id, doc_id % 256 AS a, (doc_id + 37) % 256 AS b,
-                        (doc_id + 91) % 256 AS c, (doc_id + 160) % 256 AS dd
-                 FROM documents),
-      w AS (SELECT wx.x, wx.qx0, wy.y, wy.qy0
-            FROM (VALUES (0, 4), (1, 3), (2, 1), (3, 0)) wx(x, qx0),
-                 (VALUES (0, 4), (1, 3), (2, 1), (3, 0)) wy(y, qy0))
-      SELECT doc_id, x, y,
-             CAST((qx0 * qy0 * a + (4 - qx0) * qy0 * b +
-                   qx0 * (4 - qy0) * c + (4 - qx0) * (4 - qy0) * dd + 8) // 16
-                  AS INTEGER) AS px
-      FROM g, w""",
-
-    // boilerplate contract: every block metric is arithmetic over
-    // the plant (the corpus block's verdict follows its own word
-    // count, computed by the same rule); density through the exact
-    // floor(x·1e6) serialization
-    "x_boilerplate" -> """
-      WITH d AS (
-        SELECT doc_id,
-               trim(regexp_replace(coalesce(text, ''), '[ \t\r\n]+', ' ', 'g')) AS ct,
-               length(CAST(doc_id AS VARCHAR)) AS L
-        FROM documents),
-      w AS (SELECT doc_id, ct, L,
-              CASE WHEN ct = '' THEN 0
-                   ELSE len(list_filter(string_split(ct, ' '), x -> x <> '')) END AS tw
-            FROM d)
-      SELECT doc_id, 0 AS block_idx, 2 AS n_words, 900000 AS density_u, false AS good FROM w
-      UNION ALL SELECT doc_id, 1, 4, 0, true FROM w
-      UNION ALL SELECT doc_id, 2, 9,
-        CAST(floor(9.0 / (36 + L) * 1000000) AS BIGINT), true FROM w
-      UNION ALL SELECT doc_id, 3, CAST(tw AS INTEGER), 0, tw >= 4 FROM w WHERE ct <> ''
-      UNION ALL SELECT doc_id, CASE WHEN ct = '' THEN 3 ELSE 4 END, 5,
-        CAST(floor(12.0 / (20 + L) * 1000000) AS BIGINT), false FROM w""",
-
-    // html tables contract: header row + id%3+1 data rows + the
-    // id%4 second table, all id arithmetic
-    "x_html_tables" -> """
-      SELECT doc_id, 0 AS table_idx, 0 AS row, 0 AS col, true AS header, 'H0' AS text
-      FROM documents
-      UNION ALL SELECT doc_id, 0, 0, 1, true, 'H1 & more' FROM documents
-      UNION ALL
-      SELECT doc_id, 0, rv.r, cv.c, false,
-             'R' || rv.r || 'C' || cv.c || ':' || doc_id
-      FROM documents, (VALUES (1), (2), (3)) rv(r), (VALUES (0), (1)) cv(c)
-      WHERE rv.r <= doc_id % 3 + 1
-      UNION ALL
-      SELECT doc_id, 1, 0, 0, false, 'T2:' || doc_id
-      FROM documents WHERE doc_id % 4 = 0""",
-
-    // sentence contracts: every boundary is an oracle literal
-    "x_sentences" -> """
-      SELECT doc_id, 0 AS seq,
-             'Dr. Smith met Mr. Jones at 3.5 km.' AS sentence,
-             34 AS n_chars
-      FROM documents
-      UNION ALL SELECT doc_id, 1,
-        'Doc ' || doc_id || ' has ' || (doc_id % 7) || ' parts.',
-        CAST(length('Doc ' || doc_id || ' has ' || (doc_id % 7) || ' parts.') AS INTEGER)
-      FROM documents
-      UNION ALL SELECT doc_id, 2, 'Was it useful?!', 15 FROM documents
-      UNION ALL SELECT doc_id, 3, 'Yes.', 4 FROM documents
-      UNION ALL SELECT doc_id, 4, 'the end of doc ' || doc_id,
-        CAST(length('the end of doc ' || doc_id) AS INTEGER)
-      FROM documents""",
-
-    // chunking contract: two-sentence windows with a one-sentence
-    // carry, pure arithmetic
-    "x_sentence_chunks" -> """
-      SELECT doc_id, CAST(cv.c AS INTEGER) AS chunk,
-             'S' || cv.c || ' xxxxxxxxxx. S' || (cv.c + 1) || ' xxxxxxxxxx.' AS text,
-             2 AS n_sentences
-      FROM documents, (VALUES (0), (1), (2), (3)) cv(c)
-      WHERE cv.c <= doc_id % 4""",
-
-    // cbor contract: the flattened document is pure id arithmetic
-    "x_cbor_decode" -> """
-      WITH d AS (SELECT doc_id FROM documents WHERE doc_id IS NOT NULL)
-      SELECT doc_id, '$' AS path, 'map' AS kind, '7' AS value FROM d
-      UNION ALL SELECT doc_id, '$.i', 'uint', CAST(doc_id AS VARCHAR) FROM d
-      UNION ALL SELECT doc_id, '$.n', 'nint', CAST(-(doc_id % 100) - 1 AS VARCHAR) FROM d
-      UNION ALL SELECT doc_id, '$.t', 'text', 'doc' || doc_id FROM d
-      UNION ALL SELECT doc_id, '$.b', 'bytes',
-        printf('%02x%02x', doc_id % 256, (doc_id * 7) % 256) FROM d
-      UNION ALL SELECT doc_id, '$.f',
-        CASE doc_id % 3 WHEN 0 THEN 'f16' WHEN 1 THEN 'f32' ELSE 'f64' END,
-        CASE doc_id % 3 WHEN 0 THEN '1.5' WHEN 1 THEN '0.25' ELSE '2.5' END FROM d
-      UNION ALL SELECT doc_id, '$.a', 'array', '3' FROM d
-      UNION ALL SELECT doc_id, '$.a[0]', 'simple', 'true' FROM d
-      UNION ALL SELECT doc_id, '$.a[1]', 'simple', 'null' FROM d
-      UNION ALL SELECT doc_id, '$.a[2]', 'uint', CAST(doc_id % 5 AS VARCHAR) FROM d
-      UNION ALL SELECT doc_id, '$.g', 'tag', '42' FROM d
-      UNION ALL SELECT doc_id, '$.g!', 'text', 't' || doc_id FROM d""",
-
-    // msgpack contract: the flattened document is pure id arithmetic
-    "x_msgpack_decode" -> """
-      WITH d AS (SELECT doc_id FROM documents WHERE doc_id IS NOT NULL)
-      SELECT doc_id, '$' AS path, 'map' AS kind, '7' AS value FROM d
-      UNION ALL SELECT doc_id, '$.i', 'uint', CAST(doc_id AS VARCHAR) FROM d
-      UNION ALL SELECT doc_id, '$.n', 'int', CAST(-(doc_id % 100) - 1 AS VARCHAR) FROM d
-      UNION ALL SELECT doc_id, '$.t', 'str',
-        'doc' || doc_id || CASE WHEN doc_id % 2 = 0 THEN '' ELSE repeat('x', 32) END FROM d
-      UNION ALL SELECT doc_id, '$.b', 'bin',
-        printf('%02x%02x', doc_id % 256, (doc_id * 7) % 256) FROM d
-      UNION ALL SELECT doc_id, '$.f',
-        CASE WHEN doc_id % 3 = 0 THEN 'f32' ELSE 'f64' END,
-        CASE WHEN doc_id % 3 = 0 THEN '0.25' ELSE '2.5' END FROM d
-      UNION ALL SELECT doc_id, '$.a', 'array', '3' FROM d
-      UNION ALL SELECT doc_id, '$.a[0]', 'bool', 'true' FROM d
-      UNION ALL SELECT doc_id, '$.a[1]', 'nil', 'nil' FROM d
-      UNION ALL SELECT doc_id, '$.a[2]', 'uint', CAST(doc_id % 5 AS VARCHAR) FROM d
-      UNION ALL SELECT doc_id, '$.e', 'ext',
-        '7:' || printf('%02x%02x%02x%02x', doc_id % 256, (doc_id * 3) % 256,
-                       (doc_id * 5) % 256, (doc_id * 11) % 256) FROM d""",
-
-    // parquet footer contract: DuckDB's own parquet reader IS the
-    // oracle — two independent decoders of the same real footers.
-    // parquet_metadata needs FILE paths (the oracle harness registers
-    // views, which carry no path), so the oracle names the sf0.01
-    // files the correctness gate contractually runs at; the Spark
-    // side follows the sfDir argument as always.
-    // delta-log contract: active files replay by id arithmetic —
-    // %5==3 self-removed (absent), %5==4 resurrected with the re-add
-    // size, stats on even ids, partition value from the source column
-    "x_delta_log" -> """
-      SELECT 'part-' || doc_id || '.parquet' AS path,
-             CAST(CASE WHEN doc_id % 5 = 4 THEN doc_id + 2000
-                       ELSE doc_id + 1000 END AS BIGINT) AS size,
-             CAST(CASE WHEN doc_id % 5 = 4 THEN doc_id * 1000 + 1
-                       ELSE doc_id * 1000 END AS BIGINT) AS modification_time,
-             1 AS n_partition_values,
-             'src=' || coalesce(source, '') AS partition_json,
-             CASE WHEN doc_id % 5 = 4 THEN false ELSE doc_id % 2 = 0 END AS has_stats
-      FROM documents
-      WHERE doc_id % 5 <> 3""",
-
-    // checkpoint-seeded contract: checkpoint adds survive unless the
-    // post-checkpoint tail removes them (%4==1), the %4==2 re-add
-    // wins size/mtime/stats, %4==3 contributes a second (decoded)
-    // file, tombstones and the stale at-checkpoint commit contribute
-    // nothing
-    "x_delta_checkpoint" -> """
-      SELECT 'cp-' || doc_id || '.parquet' AS path,
-             CAST(CASE WHEN doc_id % 4 = 2 THEN doc_id + 9000
-                       ELSE doc_id + 500 END AS BIGINT) AS size,
-             CAST(CASE WHEN doc_id % 4 = 2 THEN doc_id * 10 + 7
-                       ELSE doc_id * 10 END AS BIGINT) AS modification_time,
-             1 AS n_partition_values,
-             'src=' || coalesce(source, '') AS partition_json,
-             CASE WHEN doc_id % 4 = 2 THEN false ELSE doc_id % 2 = 0 END AS has_stats
-      FROM documents WHERE doc_id % 4 <> 1
-      UNION ALL
-      SELECT 'new-' || doc_id || '.parquet',
-             CAST(doc_id + 77 AS BIGINT), CAST(doc_id * 10 + 3 AS BIGINT),
-             1, 'src=' || coalesce(source, ''), true
-      FROM documents WHERE doc_id % 4 = 3""",
-
-    // deletion vectors: the survivor set replays the planted
-    // id%7==0 delete rule on buckets 0-2 (bucket 3 keeps all rows)
-    "x_delta_dv" -> """
-      SELECT doc_id, source, n_chars,
-             CAST(doc_id % 4 AS VARCHAR) AS bucket
-      FROM documents
-      WHERE NOT (doc_id % 7 = 0 AND doc_id % 4 IN (0, 1, 2))""",
-
-    // column mapping: every row survives; the check is that physical
-    // parquet names resolved back to these logical columns and the
-    // physically-keyed partition value landed
-    "x_delta_cm" -> """
-      SELECT doc_id, source, n_chars,
-             CASE WHEN doc_id % 2 = 0 THEN 'even' ELSE 'odd' END AS parity
-      FROM documents""",
-
-    // delta id-mode column mapping: the same logical rows, reachable
-    // only through parquet field-id resolution
-    "x_delta_cm_id" -> """
-      SELECT doc_id, source, n_chars,
-             CASE WHEN doc_id % 2 = 0 THEN 'even' ELSE 'odd' END AS parity
-      FROM documents""",
-
-    // delta time travel: version 0 holds EVERY row; the current
-    // version dropped the even %5 rows, so serving it would lose rows
-    "x_delta_time_travel" -> """
-      SELECT doc_id, source, n_chars FROM documents""",
-
-    // delta timestamp travel: t=1500 lands between the v0 (t=1000)
-    // and v1 (t=2000) commits → version 0, every row
-    "x_delta_time_travel_ts" -> """
-      SELECT doc_id, source, n_chars FROM documents""",
-
-    // delta change data feed: v0 inserts, v1 cdc updates (%10==0,
-    // postimage +1000), v2 deletes the odd bucket, v3 contributes
-    // nothing (dataChange=false compaction)
-    "x_delta_cdf" -> """
-      SELECT doc_id, source, n_chars, 'insert' AS _change_type,
-             CAST(0 AS BIGINT) AS _commit_version,
-             CAST(1000 AS BIGINT) AS _commit_timestamp
-      FROM documents
-      UNION ALL
-      SELECT doc_id, source, n_chars, 'update_preimage',
-             CAST(1 AS BIGINT), CAST(2000 AS BIGINT)
-      FROM documents WHERE doc_id % 10 = 0
-      UNION ALL
-      SELECT doc_id, source, n_chars + 1000, 'update_postimage',
-             CAST(1 AS BIGINT), CAST(2000 AS BIGINT)
-      FROM documents WHERE doc_id % 10 = 0
-      UNION ALL
-      SELECT doc_id, source, n_chars, 'delete',
-             CAST(2 AS BIGINT), CAST(3000 AS BIGINT)
-      FROM documents WHERE doc_id % 2 = 1""",
-
-    // delta data skipping: the pruned read equals the full-scan
-    // filter — bucket 1, ids at or under half the max
-    "x_delta_prune" -> """
-      SELECT doc_id, source, n_chars, CAST(doc_id % 2 AS VARCHAR) AS bucket
-      FROM documents
-      WHERE doc_id % 2 = 1
-        AND doc_id <= (SELECT max(doc_id) // 2 FROM documents)""",
-
-    // delta write roundtrip: own writer → own reader equals the
-    // source rows (partition values re-injected from the log)
-    "x_delta_write_roundtrip" -> """
-      SELECT doc_id, source, n_chars, CAST(doc_id % 2 AS VARCHAR) AS parity
-      FROM documents""",
-
-    // delta checkpoint writer: every row survives the
-    // checkpoint-seeded read
-    "x_delta_write_checkpoint" -> """
-      SELECT doc_id, source, n_chars, CAST(doc_id % 3 AS VARCHAR) AS third
-      FROM documents""",
-
-    // delta open-ended cdf: start ts 2500 resolves to v2 (ts 3000),
-    // the end bound defaults to the latest commit (v3 contributes
-    // nothing) — the feed is v2's bucket-1 deletes
-    "x_delta_cdf_tail" -> """
-      SELECT doc_id, source, n_chars, 'delete' AS _change_type,
-             CAST(2 AS BIGINT) AS _commit_version,
-             CAST(3000 AS BIGINT) AS _commit_timestamp
-      FROM documents WHERE doc_id % 2 = 1""",
-
-    // iceberg v2 position deletes: survivors of the planted id%7==0
-    // delete rule, applied across all four bucket files
-    "x_iceberg_v2" -> """
-      SELECT doc_id, source, n_chars
-      FROM documents WHERE doc_id % 7 <> 0""",
-
-    // iceberg snapshot travel: snapshot 0 predates the deletes
-    "x_iceberg_snapshot_at" -> """
-      SELECT doc_id, source, n_chars FROM documents""",
-
-    // iceberg timestamp travel: t=1500 lands between the snapshot-log
-    // entries (snapshot 0 at 1000, snapshot 1 at 2000) → snapshot 0
-    "x_iceberg_at_ts" -> """
-      SELECT doc_id, source, n_chars FROM documents""",
-
-    // iceberg write roundtrip: own writer (two snapshots) → own
-    // reader equals the source rows
-    "x_iceberg_write_roundtrip" -> """
-      SELECT doc_id, source, n_chars FROM documents""",
-
-    // iceberg incremental append scan: snapshot 1 → current diff is
-    // the second append (odd ids)
-    "x_iceberg_incremental" -> """
-      SELECT doc_id, source, n_chars FROM documents WHERE doc_id % 2 = 1""",
-
-    // delta dynamic partition overwrite: odd partition refreshed
-    // (n_chars + 1000), even rows untouched, no stale odd rows
-    "x_delta_overwrite" -> """
-      SELECT doc_id, source,
-             CASE WHEN doc_id % 2 = 1 THEN n_chars + 1000 ELSE n_chars END AS n_chars,
-             CAST(doc_id % 2 AS VARCHAR) AS parity
-      FROM documents""",
-
-    // delta compaction: same rows after the dataChange=false rewrite
-    "x_delta_compact" -> """
-      SELECT doc_id, source, n_chars FROM documents""",
-
-    // delta txn idempotence: the replayed odd append is a no-op —
-    // every row exactly once
-    "x_delta_txn" -> """
-      SELECT doc_id, source, n_chars FROM documents""",
-
-    // delta timestamp-bounds skipping: ts = base + doc_id s + 1500 µs,
-    // predicate ts ≤ base + (max/2) s keeps exactly doc_id < max/2
-    "x_delta_ts_skip" -> """
-      SELECT doc_id, n_chars FROM documents
-      WHERE doc_id < (SELECT max(doc_id) // 2 FROM documents)""",
-
-    // streaming delta sink: the drained table equals the batch input
-    "x_stream_delta_sink" -> """
-      SELECT doc_id, source, n_chars FROM documents""",
-
-    // streaming iceberg sink: same contract, snapshot-per-epoch
-    "x_stream_iceberg_sink" -> """
-      SELECT doc_id, source, n_chars FROM documents""",
-
-    // delta merge: odds updated, evens re-keyed past the id space
-    // inserted, everything else untouched
-    "x_delta_merge" -> """
-      SELECT doc_id, source,
-             CASE WHEN doc_id % 2 = 1 THEN n_chars + 1000 ELSE n_chars END AS n_chars
-      FROM documents
-      UNION ALL
-      SELECT doc_id + (SELECT max(doc_id) + 1 FROM documents), source, n_chars
-      FROM documents WHERE doc_id % 2 = 0""",
-
-    // delta schema evolution: the merged schema serves, narrow-file
-    // rows null-fill the evolved-in column
-    "x_delta_evolve" -> """
-      SELECT doc_id, source,
-             CASE WHEN doc_id % 2 = 1 THEN n_chars END AS n_chars
-      FROM documents""",
-
-    // iceberg schema evolution: same contract, field-id projection
-    "x_iceberg_evolve" -> """
-      SELECT doc_id, source,
-             CASE WHEN doc_id % 2 = 1 THEN n_chars END AS n_chars
-      FROM documents""",
-
-    // delta vacuum: reclaim leaves the current state exact (the
-    // odd-partition refresh survives, originals are gone from disk)
-    "x_delta_vacuum" -> """
-      SELECT doc_id, source,
-             CASE WHEN doc_id % 2 = 1 THEN n_chars + 1000 ELSE n_chars END AS n_chars,
-             CAST(doc_id % 2 AS VARCHAR) AS parity
-      FROM documents""",
-
-    // delta restore: rollback to v0 — the ORIGINAL rows again
-    "x_delta_restore" -> """
-      SELECT doc_id, source, n_chars,
-             CAST(doc_id % 2 AS VARCHAR) AS parity
-      FROM documents""",
-
-    // delta z-order: the re-clustered table filtered on the
-    // non-leading dimension replays exactly
-    "x_delta_zorder" -> """
-      SELECT doc_id, n_chars FROM documents
-      WHERE n_chars <= (SELECT max(n_chars) // 2 FROM documents)""",
-
-    // iceberg identity-partitioned write: tuple pruning on bucket=2
-    "x_iceberg_write_part" -> """
-      SELECT doc_id, source, n_chars, doc_id % 4 AS bucket
-      FROM documents WHERE doc_id % 4 = 2""",
-
-    // iceberg pruned incremental scan: odd ids within the bound
-    "x_iceberg_incremental_pruned" -> """
-      SELECT doc_id, source, n_chars FROM documents
-      WHERE doc_id % 2 = 1 AND doc_id <= (SELECT max(doc_id) // 2 FROM documents)""",
-
-    // iceberg column-bounds skipping: the doc_id range replays
-    // exactly (third quartile of the id space)
-    "x_iceberg_skip" -> """
-      SELECT doc_id, source, n_chars FROM documents
-      WHERE doc_id > (SELECT max(doc_id) // 2 FROM documents)
-        AND doc_id <= (SELECT (3 * max(doc_id)) // 4 FROM documents)""",
-
-    // iceberg partition pruning: the bucket predicate replays exactly
-    "x_iceberg_prune" -> """
-      SELECT doc_id, source, n_chars, doc_id % 4 AS bucket
-      FROM documents WHERE doc_id % 4 IN (1, 2)""",
-
-    // iceberg field-id resolution: both generations read by field id —
-    // generation A (even ids) predates the parity column → NULL
-    "x_iceberg_rename" -> """
-      SELECT doc_id, source, n_chars,
-             CASE WHEN doc_id % 2 = 1 THEN 'odd' END AS parity
-      FROM documents""",
-
-    // iceberg v2 equality deletes: the sequence-scoped survivor set —
-    // the delete (seq 2) reaches generation 1 (even ids, seq 1) but
-    // NOT generation 2 (odd ids, seq 3)
-    "x_iceberg_eq" -> """
-      SELECT doc_id, source, n_chars
-      FROM documents
-      WHERE doc_id % 2 = 1 OR doc_id % 3 <> 0""",
-
-    // iceberg manifest contract: active entries replay by id
-    // arithmetic — %3==0's first file is a DELETED tombstone (absent),
-    // even ids carry the EXISTING second file
-    "x_iceberg_snapshot" -> """
-      SELECT doc_id, 1 AS status,
-             'data-' || doc_id || '-0.parquet' AS path, 'PARQUET' AS format,
-             CAST(doc_id % 100 + 1 AS BIGINT) AS record_count,
-             CAST(doc_id + 4096 AS BIGINT) AS file_size
-      FROM documents WHERE doc_id % 3 <> 0
-      UNION ALL
-      SELECT doc_id, 0, 'data-' || doc_id || '-1.parquet', 'PARQUET',
-             CAST(7 AS BIGINT), CAST(doc_id + 100 AS BIGINT)
-      FROM documents WHERE doc_id % 2 = 0""",
-
-    "x_parquet_footer" -> """
-      SELECT regexp_extract(file_name, '([a-z]+)\.parquet$', 1) AS tbl,
-             CAST(row_group_id AS INTEGER) AS row_group,
-             row_group_num_rows AS rg_num_rows,
-             CAST(column_id AS INTEGER) AS column_id,
-             path_in_schema, type, compression, num_values,
-             coalesce(dictionary_page_offset, -1) AS dictionary_page_offset,
-             data_page_offset, total_compressed_size, total_uncompressed_size,
-             array_to_string(list_sort(string_split(encodings, ', ')), ', ')
-               AS encodings
-      FROM parquet_metadata(['/root/testdata/sf0.01/documents.parquet',
-                             '/root/testdata/sf0.01/embeddings.parquet',
-                             '/root/testdata/sf0.01/orders.parquet'])""",
-
-    // parquet stats contract: DuckDB's reader again — the o_orderdate
-    // column is excluded on BOTH sides (DuckDB renders its stats
-    // through the timestamp logical type; ours are the raw int64s)
-    "x_parquet_stats" -> """
-      SELECT regexp_extract(file_name, '([a-z]+)\.parquet$', 1) AS tbl,
-             CAST(row_group_id AS INTEGER) AS row_group,
-             path_in_schema,
-             stats_null_count AS null_count,
-             stats_min_value AS min_value,
-             stats_max_value AS max_value
-      FROM parquet_metadata(['/root/testdata/sf0.01/documents.parquet',
-                             '/root/testdata/sf0.01/orders.parquet'])
-      WHERE type IN ('INT64', 'BYTE_ARRAY') AND path_in_schema <> 'o_orderdate'""",
-
-    // compression-ratio contract: bucket by the planted extreme
-    "x_compression_ratio" -> """
-      SELECT doc_id,
-             CASE WHEN doc_id % 2 = 0 THEN 'repetitive' ELSE 'dense' END AS entropy_class
-      FROM documents""",
-
-    // orientation contract: the oracle carries its own copy of the
-    // eight dest→src corner maps as 3*sx + 7*sy constants over the
-    // 5×3 plant
-    "x_exif_orient" -> """
-      WITH o AS (SELECT doc_id, CAST(doc_id % 8 + 1 AS INTEGER) AS orientation
-                 FROM documents)
-      SELECT doc_id, orientation,
-        CAST(CASE WHEN orientation >= 5 THEN 3 ELSE 5 END AS INTEGER) AS w,
-        CAST(CASE WHEN orientation >= 5 THEN 5 ELSE 3 END AS INTEGER) AS h,
-        CAST((doc_id + CASE orientation WHEN 1 THEN 0 WHEN 2 THEN 12 WHEN 3 THEN 26
-              WHEN 4 THEN 14 WHEN 5 THEN 0 WHEN 6 THEN 14 WHEN 7 THEN 26
-              ELSE 12 END) % 256 AS INTEGER) AS p00,
-        CAST((doc_id + CASE orientation WHEN 1 THEN 12 WHEN 2 THEN 0 WHEN 3 THEN 14
-              WHEN 4 THEN 26 WHEN 5 THEN 14 WHEN 6 THEN 0 WHEN 7 THEN 12
-              ELSE 26 END) % 256 AS INTEGER) AS pw0,
-        CAST((doc_id + CASE orientation WHEN 1 THEN 14 WHEN 2 THEN 26 WHEN 3 THEN 12
-              WHEN 4 THEN 0 WHEN 5 THEN 12 WHEN 6 THEN 26 WHEN 7 THEN 14
-              ELSE 0 END) % 256 AS INTEGER) AS p0h
-      FROM o""",
-
-    // sniff contract: the label is pure id arithmetic
-    // universal decode: chain, verdict, and text replay per id class
-    // (the png class is recognized but has no text surface)
-    "x_decode_any" -> """
-      WITH p AS (SELECT doc_id,
-                        'doc ' || doc_id || ': ' || coalesce(text, '') AS t,
-                        doc_id % 10 AS v
-                 FROM documents)
-      SELECT doc_id,
-             CASE v WHEN 0 THEN 'text' WHEN 1 THEN 'gzip>text'
-                    WHEN 2 THEN 'zstd>text' WHEN 3 THEN 'xz>text'
-                    WHEN 4 THEN 'bzip2>text' WHEN 5 THEN 'zip'
-                    WHEN 6 THEN 'pdf' WHEN 7 THEN 'gzip>zstd>text'
-                    WHEN 8 THEN 'png' ELSE 'gzip>tar' END AS chain,
-             true AS ok,
-             CASE WHEN v = 8 THEN NULL ELSE t END AS text
-      FROM p""",
-
-    "x_sniff_formats" -> """
-      SELECT doc_id,
-             CASE doc_id % 16
-               WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' WHEN 2 THEN 'gif'
-               WHEN 3 THEN 'bmp' WHEN 4 THEN 'webp' WHEN 5 THEN 'wav'
-               WHEN 6 THEN 'avi' WHEN 7 THEN 'tiff' WHEN 8 THEN 'flac'
-               WHEN 9 THEN 'gzip' WHEN 10 THEN 'zstd' WHEN 11 THEN 'zip'
-               WHEN 12 THEN 'tar' WHEN 13 THEN 'warc' WHEN 14 THEN 'pdf'
-               ELSE 'text'
-             END AS format
-      FROM documents""",
-
-    // audio segments contract: the silence layout is pure doc_id
-    // arithmetic — segment s starts after one lead window, the
-    // previous segments' durations, and s gaps; rms is the planted
-    // amplitude exactly
-    "x_audio_segments" -> """
-      WITH p AS (
-        SELECT doc_id, pv.s,
-               CAST((doc_id + pv.s) % 4 + 1 AS BIGINT) AS dur,
-               CAST(doc_id % 2 + 1 AS BIGINT) AS gap
-        FROM documents, (VALUES (0), (1), (2)) pv(s)
-        WHERE pv.s <= doc_id % 3),
-      c AS (
-        SELECT doc_id, s, dur, gap,
-               1 + COALESCE(SUM(dur) OVER (PARTITION BY doc_id ORDER BY s
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                 + s * gap AS sw
-        FROM p)
-      SELECT doc_id, CAST(s AS INTEGER) AS seg,
-             CAST(sw * 25 AS BIGINT) AS start_ms,
-             CAST((sw + dur) * 25 AS BIGINT) AS end_ms,
-             CAST(dur AS INTEGER) AS n_windows,
-             CAST(4000 + 1000 * s AS DOUBLE) AS rms
-      FROM c""",
-
-    // chat contracts: the conversation shape is pure doc_id
-    // arithmetic — system turn at id%4==0, id%3+1 pairs, the closing
-    // assistant flipped to user at id%7==0; content carries the
-    // 40-char text prefix (the corpus is ASCII, so char counts agree
-    // across engines)
-    "x_chat_turns" -> """
-      WITH d AS (SELECT doc_id, substr(coalesce(text, ''), 1, 40) AS sn,
-                        CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END AS off
-                 FROM documents),
-      p AS (SELECT doc_id, sn, off, pv.p FROM d, (VALUES (0), (1), (2)) pv(p)
-            WHERE pv.p <= doc_id % 3)
-      SELECT doc_id, 0 AS turn, 'system' AS role,
-             'You are helper ' || doc_id || '.' AS content
-      FROM d WHERE doc_id % 4 = 0
-      UNION ALL
-      SELECT doc_id, off + 2 * p, 'user', 'Q' || p || ': ' || sn FROM p
-      UNION ALL
-      SELECT doc_id, off + 2 * p + 1,
-             CASE WHEN p = doc_id % 3 AND doc_id % 7 = 0 THEN 'user' ELSE 'assistant' END,
-             'A' || p || ' for doc ' || doc_id
-      FROM p""",
-
-    // grammar contract: valid unless the id%7 plant fired
-    "x_chat_valid" -> """
-      SELECT doc_id,
-             CAST(CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END
-                  + 2 * (doc_id % 3 + 1) AS INTEGER) AS n_turns,
-             doc_id % 7 <> 0 AS valid
-      FROM documents""",
-
-    // render contract: the identical template string from the same
-    // arithmetic, in turn order
-    "x_chat_render" -> """
-      WITH d AS (SELECT doc_id, substr(coalesce(text, ''), 1, 40) AS sn FROM documents)
-      SELECT doc_id,
-        (CASE WHEN doc_id % 4 = 0
-          THEN '<|system|>' || chr(10) || 'You are helper ' || doc_id || '.' || '<|end|>' || chr(10)
-          ELSE '' END)
-        ||
-        (SELECT string_agg(
-           '<|user|>' || chr(10) || 'Q' || pv.p || ': ' || d.sn || '<|end|>' || chr(10) ||
-           '<|' || (CASE WHEN pv.p = d.doc_id % 3 AND d.doc_id % 7 = 0
-                    THEN 'user' ELSE 'assistant' END) || '|>' || chr(10) ||
-           'A' || pv.p || ' for doc ' || d.doc_id || '<|end|>' || chr(10),
-           '' ORDER BY pv.p)
-         FROM (VALUES (0), (1), (2)) pv(p) WHERE pv.p <= d.doc_id % 3) AS text
-      FROM d""",
-
-    // exif contract: every field replays from doc_id arithmetic; the
-    // d/m/s rationals reduce left-associatively (deg + min/60 +
-    // sec/3600) in both engines so the doubles are bit-identical
-    "x_exif_meta" -> """
-      SELECT doc_id, true AS has_exif,
-             CASE WHEN doc_id % 2 = 0 THEN 'II' ELSE 'MM' END AS endian,
-             doc_id % 8 + 1 AS orientation,
-             'Maker ' || (doc_id % 5) AS make,
-             'Model ' || (doc_id % 3) AS model,
-             lpad(CAST(2000 + doc_id % 30 AS VARCHAR), 4, '0') || ':' ||
-               lpad(CAST(doc_id % 12 + 1 AS VARCHAR), 2, '0') || ':' ||
-               lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') || ' ' ||
-               lpad(CAST(doc_id % 24 AS VARCHAR), 2, '0') || ':' ||
-               lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0') || ':' ||
-               lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0') AS datetime,
-             doc_id % 3 <> 0 AS has_gps,
-             CASE WHEN doc_id % 3 = 0 THEN NULL ELSE round(
-               (doc_id % 90 + (doc_id % 60) / 60.0 + (doc_id % 6000) / 100.0 / 3600.0)
-               * (CASE WHEN doc_id % 2 = 0 THEN 1 ELSE -1 END), 6) END AS lat,
-             CASE WHEN doc_id % 3 = 0 THEN NULL ELSE round(
-               (doc_id % 180 + ((doc_id * 7) % 60) / 60.0 + ((doc_id * 13) % 6000) / 100.0 / 3600.0)
-               * (CASE WHEN doc_id % 4 < 2 THEN 1 ELSE -1 END), 6) END AS lon
-      FROM documents""",
-
-    // exif-in-webp: the same planted arithmetic as x_exif_meta
-    "x_exif_webp" -> """
-      SELECT doc_id, true AS has_exif,
-             CASE WHEN doc_id % 2 = 0 THEN 'II' ELSE 'MM' END AS endian,
-             doc_id % 8 + 1 AS orientation,
-             'Maker ' || (doc_id % 5) AS make,
-             'Model ' || (doc_id % 3) AS model,
-             lpad(CAST(2000 + doc_id % 30 AS VARCHAR), 4, '0') || ':' ||
-               lpad(CAST(doc_id % 12 + 1 AS VARCHAR), 2, '0') || ':' ||
-               lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') || ' ' ||
-               lpad(CAST(doc_id % 24 AS VARCHAR), 2, '0') || ':' ||
-               lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0') || ':' ||
-               lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0') AS datetime,
-             doc_id % 3 <> 0 AS has_gps,
-             CASE WHEN doc_id % 3 = 0 THEN NULL ELSE round(
-               (doc_id % 90 + (doc_id % 60) / 60.0 + (doc_id % 6000) / 100.0 / 3600.0)
-               * (CASE WHEN doc_id % 2 = 0 THEN 1 ELSE -1 END), 6) END AS lat,
-             CASE WHEN doc_id % 3 = 0 THEN NULL ELSE round(
-               (doc_id % 180 + ((doc_id * 7) % 60) / 60.0 + ((doc_id * 13) % 6000) / 100.0 / 3600.0)
-               * (CASE WHEN doc_id % 4 < 2 THEN 1 ELSE -1 END), 6) END AS lon
-      FROM documents""",
-
-    // exif strip contract: the rebuild keeps the safe tags (endian,
-    // orientation, make, datetime) and the coordinates are GONE
-    "x_exif_strip" -> """
-      SELECT doc_id, true AS has_exif,
-             CASE WHEN doc_id % 2 = 0 THEN 'II' ELSE 'MM' END AS endian,
-             doc_id % 8 + 1 AS orientation,
-             'Maker ' || (doc_id % 5) AS make,
-             lpad(CAST(2000 + doc_id % 30 AS VARCHAR), 4, '0') || ':' ||
-               lpad(CAST(doc_id % 12 + 1 AS VARCHAR), 2, '0') || ':' ||
-               lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') || ' ' ||
-               lpad(CAST(doc_id % 24 AS VARCHAR), 2, '0') || ':' ||
-               lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0') || ':' ||
-               lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0') AS datetime,
-             false AS has_gps,
-             CAST(NULL AS DOUBLE) AS lat, CAST(NULL AS DOUBLE) AS lon
-      FROM documents""",
-
-    // webdataset contract: per-shard sample order is id order within
-    // the doc_id % 8 bucket; both parts replay from corpus columns
-    "x_webdataset" -> """
-      WITH ranked AS (
-        SELECT doc_id, coalesce(source, '') AS source, coalesce(lang, '') AS lang,
-               coalesce(text, '') AS text,
-               CAST(ROW_NUMBER() OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) - 1
-                    AS INTEGER) AS seq
-        FROM documents)
-      SELECT doc_id, seq, 'meta.json,txt' AS exts, text, lang, source FROM ranked""",
-
-    // pdf contract: layout cycles with doc_id%4 (1.4 classic xref vs
-    // 1.5 ObjStm + xref stream — 5 vs 7 objects, and the 1.5 layout
-    // always Flates its ObjStm/xref streams), content compression
-    // alternates with doc_id%2, and extracted text equals the
-    // document text exactly in every layout
-    "x_pdf_extract" -> """
-      SELECT doc_id AS id, true AS decoded,
-             CASE WHEN doc_id % 4 >= 2 THEN '1.5' ELSE '1.4' END AS version,
-             CASE WHEN doc_id % 4 >= 2 THEN 7 ELSE 5 END AS n_objects,
-             1 AS n_pages,
-             CASE WHEN doc_id % 4 >= 2 THEN true ELSE doc_id % 2 = 0 END AS flate,
-             coalesce(text, '') AS text
-      FROM documents""",
-
-    // tar member table re-derived: per-doc text files plus one doc/
-    // directory row per occupied archive
-    "x_tar_members" -> """
-      SELECT doc_id % 32 AS file_id, 'doc/' || doc_id || '.txt' AS name,
-             '0' AS typeflag,
-             CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS size,
-             md5(coalesce(text, '')) AS digest
-      FROM documents
-      UNION ALL
-      SELECT DISTINCT doc_id % 32, 'doc/', '5', CAST(0 AS BIGINT), md5('')
-      FROM documents""",
-
-    // full-chain text: every response body, headers stripped, is the
-    // planted page byte for byte
-    "x_warc_text" -> """
-      SELECT doc_id, CAST(200 AS BIGINT) AS status,
-        '<html><head><title>Doc ' || doc_id || '</title></head><body><p>From ' ||
-          coalesce(source, '') || '</p><div>' || coalesce(text, '') || '</div></body></html>' AS text
-      FROM documents""",
-
-    // docx: pack → extract round-trips the text column verbatim
-    "x_docx_extract" -> """
-      SELECT doc_id, coalesce(text, '') AS text, true AS decoded
-      FROM documents""",
-
-    // docx furniture parts: body verbatim + id-arithmetic furniture
-    "x_docx_parts" -> """
-      SELECT doc_id, 'body' AS kind, CAST(0 AS BIGINT) AS seq,
-             coalesce(text, '') AS text FROM documents
-      UNION ALL
-      SELECT doc_id, 'header', 0, 'Header ' || doc_id FROM documents
-      UNION ALL
-      SELECT doc_id, 'header', 1, 'Header2 ' || doc_id FROM documents
-      WHERE doc_id % 3 = 0
-      UNION ALL
-      SELECT doc_id, 'footer', 0, 'Footer ' || doc_id || ' page' FROM documents
-      UNION ALL
-      SELECT doc_id, 'footnote', k, 'Note ' || k || ' for doc ' || doc_id
-      FROM documents, (VALUES (1), (2)) f(k)
-      WHERE k <= doc_id % 2 + 1""",
-
-    // webp/tiff dims: mime + dimensions from doc_id arithmetic
-    "x_image_meta_webp_tiff" -> """
-      SELECT doc_id,
-             CASE WHEN doc_id % 4 < 2 THEN 'image/webp' ELSE 'image/tiff' END
-               AS mime_detected,
-             CAST((doc_id % 300) + 1 AS INTEGER) AS width,
-             CAST((doc_id % 200) + 1 AS INTEGER) AS height
-      FROM documents""",
-
-    // avif/heic dims: mime from id parity, DISPLAYED dims swap under
-    // 90/270 rotation (id%4 picks the quarter-turn)
-    "x_image_meta_avif_heic" -> """
-      SELECT doc_id,
-             CASE WHEN doc_id % 2 = 0 THEN 'image/avif' ELSE 'image/heic' END
-               AS mime_detected,
-             CAST(CASE WHEN doc_id % 4 IN (1, 3) THEN (doc_id % 200) + 1
-                       ELSE (doc_id % 300) + 1 END AS INTEGER) AS width,
-             CAST(CASE WHEN doc_id % 4 IN (1, 3) THEN (doc_id % 300) + 1
-                       ELSE (doc_id % 200) + 1 END AS INTEGER) AS height
-      FROM documents""",
-
-    // icc metadata: the JDK sRGB profile's header constants per
-    // container (id%4==3 carries none)
-    "x_image_icc" -> """
-      SELECT doc_id,
-             CASE doc_id % 4 WHEN 1 THEN 'png' WHEN 2 THEN 'webp'
-                             ELSE 'jpeg' END AS container,
-             doc_id % 4 <> 3 AS icc_present,
-             CASE WHEN doc_id % 4 = 3 THEN NULL
-                  ELSE CAST(6876 AS BIGINT) END AS profile_size,
-             CASE WHEN doc_id % 4 = 3 THEN NULL ELSE '2.3' END AS icc_version,
-             CASE WHEN doc_id % 4 = 3 THEN NULL ELSE 'mntr' END AS device_class,
-             CASE WHEN doc_id % 4 = 3 THEN NULL ELSE 'RGB ' END AS color_space,
-             CASE WHEN doc_id % 4 = 3 THEN NULL ELSE 'XYZ ' END AS pcs,
-             CASE WHEN doc_id % 4 = 3 THEN NULL
-                  ELSE CAST(0 AS INTEGER) END AS rendering_intent
-      FROM documents""",
-
-    // heif grid: output-canvas dims from doc_id arithmetic, swapped
-    // under the 90° rotation half
-    "x_image_meta_grid" -> """
-      WITH dims AS (
-        SELECT doc_id,
-               (doc_id % 4) * 512 + (doc_id % 512) + 1 AS ow,
-               (doc_id % 3) * 512 + (doc_id % 509) + 1 AS oh
-        FROM documents)
-      SELECT doc_id,
-             CASE WHEN doc_id % 2 = 0 THEN 'image/avif' ELSE 'image/heic' END
-               AS mime_detected,
-             CAST(CASE WHEN doc_id % 4 >= 2 THEN oh ELSE ow END AS INTEGER) AS width,
-             CAST(CASE WHEN doc_id % 4 >= 2 THEN ow ELSE oh END AS INTEGER) AS height
-      FROM dims""",
-
-    // svg/pnm dims: mime + dimensions from doc_id arithmetic
-    "x_image_meta_svg_pnm" -> """
-      SELECT doc_id,
-             CASE doc_id % 4
-               WHEN 0 THEN 'image/svg+xml' WHEN 1 THEN 'image/svg+xml'
-               WHEN 2 THEN 'image/x-portable-pixmap'
-               ELSE 'image/x-portable-graymap' END AS mime_detected,
-             CAST((doc_id % 300) + 1 AS INTEGER) AS width,
-             CAST((doc_id % 200) + 1 AS INTEGER) AS height
-      FROM documents""",
-
-    // audio tags: format by parity, tags from doc_id arithmetic
-    "x_audio_tags" -> """
-      SELECT doc_id,
-             CASE WHEN doc_id % 2 = 0 THEN 'mp3' ELSE 'flac' END AS format,
-             'Title ' || doc_id AS title,
-             'Artist ' || (doc_id % 7) AS artist,
-             'Album ' || (doc_id % 5) AS album
-      FROM documents""",
-
-    // gguf: every kv and tensor-info row from doc_id arithmetic
-    "x_gguf_meta" -> """
-      SELECT doc_id, kind, key, CAST(type_id AS INTEGER) AS type_id, value,
-             CAST(off AS BIGINT) AS "offset" FROM (
-        SELECT doc_id, 'kv' AS kind, 'general.name' AS key, 8 AS type_id,
-               'doc ' || doc_id AS value, 0 AS off FROM documents
-        UNION ALL
-        SELECT doc_id, 'kv', 'general.alignment', 4, '32', 0 FROM documents
-        UNION ALL
-        SELECT doc_id, 'kv', 'planted.count', 10, CAST(doc_id AS VARCHAR), 0 FROM documents
-        UNION ALL
-        SELECT doc_id, 'kv', 'planted.flag', 7,
-               CASE WHEN doc_id % 2 = 0 THEN 'true' ELSE 'false' END, 0 FROM documents
-        UNION ALL
-        SELECT doc_id, 'kv', 'planted.ratio', 6,
-               CASE doc_id % 4 WHEN 0 THEN '0.0' WHEN 1 THEN '0.25'
-                    WHEN 2 THEN '0.5' ELSE '0.75' END, 0 FROM documents
-        UNION ALL
-        SELECT doc_id, 'kv', 'planted.langs', 9,
-               '[' || (doc_id % 5) || ',' || (doc_id % 5 + 1) || ']', 0 FROM documents
-        UNION ALL
-        SELECT doc_id, 'tensor', 'tok_embd.weight', 0,
-               '[64,' || (doc_id % 7 + 1) || ']', 0 FROM documents
-        UNION ALL
-        SELECT doc_id, 'tensor', 'blk.0.attn_q.weight', 8,
-               '[32]', 256 * (doc_id % 7 + 1) FROM documents
-        UNION ALL
-        SELECT doc_id, 'tensor', 'output_norm.weight', 1,
-               '[16]', 256 * (doc_id % 7 + 1) + 64 FROM documents
-        UNION ALL
-        SELECT doc_id, 'tensor', 'blk.0.ffn_up.weight',
-               CASE doc_id % 4 WHEN 0 THEN 2 WHEN 1 THEN 3 WHEN 2 THEN 6 ELSE 7 END,
-               '[32]', 256 * (doc_id % 7 + 1) + 96 FROM documents
-        UNION ALL
-        SELECT doc_id, 'tensor', 'blk.0.ffn_down.weight',
-               CASE doc_id % 6 WHEN 0 THEN 12 WHEN 1 THEN 14 WHEN 2 THEN 10
-                               WHEN 3 THEN 11 WHEN 4 THEN 13 ELSE 15 END,
-               '[256]', 256 * (doc_id % 7 + 1) + 128 FROM documents)""",
-
-    // gguf tensor dequantization: quarter-unit plants replay as pure
-    // integer arithmetic through floor(v * 2^30)
-    "x_gguf_tensors" -> """
-      SELECT doc_id, 'tok_embd.weight' AS name, 0 AS type_id,
-             CAST(64 * (doc_id % 7 + 1) AS BIGINT) AS n_values,
-             array_to_string(list_transform(range(64 * (doc_id % 7 + 1)),
-               i -> CAST(((doc_id + i) % 17 - 8) * 268435456 AS BIGINT)), ',') AS values
-      FROM documents
-      UNION ALL
-      SELECT doc_id, 'blk.0.attn_q.weight', 8, 32,
-             array_to_string(list_transform(range(32),
-               i -> CAST(((doc_id + i) % 255 - 127) * 536870912 AS BIGINT)), ',')
-      FROM documents
-      UNION ALL
-      SELECT doc_id, 'output_norm.weight', 1, 16,
-             array_to_string(list_transform(range(16),
-               i -> CAST(((doc_id + i) % 9 - 4) * 268435456 AS BIGINT)), ',')
-      FROM documents
-      UNION ALL
-      SELECT doc_id, 'blk.0.ffn_up.weight',
-             CASE doc_id % 4 WHEN 0 THEN 2 WHEN 1 THEN 3 WHEN 2 THEN 6 ELSE 7 END,
-             32,
-             array_to_string(list_transform(range(32), i ->
-               CAST(CASE doc_id % 4
-                 WHEN 0 THEN ((doc_id + i) % 16 - 8) * 536870912
-                 WHEN 1 THEN ((doc_id + i) % 16) * 536870912 + 268435456
-                 WHEN 2 THEN ((doc_id + i) % 32 - 16) * 536870912
-                 ELSE ((doc_id + i) % 32) * 536870912 + 268435456
-               END AS BIGINT)), ',')
-      FROM documents
-      UNION ALL
-      SELECT doc_id, 'blk.0.ffn_down.weight',
-             CASE doc_id % 6 WHEN 0 THEN 12 WHEN 1 THEN 14 WHEN 2 THEN 10
-                             WHEN 3 THEN 11 WHEN 4 THEN 13 ELSE 15 END,
-             256,
-             array_to_string(list_transform(range(256), i ->
-               CAST(CASE doc_id % 6
-                 WHEN 0 THEN ((doc_id + 5 * (i // 32)) % 64) * ((doc_id + i) % 16) * 536870912
-                             - ((doc_id * 3 + (i // 32)) % 64) * 268435456
-                 WHEN 1 THEN (((doc_id + 8 * (i // 128) + 2 * ((i % 128) // 32)
-                         + ((i % 32) // 16)) % 32) - 16)
-                      * (((doc_id + i) % 64) - 32) * 536870912
-                 WHEN 2 THEN ((doc_id + i // 16) % 16) * ((doc_id + i) % 4) * 536870912
-                             - ((doc_id * 3 + i // 16) % 16) * 268435456
-                 WHEN 3 THEN (((doc_id + i // 16) % 64) - 32)
-                             * (((doc_id + i) % 8) - 4) * 536870912
-                 WHEN 4 THEN ((doc_id + 5 * (i // 32)) % 64) * ((doc_id + i) % 32) * 536870912
-                             - ((doc_id * 3 + (i // 32)) % 64) * 268435456
-                 ELSE ((doc_id + i) % 255 - 127) * 536870912
-               END AS BIGINT)), ',')
-      FROM documents""",
-
-    // rtf: the verbatim text identity through the group/escape walk
-    "x_rtf_extract" -> """
-      SELECT doc_id AS id, true AS decoded,
-             md5(coalesce(text, '')) AS digest
-      FROM documents""",
-
-    // mat v5: three arrays replay from id arithmetic, stored
-    // column-major; compression and endianness cycle by id
-    "x_mat_vars" -> """
-      SELECT doc_id, 'A' AS name, 'double' AS class, '[3,4]' AS dims,
-             CAST(12 AS BIGINT) AS n_values,
-             array_to_string(list_transform(range(12),
-               i -> CAST(((doc_id + i) % 23 - 11) * 268435456 AS BIGINT)), ',') AS values
-      FROM documents
-      UNION ALL
-      SELECT doc_id, 'b', 'int16', '[5,1]', 5,
-             array_to_string(list_transform(range(5),
-               i -> CAST(((doc_id + i) % 301 - 150) * 1073741824 AS BIGINT)), ',')
-      FROM documents
-      UNION ALL
-      SELECT doc_id, 'c', 'single', '[2,3]', 6,
-             array_to_string(list_transform(range(6),
-               i -> CAST(((doc_id + i) % 17 - 8) * 268435456 AS BIGINT)), ',')
-      FROM documents""",
-
-    // netcdf classic: the numeric variables replay from id
-    // arithmetic (the char variable is skipped by contract); record
-    // counts vary by id so the record stride is load-bearing
-    "x_netcdf_vars" -> """
-      SELECT doc_id, 'fmat' AS name, 'float' AS dtype, '[3,4]' AS dims,
-             CAST(12 AS BIGINT) AS n_values,
-             array_to_string(list_transform(range(12),
-               i -> CAST(((doc_id + i) % 21 - 10) * 268435456 AS BIGINT)), ',') AS values
-      FROM documents
-      UNION ALL
-      SELECT doc_id, 'ivec', 'int', '[6]', 6,
-             array_to_string(list_transform(range(6),
-               i -> CAST(((doc_id + i) % 61 - 30) * 1073741824 AS BIGINT)), ',')
-      FROM documents
-      UNION ALL
-      SELECT doc_id, 'rtemp', 'float', '[' || (doc_id % 4 + 2) || ',4]',
-             4 * (doc_id % 4 + 2),
-             array_to_string(list_transform(range(4 * (doc_id % 4 + 2)),
-               i -> CAST(((doc_id + 7 * (i // 4) + (i % 4)) % 19 - 9) * 268435456 AS BIGINT)), ',')
-      FROM documents
-      UNION ALL
-      SELECT doc_id, 'rcount', 'int', '[' || (doc_id % 4 + 2) || ']',
-             doc_id % 4 + 2,
-             array_to_string(list_transform(range(doc_id % 4 + 2),
-               i -> CAST(((doc_id + i) % 87 - 43) * 1073741824 AS BIGINT)), ',')
-      FROM documents""",
-
-    // hdf5: four datasets per file replay from id arithmetic —
-    // paths sorted, dims/dtype labels exact, every value through
-    // floor(v * 2^30)
-    "x_hdf5_datasets" -> """
-      SELECT doc_id, '/f32' AS path, 'float32le' AS dtype, '[24]' AS dims,
-             CAST(24 AS BIGINT) AS n_values,
-             array_to_string(list_transform(range(24),
-               i -> CAST(((doc_id + i) % 17 - 8) * 268435456 AS BIGINT)), ',') AS values
-      FROM documents
-      UNION ALL
-      SELECT doc_id, '/g/mat', 'float64le', '[6,5]', 30,
-             array_to_string(list_transform(range(30),
-               i -> CAST(((doc_id + i) % 23 - 11) * 268435456 AS BIGINT)), ',')
-      FROM documents
-      UNION ALL
-      SELECT doc_id, '/i64', 'int64le', '[16]', 16,
-             array_to_string(list_transform(range(16),
-               i -> CAST(((doc_id + i) % 101 - 50) * 1073741824 AS BIGINT)), ',')
-      FROM documents
-      UNION ALL
-      SELECT doc_id, '/ibe', 'int32be', '[8]', 8,
-             array_to_string(list_transform(range(8),
-               i -> CAST(((doc_id + i) % 19 - 9) * 1073741824 AS BIGINT)), ',')
-      FROM documents""",
-
-    // npz: numpy-format twin of the safetensors contract
-    "x_npz" -> """
-      SELECT vec_id, '<f4' AS descr,
-             CAST(len(embedding) AS BIGINT) AS dim,
-             array_to_string(list_transform(embedding,
-               v -> CAST(floor(CAST(v AS DOUBLE) * 1073741824) AS BIGINT)), ',') AS values
-      FROM embeddings WHERE embedding IS NOT NULL""",
-
-    // arrow ipc: the same every-float replay through the columnar
-    // stream walk
-    "x_arrow_embed" -> """
-      SELECT vec_id, CAST(len(embedding) AS BIGINT) AS dim,
-             array_to_string(list_transform(embedding,
-               v -> CAST(floor(CAST(v AS DOUBLE) * 1073741824) AS BIGINT)), ',') AS values
-      FROM embeddings WHERE embedding IS NOT NULL""",
-
-    // arrow ipc compressed bodies: identical replay — the compression
-    // layer must be byte-transparent
-    "x_arrow_compressed" -> """
-      SELECT vec_id, CAST(len(embedding) AS BIGINT) AS dim,
-             array_to_string(list_transform(embedding,
-               v -> CAST(floor(CAST(v AS DOUBLE) * 1073741824) AS BIGINT)), ',') AS values
-      FROM embeddings WHERE embedding IS NOT NULL""",
-
-    // arrow ipc dictionary encoding: every (id, source) pair replays
-    // through the dictionary-index resolution
-    "x_arrow_dict" -> """
-      SELECT doc_id, coalesce(source, '') AS source
-      FROM documents WHERE doc_id IS NOT NULL""",
-
-    // safetensors: metadata + every float value replay from the
-    // embeddings table
-    "x_safetensors" -> """
-      SELECT vec_id, 'F32' AS dtype,
-             CAST(len(embedding) AS BIGINT) AS dim,
-             array_to_string(list_transform(embedding,
-               v -> CAST(floor(CAST(v AS DOUBLE) * 1073741824) AS BIGINT)), ',') AS values
-      FROM embeddings WHERE embedding IS NOT NULL""",
-
-    // mbox: every header and the decoded body replay from corpus
-    // columns; the decoded subject is identical for the B and Q
-    // planted forms
-    "x_mbox_messages" -> """
-      WITH ranked AS (
-        SELECT doc_id, coalesce(text, '') AS t,
-               CAST(ROW_NUMBER() OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) - 1
-                    AS INTEGER) AS seq
-        FROM documents)
-      SELECT doc_id, seq,
-             'sender' || doc_id || '@example.com' AS "from",
-             'rcpt' || doc_id || '@example.org' AS "to",
-             CASE doc_id % 4
-               WHEN 0 THEN 'Subject ' || doc_id
-               WHEN 1 THEN 'Sübject ' || doc_id
-               WHEN 2 THEN 'Sübject ' || doc_id
-               ELSE 'Plain subject ' || doc_id END AS subject,
-             'Thu, 1 Jan 2026 10:0' || (doc_id % 6) || ':00 +0000' AS date,
-             '<m' || doc_id || '@example.com>' AS message_id,
-             'text/plain; charset=utf-8' AS content_type,
-             false AS body_is_html,
-             t AS text
-      FROM ranked""",
-
-    // markdown: the same rule chain replayed stage for stage (RE2
-    // group references are \1 in DuckDB, $1 in Spark)
-    "x_markdown_extract" -> """
-      WITH raw AS (
-        SELECT doc_id,
-          '# Doc ' || doc_id || chr(10) || 'Title ' || doc_id || chr(10) || '====' || chr(10) ||
-          '> quoted from ' || coalesce(source, '') || chr(10) ||
-          '- item one' || chr(10) || '1. item ' || doc_id || chr(10) ||
-          '```scala' || chr(10) || 'val x' || doc_id || ' = 1 < 2 && 3 > 2' || chr(10) || '```' || chr(10) ||
-          '![logo ' || doc_id || '](http://img.example/' || doc_id || '.png)' || chr(10) ||
-          'See [link ' || doc_id || '](http://x.example/' || doc_id || ') and [ref ' || doc_id || '][r1].' || chr(10) ||
-          '[r1]: http://ref.example/' || doc_id || chr(10) ||
-          '<https://auto.example/' || doc_id || '>' || chr(10) ||
-          '**bold ' || doc_id || '** *em* `tick` ~~strike~~' || chr(10) ||
-          coalesce(text, '') AS md
-        FROM documents),
-      s1 AS (SELECT doc_id, regexp_replace(md, '(?m)^[ \t]*```[^\n]*\n?', '', 'g') AS t FROM raw),
-      s2 AS (SELECT doc_id, regexp_replace(t, '(?m)^#{1,6}[ \t]+', '', 'g') AS t FROM s1),
-      s3 AS (SELECT doc_id, regexp_replace(t, '(?m)^(=+|-+|\*\*\*+)[ \t]*$\n?', '', 'g') AS t FROM s2),
-      s4 AS (SELECT doc_id, regexp_replace(t, '(?m)^[ \t]*>[ \t]?', '', 'g') AS t FROM s3),
-      s5 AS (SELECT doc_id, regexp_replace(t, '(?m)^[ \t]*([-*+]|[0-9]+\.)[ \t]+', '', 'g') AS t FROM s4),
-      s6 AS (SELECT doc_id, regexp_replace(t, '(?m)^\[[^\]]+\]:[ \t]+[^\n]*$\n?', '', 'g') AS t FROM s5),
-      s7 AS (SELECT doc_id, regexp_replace(t, '!\[([^\]]*)\]\([^)]*\)', '\1', 'g') AS t FROM s6),
-      s8 AS (SELECT doc_id, regexp_replace(t, '\[([^\]]*)\]\([^)]*\)', '\1', 'g') AS t FROM s7),
-      s9 AS (SELECT doc_id, regexp_replace(t, '\[([^\]]*)\]\[[^\]]*\]', '\1', 'g') AS t FROM s8),
-      s10 AS (SELECT doc_id, regexp_replace(t, '<(https?://[^>]+)>', '\1', 'g') AS t FROM s9),
-      s11 AS (SELECT doc_id, regexp_replace(t, '\*\*|~~|\*', '', 'g') AS t FROM s10)
-      SELECT doc_id, regexp_replace(t, '`', '', 'g') AS extracted FROM s11""",
-
-    // subtitle cues: timings from seq/doc_id arithmetic, text through
-    // the same sanitize + markup-strip + entity-decode both engines run
-    "x_subtitle_cues" -> """
-      WITH s AS (
-        SELECT doc_id, string_split(coalesce(text, ''), chr(10)) AS ls
-        FROM documents),
-      u AS (
-        SELECT doc_id, CAST(unnest(range(len(ls))) AS INTEGER) AS seq,
-               unnest(ls) AS line
-        FROM s),
-      v AS (
-        SELECT doc_id, seq,
-               CASE WHEN regexp_matches(line, '^[ \t\r]*$') THEN '.' ELSE line END AS line
-        FROM u)
-      SELECT doc_id, seq,
-             CAST(seq * 2000 + (doc_id % 7) * 13 AS BIGINT) AS start_ms,
-             CAST(seq * 2000 + (doc_id % 7) * 13 + 1500 AS BIGINT) AS end_ms,
-             replace(replace(replace(replace(replace(replace(replace(
-               regexp_replace(line, '<[^>]*>', '', 'g'),
-               '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', chr(39)),
-               '&apos;', chr(39)), '&nbsp;', ' '), '&amp;', '&') AS text
-      FROM v""",
-
-    // ipynb: cells replay from a parallel unnest of the line split
-    "x_ipynb_cells" -> """
-      WITH s AS (
-        SELECT doc_id, string_split(coalesce(text, ''), chr(10)) AS ls
-        FROM documents),
-      u AS (
-        SELECT doc_id, CAST(unnest(range(len(ls))) AS INTEGER) AS seq,
-               unnest(ls) AS source
-        FROM s)
-      SELECT doc_id, seq,
-             CASE WHEN seq % 2 = 0 THEN 'code' ELSE 'markdown' END AS cell_type,
-             'python' AS language, source
-      FROM u""",
-
-    // nbformat-3: the v3->v4 upgrade rules replayed by line index
-    // over the six planted lines
-    "x_ipynb_v3" -> """
-      WITH s AS (
-        SELECT doc_id, string_split(
-                 coalesce(text, '') ||
-                 chr(10) || 'md cell for ' || doc_id ||
-                 chr(10) || 'heading one ' || doc_id ||
-                 chr(10) || 'code two ' || doc_id ||
-                 chr(10) || 'md two ' || doc_id ||
-                 chr(10) || 'heading two ' || doc_id, chr(10)) AS ls
-        FROM documents),
-      u AS (
-        SELECT doc_id, CAST(unnest(range(len(ls))) AS INTEGER) AS seq,
-               unnest(ls) AS line
-        FROM s)
-      SELECT doc_id, seq,
-             CASE WHEN seq % 3 = 0 THEN 'code' ELSE 'markdown' END AS cell_type,
-             'python' AS language,
-             CASE WHEN seq % 3 = 2
-                  THEN repeat('#', (seq // 3) % 3 + 1) || ' ' || line
-                  ELSE line END AS source
-      FROM u""",
-
-    // epub: spine round-trips the text column verbatim
-    "x_epub_extract" -> """
-      SELECT doc_id, coalesce(text, '') AS text, true AS decoded
-      FROM documents""",
-
-    // xlsx: long-format cells replayed with a windowed row number
-    "x_xlsx_cells" -> """
-      WITH ranked AS (
-        SELECT doc_id, doc_id % 8 AS fid, coalesce(source, '') AS source,
-               coalesce(text, '') AS text,
-               ROW_NUMBER() OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) AS r
-        FROM documents)
-      SELECT fid AS id, 'docs' AS sheet, CAST(r AS BIGINT) AS row, col, value FROM (
-        SELECT fid, r, 'A' AS col, CAST(doc_id AS VARCHAR) AS value FROM ranked
-        UNION ALL SELECT fid, r, 'B', source FROM ranked
-        UNION ALL SELECT fid, r, 'C', text FROM ranked)""",
-
-    // pptx/odt: same verbatim round-trip contract
-    "x_pptx_extract" -> """
-      SELECT doc_id, coalesce(text, '') AS text, true AS decoded
-      FROM documents""",
-    "x_odt_extract" -> """
-      SELECT doc_id, coalesce(text, '') AS text, true AS decoded
-      FROM documents""",
-
-    // xml source: escape → parse round-trips every field to the
-    // corpus columns verbatim
-    "x_xml_source" -> """
-      SELECT doc_id, coalesce(source, '') AS source, coalesce(text, '') AS text
-      FROM documents""",
-
-    // WET contract: conversion bodies = the htmlExtract regex chain
-    // over the planted page, replayed stage for stage
-    "x_wet_extract" -> """
-      WITH raw AS (
-        SELECT doc_id,
-          '<html><head><title>Doc ' || doc_id || '</title></head><body><p>From ' ||
-            coalesce(source, '') || '</p><div>' || coalesce(text, '') ||
-            '</div></body></html>' AS page
-        FROM documents),
-      s1 AS (SELECT doc_id, regexp_replace(page, '(?is)<script[^>]*>.*?</script>', '', 'g') AS t FROM raw),
-      s2 AS (SELECT doc_id, regexp_replace(t, '(?is)<style[^>]*>.*?</style>', '', 'g') AS t FROM s1),
-      s3 AS (SELECT doc_id, regexp_replace(t, '(?s)<!--.*?-->', '', 'g') AS t FROM s2),
-      s4 AS (SELECT doc_id, regexp_replace(t,
-        '(?i)<(br|hr)[ \t]*/?>|</(p|div|li|tr|h1|h2|h3|h4|h5|h6|ul|ol|table|blockquote|pre)>',
-        chr(10), 'g') AS t FROM s3),
-      s5 AS (SELECT doc_id, regexp_replace(t, '<[^>]*>', '', 'g') AS t FROM s4),
-      s6 AS (SELECT doc_id,
-          replace(replace(replace(replace(replace(replace(replace(t,
-            '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', chr(39)),
-            '&apos;', chr(39)), '&nbsp;', ' '), '&amp;', '&') AS t FROM s5),
-      s7 AS (SELECT doc_id, regexp_replace(t, '[ \t\r]+', ' ', 'g') AS t FROM s6),
-      s8 AS (SELECT doc_id, regexp_replace(t, ' ?\n ?', chr(10), 'g') AS t FROM s7),
-      s9 AS (SELECT doc_id, regexp_replace(t, '\n\n\n+', chr(10) || chr(10), 'g') AS t FROM s8)
-      SELECT doc_id, 'text/plain' AS content_type,
-             regexp_replace(t, '^[ \t\r\n]+|[ \t\r\n]+$', '', 'g') AS wet_text
-      FROM s9""",
-
-    // wire-encoding contract: text identical to the unencoded page
-    // for every decodable class, empty for the refused one; header
-    // and flag replay from doc_id arithmetic
-    "x_warc_http_decode" -> """
-      SELECT doc_id, CAST(200 AS BIGINT) AS status,
-        CASE WHEN doc_id % 6 = 5 AND (doc_id // 6) % 3 = 2 THEN ''
-             ELSE '<html><head><title>Doc ' || doc_id || '</title></head><body><p>From ' ||
-                  coalesce(source, '') || '</p><div>' || coalesce(text, '') ||
-                  '</div></body></html>' END AS text,
-        CASE doc_id % 6 WHEN 2 THEN 'gzip' WHEN 3 THEN 'gzip'
-             WHEN 4 THEN 'deflate' WHEN 5 THEN 'br' ELSE NULL END AS content_encoding,
-        NOT (doc_id % 6 = 5 AND (doc_id // 6) % 3 = 2) AS payload_decoded
-      FROM documents""",
-
-    // charset-ladder contract: the resolved charset, the detection
-    // rung, and the decoded page all replay from doc_id % 5 — the
-    // non-utf8 variants plant the page over the ASCII projection of
-    // the text ([^ -~] stripped, the cross-engine sanitize) plus
-    // charset-separating markers (€ is cp1252-only, bare é is
-    // invalid UTF-8)
-    "x_warc_charset" -> """
-      SELECT doc_id,
-        CASE WHEN doc_id % 5 IN (0, 3) THEN 'UTF-8' ELSE 'windows-1252' END AS charset,
-        CASE doc_id % 5 WHEN 0 THEN 'header' WHEN 1 THEN 'header' WHEN 2 THEN 'meta'
-             WHEN 3 THEN 'valid-utf8' ELSE 'fallback' END AS charset_src,
-        CASE doc_id % 5
-          WHEN 0 THEN '<html><head><title>Doc ' || doc_id || '</title></head><body><p>From ' ||
-            coalesce(source, '') || '</p><div>' || coalesce(text, '') || '</div></body></html>'
-          WHEN 1 THEN '<html><head><title>Doc ' || doc_id || '</title></head><body>cp1252 café €½ ' ||
-            regexp_replace(coalesce(text, ''), '[^ -~]', '', 'g') || '</body></html>'
-          WHEN 2 THEN '<html><head><meta charset="iso-8859-1"><title>Doc ' || doc_id ||
-            '</title></head><body>latin café ±½ ' ||
-            regexp_replace(coalesce(text, ''), '[^ -~]', '', 'g') || '</body></html>'
-          WHEN 3 THEN '<html><head><title>Doc ' || doc_id || '</title></head><body>utf8 π☃ ' ||
-            regexp_replace(coalesce(text, ''), '[^ -~]', '', 'g') || '</body></html>'
-          ELSE '<html><head><title>Doc ' || doc_id || '</title></head><body>fallback café ' ||
-            regexp_replace(coalesce(text, ''), '[^ -~]', '', 'g') || '</body></html>'
-        END AS text
-      FROM documents""",
-
-    // like x_multimodal_decode but channels are greyscale RGB
-    // triplets (v,v,v) — flatten each byte three ways
-    "x_multimodal_jpeg_decode" -> """
-      SELECT doc_id AS id, true AS decoded, true AS dims_ok, true AS within_band
-      FROM documents""",
-
-    // μ-law contract: each text byte v is a G.711 code; the decoded
-    // sample is the spec expansion u = 255−v (complement),
-    // t = ((u mod 16)·8 + 132) << ((u div 16) mod 8), negatives when
-    // the complemented sign bit is set — replayed here bit-for-bit.
-    // aiff/au: planted samples replay per container class; the AU
-    // μ-law branch reuses the proven G.711 expansion arithmetic
-    "x_multimodal_aiff_au" -> """
-      SELECT doc_id, 1 AS channels,
-             CASE doc_id % 6 WHEN 0 THEN 8000 WHEN 1 THEN 11025
-                             WHEN 2 THEN 16000 WHEN 3 THEN 22050
-                             WHEN 4 THEN 8000 ELSE 8000 END AS sample_rate,
-             CASE doc_id % 6 WHEN 3 THEN 8 ELSE 16 END AS bits,
-             CAST(doc_id % 50 + 20 AS BIGINT) AS n_samples,
-             array_to_string(list_transform(range(doc_id % 50 + 20), i ->
-               CAST(CASE doc_id % 6
-                 WHEN 3 THEN (((doc_id + i) % 241) - 120) * 256
-                 WHEN 5 THEN
-                   CASE WHEN (255 - ((doc_id + i) % 256)) >= 128
-                        THEN 132 - (((255 - ((doc_id + i) % 256)) % 16) * 8 + 132)
-                             * (1 << (((255 - ((doc_id + i) % 256)) // 16) % 8))
-                        ELSE (((255 - ((doc_id + i) % 256)) % 16) * 8 + 132)
-                             * (1 << (((255 - ((doc_id + i) % 256)) // 16) % 8)) - 132
-                   END
-                 ELSE (((doc_id + i) % 401) - 200) * 80
-               END AS BIGINT)), ',') AS values
-      FROM documents""",
-
-    "x_multimodal_mulaw" -> """
-      WITH b AS (
-        SELECT doc_id, least(octet_length(encode(coalesce(text, ''))), 1048576) AS len,
-               hex(encode(coalesce(text, ''))) AS hx
-        FROM documents),
-      e AS (
-        SELECT doc_id, len,
-               list_transform(range(len),
-                 i -> CAST(('0x' || substr(hx, CAST(2*i+1 AS INTEGER), 2)) AS INTEGER)) AS bytes
-        FROM b),
-      s AS (
-        SELECT doc_id, len,
-               list_transform(bytes, v ->
-                 CASE WHEN (255 - v) >= 128
-                      THEN 132 - (((255 - v) % 16) * 8 + 132) * (1 << (((255 - v) // 16) % 8))
-                      ELSE (((255 - v) % 16) * 8 + 132) * (1 << (((255 - v) // 16) % 8)) - 132
-                 END) AS sm
-        FROM e)
-      SELECT doc_id AS id, 1 AS channels, 8000 AS sample_rate, 16 AS bits,
-             CAST(len AS BIGINT) AS n_samples,
-             CAST(coalesce(list_max(list_transform(sm, v -> abs(v))), 0) AS BIGINT) AS peak,
-             CAST(coalesce(list_sum(list_transform(sm, v -> v * v)), 0) AS BIGINT) AS sum_sq,
-             CAST(coalesce(list_sum(list_transform(range(len - 1),
-               i -> CASE WHEN (sm[CAST(i+1 AS INTEGER)] < 0) <> (sm[CAST(i+2 AS INTEGER)] < 0)
-                         THEN 1 ELSE 0 END)), 0) AS BIGINT) AS zero_crossings
-      FROM s""",
-
-    // A-law contract: a = v XOR 0x55; seg 0 → t = 16·mant + 8,
-    // seg ≥ 1 → (16·mant + 264) << (seg−1); sign bit 0x80 = positive.
-    "x_multimodal_alaw" -> """
-      WITH b AS (
-        SELECT doc_id, least(octet_length(encode(coalesce(text, ''))), 1048576) AS len,
-               hex(encode(coalesce(text, ''))) AS hx
-        FROM documents),
-      e AS (
-        SELECT doc_id, len,
-               list_transform(range(len),
-                 i -> CAST(('0x' || substr(hx, CAST(2*i+1 AS INTEGER), 2)) AS INTEGER)) AS bytes
-        FROM b),
-      s AS (
-        SELECT doc_id, len,
-               list_transform(bytes, v ->
-                 CASE WHEN xor(v, 85) >= 128 THEN 1 ELSE -1 END *
-                 (CASE ((xor(v, 85) // 16) % 8)
-                    WHEN 0 THEN (xor(v, 85) % 16) * 16 + 8
-                    WHEN 1 THEN (xor(v, 85) % 16) * 16 + 264
-                    ELSE ((xor(v, 85) % 16) * 16 + 264) * (1 << (((xor(v, 85) // 16) % 8) - 1))
-                  END)) AS sm
-        FROM e)
-      SELECT doc_id AS id, 1 AS channels, 8000 AS sample_rate, 16 AS bits,
-             CAST(len AS BIGINT) AS n_samples,
-             CAST(coalesce(list_max(list_transform(sm, v -> abs(v))), 0) AS BIGINT) AS peak,
-             CAST(coalesce(list_sum(list_transform(sm, v -> v * v)), 0) AS BIGINT) AS sum_sq,
-             CAST(coalesce(list_sum(list_transform(range(len - 1),
-               i -> CASE WHEN (sm[CAST(i+1 AS INTEGER)] < 0) <> (sm[CAST(i+2 AS INTEGER)] < 0)
-                         THEN 1 ELSE 0 END)), 0) AS BIGINT) AS zero_crossings
-      FROM s""",
-
-    // ADPCM verdict contract (jpegParity pattern): the op must earn
-    // the all-true table — decode succeeds, fact-trimmed meta exact,
-    // decoder output equals the encoder's predictor path sample-
-    // exactly (no SNR column: adaptive-step lossy coding has no
-    // corpus-portable dB bound on noise-like byte signals; bit-exact
-    // predictor-path agreement is the pinning contract).
-    "x_multimodal_adpcm" -> """
-      SELECT doc_id AS id, true AS decoded, true AS meta_ok,
-             true AS reconstruction_exact
-      FROM documents""",
-
-    // ADPCM packer metadata contract: the container round-trips its
-    // declared shape exactly even though the samples are lossy.
-    "x_multimodal_adpcm_pack" -> """
-      SELECT doc_id AS id, 1 AS channels, 8000 AS sample_rate, 16 AS bits,
-             CAST(least(octet_length(encode(coalesce(text, ''))), 1048576) AS BIGINT)
-               AS n_samples
-      FROM documents""",
-
-    // BMP contract: identical to the GIF gate's (same pixels, same
-    // grey identity palette, independent JDK writer), so the oracle
-    // flattens each expected byte into an (v,v,v) triplet.
-    "x_multimodal_bmp_decode" -> """
-      WITH b AS (
-        SELECT doc_id, octet_length(encode(coalesce(text, ''))) AS len,
-               hex(encode(coalesce(text, ''))) AS hx
-        FROM documents),
-      e AS (
-        SELECT doc_id, len,
-               CASE WHEN len = 0 THEN 1 ELSE CAST(CEIL(len / 32.0) AS INTEGER) END AS h,
-               list_transform(range(len),
-                 i -> CAST(('0x' || substr(hx, CAST(2*i+1 AS INTEGER), 2)) AS INTEGER)) AS bytes
-        FROM b),
-      p AS (
-        SELECT doc_id, h,
-               flatten(list_transform(
-                 list_concat(bytes, list_transform(range(32 * h - len), x -> 0)),
-                 v -> [v, v, v])) AS px
-        FROM e)
-      SELECT doc_id AS id, 32 AS width, h AS height, 3 AS channels,
-             CAST(96 * h AS BIGINT) AS pixel_len,
-             CAST(list_sum(px) AS BIGINT) AS pixel_sum,
-             CAST(list_reduce(list_prepend(17, px),
-               (a, x) -> (a * 31 + x) % 16777216) AS BIGINT) AS pixel_hash
-      FROM p""",
-
-    "x_multimodal_gif_decode" -> """
-      WITH b AS (
-        SELECT doc_id, octet_length(encode(coalesce(text, ''))) AS len,
-               hex(encode(coalesce(text, ''))) AS hx
-        FROM documents),
-      e AS (
-        SELECT doc_id, len,
-               CASE WHEN len = 0 THEN 1 ELSE CAST(CEIL(len / 32.0) AS INTEGER) END AS h,
-               list_transform(range(len),
-                 i -> CAST(('0x' || substr(hx, CAST(2*i+1 AS INTEGER), 2)) AS INTEGER)) AS bytes
-        FROM b),
-      p AS (
-        SELECT doc_id, h,
-               flatten(list_transform(
-                 list_concat(bytes, list_transform(range(32 * h - len), x -> 0)),
-                 v -> [v, v, v])) AS px
-        FROM e)
-      SELECT doc_id AS id, 32 AS width, h AS height, 3 AS channels,
-             CAST(96 * h AS BIGINT) AS pixel_len,
-             CAST(list_sum(px) AS BIGINT) AS pixel_sum,
-             CAST(list_reduce(list_prepend(17, px),
-               (a, x) -> (a * 31 + x) % 16777216) AS BIGINT) AS pixel_hash
-      FROM p""",
-
-    // source pixels = ASCII codes of md5(id)||md5(id||'x'); output
-    // pixel (yy,xx) of the 2× box downsample = rounded mean of its
-    // 2×2 source quad — pure integer arithmetic either side
-    "x_multimodal_png_resize" -> """
-      WITH s AS (
-        SELECT doc_id,
-               md5(CAST(doc_id AS VARCHAR)) || md5(CAST(doc_id AS VARCHAR) || 'x') AS t
-        FROM documents),
-      p AS (
-        SELECT doc_id,
-               list_transform(range(64), i -> ascii(substr(t, CAST(i+1 AS INTEGER), 1))) AS px
-        FROM s),
-      r AS (
-        SELECT doc_id,
-               list_transform(range(16), o ->
-                 (px[CAST((o // 4) * 16 + (o % 4) * 2 + 1 AS INTEGER)]
-                  + px[CAST((o // 4) * 16 + (o % 4) * 2 + 2 AS INTEGER)]
-                  + px[CAST((o // 4) * 16 + (o % 4) * 2 + 9 AS INTEGER)]
-                  + px[CAST((o // 4) * 16 + (o % 4) * 2 + 10 AS INTEGER)]
-                  + 2) // 4) AS opx
-        FROM p)
-      SELECT doc_id AS id, 4 AS width, 4 AS height, 1 AS channels,
-             CAST(16 AS BIGINT) AS pixel_len,
-             CAST(list_sum(opx) AS BIGINT) AS pixel_sum,
-             CAST(list_reduce(list_prepend(17, opx),
-               (a, x) -> (a * 31 + x) % 16777216) AS BIGINT) AS pixel_hash
-      FROM r""",
-    "x_dedup_embed_lsh" -> s"""
-      WITH c AS (
-        SELECT vec_id, embedding, ${lshBucketSql("embedding", 64, 8)} AS bkt
-        FROM embeddings)
-      SELECT a_id, b_id, round(cosine, 4) AS cosine FROM (
-        SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-               list_sum(list_transform(range(64), i -> CAST(a.embedding[i+1] AS DOUBLE) * CAST(b.embedding[i+1] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(range(64), i -> CAST(a.embedding[i+1] AS DOUBLE) * CAST(a.embedding[i+1] AS DOUBLE))))
-                * sqrt(list_sum(list_transform(range(64), i -> CAST(b.embedding[i+1] AS DOUBLE) * CAST(b.embedding[i+1] AS DOUBLE))))) AS cosine
-        FROM c a JOIN c b ON a.vec_id < b.vec_id AND a.bkt = b.bkt)
-      WHERE cosine >= 0.3""",
-
-    // x_dedup_embed_lsh's pair set contracted to its transitive
-    // closure over EVERY vector (the x_dedup_groups pattern): same
-    // md5-bucket replay + exact cosine, then recursive min-label
-    // reachability; singletons keep their own id via the left join.
-    "x_embed_neardup_groups" -> s"""
-      WITH RECURSIVE c AS (
-        SELECT vec_id, embedding, ${lshBucketSql("embedding", 64, 8)} AS bkt
-        FROM embeddings),
-      pairs AS (
-        SELECT a_id, b_id FROM (
-          SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-                 list_sum(list_transform(range(64), i -> CAST(a.embedding[i+1] AS DOUBLE) * CAST(b.embedding[i+1] AS DOUBLE)))
-                 / (sqrt(list_sum(list_transform(range(64), i -> CAST(a.embedding[i+1] AS DOUBLE) * CAST(a.embedding[i+1] AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(range(64), i -> CAST(b.embedding[i+1] AS DOUBLE) * CAST(b.embedding[i+1] AS DOUBLE))))) AS cosine
-          FROM c a JOIN c b ON a.vec_id < b.vec_id AND a.bkt = b.bkt)
-        WHERE cosine >= 0.3),
-      edges AS (
-        SELECT a_id AS u, b_id AS v FROM pairs
-        UNION SELECT b_id, a_id FROM pairs),
-      reach(id, r) AS (
-        SELECT u, u FROM edges
-        UNION
-        SELECT e.u, reach.r FROM edges e JOIN reach ON reach.id = e.v),
-      comp AS (SELECT id, min(r) AS g FROM reach GROUP BY id)
-      SELECT emb.vec_id, CAST(coalesce(cp.g, emb.vec_id) AS BIGINT) AS group_id
-      FROM embeddings emb LEFT JOIN comp cp ON cp.id = emb.vec_id""",
-    // SemDeDup replay (see x_dedup_semantic query comment): md5
-    // centroids re-derived in SQL, same element-order cosine folds,
-    // argmax by (cos DESC, cell DESC), drop iff a strictly
-    // keep-preferred same-cell neighbor clears eps.
-    "x_dedup_semantic" -> s"""
-      WITH cent AS (
-        SELECT c,
-               list_transform(range(64), j ->
-                 CAST(('0x' || substr(md5('centroid_42_' || CAST(c AS VARCHAR) || '_' || CAST(j AS VARCHAR)), 1, 8)) AS BIGINT)
-                   % 1000000 / 1000000.0 - 0.5) AS cv
-        FROM (SELECT unnest(range(8)) AS c)),
-      cn AS (
-        SELECT c, cv, sqrt(list_sum(list_transform(cv, x -> x * x))) AS cnorm FROM cent),
-      e AS (
-        SELECT vec_id, embedding,
-               sqrt(list_sum(list_transform(range(64), i ->
-                 CAST(embedding[i+1] AS DOUBLE) * CAST(embedding[i+1] AS DOUBLE)))) AS vn
-        FROM embeddings
-        WHERE len(embedding) = 64),
-      sc AS (
-        SELECT e.vec_id, e.embedding, e.vn, cn.c AS cell,
-               list_sum(list_transform(range(64), i ->
-                 CAST(e.embedding[i+1] AS DOUBLE) * cn.cv[CAST(i+1 AS INTEGER)]))
-                 / (e.vn * cn.cnorm) AS cos
-        FROM e CROSS JOIN cn
-        WHERE e.vn > 0),
-      best AS (
-        SELECT vec_id, embedding, vn, cell, cos FROM sc
-        QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cell DESC) = 1),
-      drops AS (
-        SELECT DISTINCT x.vec_id
-        FROM best x JOIN best y ON x.cell = y.cell
-          AND (y.cos < x.cos OR (y.cos = x.cos AND y.vec_id < x.vec_id))
-          AND list_sum(list_transform(range(64), i ->
-                CAST(x.embedding[i+1] AS DOUBLE) * CAST(y.embedding[i+1] AS DOUBLE)))
-              / (x.vn * y.vn) >= 0.3)
-      SELECT b.vec_id, CAST(b.cell AS INTEGER) AS cell,
-             round(b.cos, 6) AS centroid_cos,
-             (d.vec_id IS NULL) AS kept
-      FROM best b LEFT JOIN drops d ON b.vec_id = d.vec_id""",
-
-    // capped SemDeDup replay: same centroid/argmax pipeline, then
-    // per-cell p from integer arithmetic over the cell counts and a
-    // sub-cell from the first p bits of the 16-plane md5 sign-LSH
-    // bucket (seed 42 + 104729); drops pair only within (cell, sub).
-    "x_dedup_semantic_capped" -> s"""
-      WITH cent AS (
-        SELECT c,
-               list_transform(range(64), j ->
-                 CAST(('0x' || substr(md5('centroid_42_' || CAST(c AS VARCHAR) || '_' || CAST(j AS VARCHAR)), 1, 8)) AS BIGINT)
-                   % 1000000 / 1000000.0 - 0.5) AS cv
-        FROM (SELECT unnest(range(8)) AS c)),
-      cn AS (
-        SELECT c, cv, sqrt(list_sum(list_transform(cv, x -> x * x))) AS cnorm FROM cent),
-      e AS (
-        SELECT vec_id, embedding,
-               sqrt(list_sum(list_transform(range(64), i ->
-                 CAST(embedding[i+1] AS DOUBLE) * CAST(embedding[i+1] AS DOUBLE)))) AS vn
-        FROM embeddings
-        WHERE len(embedding) = 64),
-      sc AS (
-        SELECT e.vec_id, e.embedding, e.vn, cn.c AS cell,
-               list_sum(list_transform(range(64), i ->
-                 CAST(e.embedding[i+1] AS DOUBLE) * cn.cv[CAST(i+1 AS INTEGER)]))
-                 / (e.vn * cn.cnorm) AS cos
-        FROM e CROSS JOIN cn
-        WHERE e.vn > 0),
-      best AS (
-        SELECT vec_id, embedding, vn, cell, cos FROM sc
-        QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cell DESC) = 1),
-      counts AS (SELECT cell, count(*) AS n FROM best GROUP BY cell),
-      pc AS (
-        SELECT cell,
-               coalesce(list_min(list_filter(range(17),
-                 p -> n <= 48 * (1 << CAST(p AS INTEGER)))), 16) AS p
-        FROM counts),
-      sub AS (
-        SELECT b.vec_id, b.embedding, b.vn, b.cell, b.cos,
-               CAST((${lshBucketSql("b.embedding", 64, 16, 42L + 104729L)}) AS BIGINT)
-                 % (1 << CAST(pc.p AS INTEGER)) AS subcell
-        FROM best b JOIN pc USING (cell)),
-      drops AS (
-        SELECT DISTINCT x.vec_id
-        FROM sub x JOIN sub y ON x.cell = y.cell AND x.subcell = y.subcell
-          AND (y.cos < x.cos OR (y.cos = x.cos AND y.vec_id < x.vec_id))
-          AND list_sum(list_transform(range(64), i ->
-                CAST(x.embedding[i+1] AS DOUBLE) * CAST(y.embedding[i+1] AS DOUBLE)))
-              / (x.vn * y.vn) >= 0.3)
-      SELECT b.vec_id, CAST(b.cell AS INTEGER) AS cell,
-             round(b.cos, 6) AS centroid_cos,
-             (d.vec_id IS NULL) AS kept
-      FROM best b LEFT JOIN drops d ON b.vec_id = d.vec_id""",
-
-    "x_embed_contamination" -> s"""
-      WITH c AS (
-        SELECT vec_id, embedding, ${lshBucketSql("embedding", 64, 8)} AS bkt
-        FROM embeddings)
-      SELECT left_id, right_id, round(cosine, 4) AS cosine FROM (
-        SELECT a.vec_id AS left_id, b.vec_id AS right_id,
-               list_sum(list_transform(range(64), i -> CAST(a.embedding[i+1] AS DOUBLE) * CAST(b.embedding[i+1] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(range(64), i -> CAST(a.embedding[i+1] AS DOUBLE) * CAST(a.embedding[i+1] AS DOUBLE))))
-                * sqrt(list_sum(list_transform(range(64), i -> CAST(b.embedding[i+1] AS DOUBLE) * CAST(b.embedding[i+1] AS DOUBLE))))) AS cosine
-        FROM c a JOIN c b ON a.vec_id % 4 = 0 AND b.vec_id % 4 <> 0 AND a.bkt = b.bkt)
-      WHERE cosine >= 0.3""",
-    "x_embed_contamination_mt" -> s"""
-      WITH c AS (
-        SELECT vec_id, embedding,
-               ${lshBucketSql("embedding", 64, 6, 42L)} AS b0,
-               ${lshBucketSql("embedding", 64, 6, 42L + 7919L)} AS b1,
-               ${lshBucketSql("embedding", 64, 6, 42L + 15838L)} AS b2
-        FROM embeddings)
-      SELECT left_id, right_id, round(cosine, 4) AS cosine FROM (
-        SELECT a.vec_id AS left_id, b.vec_id AS right_id,
-               list_sum(list_transform(range(64), i -> CAST(a.embedding[i+1] AS DOUBLE) * CAST(b.embedding[i+1] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(range(64), i -> CAST(a.embedding[i+1] AS DOUBLE) * CAST(a.embedding[i+1] AS DOUBLE))))
-                * sqrt(list_sum(list_transform(range(64), i -> CAST(b.embedding[i+1] AS DOUBLE) * CAST(b.embedding[i+1] AS DOUBLE))))) AS cosine
-        FROM c a JOIN c b ON a.vec_id % 4 = 0 AND b.vec_id % 4 <> 0
-          AND (a.b0 = b.b0 OR a.b1 = b.b1 OR a.b2 = b.b2))
-      WHERE cosine >= 0.3""",
-    "x_ann_topk" -> """
-      SELECT query_id, neighbor_id, round(cosine, 4) AS cosine, rank FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               list_sum(list_transform(range(64), i -> CAST(q.embedding[i+1] AS DOUBLE) * CAST(c.embedding[i+1] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(range(64), i -> CAST(q.embedding[i+1] AS DOUBLE) * CAST(q.embedding[i+1] AS DOUBLE))))
-                * sqrt(list_sum(list_transform(range(64), i -> CAST(c.embedding[i+1] AS DOUBLE) * CAST(c.embedding[i+1] AS DOUBLE))))) AS cosine,
-               row_number() OVER (PARTITION BY q.vec_id
-                 ORDER BY list_sum(list_transform(range(64), i -> CAST(q.embedding[i+1] AS DOUBLE) * CAST(c.embedding[i+1] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(range(64), i -> CAST(q.embedding[i+1] AS DOUBLE) * CAST(q.embedding[i+1] AS DOUBLE))))
-                * sqrt(list_sum(list_transform(range(64), i -> CAST(c.embedding[i+1] AS DOUBLE) * CAST(c.embedding[i+1] AS DOUBLE))))) DESC,
-                 c.vec_id ASC) AS rank
-        FROM (SELECT * FROM embeddings WHERE vec_id < 10) q
-        JOIN embeddings c ON q.vec_id <> c.vec_id)
-      WHERE rank <= 5""",
-    "x_ann_lsh" -> s"""
-      WITH c AS (
-        SELECT vec_id, embedding, ${lshBucketSql("embedding", 64, 6)} AS bkt
-        FROM embeddings),
-      q AS (SELECT * FROM c WHERE vec_id < 10)
-      SELECT query_id, neighbor_id, round(cosine, 4) AS cosine, rank FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               list_sum(list_transform(range(64), i -> CAST(q.embedding[i+1] AS DOUBLE) * CAST(c.embedding[i+1] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(range(64), i -> CAST(q.embedding[i+1] AS DOUBLE) * CAST(q.embedding[i+1] AS DOUBLE))))
-                * sqrt(list_sum(list_transform(range(64), i -> CAST(c.embedding[i+1] AS DOUBLE) * CAST(c.embedding[i+1] AS DOUBLE))))) AS cosine,
-               row_number() OVER (PARTITION BY q.vec_id
-                 ORDER BY list_sum(list_transform(range(64), i -> CAST(q.embedding[i+1] AS DOUBLE) * CAST(c.embedding[i+1] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(range(64), i -> CAST(q.embedding[i+1] AS DOUBLE) * CAST(q.embedding[i+1] AS DOUBLE))))
-                * sqrt(list_sum(list_transform(range(64), i -> CAST(c.embedding[i+1] AS DOUBLE) * CAST(c.embedding[i+1] AS DOUBLE))))) DESC,
-                 c.vec_id ASC) AS rank
-        FROM q JOIN c ON q.bkt = c.bkt AND q.vec_id <> c.vec_id)
-      WHERE rank <= 5""",
-    "x_multimodal_meta" -> """
-      SELECT doc_id, 'text/plain' AS mime,
-             CAST(octet_length(encode(text)) AS BIGINT) AS byte_len
-      FROM documents""",
-    "x_events_window" -> """
-      SELECT epoch_ms(time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP))) AS ws_ms,
-             event_type, count(*) AS n,
-             CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total
-      FROM events GROUP BY 1, 2""",
-    "x_sessionize" -> """
-      WITH flagged AS (
-        SELECT user_id, event_id, value, epoch_ms(ts) AS ts_ms,
-               CASE WHEN epoch_ms(ts) - lag(epoch_ms(ts)) OVER
-                      (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id) > 1800000
-                    THEN 1 ELSE 0 END AS __new
-        FROM events),
-      sess AS (
-        SELECT user_id, value, ts_ms,
-               CAST(sum(__new) OVER (PARTITION BY user_id ORDER BY ts_ms, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        FROM flagged)
-      SELECT user_id, session_id,
-             min(ts_ms) AS session_start_ms, max(ts_ms) AS session_end_ms,
-             count(*) AS n_events,
-             CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total_value
-      FROM sess GROUP BY user_id, session_id""",
-
-    // batch/stream parity: the streaming replay must land on the SAME
-    // oracle rows as the batch operator — x_stream_window shares
-    // x_events_window's oracle shape; x_stream_sessions is the batch
-    // sessionization oracle with per-session rows keyed by boundaries
-    // (sessions of a user are disjoint in time, so (user_id,
-    // session_start_ms) is unique without the ordinal session_id).
-    "x_stream_window" -> """
-      SELECT epoch_ms(time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP))) AS ws_ms,
-             event_type, count(*) AS n,
-             CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total
-      FROM events GROUP BY 1, 2""",
-    // Event-time-timeout sessions: batch sessionization, minus the
-    // sessions the stream can never close — the LAST session of each
-    // user survives only if the final watermark (hi − 30 min)
-    // strictly passes its end + gap; every earlier session was closed
-    // by the arrival of its successor's first event.
-    "x_stream_sessions_et" -> """
-      WITH flagged AS (
-        SELECT user_id, value, epoch_ms(ts) AS ts_ms, event_id,
-               CASE WHEN epoch_ms(ts) - lag(epoch_ms(ts)) OVER
-                      (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id) > 1800000
-                    THEN 1 ELSE 0 END AS __new
-        FROM events),
-      sess AS (
-        SELECT user_id, value, ts_ms,
-               CAST(sum(__new) OVER (PARTITION BY user_id ORDER BY ts_ms, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        FROM flagged),
-      grouped AS (
-        SELECT user_id, session_id,
-               min(ts_ms) AS session_start_ms, max(ts_ms) AS session_end_ms,
-               count(*) AS n_events,
-               CAST(sum(CAST(CAST(value AS DECIMAL(38,6)) * 1000000 AS BIGINT)) AS BIGINT) AS total_value_e6
-        FROM sess GROUP BY user_id, session_id),
-      b AS (SELECT max(epoch_ms(ts)) AS hi FROM events),
-      lastsess AS (SELECT user_id, max(session_id) AS last_id FROM grouped GROUP BY user_id)
-      SELECT g.user_id, g.session_start_ms, g.session_end_ms, g.n_events, g.total_value_e6
-      FROM grouped g JOIN lastsess l ON g.user_id = l.user_id, b
-      WHERE g.session_id <> l.last_id OR g.session_end_ms + 1800000 < hi - 1800000""",
-
-    // Stream-static join: enrich with the derived cohort dimension,
-    // then the same hourly aggregate shape as x_stream_window.
-    "x_stream_join" -> """
-      SELECT epoch_ms(time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP))) AS ws_ms,
-             CAST(user_id % 7 AS BIGINT) AS cohort, count(*) AS n,
-             CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total
-      FROM events GROUP BY 1, 2""",
-
-    // Streaming exact-dedup: doubled delivery in, distinct events out.
-    "x_stream_dedup" -> """
-      SELECT epoch_ms(ts) AS ts_ms, event_id, event_type,
-             CAST(CAST(value AS DECIMAL(38,6)) AS DOUBLE) AS value
-      FROM events""",
-
-    // bloom dedup at zero-false-positive sizing: exactly the
-    // distinct event set
-    "x_stream_bloom_dedup" -> """
-      SELECT epoch_ms(ts) AS ts_ms, event_id, event_type,
-             CAST(CAST(value AS DECIMAL(38,6)) AS DOUBLE) AS value
-      FROM events""",
-
-    "x_stream_stream_join" -> """
-      SELECT a.event_id AS purchase_event, b.event_id AS view_event,
-             epoch_ms(a.ts) AS p_ts_ms, epoch_ms(b.ts) AS v_ts_ms
-      FROM events a JOIN events b
-        ON a.user_id = b.user_id
-       AND a.event_type = 'purchase' AND b.event_type = 'view'
-       AND b.ts BETWEEN a.ts - INTERVAL 4 HOUR AND a.ts""",
-    "x_stream_stream_join_outer" -> """
-      SELECT a.event_id AS purchase_event, b.event_id AS view_event,
-             epoch_ms(a.ts) AS p_ts_ms, epoch_ms(b.ts) AS v_ts_ms
-      FROM (SELECT * FROM events WHERE event_type = 'purchase') a
-      LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') b
-        ON a.user_id = b.user_id
-       AND b.ts BETWEEN a.ts - INTERVAL 4 HOUR AND a.ts""",
-
-    // Out-of-order sessions: the arrival-schedule watermark decides
-    // which rows survive (dropped at arrival if at-or-below it;
-    // unreleased if above the FINAL watermark), then batch gap-
-    // segmentation over the survivors, then the last-session
-    // emission rule — all three boundaries derived in one query.
-    "x_stream_sessions_ooo" -> """
-      WITH ev AS (
-        SELECT user_id, epoch_ms(ts) AS ts_ms, event_id, value
-        FROM events),
-      b AS (SELECT min(ts_ms) AS lo, max(ts_ms) AS hi FROM ev),
-      chunked AS (
-        SELECT ev.*,
-               least(CAST(floor((ts_ms - lo) * 6 / CAST(hi - lo + 1 AS DOUBLE)) AS INT), 5)
-                 AS chunk
-        FROM ev, b),
-      cmax AS (SELECT chunk, max(ts_ms) AS mx FROM chunked GROUP BY chunk),
-      arrival AS (
-        SELECT c.chunk, row_number() OVER (ORDER BY o.pos) - 1 AS batch, c.mx
-        FROM cmax c JOIN (VALUES (1,0),(0,1),(3,2),(2,3),(5,4),(4,5)) AS o(chunk, pos)
-          ON o.chunk = c.chunk),
-      wm AS (
-        SELECT chunk,
-               COALESCE(max(mx) OVER (ORDER BY batch
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) - 1800000, 0) AS wm_ms
-        FROM arrival),
-      processed AS (
-        SELECT c.user_id, c.ts_ms, c.event_id, c.value
-        FROM chunked c JOIN wm ON wm.chunk = c.chunk, b
-        WHERE c.ts_ms > wm.wm_ms AND c.ts_ms <= hi - 1800000),
-      flagged AS (
-        SELECT user_id, value, ts_ms, event_id,
-               CASE WHEN ts_ms - lag(ts_ms) OVER
-                      (PARTITION BY user_id ORDER BY ts_ms, event_id) > 1800000
-                    THEN 1 ELSE 0 END AS __new
-        FROM processed),
-      sess AS (
-        SELECT user_id, value, ts_ms,
-               CAST(sum(__new) OVER (PARTITION BY user_id ORDER BY ts_ms, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        FROM flagged),
-      grouped AS (
-        SELECT user_id, session_id,
-               min(ts_ms) AS session_start_ms, max(ts_ms) AS session_end_ms,
-               count(*) AS n_events,
-               CAST(sum(CAST(CAST(value AS DECIMAL(38,6)) * 1000000 AS BIGINT)) AS BIGINT) AS total_value_e6
-        FROM sess GROUP BY user_id, session_id),
-      lastsess AS (SELECT user_id, max(session_id) AS last_id FROM grouped GROUP BY user_id)
-      SELECT g.user_id, g.session_start_ms, g.session_end_ms, g.n_events, g.total_value_e6
-      FROM grouped g JOIN lastsess l ON g.user_id = l.user_id, b
-      WHERE g.session_id <> l.last_id OR hi - 1800000 > g.session_end_ms + 1800000""",
-
-    // Late-data contract: re-derive the watermark schedule of the
-    // fixed shuffled replay — chunk(r) by the writer's formula,
-    // arrival position from the literal permutation (1,0,3,2,5,4),
-    // watermark during a batch = max event time of STRICTLY EARLIER
-    // batches − 30 min (initial 0) — then drop exactly the rows whose
-    // window end trails it, and keep only windows finalized by the
-    // final watermark (append mode). Row-level predicate, so windows
-    // straddling a dropped chunk's range keep their on-time partial
-    // counts — the subtle case a spot-check would miss.
-    "x_stream_late" -> """
-      WITH ev AS (
-        SELECT epoch_ms(CAST(ts AS TIMESTAMP)) AS ts_ms, event_type,
-               CAST(value AS DECIMAL(38,6)) AS value
-        FROM events),
-      b AS (SELECT min(ts_ms) AS lo, max(ts_ms) AS hi FROM ev),
-      chunked AS (
-        SELECT ev.*,
-               least(CAST(floor((ts_ms - lo) * 6 / CAST(hi - lo + 1 AS DOUBLE)) AS INT), 5)
-                 AS chunk
-        FROM ev, b),
-      cmax AS (SELECT chunk, max(ts_ms) AS mx FROM chunked GROUP BY chunk),
-      arrival AS (
-        SELECT c.chunk, row_number() OVER (ORDER BY o.pos) - 1 AS batch, c.mx
-        FROM cmax c JOIN (VALUES (1,0),(0,1),(3,2),(2,3),(5,4),(4,5)) AS o(chunk, pos)
-          ON o.chunk = c.chunk),
-      wm AS (
-        SELECT chunk,
-               COALESCE(max(mx) OVER (ORDER BY batch
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) - 1800000, 0) AS wm_ms
-        FROM arrival),
-      kept AS (
-        SELECT ch.ts_ms, ch.event_type, ch.value
-        FROM chunked ch JOIN wm ON wm.chunk = ch.chunk
-        WHERE CAST(floor(ts_ms / 3600000.0) AS BIGINT) * 3600000 + 3600000 > wm.wm_ms)
-      SELECT CAST(floor(ts_ms / 3600000.0) AS BIGINT) * 3600000 AS ws_ms, event_type,
-             count(*) AS n, CAST(sum(value) AS DOUBLE) AS total
-      FROM kept, b
-      WHERE CAST(floor(ts_ms / 3600000.0) AS BIGINT) * 3600000 + 3600000 <= hi - 1800000
-      GROUP BY 1, 2""",
-
-    "x_stream_sessions" -> """
-      WITH flagged AS (
-        SELECT user_id, value, epoch_ms(ts) AS ts_ms, event_id,
-               CASE WHEN epoch_ms(ts) - lag(epoch_ms(ts)) OVER
-                      (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id) > 1800000
-                    THEN 1 ELSE 0 END AS __new
-        FROM events),
-      sess AS (
-        SELECT user_id, value, ts_ms,
-               CAST(sum(__new) OVER (PARTITION BY user_id ORDER BY ts_ms, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        FROM flagged)
-      SELECT user_id,
-             min(ts_ms) AS session_start_ms, max(ts_ms) AS session_end_ms,
-             count(*) AS n_events,
-             CAST(sum(CAST(CAST(value AS DECIMAL(38,6)) * 1000000 AS BIGINT)) AS BIGINT) AS total_value_e6
-      FROM sess GROUP BY user_id, session_id""",
-
-    // sqlite data plane: the Spark side writes nation through a real
-    // .db file and reads it back, so matching this plain-parquet
-    // oracle proves the codec round-trip is lossless for INTEGER/
-    // REAL/TEXT storage classes.
-    "q_sqlite_roundtrip" -> """
-      SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
-             CAST(n_regionkey AS BIGINT) AS n_regionkey,
-             n_nationkey * 1.5 AS score
-      FROM nation""",
-
-    // orc round-trip must preserve exactly the same typed values
-    "q_layout_cluster" -> """
-      SELECT l_returnflag, count(*) AS cnt,
-             CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty
-      FROM lineitem
-      WHERE l_shipdate BETWEEN '1996-01-01' AND '1996-12-31'
-      GROUP BY l_returnflag""",
-    "q_text_roundtrip" -> """
-      SELECT doc_id || '|' || text AS value FROM documents""",
-    "q_orc_roundtrip" -> """
-      SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
-             CAST(n_regionkey AS BIGINT) AS n_regionkey,
-             n_nationkey * 1.5 AS score
-      FROM nation""",
-    "q_sqlite_query" -> """
-      SELECT CAST(n_regionkey AS BIGINT) AS n_regionkey,
-             CAST(count(*) AS BIGINT) AS cnt,
-             CAST(sum(n_nationkey) AS BIGINT) AS key_sum
-      FROM nation GROUP BY n_regionkey""",
-
-    // IVF recall contract (see x_ann_ivf_recall query comment): the
-    // oracle asserts the contract, the engine measures it.
-    "x_ann_ivf_recall" -> """
-      SELECT CAST(10 AS BIGINT) AS n_queries, true AS mean_recall_ge_090""",
-
-    // sketch-accuracy contract (see x_approx query comment): the
-    // exact per-group distinct counts hash-match DuckDB's; the
-    // sketch estimates are asserted inside their declared error.
-    "x_approx" -> """
-      SELECT l_returnflag,
-             CAST(count(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
-             true AS parts_within_5pct, true AS p50_within_1pct
-      FROM lineitem GROUP BY l_returnflag""",
-
-    // PCA boolean contract (see x_embed_pca query comment).
-    "x_embed_pca" -> """
-      SELECT CAST(count(*) AS BIGINT) AS n_vectors, true AS orthonormal,
-             true AS eigen_monotone, true AS whitened_unit_var
-      FROM embeddings""",
-
-    // PQ/ADC recall contract (see x_ann_pq_recall query comment).
-    "x_ann_pq_recall" -> """
-      SELECT CAST(10 AS BIGINT) AS n_queries, true AS mean_recall_ge_030""",
-
-    // residual IVF×PQ recall contract (see x_ann_ivfpq_recall).
-    "x_ann_ivfpq_recall" -> """
-      SELECT CAST(10 AS BIGINT) AS n_queries, true AS mean_recall_ge_060""",
-  )
-
-  /** [[graft.ops.Similarity]]'s hyperplane component (plane i, dim j)
-    * re-derived in DuckDB: md5-seeded uniform in [-0.5, 0.5).
-    */
-  private def lshPlaneSql(i: Int, j: Int, seed: Long): String =
-    s"(CAST(('0x' || substr(md5('plane_${seed}_${i}_$j'), 1, 8)) AS BIGINT) % 1000000 / 1000000.0 - 0.5)"
-
-  /** Sign-LSH bucket id of a vector column, mirroring
-    * [[graft.ops.Similarity.hyperplaneBuckets]] term for term (left-
-    * associated double adds, so the fold order — and therefore every
-    * sign — matches bit-exactly).
-    */
-  private def lshBucketSql(vecExpr: String, dim: Int, planes: Int, seed: Long = 42L): String =
-    (0 until planes).map { i =>
-      val proj = (0 until dim)
-        .map(j => s"CAST($vecExpr[${j + 1}] AS DOUBLE) * ${lshPlaneSql(i, j, seed)}")
-        .mkString(" + ")
-      s"(CASE WHEN ($proj) >= 0 THEN ${1L << i} ELSE 0 END)"
-    }.mkString(" + ")
-
-  /** The 60 per-bit majority votes of [[graft.ops.Dedup.simhashMd5]]
-    * as one DuckDB sum expression (bit j set iff more token hashes
-    * have bit j than not).
-    */
-  private def simhashVotesSql: String = (0 until 60).map { j =>
-    s"(CASE WHEN sum(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) > 0 THEN ${1L << j} ELSE 0 END)"
-  }.mkString(" + ")
-
-  /** Feature j of [[graft.ops.Multimodal.FakeDecoder]] re-derived in
-    * DuckDB from the payload's hex pairs: normalized byte sum of
-    * positions ≡ j (mod 6), computed with the decoder's exact double
-    * op sequence then rounded through float32 like the decoder output.
-    */
-  private def multimodalFeatureSql(j: Int): String =
-    s"""CASE WHEN len = 0 THEN 0.0 ELSE
-               CAST(CAST((CAST(list_sum(list_transform(range(len), i -> CASE WHEN i % 6 = $j THEN bytes[i+1] ELSE 0 END)) AS DOUBLE) / 255.0 / len * 6) AS FLOAT) AS DOUBLE)
-             END AS f${j + 2}"""
-
-  /** DuckDB list literal of [[graft.ops.TextAnalysis]]'s stopword set,
-    * spliced into the x_text_profile oracle.
-    */
-  private def stopwordsSqlList: String = Seq(
-    "the", "a", "an", "of", "and", "or", "to", "in", "is", "are", "was",
-    "for", "on", "with", "as", "at", "by", "it", "be", "this", "that")
-    .map(s => s"'$s'").mkString("[", ",", "]")
 }

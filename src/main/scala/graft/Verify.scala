@@ -1,43 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry gate's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional third arg: comma-separated query subset (dev loop)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // size-based post-shuffle coalescing (guide §2.2): the default
-      // parallelismFirst=true refuses to coalesce below defaultParallelism,
-      // so at 32 cores every tiny LM/model-table exchange runs 32
-      // near-empty tasks (x_text_trigram_ppx measured 0.34 scaling
-      // ratio). Spark's own docs recommend false; coalescing stays
-      // byte-driven (advisory 64 MB), so real-volume shuffles are
-      // untouched at any scale. Same-window A/B r19: trigram 0.74-0.78,
-      // groups-family 0.88-0.94, no consistent loser.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // events.ts is nanosecond parquet; Spark can't read NANOS natively
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.hadoop.fs.file.impl", classOf[graft.util.NoForkLocalFileSystem].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional third arg: comma-separated gate subset (dev loop)
+    val selected =
+      if (args.length > 2) SparkEntry.select(args(2).split(",").toSeq) else SparkEntry.gates
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { gate =>
+      try gate.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${gate.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${gate.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -52,8 +29,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.gates
+      .map(g => s"${q(g.name)}: ${q(g.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -83,11 +83,11 @@ class LangIdSpec extends SparkSuite {
   // ---- behavioral contracts over a six-language mini-corpus ----
 
   private def corpus() = {
-    val langs = SparkEntry.langIdLangs
+    val langs = graft.gates.Fixtures.langIdLangs
     val rows = for {
       id <- 0 until 240
       lang = langs(((id / 2) % 6).toInt)
-      bank = SparkEntry.langIdBanks(lang)
+      bank = graft.gates.Fixtures.langIdBanks(lang)
       text = bank((id / 12) % 8) + " " + bank(((id / 17) + 3) % 8)
     } yield (id.toLong, lang, text)
     rows.toDF("doc_id", "lang", "text")

@@ -48,16 +48,14 @@ class SpecSuite extends AnyFunSuite {
     assert(p.transforms.map(_.name) == Seq("t0", "t1"))
   }
 
-  test("driver contract: every oracle key names a query; rows-only set is the declared whitelist") {
-    // a typo'd oracleSql key would silently downgrade that query to a
-    // rows-only check in the driver compare — fail loudly instead
-    val dangling = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(dangling.isEmpty, s"oracleSql keys with no query: $dangling")
-    // every query must carry an oracle: since round 8 even the sketch
-    // gate (x_approx) ships a hash-checkable exact-value + verdict
-    // contract, so the rows-only whitelist is empty
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(rowsOnly.isEmpty,
-      s"unexpected rows-only queries (add an oracle or document here): $rowsOnly")
+  test("gate registry: 297 unique gates with oracle SQL; select rejects unknowns") {
+    val names = SparkEntry.gates.map(_.name)
+    val dups = names.diff(names.distinct)
+    assert(dups.isEmpty, s"gate names declared twice: $dups")
+    assert(names.size == 297)
+    val blank = SparkEntry.gates.filter(_.oracleSql.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"gates without oracle SQL: $blank")
+    val e = intercept[GraftAnalysisException](SparkEntry.select(Seq("q_agg", "q_jion")))
+    assert(e.getMessage.contains("q_jion") && !e.getMessage.contains("q_agg"))
   }
 }

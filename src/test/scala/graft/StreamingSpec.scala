@@ -256,11 +256,12 @@ class StreamingSpec extends SparkSuite {
     // against DuckDB at sf0.01; this pins the same batch/stream parity
     // in-engine at sf0.001 so a regression fails fast in `sbt test`
     val d = "/root/testdata/sf0.001"
-    val win = SparkEntry.queries("x_stream_window")(spark, d)
-    val batchWin = SparkEntry.queries("x_events_window")(spark, d)
+    def gate(name: String) = SparkEntry.select(Seq(name)).head.build(spark, d)
+    val win = gate("x_stream_window")
+    val batchWin = gate("x_events_window")
     assert(win.exceptAll(batchWin).isEmpty && batchWin.exceptAll(win).isEmpty)
-    val sess = SparkEntry.queries("x_stream_sessions")(spark, d)
-    val batchSess = SparkEntry.queries("x_sessionize")(spark, d)
+    val sess = gate("x_stream_sessions")
+    val batchSess = gate("x_sessionize")
       .select($"user_id", $"session_start_ms", $"session_end_ms", $"n_events",
         ($"total_value".cast("decimal(18,6)") * 1000000).cast("long").as("total_value_e6"))
     assert(sess.exceptAll(batchSess).isEmpty && batchSess.exceptAll(sess).isEmpty)

@@ -18,14 +18,7 @@ CP_A=$4; FLAGS_A=$5; CP_B=$6; FLAGS_B=$7
 SF=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}
 CPUS=${SPARK_GRAFT_CPUS:-32}
 REPEATS=${SPARK_GRAFT_BENCH_REPEATS:-2}
-ADD_OPENS=""
-for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
-         java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
-         java.base/java.util.concurrent java.base/java.util.concurrent.atomic \
-         java.base/sun.nio.ch java.base/sun.nio.cs java.base/sun.security.action \
-         java.base/sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
-done
+ADD_OPENS=$(sed 's|.*|--add-opens &=ALL-UNNAMED|' tools/add-opens.txt)
 OUT=/tmp/ab_$LABEL
 rm -rf "$OUT"; mkdir -p "$OUT"
 run_one() { # side cp flags out

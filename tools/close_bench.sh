@@ -11,14 +11,7 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 N=${1:-3}
 SF=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}
-ADD_OPENS=""
-for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
-         java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
-         java.base/java.util.concurrent java.base/java.util.concurrent.atomic \
-         java.base/sun.nio.ch java.base/sun.nio.cs java.base/sun.security.action \
-         java.base/sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
-done
+ADD_OPENS=$(sed 's|.*|--add-opens &=ALL-UNNAMED|' tools/add-opens.txt)
 OUTDIR=$(mktemp -d /tmp/benchclose.XXXX)
 for i in $(seq 1 "$N"); do
   echo "[close] bench run $i/$N ..." >&2

@@ -7,7 +7,8 @@ spec totals):
     pipe `sbt -batch test | tee /tmp/sbt_test.log` first)
   - gate queries / spec ops: read from the compiled classes via a
     tiny JVM entry (graft.Counts), so the numbers are exactly
-    SparkEntry.queries.size and Transforms.knownTypes.size.
+    SparkEntry.gates.size and Transforms.knownTypes.size (graft.Counts
+    prints them as queries=/ops=).
 
 Usage: tools/readme_counts.py /tmp/sbt_test.log
 """

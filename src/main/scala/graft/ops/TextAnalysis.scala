@@ -8,9 +8,13 @@ import org.apache.spark.sql.functions._
   * language ID, document fingerprinting.
   *
   * Everything here is a pure column expression over
-  * `org.apache.spark.sql.functions` — whole-stage-codegen'd, no UDFs,
-  * no shuffle; at 100 TB these run at scan speed and combine freely
-  * with pushed-down filters. All heuristics are deterministic and
+  * `org.apache.spark.sql.functions` — no UDFs, no shuffle; at 100 TB
+  * these run at scan speed and combine freely with pushed-down
+  * filters. Not all of it is whole-stage-codegen'd: the array
+  * higher-order functions (`filter`, `transform`, `aggregate`) are
+  * `CodegenFallback`, interpreted per element and never merged as
+  * common subexpressions, so an array used twice is computed twice
+  * unless it is [[bind]]-ed. All heuristics are deterministic and
   * SQL-expressible, so results are oracle-checkable cross-engine.
   */
 object TextAnalysis {
@@ -32,9 +36,27 @@ object TextAnalysis {
     * optimizer (SimplifyExtractValueOps folds extraction over literal
     * CreateArray, not over `transform`). Lambda body identical ⟹
     * results identical.
+    *
+    * The same holds outside lambdas: a Column value used N times in
+    * one expression is evaluated N times per row, so a tokenized
+    * array read by several signals is bound once and read by
+    * reference. Bind inside ONE output column only: a bound struct
+    * shared by several output columns (fields read as `p.a`, `p.b`)
+    * is copied whole into any filter pushed through the projection
+    * and into every pruned side that reads one of its fields.
+    *
+    * The result is an array element, which Catalyst types nullable
+    * whatever the body returns; wrap it in `coalesce(..., zero)` with
+    * a non-null `zero` of the body's type where the schema must keep
+    * the body's nullability (the body itself never yields the bound
+    * null, so `zero` is never taken).
     */
   private[graft] def bind(v: Column)(body: Column => Column): Column =
     element_at(transform(array(v), x => body(x)), 1)
+
+  /** struct of `cs` with the field names `names`, in order. */
+  private def structOf(names: Seq[String], cs: Seq[Column]): Column =
+    struct(cs.zip(names).map { case (c, n) => c.as(n) }: _*)
 
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
 
@@ -57,28 +79,32 @@ object TextAnalysis {
     * of heuristics used for pre-training corpus filtering.
     */
   def qualityStruct(text: Column): Column = {
-    val toks = tokens(text)
-    val nTok = size(toks).cast("long")
-    val charLen = length(text).cast("double")
-    val avgTokLen = when(nTok > 0,
-      aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") / nTok)
-      .otherwise(lit(0.0))
-    val punct = charLen - length(regexp_replace(text, "[^a-zA-Z0-9 ]", "")).cast("double")
-    val punctRatio = when(charLen > 0, punct / charLen).otherwise(lit(0.0))
+    def named(cs: Column*): Column = structOf(
+      Seq("n_tokens", "avg_token_len", "punct_ratio", "stopword_ratio", "quality_score"), cs)
     val stopCol = lit(stopwords.toArray)
-    val stopRatio = when(nTok > 0,
-      size(filter(toks, t => array_contains(stopCol, t))).cast("double") / nTok)
-      .otherwise(lit(0.0))
-    val score =
-      when(nTok === 0, lit(0.0)).otherwise(
-        lit(1.0)
-          - abs(avgTokLen - lit(5.0)) / lit(10.0)
-          - punctRatio
-          + stopRatio * lit(0.5))
-    struct(
-      nTok.as("n_tokens"), avgTokLen.as("avg_token_len"),
-      punctRatio.as("punct_ratio"), stopRatio.as("stopword_ratio"),
-      score.as("quality_score"))
+    val bound = bind(tokens(text)) { toks =>
+      val nTok = size(toks).cast("long")
+      val charLen = length(text).cast("double")
+      val avgTokLen = when(nTok > 0,
+        aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") / nTok)
+        .otherwise(lit(0.0))
+      val punct = charLen - length(regexp_replace(text, "[^a-zA-Z0-9 ]", "")).cast("double")
+      val punctRatio = when(charLen > 0, punct / charLen).otherwise(lit(0.0))
+      val stopRatio = when(nTok > 0,
+        size(filter(toks, t => array_contains(stopCol, t))).cast("double") / nTok)
+        .otherwise(lit(0.0))
+      bind(array(avgTokLen, punctRatio, stopRatio)) { r =>
+        val (avg, punctR, stopR) = (r(0), r(1), r(2))
+        val score =
+          when(nTok === 0, lit(0.0)).otherwise(
+            lit(1.0)
+              - abs(avg - lit(5.0)) / lit(10.0)
+              - punctR
+              + stopR * lit(0.5))
+        named(nTok, avg, punctR, stopR, score)
+      }
+    }
+    coalesce(bound, named(lit(0L), lit(0.0), lit(0.0), lit(0.0), lit(0.0)))
   }
 
   private val langMarkers: Seq[(String, Seq[String])] = Seq(
@@ -93,16 +119,18 @@ object TextAnalysis {
     * → "und". Deterministic, SQL-mirrorable.
     */
   def langId(text: Column): Column = {
-    val toks = tokens(text)
-    val scores = langMarkers.map { case (lang, markers) =>
-      lang -> size(filter(toks, t => array_contains(lit(markers.toArray), t)))
+    val ordered = bind(tokens(text)) { toks =>
+      bind(array(langMarkers.map { case (_, markers) =>
+        size(filter(toks, t => array_contains(lit(markers.toArray), t)))
+      }: _*)) { scores =>
+        val best = array_max(scores)
+        // first lang (in declared order) reaching the max wins
+        langMarkers.zipWithIndex.foldRight(lit("und"): Column) { case (((lang, _), i), els) =>
+          when(scores(i) === best && best > 0, lit(lang)).otherwise(els)
+        }
+      }
     }
-    val best = scores.tail.foldLeft(scores.head._2)((m, s) => greatest(m, s._2))
-    // first lang (in declared order) reaching the max wins
-    val ordered = scores.foldRight(lit("und"): Column) { case ((lang, sc), els) =>
-      when(sc === best && best > 0, lit(lang)).otherwise(els)
-    }
-    when(text.rlike("[\\x{4e00}-\\x{9fff}]"), lit("zh")).otherwise(ordered)
+    when(text.rlike("[\\x{4e00}-\\x{9fff}]"), lit("zh")).otherwise(coalesce(ordered, lit("und")))
   }
 
   /** TRAINED multi-class language identifier — the model rung above
@@ -171,21 +199,26 @@ object TextAnalysis {
     *    per word token.
     */
   def repetitionStruct(text: Column): Column = {
-    val lines = filter(transform(split(text, "\n"), l => trim(l)), l => l =!= lit(""))
-    val n = size(lines)
-    val dis = array_distinct(lines)
-    val dupFrac = when(n > 0, (n - size(dis)).cast("double") / n).otherwise(lit(0.0))
-    val totChars = aggregate(lines, lit(0L), (a, l) => a + length(l))
-    val dupChars = aggregate(dis, lit(0L),
-      (a, d) => a + (size(filter(lines, x => x === d)) - 1).cast("long") * length(d))
-    val dupCharFrac = when(totChars > 0, dupChars.cast("double") / totChars)
-      .otherwise(lit(0.0))
-    val words = tokens(text)
-    val symbols = length(text) - length(regexp_replace(text, "[^a-zA-Z0-9\\s]", ""))
-    val symbolWordRatio = when(size(words) > 0, symbols.cast("double") / size(words))
-      .otherwise(lit(0.0))
-    struct(n.cast("long").as("n_lines"), dupFrac.as("dup_line_frac"),
-      dupCharFrac.as("dup_line_char_frac"), symbolWordRatio.as("symbol_word_ratio"))
+    def named(cs: Column*): Column = structOf(
+      Seq("n_lines", "dup_line_frac", "dup_line_char_frac", "symbol_word_ratio"), cs)
+    val nonEmptyLines = filter(transform(split(text, "\n"), l => trim(l)), l => l =!= lit(""))
+    val bound = bind(nonEmptyLines) { lines =>
+      bind(tokens(text)) { words =>
+        val n = size(lines)
+        val dis = array_distinct(lines)
+        val dupFrac = when(n > 0, (n - size(dis)).cast("double") / n).otherwise(lit(0.0))
+        val totChars = aggregate(lines, lit(0L), (a, l) => a + length(l))
+        val dupChars = aggregate(dis, lit(0L),
+          (a, d) => a + (size(filter(lines, x => x === d)) - 1).cast("long") * length(d))
+        val dupCharFrac = when(totChars > 0, dupChars.cast("double") / totChars)
+          .otherwise(lit(0.0))
+        val symbols = length(text) - length(regexp_replace(text, "[^a-zA-Z0-9\\s]", ""))
+        val symbolWordRatio = when(size(words) > 0, symbols.cast("double") / size(words))
+          .otherwise(lit(0.0))
+        named(n.cast("long"), dupFrac, dupCharFrac, symbolWordRatio)
+      }
+    }
+    coalesce(bound, named(lit(0L), lit(0.0), lit(0.0), lit(0.0)))
   }
 
   /** Most-frequent word n-gram per document (the other half of the

@@ -267,6 +267,65 @@ class OpsSpec extends SparkSuite {
     assert(fp.getString(0) == fp.getString(1))
   }
 
+  test("text profile: values and schema nullability pinned over tokenizer edge cases") {
+    // expected values recorded from the formulation that tokenized once
+    // per use; the arithmetic order is unchanged, so doubles match exactly
+    val df = Seq[(java.lang.Long, String)](
+      (1L, null), (2L, ""), (3L, "!!! ... ?? -- ,,"), (4L, "这是中文 the of and"),
+      (5L, "The der cat sat"), // en/de tie: en wins by declared order
+      (6L, "quick brown foxes jump high"), (7L, "the of and to in is a"),
+      (8L, "Hello, World! It's 2024 -- the año of ünïcode; a+b=c.\nline two\nline two"))
+      .toDF("doc_id", "text")
+    // token_count, bpeish_token_count, lang_id, n_tokens, avg_token_len,
+    // punct_ratio, stopword_ratio, quality_score
+    val expected = Map[Long, Seq[Any]](
+      1L -> Seq(null, null, "und", null, 0.0, 0.0, 0.0, 0.5),
+      2L -> Seq(0L, 0L, "und", 0L, 0.0, 0.0, 0.0, 0.0),
+      3L -> Seq(0L, 12L, "und", 0L, 0.0, 0.75, 0.0, 0.0),
+      4L -> Seq(3L, 7L, "zh", 3L, 2.6666666666666665, 0.26666666666666666, 1.0, 1.0),
+      5L -> Seq(4L, 4L, "en", 4L, 3.0, 0.0, 0.25, 0.925),
+      6L -> Seq(5L, 5L, "und", 5L, 4.6, 0.0, 0.0, 0.96),
+      7L -> Seq(7L, 7L, "en", 7L, 2.142857142857143, 0.0, 1.0, 1.2142857142857144),
+      8L -> Seq(18L, 30L, "en", 18L,
+        2.5555555555555554, 0.19718309859154928, 0.2777777777777778, 0.6972613458528951))
+    val out = TextAnalysis.profile(df)
+    val pinned = Seq("token_count", "bpeish_token_count", "lang_id", "n_tokens",
+      "avg_token_len", "punct_ratio", "stopword_ratio", "quality_score")
+    val got = out.select((col("doc_id") +: pinned.map(col)): _*).collect()
+      .map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    assert(got == expected)
+    // the functions themselves: lang_id and the struct never null, even for null text
+    val fns = df.select(col("doc_id"), TextAnalysis.langId(col("text")).as("l"),
+      TextAnalysis.qualityStruct(col("text")).as("q"))
+    assert(fns.collect().map(r => r.getLong(0) -> (r.getString(1) +: r.getStruct(2).toSeq)).toMap ==
+      expected.map { case (id, e) => id -> (e(2) +: e.drop(3)) })
+    def nullability(d: org.apache.spark.sql.DataFrame): Seq[(String, Boolean)] =
+      d.schema.fields.toSeq.flatMap { f =>
+        (f.name -> f.nullable) +: (f.dataType match {
+          case s: org.apache.spark.sql.types.StructType => s.fields.toSeq.map(g => s"${f.name}.${g.name}" -> g.nullable)
+          case _ => Nil
+        })
+      }
+    val doubles = Seq("avg_token_len", "punct_ratio", "stopword_ratio", "quality_score")
+    // nullable text: counts follow the text, lang_id never null
+    assert(nullability(out) == Seq("doc_id" -> true, "text" -> true, "token_count" -> true,
+      "bpeish_token_count" -> true, "lang_id" -> false, "fingerprint" -> true,
+      "n_tokens" -> true) ++ doubles.map(_ -> true))
+    assert(nullability(fns.drop("doc_id")) == Seq("l" -> false, "q" -> false,
+      "q.n_tokens" -> true) ++ doubles.map(d => s"q.$d" -> true))
+    // a non-nullable text column keeps lang_id and n_tokens required
+    val lit1 = spark.range(1).select(lit("the cat is on the mat").as("text"))
+    val litOut = TextAnalysis.profile(lit1)
+    assert(nullability(litOut) == Seq("text" -> false, "token_count" -> false,
+      "bpeish_token_count" -> false, "lang_id" -> false, "fingerprint" -> false,
+      "n_tokens" -> false) ++ doubles.map(_ -> true))
+    assert(nullability(lit1.select(TextAnalysis.langId(col("text")).as("l"),
+      TextAnalysis.qualityStruct(col("text")).as("q"))) == Seq("l" -> false, "q" -> false,
+      "q.n_tokens" -> false) ++ doubles.map(d => s"q.$d" -> true))
+    assert(litOut.select(pinned.map(col): _*).head().toSeq == Seq(6L, 6L, "en", 6L,
+      2.6666666666666665, 0.0, 0.6666666666666666, 1.0999999999999999))
+  }
+
   test("ngram contamination: exact shared n-gram flags, short docs out of domain") {
     val train = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
@@ -292,6 +351,18 @@ class OpsSpec extends SparkSuite {
     val s = spark.range(1)
       .select(TextAnalysis.repetitionStruct(lit("a+b = c!")).as("r")).select("r.*").head()
     assert(math.abs(s.getAs[Double]("symbol_word_ratio") - 1.0) < 1e-9) // + = ! over a b c
+    // null and empty text: zero signals, struct never null; the line
+    // count keeps the text column's nullability
+    val edge = Seq[(java.lang.Long, String)]((1L, null), (2L, ""))
+      .toDF("id", "text").select(col("id"), TextAnalysis.repetitionStruct(col("text")).as("r"))
+    assert(edge.collect().map(r => r.getLong(0) -> r.getStruct(1).toSeq).toMap ==
+      Map(1L -> Seq(null, 0.0, 0.0, 0.0), 2L -> Seq(0L, 0.0, 0.0, 0.0)))
+    val rType = edge.schema("r")
+    assert(!rType.nullable && rType.dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
+      .fields.map(_.nullable).toSeq == Seq(true, true, true, true))
+    val litType = spark.range(1).select(TextAnalysis.repetitionStruct(lit(text)).as("r")).schema("r")
+    assert(!litType.nullable && litType.dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
+      .fields.map(_.nullable).toSeq == Seq(false, true, true, true))
   }
 
   test("top-ngram stats: phrase-dominated doc maxes the fraction") {

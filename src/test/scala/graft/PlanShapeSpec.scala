@@ -221,4 +221,41 @@ class PlanShapeSpec extends SparkSuite {
     assert(off.exists(_.contains("GreaterThan(l_quantity,24.0)")), off)
     assert(pushed(observe = true) == off)
   }
+
+  test("text_profile tokenizes once per signal; pushed filters and dedup keys stay token-count sized") {
+    import graft.spec._
+    import org.apache.spark.sql.execution.{FilterExec, ProjectExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    val dir = java.nio.file.Files.createTempDirectory("graftprofile").toString + "/docs"
+    (0 until 40).map(i => (i.toLong, s"doc $i: the cat and the dog in the house of the king " * 2))
+      .toDF("doc_id", "text").write.parquet(dir)
+    val spec = PipelineSpec("curate", "",
+      Seq(SourceSpec("docs", "parquet", Config.of("path" -> dir))),
+      Seq(TransformSpec("redact", "redact_pii", Config.of("field" -> "text"), Nil, 0),
+        TransformSpec("profile", "text_profile", Config.of(), Nil, 1),
+        TransformSpec("quality", "filter",
+          Config.of("field" -> "token_count", "op" -> "ge", "value" -> 20), Nil, 2),
+        TransformSpec("dedup", "dedup_exact",
+          Config.of("text_field" -> "text", "tie_break" -> "doc_id"), Nil, 3)),
+      Seq(SinkSpec("out", "parquet", Config.of("path" -> (dir + "_out")))))
+    val plan = graft.compile.PipelineCompiler.compile(spark, spec).df.queryExecution.sparkPlan
+    val profile = plan.collect {
+      case p: ProjectExec if p.projectList.exists {
+        case a: org.apache.spark.sql.catalyst.expressions.Alias => a.name == "token_count"
+        case _ => false
+      } => p.projectList.mkString(", ")
+    }
+    assert(profile.size == 1, plan.toString)
+    // token_count, lang_id and the quality struct: one tokenization each
+    val tokenizations = "split\\(lower\\(".r.findAllIn(profile.head).length
+    assert(tokenizations <= 3, s"$tokenizations tokenizations in the profile projection:\n${profile.head}")
+    val pushed = plan.collect { case f: FilterExec => f.condition.toString }
+    assert(pushed.nonEmpty && pushed.forall(_.contains("split(lower(")), plan.toString)
+    val aggSide = plan.collect { case a: HashAggregateExec =>
+      a.collect { case p: ProjectExec => p.projectList.mkString(", ") } }.flatten
+    assert(aggSide.nonEmpty, plan.toString)
+    // a profile signal copied here would re-run per row on every side
+    for (e <- pushed ++ aggSide; f <- Seq("array_contains", "aggregate("))
+      assert(!e.contains(f), s"$f in a pushed filter or dedup aggregate side:\n$e")
+  }
 }

@@ -10,13 +10,17 @@
 #       <classpath_B> "<extra_java_flags_B>"
 #
 # Results land under /tmp/ab_<label>/ and a summary table prints at
-# the end.
+# the end. SPARK_GRAFT_CPUS (default: nproc) and SPARK_DRIVER_MEM
+# (default: half of RAM, 2-8 g) size each run's session and heap.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 QUERIES=$1; N=$2; LABEL=$3
 CP_A=$4; FLAGS_A=$5; CP_B=$6; FLAGS_B=$7
 SF=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}
-CPUS=${SPARK_GRAFT_CPUS:-32}
+# cores and heap default to this machine: every core, and half of RAM
+# clamped to 2-8 g (the heap the test command in ROADMAP.md gives sbt)
+CPUS=${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}
+MEM=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}
 REPEATS=${SPARK_GRAFT_BENCH_REPEATS:-2}
 ADD_OPENS=$(sed 's|.*|--add-opens &=ALL-UNNAMED|' tools/add-opens.txt)
 OUT=/tmp/ab_$LABEL
@@ -26,7 +30,7 @@ run_one() { # side cp flags out
   SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" \
   SPARK_GRAFT_BENCH_REPEATS="$REPEATS" SPARK_GRAFT_BENCH_ONLY="$QUERIES" \
   SPARK_GRAFT_BENCH_OUT="$out" \
-  java $ADD_OPENS -Xmx48g $flags -cp "$cp:/opt/spark/jars/*" \
+  java $ADD_OPENS -Xmx"$MEM" $flags -cp "$cp:/opt/spark/jars/*" \
     graft.Bench >/dev/null 2>"$out.log"
 }
 for i in $(seq 1 "$N"); do

@@ -8,8 +8,10 @@ import org.apache.spark.sql.functions._
   * exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine.
   *
   * Scale design notes (the point of each algorithm):
-  *  - exact: one hash-aggregate shuffle on a 16-byte digest, never on
-  *    document bodies; uniform key distribution → no skew.
+  *  - exact: one ranked window partitioned by a 16-byte digest, over
+  *    one read of the input. A partial per-task group limit keeps only
+  *    each task's first rows per digest, so a hot digest is cut down
+  *    before the shuffle.
   *  - MinHash+LSH: signatures are pure column expressions (codegen, no
   *    shuffle); candidate generation explodes each doc into `bands`
   *    rows (small constant) and self-joins on (band, band-hash) — the
@@ -62,41 +64,30 @@ object Dedup {
     else df
 
   /** Exact dedup by content fingerprint: keep the row with the minimal
-    * `tieBreak` per normalized-content digest. Deterministic, and the
-    * shuffle key is the digest, not the document. Same min-agg +
-    * semi-join plan as keep-first `DedupOp`: the aggregate ships only
-    * (digest, tieBreak) — a window row_number would sort every
-    * duplicate's full row on one reducer per digest.
+    * `tieBreak` per normalized-content digest, by [[keepFirst]]. Every
+    * row tied on the minimum stays; a NULL `tieBreak` loses to any real
+    * one; NULL text (a NULL digest) is one group and is kept.
     */
-  def exactByFingerprint(df: DataFrame, textCol: String, tieBreak: String): DataFrame = {
-    val keyed = df.withColumn("__fp", TextAnalysis.fingerprint(col(textCol)))
-    keyed.join(
-        minPerKey(keyed, Seq("__fp"), tieBreak),
-        nullSafeCond(Seq("__fp", tieBreak)), "left_semi")
-      .select(df.columns.map(col).toSeq: _*)
-  }
+  def exactByFingerprint(df: DataFrame, textCol: String, tieBreak: String): DataFrame =
+    keepFirst(df.withColumn("__fp", TextAnalysis.fingerprint(col(textCol))),
+      Seq(col("__fp")), Seq(col(tieBreak).asc_nulls_last)).drop("__fp")
 
-  /** Exact dedup on explicit key columns, keep-min-tieBreak. */
-  def exactByKeys(df: DataFrame, keys: Seq[String], tieBreak: String): DataFrame =
-    df.join(minPerKey(df, keys, tieBreak), nullSafeCond(keys :+ tieBreak), "left_semi")
-      .select(df.columns.map(col).toSeq: _*)
-
-  /** Per-key min-tieBreak, key/min columns renamed `__m_<name>` so the
-    * semi join can use an explicit null-safe condition. Tie contract:
-    * `tieBreak` must be unique per key — ties on the min keep every
-    * tied row (the aggregate cannot distinguish them). Gate queries
-    * use `doc_id` (unique); enforced by OpsSpec.
+  /** The one rule for "the first row of each group": keep every row
+    * whose `orderBy` value ranks first within its `partitionBy` group
+    * (`rank() = 1`). Ties on the best value all survive, so the result
+    * does not depend on partitioning. Callers pass each order column
+    * as `asc_nulls_last` (keep first) or `desc_nulls_last` (keep last):
+    * a NULL order value then loses to any real value, and a group whose
+    * order values are all NULL keeps all its rows. NULL keys form one
+    * group, like `groupBy`.
+    *
+    * Spark plans `rank = 1` with a partial `WindowGroupLimit` below the
+    * exchange, so each map task ships only its local winners (a hot key
+    * is cut down before the shuffle), and the input is read once.
     */
-  private def minPerKey(df: DataFrame, keys: Seq[String], tieBreak: String): DataFrame =
-    df.groupBy(keys.map(col): _*).agg(min(col(tieBreak)).as(tieBreak))
-      .select((keys :+ tieBreak).map(n => col(n).as(s"__m_$n")): _*)
-
-  /** Null-safe equality on each column vs its `__m_` twin: NULL keys
-    * (e.g. NULL text → NULL fingerprint) group together and survive —
-    * a plain equi-join would silently drop every such row.
-    */
-  private def nullSafeCond(cols: Seq[String]): Column =
-    cols.map(n => col(n) <=> col(s"__m_$n")).reduce(_ && _)
+  def keepFirst(df: DataFrame, partitionBy: Seq[Column], orderBy: Seq[Column]): DataFrame =
+    df.withColumn("__rank", rank().over(Window.partitionBy(partitionBy: _*).orderBy(orderBy: _*)))
+      .filter(col("__rank") === 1).drop("__rank")
 
   /** Corpus-level LINE dedup — the C4/RefinedWeb boilerplate-removal
     * move: delete every occurrence of any line whose trimmed form

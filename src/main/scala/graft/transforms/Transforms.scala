@@ -1406,10 +1406,12 @@ object AggregateOp {
   *
   * Right-dedup contract (reference main.py:256 builds a dict keyed by
   * right_key → duplicate keys: *last wins*): `right_dedup:
-  * "last"|"first"` reproduces it deterministically with a window over
-  * an explicit `right_order` column — required, because "input order"
-  * is not a well-defined concept for a distributed scan (SURVEY §7.3).
-  * Default is no dedup (standard relational join).
+  * "last"|"first"` reproduces it deterministically with
+  * [[graft.ops.Dedup.keepFirst]] over an explicit `right_order` column —
+  * required, because "input order" is not a well-defined concept for a
+  * distributed scan (SURVEY §7.3). A NULL `right_order` loses to any
+  * real value, and every right row tied on the winning value is kept
+  * (each one joins). Default is no dedup (standard relational join).
   *
   * Scale notes: Catalyst + AQE choose broadcast-hash vs sort-merge at
   * runtime from actual sizes; `broadcast: true` forces the hint for
@@ -1436,9 +1438,8 @@ object JoinOp {
       case Some(keep @ ("last" | "first")) =>
         val ord = cfg.str("right_order").getOrElse(throw new GraftAnalysisException(
           "join: right_dedup needs 'right_order' (a column that defines input order)"))
-        val w = Window.partitionBy(rks.map(c): _*)
-          .orderBy(if (keep == "last") c(ord).desc else c(ord).asc)
-        right0.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+        graft.ops.Dedup.keepFirst(right0, rks.map(c),
+          Seq(if (keep == "last") c(ord).desc_nulls_last else c(ord).asc_nulls_last))
       case None | Some("none") => right0
       case Some(other) => throw new GraftAnalysisException(s"join: unknown right_dedup '$other'")
     }
@@ -1517,10 +1518,14 @@ object SortOp {
   *  - `keep: "any"` → `dropDuplicates(keys)`: hash-aggregate with
   *    map-side partial combine; cheapest, result row per key is
   *    arbitrary but the *set of keys* is exact. Default.
-  *  - `keep: "first"|"last"` with `order_by`: window `row_number`
-  *    filter — one shuffle + per-key sort; deterministic row choice.
-  *    This is the reference's first-wins semantics (main.py:270-279)
-  *    made well-defined: "first" must be first *by some column*, since
+  *  - `keep: "first"|"last"` with `order_by`: [[graft.ops.Dedup.keepFirst]],
+  *    a `rank() = 1` window over the keys, ascending (first) or
+  *    descending (last) by `order_by`, NULLs last either way: a NULL
+  *    order value loses to any real one. Every row tied on the best
+  *    `order_by` value is kept, so the result is deterministic; a key
+  *    needs a unique order value to keep exactly one row. This is the
+  *    reference's first-wins semantics (main.py:270-279) made
+  *    well-defined: "first" must be first *by some column*, since
   *    distributed scans have no inherent order (SURVEY §7.3).
   * Empty `keys` → dedup over all columns (exact duplicate removal).
   */
@@ -1535,70 +1540,8 @@ object DedupOp {
         val ords = cfg.strList("order_by")
         if (ords.isEmpty) throw new GraftAnalysisException(
           "deduplicate: keep first/last needs 'order_by' (columns defining input order)")
-        // Three equivalent plans (identical output under the
-        // unique-order-key contract; measured at sf0.1, 13× key
-        // duplication, steady-state: min_join 0.36 s, window 0.38 s,
-        // min_by 0.41 s):
-        //  - min_join (default): aggregate min/max(order) per key —
-        //    the partial agg carries ONLY (keys, order), never row
-        //    bodies — then a semi join keeps the winning rows. AQE
-        //    broadcasts the per-key extremes when they fit, shuffles
-        //    them when they don't; either way the full rows cross the
-        //    wire at most once. Requires the order key to be unique
-        //    per group (ties would keep every tied row).
-        //  - min_by/max_by hash aggregation: one shuffle, but partial
-        //    aggs pack and compare whole rows map-side.
-        //  - window row_number: shuffles every row into a per-key
-        //    sort; the plan that funnels hot keys into one reducer.
-        // Ties on order_by pick an arbitrary row in min_by/window —
-        // the determinism contract requires a unique order key.
-        cfg.str("impl").getOrElse("min_join") match {
-          case "window" =>
-            // nulls LAST in both directions: a row with a NULL order
-            // value loses to any real value but is still kept when its
-            // group has nothing better — same contract as min_by/
-            // min_join below.
-            val w = Window.partitionBy(keys.map(c): _*)
-              .orderBy(ords.map(o => if (keep == "last") c(o).desc_nulls_last else c(o).asc_nulls_last): _*)
-            df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-          case "min_by" =>
-            // Order key wrapped with a null flag per column: bare
-            // min_by skips rows whose order is NULL, so an all-NULL
-            // group would collapse to a NULL struct (every column of
-            // the kept "row" null). The flag makes NULL-ordered rows
-            // comparable-but-losing instead of invisible.
-            val ordExpr = struct(ords.flatMap { o =>
-              val oc = c(o)
-              if (keep == "first") Seq(oc.isNull, oc) else Seq(oc.isNotNull, oc)
-            }: _*)
-            val rowStruct = struct(df.columns.map(cn => col(quote(cn))).toSeq: _*)
-            val picked = if (keep == "first") min_by(rowStruct, ordExpr) else max_by(rowStruct, ordExpr)
-            df.groupBy(keys.map(c): _*).agg(picked.as("__row")).select(col("__row.*"))
-          case "min_join" =>
-            val extremes = ords.map(c) match {
-              case Seq(one) =>
-                df.groupBy(keys.map(c): _*)
-                  .agg((if (keep == "first") min(one) else max(one)).as(ords.head))
-              case many => // lexicographic extreme via struct ordering,
-                // unpacked so the semi join is on plain columns
-                df.groupBy(keys.map(c): _*)
-                  .agg((if (keep == "first") min(struct(many: _*)) else max(struct(many: _*))).as("__m"))
-                  .select(keys.map(c) :+ col("__m.*"): _*)
-            }
-            // Null-safe (<=>) join condition, NOT using-columns: a
-            // plain equi-join never matches NULL, so rows with a NULL
-            // key or NULL order value would silently vanish — both the
-            // min_by/window plans (groupBy groups NULLs) and the
-            // reference's tuple-key dict keep them. A group whose
-            // order values are ALL NULL keeps every row here (min()
-            // of all-NULL is NULL, which <=>-matches them all) — the
-            // unique-order-key contract makes that a non-case.
-            val joinCols = keys ++ ords
-            val renamed = extremes.select(joinCols.map(n => c(n).as(s"__m_$n")): _*)
-            val cond = joinCols.map(n => c(n) <=> col(quote(s"__m_$n"))).reduce(_ && _)
-            df.join(renamed, cond, "left_semi")
-          case other => throw new GraftAnalysisException(s"deduplicate: unknown impl '$other'")
-        }
+        graft.ops.Dedup.keepFirst(df, keys.map(c),
+          ords.map(o => if (keep == "last") c(o).desc_nulls_last else c(o).asc_nulls_last))
       case other => throw new GraftAnalysisException(s"deduplicate: unknown keep '$other'")
     }
   }

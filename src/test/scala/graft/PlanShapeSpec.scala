@@ -224,8 +224,8 @@ class PlanShapeSpec extends SparkSuite {
 
   test("text_profile tokenizes once per signal; pushed filters and dedup keys stay token-count sized") {
     import graft.spec._
-    import org.apache.spark.sql.execution.{FilterExec, ProjectExec}
-    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec}
+    import org.apache.spark.sql.execution.window.{Partial, WindowExec, WindowGroupLimitExec}
     val dir = java.nio.file.Files.createTempDirectory("graftprofile").toString + "/docs"
     (0 until 40).map(i => (i.toLong, s"doc $i: the cat and the dog in the house of the king " * 2))
       .toDF("doc_id", "text").write.parquet(dir)
@@ -249,13 +249,21 @@ class PlanShapeSpec extends SparkSuite {
     // token_count, lang_id and the quality struct: one tokenization each
     val tokenizations = "split\\(lower\\(".r.findAllIn(profile.head).length
     assert(tokenizations <= 3, s"$tokenizations tokenizations in the profile projection:\n${profile.head}")
-    val pushed = plan.collect { case f: FilterExec => f.condition.toString }
+    // filters below the dedup window (the rank = 1 filter sits above it)
+    val pushed = plan.collect {
+      case f: FilterExec if f.find(_.isInstanceOf[WindowExec]).isEmpty => f.condition.toString }
     assert(pushed.nonEmpty && pushed.forall(_.contains("split(lower(")), plan.toString)
-    val aggSide = plan.collect { case a: HashAggregateExec =>
-      a.collect { case p: ProjectExec => p.projectList.mkString(", ") } }.flatten
-    assert(aggSide.nonEmpty, plan.toString)
-    // a profile signal copied here would re-run per row on every side
-    for (e <- pushed ++ aggSide; f <- Seq("array_contains", "aggregate("))
-      assert(!e.contains(f), s"$f in a pushed filter or dedup aggregate side:\n$e")
+    // dedup_exact reads its input once and cuts each digest down per
+    // task before the shuffle
+    assert(plan.collect { case s: FileSourceScanExec => s }.size == 1, plan.toString)
+    val limits = plan.collect { case l: WindowGroupLimitExec => l }
+    assert(limits.exists(_.mode == Partial), plan.toString)
+    val windowSide = plan.collect { case w: WindowExec =>
+      (w.partitionSpec ++ w.orderSpec).mkString(", ") } ++
+      limits.map(l => (l.partitionSpec ++ l.orderSpec).mkString(", "))
+    assert(windowSide.nonEmpty, plan.toString)
+    // a profile signal copied here would re-run per row
+    for (e <- pushed ++ windowSide; f <- Seq("array_contains", "aggregate("))
+      assert(!e.contains(f), s"$f in a pushed filter or the dedup window's partition/order side:\n$e")
   }
 }

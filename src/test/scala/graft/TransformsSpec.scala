@@ -78,6 +78,19 @@ class TransformsSpec extends SparkSuite {
     val rows = out.select("id", "v", "r_w").as[(Int, String, String)].collect().toSet
     assert(rows == Set((1, "a", "y"), (2, "b", "z")))
     assert(out.columns.toSet == Set("id", "v", "r_id", "r_w", "r_ord"))
+    // a NULL right_order loses in both directions; rows tied on the
+    // winning right_order are all kept, so each one joins
+    val right2 = Seq((1, "x", Option(10)), (1, "n", None: Option[Int]),
+      (2, "t1", Option(5)), (2, "t2", Option(5)), (2, "lo", Option(1)))
+      .toDF("id", "w", "ord")
+    for ((keep, expect) <- Seq(
+        "first" -> Set((1, "x"), (2, "lo")),
+        "last" -> Set((1, "x"), (2, "t1"), (2, "t2")))) {
+      val got = JoinOp(left, Config.of("right" -> "r", "left_key" -> "id", "right_key" -> "id",
+        "right_dedup" -> keep, "right_order" -> "ord"), Map("r" -> right2))
+        .select("id", "r_w").as[(Int, String)].collect().toSet
+      assert(got == expect, s"right_dedup=$keep")
+    }
   }
 
   test("sort: stable multi-column with limit -> top-k") {
@@ -95,34 +108,45 @@ class TransformsSpec extends SparkSuite {
     // keep=any: arbitrary row but exact key set
     val any = DedupOp(df, Config.of("keys" -> Seq("name")))
     assert(any.select("name").as[String].collect().toSet == Set("Alice", "Bob"))
-    // all three physical plans agree, first and last, single and
-    // multi-column order (unique order keys per the contract)
+    // first and last by a lexicographic multi-column order
     val multi = Seq(("a", 1, 1, "r1"), ("a", 1, 0, "r2"), ("a", 0, 9, "r3"), ("b", 2, 2, "r4"))
       .toDF("k", "o1", "o2", "v")
-    for (keep <- Seq("first", "last"); ords <- Seq(Seq("o1", "o2"))) {
+    for (keep <- Seq("first", "last")) {
       val expect = Set(if (keep == "first") ("a", "r3") else ("a", "r1"), ("b", "r4"))
-      for (impl <- Seq("min_join", "min_by", "window")) {
-        val got = DedupOp(multi, Config.of("keys" -> Seq("k"), "keep" -> keep,
-          "order_by" -> ords, "impl" -> impl))
-          .select("k", "v").as[(String, String)].collect().toSet
-        assert(got == expect, s"impl=$impl keep=$keep")
-      }
+      val got = DedupOp(multi, Config.of("keys" -> Seq("k"), "keep" -> keep,
+        "order_by" -> Seq("o1", "o2")))
+        .select("k", "v").as[(String, String)].collect().toSet
+      assert(got == expect, s"keep=$keep")
     }
   }
 
   test("deduplicate keeps rows with NULL keys / NULL order values (ADVICE r3)") {
-    // NULL key rows form their own group in every impl — a plain
-    // equi-semi-join would silently drop them.
+    // NULL key rows form their own group; a NULL order value loses to
+    // any real one; a group with no real order value keeps every row.
     val df = Seq(
       (Option("a"), Option(2), "r1"), (Option("a"), Option(1), "r2"),
       (None: Option[String], Option(5), "r3"), (None: Option[String], Option(7), "r4"),
-      (Option("b"), None: Option[Int], "r5"))
+      (Option("b"), None: Option[Int], "r5"),
+      (Option("c"), None: Option[Int], "r6"), (Option("c"), Option(9), "r7"),
+      (Option("c"), None: Option[Int], "r8"))
       .toDF("k", "ord", "v")
-    for (impl <- Seq("min_join", "min_by")) {
-      val got = DedupOp(df, Config.of("keys" -> Seq("k"), "keep" -> "first",
-        "order_by" -> Seq("ord"), "impl" -> impl))
+    val got = DedupOp(df, Config.of("keys" -> Seq("k"), "keep" -> "first",
+      "order_by" -> Seq("ord")))
+      .select("v").as[String].collect().toSet
+    assert(got == Set("r2", "r3", "r5", "r7"))
+    // multi-column order: a NULL field loses there too, first and last
+    // alike (a struct minimum would rank {1, NULL} first and keep m1)
+    val multi = Seq(
+      ("a", Option(1), None: Option[Int], "m1"), ("a", Option(1), Option(5), "m2"),
+      ("b", None: Option[Int], None: Option[Int], "m3"), ("b", None: Option[Int], Option(4), "m4"),
+      ("b", None: Option[Int], None: Option[Int], "m5"),
+      ("c", None: Option[Int], None: Option[Int], "m6"), ("c", None: Option[Int], None: Option[Int], "m7"))
+      .toDF("k", "o1", "o2", "v")
+    for (keep <- Seq("first", "last")) {
+      val kept = DedupOp(multi, Config.of("keys" -> Seq("k"), "keep" -> keep,
+        "order_by" -> Seq("o1", "o2")))
         .select("v").as[String].collect().toSet
-      assert(got == Set("r2", "r3", "r5"), s"impl=$impl")
+      assert(kept == Set("m2", "m4", "m6", "m7"), s"keep=$keep")
     }
   }
 

@@ -14,14 +14,17 @@ import org.apache.spark.sql.functions._
   * higher-order functions (`filter`, `transform`, `aggregate`) are
   * `CodegenFallback`, interpreted per element and never merged as
   * common subexpressions, so an array used twice is computed twice
-  * unless it is [[bind]]-ed. All heuristics are deterministic and
-  * SQL-expressible, so results are oracle-checkable cross-engine.
+  * unless it is [[bind]]-ed. The tokenizer ([[tokens]] and the token
+  * counts) uses none: it is regex extraction and counting, which
+  * compile. All heuristics are deterministic and SQL-expressible, so
+  * results are oracle-checkable cross-engine.
   */
 object TextAnalysis {
 
-  /** Lowercased alphanumeric word tokens, empties removed. */
+  /** Word tokens: the maximal `[a-z0-9]` runs of Spark's `lower(text)`
+    * in order, i.e. the non-empty pieces of its split on `[^a-z0-9]+`. */
   def tokens(text: Column): Column =
-    filter(split(lower(text), "[^a-z0-9]+"), t => t =!= lit(""))
+    regexp_extract_all(lower(text), lit("[a-z0-9]+"), lit(0))
 
   /** Let-binding for Column expressions: evaluates `v` ONCE per row
     * and hands it to `body` as a lambda variable — an O(1) reference.
@@ -58,15 +61,16 @@ object TextAnalysis {
   private def structOf(names: Seq[String], cs: Seq[Column]): Column =
     struct(cs.zip(names).map { case (c, n) => c.as(n) }: _*)
 
+  /** `size(tokens(text))` as a long; NULL for NULL text. */
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
 
-  /** BPE-ish subword count: word pieces + digit runs + punctuation
-    * marks each count as one token — a cheap, deterministic proxy for
-    * an LLM tokenizer's token count (roughly GPT-2 pre-tokenization).
-    */
+  /** BPE-ish subword count (roughly GPT-2 pre-tokenization): one per
+    * maximal `[a-zA-Z0-9]` run, plus one per UTF-16 code unit of every
+    * other character that is not Java `\s` (`[ \t\n\x0B\f\r]`), so a
+    * supplementary character such as an emoji counts 2. */
   def bpeishTokenCount(text: Column): Column =
-    size(filter(split(text, """(?=[^a-zA-Z0-9])|(?<=[^a-zA-Z0-9])"""), t => t.rlike("\\S")))
-      .cast("long")
+    (regexp_count(text, lit("[a-zA-Z0-9]+|[^a-zA-Z0-9\\s]")) +
+      regexp_count(text, lit("[\\x{10000}-\\x{10FFFF}]"))).cast("long")
 
   private val stopwords = Seq(
     "the", "a", "an", "of", "and", "or", "to", "in", "is", "are", "was",
@@ -547,6 +551,13 @@ object TextAnalysis {
       .select(col(idCol), col("__m.class").as("predicted"),
         col("__m.log_post").as("log_post"))
 
+  /** [[c4QualityStruct]]'s line rule; a word is a `\S+` run. */
+  private def c4KeepsLine(l: Column): Column = {
+    val t = trim(l)
+    substring(t, -1, 1).isin(".", "!", "?", "\"") &&
+      (regexp_count(t, lit("\\S+")) >= 5) && !lower(t).contains("javascript")
+  }
+
   /** C4-style quality filtering (Raffel et al. 2019, §2.2) — the
     * line+page heuristics every web-scale corpus pass applies:
     *  - keep only lines that end in terminal punctuation (. ! ? "),
@@ -568,12 +579,7 @@ object TextAnalysis {
     */
   def c4QualityStruct(text: Column): Column = {
     val lines = split(text, "\n", -1)
-    val kept = filter(lines, l => {
-      val t = trim(l)
-      substring(t, -1, 1).isin(".", "!", "?", "\"") &&
-        (size(filter(split(t, "\\s+"), w => w =!= lit(""))) >= 5) &&
-        !lower(t).contains("javascript")
-    })
+    val kept = filter(lines, c4KeepsLine _)
     val hasLorem = lower(text).contains("lorem ipsum")
     val hasBrace = text.contains("{")
     struct(
@@ -596,17 +602,11 @@ object TextAnalysis {
     * the same `c4` struct.
     */
   def c4Quality(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val keptLambda = (l: Column) => {
-      val t = trim(l)
-      substring(t, -1, 1).isin(".", "!", "?", "\"") &&
-        (size(filter(split(t, "\\s+"), w => w =!= lit(""))) >= 5) &&
-        !lower(t).contains("javascript")
-    }
     val hasLorem = lower(col(textCol)).contains("lorem ipsum")
     val hasBrace = col(textCol).contains("{")
     Partitioning.fanOut(df)
       .withColumn("__lines", split(col(textCol), "\n", -1))
-      .withColumn("__kept", filter(col("__lines"), keptLambda))
+      .withColumn("__kept", filter(col("__lines"), c4KeepsLine _))
       .withColumn("c4", struct(
         size(col("__lines")).cast("long").as("n_lines"),
         size(col("__kept")).cast("long").as("n_kept"),

@@ -324,6 +324,28 @@ class OpsSpec extends SparkSuite {
       "q.n_tokens" -> false) ++ doubles.map(d => s"q.$d" -> true))
     assert(litOut.select(pinned.map(col): _*).head().toSeq == Seq(6L, 6L, "en", 6L,
       2.6666666666666665, 0.0, 0.6666666666666666, 1.0999999999999999))
+    // tokenizer edge cases: (text, tokens, token_count, bpeish_token_count).
+    // bpeish counts UTF-16 code units of non-alphanumeric, non-`\s`
+    // characters, so a supplementary character counts 2
+    val edges = Seq[(String, Seq[String], java.lang.Long, java.lang.Long)](
+      (null, null, null, null),
+      ("aéb c\uD83D\uDE00d", Seq("a", "b", "c", "d"), 4L, 7L),
+      ("\uD83D\uDE00\uD83D\uDE00", Nil, 0L, 4L),
+      ("\uD83C\uDDFA\uD83C\uDDF8 flag", Seq("flag"), 1L, 5L),
+      ("v\u000Bt", Seq("v", "t"), 2L, 2L), // VT is Java \s
+      ("nb\u00A0sp", Seq("nb", "sp"), 2L, 3L), // NBSP is not
+      ("\u2028ls", Seq("ls"), 1L, 2L),
+      ("\u212Aelvin", Seq("kelvin"), 1L, 2L), // Kelvin sign lowercases to k
+      ("\u0130stanbul", Seq("i", "stanbul"), 2L, 2L), // İ lowercases to i + U+0307
+      ("x\uFFFDy", Seq("x", "y"), 2L, 3L),
+      ("a\u0000b", Seq("a", "b"), 2L, 3L),
+      ("\u00E9\u0301 combining", Seq("combining"), 1L, 3L))
+    val edgeOut = TextAnalysis.profile(edges.map(_._1).toDF("text"))
+      .select(col("text"), TextAnalysis.tokens(col("text")), col("token_count"),
+        col("bpeish_token_count"))
+    assert(edgeOut.collect().toSeq.map(r =>
+      (r.getString(0), Option(r.getSeq[String](1)).map(_.toList).orNull, r.get(2), r.get(3))) ==
+      edges.map { case (t, toks, n, b) => (t, Option(toks).map(_.toList).orNull, n, b) })
   }
 
   test("ngram contamination: exact shared n-gram flags, short docs out of domain") {

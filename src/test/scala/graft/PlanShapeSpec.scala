@@ -239,20 +239,29 @@ class PlanShapeSpec extends SparkSuite {
           Config.of("text_field" -> "text", "tie_break" -> "doc_id"), Nil, 3)),
       Seq(SinkSpec("out", "parquet", Config.of("path" -> (dir + "_out")))))
     val plan = graft.compile.PipelineCompiler.compile(spark, spec).df.queryExecution.sparkPlan
-    val profile = plan.collect {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    val profileProjects = plan.collect {
       case p: ProjectExec if p.projectList.exists {
-        case a: org.apache.spark.sql.catalyst.expressions.Alias => a.name == "token_count"
+        case a: Alias => a.name == "token_count"
         case _ => false
-      } => p.projectList.mkString(", ")
+      } => p
     }
+    val profile = profileProjects.map(_.projectList.mkString(", "))
     assert(profile.size == 1, plan.toString)
     // token_count, lang_id and the quality struct: one tokenization each
-    val tokenizations = "split\\(lower\\(".r.findAllIn(profile.head).length
+    val tokenizations = "regexp_extract_all\\(lower\\(".r.findAllIn(profile.head).length
     assert(tokenizations <= 3, s"$tokenizations tokenizations in the profile projection:\n${profile.head}")
     // filters below the dedup window (the rank = 1 filter sits above it)
     val pushed = plan.collect {
       case f: FilterExec if f.find(_.isInstanceOf[WindowExec]).isEmpty => f.condition.toString }
-    assert(pushed.nonEmpty && pushed.forall(_.contains("split(lower(")), plan.toString)
+    assert(pushed.nonEmpty && pushed.forall(_.contains("regexp_extract_all(lower(")), plan.toString)
+    // the tokenizer and both counts compile: no interpreted lambda in
+    // the pushed filter or in the profile's count columns
+    val counts = profileProjects.head.projectList.collect {
+      case a: Alias if Set("token_count", "bpeish_token_count")(a.name) => a.toString }
+    assert(counts.size == 2, profile.head)
+    for (e <- pushed ++ counts)
+      assert(!e.contains("lambdafunction"), s"lambda in a pushed filter or a profile count:\n$e")
     // dedup_exact reads its input once and cuts each digest down per
     // task before the shuffle
     assert(plan.collect { case s: FileSourceScanExec => s }.size == 1, plan.toString)

@@ -18,9 +18,10 @@ import graft.transforms.Transforms
   * optimizes the *whole* pipeline globally — filters written as the
   * 5th transform still reach the parquet reader as pushed predicates.
   *
-  * Validation happens at compile time (unknown types, missing join
-  * targets, dangling depends_on) — the reference only discovers these
-  * mid-run (main.py:178; SURVEY §3.3 declared improvement).
+  * Validation happens at compile time (unknown types, config keys that
+  * name no declared source, dangling depends_on) — the reference only
+  * discovers these mid-run (main.py:178; SURVEY §3.3 declared
+  * improvement).
   */
 object PipelineCompiler {
 
@@ -43,28 +44,13 @@ object PipelineCompiler {
     if (sourceNames.distinct.size != sourceNames.size) errs += "duplicate source names"
     val tNames = spec.transforms.map(_.name).toSet
     spec.transforms.foreach { t =>
-      if (!Transforms.knownTypes.contains(t.transformType))
-        errs += s"transform '${t.name}': unknown type '${t.transformType}'"
-      if (t.transformType == "join" || t.transformType == "bloom_join") {
-        val right = t.config.str("right")
-        if (right.exists(r => !sourceNames.contains(r)))
-          errs += s"transform '${t.name}': ${t.transformType} right '${right.get}' is not a declared source"
-      }
-      // same cross-source contract for the other context-consuming ops
-      val ctxKey = t.transformType match {
-        case "ann_topk" => Some("queries")
-        case "contamination" | "contamination_embed" | "contamination_ngram"
-           | "dedup_index_check" | "bloom_check" | "robots_filter" => Some("against")
-        case "dsir_weights" => Some("target")
-        case "corpus_diff" => Some("old")
-        case "text_unigram_ppx" => Some("lm_source") // optional; checked when present
-        case "union" | "intersect" | "except" => None // validated by the ops (lists)
-        case _ => None
-      }
-      ctxKey.foreach { key =>
-        val ref = t.config.str(key)
-        if (ref.exists(r => !sourceNames.contains(r)))
-          errs += s"transform '${t.name}': ${t.transformType} $key '${ref.get}' is not a declared source"
+      Transforms.byName.get(t.transformType) match {
+        case None => errs += s"transform '${t.name}': unknown type '${t.transformType}'"
+        case Some(op) =>
+          for (key <- op.sources) try {
+            for (name <- t.config.strList(key) if !sourceNames.contains(name))
+              errs += Transforms.undeclaredSource(t, key, name)
+          } catch { case e: GraftAnalysisException => errs += s"transform '${t.name}': ${e.getMessage}" }
       }
       // The reference persists depends_on but never validates or uses
       // it (main.py:429,446-447). We validate; execution remains the

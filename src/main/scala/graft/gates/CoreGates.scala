@@ -184,45 +184,36 @@ object CoreGates {
 
     // ---- join (reference main.py:251-263 + SURVEY §2.4 absent kinds) ----
     Gate("q_join_inner", (s, d) =>
-      JoinOp(t(s, d, "orders"), Config.of(
-        "right" -> "customer", "left_key" -> "o_custkey", "right_key" -> "c_custkey",
-        "broadcast" -> true),
-        Map("customer" -> t(s, d, "customer"))),
+      JoinOp(t(s, d, "orders"), t(s, d, "customer"), Config.of(
+        "left_key" -> "o_custkey", "right_key" -> "c_custkey", "broadcast" -> true)),
       """
       SELECT o.*, c.c_custkey AS r_c_custkey, c.c_name AS r_c_name,
              c.c_nationkey AS r_c_nationkey, c.c_acctbal AS r_c_acctbal,
              c.c_mktsegment AS r_c_mktsegment
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey"""),
     Gate("q_join_left", (s, d) =>
-      JoinOp(t(s, d, "customer"), Config.of(
-        "right" -> "nation", "left_key" -> "c_nationkey", "right_key" -> "n_nationkey",
-        "how" -> "left", "broadcast" -> true),
-        Map("nation" -> t(s, d, "nation"))),
+      JoinOp(t(s, d, "customer"), t(s, d, "nation"), Config.of(
+        "left_key" -> "c_nationkey", "right_key" -> "n_nationkey",
+        "how" -> "left", "broadcast" -> true)),
       """
       SELECT c.*, n.n_nationkey AS r_n_nationkey, n.n_name AS r_n_name,
              n.n_regionkey AS r_n_regionkey
       FROM customer c LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey"""),
     Gate("q_join_semi", (s, d) =>
-      JoinOp(t(s, d, "customer"), Config.of(
-        "right" -> "orders", "left_key" -> "c_custkey", "right_key" -> "o_custkey",
-        "how" -> "left_semi"),
-        Map("orders" -> t(s, d, "orders"))),
+      JoinOp(t(s, d, "customer"), t(s, d, "orders"), Config.of(
+        "left_key" -> "c_custkey", "right_key" -> "o_custkey", "how" -> "left_semi")),
       "SELECT * FROM customer c WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)"),
     Gate("q_join_anti", (s, d) =>
-      JoinOp(t(s, d, "customer"), Config.of(
-        "right" -> "orders", "left_key" -> "c_custkey", "right_key" -> "o_custkey",
-        "how" -> "left_anti"),
-        Map("orders" -> t(s, d, "orders"))),
+      JoinOp(t(s, d, "customer"), t(s, d, "orders"), Config.of(
+        "left_key" -> "c_custkey", "right_key" -> "o_custkey", "how" -> "left_anti")),
       "SELECT * FROM customer c WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)"),
 
     // salted variant of q_join_inner: identical result set (same
     // oracle), skew-proof plan — the correctness proof that salting
     // does not change join semantics
     Gate("q_join_salted", (s, d) =>
-      JoinOp(t(s, d, "orders"), Config.of(
-        "right" -> "customer", "left_key" -> "o_custkey", "right_key" -> "c_custkey",
-        "salt" -> 8),
-        Map("customer" -> t(s, d, "customer"))),
+      JoinOp(t(s, d, "orders"), t(s, d, "customer"), Config.of(
+        "left_key" -> "o_custkey", "right_key" -> "c_custkey", "salt" -> 8)),
       """
       SELECT o.*, c.c_custkey AS r_c_custkey, c.c_name AS r_c_name,
              c.c_nationkey AS r_c_nationkey, c.c_acctbal AS r_c_acctbal,
@@ -237,9 +228,8 @@ object CoreGates {
       val pc = FilterOp(t(s, d, "orders"),
         Config.of("field" -> "o_orderstatus", "op" -> "eq", "value" -> "P"))
         .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_p"))
-      JoinOp(fc, Config.of(
-        "right" -> "pc", "left_key" -> "o_custkey", "right_key" -> "o_custkey",
-        "how" -> "full"), Map("pc" -> pc))
+      JoinOp(fc, pc, Config.of(
+        "left_key" -> "o_custkey", "right_key" -> "o_custkey", "how" -> "full"))
     },
       """
       SELECT f.o_custkey, f.n_f, p.o_custkey AS r_o_custkey, p.n_p AS r_n_p
@@ -249,9 +239,8 @@ object CoreGates {
     Gate("q_join_right", (s, d) =>
       JoinOp(FilterOp(t(s, d, "orders"),
         Config.of("field" -> "o_orderstatus", "op" -> "eq", "value" -> "P")),
-        Config.of("right" -> "customer", "left_key" -> "o_custkey",
-          "right_key" -> "c_custkey", "how" -> "right"),
-        Map("customer" -> t(s, d, "customer"))),
+        t(s, d, "customer"),
+        Config.of("left_key" -> "o_custkey", "right_key" -> "c_custkey", "how" -> "right")),
       """
       SELECT o.*, c.c_custkey AS r_c_custkey, c.c_name AS r_c_name,
              c.c_nationkey AS r_c_nationkey, c.c_acctbal AS r_c_acctbal,
@@ -304,7 +293,8 @@ object CoreGates {
       val supp = t(s, d, "supplier").select(
         col("s_suppkey").as("id"), col("s_name").as("name"),
         col("s_acctbal").as("acctbal"), col("s_nationkey"))
-      UnionOp(cust, Config.of("inputs" -> Seq("supp")), Map("supp" -> supp))
+      Transforms(cust, TransformSpec("u", "union", Config.of("inputs" -> Seq("supp"))),
+        Map("supp" -> supp))
     },
       """
       SELECT c_custkey AS id, c_name AS name, c_acctbal AS acctbal,
@@ -530,7 +520,8 @@ object CoreGates {
         Config.of("field" -> "c_mktsegment", "op" -> "eq", "value" -> "BUILDING"))
         .select(col("c_custkey").as("key"))
       val withOrders = t(s, d, "orders").select(col("o_custkey").as("key"))
-      SetOp(building, Config.of("other" -> "o"), Map("o" -> withOrders), "intersect")
+      Transforms(building, TransformSpec("i", "intersect", Config.of("other" -> "o")),
+        Map("o" -> withOrders))
     },
       """
       SELECT c_custkey AS key FROM customer WHERE c_mktsegment = 'BUILDING'
@@ -541,7 +532,8 @@ object CoreGates {
       val f = FilterOp(t(s, d, "orders"),
         Config.of("field" -> "o_orderstatus", "op" -> "eq", "value" -> "F"))
         .select(col("o_custkey").as("key"))
-      SetOp(all, Config.of("other" -> "f"), Map("f" -> f), "except")
+      Transforms(all, TransformSpec("e", "except", Config.of("other" -> "f")),
+        Map("f" -> f))
     },
       """
       SELECT o_custkey AS key FROM orders
@@ -554,11 +546,9 @@ object CoreGates {
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
       val right = t(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
-      JoinOp(li, Config.of(
-        "right" -> "li2",
+      JoinOp(li, right, Config.of(
         "left_keys" -> Seq("l_orderkey", "l_linenumber"),
-        "right_keys" -> Seq("l_orderkey", "l_linenumber")),
-        Map("li2" -> right))
+        "right_keys" -> Seq("l_orderkey", "l_linenumber")))
     },
       """
       SELECT a.l_orderkey, a.l_linenumber, a.l_quantity,

@@ -41,25 +41,33 @@ object SinkWriter {
     * None for every other sink. */
   def write(df: DataFrame, s: SinkSpec,
       observe: DataFrame => DataFrame = identity[DataFrame]): Option[Long] =
-    if (s.sinkType == "stdout") {
-      val rows = observe(df).limit(s.config.int("limit").getOrElse(20)).toJSON.collect()
-      rows.foreach(println)
-      Some(rows.length.toLong)
-    } else {
-      action(df, s, observe)
-      None
-    }
+    writers.getOrElse(s.sinkType, throw new GraftAnalysisException(
+      s"sink '${s.name}': unknown sink type '${s.sinkType}'"))(df, s, observe)
 
-  private def action(df: DataFrame, s: SinkSpec, observe: DataFrame => DataFrame): Unit = s.sinkType match {
-    case "json" =>
-      writer(observe(df), s).json(s.config.reqStr("path"))
+  private type Writer = (DataFrame, SinkSpec, DataFrame => DataFrame) => Option[Long]
 
-    case "csv" =>
+  /** The writer of a sink whose action takes every row it reads. */
+  private def consumes(act: (DataFrame, SinkSpec, DataFrame => DataFrame) => Unit): Writer =
+    (df, s, observe) => { act(df, s, observe); None }
+
+  private def stdout(df: DataFrame, s: SinkSpec, observe: DataFrame => DataFrame): Option[Long] = {
+    val rows = observe(df).limit(s.config.int("limit").getOrElse(20)).toJSON.collect()
+    rows.foreach(println)
+    Some(rows.length.toLong)
+  }
+
+  /** Sink type → its writer: the one list of sink types. */
+  private val writers: Map[String, Writer] = Map(
+    "stdout" -> stdout _,
+    "json" -> consumes((df, s, observe) =>
+      writer(observe(df), s).json(s.config.reqStr("path"))),
+
+    "csv" -> consumes((df, s, observe) =>
       writer(observe(df), s)
         .option("header", s.config.bool("header").getOrElse(true))
-        .csv(s.config.reqStr("path"))
+        .csv(s.config.reqStr("path"))),
 
-    case "parquet" =>
+    "parquet" -> consumes { (df, s, observe) =>
       val cluster = s.config.strList("cluster_by")
       val buckets = s.config.strList("bucket_by")
       if (buckets.nonEmpty) {
@@ -104,6 +112,7 @@ object SinkWriter {
         val parts = s.config.strList("partition_by")
         (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(s.config.reqStr("path"))
       }
+    },
 
     // WARC / tar archive sinks: shard the corpus into real .warc.gz /
     // .tar.gz files (the Common Crawl / per-document-file layouts the
@@ -112,25 +121,8 @@ object SinkWriter {
     // foreachPartition. `n_files` sets the shard count (the
     // parallelism unit of any later scan); id/text field names
     // configurable.
-    case "warc" | "tar" =>
-      val dir = new java.io.File(s.config.reqStr("path"))
-      dir.mkdirs()
-      val idF = s.config.str("id_field").getOrElse("doc_id")
-      val textF = s.config.str("text_field").getOrElse("text")
-      val nFiles = s.config.int("n_files").getOrElse(32)
-      val (packed, ext) =
-        if (s.sinkType == "warc")
-          (graft.ops.Warc.packDocsWarcGz(observe(df), idF,
-            s.config.str("source_field").getOrElse(idF), textF, nFiles), "warc.gz")
-        else (graft.ops.Tar.packDocsTarGz(observe(df), idF, textF, nFiles), "tar.gz")
-      val base = dir.getAbsolutePath
-      packed.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        rows.foreach { r =>
-          val out = new java.io.FileOutputStream(
-            new java.io.File(base, f"part-${r.getLong(0)}%05d.$ext"))
-          try out.write(r.getAs[Array[Byte]](1)) finally out.close()
-        }
-      }
+    "warc" -> consumes(archive(warc = true)),
+    "tar" -> consumes(archive(warc = false)),
 
     // Avro object container sink — the write half of the avro wire
     // round trip: one shard per partition (`n_files` repartitions to
@@ -138,12 +130,13 @@ object SinkWriter {
     // deterministic sync markers, codec null/deflate/snappy/zstandard
     // (default deflate). The matching `avro` source reads the shards
     // back; so does the Apache reference library (AvroSpec pin).
-    case "avro" =>
+    "avro" -> consumes { (df, s, observe) =>
       val nFiles = s.config.int("n_files").getOrElse(0)
       val shaped = if (nFiles > 0) observe(df).repartition(nFiles) else observe(df)
       graft.ops.Avro.writeShards(shaped, s.config.reqStr("path"),
         codec = s.config.str("codec").getOrElse("deflate"),
         recordName = s.config.str("record_name").getOrElse("row"))
+    },
 
     // TFRecord sink — each row becomes one tf.train.Example (string →
     // BytesList, integral → Int64List, float/double → FloatList,
@@ -151,27 +144,30 @@ object SinkWriter {
     // masked-CRC-32C record layout, one shard per partition
     // (`n_files` repartitions to set the shard count). Unsupported
     // column types are an analysis error BEFORE the job launches.
-    case "tfrecord" =>
+    "tfrecord" -> consumes { (df, s, observe) =>
       val nFiles = s.config.int("n_files").getOrElse(0)
       val shaped = if (nFiles > 0) observe(df).repartition(nFiles) else observe(df)
       graft.ops.TfRecord.writeShards(shaped, s.config.reqStr("path"))
+    },
 
     // Raw text sink: exactly one string column, one line per row (the
     // inverse of the `text` source's line mode). More columns is an
     // analysis error — concatenate upstream; silently joining columns
     // would invent a format.
-    case "text" =>
+    "text" -> consumes { (df, s, observe) =>
       if (df.schema.fields.length != 1 ||
           df.schema.fields(0).dataType != org.apache.spark.sql.types.StringType)
         throw new GraftAnalysisException(
           s"sink '${s.name}': text sink needs exactly one string column, " +
             s"got ${df.schema.simpleString}")
       writer(observe(df), s).text(s.config.reqStr("path"))
+    },
 
-    case "orc" =>
+    "orc" -> consumes { (df, s, observe) =>
       val w = writer(observe(df), s)
       val parts = s.config.strList("partition_by")
       (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).orc(s.config.reqStr("path"))
+    },
 
     // Reference sqlite sink (main.py:326-341) over the pure-Scala
     // file codec — no JDBC driver needed. The reference stores every
@@ -181,19 +177,18 @@ object SinkWriter {
     // (the reference's CREATE IF NOT EXISTS + INSERT). Collects to the
     // driver: a .db is a single-file, single-writer surface by nature
     // — documented side-input/export path, parquet is the bulk sink.
-    case "sqlite" =>
+    "sqlite" -> consumes((df, s, observe) =>
       graft.catalog.SqliteData.write(
         s.config.reqStr("database"),
         s.config.str("table").getOrElse("output"),
         observe(df),
-        overwrite = s.config.str("mode").contains("overwrite"))
-      ()
+        overwrite = s.config.str("mode").contains("overwrite"))),
 
     // Build-and-save a near-dup signature index from the stream — an
     // index IS a sink (the ingest-time half of the standing-corpus
     // dedup lifecycle; see graft.ops.Dedup.NearDupIndex). Checks
     // against it run through the `dedup_index_check` transform.
-    case "neardup_index" =>
+    "neardup_index" -> consumes((df, s, observe) =>
       graft.ops.Dedup.NearDupIndex.save(
         graft.ops.Dedup.NearDupIndex.build(observe(df),
           s.config.reqStr("id_field"),
@@ -202,7 +197,7 @@ object SinkWriter {
           k = s.config.int("k").getOrElse(3),
           bands = s.config.int("bands").getOrElse(16),
           seed = s.config.int("seed").getOrElse(42).toLong),
-        s.config.reqStr("path"))
+        s.config.reqStr("path"))),
 
     // Delta Lake APPEND sink (round 17): transactional table output —
     // plain parquet data files + an atomic _delta_log commit carrying
@@ -211,7 +206,7 @@ object SinkWriter {
     // `partition_by` lays out Hive-style partition dirs whose values
     // live in the log. The matching `delta` source (and any Delta
     // reader) reads it back, stats feeding their data skipping.
-    case "delta" =>
+    "delta" -> consumes { (df, s, observe) =>
       val path = s.config.reqStr("path")
       val pb = s.config.strList("partition_by")
       val txn = txnOf(s, modeMustBe = "append")
@@ -237,30 +232,50 @@ object SinkWriter {
           s"sink '${s.name}': unknown delta mode '$other' " +
             "(append, overwrite, overwrite_dynamic, merge)")
       }
-      ()
+    },
 
     // Iceberg APPEND sink (round 17): transactional table output via
     // [[graft.ops.IcebergWrite]]; round 18 adds identity
     // `partition_by` (manifest tuple pruning engages on the written
     // table) and `txn_app`/`txn_version` epoch idempotence.
-    case "iceberg" =>
+    "iceberg" -> consumes((df, s, observe) =>
       graft.ops.IcebergWrite.append(df.sparkSession, df, s.config.reqStr("path"),
         s.config.strList("cluster_by"),
         numFiles = s.config.int("num_files").getOrElse(0),
         partitionBy = s.config.strList("partition_by"),
         txn = txnOf(s, modeMustBe = "append"),
         mergeSchema = s.config.bool("merge_schema").getOrElse(false),
-        observe = observe)
-      ()
+        observe = observe)),
 
-    case "jdbc" =>
+    "jdbc" -> consumes((df, s, observe) =>
       observe(df).write.format("jdbc").option("url", s.config.reqStr("url"))
         .option("dbtable", s.config.str("table").getOrElse("output"))
         .mode(s.config.str("mode").getOrElse("append"))
-        .save()
+        .save())
+  )
 
-    case other =>
-      throw new GraftAnalysisException(s"sink '${s.name}': unknown sink type '$other'")
+  /** Known sink types, for spec validation. */
+  val knownTypes: Set[String] = writers.keySet
+
+  private def archive(warc: Boolean)(df: DataFrame, s: SinkSpec, observe: DataFrame => DataFrame): Unit = {
+    val dir = new java.io.File(s.config.reqStr("path"))
+    dir.mkdirs()
+    val idF = s.config.str("id_field").getOrElse("doc_id")
+    val textF = s.config.str("text_field").getOrElse("text")
+    val nFiles = s.config.int("n_files").getOrElse(32)
+    val (packed, ext) =
+      if (warc)
+        (graft.ops.Warc.packDocsWarcGz(observe(df), idF,
+          s.config.str("source_field").getOrElse(idF), textF, nFiles), "warc.gz")
+      else (graft.ops.Tar.packDocsTarGz(observe(df), idF, textF, nFiles), "tar.gz")
+    val base = dir.getAbsolutePath
+    packed.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+      rows.foreach { r =>
+        val out = new java.io.FileOutputStream(
+          new java.io.File(base, f"part-${r.getLong(0)}%05d.$ext"))
+        try out.write(r.getAs[Array[Byte]](1)) finally out.close()
+      }
+    }
   }
 
   private def writer(df: DataFrame, s: SinkSpec) = {
@@ -272,7 +287,4 @@ object SinkWriter {
     // takes it; format defaults apply when unset
     s.config.str("compression").map(c => w.option("compression", c)).getOrElse(w)
   }
-
-  val knownTypes: Set[String] = Set(
-    "stdout", "json", "csv", "parquet", "orc", "text", "jdbc", "sqlite", "neardup_index", "warc", "tar", "avro", "tfrecord", "delta", "iceberg")
 }

@@ -9,10 +9,18 @@ import org.json4s._
 import graft.GraftAnalysisException
 import graft.spec.{Config, TransformSpec}
 
-/** The transform operator set: each op is `(DataFrame, Config, ctx) =>
-  * DataFrame`, purely declarative — it extends the Catalyst logical
-  * plan and never triggers an action, so pushdown / pruning / codegen
-  * apply across the whole chain.
+/** One transform type: the spec `name` it answers to, the config keys
+  * whose values (a string or a list) name declared sources, and
+  * `build`, which extends the plan of the stream it is given.
+  * `PipelineCompiler.validate` checks the `sources` keys before Spark
+  * starts. */
+final case class Op(name: String, sources: String*)(
+    val build: (DataFrame, TransformSpec, Transforms.Ctx) => DataFrame)
+
+/** The transform operator set: one registry, [[Transforms.ops]], with
+  * one [[Op]] per spec type. Every op is purely declarative — it
+  * extends the Catalyst logical plan and never triggers an action, so
+  * pushdown / pruning / codegen apply across the whole chain.
   *
   * Covers the reference's 8 transforms (main.py:159-291) with the
   * declared semantics of SURVEY §2.5, plus the relational surface the
@@ -24,36 +32,70 @@ object Transforms {
 
   type Ctx = Map[String, DataFrame]
 
-  def apply(df: DataFrame, t: TransformSpec, ctx: Ctx): DataFrame = t.transformType match {
-    case "filter"      => FilterOp(df, t.config)
-    case "map"         => MapOp(df, t.config)
-    case "aggregate"   => AggregateOp(df, t.config)
-    case "join"        => JoinOp(df, t.config, ctx)
-    case "sort"        => SortOp(df, t.config)
-    case "deduplicate" => DedupOp(df, t.config)
-    case "select"      => SelectOp(df, t.config)
-    case "rename"      => RenameOp(df, t.config)
-    case "limit"       => LimitOp(df, t.config)
-    case "union"       => UnionOp(df, t.config, ctx)
-    case "intersect"   => SetOp(df, t.config, ctx, "intersect")
-    case "except"      => SetOp(df, t.config, ctx, "except")
-    case "distinct"    => df.distinct()
-    case "window"      => WindowOp(df, t.config)
-    case "sql"         => SqlOp(df, t.config, ctx)
-    case "sample"      => SampleOp(df, t.config)
-    case "stratified_sample" => StratifiedSampleOp(df, t.config)
-    case "token_budget" => TokenBudgetOp(df, t.config)
-    case "split"       => SplitOp(df, t.config)
-    // event-time watermark (streaming pipelines): bounds state for
-    // downstream windowed aggregates; a no-op semantic on batch data
-    case "pivot"       => PivotOp(df, t.config)
-    case "unpivot"     => UnpivotOp(df, t.config)
-    case "explode"     => ExplodeOp(df, t.config)
+  def apply(df: DataFrame, t: TransformSpec, ctx: Ctx): DataFrame =
+    byName.getOrElse(t.transformType, throw new GraftAnalysisException(
+      s"transform '${t.name}': unknown transform type '${t.transformType}'")).build(df, t, ctx)
+
+  /** The declared source that required config key `key` of `t` names.
+    * `validate` makes the same check before Spark starts; an op built
+    * without it still fails here, with the same message. */
+  def source(ctx: Ctx, t: TransformSpec, key: String): DataFrame =
+    named(ctx, t, key, t.config.reqStr(key))
+
+  /** The declared source `name`, given by config key `key` of `t`. */
+  private def named(ctx: Ctx, t: TransformSpec, key: String, name: String): DataFrame =
+    ctx.getOrElse(name, throw new GraftAnalysisException(undeclaredSource(t, key, name)))
+
+  /** The error for a config key of `t` that names no declared source,
+    * reported alike by `PipelineCompiler.validate` and at run time. */
+  def undeclaredSource(t: TransformSpec, key: String, name: String): String =
+    s"transform '${t.name}': ${t.transformType} $key '$name' is not a declared source"
+
+  val ops: Seq[Op] = Seq(
+    Op("filter")((df, t, _) => FilterOp(df, t.config)),
+    Op("map")((df, t, _) => MapOp(df, t.config)),
+    Op("aggregate")((df, t, _) => AggregateOp(df, t.config)),
+    Op("join", "right")((df, t, ctx) => JoinOp(df, source(ctx, t, "right"), t.config)),
+    Op("sort")((df, t, _) => SortOp(df, t.config)),
+    Op("deduplicate")((df, t, _) => DedupOp(df, t.config)),
+    Op("select")((df, t, _) => SelectOp(df, t.config)),
+    Op("rename")((df, t, _) => RenameOp(df, t.config)),
+    Op("limit")((df, t, _) => LimitOp(df, t.config)),
+    // explicit union with named sources, by column name with null-fill
+    // for missing columns: the declared semantics of the reference's
+    // implicit concat of heterogeneous sources (main.py:437-443;
+    // SURVEY §2.5 item 8). Plan-level only, no shuffle.
+    Op("union", "inputs") { (df, t, ctx) =>
+      val others = t.config.strList("inputs").map(named(ctx, t, "inputs", _))
+      if (others.isEmpty) throw new GraftAnalysisException("union: needs non-empty 'inputs'")
+      others.foldLeft(df)(_.unionByName(_, allowMissingColumns = true))
+    },
+    // INTERSECT / EXCEPT against a named source (ABSENT in the
+    // reference, SURVEY §2.4): set semantics like the SQL operators;
+    // `all: true` keeps duplicates (INTERSECT ALL / EXCEPT ALL)
+    Op("intersect", "other") { (df, t, ctx) =>
+      val other = source(ctx, t, "other")
+      if (t.config.bool("all").getOrElse(false)) df.intersectAll(other) else df.intersect(other)
+    },
+    Op("except", "other") { (df, t, ctx) =>
+      val other = source(ctx, t, "other")
+      if (t.config.bool("all").getOrElse(false)) df.exceptAll(other) else df.except(other)
+    },
+    Op("distinct")((df, _, _) => df.distinct()),
+    Op("window")((df, t, _) => WindowOp(df, t.config)),
+    Op("sql")((df, t, ctx) => SqlOp(df, t.config, ctx)),
+    Op("sample")((df, t, _) => SampleOp(df, t.config)),
+    Op("stratified_sample")((df, t, _) => StratifiedSampleOp(df, t.config)),
+    Op("token_budget")((df, t, _) => TokenBudgetOp(df, t.config)),
+    Op("split")((df, t, _) => SplitOp(df, t.config)),
+    Op("pivot")((df, t, _) => PivotOp(df, t.config)),
+    Op("unpivot")((df, t, _) => UnpivotOp(df, t.config)),
+    Op("explode")((df, t, _) => ExplodeOp(df, t.config)),
     // physical-layout controls: repartition shuffles to n partitions /
     // by key columns (co-location before N downstream joins, or
     // sizing output files); coalesce merges partitions without a
     // shuffle (small-file compaction on write)
-    case "repartition" =>
+    Op("repartition") { (df, t, _) =>
       val cols = t.config.strList("by")
       (t.config.int("n"), cols) match {
         case (Some(n), Nil)  => df.repartition(n)
@@ -61,14 +103,17 @@ object Transforms {
         case (None, cs) if cs.nonEmpty => df.repartition(cs.map(Transforms.c): _*)
         case _ => throw new GraftAnalysisException("repartition: needs 'n' and/or 'by'")
       }
-    case "coalesce" =>
+    },
+    Op("coalesce")((df, t, _) =>
       df.coalesce(t.config.int("n").getOrElse(
-        throw new GraftAnalysisException("coalesce: needs 'n'")))
-    case "watermark" =>
-      df.withWatermark(t.config.reqStr("field"), t.config.str("delay").getOrElse("10 minutes"))
+        throw new GraftAnalysisException("coalesce: needs 'n'")))),
+    // event-time watermark (streaming pipelines): bounds state for
+    // downstream windowed aggregates; a no-op semantic on batch data
+    Op("watermark")((df, t, _) =>
+      df.withWatermark(t.config.reqStr("field"), t.config.str("delay").getOrElse("10 minutes"))),
     // tumbling/sliding event-time window aggregation: adds the window
     // struct as group key; works in both batch and streaming mode
-    case "window_agg" =>
+    Op("window_agg") { (df, t, _) =>
       val cfg = t.config
       val ts = cfg.reqStr("time_field")
       val win = cfg.str("slide") match {
@@ -80,25 +125,26 @@ object Transforms {
       withWin.agg(aggs.head, aggs.tail: _*)
         .select(col("window.start").as("window_start"), col("window.end").as("window_end"),
           col("*")).drop("window")
+    },
     // §2.6 extension ops, addressable from pipeline specs / the CLI
-    case "dedup_exact" =>
+    Op("dedup_exact")((df, t, _) =>
       graft.ops.Dedup.exactByFingerprint(df,
-        t.config.str("text_field").getOrElse("text"), t.config.reqStr("tie_break"))
-    case "dedup_minhash" =>
+        t.config.str("text_field").getOrElse("text"), t.config.reqStr("tie_break"))),
+    Op("dedup_minhash")((df, t, _) =>
       graft.ops.Dedup.minhashNearDups(df,
         t.config.reqStr("id_field"), t.config.str("text_field").getOrElse("text"),
         t.config.double("threshold").getOrElse(0.7),
-        maxBucketSize = t.config.int("max_bucket").getOrElse(0))
+        maxBucketSize = t.config.int("max_bucket").getOrElse(0))),
     // linear-output text dedup: one (id, group_id) row per document —
     // the near-dup closure without materializing member pairs
-    case "dedup_groups" =>
+    Op("dedup_groups")((df, t, _) =>
       graft.ops.Dedup.minhashDedupGroups(df,
         t.config.reqStr("id_field"), t.config.str("text_field").getOrElse("text"),
         t.config.double("threshold").getOrElse(0.7),
-        maxBucketSize = t.config.int("max_bucket").getOrElse(0))
-    case "text_profile" =>
-      graft.ops.TextAnalysis.profile(df, t.config.str("text_field").getOrElse("text"))
-    case "dedup_simhash" =>
+        maxBucketSize = t.config.int("max_bucket").getOrElse(0))),
+    Op("text_profile")((df, t, _) =>
+      graft.ops.TextAnalysis.profile(df, t.config.str("text_field").getOrElse("text"))),
+    Op("dedup_simhash") { (df, t, _) =>
       val cfg = t.config
       graft.ops.Dedup.simhashNearDups(
         graft.ops.Dedup.simhash(df, cfg.reqStr("id_field"),
@@ -106,7 +152,8 @@ object Transforms {
         cfg.reqStr("id_field"),
         maxDist = cfg.int("max_dist").getOrElse(3),
         maxBucketSize = cfg.int("max_bucket").getOrElse(0))
-    case "dedup_embed" =>
+    },
+    Op("dedup_embed") { (df, t, _) =>
       val cfg = t.config
       graft.ops.Dedup.embeddingNearDups(df,
         cfg.reqStr("id_field"), cfg.str("vec_field").getOrElse("embedding"),
@@ -115,9 +162,10 @@ object Transforms {
         bruteForce = cfg.bool("brute_force").getOrElse(false),
         dim = cfg.int("dim").getOrElse(0),
         tables = cfg.int("tables").getOrElse(1))
+    },
     // linear-output embedding dedup: (id, group_id) closure over the
     // sign-LSH near-dup relation, no member-pair materialization
-    case "embed_neardup_groups" =>
+    Op("embed_neardup_groups") { (df, t, _) =>
       val cfg = t.config
       graft.ops.Dedup.embeddingDedupGroups(df,
         cfg.reqStr("id_field"), cfg.str("vec_field").getOrElse("embedding"),
@@ -126,9 +174,10 @@ object Transforms {
         seed = cfg.long("seed").getOrElse(42L),
         dim = cfg.int("dim").getOrElse(0),
         tables = cfg.int("tables").getOrElse(1))
+    },
     // SemDeDup (Abbas et al. 2023): semantic dedup by embedding
     // clustering — per-row (cell, centroid_cos, kept) verdicts
-    case "semdedup" =>
+    Op("semdedup") { (df, t, _) =>
       val cfg = t.config
       graft.ops.Dedup.semDedup(df,
         cfg.reqStr("id_field"), cfg.str("vec_field").getOrElse("embedding"),
@@ -137,24 +186,22 @@ object Transforms {
         eps = cfg.double("eps").getOrElse(0.95),
         seed = cfg.long("seed").getOrElse(42L),
         centroidMode = cfg.str("centroids").getOrElse("kmeans"))
+    },
     // cross-corpus near-dup (train/test contamination): current stream
     // is the EVAL side, `against` names the train-side source (same
     // context mechanism as join/ann_topk)
-    case "contamination" =>
+    Op("contamination", "against") { (df, t, ctx) =>
       val cfg = t.config
-      val rName = cfg.reqStr("against")
-      val right = ctx.getOrElse(rName,
-        throw new GraftAnalysisException(s"contamination: unknown source '$rName'"))
+      val right = source(ctx, t, "against")
       graft.ops.Dedup.minhashContamination(df, right,
         cfg.reqStr("id_field"),
         cfg.str("right_id_field").getOrElse(cfg.reqStr("id_field")),
         cfg.str("text_field").getOrElse("text"),
         threshold = cfg.double("threshold").getOrElse(0.7))
-    case "contamination_embed" =>
+    },
+    Op("contamination_embed", "against") { (df, t, ctx) =>
       val cfg = t.config
-      val rName = cfg.reqStr("against")
-      val right = ctx.getOrElse(rName,
-        throw new GraftAnalysisException(s"contamination_embed: unknown source '$rName'"))
+      val right = source(ctx, t, "against")
       graft.ops.Dedup.embeddingContamination(df, right,
         cfg.reqStr("id_field"),
         cfg.str("right_id_field").getOrElse(cfg.reqStr("id_field")),
@@ -163,45 +210,47 @@ object Transforms {
         planes = cfg.int("planes").getOrElse(8),
         dim = cfg.int("dim").getOrElse(0),
         tables = cfg.int("tables").getOrElse(1))
+    },
     // exact n-gram decontamination (GPT-3 13-gram method): current
     // stream is the TRAIN side, `against` names the benchmark source
-    case "contamination_ngram" =>
+    Op("contamination_ngram", "against") { (df, t, ctx) =>
       val cfg = t.config
-      val rName = cfg.reqStr("against")
-      val right = ctx.getOrElse(rName,
-        throw new GraftAnalysisException(s"contamination_ngram: unknown source '$rName'"))
+      val right = source(ctx, t, "against")
       graft.ops.Dedup.ngramContamination(df, right,
         cfg.reqStr("id_field"), cfg.str("text_field").getOrElse("text"),
         n = cfg.int("n").getOrElse(13),
         broadcastTest = cfg.bool("broadcast").getOrElse(true))
-    case "text_repetition" =>
+    },
+    Op("text_repetition") { (df, t, _) =>
       val tf = t.config.str("text_field").getOrElse("text")
       df.withColumn("__rep", graft.ops.TextAnalysis.repetitionStruct(c(tf)))
         .select(col("*"), col("__rep.*")).drop("__rep")
-    case "text_top_ngram" =>
+    },
+    Op("text_top_ngram")((df, t, _) =>
       graft.ops.TextAnalysis.topNgramStats(df, t.config.reqStr("id_field"),
         t.config.str("text_field").getOrElse("text"),
-        n = t.config.int("n").getOrElse(2))
+        n = t.config.int("n").getOrElse(2))),
     // perplexity-proxy scoring; `lm_source` (optional) names the
     // corpus the unigram LM is fit on — default: the stream itself
-    case "text_unigram_ppx" =>
+    Op("text_unigram_ppx", "lm_source") { (df, t, ctx) =>
       val cfg = t.config
       val tf = cfg.str("text_field").getOrElse("text")
-      val lmDf = cfg.str("lm_source").map(n => ctx.getOrElse(n,
-        throw new GraftAnalysisException(s"text_unigram_ppx: unknown source '$n'"))).getOrElse(df)
+      val lmDf = if (cfg.has("lm_source")) source(ctx, t, "lm_source") else df
       graft.ops.TextAnalysis.unigramNll(df, cfg.reqStr("id_field"), tf,
         graft.ops.TextAnalysis.unigramLogProbs(lmDf, tf))
+    },
     // order-2 interpolated LM scoring; LM counts come from this frame
     // (self-scoring, the CCNet shape trains on a reference corpus —
     // point lm at another source when that lands in the spec schema)
-    case "text_bigram_ppx" =>
+    Op("text_bigram_ppx") { (df, t, _) =>
       val cfg = t.config
       graft.ops.TextAnalysis.bigramNll(df, cfg.reqStr("id_field"),
         cfg.str("text_field").getOrElse("text"),
         lambda = cfg.double("lambda").getOrElse(0.7))
+    },
     // closed-form NB classifier: full score matrix, or argmax rows
     // when predict=true
-    case "nb_classify" =>
+    Op("nb_classify") { (df, t, _) =>
       val cfg = t.config
       val scores = graft.ops.TextAnalysis.nbScores(df, cfg.reqStr("id_field"),
         cfg.reqStr("label_field"), cfg.str("text_field").getOrElse("text"),
@@ -209,9 +258,10 @@ object Transforms {
       if (cfg.bool("predict").getOrElse(false))
         graft.ops.TextAnalysis.nbPredict(scores, cfg.reqStr("id_field"))
       else scores
+    },
     // fastText-style closed-form linear classifier: fit on this input
     // (labels in label_field), emit scores or argmax predictions
-    case "linear_classify" =>
+    Op("linear_classify") { (df, t, _) =>
       val cfg = t.config
       val m = graft.ops.LinearClassifier.fit(df, cfg.reqStr("id_field"),
         cfg.reqStr("label_field"), cfg.str("text_field").getOrElse("text"),
@@ -220,14 +270,15 @@ object Transforms {
       if (cfg.bool("predict").getOrElse(false))
         m.predict(df, cfg.reqStr("id_field"), cfg.str("text_field").getOrElse("text"))
       else m.score(df, cfg.reqStr("id_field"), cfg.str("text_field").getOrElse("text"))
+    },
     // CMS-prefiltered exact heavy hitters (the Bloom sibling): keys
     // with true weight >= threshold, exact counts, no full-key shuffle
-    case "heavy_hitters" =>
-      graft.ops.CountMin.heavyHittersOp(df, t.config)
+    Op("heavy_hitters")((df, t, _) =>
+      graft.ops.CountMin.heavyHittersOp(df, t.config)),
     // trained language identifier: the linear_classify machinery over
     // char-n-gram + Unicode-script features (labels in label_field;
     // predict=true is the default — langid is used for its verdict)
-    case "langid_classify" =>
+    Op("langid_classify") { (df, t, _) =>
       val cfg = t.config
       val m = graft.ops.TextAnalysis.langIdFit(df, cfg.reqStr("id_field"),
         cfg.reqStr("label_field"), cfg.str("text_field").getOrElse("text"),
@@ -236,29 +287,30 @@ object Transforms {
       if (cfg.bool("predict").getOrElse(true))
         m.predict(df, cfg.reqStr("id_field"), cfg.str("text_field").getOrElse("text"))
       else m.score(df, cfg.reqStr("id_field"), cfg.str("text_field").getOrElse("text"))
+    },
     // order-3: BOS-padded uniform positions, λ₃/λ₂/λ₁ interpolation
-    case "text_trigram_ppx" =>
+    Op("text_trigram_ppx") { (df, t, _) =>
       val cfg = t.config
       graft.ops.TextAnalysis.trigramNll(df, cfg.reqStr("id_field"),
         cfg.str("text_field").getOrElse("text"),
         l3 = cfg.double("l3").getOrElse(0.5),
         l2 = cfg.double("l2").getOrElse(0.3),
         l1 = cfg.double("l1").getOrElse(0.2))
+    },
     // check the stream (a new ingest batch) against a PERSISTED
     // signature index; `against` names the corpus source whose text
     // the exact-Jaccard verify point-reads for candidates
-    case "dedup_index_check" =>
+    Op("dedup_index_check", "against") { (df, t, ctx) =>
       val cfg = t.config
-      val rName = cfg.reqStr("against")
-      val corpus = ctx.getOrElse(rName,
-        throw new GraftAnalysisException(s"dedup_index_check: unknown source '$rName'"))
+      val corpus = source(ctx, t, "against")
       val ix = graft.ops.Dedup.NearDupIndex.load(df.sparkSession, cfg.reqStr("index_path"))
       graft.ops.Dedup.NearDupIndex.check(ix, df,
         cfg.reqStr("id_field"), cfg.str("text_field").getOrElse("text"),
         corpus, cfg.str("right_id_field").getOrElse(cfg.reqStr("id_field")),
         cfg.str("right_text_field").getOrElse(cfg.str("text_field").getOrElse("text")),
         threshold = cfg.double("threshold").getOrElse(0.7))
-    case "pack_sequences" =>
+    },
+    Op("pack_sequences") { (df, t, _) =>
       val cfg = t.config
       val capacity = cfg.int("capacity").getOrElse(
         throw new GraftAnalysisException("pack_sequences: 'capacity' is required")).toLong
@@ -270,69 +322,73 @@ object Transforms {
       }
       pack(df, cfg.reqStr("id_field"), cfg.reqStr("group_field"),
         cfg.str("text_field").getOrElse("text"), capacity)
+    },
     // corpus datasheet: per-class volumes + exact-dup redundancy
-    case "corpus_report" =>
+    Op("corpus_report") { (df, t, _) =>
       val cfg = t.config
       graft.ops.TextAnalysis.corpusReport(df,
         cfg.str("text_field").getOrElse("text"), cfg.reqStr("class_field"))
+    },
     // tf-idf term scores (every doc-term pair, smoothed idf)
-    case "tfidf" =>
+    Op("tfidf") { (df, t, _) =>
       val cfg = t.config
       graft.ops.TextAnalysis.tfidfScores(df, cfg.reqStr("id_field"),
         cfg.str("text_field").getOrElse("text"))
+    },
     // C4 line/page quality filter: drop rejected pages, keep only
     // terminal-punctuated >=5-word non-javascript lines
-    case "c4_filter" =>
+    Op("c4_filter")((df, t, _) =>
       graft.ops.TextAnalysis.c4Filter(df,
-        t.config.str("text_field").getOrElse("text"))
+        t.config.str("text_field").getOrElse("text"))),
     // DSIR importance weights: log p_target/p_source under hashed
     // n-gram bag models; `target` names the target-domain source
-    case "dsir_weights" =>
+    Op("dsir_weights", "target") { (df, t, ctx) =>
       val cfg = t.config
-      val tName = cfg.reqStr("target")
-      val target = ctx.getOrElse(tName,
-        throw new GraftAnalysisException(s"dsir_weights: unknown source '$tName'"))
+      val target = source(ctx, t, "target")
       graft.ops.TextAnalysis.dsirLogWeights(df, cfg.reqStr("id_field"),
         cfg.str("text_field").getOrElse("text"),
         target, cfg.str("target_text_field").getOrElse("text"),
         buckets = cfg.int("buckets").getOrElse(4096),
         alpha = cfg.double("alpha").getOrElse(1.0))
+    },
     // corpus version diff vs a second declared source: added /
     // removed / changed / unchanged per id by content fingerprint
-    case "corpus_diff" =>
+    Op("corpus_diff", "old") { (df, t, ctx) =>
       val cfg = t.config
-      val oName = cfg.reqStr("old")
-      val old = ctx.getOrElse(oName,
-        throw new GraftAnalysisException(s"corpus_diff: unknown source '$oName'"))
+      val old = source(ctx, t, "old")
       graft.ops.Dedup.corpusDiff(old, df, cfg.reqStr("id_field"),
         cfg.str("text_field").getOrElse("text"))
+    },
     // repeated-span dedup: remove non-canonical occurrences of any
     // k-token window repeated >= min_count times corpus-wide
-    case "dedup_spans" =>
+    Op("dedup_spans") { (df, t, _) =>
       val cfg = t.config
       graft.ops.Dedup.dedupSpans(df, cfg.reqStr("id_field"),
         cfg.str("text_field").getOrElse("text"),
         k = cfg.int("k").getOrElse(8),
         minCount = cfg.int("min_count").getOrElse(2))
+    },
     // exact-substring dedup, Lee et al. ExactSubstr CUT semantics:
     // every occurrence of any >= min_len-token duplicated substring
     // is removed (dedup_spans is the keep-canonical tier)
-    case "dedup_substrings" =>
+    Op("dedup_substrings") { (df, t, _) =>
       val cfg = t.config
       graft.ops.Dedup.exactSubstrCut(df, cfg.reqStr("id_field"),
         cfg.str("text_field").getOrElse("text"),
         minLen = cfg.int("min_len").getOrElse(50),
         prefilterK = cfg.int("prefilter_k").getOrElse(8))
+    },
     // corpus-level line dedup: strip lines appearing in >= min_df
     // distinct documents (C4/RefinedWeb boilerplate removal)
-    case "dedup_lines" =>
+    Op("dedup_lines") { (df, t, _) =>
       val cfg = t.config
       graft.ops.Dedup.dedupLines(df, cfg.reqStr("id_field"),
         cfg.str("text_field").getOrElse("text"),
         cfg.int("min_df").getOrElse(
           throw new GraftAnalysisException("dedup_lines: 'min_df' is required")))
+    },
     // per-doc sliding windows with overlap (RAG chunking)
-    case "sliding_chunks" =>
+    Op("sliding_chunks") { (df, t, _) =>
       val cfg = t.config
       graft.ops.Packing.slidingChunks(df, cfg.reqStr("id_field"),
         cfg.str("text_field").getOrElse("text"),
@@ -340,163 +396,174 @@ object Transforms {
           throw new GraftAnalysisException("sliding_chunks: 'size' is required")),
         stride = cfg.int("stride").getOrElse(
           throw new GraftAnalysisException("sliding_chunks: 'stride' is required")))
+    },
     // symmetric int8 scalar quantization of an embedding column
-    case "quantize_int8" =>
+    Op("quantize_int8") { (df, t, _) =>
       val cfg = t.config
       graft.ops.Similarity.quantizeInt8(df, cfg.reqStr("id_field"),
         cfg.str("vector_field").getOrElse("embedding"))
+    },
     // concat-and-chunk fixed context windows (documents cross window
     // boundaries; the group is the parallelism unit)
-    case "chunk_windows" =>
+    Op("chunk_windows") { (df, t, _) =>
       val cfg = t.config
       graft.ops.Packing.chunkWindows(df, cfg.reqStr("id_field"),
         cfg.reqStr("group_field"), cfg.str("text_field").getOrElse("text"),
         windowSize = cfg.int("window_size").getOrElse(
           throw new GraftAnalysisException("chunk_windows: 'window_size' is required")),
         eod = cfg.str("eod").getOrElse("<|eod|>"))
+    },
     // temperature rebalancing: per-class keep rate (n_min/n_c)^(1-a)
-    case "temperature_sample" =>
+    Op("temperature_sample") { (df, t, _) =>
       val cfg = t.config
       graft.ops.Packing.temperatureSample(df, cfg.reqStr("key"),
         cfg.reqStr("class_field"),
         alpha = cfg.double("alpha").getOrElse(0.5),
         seed = cfg.long("seed").getOrElse(0L))
+    },
     // reproducible training-order shuffle: md5-of-key order into
     // nShards, position within shard — same epoch on any engine
-    case "shuffle_shards" =>
+    Op("shuffle_shards") { (df, t, _) =>
       val cfg = t.config
       graft.ops.Packing.shuffleShards(df, cfg.reqStr("key"),
         cfg.int("n_shards").getOrElse(
           throw new GraftAnalysisException("shuffle_shards: 'n_shards' is required")),
         seed = cfg.long("seed").getOrElse(0L))
-    case "bpe_tokens" =>
+    },
+    Op("bpe_tokens", "train_source") { (df, t, ctx) =>
       val cfg = t.config
       val tf = cfg.str("text_field").getOrElse("text")
-      val lmDf = cfg.str("train_source").map(n => ctx.getOrElse(n,
-        throw new GraftAnalysisException(s"bpe_tokens: unknown source '$n'"))).getOrElse(df)
+      val lmDf = if (cfg.has("train_source")) source(ctx, t, "train_source") else df
       graft.ops.Bpe.train(lmDf, tf,
           numMerges = cfg.int("num_merges").getOrElse(200),
           vocabWords = cfg.int("vocab_words").getOrElse(10000))
         .encodeCounts(df, cfg.reqStr("id_field"), tf)
+    },
     // BYTE-level BPE (GPT-2/tiktoken family): raw-text token budgets —
     // punctuation, case, whitespace, non-Latin all count; encoding
     // never fails (256-byte alphabet + byte fallback)
-    case "byte_bpe_tokens" =>
+    Op("byte_bpe_tokens", "train_source") { (df, t, ctx) =>
       val cfg = t.config
       val tf = cfg.str("text_field").getOrElse("text")
-      val lmDf = cfg.str("train_source").map(n => ctx.getOrElse(n,
-        throw new GraftAnalysisException(s"byte_bpe_tokens: unknown source '$n'"))).getOrElse(df)
+      val lmDf = if (cfg.has("train_source")) source(ctx, t, "train_source") else df
       graft.ops.BpeBytes.train(lmDf, tf,
           numMerges = cfg.int("num_merges").getOrElse(200),
           vocabWords = cfg.int("vocab_words").getOrElse(10000))
         .encodeCounts(df, cfg.reqStr("id_field"), tf)
+    },
     // WordPiece tokenizer (BERT family): likelihood-scored merges,
     // greedy longest-match encode with ## continuations and [UNK]
-    case "wordpiece_tokens" =>
+    Op("wordpiece_tokens", "train_source") { (df, t, ctx) =>
       val cfg = t.config
       val tf = cfg.str("text_field").getOrElse("text")
-      val lmDf = cfg.str("train_source").map(n => ctx.getOrElse(n,
-        throw new GraftAnalysisException(s"wordpiece_tokens: unknown source '$n'"))).getOrElse(df)
+      val lmDf = if (cfg.has("train_source")) source(ctx, t, "train_source") else df
       graft.ops.WordPiece.train(lmDf, tf,
           numMerges = cfg.int("num_merges").getOrElse(200),
           vocabWords = cfg.int("vocab_words").getOrElse(10000))
         .encodeCounts(df, cfg.reqStr("id_field"), tf)
+    },
     // unigram-LM (SentencePiece-family) tokenizer: EM-trained piece
     // probabilities, Viterbi segmentation; same output surface as
     // bpe_tokens so token budgets compare column for column
-    case "unigram_tokens" =>
+    Op("unigram_tokens", "train_source") { (df, t, ctx) =>
       val cfg = t.config
       val tf = cfg.str("text_field").getOrElse("text")
-      val lmDf = cfg.str("train_source").map(n => ctx.getOrElse(n,
-        throw new GraftAnalysisException(s"unigram_tokens: unknown source '$n'"))).getOrElse(df)
+      val lmDf = if (cfg.has("train_source")) source(ctx, t, "train_source") else df
       graft.ops.Unigram.train(lmDf, tf,
           vocabSize = cfg.int("vocab_size").getOrElse(512),
           maxPieceLen = cfg.int("max_piece_len").getOrElse(6),
           vocabWords = cfg.int("vocab_words").getOrElse(10000))
         .encodeCounts(df, cfg.reqStr("id_field"), tf)
-    case "redact_pii" =>
+    },
+    Op("redact_pii") { (df, t, _) =>
       val f = t.config.str("field").getOrElse("text")
       df.withColumn(t.config.str("out_field").getOrElse(f),
         graft.ops.TextAnalysis.redactPii(c(f)))
+    },
     // HTML -> text extraction (crawl ingest: strip script/style/
     // comments/tags, decode entities, normalize whitespace)
-    case "html_extract" =>
+    Op("html_extract") { (df, t, _) =>
       val f = t.config.str("field").getOrElse("html")
       df.withColumn(t.config.str("out_field").getOrElse("text"),
         graft.ops.TextAnalysis.htmlExtract(c(f)))
-    case "markdown_extract" =>
+    },
+    Op("markdown_extract") { (df, t, _) =>
       val f = t.config.str("field").getOrElse("markdown")
       df.withColumn(t.config.str("out_field").getOrElse("text"),
         graft.ops.TextAnalysis.markdownExtract(c(f)))
+    },
     // writing-system histogram + dominant script
-    case "text_script" =>
+    Op("text_script") { (df, t, _) =>
       val f = t.config.str("field").getOrElse("text")
       df.withColumn(t.config.str("out_field").getOrElse("script"),
         graft.ops.TextAnalysis.scriptProfile(c(f)))
+    },
     // encoding repair (ftfy's core case): reverse UTF-8-as-cp1252
     // mojibake; clean text passes through identical
-    case "fix_encoding" =>
+    Op("fix_encoding") { (df, t, _) =>
       val f = t.config.str("field").getOrElse("text")
       df.withColumn(t.config.str("out_field").getOrElse(f),
         graft.ops.TextAnalysis.fixEncoding(c(f)))
+    },
     // compression-ratio entropy proxy: both tails of the ratio
     // distribution are filter candidates (template spam low,
     // encoded junk high)
-    case "compression_ratio" =>
+    Op("compression_ratio") { (df, t, _) =>
       val f = t.config.str("field").getOrElse("text")
       df.withColumn(t.config.str("out_field").getOrElse("compression_ratio"),
         graft.ops.TextAnalysis.compressionRatio(c(f)))
+    },
     // block-level boilerplate classification + main-content extract
-    case "boilerplate_blocks" =>
+    Op("boilerplate_blocks")((df, t, _) =>
       graft.ops.Boilerplate.blocks(df,
         t.config.str("id_field").getOrElse("id"),
-        t.config.str("field").getOrElse("html"))
-    case "boilerplate_extract" =>
+        t.config.str("field").getOrElse("html"))),
+    Op("boilerplate_extract")((df, t, _) =>
       graft.ops.Boilerplate.extract(df,
         t.config.str("id_field").getOrElse("id"),
-        t.config.str("field").getOrElse("html"))
+        t.config.str("field").getOrElse("html"))),
     // HTML table cells in long format
-    case "html_tables" =>
+    Op("html_tables")((df, t, _) =>
       graft.ops.Tables.extract(df,
         t.config.str("id_field").getOrElse("id"),
-        t.config.str("field").getOrElse("html"))
+        t.config.str("field").getOrElse("html"))),
     // sentence-level corpus dedup (CCNet boilerplate mode)
-    case "dedup_sentences" =>
+    Op("dedup_sentences")((df, t, _) =>
       graft.ops.Dedup.dedupSentences(df,
         t.config.str("id_field").getOrElse("id"),
         t.config.str("field").getOrElse("text"),
-        minDf = t.config.int("min_df").getOrElse(2))
+        minDf = t.config.int("min_df").getOrElse(2))),
     // sentence segmentation + sentence-boundary RAG chunking
-    case "split_sentences" =>
+    Op("split_sentences")((df, t, _) =>
       graft.ops.Sentences.split(df,
         t.config.str("id_field").getOrElse("id"),
-        t.config.str("field").getOrElse("text"))
-    case "sentence_chunks" =>
+        t.config.str("field").getOrElse("text"))),
+    Op("sentence_chunks")((df, t, _) =>
       graft.ops.Sentences.chunkBySentence(df,
         t.config.str("id_field").getOrElse("id"),
         t.config.str("field").getOrElse("text"),
         maxChars = t.config.int("max_chars").getOrElse(2000),
-        overlap = t.config.int("overlap").getOrElse(0))
+        overlap = t.config.int("overlap").getOrElse(0))),
     // SFT conversation ops: messages-convention JSON → long turn
     // rows / role-grammar check / chat-template render
-    case "chat_parse" =>
+    Op("chat_parse")((df, t, _) =>
       graft.ops.Chat.parseConversations(df,
         t.config.str("id_field").getOrElse("id"),
-        t.config.str("json_field").getOrElse("json"))
-    case "chat_validate" =>
+        t.config.str("json_field").getOrElse("json"))),
+    Op("chat_validate")((df, t, _) =>
       graft.ops.Chat.validateAlternation(
         graft.ops.Chat.parseConversations(df,
           t.config.str("id_field").getOrElse("id"),
-          t.config.str("json_field").getOrElse("json")))
-    case "chat_render" =>
+          t.config.str("json_field").getOrElse("json")))),
+    Op("chat_render")((df, t, _) =>
       graft.ops.Chat.renderTemplate(
         graft.ops.Chat.parseConversations(df,
           t.config.str("id_field").getOrElse("id"),
-          t.config.str("json_field").getOrElse("json")))
+          t.config.str("json_field").getOrElse("json")))),
     // Unicode normalization (UAX #15): NFC before hashing/dedup,
     // NFKC as the tokenizer-grade compatibility fold; bad form name
     // is an analysis error before the job launches
-    case "normalize_unicode" =>
+    Op("normalize_unicode") { (df, t, _) =>
       val f = t.config.str("field").getOrElse("text")
       val form = t.config.str("form").getOrElse("NFC")
       if (!graft.expr.UnicodeNormalizeKernel.Forms(form))
@@ -505,61 +572,60 @@ object Transforms {
             s"${graft.expr.UnicodeNormalizeKernel.Forms.mkString("/")}, got '$form'")
       df.withColumn(t.config.str("out_field").getOrElse(f),
         graft.ops.TextAnalysis.normalizeUnicode(c(f), form))
+    },
     // PDF ingest: extract text + structure from a PDF payload column
-    case "pdf_extract" =>
+    Op("pdf_extract")((df, t, _) =>
       graft.ops.Pdf.extractPdfText(df,
         t.config.str("id_field").getOrElse("id"),
-        t.config.str("media_field").getOrElse("media"))
+        t.config.str("media_field").getOrElse("media"))),
     // .zst ingest: decompress a zstd payload column (from-spec
     // RFC 8878 decoder) into a text column for downstream ops
-    case "zstd_decode" =>
+    Op("zstd_decode")((df, t, _) =>
       graft.ops.Multimodal.decodeZstdText(df,
         t.config.str("id_field").getOrElse("id"),
-        t.config.str("media_field").getOrElse("media"))
+        t.config.str("media_field").getOrElse("media"))),
     // dictionary-compressed zstd: payload + dictionary columns
     // (raw-content or trained/structured dictionaries)
-    case "zstd_decode_dict" =>
+    Op("zstd_decode_dict")((df, t, _) =>
       graft.ops.ZstdCodec.decodeDictText(df,
         t.config.str("id_field").getOrElse("id"),
         t.config.str("payload_field").getOrElse("payload"),
-        t.config.str("dict_field").getOrElse("dict"))
+        t.config.str("dict_field").getOrElse("dict"))),
     // .gz ingest: same seam through the from-spec RFC 1952 decoder
-    case "gzip_decode" =>
+    Op("gzip_decode")((df, t, _) =>
       graft.ops.Multimodal.decodeGzipText(df,
         t.config.str("id_field").getOrElse("id"),
-        t.config.str("media_field").getOrElse("media"))
+        t.config.str("media_field").getOrElse("media"))),
     // .br ingest: same seam through the from-spec RFC 7932 decoder
-    case "brotli_decode" =>
+    Op("brotli_decode")((df, t, _) =>
       graft.ops.Brotli.decodeBrotliText(df,
         t.config.str("id_field").getOrElse("id"),
-        t.config.str("media_field").getOrElse("media"))
+        t.config.str("media_field").getOrElse("media"))),
     // sniff-dispatched universal decode: format chain + text surface
     // for extensionless mixed-format payloads
-    case "decode_any" =>
+    Op("decode_any")((df, t, _) =>
       graft.ops.DecodeAny.decode(df,
         t.config.str("id_field").getOrElse("id"),
-        t.config.str("payload_field").getOrElse("payload"))
+        t.config.str("payload_field").getOrElse("payload"))),
     // Delta transaction-log replay: (version, content) commit rows ->
     // the table's current active-file set
-    case "delta_snapshot" =>
+    Op("delta_snapshot")((df, t, _) =>
       graft.ops.DeltaLog.activeFiles(df,
         t.config.str("version_field").getOrElse("version"),
-        t.config.str("content_field").getOrElse("content"))
+        t.config.str("content_field").getOrElse("content"))),
     // Iceberg manifest decode: (id, manifest-avro payload) rows ->
     // one row per manifest_entry (status/path/format/counts)
-    case "iceberg_manifest" =>
+    Op("iceberg_manifest")((df, t, _) =>
       graft.ops.Iceberg.entriesDf(df,
         t.config.str("id_field").getOrElse("id"),
-        t.config.str("payload_field").getOrElse("payload"))
+        t.config.str("payload_field").getOrElse("payload"))),
     // bloom membership vs another source: build a deterministic
     // bloom over `against`'s key field (one fixed-state aggregation,
     // no key shuffle) and flag each row's key — the crawl-frontier
     // "seen in an earlier batch?" check without a join
-    case "bloom_check" =>
+    Op("bloom_check", "against") { (df, t, ctx) =>
       val cfg = t.config
-      val rName = cfg.reqStr("against")
-      val right = ctx.getOrElse(rName,
-        throw new GraftAnalysisException(s"bloom_check: unknown source '$rName'"))
+      val right = source(ctx, t, "against")
       val keyField = cfg.str("field").getOrElse("url")
       val rightKey = cfg.str("right_field").getOrElse(keyField)
       val k = cfg.int("hashes").getOrElse(4)
@@ -569,16 +635,15 @@ object Transforms {
       val filter = graft.ops.Bloom.build(right, rightKey, m, k)
       df.withColumn(cfg.str("out_field").getOrElse("seen"),
         graft.ops.Bloom.mightContain(filter, k, c(keyField).cast("string")))
+    },
     // bloom-pruned join: same result as `join` (inner/left_semi only),
     // but the big left stream is pruned AT ITS SCAN with a filter
     // built over the right side's keys, so rows that cannot match
     // never enter the shuffle — the explicit runtime-filter pattern
     // for 100 TB probe sides
-    case "bloom_join" =>
+    Op("bloom_join", "right") { (df, t, ctx) =>
       val cfg = t.config
-      val rName = cfg.reqStr("right")
-      val right0 = ctx.getOrElse(rName,
-        throw new GraftAnalysisException(s"bloom_join: unknown right source '$rName'"))
+      val right0 = source(ctx, t, "right")
       val lk = cfg.str("left_key").getOrElse("id")
       val rk = cfg.str("right_key").getOrElse("id")
       val how = cfg.str("how").getOrElse("inner")
@@ -595,17 +660,18 @@ object Transforms {
       graft.ops.Bloom.prunedJoin(df, right, lk, rkEff, how,
         cfg.int("hashes").getOrElse(5), cfg.double("fpp").getOrElse(0.01),
         cfg.int("right_count").map(_.toLong))
+    },
     // matryoshka truncation: first-k dims (+ renormalize) of an
     // MRL-style embedding column, in place
-    case "embed_truncate" =>
+    Op("embed_truncate")((df, t, _) =>
       graft.ops.Similarity.truncateEmbeddings(df,
         t.config.str("field").getOrElse("embedding"),
         t.config.int("dims").getOrElse(64),
-        t.config.bool("renormalize").getOrElse(true))
+        t.config.bool("renormalize").getOrElse(true))),
     // URL blocklist (UT1-style): drop rows whose URL hits a host
     // suffix, path prefix, or regex rule; action=flag keeps rows and
     // adds a `blocked` column instead
-    case "url_filter" =>
+    Op("url_filter") { (df, t, _) =>
       val f = c(t.config.str("field").getOrElse("url"))
       val blocked = graft.ops.DomainCap.urlBlocked(f,
         t.config.strList("block_hosts"), t.config.strList("block_paths"),
@@ -613,15 +679,14 @@ object Transforms {
       if (t.config.str("action").getOrElse("drop") == "flag")
         df.withColumn(t.config.str("out_field").getOrElse("blocked"), blocked)
       else df.where(!blocked)
+    },
     // robots.txt politeness (RFC 9309): evaluate each row's URL
     // against the `against` source's per-host robots bodies for the
     // configured agent; action=flag appends the verdict, drop keeps
     // only fetchable rows. Hosts with no robots row are allowed.
-    case "robots_filter" =>
+    Op("robots_filter", "against") { (df, t, ctx) =>
       val cfg = t.config
-      val rName = cfg.reqStr("against")
-      val robots = ctx.getOrElse(rName,
-        throw new GraftAnalysisException(s"robots_filter: unknown source '$rName'"))
+      val robots = source(ctx, t, "against")
       val urlField = cfg.str("field").getOrElse("url")
       val hostField = cfg.str("host_field").getOrElse("host")
       val contentField = cfg.str("content_field").getOrElse("robots_txt")
@@ -631,10 +696,11 @@ object Transforms {
           agent, cfg.str("out_field").getOrElse("allowed"))
       else
         graft.ops.Robots.filter(df, urlField, robots, hostField, contentField, agent)
+    },
     // domain-diversity cap: keep ≤ max_per_host docs per URL host
     // (mode first|sample), schemeless rows exempt; rows filter in
     // place via semi-join on the id field
-    case "domain_cap" =>
+    Op("domain_cap") { (df, t, _) =>
       val idField = t.config.str("id_field").getOrElse("doc_id")
       val flags = graft.ops.DomainCap.capPerHost(df,
         t.config.str("field").getOrElse("url"), idField,
@@ -642,10 +708,11 @@ object Transforms {
         t.config.str("mode").getOrElse("first"))
       df.join(flags.where(col("kept")).select(col("id").cast(df.schema(idField).dataType).as(idField)),
         Seq(idField), "left_semi")
-    case "url_normalize" =>
+    },
+    Op("url_normalize")((df, t, _) =>
       df.withColumn(t.config.str("out_field").getOrElse("url_norm"),
-        graft.ops.TextAnalysis.normalizeUrl(c(t.config.str("field").getOrElse("url"))))
-    case "pca_whiten" =>
+        graft.ops.TextAnalysis.normalizeUrl(c(t.config.str("field").getOrElse("url"))))),
+    Op("pca_whiten") { (df, t, _) =>
       val cfg = t.config
       val vecF = cfg.str("vec_field").getOrElse("embedding")
       val dim = cfg.int("dim").getOrElse(
@@ -654,11 +721,10 @@ object Transforms {
       graft.ops.Pca.fit(df, vecF, dim, k)
         .project(df, vecF, cfg.str("out_field").getOrElse("pca"),
           whiten = cfg.bool("whiten").getOrElse(true))
-    case "ann_topk" =>
+    },
+    Op("ann_topk", "queries") { (df, t, ctx) =>
       val cfg = t.config
-      val qName = cfg.reqStr("queries")
-      val q = ctx.getOrElse(qName,
-        throw new GraftAnalysisException(s"ann_topk: unknown queries source '$qName'"))
+      val q = source(ctx, t, "queries")
       val (idF, vecF) = (cfg.str("id_field").getOrElse("vec_id"),
         cfg.str("vec_field").getOrElse("embedding"))
       val k = cfg.int("k").getOrElse(10)
@@ -702,16 +768,17 @@ object Transforms {
           dim = cfg.int("dim").getOrElse(64), k = k)
         case other => throw new GraftAnalysisException(s"ann_topk: unknown method '$other'")
       }
-    case "text_lang" =>
+    },
+    Op("text_lang")((df, t, _) =>
       df.withColumn("lang_id",
-        graft.ops.TextAnalysis.langId(col(t.config.str("text_field").getOrElse("text"))))
-    case "multimodal_pack" =>
+        graft.ops.TextAnalysis.langId(col(t.config.str("text_field").getOrElse("text"))))),
+    Op("multimodal_pack")((df, t, _) =>
       graft.ops.Multimodal.packText(df, t.config.str("text_field").getOrElse("text"),
-        t.config.str("mime").getOrElse("text/plain"))
-    case "multimodal_features" =>
+        t.config.str("mime").getOrElse("text/plain"))),
+    Op("multimodal_features")((df, t, _) =>
       graft.ops.Multimodal.extractFeatures(df,
-        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))
-    case "multimodal_resize" =>
+        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))),
+    Op("multimodal_resize") { (df, t, _) =>
       val resizer = t.config.str("codec").getOrElse("stub") match {
         case "stub" => new graft.ops.Multimodal.FakeResizer()
         case "png"  => new graft.ops.Multimodal.PngResizer() // real pixels for PNG, stub fallback
@@ -722,67 +789,60 @@ object Transforms {
         t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"),
         t.config.int("width").getOrElse(64), t.config.int("height").getOrElse(64),
         resizer = resizer)
-    case "multimodal_frames" =>
+    },
+    Op("multimodal_frames")((df, t, _) =>
       graft.ops.Multimodal.frameSample(df,
         t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"),
-        t.config.int("n_frames").getOrElse(8), t.config.int("stride").getOrElse(1))
+        t.config.int("n_frames").getOrElse(8), t.config.int("stride").getOrElse(1))),
     // perceptual-hash image near-dup: DCT pHash signatures through
     // the simhash pigeonhole banding
-    case "image_neardup" =>
+    Op("image_neardup")((df, t, _) =>
       graft.ops.Phash.imageNearDups(df,
         t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"),
         maxDist = t.config.int("max_dist").getOrElse(3),
         bands = t.config.int("bands").getOrElse(4),
-        maxBucketSize = t.config.int("max_bucket_size").getOrElse(0))
+        maxBucketSize = t.config.int("max_bucket_size").getOrElse(0))),
     // linear-output image dedup: pHash near-dup closure as
     // (id, group_id) assignments
-    case "image_neardup_groups" =>
+    Op("image_neardup_groups")((df, t, _) =>
       graft.ops.Phash.imageDedupGroups(df,
         t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"),
         maxDist = t.config.int("max_dist").getOrElse(3),
         bands = t.config.int("bands").getOrElse(4),
-        maxBucketSize = t.config.int("max_bucket_size").getOrElse(0))
+        maxBucketSize = t.config.int("max_bucket_size").getOrElse(0))),
     // REAL frame-level decode for MJPEG AVI payloads (RIFF demux +
     // from-spec JPEG decode per frame chunk)
-    case "mjpeg_frames" =>
+    Op("mjpeg_frames")((df, t, _) =>
       graft.ops.Multimodal.decodeMjpegFrames(df,
         t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"),
-        stride = t.config.int("stride").getOrElse(1))
+        stride = t.config.int("stride").getOrElse(1))),
     // REAL frame-level decode for animated WebP payloads (VP8X/ANIM/
     // ANMF demux + pinned VP8/VP8L/ALPH frame decode + canvas
     // composition per the spec's blend/dispose rules)
-    case "webp_frames" =>
+    Op("webp_frames")((df, t, _) =>
       graft.ops.Multimodal.decodeWebpAnimFrames(df,
-        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))
+        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))),
     // REAL frame-level decode for animated GIF payloads (GCE demux,
     // LZW per frame, renderer-consensus disposal composition)
-    case "gif_frames" =>
+    Op("gif_frames")((df, t, _) =>
       graft.ops.Multimodal.decodeGifAnimFrames(df,
-        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))
+        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))),
     // REAL frame-level decode for MP4 payloads (sample-table walk +
     // per-sample JPEG decode; H.264/HEVC samples refuse by absence)
-    case "mp4_frames" =>
+    Op("mp4_frames")((df, t, _) =>
       graft.ops.Multimodal.decodeMp4Frames(df,
         t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"),
-        stride = t.config.int("stride").getOrElse(1))
+        stride = t.config.int("stride").getOrElse(1))),
     // REAL frame-level decode for Matroska payloads (cluster/block
     // walk + per-block JPEG decode; laced blocks refuse by name)
-    case "mkv_frames" =>
+    Op("mkv_frames")((df, t, _) =>
       graft.ops.Multimodal.decodeMkvFrames(df,
         t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"),
-        stride = t.config.int("stride").getOrElse(1))
-    // Gap sessionization for STREAMING pipelines (chain after a
-    // `watermark` transform). Modes: event_time (watermark-closed,
-    // production default), out_of_order (sorter-buffered, tolerates
-    // bounded disorder), no_timeout (closed-by-data only — needs the
-    // caller to guarantee closure, e.g. sentinels). Batch pipelines
-    // use the window/lag segmentation instead (x_sessionize) — a
-    // batch Dataset has no watermark, so the state machine would
-    // never release or close anything; fail fast.
+        stride = t.config.int("stride").getOrElse(1))),
     // bounded-forever stream dedup: fixed Bloom state per shard for
     // the stream's whole life (the crawl-frontier contract); batch
     // pipelines use dedup/bloom_check instead
-    case "bloom_dedup" =>
+    Op("bloom_dedup") { (df, t, _) =>
       if (!df.isStreaming)
         throw new GraftAnalysisException(
           "bloom_dedup: streaming-only (batch pipelines use deduplicate or bloom_check)")
@@ -794,7 +854,16 @@ object Transforms {
         mBits = t.config.int("bits").getOrElse(1 << 20),
         k = t.config.int("hashes").getOrElse(4),
         nShards = t.config.int("shards").getOrElse(16))
-    case "sessionize" =>
+    },
+    // Gap sessionization for STREAMING pipelines (chain after a
+    // `watermark` transform). Modes: event_time (watermark-closed,
+    // production default), out_of_order (sorter-buffered, tolerates
+    // bounded disorder), no_timeout (closed-by-data only — needs the
+    // caller to guarantee closure, e.g. sentinels). Batch pipelines
+    // use the window/lag segmentation instead (x_sessionize) — a
+    // batch Dataset has no watermark, so the state machine would
+    // never release or close anything; fail fast.
+    Op("sessionize") { (df, t, _) =>
       if (!df.isStreaming)
         throw new GraftAnalysisException(
           "sessionize: streaming-only (batch pipelines segment via window/lag — see x_sessionize)")
@@ -813,57 +882,56 @@ object Transforms {
         case "no_timeout"   => graft.streaming.Streaming.sessionize(ev, gapMs)
         case other => throw new GraftAnalysisException(s"sessionize: unknown mode '$other'")
       }).toDF()
+    },
     // REAL header decode (PNG/JPEG/GIF): mime sniff + dimensions
-    case "image_meta" =>
+    Op("image_meta")((df, t, _) =>
       graft.ops.Multimodal.decodeImageMeta(df,
-        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))
+        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))),
     // ICC color-profile metadata (JPEG APP2 / PNG iCCP / WebP ICCP)
-    case "image_icc" =>
+    Op("image_icc")((df, t, _) =>
       graft.ops.Multimodal.decodeImageIcc(df,
-        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))
+        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))),
     // REAL audio header decode (RIFF/WAV): channels, rate, duration
-    case "audio_meta" =>
+    Op("audio_meta")((df, t, _) =>
       graft.ops.Multimodal.decodeAudioMeta(df,
-        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))
+        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))),
     // REAL pixel decode (PNG/GIF by content): dims + verifiable stats
-    case "image_pixels" =>
+    Op("image_pixels")((df, t, _) =>
       graft.ops.Multimodal.decodeImagePixels(df,
-        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))
+        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))),
     // REAL MP4 box-tree parse: brand, duration, track dimensions
-    case "video_meta" =>
+    Op("video_meta")((df, t, _) =>
       graft.ops.Multimodal.decodeVideoMeta(df,
-        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))
+        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))),
     // audio near-dup: spectral landmark fingerprints -> shared-landmark pairs
-    case "audio_fingerprint" =>
+    Op("audio_fingerprint")((df, t, _) =>
       graft.ops.AudioFingerprint.audioNearDups(df,
         t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"),
         minMatch = t.config.int("min_match").getOrElse(3),
         frameSize = t.config.int("frame_size").getOrElse(1024),
-        maxLandmarkDf = t.config.int("max_landmark_df").getOrElse(0))
+        maxLandmarkDf = t.config.int("max_landmark_df").getOrElse(0))),
     // linear-output audio dedup: fingerprint pairs contracted to
     // (id, group_id) via connected components
-    case "audio_dedup_groups" =>
+    Op("audio_dedup_groups")((df, t, _) =>
       graft.ops.AudioFingerprint.audioDedupGroups(df,
         t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"),
         minMatch = t.config.int("min_match").getOrElse(3),
         frameSize = t.config.int("frame_size").getOrElse(1024),
-        maxLandmarkDf = t.config.int("max_landmark_df").getOrElse(0))
+        maxLandmarkDf = t.config.int("max_landmark_df").getOrElse(0))),
     // spectral features: Hann frames -> radix-2 FFT -> centroid/
     // rolloff/flatness/dominant frequency per clip
-    case "audio_spectral" =>
+    Op("audio_spectral")((df, t, _) =>
       graft.ops.Spectral.spectralDf(df,
         t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"),
-        frameSize = t.config.int("frame_size").getOrElse(1024))
+        frameSize = t.config.int("frame_size").getOrElse(1024))),
     // REAL PCM sample decode + integer clip features
-    case "audio_features" =>
+    Op("audio_features")((df, t, _) =>
       graft.ops.Multimodal.decodeAudioFeatures(df,
-        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))
+        t.config.reqStr("id_field"), t.config.str("media_field").getOrElse("media"))),
     // time-series joins against a named source (graft.ops.TemporalJoins)
-    case "asof_join" =>
+    Op("asof_join", "right") { (df, t, ctx) =>
       val cfg = t.config
-      val rightName = cfg.reqStr("right")
-      val right = ctx.getOrElse(rightName,
-        throw new GraftAnalysisException(s"asof_join: unknown right source '$rightName'"))
+      val right = source(ctx, t, "right")
       graft.ops.TemporalJoins.asOf(df, right,
         leftKeys = cfg.strList("left_keys"), rightKeys = cfg.strList("right_keys"),
         leftTime = cfg.reqStr("left_time"), rightTime = cfg.reqStr("right_time"),
@@ -871,39 +939,38 @@ object Transforms {
         rightTieBreak = cfg.reqStr("tie_break"),
         strict = cfg.bool("strict").getOrElse(false),
         prefix = cfg.str("prefix").getOrElse("asof_"))
-    case "range_join" =>
+    },
+    Op("range_join", "right") { (df, t, ctx) =>
       val cfg = t.config
-      val rightName = cfg.reqStr("right")
-      val right = ctx.getOrElse(rightName,
-        throw new GraftAnalysisException(s"range_join: unknown right source '$rightName'"))
+      val right = source(ctx, t, "right")
       graft.ops.TemporalJoins.rangeJoin(df, right,
         aKeys = cfg.strList("left_keys"), bKeys = cfg.strList("right_keys"),
         aTime = cfg.reqStr("left_time"), bTime = cfg.reqStr("right_time"),
         lowerMs = cfg.long("lower").getOrElse(0L), upperMs = cfg.reqLong("upper"),
         prefix = cfg.str("prefix").getOrElse("r_"))
+    },
     // near-dup pairs -> transitive clusters / cluster-level dedup
-    case "connected_components" =>
+    Op("connected_components")((df, t, _) =>
       graft.ops.Components.connectedComponents(df,
         t.config.str("a_field").getOrElse("a_id"),
-        t.config.str("b_field").getOrElse("b_id"))
+        t.config.str("b_field").getOrElse("b_id"))),
     // HTML link extraction + RFC 3986 resolution: one (id, link,
     // anchor, seq) row per kept http/https link — the edge producer
     // feeding pagerank/frontier ops
-    case "html_links" =>
+    Op("html_links")((df, t, _) =>
       graft.ops.Links.extract(df,
         t.config.str("id_field").getOrElse("doc_id"),
         t.config.str("url_field").getOrElse("url"),
         t.config.str("html_field").getOrElse("html"),
-        t.config.int("max_links").getOrElse(10000))
+        t.config.int("max_links").getOrElse(10000))),
     // public-suffix registrable domain (eTLD+1): appends out_field
     // from the host of url_field (or host_field directly); rules
     // inline (rules) or from a one-column source (rules_from)
-    case "registrable_domain" =>
+    Op("registrable_domain", "rules_from") { (df, t, ctx) =>
       val cfg = t.config
       val inlineRules = cfg.strList("rules")
       val fromSource = cfg.str("rules_from").map { n =>
-        val rdf = ctx.getOrElse(n,
-          throw new GraftAnalysisException(s"registrable_domain: unknown source '$n'"))
+        val rdf = source(ctx, t, "rules_from")
         val f = cfg.str("rules_field").getOrElse("rule")
         // rules tables are list-sized (the real PSL is ~10k rows);
         // the collect is capped and fails fast, the assertQueryCap
@@ -924,161 +991,139 @@ object Transforms {
           graft.ops.Psl.withRegistrableDomain(df,
             cfg.str("url_field").getOrElse("url"), out, rules)
       }
+    },
     // DOCX body text from a binary payload column (ECMA-376 on the
     // from-spec Zip + Xml stack)
-    case "docx_extract" =>
+    Op("docx_extract")((df, t, _) =>
       graft.ops.Docx.decodeText(df,
         t.config.str("id_field").getOrElse("doc_id"),
-        t.config.str("payload_field").getOrElse("payload"))
+        t.config.str("payload_field").getOrElse("payload"))),
     // DOCX furniture: headers/footers/footnotes long rows
-    case "docx_parts" =>
+    Op("docx_parts")((df, t, _) =>
       graft.ops.Docx.decodeParts(df,
         t.config.str("id_field").getOrElse("doc_id"),
-        t.config.str("payload_field").getOrElse("payload"))
+        t.config.str("payload_field").getOrElse("payload"))),
     // PPTX / ODT body text from binary payload columns (same
     // Zip + Xml seam as docx_extract)
-    case "pptx_extract" =>
+    Op("pptx_extract")((df, t, _) =>
       graft.ops.Office.decodePptxText(df,
         t.config.str("id_field").getOrElse("doc_id"),
-        t.config.str("payload_field").getOrElse("payload"))
-    case "odt_extract" =>
+        t.config.str("payload_field").getOrElse("payload"))),
+    Op("odt_extract")((df, t, _) =>
       graft.ops.Office.decodeOdtText(df,
         t.config.str("id_field").getOrElse("doc_id"),
-        t.config.str("payload_field").getOrElse("payload"))
+        t.config.str("payload_field").getOrElse("payload"))),
     // audio tag metadata (id3v2 / vorbis comments) from a payload column
-    case "audio_tags" =>
+    Op("audio_tags")((df, t, _) =>
       graft.ops.AudioTags.decodeTags(df,
         t.config.str("id_field").getOrElse("doc_id"),
-        t.config.str("payload_field").getOrElse("payload"))
+        t.config.str("payload_field").getOrElse("payload"))),
     // GGUF metadata (kv + tensor infos) from a payload column
-    case "gguf_meta" =>
+    Op("gguf_meta")((df, t, _) =>
       graft.ops.Gguf.decodeMeta(df,
         t.config.str("id_field").getOrElse("doc_id"),
-        t.config.str("payload_field").getOrElse("payload"))
+        t.config.str("payload_field").getOrElse("payload"))),
     // npz (numpy archive) tensors from a payload column
-    case "npz_tensors" =>
+    Op("npz_tensors")((df, t, _) =>
       graft.ops.Npy.decodeNpz(df,
         t.config.str("id_field").getOrElse("doc_id"),
-        t.config.str("payload_field").getOrElse("payload"))
+        t.config.str("payload_field").getOrElse("payload"))),
     // RTF text extraction from a payload column
-    case "rtf_extract" =>
+    Op("rtf_extract")((df, t, _) =>
       graft.ops.Rtf.extractText(df,
         t.config.str("id_field").getOrElse("id"),
-        t.config.str("payload_field").getOrElse("payload"))
+        t.config.str("payload_field").getOrElse("payload"))),
     // MAT-file v5 numeric arrays (name, class, dims, values)
-    case "mat_vars" =>
+    Op("mat_vars")((df, t, _) =>
       graft.ops.Mat5.decodeVars(df,
         t.config.str("id_field").getOrElse("doc_id"),
-        t.config.str("payload_field").getOrElse("payload"))
+        t.config.str("payload_field").getOrElse("payload"))),
     // netCDF classic variables (name, dtype, dims, values)
-    case "netcdf_vars" =>
+    Op("netcdf_vars")((df, t, _) =>
       graft.ops.Netcdf.decodeVars(df,
         t.config.str("id_field").getOrElse("doc_id"),
-        t.config.str("payload_field").getOrElse("payload"))
+        t.config.str("payload_field").getOrElse("payload"))),
     // HDF5 datasets (path, dtype, dims, values) from a payload column
-    case "hdf5_datasets" =>
+    Op("hdf5_datasets")((df, t, _) =>
       graft.ops.Hdf5.decodeDatasets(df,
         t.config.str("id_field").getOrElse("doc_id"),
-        t.config.str("payload_field").getOrElse("payload"))
+        t.config.str("payload_field").getOrElse("payload"))),
     // Arrow IPC (key, vector) rows from stream payloads
-    case "arrow_vectors" =>
+    Op("arrow_vectors")((df, t, _) =>
       graft.ops.ArrowIpc.decodeVecRows(df,
         t.config.str("id_field").getOrElse("doc_id"),
         t.config.str("payload_field").getOrElse("payload"),
         t.config.str("key_field").getOrElse("vec_id"),
-        t.config.str("vector_field").getOrElse("embedding"))
+        t.config.str("vector_field").getOrElse("embedding"))),
     // safetensors tensor metadata + F32 values from a payload column
-    case "safetensors_tensors" =>
+    Op("safetensors_tensors")((df, t, _) =>
       graft.ops.Safetensors.decodeTensors(df,
         t.config.str("id_field").getOrElse("doc_id"),
-        t.config.str("payload_field").getOrElse("payload"))
+        t.config.str("payload_field").getOrElse("payload"))),
     // mbox/RFC 5322 messages from a binary payload column
-    case "mbox_messages" =>
+    Op("mbox_messages")((df, t, _) =>
       graft.ops.Email.messages(df,
         t.config.str("id_field").getOrElse("doc_id"),
-        t.config.str("payload_field").getOrElse("payload"))
+        t.config.str("payload_field").getOrElse("payload"))),
     // SRT/WebVTT subtitle cues from a text column
-    case "subtitle_cues" =>
+    Op("subtitle_cues")((df, t, _) =>
       graft.ops.Subtitles.extract(df,
         t.config.str("id_field").getOrElse("doc_id"),
-        t.config.str("text_field").getOrElse("text"))
+        t.config.str("text_field").getOrElse("text"))),
     // Jupyter notebook cells in long format
-    case "ipynb_cells" =>
+    Op("ipynb_cells")((df, t, _) =>
       graft.ops.Ipynb.decodeCells(df,
         t.config.str("id_field").getOrElse("doc_id"),
-        t.config.str("payload_field").getOrElse("payload"))
+        t.config.str("payload_field").getOrElse("payload"))),
     // EPUB spine text from a binary payload column
-    case "epub_extract" =>
+    Op("epub_extract")((df, t, _) =>
       graft.ops.Epub.decodeText(df,
         t.config.str("id_field").getOrElse("doc_id"),
-        t.config.str("payload_field").getOrElse("payload"))
+        t.config.str("payload_field").getOrElse("payload"))),
     // XLSX cells in long format: (id, sheet, row, col, value)
-    case "xlsx_cells" =>
+    Op("xlsx_cells")((df, t, _) =>
       graft.ops.Xlsx.decodeCells(df,
         t.config.str("id_field").getOrElse("doc_id"),
-        t.config.str("payload_field").getOrElse("payload"))
+        t.config.str("payload_field").getOrElse("payload"))),
     // Sitemap: directives out of robots.txt bodies — the discovery
     // feed into sitemap_parse
-    case "robots_sitemaps" =>
+    Op("robots_sitemaps")((df, t, _) =>
       graft.ops.Robots.sitemapUrls(df,
         t.config.str("host_field").getOrElse("host"),
-        t.config.str("content_field").getOrElse("robots_txt"))
+        t.config.str("content_field").getOrElse("robots_txt"))),
     // sitemaps.org protocol parse: (id, seq, kind, loc, lastmod,
     // changefreq, priority, in_scope) rows per sitemap document —
     // the frontier-seeding sibling of robots_filter
-    case "sitemap_parse" =>
+    Op("sitemap_parse")((df, t, _) =>
       graft.ops.Sitemap.extract(df,
         t.config.str("id_field").getOrElse("doc_id"),
         t.config.str("url_field").getOrElse("url"),
-        t.config.str("xml_field").getOrElse("xml"))
+        t.config.str("xml_field").getOrElse("xml"))),
     // RSS/Atom feed parse: (id, seq, format, title, link, entry_id,
     // published, summary) rows — the incremental-crawl poll surface
-    case "feed_parse" =>
+    Op("feed_parse")((df, t, _) =>
       graft.ops.Feed.extract(df,
         t.config.str("id_field").getOrElse("doc_id"),
-        t.config.str("xml_field").getOrElse("xml"))
+        t.config.str("xml_field").getOrElse("xml"))),
     // link-graph PageRank over an edge stream (src, dst): (node, rank)
-    case "pagerank" =>
+    Op("pagerank")((df, t, _) =>
       graft.ops.PageRank.ranks(df,
         t.config.str("src_field").getOrElse("src"),
         t.config.str("dst_field").getOrElse("dst"),
         t.config.int("iterations").getOrElse(10),
-        t.config.double("damping").getOrElse(0.85))
-    case "dedup_cluster" =>
+        t.config.double("damping").getOrElse(0.85))),
+    Op("dedup_cluster", "pairs") { (df, t, ctx) =>
       val cfg = t.config
-      val pairsName = cfg.reqStr("pairs")
-      val pairs = ctx.getOrElse(pairsName,
-        throw new GraftAnalysisException(s"dedup_cluster: unknown pairs source '$pairsName'"))
+      val pairs = source(ctx, t, "pairs")
       graft.ops.Components.keepClusterRepresentatives(df, cfg.reqStr("id_field"), pairs,
         cfg.str("a_field").getOrElse("a_id"), cfg.str("b_field").getOrElse("b_id"))
-    case other =>
-      throw new GraftAnalysisException(s"transform '${t.name}': unknown transform type '$other'")
-  }
+    }
+  )
 
-  /** Known transform types, for spec validation. */
-  val knownTypes: Set[String] = Set(
-    "filter", "map", "aggregate", "join", "sort", "deduplicate",
-    "select", "rename", "limit", "union", "intersect", "except",
-    "distinct", "window", "sql", "sample", "stratified_sample", "token_budget", "split",
-    "pivot", "unpivot", "explode", "repartition", "coalesce", "watermark", "window_agg", "bloom_dedup",
-    "sessionize",
-    "dedup_exact", "dedup_minhash", "dedup_groups", "text_profile", "asof_join", "range_join",
-    "dedup_simhash", "dedup_embed", "embed_neardup_groups", "semdedup", "ann_topk", "text_lang", "contamination", "contamination_embed",
-    "contamination_ngram", "text_script", "text_repetition", "text_top_ngram", "text_unigram_ppx",
-    "text_bigram_ppx", "text_trigram_ppx", "nb_classify", "linear_classify", "langid_classify", "pca_whiten",
-    "url_normalize", "domain_cap", "url_filter", "robots_filter", "redact_pii", "html_extract", "fix_encoding", "normalize_unicode", "compression_ratio", "split_sentences", "sentence_chunks", "dedup_sentences", "html_tables", "boilerplate_blocks", "boilerplate_extract", "chat_parse", "chat_validate", "chat_render", "zstd_decode", "zstd_decode_dict", "gzip_decode", "brotli_decode", "decode_any", "delta_snapshot", "iceberg_manifest", "bpe_tokens", "byte_bpe_tokens", "unigram_tokens", "wordpiece_tokens", "pack_sequences", "shuffle_shards",
-    "temperature_sample", "chunk_windows", "sliding_chunks", "quantize_int8", "embed_truncate", "bloom_check", "bloom_join", "pdf_extract",
-    "dedup_lines", "dedup_spans", "dedup_substrings", "corpus_diff", "dsir_weights", "c4_filter", "heavy_hitters",
-    "corpus_report", "tfidf", "dedup_index_check",
-    "multimodal_pack", "multimodal_features", "multimodal_resize", "multimodal_frames",
-    "image_meta", "image_icc", "audio_meta", "video_meta", "image_pixels", "audio_features", "audio_spectral", "audio_fingerprint", "audio_dedup_groups", "mjpeg_frames", "webp_frames", "gif_frames", "mp4_frames", "mkv_frames", "image_neardup", "image_neardup_groups",
-    "connected_components", "dedup_cluster", "pagerank", "html_links",
-    "sitemap_parse", "feed_parse", "registrable_domain", "robots_sitemaps",
-    "docx_extract", "docx_parts", "pptx_extract", "odt_extract", "xlsx_cells",
-    "epub_extract", "ipynb_cells", "subtitle_cues", "markdown_extract",
-    "mbox_messages", "safetensors_tensors", "npz_tensors", "gguf_meta",
-    "arrow_vectors", "audio_tags", "hdf5_datasets", "netcdf_vars", "mat_vars",
-    "rtf_extract")
+  val byName: Map[String, Op] = ops.map(o => o.name -> o).toMap
+
+  /** Known transform types, for spec validation and `graft.Counts`. */
+  val knownTypes: Set[String] = byName.keySet
 
   private[transforms] def c(name: String): Column = col(quote(name))
   private[transforms] def quote(name: String): String = s"`${name.replace("`", "``")}`"
@@ -1398,8 +1443,8 @@ object AggregateOp {
   }
 }
 
-/** Join current stream (left) against a named source from the run
-  * context (reference main.py:251-263). Generalized from the
+/** Join current stream (left) against `right0`, the source that the
+  * `right` key names (reference main.py:251-263). Generalized from the
   * reference's single shape (inner, 1:1 last-wins right) to all Spark
   * join types; right columns get a configurable prefix (reference:
   * "r_", main.py:261), applied to all right columns including the key.
@@ -1420,10 +1465,7 @@ object AggregateOp {
   * sides.
   */
 object JoinOp {
-  def apply(df: DataFrame, cfg: Config, ctx: Ctx): DataFrame = {
-    val rightName = cfg.reqStr("right")
-    val right0 = ctx.getOrElse(rightName,
-      throw new GraftAnalysisException(s"join: unknown right source '$rightName'"))
+  def apply(df: DataFrame, right0: DataFrame, cfg: Config): DataFrame = {
     // single-key (reference shape) or composite keys via *_keys lists
     val lks = if (cfg.strList("left_keys").nonEmpty) cfg.strList("left_keys")
       else Seq(cfg.str("left_key").getOrElse("id"))
@@ -1580,43 +1622,6 @@ object RenameOp {
 object LimitOp {
   def apply(df: DataFrame, cfg: Config): DataFrame =
     df.limit(cfg.int("n").getOrElse(throw new GraftAnalysisException("limit: needs 'n'")))
-}
-
-/** Explicit union of the current stream with named sources, by column
-  * name with null-fill for missing columns — the declared semantics of
-  * the reference's implicit concat of heterogeneous sources
-  * (main.py:437-443; SURVEY §2.5 item 8). Union is plan-level only —
-  * no shuffle, partitions are simply concatenated.
-  */
-object UnionOp {
-  def apply(df: DataFrame, cfg: Config, ctx: Ctx): DataFrame = {
-    val names = cfg.strList("inputs")
-    if (names.isEmpty) throw new GraftAnalysisException("union: needs non-empty 'inputs'")
-    names.foldLeft(df) { (acc, n) =>
-      val other = ctx.getOrElse(n, throw new GraftAnalysisException(s"union: unknown input '$n'"))
-      acc.unionByName(other, allowMissingColumns = true)
-    }
-  }
-}
-
-/** INTERSECT / EXCEPT against a named source (ABSENT in the
-  * reference, SURVEY §2.4). Set semantics (deduplicating), like the
-  * SQL operators; `all: true` keeps duplicates (INTERSECT ALL /
-  * EXCEPT ALL).
-  */
-object SetOp {
-  def apply(df: DataFrame, cfg: Config, ctx: Ctx, kind: String): DataFrame = {
-    val name = cfg.reqStr("other")
-    val other = ctx.getOrElse(name, throw new GraftAnalysisException(s"$kind: unknown input '$name'"))
-    val all = cfg.bool("all").getOrElse(false)
-    (kind, all) match {
-      case ("intersect", false) => df.intersect(other)
-      case ("intersect", true)  => df.intersectAll(other)
-      case ("except", false)    => df.except(other)
-      case ("except", true)     => df.exceptAll(other)
-      case _ => throw new GraftAnalysisException(s"unknown set op '$kind'")
-    }
-  }
 }
 
 /** Pivot (ABSENT in the reference): group by keys, spread a pivot

@@ -51,7 +51,8 @@ class PropertySpec extends SparkSuite {
     forAll(rows, rows) { (a, b) =>
       val dfa = a.toDF("k", "v")
       val dfb = b.toDF("k", "v")
-      val u = UnionOp(dfa, Config.of("inputs" -> Seq("b")), Map("b" -> dfb))
+      val u = Transforms(dfa, graft.spec.TransformSpec("u", "union",
+        Config.of("inputs" -> Seq("b"))), Map("b" -> dfb))
       assert(u.count() == a.size + b.size)
       val agg = AggregateOp(u, Config.of("group_by" -> Seq("k"),
         "aggregations" -> Seq(Map("function" -> "count", "as" -> "n"))))

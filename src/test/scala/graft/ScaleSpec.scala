@@ -224,13 +224,10 @@ class ScaleSpec extends SparkSuite {
   test("salted join returns exactly the unsalted result") {
     import graft.spec.Config
     import graft.transforms.JoinOp
-    val plain = JoinOp(sf("orders"), Config.of(
-      "right" -> "c", "left_key" -> "o_custkey", "right_key" -> "c_custkey"),
-      Map("c" -> sf("customer")))
-    val salted = JoinOp(sf("orders"), Config.of(
-      "right" -> "c", "left_key" -> "o_custkey", "right_key" -> "c_custkey",
-      "salt" -> 4),
-      Map("c" -> sf("customer")))
+    val plain = JoinOp(sf("orders"), sf("customer"), Config.of(
+      "left_key" -> "o_custkey", "right_key" -> "c_custkey"))
+    val salted = JoinOp(sf("orders"), sf("customer"), Config.of(
+      "left_key" -> "o_custkey", "right_key" -> "c_custkey", "salt" -> 4))
     assert(salted.count() == plain.count())
     assert(salted.columns.toSeq == plain.columns.toSeq)
     assert(salted.except(plain).isEmpty && plain.except(salted).isEmpty)

@@ -71,9 +71,9 @@ class TransformsSpec extends SparkSuite {
   test("join inner with r_ prefix and last-wins right dedup") {
     val left = Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v")
     val right = Seq((1, "x", 10), (1, "y", 20), (2, "z", 30)).toDF("id", "w", "ord")
-    val out = JoinOp(left, Config.of(
-      "right" -> "r", "left_key" -> "id", "right_key" -> "id",
-      "right_dedup" -> "last", "right_order" -> "ord"), Map("r" -> right))
+    val out = JoinOp(left, right, Config.of(
+      "left_key" -> "id", "right_key" -> "id",
+      "right_dedup" -> "last", "right_order" -> "ord"))
     // inner: id=3 dropped; dup right id=1: last by ord wins ("y")
     val rows = out.select("id", "v", "r_w").as[(Int, String, String)].collect().toSet
     assert(rows == Set((1, "a", "y"), (2, "b", "z")))
@@ -86,8 +86,8 @@ class TransformsSpec extends SparkSuite {
     for ((keep, expect) <- Seq(
         "first" -> Set((1, "x"), (2, "lo")),
         "last" -> Set((1, "x"), (2, "t1"), (2, "t2")))) {
-      val got = JoinOp(left, Config.of("right" -> "r", "left_key" -> "id", "right_key" -> "id",
-        "right_dedup" -> keep, "right_order" -> "ord"), Map("r" -> right2))
+      val got = JoinOp(left, right2, Config.of("left_key" -> "id", "right_key" -> "id",
+        "right_dedup" -> keep, "right_order" -> "ord"))
         .select("id", "r_w").as[(Int, String)].collect().toSet
       assert(got == expect, s"right_dedup=$keep")
     }
@@ -164,7 +164,8 @@ class TransformsSpec extends SparkSuite {
   test("union by name null-fills missing columns (reference main.py:437-443)") {
     val a = Seq((1, "x")).toDF("id", "only_a")
     val b = Seq((2, 9.5)).toDF("id", "only_b")
-    val out = UnionOp(a, Config.of("inputs" -> Seq("b")), Map("b" -> b))
+    val out = Transforms(a, graft.spec.TransformSpec("u", "union",
+      Config.of("inputs" -> Seq("b"))), Map("b" -> b))
     assert(out.columns.toSet == Set("id", "only_a", "only_b"))
     val row = out.where($"id" === 2).collect().head
     assert(row.getAs[String]("only_a") == null)
@@ -192,21 +193,20 @@ class TransformsSpec extends SparkSuite {
   test("join with composite keys") {
     val left = Seq((1, "a", 10), (1, "b", 20), (2, "a", 30)).toDF("k1", "k2", "v")
     val right = Seq((1, "a", "x"), (2, "a", "y")).toDF("k1", "k2", "w")
-    val out = JoinOp(left, Config.of(
-      "right" -> "r",
-      "left_keys" -> Seq("k1", "k2"), "right_keys" -> Seq("k1", "k2")), Map("r" -> right))
+    val out = JoinOp(left, right, Config.of(
+      "left_keys" -> Seq("k1", "k2"), "right_keys" -> Seq("k1", "k2")))
     assert(out.select("v", "r_w").as[(Int, String)].collect().toSet == Set((10, "x"), (30, "y")))
-    assertThrows[GraftAnalysisException](JoinOp(left, Config.of(
-      "right" -> "r", "left_keys" -> Seq("k1", "k2"), "right_keys" -> Seq("k1")), Map("r" -> right)))
+    assertThrows[GraftAnalysisException](JoinOp(left, right, Config.of(
+      "left_keys" -> Seq("k1", "k2"), "right_keys" -> Seq("k1"))))
   }
 
   test("intersect / except / distinct set ops") {
     val a = Seq(1, 2, 2, 3).toDF("v")
     val b = Seq(2, 3, 4).toDF("v")
-    assert(SetOp(a, Config.of("other" -> "b"), Map("b" -> b), "intersect")
-      .as[Int].collect().toSet == Set(2, 3))
-    assert(SetOp(a, Config.of("other" -> "b"), Map("b" -> b), "except")
-      .as[Int].collect().toSet == Set(1))
+    def setOp(kind: String) = Transforms(a,
+      graft.spec.TransformSpec("s", kind, Config.of("other" -> "b")), Map("b" -> b))
+    assert(setOp("intersect").as[Int].collect().toSet == Set(2, 3))
+    assert(setOp("except").as[Int].collect().toSet == Set(1))
     assert(Transforms(a, graft.spec.TransformSpec("d", "distinct"), Map.empty).count() == 3)
   }
 
@@ -270,13 +270,11 @@ class TransformsSpec extends SparkSuite {
     val left = Seq((1, "a")).toDF("id", "v")
     val right = Seq((1, "x")).toDF("id", "w")
     Seq("merge", "shuffle_hash").foreach { h =>
-      val out = JoinOp(left, Config.of(
-        "right" -> "r", "left_key" -> "id", "right_key" -> "id", "hint" -> h), Map("r" -> right))
+      val out = JoinOp(left, right, Config.of("left_key" -> "id", "right_key" -> "id", "hint" -> h))
       assert(out.count() == 1)
     }
-    assertThrows[GraftAnalysisException](JoinOp(left, Config.of(
-      "right" -> "r", "left_key" -> "id", "right_key" -> "id", "hint" -> "nested_loop_xl"),
-      Map("r" -> right)))
+    assertThrows[GraftAnalysisException](JoinOp(left, right, Config.of(
+      "left_key" -> "id", "right_key" -> "id", "hint" -> "nested_loop_xl")))
   }
 
   test("repartition/coalesce control physical layout without changing data") {
@@ -609,5 +607,13 @@ class TransformsSpec extends SparkSuite {
   test("unknown transform type is an analysis error") {
     assertThrows[GraftAnalysisException](
       Transforms(employees, graft.spec.TransformSpec("t", "nope"), Map.empty))
+  }
+
+  test("an op run without validate refuses an undeclared source with validate's message") {
+    for (op <- Transforms.ops; key <- op.sources) {
+      val t = graft.spec.TransformSpec("t1", op.name, Config.of(key -> "ghost"))
+      val e = intercept[GraftAnalysisException](Transforms(employees, t, Map.empty))
+      assert(e.getMessage == Transforms.undeclaredSource(t, key, "ghost"), op.name)
+    }
   }
 }

@@ -42,6 +42,9 @@ object PipelineCompiler {
     if (spec.sources.isEmpty) errs += "pipeline has no sources"
     val sourceNames = spec.sources.map(_.name)
     if (sourceNames.distinct.size != sourceNames.size) errs += "duplicate source names"
+    spec.sources.filterNot(s => SourceReader.knownTypes.contains(s.sourceType)).foreach { s =>
+      errs += s"source '${s.name}': unknown type '${s.sourceType}'"
+    }
     val tNames = spec.transforms.map(_.name).toSet
     spec.transforms.foreach { t =>
       Transforms.byName.get(t.transformType) match {

@@ -1,7 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, FileTable}
 
 /** Parallelism guard for compute-heavy operators.
@@ -78,6 +79,17 @@ object Partitioning {
     ds.sparkSession.createDataset(rdd)
   }
 
+  /** The file index of the first file relation in `df`'s analyzed
+    * plan (v1 or v2): the listing Spark made when the relation was
+    * resolved. None when the plan reads no files. */
+  private[graft] def scanIndex(df: DataFrame): Option[FileIndex] =
+    df.queryExecution.analyzed.collectFirst {
+      case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
+        lr.relation.asInstanceOf[HadoopFsRelation].location
+      case dsv2: DataSourceV2Relation if dsv2.table.isInstanceOf[FileTable] =>
+        dsv2.table.asInstanceOf[FileTable].fileIndex
+    }
+
   /** Estimated FileSourceScan partition count for the first file
     * relation in `df`'s analyzed plan (v1 or v2), replicating
     * `FilePartition.maxSplitBytes` bin-packing arithmetic. None when
@@ -85,13 +97,7 @@ object Partitioning {
     */
   private[graft] def estimatedScanSplits(df: DataFrame): Option[Long] = {
     val spark = df.sparkSession
-    val index = df.queryExecution.analyzed.collectFirst {
-      case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
-        lr.relation.asInstanceOf[HadoopFsRelation].location
-      case dsv2: DataSourceV2Relation if dsv2.table.isInstanceOf[FileTable] =>
-        dsv2.table.asInstanceOf[FileTable].fileIndex
-    }
-    index.map { idx =>
+    scanIndex(df).map { idx =>
       val conf = spark.sessionState.conf
       val openCost = conf.filesOpenCostInBytes
       val minPartitionNum = conf.filesMinPartitionNum

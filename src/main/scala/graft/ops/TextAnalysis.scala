@@ -7,17 +7,20 @@ import org.apache.spark.sql.functions._
   * (SURVEY §2.6): tokenization, token counting, quality scoring,
   * language ID, document fingerprinting.
   *
-  * Everything here is a pure column expression over
-  * `org.apache.spark.sql.functions` — no UDFs, no shuffle; at 100 TB
-  * these run at scan speed and combine freely with pushed-down
-  * filters. Not all of it is whole-stage-codegen'd: the array
-  * higher-order functions (`filter`, `transform`, `aggregate`) are
-  * `CodegenFallback`, interpreted per element and never merged as
-  * common subexpressions, so an array used twice is computed twice
-  * unless it is [[bind]]-ed. The tokenizer ([[tokens]] and the token
-  * counts) uses none: it is regex extraction and counting, which
-  * compile. All heuristics are deterministic and SQL-expressible, so
-  * results are oracle-checkable cross-engine.
+  * Everything here is a pure column expression — no UDFs, no
+  * shuffle; at 100 TB these run at scan speed and combine freely with
+  * pushed-down filters. The per-document profile ([[profile]],
+  * [[tokenCount]], [[bpeishTokenCount]], [[langId]],
+  * [[qualityStruct]]) is one codegen'd kernel,
+  * [[graft.expr.TextProfileKernel]], which holds the one definition of
+  * each count and score and uses no higher-order function. The other
+  * operators are built from `org.apache.spark.sql.functions`; not all
+  * of them are whole-stage-codegen'd: the array higher-order functions
+  * (`filter`, `transform`, `aggregate`) are `CodegenFallback`,
+  * interpreted per element and never merged as common subexpressions,
+  * so an array used twice is computed twice unless it is
+  * [[bind]]-ed. All heuristics are deterministic and SQL-expressible,
+  * so results are oracle-checkable cross-engine.
   */
 object TextAnalysis {
 
@@ -48,6 +51,10 @@ object TextAnalysis {
     * is copied whole into any filter pushed through the projection
     * and into every pruned side that reads one of its fields.
     *
+    * The profile signals do not bind: they read the fields of one
+    * [[graft.expr.TextProfileKernel]] struct, which a pushed filter
+    * copies as one byte scan, not as tokenizer passes.
+    *
     * The result is an array element, which Catalyst types nullable
     * whatever the body returns; wrap it in `coalesce(..., zero)` with
     * a non-null `zero` of the body's type where the schema must keep
@@ -61,81 +68,35 @@ object TextAnalysis {
   private def structOf(names: Seq[String], cs: Seq[Column]): Column =
     struct(cs.zip(names).map { case (c, n) => c.as(n) }: _*)
 
-  /** `size(tokens(text))` as a long; NULL for NULL text. */
-  def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
+  /** The number of [[tokens]], as a long; NULL for NULL text. */
+  def tokenCount(text: Column): Column = graft.expr.TextProfile(text)("token_count")
 
-  /** BPE-ish subword count (roughly GPT-2 pre-tokenization): one per
-    * maximal `[a-zA-Z0-9]` run, plus one per UTF-16 code unit of every
-    * other character that is not Java `\s` (`[ \t\n\x0B\f\r]`), so a
-    * supplementary character such as an emoji counts 2. */
-  def bpeishTokenCount(text: Column): Column =
-    (regexp_count(text, lit("[a-zA-Z0-9]+|[^a-zA-Z0-9\\s]")) +
-      regexp_count(text, lit("[\\x{10000}-\\x{10FFFF}]"))).cast("long")
+  /** BPE-ish subword count (roughly GPT-2 pre-tokenization; the exact
+    * rule is [[graft.expr.TextProfileKernel]]'s). */
+  def bpeishTokenCount(text: Column): Column = graft.expr.TextProfile(text)("bpeish_token_count")
 
-  private val stopwords = Seq(
-    "the", "a", "an", "of", "and", "or", "to", "in", "is", "are", "was",
-    "for", "on", "with", "as", "at", "by", "it", "be", "this", "that")
+  private val qualityFields =
+    Seq("avg_token_len", "punct_ratio", "stopword_ratio", "quality_score")
 
   /** Quality-scoring columns: struct(n_tokens, avg_token_len,
     * punct_ratio, stopword_ratio, quality_score). Score is a simple
     * deterministic combination rewarding mid-length tokens, some
     * stopword mass (prose-ness) and low punctuation noise — the shape
-    * of heuristics used for pre-training corpus filtering.
+    * of heuristics used for pre-training corpus filtering. The
+    * definitions are [[graft.expr.TextProfileKernel]]'s.
     */
   def qualityStruct(text: Column): Column = {
-    def named(cs: Column*): Column = structOf(
-      Seq("n_tokens", "avg_token_len", "punct_ratio", "stopword_ratio", "quality_score"), cs)
-    val stopCol = lit(stopwords.toArray)
-    val bound = bind(tokens(text)) { toks =>
-      val nTok = size(toks).cast("long")
-      val charLen = length(text).cast("double")
-      val avgTokLen = when(nTok > 0,
-        aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") / nTok)
-        .otherwise(lit(0.0))
-      val punct = charLen - length(regexp_replace(text, "[^a-zA-Z0-9 ]", "")).cast("double")
-      val punctRatio = when(charLen > 0, punct / charLen).otherwise(lit(0.0))
-      val stopRatio = when(nTok > 0,
-        size(filter(toks, t => array_contains(stopCol, t))).cast("double") / nTok)
-        .otherwise(lit(0.0))
-      bind(array(avgTokLen, punctRatio, stopRatio)) { r =>
-        val (avg, punctR, stopR) = (r(0), r(1), r(2))
-        val score =
-          when(nTok === 0, lit(0.0)).otherwise(
-            lit(1.0)
-              - abs(avg - lit(5.0)) / lit(10.0)
-              - punctR
-              + stopR * lit(0.5))
-        named(nTok, avg, punctR, stopR, score)
-      }
-    }
-    coalesce(bound, named(lit(0L), lit(0.0), lit(0.0), lit(0.0), lit(0.0)))
+    val p = graft.expr.TextProfile(text)
+    structOf("n_tokens" +: qualityFields, p("token_count") +: qualityFields.map(p(_)))
   }
 
-  private val langMarkers: Seq[(String, Seq[String])] = Seq(
-    "en" -> Seq("the", "a", "of", "and", "to", "in", "is"),
-    "de" -> Seq("der", "die", "das", "und", "nicht", "ist", "ein"),
-    "fr" -> Seq("le", "la", "les", "et", "est", "une", "dans"),
-    "es" -> Seq("el", "los", "las", "y", "es", "una", "que"))
-
-  /** N-gram/marker-word language ID heuristic. CJK characters force
-    * "zh"; otherwise the language whose marker-word set hits the most
-    * tokens wins (ties broken by the fixed order en>de>fr>es); no hits
-    * → "und". Deterministic, SQL-mirrorable.
+  /** Marker-word language ID heuristic. CJK characters force "zh";
+    * otherwise the language whose marker-word set hits the most tokens
+    * wins (ties broken by the fixed order en>de>fr>es); no hits →
+    * "und". Deterministic, SQL-mirrorable; the marker words are
+    * [[graft.expr.TextProfileKernel]]'s.
     */
-  def langId(text: Column): Column = {
-    val ordered = bind(tokens(text)) { toks =>
-      bind(array(langMarkers.map { case (_, markers) =>
-        size(filter(toks, t => array_contains(lit(markers.toArray), t)))
-      }: _*)) { scores =>
-        val best = array_max(scores)
-        // first lang (in declared order) reaching the max wins
-        langMarkers.zipWithIndex.foldRight(lit("und"): Column) { case (((lang, _), i), els) =>
-          when(scores(i) === best && best > 0, lit(lang)).otherwise(els)
-        }
-      }
-    }
-    when(text.rlike("[\\x{4e00}-\\x{9fff}]"), lit("zh")).otherwise(coalesce(ordered, lit("und")))
-  }
+  def langId(text: Column): Column = graft.expr.TextProfile(text)("lang_id")
 
   /** TRAINED multi-class language identifier — the model rung above
     * the [[langId]] marker-word heuristic (which knows four Latin
@@ -904,14 +865,19 @@ object TextAnalysis {
   }
 
   /** Convenience: append all text-analysis columns to a documents
-    * DataFrame. */
+    * DataFrame: token_count, bpeish_token_count, lang_id, fingerprint,
+    * then the [[qualityStruct]] fields. The kernel runs once per row in
+    * its own projection, and the columns read its fields. The
+    * fingerprint stays in the reading projection, where a dedup on the
+    * same text merges and shares it. */
   def profile(df: DataFrame, textCol: String = "text"): DataFrame = {
     val t = col(textCol)
-    Partitioning.fanOut(df).withColumn("token_count", tokenCount(t))
-      .withColumn("bpeish_token_count", bpeishTokenCount(t))
-      .withColumn("lang_id", langId(t))
-      .withColumn("fingerprint", fingerprint(t))
-      .withColumn("q", qualityStruct(t))
-      .select(col("*"), col("q.*")).drop("q")
+    val p = col("__profile")
+    val columns = Seq("token_count", "bpeish_token_count", "lang_id").map(f => f -> p(f)) ++
+      Seq("fingerprint" -> fingerprint(t), "n_tokens" -> p("token_count")) ++
+      qualityFields.map(f => f -> p(f))
+    Partitioning.fanOut(df).withColumn("__profile", graft.expr.TextProfile(t))
+      .withColumns(scala.collection.immutable.ListMap(columns: _*))
+      .drop("__profile")
   }
 }

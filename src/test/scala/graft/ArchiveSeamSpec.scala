@@ -1,7 +1,8 @@
 package graft
 
 import graft.ops.{Tar, Warc, Zip}
-import graft.spec.{Config, SourceSpec}
+import graft.compile.PipelineCompiler
+import graft.spec.{Config, PipelineSpec, SinkSpec, SourceSpec}
 import graft.sources.SourceReader
 
 /** The archive-size seam on every whole-file binary source: files
@@ -98,6 +99,19 @@ class ArchiveSeamSpec extends SparkSuite {
           "max_bytes" -> 2048)))
       }
       assert(e.getMessage.contains("huge.jsonl") && e.getMessage.contains("max_bytes"))
+    }
+  }
+
+  test("jsonl source: compile's only job is schema inference; the size check reads the listing") {
+    withDir { dir =>
+      write(dir, "a.jsonl", "{\"a\": 1}\n{\"a\": 2}\n".getBytes("UTF-8"))
+      write(dir, "b.jsonl", "{\"a\": 3}\n".getBytes("UTF-8"))
+      val spec = PipelineSpec("j", "", Seq(SourceSpec("j", "jsonl", Config.of(
+        "path" -> s"${dir.getAbsolutePath}/*.jsonl", "compression" -> "none", "max_bytes" -> 2048))),
+        Nil, Seq(SinkSpec("out", "stdout")))
+      var compiled: PipelineCompiler.Compiled = null
+      assert(jobsOf { compiled = PipelineCompiler.compile(spark, spec) } == 1)
+      assert(compiled.df.count() == 3)
     }
   }
 

@@ -224,7 +224,9 @@ class PlanShapeSpec extends SparkSuite {
 
   test("text_profile tokenizes once per signal; pushed filters and dedup keys stay token-count sized") {
     import graft.spec._
-    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec}
+    import graft.expr.TextProfileExpr
+    import org.apache.spark.sql.execution.{CollapseCodegenStages, FileSourceScanExec, FilterExec,
+      InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.window.{Partial, WindowExec, WindowGroupLimitExec}
     val dir = java.nio.file.Files.createTempDirectory("graftprofile").toString + "/docs"
     (0 until 40).map(i => (i.toLong, s"doc $i: the cat and the dog in the house of the king " * 2))
@@ -240,6 +242,8 @@ class PlanShapeSpec extends SparkSuite {
       Seq(SinkSpec("out", "parquet", Config.of("path" -> (dir + "_out")))))
     val plan = graft.compile.PipelineCompiler.compile(spark, spec).df.queryExecution.sparkPlan
     import org.apache.spark.sql.catalyst.expressions.Alias
+    def kernelCalls(p: ProjectExec): Int =
+      p.projectList.map(_.collect { case k: TextProfileExpr => k }.size).sum
     val profileProjects = plan.collect {
       case p: ProjectExec if p.projectList.exists {
         case a: Alias => a.name == "token_count"
@@ -248,14 +252,27 @@ class PlanShapeSpec extends SparkSuite {
     }
     val profile = profileProjects.map(_.projectList.mkString(", "))
     assert(profile.size == 1, plan.toString)
-    // token_count, lang_id and the quality struct: one tokenization each
-    val tokenizations = "regexp_extract_all\\(lower\\(".r.findAllIn(profile.head).length
-    assert(tokenizations <= 3, s"$tokenizations tokenizations in the profile projection:\n${profile.head}")
+    // token_count, lang_id and the quality struct: one kernel call, in
+    // the projection right below the one that reads its fields
+    val kernelProjects = plan.collect { case p: ProjectExec if kernelCalls(p) > 0 => p }
+    assert(kernelProjects.size == 1 && kernelCalls(kernelProjects.head) == 1, plan.toString)
+    assert(kernelCalls(profileProjects.head) == 0 && (profileProjects.head.child eq kernelProjects.head),
+      plan.toString)
+    val kernelProject = kernelProjects.head.projectList.mkString(", ")
+    for (e <- Seq(kernelProject, profile.head))
+      assert(!e.contains("lambdafunction") && !e.contains("regexp_extract_all(lower("),
+        s"a lambda or a tokenizer in the profile projections:\n$e")
+    // the kernel projection compiles into a whole-stage codegen stage
+    def ownNodes(p: SparkPlan): Seq[SparkPlan] =
+      p +: (p match { case _: InputAdapter => Nil; case _ => p.children.flatMap(ownNodes) })
+    val staged = CollapseCodegenStages()(plan).collect { case w: WholeStageCodegenExec =>
+      ownNodes(w.child).collect { case p: ProjectExec if kernelCalls(p) == 1 => p } }.flatten
+    assert(staged.size == 1, plan.toString)
     // filters below the dedup window (the rank = 1 filter sits above it)
     val pushed = plan.collect {
       case f: FilterExec if f.find(_.isInstanceOf[WindowExec]).isEmpty => f.condition.toString }
-    assert(pushed.nonEmpty && pushed.forall(_.contains("regexp_extract_all(lower(")), plan.toString)
-    // the tokenizer and both counts compile: no interpreted lambda in
+    assert(pushed.nonEmpty && pushed.forall(_.contains("text_profile(")), plan.toString)
+    // the kernel and both counts compile: no interpreted lambda in
     // the pushed filter or in the profile's count columns
     val counts = profileProjects.head.projectList.collect {
       case a: Alias if Set("token_count", "bpeish_token_count")(a.name) => a.toString }

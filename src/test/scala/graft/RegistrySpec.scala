@@ -4,10 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.compile.PipelineCompiler
 import graft.sinks.SinkWriter
+import graft.sources.SourceReader
 import graft.spec.{Config, PipelineSpec, SinkSpec, SourceSpec, TransformSpec}
 import graft.transforms.Transforms
 
-/** The transform and sink registries against `PipelineCompiler.validate`
+/** The transform, source and sink registries against `PipelineCompiler.validate`
   * (pure JVM, no Spark): every config key an op declares as naming a
   * source is checked before Spark starts, and unknown types are refused
   * by name. */
@@ -74,5 +75,14 @@ class RegistrySpec extends AnyFunSuite {
     assert(SinkWriter.knownTypes.contains("stdout") && !SinkWriter.knownTypes.contains("teleport"))
     val msg = rejection(spec(Nil, sinkType = "teleport"))
     assert(msg.contains("sink 'out': unknown type 'teleport'"))
+  }
+
+  test("validate: an unknown source type is refused by name, with the other errors") {
+    assert(SourceReader.knownTypes.contains("parquet") && !SourceReader.knownTypes.contains("parquett"))
+    val msg = rejection(PipelineSpec("p", "", Seq(SourceSpec("src", "parquett"), SourceSpec("ok", "inline")),
+      Nil, Seq(SinkSpec("out", "teleport"))))
+    assert(msg.contains("source 'src': unknown type 'parquett'"))
+    assert(msg.contains("sink 'out': unknown type 'teleport'"))
+    assert(!msg.contains("'ok'"))
   }
 }

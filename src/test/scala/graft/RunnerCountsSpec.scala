@@ -3,9 +3,6 @@ package graft
 import java.nio.file.Files
 import java.time.Instant
 
-import org.apache.spark.graftbridge.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.catalog.{FileMetaStore, MetaStore, RunRecord, SqliteMetaStore}
 import graft.compile.PipelineCompiler
 import graft.run.PipelineRunner
@@ -48,18 +45,6 @@ class RunnerCountsSpec extends SparkSuite {
   private def readBack(s: SinkSpec): Long = s.sinkType match {
     case "json" => spark.read.json(s.config.reqStr("path")).count()
     case _ => spark.read.parquet(s.config.reqStr("path")).count()
-  }
-
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBus.drain(sc)
-    sc.addSparkListener(l)
-    try { body; ListenerBus.drain(sc) } finally sc.removeSparkListener(l)
-    jobs.get
   }
 
   test("parquet, json and partitioned parquet sinks: rows_written is what the sink holds") {

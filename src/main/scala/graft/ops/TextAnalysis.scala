@@ -671,22 +671,18 @@ object TextAnalysis {
 
   /** PII redaction for training corpora: replace emails, SSNs,
     * international-format phone numbers, and IPv4 addresses with
-    * typed placeholder tokens. Regex-subset chosen so Java regex
-    * (Spark codegen) and RE2 (the DuckDB oracle) agree exactly: no
-    * lookaround, no backrefs, ASCII classes and `\b` only.
+    * typed placeholder tokens, in one byte scan per document (see
+    * [[graft.expr.RedactPiiKernel]] for the four patterns).
     *
     * Replacement order is part of the contract (earlier rules consume
     * their text before later patterns see it): email → SSN → phone →
-    * IPv4. Pure scan-speed projection, composes with the quality /
+    * IPv4. `\b` is the ASCII word boundary (a word character is
+    * `[A-Za-z0-9_]`), RE2's rule, so the DuckDB oracle's four
+    * `regexp_replace`s agree exactly, PII next to a non-ASCII letter
+    * included. Pure scan-speed projection, composes with the quality /
     * dedup passes upstream of a training run.
     */
-  def redactPii(text: Column): Column = {
-    val email = regexp_replace(text,
-      "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}", "<EMAIL>")
-    val ssn = regexp_replace(email, "\\b\\d{3}-\\d{2}-\\d{4}\\b", "<SSN>")
-    val phone = regexp_replace(ssn, "\\+\\d{7,15}\\b", "<PHONE>")
-    regexp_replace(phone, "\\b(\\d{1,3}\\.){3}\\d{1,3}\\b", "<IP>")
-  }
+  def redactPii(text: Column): Column = graft.expr.RedactPii(text)
 
   /** Unicode script profile — the writing-system histogram upstream
     * of language ID (a Cyrillic document should never reach an
@@ -696,8 +692,7 @@ object TextAnalysis {
     * length-difference over script-property regex deletion — pure
     * scan projection, codegen'd, no shuffle; each engine spells the
     * property its own way (Java `\p{IsLatin}`, RE2 `\p{Latin}`) for
-    * the same codepoint set, the cross-dialect discipline redactPii
-    * established. */
+    * the same codepoint set. */
   def scriptProfile(text: Column): Column = {
     def n(prop: String): Column =
       length(text) - length(regexp_replace(text, s"\\p{Is$prop}", ""))
@@ -755,10 +750,10 @@ object TextAnalysis {
     *     one space, spaces around newlines drop, ≥3 newlines collapse
     *     to a paragraph break, leading/trailing whitespace trims.
     *
-    * Like [[redactPii]], every pattern is restricted to the
-    * Java-regex ∩ RE2 dialect (no lookaround, no backrefs, explicit
-    * ASCII classes — `\s` differs between the engines and is not
-    * used) so an external SQL oracle replays the pipeline verbatim;
+    * Every pattern is restricted to the Java-regex ∩ RE2 dialect (no
+    * lookaround, no backrefs, explicit ASCII classes — `\s` differs
+    * between the engines and is not used) so an external SQL oracle
+    * replays the pipeline verbatim;
     * entity decode uses literal (non-regex) replace. Pure scan-speed
     * projection — at 100 TB this runs inside whole-stage codegen
     * with no shuffle, exactly like the quality filters downstream.

@@ -222,16 +222,14 @@ class PlanShapeSpec extends SparkSuite {
     assert(pushed(observe = true) == off)
   }
 
-  test("text_profile tokenizes once per signal; pushed filters and dedup keys stay token-count sized") {
+  /** curate's transforms up to the dedup (redact_pii → text_profile →
+    * filter token_count >= 20 → dedup_exact) over 40 parquet docs. */
+  private def curateSpec(): graft.spec.PipelineSpec = {
     import graft.spec._
-    import graft.expr.TextProfileExpr
-    import org.apache.spark.sql.execution.{CollapseCodegenStages, FileSourceScanExec, FilterExec,
-      InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
-    import org.apache.spark.sql.execution.window.{Partial, WindowExec, WindowGroupLimitExec}
     val dir = java.nio.file.Files.createTempDirectory("graftprofile").toString + "/docs"
     (0 until 40).map(i => (i.toLong, s"doc $i: the cat and the dog in the house of the king " * 2))
       .toDF("doc_id", "text").write.parquet(dir)
-    val spec = PipelineSpec("curate", "",
+    PipelineSpec("curate", "",
       Seq(SourceSpec("docs", "parquet", Config.of("path" -> dir))),
       Seq(TransformSpec("redact", "redact_pii", Config.of("field" -> "text"), Nil, 0),
         TransformSpec("profile", "text_profile", Config.of(), Nil, 1),
@@ -240,10 +238,23 @@ class PlanShapeSpec extends SparkSuite {
         TransformSpec("dedup", "dedup_exact",
           Config.of("text_field" -> "text", "tie_break" -> "doc_id"), Nil, 3)),
       Seq(SinkSpec("out", "parquet", Config.of("path" -> (dir + "_out")))))
-    val plan = graft.compile.PipelineCompiler.compile(spark, spec).df.queryExecution.sparkPlan
+  }
+
+  /** Calls of `E` in a physical operator's own expressions. */
+  private def calls[E <: org.apache.spark.sql.catalyst.expressions.Expression](
+      p: org.apache.spark.sql.execution.SparkPlan)(implicit e: scala.reflect.ClassTag[E]): Int =
+    p.expressions.map(_.collect { case x if e.runtimeClass.isInstance(x) => x }.size).sum
+
+  test("text_profile tokenizes once per signal; pushed filters and dedup keys stay token-count sized") {
+    import graft.expr.{RedactPiiExpr, TextProfileExpr}
+    import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+    import org.apache.spark.sql.execution.{CollapseCodegenStages, FileSourceScanExec, FilterExec,
+      InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.window.{Partial, WindowExec, WindowGroupLimitExec}
+    val plan = graft.compile.PipelineCompiler.compile(spark, curateSpec()).df.queryExecution.sparkPlan
     import org.apache.spark.sql.catalyst.expressions.Alias
-    def kernelCalls(p: ProjectExec): Int =
-      p.projectList.map(_.collect { case k: TextProfileExpr => k }.size).sum
+    def kernelCalls(p: ProjectExec): Int = calls[TextProfileExpr](p)
+    def redactCalls(p: ProjectExec): Int = calls[RedactPiiExpr](p)
     val profileProjects = plan.collect {
       case p: ProjectExec if p.projectList.exists {
         case a: Alias => a.name == "token_count"
@@ -265,9 +276,17 @@ class PlanShapeSpec extends SparkSuite {
     // the kernel projection compiles into a whole-stage codegen stage
     def ownNodes(p: SparkPlan): Seq[SparkPlan] =
       p +: (p match { case _: InputAdapter => Nil; case _ => p.children.flatMap(ownNodes) })
-    val staged = CollapseCodegenStages()(plan).collect { case w: WholeStageCodegenExec =>
-      ownNodes(w.child).collect { case p: ProjectExec if kernelCalls(p) == 1 => p } }.flatten
-    assert(staged.size == 1, plan.toString)
+    def staged(calls: ProjectExec => Int): Seq[ProjectExec] =
+      CollapseCodegenStages()(plan).collect { case w: WholeStageCodegenExec =>
+        ownNodes(w.child).collect { case p: ProjectExec if calls(p) == 1 => p } }.flatten
+    assert(staged(kernelCalls).size == 1, plan.toString)
+    // redact_pii: one kernel call in the projections, codegen'd; none of
+    // the four regexes it replaced
+    assert(plan.collect { case p: ProjectExec => redactCalls(p) }.sum == 1, plan.toString)
+    assert(staged(redactCalls).size == 1, plan.toString)
+    val emailRegexes = plan.flatMap(_.expressions.flatMap(_.collect {
+      case r: RegExpReplace if r.rep.toString.contains("<EMAIL>") => r }))
+    assert(emailRegexes.isEmpty, plan.toString)
     // filters below the dedup window (the rank = 1 filter sits above it)
     val pushed = plan.collect {
       case f: FilterExec if f.find(_.isInstanceOf[WindowExec]).isEmpty => f.condition.toString }
@@ -291,5 +310,23 @@ class PlanShapeSpec extends SparkSuite {
     // a profile signal copied here would re-run per row
     for (e <- pushed ++ windowSide; f <- Seq("array_contains", "aggregate("))
       assert(!e.contains(f), s"$f in a pushed filter or the dedup window's partition/order side:\n$e")
+  }
+
+  test("observed curate plan: the token_count filter reads the profile, one kernel call and one redact") {
+    import graft.expr.{RedactPiiExpr, TextProfileExpr}
+    import org.apache.spark.sql.execution.{FilterExec, ProjectExec}
+    // the run path compiles with stage observations, which block the
+    // filter's pushdown below the profile projection
+    val plan = graft.compile.PipelineCompiler.compile(spark, curateSpec(), observeStages = true)
+      .df.queryExecution.sparkPlan
+    assert(plan.collect { case p => calls[TextProfileExpr](p) }.sum == 1, plan.toString)
+    assert(plan.collect { case p => calls[RedactPiiExpr](p) }.sum == 1, plan.toString)
+    val kernel = plan.collect { case p: ProjectExec if calls[TextProfileExpr](p) == 1 => p }
+    assert(kernel.size == 1, plan.toString)
+    val quality = plan.collect { case f: FilterExec
+      if f.condition.references.exists(_.name == "token_count") => f }
+    assert(quality.size == 1, plan.toString)
+    assert(quality.head.find(_ eq kernel.head).isDefined,
+      "the token_count filter must sit above the kernel projection:\n" + plan)
   }
 }

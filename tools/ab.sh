@@ -1,8 +1,9 @@
 #!/bin/bash
 # Same-window alternating A/B bench (the round-16/17 protocol): runs
-# graft.Bench on a QUERY subset, alternating configuration A and B
-# N times each (A B A B ...), so co-tenant noise waves hit both sides
-# equally; per-query result is the MIN across a side's runs.
+# graft.Bench on a QUERY subset, configuration A and B once per round
+# for N rounds, with the side that runs first alternating from round to
+# round (A B, B A, A B, ...), so co-tenant noise waves and warm caches
+# favour neither side; per-query result is the MIN across a side's runs.
 #
 # Usage:
 #   tools/ab.sh "<queries,csv>" <N> <label> \
@@ -34,10 +35,12 @@ run_one() { # side cp flags out
     graft.Bench >/dev/null 2>"$out.log"
 }
 for i in $(seq 1 "$N"); do
-  echo "[ab] round $i/$N: A ..." >&2
-  run_one A "$CP_A" "$FLAGS_A" "$OUT/a_$i.json"
-  echo "[ab] round $i/$N: B ..." >&2
-  run_one B "$CP_B" "$FLAGS_B" "$OUT/b_$i.json"
+  if (( i % 2 == 1 )); then order="A B"; else order="B A"; fi
+  for side in $order; do
+    echo "[ab] round $i/$N: $side ..." >&2
+    if [ "$side" = A ]; then run_one A "$CP_A" "$FLAGS_A" "$OUT/a_$i.json"
+    else run_one B "$CP_B" "$FLAGS_B" "$OUT/b_$i.json"; fi
+  done
 done
 python3 - "$OUT" <<'EOF'
 import json, sys, glob

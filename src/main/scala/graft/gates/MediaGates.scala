@@ -1568,9 +1568,8 @@ object MediaGates {
     // embeddings table, so one wrong byte anywhere in the header
     // geometry or the little-endian data layout hash-mismatches.
     // Arrow IPC (round 15): the embeddings table sharded into real
-    // multi-batch Arrow streams (schema + record batches + EOS,
-    // flatbuffer messages built from-spec) and decoded back through
-    // the flatbuffer/columnar walk — every key and float replays.
+    // multi-batch Arrow streams (schema + record batches + EOS) and
+    // decoded back through arrow-vector — every key and float replays.
     Gate("x_arrow_embed", (s, d) => {
       val packed = sharedFixture("arrow", s, d)(
         graft.ops.ArrowIpc.packVecs(t(s, d, "embeddings"), "vec_id", "embedding",
@@ -1581,8 +1580,8 @@ object MediaGates {
             v => floor(v.cast("double") * lit(1073741824.0d)).cast("long").cast("string")),
             ",").as("values"))
     },
-      // arrow ipc: the same every-float replay through the columnar
-      // stream walk
+      // arrow ipc: the same every-float replay through the stream
+      // reader
       """
       SELECT vec_id, CAST(len(embedding) AS BIGINT) AS dim,
              array_to_string(list_transform(embedding,
@@ -1590,11 +1589,10 @@ object MediaGates {
       FROM embeddings WHERE embedding IS NOT NULL"""),
 
     // Arrow IPC compressed bodies (round 15 continuation): the same
-    // embedding replay, but the shards are written by the INDEPENDENT
-    // Apache Arrow Java writer with real body compression — LZ4_FRAME
-    // on even shards, ZSTD on odd — and decompressed buffer-by-buffer
-    // by the IN-REPO from-spec lz4-frame/zstd codecs. pyarrow's
-    // default feather-v2 layout is exactly this wire shape.
+    // embedding replay, but the shards carry real body compression —
+    // LZ4_FRAME on even shards, ZSTD on odd — decompressed
+    // buffer-by-buffer on read. pyarrow's default feather-v2 layout
+    // is exactly this wire shape.
     Gate("x_arrow_compressed", (s, d) => {
       val packed = sharedFixture("arrowz", s, d)(
         graft.ops.ArrowIpc.packVecsCompressedRef(t(s, d, "embeddings"), "vec_id", "embedding",
@@ -1614,10 +1612,8 @@ object MediaGates {
       FROM embeddings WHERE embedding IS NOT NULL"""),
 
     // Arrow IPC dictionary encoding (round 15 continuation): the
-    // documents (doc_id, source) pairs written by the Arrow Java
-    // writer's own DictionaryProvider machinery — a real
-    // DictionaryBatch message followed by int32 index columns — and
-    // resolved by the from-spec reader's dictionary walk. Every
+    // documents (doc_id, source) pairs written as a DictionaryBatch
+    // followed by int32 index columns and resolved on read. Every
     // (id, source) pair replays from the corpus, so a single
     // off-by-one in index resolution hash-mismatches.
     Gate("x_arrow_dict", (s, d) => {

@@ -493,11 +493,14 @@ object TextGates {
       FROM documents"""),
     // PII redaction over synthetic planted identifiers (both engines
     // derive the identical input from doc_id/source, so the redaction
-    // itself is what the hash compares)
+    // itself is what the hash compares). The é and CJK neighbours pin
+    // the word-boundary rule: RE2's \b is ASCII, so a non-ASCII letter
+    // next to a digit is a boundary there, and the kernel must agree.
     Gate("x_pii_redact", (s, d) => {
       val planted = concat(lit("contact "), col("source"), col("doc_id"),
         lit("@example.com or +1415550"), col("doc_id"),
-        lit(" ip 10.0."), pmod(col("doc_id"), lit(256)), lit(".7 ssn 123-45-6789 "),
+        lit(" ip 10.0."), pmod(col("doc_id"), lit(256)), lit(".7 ssn 123-45-6789 é10.0."),
+        pmod(col("doc_id"), lit(256)), lit(".7 IPは192.168.0.1です SSNは123-45-6789です "),
         col("text"))
       docs(s, d).select(col("doc_id"),
         TextAnalysis.redactPii(planted).as("redacted"))
@@ -506,7 +509,8 @@ object TextGates {
       WITH raw AS (
         SELECT doc_id,
           'contact ' || source || doc_id || '@example.com or +1415550' || doc_id ||
-          ' ip 10.0.' || (doc_id % 256) || '.7 ssn 123-45-6789 ' || text AS t
+          ' ip 10.0.' || (doc_id % 256) || '.7 ssn 123-45-6789 é10.0.' || (doc_id % 256) ||
+          '.7 IPは192.168.0.1です SSNは123-45-6789です ' || text AS t
         FROM documents)
       SELECT doc_id,
         regexp_replace(

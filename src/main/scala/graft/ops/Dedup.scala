@@ -362,49 +362,6 @@ object Dedup {
 
   // ---------------------------------------------------------------- MinHash
 
-  /** Deterministic MinHash parameters: h_i(x) = (a_i·x + b_i) mod p
-    * over xxhash64(shingle). Constants from a fixed seed so signatures
-    * are reproducible across runs and clusters.
-    */
-  private val MinhashP = 2147483647L // 2^31 - 1
-  private def minhashCoeffs(numHashes: Int, seed: Long): Seq[(Long, Long)] = {
-    val rnd = new scala.util.Random(seed)
-    Seq.fill(numHashes)((1L + rnd.nextInt(Int.MaxValue - 1).toLong, rnd.nextInt(Int.MaxValue).toLong))
-  }
-
-  /** Shingle hash column: one tokenize+shingle+hash pass per document.
-    * Kept as its own projection so the signature step references the
-    * computed array instead of re-deriving it — higher-order functions
-    * get no common-subexpression elimination, so inlining this into 64
-    * hash expressions would re-tokenize every document 64 times.
-    * Reducing the 64-bit hash mod p up front also keeps a·x+b < 2^62 —
-    * no long overflow under ANSI mode.
-    */
-  def shingleHashes(text: Column, k: Int = 3): Column =
-    transform(TextAnalysis.shingles(text, k), s => pmod(xxhash64(s), lit(MinhashP)))
-
-  /** MinHash signature (array<long> of length `numHashes`) from a
-    * precomputed [[shingleHashes]] column.
-    *
-    * Deliberately unrolled Scala-side into `numHashes` expressions
-    * (NOT a `transform` over `sequence(0, n-1)`): `hs` must appear
-    * many times *syntactically* so `CollapseProject` refuses to inline
-    * the upstream shingle-hash projection. A single reference inside a
-    * lambda looks "used once" to the optimizer, gets inlined, and is
-    * then re-evaluated per outer-loop iteration — 64 tokenizations per
-    * document (measured: minutes instead of seconds at sf0.1).
-    */
-  def minhashSignatureFromHashes(hs: Column, numHashes: Int = 64, seed: Long = 42L): Column =
-    array(minhashCoeffs(numHashes, seed).map { case (a, b) =>
-      array_min(transform(hs, x => pmod(lit(a) * x + lit(b), lit(MinhashP))))
-    }: _*)
-
-  /** Convenience single-column form (prefer the two-step
-    * [[shingleHashes]] → [[minhashSignatureFromHashes]] in pipelines so
-    * the tokenize pass is shared). */
-  def minhashSignature(text: Column, numHashes: Int = 64, k: Int = 3, seed: Long = 42L): Column =
-    minhashSignatureFromHashes(shingleHashes(text, k), numHashes, seed)
-
   /** LSH candidate pairs from MinHash signatures: docs whose signature
     * agrees on all rows of at least one band. `bands`×`rowsPerBand`
     * must equal the signature length. Returns (a_id, b_id) with

@@ -127,10 +127,9 @@ object Similarity {
     * 63 of a 64-bit word via ANY arithmetic overflows signed BIGINT
     * somewhere (Spark wraps, DuckDB promotes to HUGEINT — different
     * answers), while 32-bit words make every intermediate exact on
-    * both engines. Unrolled Scala-side into static literal shifts —
-    * the [[Dedup.minhashSignatureFromHashes]] lesson: loop indices in
-    * a Column lambda can't feed `shiftleft`, and unrolling keeps the
-    * whole expression codegen'd.
+    * both engines. Unrolled Scala-side into static literal shifts:
+    * loop indices in a Column lambda can't feed `shiftleft`, and
+    * unrolling keeps the whole expression codegen'd.
     */
   def binarizeSign(vec: Column, dim: Int): Column = {
     require(dim > 0, s"binarizeSign: dim must be positive, got $dim")

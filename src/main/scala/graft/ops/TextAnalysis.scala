@@ -559,7 +559,7 @@ object TextAnalysis {
     * lesson), so the pure-Column form re-splits and re-filters every
     * document per reference. Multiple syntactic references to the
     * materialized columns keep CollapseProject from inlining them
-    * back (the [[Dedup.minhashSignatureFromHashes]] trick). Appends
+    * back, since it inlines only a projection referenced once. Appends
     * the same `c4` struct.
     */
   def c4Quality(df: DataFrame, textCol: String = "text"): DataFrame = {
@@ -596,8 +596,7 @@ object TextAnalysis {
     *
     * `df` must already carry a tokens array column `toksCol`
     * (higher-order functions get no common-subexpression elimination,
-    * so the tokenize pass is materialized once by the caller — the
-    * [[shingleHashes]] lesson).
+    * so the tokenize pass is materialized once by the caller).
     */
   private def dsirBuckets(df: DataFrame, toksCol: String, buckets: Int): DataFrame = {
     require(buckets > 0 && buckets <= 65536,
